@@ -1,17 +1,24 @@
 """The flagship ETL pipeline — Spark re-expression of the reference's
-`etl_pipeline` (/root/reference/src/main.cpp:13-145, SURVEY §3.1):
+`etl_pipeline` (reference src/main.cpp:13-145, SURVEY §3.1):
 
-  CSV → validate (V1-V6 split) → indicators (SMA/RSI/VWAP, period=5)
-      → [DDL] → load (parallel sink) → parquet
+  CSV → validate (V1-V6 split) → trades parquet
+      → indicators (SMA/RSI/VWAP, period=5) → indicators parquet
 
-The eager stage-by-stage materialization disappears: Spark fuses
-scan→project→filter into one codegen stage, the indicator aggregation is the
-only shuffle, and the two sinks (trades ∥ indicators) overlap via two driver
-threads (PipelineExecutor parity, src/threading/PipelineExecutor.hpp:80-184).
+The reference's eager stage-by-stage materialization becomes two writes
+and no cache:
+
+1. one scan parses, validates and writes the valid trades; an Observation
+   on that same job counts valid and rejected rows, so there is no separate
+   count job and the CSV is parsed exactly once;
+2. the indicators are computed from the trades parquet just written (the
+   fused partial-aggregate form: its exchange moves only
+   n_partitions × n_symbols rows) and written with a second Observation
+   that counts the indicator rows.
 
 `run_pipeline` returns per-stage timings in the shape of the reference's
-benchmark report (Benchmarker.hpp:36-71) — note that Spark stages are lazy,
-so "stage" timings are action-bounded: parse+validate is one fused scan.
+benchmark report (Benchmarker.hpp:36-71).  Spark stages are lazy, so the
+"stage" timings are action-bounded: `parse_validate_sink` is the fused
+scan + trades write, `indicators_sink` the indicator job + its write.
 """
 
 from __future__ import annotations
@@ -19,13 +26,13 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.operators.indicators import compute_indicators_auto
+from marketstream_etl_spark.operators.indicators import compute_indicators_fused
 from marketstream_etl_spark.operators.validation import with_validation
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
-from marketstream_etl_spark.sources.sinks import write_dual_sinks
+from marketstream_etl_spark.sources.sinks import write_parquet
 
 
 @dataclass
@@ -35,10 +42,6 @@ class PipelineReport:
     n_rejected: int = 0
     n_symbols: int = 0
     stage_seconds: dict[str, float] = field(default_factory=dict)
-
-    def items_per_second(self, stage: str) -> float:
-        s = self.stage_seconds.get(stage, 0.0)
-        return self.n_input / s if s else 0.0
 
 
 def init_schema(spark: SparkSession) -> None:
@@ -71,44 +74,47 @@ def run_pipeline(
     computed_at_ns: int | None = None,
 ) -> PipelineReport:
     report = PipelineReport()
+    trades_path = f"{out_dir}/trades"
+    if computed_at_ns is None:
+        computed_at_ns = time.time_ns()
 
     t0 = time.perf_counter()
-    raw = read_trades_csv(spark, csv_path)
-    # ONE scan parses, validates, and caches; valid/reject counts come from
-    # a single aggregate over the cached frame (the reference re-walks the
-    # batch per stage — here the CSV is parsed exactly once).
-    annotated = with_validation(raw).persist()
-    counts = annotated.agg(
-        F.sum(F.col("is_valid").cast("long")),
-        F.sum((~F.col("is_valid")).cast("long")),
-    ).first()
-    report.n_valid = counts[0] or 0
-    report.stage_seconds["parse_validate"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    # reject channel (dead-letter view) — rows already in cache, no re-parse
-    valid = annotated.filter(F.col("is_valid")).drop("reject_reason", "is_valid")
-    report.n_rejected = counts[1] or 0
-    report.n_input = report.n_valid + report.n_rejected
-    report.stage_seconds["reject_channel"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    indicators = compute_indicators_auto(
-        valid,
-        period=period,
-        computed_at_ns=computed_at_ns or time.time_ns(),
-    ).persist()
-    report.n_symbols = indicators.count()
-    report.stage_seconds["indicators"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    write_dual_sinks(
-        valid, indicators, f"{out_dir}/trades", f"{out_dir}/technical_indicators"
+    # observe() sits before the filter, so it sees every parsed row; the
+    # reject channel is the complement of the written rows.
+    validation = Observation("pipeline_validation")
+    valid = (
+        with_validation(read_trades_csv(spark, csv_path))
+        .observe(
+            validation,
+            F.sum(F.col("is_valid").cast("long")).alias("n_valid"),
+            F.sum((~F.col("is_valid")).cast("long")).alias("n_rejected"),
+        )
+        .filter(F.col("is_valid"))
+        .drop("reject_reason", "is_valid")
     )
-    report.stage_seconds["dual_sink_parquet"] = time.perf_counter() - t0
+    write_parquet(valid, trades_path)
+    counts = validation.get
+    report.n_valid = counts["n_valid"] or 0  # NULL sums on an empty CSV
+    report.n_rejected = counts["n_rejected"] or 0
+    report.n_input = report.n_valid + report.n_rejected
+    report.stage_seconds["parse_validate_sink"] = time.perf_counter() - t0
 
-    annotated.unpersist()
-    indicators.unpersist()
+    t0 = time.perf_counter()
+    # The known schema skips the footer-inference job on read-back.  The
+    # fused form is called directly: the read-back has few partitions, where
+    # compute_indicators_auto would pick the slower window form.
+    indicators = compute_indicators_fused(
+        spark.read.schema(valid.schema).parquet(trades_path),
+        period=period,
+        computed_at_ns=computed_at_ns,
+    )
+    written = Observation("pipeline_indicators")
+    write_parquet(
+        indicators.observe(written, F.count(F.lit(1)).alias("n_symbols")),
+        f"{out_dir}/technical_indicators",
+    )
+    report.n_symbols = written.get["n_symbols"]
+    report.stage_seconds["indicators_sink"] = time.perf_counter() - t0
     return report
 
 

@@ -111,9 +111,10 @@ def write_dual_sinks(
     """Concurrent independent sinks (~1.87× in the reference, README.md:101):
     two driver threads submit both writes; Spark's scheduler overlaps them.
 
-    Each input is scanned exactly once here, so no extra persist — callers
-    that reuse `trades` for other consumers (e.g. run_pipeline) hold their
-    own cache."""
+    Each input is scanned exactly once here, so no extra persist — a
+    caller that reuses `trades` for other consumers must cache it itself.
+    run_pipeline does not use this: its indicators read back the written
+    trades file, so the two writes are sequential jobs."""
     with ThreadPoolExecutor(max_workers=2) as pool:
         f1 = pool.submit(write_parquet, trades, trades_path)
         f2 = pool.submit(write_parquet, indicators, indicators_path)

@@ -271,6 +271,7 @@ def bench_stream_1m(spark) -> dict[str, float]:
     from pyspark.sql import functions as F
 
     from marketstream_etl_spark.sources.generator import generate_trades
+    from marketstream_etl_spark.streaming.replay import run_bounded
     from marketstream_etl_spark.streaming.ticks import (
         hot_path_filter,
         parse_json_frames,
@@ -303,14 +304,11 @@ def bench_stream_1m(spark) -> dict[str, float]:
             hot_path_filter(parsed.filter(~F.col("parse_error")))
         )
         with single_parse_ingest(spark):
-            q = (
+            run_bounded(
                 counts.writeStream.format("memory")
                 .queryName(qname)
                 .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
 
     run(warm_dir, "bench_stream_warm")  # one-time engine/codegen warmup
     dt = float("inf")

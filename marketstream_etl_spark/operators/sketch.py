@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.sources.tables import sink_name
-
 from marketstream_etl_spark.functions.hashing import (
     h32,
     h32_sql,
@@ -33,6 +31,7 @@ from marketstream_etl_spark.functions.hashing import (
     tokens,
     tokens_sql,
 )
+from marketstream_etl_spark.streaming.replay import drain_to_memory
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -150,16 +149,7 @@ def streaming_cms_heavy_hitters(spark, sf_dir: str) -> DataFrame:
     sketch_stream = cells.groupBy("c.row", "c.bucket").agg(
         F.count("*").alias("cnt")
     )
-    name = sink_name("stream_cms", sf_dir)
-    q = (
-        sketch_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sketch = spark.table(name)
+    sketch = drain_to_memory(sketch_stream, "stream_cms", sf_dir, "complete")
 
     # present the same report as the batch query, probing the streamed sketch
     batch_docs = load_table(spark, sf_dir, "documents")
@@ -1007,19 +997,12 @@ def streaming_hdr_quantiles(spark, sf_dir: str) -> DataFrame:
         .groupBy("bid")
         .agg(F.count("*").alias("cnt"))
     )
-    name = sink_name("stream_hdr", sf_dir)
-    q = (
-        counted_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # memory-sink View is not a MultiInstanceRelation; the report's
     # triangular self-join needs a fresh-id leaf — and the grid is fixed-
     # size by construction, so the checkpoint is tiny
-    counted = spark.table(name).localCheckpoint(eager=False)
+    counted = drain_to_memory(
+        counted_stream, "stream_hdr", sf_dir, "complete"
+    ).localCheckpoint(eager=False)
     return _hdr_report(counted, _hdr_cents(load_table(spark, sf_dir, "lineitem")))
 
 

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from marketstream_etl_spark.operators.indicators import rolling_indicators
 from marketstream_etl_spark.operators.validation import split_valid
 from marketstream_etl_spark.plans.trades_view import load_trades
-from marketstream_etl_spark.sources.tables import load_table, sink_name
+from marketstream_etl_spark.sources.tables import load_table
+from marketstream_etl_spark.streaming.replay import drain_to_memory
 
 DAY_NS = 86_400_000_000_000
 SESSION_GAP_NS = 1_800_000_000_000  # 30 minutes
@@ -1196,16 +1197,7 @@ def q_streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count("*").alias("n_trades"),
         F.sum("volume").alias("total_volume"),
     )
-    name = sink_name("pyds_stream", sf_dir)
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(counts, "pyds_stream", sf_dir, "complete")
 
 
 def q_asof_events_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.sources.tables import sink_name
+from marketstream_etl_spark.streaming.replay import run_bounded
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -98,7 +99,6 @@ def run_stream_to_jdbc_dual_sink(
     url: str,
     trades_table: str = "stream_trades",
     counts_table: str = "stream_symbol_counts",
-    checkpoint_dir: str | None = None,
     num_streams: int = 4,
 ) -> None:
     """Drain a bounded trades stream into both JDBC tables via foreachBatch."""
@@ -126,14 +126,7 @@ def run_stream_to_jdbc_dual_sink(
         finally:
             batch_df.unpersist()
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="jdbc_dual_sink_ckpt_")
-    q = (
-        trades_stream.writeStream.foreachBatch(dual_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(trades_stream.writeStream.foreachBatch(dual_sink))
 
 
 def file_stream_jdbc_dual_sink(spark: SparkSession, sf_dir: str) -> DataFrame:

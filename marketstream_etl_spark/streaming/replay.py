@@ -6,16 +6,54 @@ events-derived VALID trades through a real Structured Streaming query
 emissions to a final snapshot the DuckDB oracle can reproduce with batch
 SQL.  The scaffold lives here once so the replay contract (source schema,
 glob, sink naming, final-emission tie-break) has a single definition.
+
+`run_bounded` is the one place a bounded (availableNow) query is started:
+every drain in the package, the bench and the tools goes through it, so
+the deadline, the stop and the checkpoint cleanup are defined once.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from marketstream_etl_spark.sources.tables import sink_name
+
+# Wall-clock bound on one bounded drain.  The slowest recorded streaming
+# query takes ~63 s (streaming_join_full_outer, sf0.01, 4-vCPU VM); the
+# README decision note "Stream deadline" gives the evidence and what the
+# margin does not cover.
+STREAM_DEADLINE_S = 600
+
+
+def run_bounded(writer: DataStreamWriter) -> None:
+    """Run one bounded streaming query to completion: a fresh temp
+    checkpoint, the availableNow trigger, and a STREAM_DEADLINE_S wait.
+    awaitTermination re-raises the query's own failure; a drain still
+    running at the deadline raises TimeoutError.  On every exit path the
+    query is stopped and its checkpoint removed."""
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    q = None
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(STREAM_DEADLINE_S):
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not drain within "
+                f"{STREAM_DEADLINE_S} s"
+            )
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def valid_trades_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,14 +73,9 @@ def drain_to_memory(
     sink table.  The sink name is unique per (prefix, sf_dir) within the
     process, matching the pre-existing per-query naming convention."""
     name = sink_name(name_prefix, sf_dir)
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     )
-    q.awaitTermination()
     return df.sparkSession.table(name)
 
 
@@ -86,27 +119,17 @@ def accumulate_stream(
     store, no complete-mode re-emission — per-batch work is one ordinary
     batch aggregation (partial-agg map-side combine applies), and the
     stored state is |keys| rows per batch."""
-    import shutil
-
     from marketstream_etl_spark.sources.tables import warehouse_path
 
     acc_dir = warehouse_path(spark, label, sf_dir) + "_run"
     shutil.rmtree(acc_dir, ignore_errors=True)
-    shutil.rmtree(acc_dir + "_ck", ignore_errors=True)
 
     def agg_batch(batch: DataFrame, bid: int) -> None:
         partial_fn(batch).write.mode("overwrite").parquet(
             f"{acc_dir}/batch_id={bid}"
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(agg_batch)
-        .option("checkpointLocation", acc_dir + "_ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(acc_dir + "_ck", ignore_errors=True)
+    run_bounded(stream_df.writeStream.foreachBatch(agg_batch))
     if not os.path.isdir(acc_dir):
         # zero micro-batches (empty/missing source): foreachBatch never
         # ran, so no partials exist.  Return the empty merged frame the

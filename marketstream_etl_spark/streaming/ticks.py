@@ -24,6 +24,10 @@ from pyspark.sql import types as T
 
 from marketstream_etl_spark.schemas import TICK_SCHEMA
 from marketstream_etl_spark.sources.tables import sink_name
+from marketstream_etl_spark.streaming.replay import (
+    accumulate_stream,
+    drain_to_memory,
+)
 
 # Hard bound on the socket-test emitter's driver-side buffer (~200 B/frame →
 # ≤ ~40 MB).  Covers sf0.1 (~100K events) with headroom; anything larger must
@@ -232,16 +236,8 @@ def file_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = stream_events(spark, sf_dir)
     counts = symbol_counts(hot_path_filter(trades_from_events(events)))
-    name = sink_name("stream_counts", sf_dir)
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("symbol")
+    drained = drain_to_memory(counts, "stream_counts", sf_dir, "complete")
+    return drained.orderBy("symbol")
 
 
 def file_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,16 +260,8 @@ def file_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("vwap", 6).alias("vwap"),
         F.round("avg_price", 6).alias("avg_price"),
     )
-    name = sink_name("stream_windowed", sf_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("window_start_ns", "symbol")
+    drained = drain_to_memory(out, "stream_windowed", sf_dir, "complete")
+    return drained.orderBy("window_start_ns", "symbol")
 
 
 def file_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,16 +297,8 @@ def file_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros(F.col("win.start")) * 1000).alias("window_start_ns"),
         "open", "high", "low", "close", "bar_volume", "n_trades",
     )
-    name = sink_name("stream_ohlc", sf_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("symbol", "window_start_ns")
+    drained = drain_to_memory(out, "stream_ohlc", sf_dir, "complete")
+    return drained.orderBy("symbol", "window_start_ns")
 
 
 def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,17 +332,9 @@ def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_frames"),
         F.sum("volume").alias("total_volume"),
     )
-    name = sink_name("stream_deadletter", sf_dir)
     with single_parse_ingest(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("parse_error")
+        drained = drain_to_memory(out, "stream_deadletter", sf_dir, "complete")
+    return drained.orderBy("parse_error")
 
 
 # one definition of the buy→sell pairing semantics for BOTH the inner and
@@ -559,8 +531,6 @@ def _accumulate_stream(
     pairs; at 100x a driver-side sink is an OOM).  Thin wrapper over the
     generalized replay.accumulate_stream (r8) pinning the trade-domain
     shape: key = symbol, merge = cell-wise SUM."""
-    from marketstream_etl_spark.streaming.replay import accumulate_stream
-
     return accumulate_stream(
         spark,
         sf_dir,
@@ -692,37 +662,39 @@ def drain_deadletter_socket(
         F.sum("volume").alias("total_volume"),
     )
     name = sink_name(name_prefix, sf_dir)
-    ctx = single_parse_ingest(spark)
-    ctx.__enter__()
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        counted = None
-        while time.time() < deadline:
-            if feed_error:
-                raise RuntimeError(
-                    f"{name_prefix}: feeder thread failed"
-                ) from feed_error[0]
-            counted = spark.table(name).agg(F.sum("n_frames")).first()[0]
-            if counted == n_expected:
-                break
-            time.sleep(0.5)
-        q.processAllAvailable()
-        counted = spark.table(name).agg(F.sum("n_frames")).first()[0]
-        if counted != n_expected:
-            raise RuntimeError(
-                f"{name_prefix}: drained {counted} of "
-                f"{n_expected} frames before the 120s deadline"
+    # a live (non-availableNow) query polled until every frame is counted,
+    # so it keeps its own start/stop instead of replay.run_bounded
+    with single_parse_ingest(spark):
+        q = None
+        try:
+            q = (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .start()
             )
-    finally:
-        q.stop()
-        done.set()
-        ctx.__exit__(None, None, None)
+            deadline = time.time() + 120
+            counted = None
+            while time.time() < deadline:
+                if feed_error:
+                    raise RuntimeError(
+                        f"{name_prefix}: feeder thread failed"
+                    ) from feed_error[0]
+                counted = spark.table(name).agg(F.sum("n_frames")).first()[0]
+                if counted == n_expected:
+                    break
+                time.sleep(0.5)
+            q.processAllAvailable()
+            counted = spark.table(name).agg(F.sum("n_frames")).first()[0]
+            if counted != n_expected:
+                raise RuntimeError(
+                    f"{name_prefix}: drained {counted} of "
+                    f"{n_expected} frames before the 120s deadline"
+                )
+        finally:
+            if q is not None:
+                q.stop()
+            done.set()
     return spark.table(name).orderBy("parse_error")
 
 
@@ -751,15 +723,7 @@ def file_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = with_ts.groupBy(
         F.session_window("event_time", SESSION_GAP), "user_id"
     ).agg(F.count("*").alias("n_events"))
-    name = sink_name("stream_sessions", sf_dir)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drained = drain_to_memory(sessions, "stream_sessions", sf_dir, "complete")
     dur_s = (
         (
             F.unix_micros(F.col("session_window.end"))
@@ -769,7 +733,7 @@ def file_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         - SESSION_GAP_NS
     ) / 1_000_000_000
     return (
-        spark.table(name)
+        drained
         .select("user_id", "n_events", dur_s.alias("dur_s"))
         .groupBy("user_id")
         .agg(
@@ -883,16 +847,8 @@ def file_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_anomalies"),
         F.round(F.max("abs_z"), 4).alias("max_abs_z"),
     )
-    name = sink_name("stream_anomaly", sf_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("symbol")
+    drained = drain_to_memory(out, "stream_anomaly", sf_dir, "complete")
+    return drained.orderBy("symbol")
 
 
 def _sentineled_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1126,152 +1082,76 @@ def file_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(benford_digit_col().alias("digit"))
         .agg(F.count("*").alias("n_obs"))
     )
-    name = sink_name("stream_benford", sf_dir)
-    q = (
-        counts_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return benford_from_counts(
+        spark,
+        drain_to_memory(counts_stream, "stream_benford", sf_dir, "complete"),
     )
-    q.awaitTermination()
-    return benford_from_counts(spark, spark.table(name))
+
+
+def _drift_histogram(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> DataFrame:
+    """The drift family's shared stream: the complete-mode (segment,
+    bucket) histogram of click vs purchase events (bounded state —
+    2 segments × 10 buckets), drained.  Each drift monitor reduces the
+    drained final state through the SAME fixed-point core as its batch
+    query (plans/advanced.*_from_counts), so on bounded replay the
+    streamed statistic is bit-identical to the batch one."""
+    from marketstream_etl_spark.plans.advanced import psi_bucket_col
+
+    hist = (
+        stream_events(spark, sf_dir)
+        .filter(F.col("event_type").isin("click", "purchase"))
+        .groupBy(
+            F.col("event_type").alias("segment"),
+            psi_bucket_col().alias("bucket"),
+        )
+        .agg(F.count("*").alias("n"))
+    )
+    return drain_to_memory(hist, prefix, sf_dir, "complete")
 
 
 def file_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI drift monitor: the (segment, bucket) histogram runs
-    as a real complete-mode streaming aggregation (bounded state —
-    2 segments × 10 buckets), and the PSI report is computed from the
-    drained final state through the SAME fixed-point core as the batch
-    query (plans/advanced.psi_from_counts), so on bounded replay the
-    streamed statistic is bit-identical to the batch one.
+    """Streaming PSI drift monitor over the shared drift histogram.
 
     This is the serve-into-stream shape a production drift monitor uses:
     per-batch the sink holds current bucket occupancy; the PSI math reads
     the sink, not the stream."""
-    from marketstream_etl_spark.plans.advanced import (
-        psi_bucket_col,
-        psi_from_counts,
-    )
+    from marketstream_etl_spark.plans.advanced import psi_from_counts
 
-    events = stream_events(spark, sf_dir)
-    seg_stream = (
-        events.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(
-            F.col("event_type").alias("segment"),
-            psi_bucket_col().alias("bucket"),
-        )
-        .agg(F.count("*").alias("n"))
+    return psi_from_counts(
+        spark, _drift_histogram(spark, sf_dir, "stream_psi")
     )
-    name = sink_name("stream_psi", sf_dir)
-    q = (
-        seg_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return psi_from_counts(spark, spark.table(name))
 
 
 def file_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KS drift monitor — the PSI twin's reject/accept
-    companion: the SAME complete-mode (segment, bucket) histogram
-    (bounded 2x10 state), drained into the shared exact-integer KS core
-    (plans/advanced.ks_from_counts), so on bounded replay the streamed
-    statistic and verdict are bit-identical to the batch ks_drift and
-    the driver reuses its oracle."""
-    from marketstream_etl_spark.plans.advanced import (
-        ks_from_counts,
-        psi_bucket_col,
-    )
+    companion: the shared drift histogram drained into the exact-integer
+    KS core, so the driver reuses the batch ks_drift oracle."""
+    from marketstream_etl_spark.plans.advanced import ks_from_counts
 
-    events = stream_events(spark, sf_dir)
-    seg_stream = (
-        events.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(
-            F.col("event_type").alias("segment"),
-            psi_bucket_col().alias("bucket"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-    name = sink_name("stream_ks", sf_dir)
-    q = (
-        seg_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return ks_from_counts(spark, spark.table(name))
+    return ks_from_counts(spark, _drift_histogram(spark, sf_dir, "stream_ks"))
 
 
 def file_stream_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Mann-Whitney U drift monitor — third member of the
-    streaming drift family (PSI magnitude, KS sup-gap, U rank order):
-    the SAME complete-mode (segment, bucket) histogram (bounded 2x10
-    state) drained into the shared exact-integer midrank core
-    (plans/advanced.mannwhitney_from_counts), so on bounded replay the
-    streamed statistic and verdict are bit-identical to the batch
-    mannwhitney_drift and the driver reuses its oracle."""
-    from marketstream_etl_spark.plans.advanced import (
-        mannwhitney_from_counts,
-        psi_bucket_col,
-    )
+    streaming drift family (PSI magnitude, KS sup-gap, U rank order): the
+    shared drift histogram drained into the exact-integer midrank core,
+    so the driver reuses the batch mannwhitney_drift oracle."""
+    from marketstream_etl_spark.plans.advanced import mannwhitney_from_counts
 
-    events = stream_events(spark, sf_dir)
-    seg_stream = (
-        events.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(
-            F.col("event_type").alias("segment"),
-            psi_bucket_col().alias("bucket"),
-        )
-        .agg(F.count("*").alias("n"))
+    return mannwhitney_from_counts(
+        spark, _drift_histogram(spark, sf_dir, "stream_mwu")
     )
-    name = sink_name("stream_mwu", sf_dir)
-    q = (
-        seg_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return mannwhitney_from_counts(spark, spark.table(name))
 
 
 def file_stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming chi-square drift monitor — fourth member of the
-    streaming drift family (PSI magnitude, KS sup-gap, U rank order,
-    chi-square full-table shape): the SAME complete-mode (segment,
-    bucket) histogram (bounded 2x10 state) drained into the shared
-    exact-integer contingency core (plans/advanced.chi2_from_counts), so
-    on bounded replay the streamed statistic and verdict are
-    bit-identical to the batch chi2_drift and the driver reuses its
-    oracle."""
-    from marketstream_etl_spark.plans.advanced import (
-        chi2_from_counts,
-        psi_bucket_col,
-    )
+    streaming drift family (full-table shape): the shared drift histogram
+    drained into the exact-integer contingency core, so the driver reuses
+    the batch chi2_drift oracle."""
+    from marketstream_etl_spark.plans.advanced import chi2_from_counts
 
-    events = stream_events(spark, sf_dir)
-    seg_stream = (
-        events.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(
-            F.col("event_type").alias("segment"),
-            psi_bucket_col().alias("bucket"),
-        )
-        .agg(F.count("*").alias("n"))
+    return chi2_from_counts(
+        spark, _drift_histogram(spark, sf_dir, "stream_chi2")
     )
-    name = sink_name("stream_chi2", sf_dir)
-    q = (
-        seg_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return chi2_from_counts(spark, spark.table(name))

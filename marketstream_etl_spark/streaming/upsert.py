@@ -23,9 +23,12 @@ against a plain argmax SQL.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from marketstream_etl_spark.streaming.replay import run_bounded
 
 
 def _batch_latest(df: DataFrame) -> DataFrame:
@@ -92,22 +95,8 @@ def file_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(snap_dir)
 
     # fresh snapshot per invocation: the op is the RUN, not a cache
-    import shutil
-
     shutil.rmtree(snap_dir, ignore_errors=True)
-    q = (
-        trades.writeStream.foreachBatch(upsert_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(snap_dir + "_ck"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import shutil as _sh
-
-    _sh.rmtree(snap_dir + "_ck", ignore_errors=True)
+    run_bounded(trades.writeStream.foreachBatch(upsert_batch))
     return (
         spark.read.parquet(snap_dir)
         .select(

@@ -8,14 +8,20 @@ paid to learn, so a future edit cannot silently reintroduce them.
 2. Driver-side .collect() inventory: every site must be a known bounded
    materialization (codebooks, scalars, vocab, fixture probes).  A new
    .collect() fails the lint until it is reviewed and whitelisted here.
+3. One stream runner: outside streaming/replay.py no package, bench or
+   tool code starts a writeStream, awaits a query or sets a checkpoint
+   location; bounded drains go through replay.run_bounded, which owns
+   the deadline, the stop and the checkpoint.
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / "marketstream_etl_spark"
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "marketstream_etl_spark"
 
 # identifiers that are provably bounded at any scale factor
 BOUNDED_BROADCAST_NAMES = {
@@ -79,3 +85,93 @@ def test_collect_sites_are_whitelisted():
             "provably bounded frames — review the new site and update the "
             "whitelist with its bound"
         )
+
+
+RUNNER = "marketstream_etl_spark/streaming/replay.py"
+# (file, function) sites that may manage a query's lifecycle themselves
+STREAM_LIFECYCLE_ALLOWED = {
+    # a live socket query (not availableNow) polled until every emitted
+    # frame is counted; it keeps its own start/stop
+    ("marketstream_etl_spark/streaming/ticks.py", "drain_deadletter_socket"),
+}
+
+
+def _chain_has_attr(node: ast.AST, attr: str) -> bool:
+    """True when a call/attribute chain such as df.writeStream.x(...).y
+    passes through `.attr`."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == attr:
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def stream_lifecycle_sites(src: str) -> list[tuple[str, str]]:
+    """(enclosing function, construct) for every writeStream….start(),
+    awaitTermination call and "checkpointLocation" literal in `src`."""
+    sites: list[tuple[str, str]] = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and isinstance(
+                child.func, ast.Attribute
+            ):
+                if child.func.attr == "start" and _chain_has_attr(
+                    child.func.value, "writeStream"
+                ):
+                    sites.append((fn, "writeStream.start()"))
+                elif child.func.attr == "awaitTermination":
+                    sites.append((fn, "awaitTermination()"))
+            elif (
+                isinstance(child, ast.Constant)
+                and child.value == "checkpointLocation"
+            ):
+                sites.append((fn, "checkpointLocation"))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else fn)
+
+    visit(ast.parse(src), "<module>")
+    return sites
+
+
+def test_stream_lifecycle_lint_detects_hand_written_drain():
+    src = (
+        "def drain(df, ck):\n"
+        "    q = df.writeStream.format('memory').option(\n"
+        "        'checkpointLocation', ck).start()\n"
+        "    q.awaitTermination()\n"
+        "    t.start()\n"
+    )
+    assert sorted(stream_lifecycle_sites(src)) == [
+        ("drain", "awaitTermination()"),
+        ("drain", "checkpointLocation"),
+        ("drain", "writeStream.start()"),
+    ]
+
+
+def test_streams_run_only_through_the_runner():
+    files = [
+        *PKG.rglob("*.py"),
+        ROOT / "bench.py",
+        *(ROOT / "tools").rglob("*.py"),
+    ]
+    offenders, allowed_seen = [], set()
+    for py in files:
+        rel = py.relative_to(ROOT).as_posix()
+        if rel == RUNNER:
+            continue
+        for fn, what in stream_lifecycle_sites(py.read_text()):
+            if (rel, fn) in STREAM_LIFECYCLE_ALLOWED:
+                allowed_seen.add((rel, fn))
+            else:
+                offenders.append(f"{rel}:{fn}: {what}")
+    assert offenders == [], (
+        "bounded streams must run through streaming/replay.run_bounded "
+        "(or drain_to_memory), which owns the deadline, the stop and the "
+        f"checkpoint; found: {offenders}"
+    )
+    # a stale allow-list entry would silently widen the lint
+    assert allowed_seen == STREAM_LIFECYCLE_ALLOWED

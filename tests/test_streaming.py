@@ -441,3 +441,70 @@ def test_single_parse_ingest_scopes_and_restores_conf(spark):
     # excludedRules has a None default, so "restored to unset" reads back
     # as None rather than raising
     assert spark.conf.get(key) in (None, "<undefined>")
+
+
+def _spy_mkdtemp(monkeypatch) -> list[str]:
+    """Record every directory tempfile.mkdtemp creates during the test."""
+    import tempfile
+
+    made: list[str] = []
+    real = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    return made
+
+
+def _file_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(1000).write.parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_run_bounded_reraises_stops_and_removes_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """A failing foreachBatch: run_bounded re-raises the query's failure,
+    leaves no query running and removes the checkpoint it made."""
+    import os
+
+    import pytest
+
+    from marketstream_etl_spark.streaming.replay import run_bounded
+
+    stream = _file_stream(spark, tmp_path)
+    before = {q.id for q in spark.streams.active}
+    made = _spy_mkdtemp(monkeypatch)
+
+    def fail(batch, bid):
+        raise ValueError("foreachBatch failed on purpose")
+
+    with pytest.raises(Exception, match="foreachBatch failed on purpose"):
+        run_bounded(stream.writeStream.foreachBatch(fail))
+    assert [q for q in spark.streams.active if q.id not in before] == []
+    assert made and not any(os.path.exists(d) for d in made)
+
+
+def test_run_bounded_deadline_raises_stops_and_removes_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """A drain still running at STREAM_DEADLINE_S raises TimeoutError; the
+    query is stopped and its checkpoint removed."""
+    import os
+
+    import pytest
+
+    from marketstream_etl_spark.streaming import replay
+
+    stream = _file_stream(spark, tmp_path)
+    before = {q.id for q in spark.streams.active}
+    made = _spy_mkdtemp(monkeypatch)
+    monkeypatch.setattr(replay, "STREAM_DEADLINE_S", 0.001)
+
+    with pytest.raises(TimeoutError):
+        replay.run_bounded(stream.writeStream.format("noop"))
+    assert [q for q in spark.streams.active if q.id not in before] == []
+    assert made and not any(os.path.exists(d) for d in made)

@@ -119,3 +119,19 @@ def test_foreachbatch_jdbc_dual_sink(spark, sf_dir):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_jdbc_dual_sink_leaves_no_checkpoint(spark, sf_dir):
+    """The JDBC dual sink leaves no jdbc_dual_sink_ckpt_* directory in the
+    temp dir: the stream runner owns the checkpoint and removes it."""
+    import glob
+    import os
+
+    from marketstream_etl_spark.streaming.jdbc_sink import (
+        file_stream_jdbc_dual_sink,
+    )
+
+    pattern = os.path.join(tempfile.gettempdir(), "jdbc_dual_sink_ckpt_*")
+    before = set(glob.glob(pattern))
+    assert file_stream_jdbc_dual_sink(spark, sf_dir).count() > 0
+    assert set(glob.glob(pattern)) - before == set()

@@ -21,6 +21,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.session import get_spark
+from marketstream_etl_spark.streaming.replay import run_bounded
 from marketstream_etl_spark.streaming.ticks import SESSION_GAP, stream_events
 
 DIRS = ["/tmp/marketstream_sf1", "/tmp/marketstream_sf10"]
@@ -29,14 +30,9 @@ N = 3
 
 def run_stream(df, name: str, mode: str) -> float:
     t0 = time.perf_counter()
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        df.writeStream.format("memory").queryName(name).outputMode(mode)
     )
-    q.awaitTermination()
     return time.perf_counter() - t0
 
 

@@ -1,440 +1,83 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 `entry(spark)` runs the flagship trade-ETL query on sf0.001.
-`queries()` maps every implemented operator (SURVEY.md §2 + north-star
-training-data ops) to a (spark, sf_dir) -> DataFrame callable.
-`oracle_sql()` gives the DuckDB-equivalent SQL for each; column names and
-rounding match the Spark side exactly so the driver's order-insensitive
-value hash is stable.
+`queries()` maps every registered query to its (spark, sf_dir) -> DataFrame
+callable, and `oracle_sql()` maps each to its DuckDB oracle SQL.  Column
+names and rounding match the Spark side exactly, so the driver's
+order-insensitive value hash is stable.  Each query and its oracle are
+registered next to the operator (`marketstream_etl_spark/registry.py`).
 """
 
 from __future__ import annotations
 
 import sys
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, "/root/repo")
 
-from marketstream_etl_spark.functions.hashing import (
-    h32_sql as _h32_sql,
-    shingles_sql as _shingles_sql,
-    tokens_sql as _tokens_sql,
-)
-from marketstream_etl_spark.operators import dedup as _dedup
-from marketstream_etl_spark.operators import similarity as _sim
-from marketstream_etl_spark.operators import graph as _graph
-from marketstream_etl_spark.operators import relevance as _relevance
-from marketstream_etl_spark.operators import fusion as _fusion
-from marketstream_etl_spark.operators import novelty as _novelty
-from marketstream_etl_spark.operators import asof as _asof
-from marketstream_etl_spark.streaming import docs as _stream_docs
-from marketstream_etl_spark.operators import lm as _lm
-from marketstream_etl_spark.sources import binary_assets as _binassets
-from marketstream_etl_spark.sources import formats as _formats
-from marketstream_etl_spark.operators import patterns as _patterns
-from marketstream_etl_spark.operators import sketch as _sketch
-from marketstream_etl_spark.operators import winnow as _winnow
-from marketstream_etl_spark.operators import text as _text
+# Importing these modules registers their queries.
+from marketstream_etl_spark.operators import sketch
 from marketstream_etl_spark.plans import advanced, analytics, tpch, training_data
-from marketstream_etl_spark.operators import changepoint as _changepoint
-from marketstream_etl_spark.plans.trades_view import TRADES_CTE
-from marketstream_etl_spark.sources.pyds import N_ROWS_DEFAULT as _tradegen_n
-from marketstream_etl_spark.sources.pyds import tradegen_oracle_cte as _tradegen_cte
-from marketstream_etl_spark.sources.tables import table_row_count as _table_row_count
+from marketstream_etl_spark.registry import ORACLES, QUERIES, Query
+from marketstream_etl_spark.sources import bucketed
+from marketstream_etl_spark.streaming import docs, jdbc_sink, stateful, ticks
+from marketstream_etl_spark.streaming import tws, upsert, websocket
 
-# ---------------------------------------------------------------------------
-# Shared DuckDB SQL fragments (keep in lockstep with the Spark operators).
-# ---------------------------------------------------------------------------
-
-_REASON_CASE = """
-    CASE
-        WHEN NOT coalesce(regexp_full_match(symbol, '[A-Z]{1,10}'), false)
-            THEN 'invalid symbol'
-        WHEN NOT coalesce(price > 0 AND price < 1000000.0, false)
-            THEN 'invalid price'
-        WHEN NOT coalesce(volume > 0, false) THEN 'invalid volume'
-        WHEN NOT coalesce(side IN ('B','S','N'), false) THEN 'invalid side'
-        WHEN NOT coalesce("type" IN ('M','L','I'), false) THEN 'invalid type'
-        WHEN NOT coalesce("timestamp" > 0, false) THEN 'invalid timestamp'
-        ELSE NULL
-    END
-"""
-
-_VALID_WHERE = """
-    regexp_full_match(symbol, '[A-Z]{1,10}') AND price > 0
-    AND price < 1000000.0 AND volume > 0 AND side IN ('B','S','N')
-    AND "type" IN ('M','L','I') AND "timestamp" > 0
-"""
-
-# Rolling per-row indicators over valid trades (window SQL); shared by the
-# rolling_indicators and asof_enrich oracles.
-_ROLLING_SQL_BODY = """
-chg AS (
-    SELECT trade_id, symbol, "timestamp", price, volume,
-           price - lag(price) OVER (PARTITION BY symbol
-               ORDER BY "timestamp", trade_id) AS change
-    FROM valid
-),
-roll AS (
-    SELECT trade_id, symbol, "timestamp",
-        avg(price) OVER w5 AS sma,
-        CASE WHEN count(change) OVER w5 < 1 THEN 50.0
-             WHEN sum(CASE WHEN change < 0 THEN -change ELSE 0 END) OVER w5 = 0.0
-                 THEN 100.0
-             ELSE 100.0 - 100.0 / (1.0 +
-                 (sum(CASE WHEN change > 0 THEN change ELSE 0 END) OVER w5
-                     / count(change) OVER w5)
-               / (sum(CASE WHEN change < 0 THEN -change ELSE 0 END) OVER w5
-                     / count(change) OVER w5))
-        END AS rsi,
-        sum(price * volume) OVER wrun
-            / sum(CAST(volume AS DOUBLE)) OVER wrun AS vwap
-    FROM chg
-    WINDOW
-        w5 AS (PARTITION BY symbol ORDER BY "timestamp", trade_id
-               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-        wrun AS (PARTITION BY symbol ORDER BY "timestamp", trade_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+# The external driver's correctness gate records only the first 50 queries,
+# so GATE fixes which queries it checks and in what order.
+GATE = (
+    "validate_split",
+    "csv_fixture_roundtrip",
+    "indicators",
+    "symbol_leaderboard",
+    "parquet_sink_roundtrip",
+    "parallel_jdbc_roundtrip",
+    "streaming_websocket",
+    "streaming_ohlc",
+    "streaming_join_full_outer",
+    "streaming_stateful",
+    "streaming_jdbc_sink",
+    "asof_enrich",
+    "bucketed_join",
+    "partition_pruning",
+    "generator_invariants",
+    "ks_drift",
+    "text_analysis",
+    "dedup_minhash_lsh",
+    "multimodal_features",
+    "roc_auc",
+    "t_closeness",
+    "events_tumbling",
+    "range_join_bands",
+    "approx_aggs",
+    "variant_props",
+    "rolling_time_window",
+    "incremental_agg",
+    "price_histogram",
+    "column_profile",
+    "funnel",
+    "retention_cohorts",
+    "lateness_audit",
+    "asof_events_tolerance",
+    "compaction_roundtrip",
+    "fk_orphans",
+    "federated_join",
+    "partition_backfill",
+    "schema_evolution",
+    "bollinger_breaches",
+    "hdr_quantiles_grouped",
+    "price_outliers",
+    "return_autocorr",
+    "symbol_affinity",
+    "vwap_deviation",
+    "zipf_audit",
+    "source_entropy",
+    "padding_efficiency",
+    "ngram_novelty",
+    "bpe_merge_candidates",
+    "dedup_collapse_weighted",
 )
-"""
-
-# Per-symbol indicator snapshot with exact reference semantics
-# (TechnicalIndicators.hpp:79-330); see operators/indicators.py.
-_INDICATORS_SQL = f"""
-WITH trades AS ({TRADES_CTE}),
-valid AS (SELECT * FROM trades WHERE {_VALID_WHERE}),
-ann AS (
-    SELECT symbol, price, volume,
-        row_number() OVER (PARTITION BY symbol
-                           ORDER BY "timestamp" DESC, trade_id DESC) AS rn_desc,
-        count(*) OVER (PARTITION BY symbol) AS n,
-        price - lag(price) OVER (PARTITION BY symbol
-                                 ORDER BY "timestamp", trade_id) AS change
-    FROM valid
-),
-agg AS (
-    SELECT symbol, max(n) AS n,
-        avg(CASE WHEN rn_desc <= least(5, n) THEN price END) AS sma_raw,
-        sum(CASE WHEN rn_desc <= least(5, n - 1) AND change > 0
-                 THEN change ELSE 0 END) AS gain_sum,
-        sum(CASE WHEN rn_desc <= least(5, n - 1) AND change < 0
-                 THEN -change ELSE 0 END) AS loss_sum,
-        sum(price * volume) AS pv,
-        sum(CAST(volume AS DOUBLE)) AS v
-    FROM ann GROUP BY symbol
-)
-SELECT symbol,
-    round(sma_raw, 6) AS sma,
-    round(CASE WHEN n < 2 OR least(5, n) <= 1 THEN 50.0
-               WHEN loss_sum = 0.0 THEN 100.0
-               ELSE 100.0 - 100.0 / (1.0 +
-                    (gain_sum / CAST(least(5, n - 1) AS DOUBLE))
-                  / (loss_sum / CAST(least(5, n - 1) AS DOUBLE)))
-          END, 6) AS rsi,
-    round(CASE WHEN v = 0 THEN 0.0 ELSE pv / v END, 6) AS vwap,
-    CAST(least(5, n) AS INTEGER) AS period
-FROM agg
-"""
-
-
-def _stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming z-score tripwire: batch-trained per-symbol stats broadcast
-    into a real streaming run; final anomaly counters equal the batch
-    z-score pass (the oracle)."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_anomaly
-
-    return file_stream_anomaly(spark, sf_dir)
-
-
-def _stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming/batch parity probe: an actual availableNow streaming query
-    whose final state must hash-match the batch oracle (ST3/ST5)."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_counts
-
-    return file_stream_counts(spark, sf_dir)
-
-
-def _stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OHLCV bars: windowed event-time aggregate whose final
-    state on bounded replay equals the batch resample."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_ohlc
-
-    return file_stream_ohlc(spark, sf_dir)
-
-
-def _stream_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Network-ingest e2e: localhost TCP emitter (TickServer stand-in) →
-    socket source → from_json → dead-letter split (S4/S5 parity)."""
-    from marketstream_etl_spark.streaming.ticks import socket_stream_deadletter
-
-    return socket_stream_deadletter(spark, sf_dir)
-
-
-def _stream_websocket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Network-ingest e2e over REAL RFC 6455 (streaming/websocket.py):
-    handshake, text-frame decode/unmask, CLOSE exchange — the WS server
-    plays TickServer.hpp, the bridge client plays TickClient.hpp, and
-    Spark's socket source consumes the decoded payload lines.  Same
-    dead-letter contract and oracle as streaming_socket."""
-    from marketstream_etl_spark.streaming.websocket import (
-        websocket_stream_deadletter,
-    )
-
-    return websocket_stream_deadletter(spark, sf_dir)
-
-
-def _stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch as a streaming aggregate: bounded d*w state, final
-    sketch == batch sketch on replay (algebraic cell-wise merge)."""
-    from marketstream_etl_spark.operators.sketch import streaming_cms_heavy_hitters
-
-    return streaming_cms_heavy_hitters(spark, sf_dir)
-
-
-def _stream_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HDR quantile grid as a streaming aggregate: fixed-size add-merged
-    state, final grid == batch grid on replay, shared report + oracle."""
-    from marketstream_etl_spark.operators.sketch import streaming_hdr_quantiles
-
-    return streaming_hdr_quantiles(spark, sf_dir)
-
-
-def _stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog as a streaming aggregate: bounded sources*m register
-    state, final registers == batch registers on replay (cell-wise MAX
-    merge), shared report stage -> shared oracle."""
-    from marketstream_etl_spark.operators.sketch import streaming_hll_cardinality
-
-    return streaming_hll_cardinality(spark, sf_dir)
-
-
-def _stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STATIC join axis: corpus docs stream in, the benchmark
-    shingle set is a static broadcast; final snapshot == the batch
-    contamination operator (shared oracle)."""
-    from marketstream_etl_spark.streaming.docs import file_stream_contamination
-
-    return file_stream_contamination(spark, sf_dir)
-
-
-def _stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-source token-drift: incremental (source, token)
-    counts, chi-square on the final snapshot via the shared batch core
-    (training_data.chi2_by_source) — statistic equals the batch
-    token_drift row, oracle shared."""
-    from marketstream_etl_spark.streaming.docs import file_stream_token_drift
-
-    return file_stream_token_drift(spark, sf_dir)
-
-
-def _stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming calibration monitor: stream-safe quality scoring per
-    micro-batch, complete-mode 10-bin histogram, reliability report via
-    the shared integer core (training_data.calibration_from_counts) —
-    bit-identical to batch calibration_ece on bounded replay."""
-    from marketstream_etl_spark.streaming.docs import file_stream_calibration
-
-    return file_stream_calibration(spark, sf_dir)
-
-
-def _stream_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ROC-AUC monitor: stream-safe scoring per micro-batch,
-    complete-mode e3-grid histogram, AUC via the shared exact-integer
-    midrank core (training_data.roc_from_counts) — bit-identical to
-    batch roc_auc on bounded replay."""
-    from marketstream_etl_spark.streaming.docs import file_stream_roc
-
-    return file_stream_roc(spark, sf_dir)
-
-
-def _stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming embedding-drift monitor: map-side (snap, dim, bucket)
-    explode per micro-batch, complete-mode bounded histogram, per-dim
-    PSI via the shared fixed-point core
-    (training_data.emb_drift_from_counts) — bit-identical to batch
-    embedding_drift on bounded replay."""
-    from marketstream_etl_spark.streaming.docs import (
-        file_stream_embedding_drift,
-    )
-
-    return file_stream_embedding_drift(spark, sf_dir)
-
-
-def _stream_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Information-Value monitor: stream-safe scoring per
-    micro-batch, complete-mode bounded (bin, a, c) histogram, WoE/IV via
-    the shared clamped-share core (training_data.iv_from_counts) —
-    bit-identical to batch information_value on bounded replay."""
-    from marketstream_etl_spark.streaming.docs import file_stream_iv
-
-    return file_stream_iv(spark, sf_dir)
-
-
-def _stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST6: corrupt-frame dead-letter split as a real streaming ingest."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_deadletter
-
-    return file_stream_deadletter(spark, sf_dir)
-
-
-def _stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST4 parity probe: watermark + tumbling window on a real streaming
-    run; bounded replay makes the final state equal the batch bucketing."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_windowed
-
-    return file_stream_windowed(spark, sf_dir)
-
-
-def _stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming dropDuplicates over deliberately doubled input:
-    every trade must come out exactly once."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_dedup_counts
-
-    return file_stream_dedup_counts(spark, sf_dir)
-
-
-def _stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """State-bounded dropDuplicatesWithinWatermark variant: same exact-once
-    contract, but dedup keys are evicted once the watermark passes them."""
-    from marketstream_etl_spark.streaming.ticks import (
-        file_stream_dedup_watermarked,
-    )
-
-    return file_stream_dedup_watermarked(spark, sf_dir)
-
-
-def _stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream interval join (buy→sell pairing within 1h);
-    bounded replay makes the appended output equal the batch interval join."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_join
-
-    return file_stream_join(spark, sf_dir)
-
-
-def _stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SCD1 snapshot: foreachBatch MERGE-upsert of latest-per-
-    symbol rows into a parquet state table over a 4-batch replay; the
-    drained snapshot equals the batch argmax regardless of batch split."""
-    from marketstream_etl_spark.streaming.upsert import (
-        file_stream_upsert_snapshot,
-    )
-
-    return file_stream_upsert_snapshot(spark, sf_dir)
-
-
-def _stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Benford monitor: complete-mode 9-digit histogram state,
-    report via the shared batch fixed-point core — bit-identical to the
-    batch audit on bounded replay (reuses the benford_audit oracle)."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_benford
-
-    return file_stream_benford(spark, sf_dir)
-
-
-def _stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI drift monitor: complete-mode (segment, bucket)
-    histogram (bounded 2×10 state) drained into the shared fixed-point
-    PSI core — bit-identical to the batch psi_drift on bounded replay."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_psi
-
-    return file_stream_psi(spark, sf_dir)
-
-
-def _stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KS drift monitor: the PSI twin's reject/accept companion
-    — same complete-mode (segment, bucket) histogram, drained into the
-    shared exact-integer KS core; bit-identical to batch ks_drift on
-    bounded replay."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_ks
-
-    return file_stream_ks(spark, sf_dir)
-
-
-def _stream_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Mann-Whitney U drift monitor: same complete-mode
-    (segment, bucket) histogram, drained into the shared exact-integer
-    midrank core; bit-identical to batch mannwhitney_drift on bounded
-    replay."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_mwu
-
-    return file_stream_mwu(spark, sf_dir)
-
-
-def _stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming chi-square drift monitor: same complete-mode (segment,
-    bucket) histogram, drained into the shared exact-integer contingency
-    core; bit-identical to batch chi2_drift on bounded replay."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_chi2
-
-    return file_stream_chi2(spark, sf_dir)
-
-
-def _stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER watermarked interval join: unmatched rows flush from
-    BOTH sides (buys with NULL sells, sells with NULL buys) — the
-    completion of the streaming outer-join family; same sentinel-driven
-    bounded replay, batch full-join oracle."""
-    from marketstream_etl_spark.streaming.ticks import (
-        file_stream_join_full_outer,
-    )
-
-    return file_stream_join_full_outer(spark, sf_dir)
-
-
-def _stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER watermarked interval join: unmatched buys flush with NULL
-    sell columns once a later batch's watermark passes their horizon (a
-    two-file sentinel stream supplies the later batch on bounded replay);
-    the appended output equals the batch left interval join."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_join_outer
-
-    return file_stream_join_outer(spark, sf_dir)
-
-
-def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native streaming session_window sessionization; final state on
-    bounded replay equals the batch gaps-and-islands plan."""
-    from marketstream_etl_spark.streaming.ticks import file_stream_sessions
-
-    return file_stream_sessions(spark, sf_dir)
-
-
-def _stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState last-N indicators);
-    final per-symbol state on bounded replay equals the batch snapshot."""
-    from marketstream_etl_spark.streaming.stateful import (
-        file_stream_stateful_indicators,
-    )
-
-    return file_stream_stateful_indicators(spark, sf_dir)
-
-
-def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-located fact join over bucket-sorted managed tables (exchange-free
-    sort-merge; test_layout asserts the plan shape)."""
-    from marketstream_etl_spark.sources.bucketed import q_bucketed_join
-
-    return q_bucketed_join(spark, sf_dir)
-
-
-def _stream_jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch dual JDBC sink (embedded Derby) + relational readback;
-    the oracle's plain GROUP BY proves exactly-once landing in both tables."""
-    from marketstream_etl_spark.streaming.jdbc_sink import (
-        file_stream_jdbc_dual_sink,
-    )
-
-    return file_stream_jdbc_dual_sink(spark, sf_dir)
-
-
-def _stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 transformWithStateInPandas backend for the same stateful
-    indicator operator; identical oracle (the backends are interchangeable)."""
-    from marketstream_etl_spark.streaming.tws import file_stream_tws_indicators
-
-    return file_stream_tws_indicators(spark, sf_dir)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -442,3187 +85,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.q_indicators(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the external driver's correctness gate has only ever
-    # recorded the first 50 entries of this dict (both prior rounds stopped
-    # at exactly 50), so the first 50 slots are allocated to maximize
-    # distinct-operator coverage: trade-domain reference parity, the whole
-    # streaming surface, then one representative per SURVEY-§2 operator
-    # family and the LLM-pipeline north-star ops.  Everything after slot 50
-    # still runs under tools/check_oracle.py locally.
-    qs = {
-        # r14 rotation (r13 VERDICT item 7 — retire the never-gated
-        # list): the final 6 rows that have never held a driver slot
-        # (bollinger_breaches, hdr_quantiles_grouped, price_outliers,
-        # return_autocorr, symbol_affinity, vwap_deviation — the
-        # trade-analytics twins deferred in r13) take the gate this
-        # round; never-gated count 6 -> 0.  To make room, 6 of the 28
-        # driver-green r13 first-timers rotate below the fold, chosen
-        # where an incoming row covers the same capability class
-        # (set_ops, percentiles, json_props, recursive_rollup,
-        # rolling_distinct_users, mad_outliers — all CORRECTNESS_r13
-        # green, all still check_oracle-verified below the fold).
-        # incremental_agg KEEPS its slot: it is the r13 red row and the
-        # driver gate must witness the fix (VERDICT item 1 "Done").
-        # r13 rotation (r12 VERDICT item 1 — FINISH the gate-rotation
-        # program): 29 of the 35 rows that have never held a driver slot
-        # take the gate this round (never-gated count 35 -> 6), keeping
-        # the SAME 21 family anchors as r11/r12 (one per SURVEY-§2 /
-        # north-star family): validate_split (V1-V6/F1),
-        # csv_fixture_roundtrip (S1/S2 golden), indicators (A1-A4/W),
-        # symbol_leaderboard (A8/O2/O3), parquet_sink_roundtrip
-        # (S11/S12/X11), parallel_jdbc_roundtrip (S8/S9),
-        # streaming_websocket (S4/S5/ST6), streaming_ohlc (ST4
-        # watermark+window bars), streaming_join_full_outer (banded
-        # interval join), streaming_stateful (ST3 +
-        # applyInPandasWithState surface), streaming_jdbc_sink
-        # (ST7/S10/S13), asof_enrich (J2), bucketed_join (S7),
-        # partition_pruning (F5/O5), generator_invariants (S3/X7/X8/X10),
-        # ks_drift (drift), text_analysis (text; populates the analyzed
-        # cache for everything after it), dedup_minhash_lsh (dedup),
-        # multimodal_features (multimodal), roc_auc (classifier eval),
-        # t_closeness (privacy).
-        # The 6 rows deferred to the r14 gate are all trade-analytics
-        # twins of long-driver-green families (bollinger_breaches,
-        # hdr_quantiles_grouped, price_outliers, return_autocorr,
-        # symbol_affinity, vwap_deviation) — the 29 slotted here are the
-        # operator-distinct capability rows (OLAP long tail, warehouse
-        # maintenance, format/federation surface).
-        # OUT — the 29 r12 first-timers, every one driver-green in the
-        # r12 gate (CORRECTNESS_r12.json), each family still anchored
-        # per the list above, all still check_oracle-verified in the
-        # local sweep below the fold: quality_classifier,
-        # quality_percentile_filter, langid_confusion, token_drift,
-        # top_pmi_bigrams, udtf_doc_terms, chunk_documents,
-        # train_test_split, stratified_sample, kfold_assign,
-        # split_leakage, source_overlap, source_mixture, snapshot_diff,
-        # dedup_family_agreement, cluster_profile, embedding_stats,
-        # embedding_quantize, ann_ivf_recall, ann_truncated_recall,
-        # array_functions, jsonl/orc/xml_roundtrip, binary_ingest,
-        # grouping_sets, cube_events, rollup_lineitem, pivot_status.
-        # --- trade domain anchors (reference parity, SURVEY §2.2-2.5) ---
-        "validate_split": analytics.q_validate_split,
-        "csv_fixture_roundtrip": analytics.q_csv_fixture_roundtrip,
-        "indicators": analytics.q_indicators,
-        "symbol_leaderboard": analytics.q_symbol_leaderboard,
-        "parquet_sink_roundtrip": analytics.q_parquet_sink_roundtrip,
-        "parallel_jdbc_roundtrip": analytics.q_parallel_jdbc_roundtrip,  # S9
-        # --- streaming anchors (real Structured Streaming runs) ---
-        "streaming_websocket": _stream_websocket,
-        "streaming_ohlc": _stream_ohlc,
-        "streaming_join_full_outer": _stream_join_full_outer,
-        "streaming_stateful": _stream_stateful,
-        "streaming_jdbc_sink": _stream_jdbc_sink,
-        # --- remaining family anchors ---
-        "asof_enrich": advanced.q_asof_enrich,  # J2
-        "bucketed_join": _bucketed_join,  # S7 + co-located join
-        "partition_pruning": advanced.q_partition_pruning,  # F5/O5
-        "generator_invariants": advanced.q_generator_invariants,  # S3/X7/X8
-        "ks_drift": advanced.q_ks_drift,
-        # text_analysis first among document rows so the gate attributes
-        # the shared analyzed-cache population to the text row, as in
-        # every prior round; dedup_minhash_lsh likewise owns the shared
-        # LSH/shingle cache
-        "text_analysis": training_data.q_text_analysis,
-        "dedup_minhash_lsh": training_data.q_dedup_minhash_lsh,
-        "multimodal_features": training_data.q_multimodal_features,
-        "roc_auc": training_data.q_roc_auc,
-        "t_closeness": advanced.q_t_closeness,
-        # --- r13 first-timers: advanced OLAP long tail ---
-        "events_tumbling": advanced.q_events_tumbling,
-        "range_join_bands": advanced.q_range_join_bands,
-        "approx_aggs": advanced.q_approx_aggs,
-        "variant_props": advanced.q_variant_props,
-        "rolling_time_window": advanced.q_rolling_time_window,
-        "incremental_agg": advanced.q_incremental_agg,
-        "price_histogram": advanced.q_price_histogram,
-        "column_profile": advanced.q_column_profile,
-        "funnel": advanced.q_funnel,
-        "retention_cohorts": advanced.q_retention_cohorts,
-        "lateness_audit": advanced.q_lateness_audit,
-        "asof_events_tolerance": advanced.q_asof_events_tolerance,
-        # --- r13 first-timers: warehouse maintenance / federation ---
-        "compaction_roundtrip": advanced.q_compaction_roundtrip,
-        "fk_orphans": advanced.q_fk_orphans,
-        "federated_join": advanced.q_federated_join,
-        "partition_backfill": advanced.q_partition_backfill,
-        "schema_evolution": advanced.q_schema_evolution,
-        # --- r14 first-timers: the last 6 never-gated rows (trade
-        # analytics twins; never-gated count -> 0) ---
-        "bollinger_breaches": analytics.q_bollinger_breaches,
-        "hdr_quantiles_grouped": advanced.q_hdr_quantiles_grouped,
-        "price_outliers": analytics.q_price_outliers,
-        "return_autocorr": analytics.q_return_autocorr,
-        "symbol_affinity": analytics.q_symbol_affinity,
-        "vwap_deviation": analytics.q_vwap_deviation,
-        # --- r13 first-timers: statistical-audit / LLM-pipeline rows ---
-        "zipf_audit": training_data.q_zipf_audit,
-        "source_entropy": training_data.q_source_entropy,
-        "padding_efficiency": training_data.q_padding_efficiency,
-        "ngram_novelty": training_data.q_ngram_novelty,
-        "bpe_merge_candidates": training_data.q_bpe_merge_candidates,
-        "dedup_collapse_weighted": training_data.q_dedup_collapse_weighted,
-        # ---------------- fold: slot 51+ ----------------
-        # r14 rotation OUT rows (6 of the 29 r13 first-timers, all
-        # driver-green in the r13 gate; displaced by the final
-        # never-gated six above):
-        "set_ops": advanced.q_set_ops,
-        "percentiles": advanced.q_percentiles,
-        "json_props": advanced.q_json_props,
-        "recursive_rollup": advanced.q_recursive_rollup,
-        "rolling_distinct_users": advanced.q_rolling_distinct_users,
-        "mad_outliers": training_data.q_mad_outliers,
-        # r13 rotation OUT rows (the 29 r12 first-timers, all
-        # driver-green in the r12 gate):
-        "quality_classifier": training_data.q_quality_classifier,
-        "quality_percentile_filter": training_data.q_quality_percentile_filter,
-        "langid_confusion": training_data.q_langid_confusion,
-        "token_drift": training_data.q_token_drift,
-        "top_pmi_bigrams": training_data.q_top_pmi_bigrams,
-        "udtf_doc_terms": training_data.q_udtf_doc_terms,
-        "chunk_documents": training_data.q_chunk_documents,
-        "train_test_split": training_data.q_train_test_split,
-        "stratified_sample": training_data.q_stratified_sample,
-        "kfold_assign": training_data.q_kfold_assign,
-        "split_leakage": training_data.q_split_leakage,
-        "source_overlap": training_data.q_source_overlap,
-        "source_mixture": training_data.q_source_mixture,
-        "snapshot_diff": training_data.q_snapshot_diff,
-        "dedup_family_agreement": training_data.q_dedup_family_agreement,
-        "cluster_profile": training_data.q_cluster_profile,
-        "embedding_stats": training_data.q_embedding_stats,
-        "embedding_quantize": training_data.q_embedding_quantize,
-        "ann_ivf_recall": training_data.q_ann_ivf_recall,
-        "ann_truncated_recall": training_data.q_ann_truncated_recall,
-        "array_functions": training_data.q_array_functions,
-        "jsonl_roundtrip": advanced.q_jsonl_roundtrip,
-        "orc_roundtrip": advanced.q_orc_roundtrip,
-        "xml_roundtrip": advanced.q_xml_roundtrip,
-        "binary_ingest": training_data.q_binary_ingest,
-        "grouping_sets": advanced.q_grouping_sets,
-        "cube_events": advanced.q_cube_events,
-        "rollup_lineitem": advanced.q_rollup_lineitem,
-        "pivot_status": advanced.q_pivot_status,
-        # r12 rotation OUT rows (the 29 r11 first-timers, all
-        # driver-green in the r11 gate):
-        "merge_upsert": advanced.q_merge_upsert,
-        "scd2_customers": advanced.q_scd2_customers,
-        "skew_salted_join": advanced.q_skew_salted_join,
-        "window_analytics": advanced.q_window_analytics,
-        "sessionization": advanced.q_sessionization,
-        "streaming_upsert": _stream_upsert,
-        "streaming_contamination": _stream_contamination,
-        "streaming_ivf_assign": training_data.q_streaming_ivf_assign,
-        "streaming_token_drift": _stream_token_drift,
-        "streaming_psi": _stream_psi,
-        "streaming_benford": _stream_benford,
-        "streaming_hdr": _stream_hdr,
-        "streaming_python_datasource": advanced.q_streaming_python_datasource,
-        "link_prediction": tpch.q_link_prediction,
-        "hll_set_ops": training_data.q_hll_set_ops,
-        "containment_pairs": training_data.q_containment_pairs,
-        "dedup_edit_distance": training_data.q_dedup_edit_distance,
-        "sentence_dedup": training_data.q_sentence_dedup,
-        "incremental_dedup": training_data.q_incremental_dedup,
-        "embedding_neardup": training_data.q_embedding_neardup,
-        "embedding_neardup_ivf": training_data.q_embedding_neardup_ivf,
-        # r14 scale-posture rows: bounded-output near-dup (output linear
-        # in the corpus) and the served-index IVF-PQ regime (√N codebook
-        # built once per generation, five query batches amortized)
-        "embedding_neardup_ivf_capped":
-            training_data.q_embedding_neardup_ivf_capped,
-        "ann_ivfpq_served": training_data.q_ann_ivfpq_served,
-        "ann_ivf_trained_recall": training_data.q_ann_ivf_trained_recall,
-        "ann_ivfpq": training_data.q_ann_ivfpq,
-        "contamination_verbatim": training_data.q_contamination_verbatim,
-        "contamination_neardup": training_data.q_contamination_neardup,
-        "tfidf_keywords": training_data.q_tfidf_keywords,
-        "vocab_topk": training_data.q_vocab_topk,
-        "sequence_packing": training_data.q_sequence_packing,
-        "tokenize_ids": training_data.q_tokenize_ids,
-        # r11 rotation OUT rows (all driver-green r10 or earlier):
-        "validation_counts": analytics.q_validation_counts,
-        "rsi_wilder": analytics.q_rsi_wilder,
-        "mannwhitney_drift": advanced.q_mannwhitney_drift,
-        "candlestick_patterns": analytics.q_candlestick_patterns,
-        "streaming_counts": _stream_counts,
-        "streaming_windowed": _stream_windowed,
-        "streaming_deadletter": _stream_deadletter,
-        "streaming_dedup_watermarked": _stream_dedup_watermarked,
-        "streaming_ks": _stream_ks,
-        "streaming_sessions": _stream_sessions,
-        "streaming_mwu": _stream_mwu,
-        "streaming_roc": _stream_roc,
-        "streaming_iv": _stream_iv,
-        "streaming_embedding_drift": _stream_embedding_drift,
-        "key_skew_profile": advanced.q_key_skew_profile,
-        "cusum_changepoints": analytics.q_cusum_changepoints,
-        "session_transitions": advanced.q_session_transitions,
-        "dedup_sorted_neighborhood": training_data.q_dedup_sorted_neighborhood,
-        "source_pagerank": training_data.q_source_pagerank,
-        "ann_bruteforce": training_data.q_ann_bruteforce,
-        "corpus_curation": training_data.q_corpus_curation,
-        "hll_cardinality": training_data.q_hll_cardinality,
-        "bloom_contamination": training_data.q_bloom_contamination,
-        "winnowing_pairs": training_data.q_winnowing_pairs,
-        "bm25_search": training_data.q_bm25_search,
-        "lm_perplexity": training_data.q_lm_perplexity,
-        "calibration_ece": training_data.q_calibration_ece,
-        "information_value": training_data.q_information_value,
-        "embedding_drift": training_data.q_embedding_drift,
-        # r10 rotation OUT rows (all driver-green in the r9 gate):
-        "chi2_drift": advanced.q_chi2_drift,
-        "streaming_chi2": _stream_chi2,
-        "streaming_calibration": _stream_calibration,
-        "ab_test": advanced.q_ab_test,
-        "benford_audit": advanced.q_benford_audit,
-        "l_diversity": advanced.q_l_diversity,
-        "hdr_quantiles": advanced.q_hdr_quantiles,
-        "readability_scores": training_data.q_readability_scores,
-        # r9-staged rotation OUT rows (all driver-green r8 or earlier):
-        "rsi_signals": analytics.q_rsi_signals,
-        "streaming_cms": _stream_cms,
-        "streaming_hll": _stream_hll,
-        "semantic_dedup": training_data.q_semantic_dedup,
-        "json_corrupt_records": training_data.q_json_corrupt_records,
-        "purged_kfold": analytics.q_purged_kfold,
-        # r9 rotation OUT rows (all long-green in prior driver gates):
-        "trades_view": analytics.q_trades_view,
-        "volume_bars": analytics.q_volume_bars,
-        "streaming_anomaly": _stream_anomaly,
-        "psi_drift": advanced.q_psi_drift,
-        "k_anonymity": advanced.q_k_anonymity,
-        "funnel_steps": advanced.q_funnel_steps,
-        "microstructure": analytics.q_microstructure,
-        "hybrid_search_rrf": training_data.q_hybrid_search_rrf,
-        "attribution_touch": advanced.q_attribution_touch,
-        "udaf_vwap": advanced.q_udaf_vwap,  # pandas UDAF surface
-        "weighted_reservoir": training_data.q_weighted_reservoir,
-        "ohlc_bars": analytics.q_ohlc_bars,
-        "streaming_join": _stream_join,
-        "streaming_join_outer": _stream_join_outer,
-        "python_datasource": advanced.q_python_datasource,
-        "zorder_skipping": advanced.q_zorder_skipping,
-        "pattern_similarity": advanced.q_pattern_similarity,
-        "part_triangles": tpch.q_part_triangles,
-        "weighted_sample": training_data.q_weighted_sample,
-        "rolling_indicators": advanced.q_rolling_indicators,  # W
-        "kmeans_embeddings": training_data.q_kmeans_embeddings,
-        "dedup_clusters": training_data.q_dedup_clusters,
-        "ann_pq": training_data.q_ann_pq,
-        "contamination": training_data.q_contamination,
-        "doc_repetition": training_data.q_doc_repetition,
-        "validate_fixture": analytics.q_validate_fixture,
-        "ewma_price": analytics.q_ewma_price,
-        "scalar_functions": advanced.q_scalar_functions,  # X5
-        "simhash_pairs": training_data.q_simhash_pairs,
-        "streaming_dedup": _stream_dedup,
-        "dedup_ngram_jaccard": training_data.q_dedup_ngram_jaccard,
-        "ann_lsh": training_data.q_ann_lsh,
-        "symbol_history": analytics.q_symbol_history,
-        "trade_count": analytics.q_trade_count,
-        "dedup_trades": analytics.q_dedup_trades,
-        "cms_heavy_hitters": training_data.q_cms_heavy_hitters,
-        "pii_redaction": training_data.q_pii_redaction,
-        "validate_rejects": analytics.q_validate_rejects,
-        "vwap_by_symbol": analytics.q_vwap_by_symbol,
-        "observed_metrics": analytics.q_observed_metrics,
-        "gap_fill": analytics.q_gap_fill,
-        "pairwise_correlation": analytics.q_pairwise_correlation,
-        "symbol_beta": analytics.q_symbol_beta,
-        "max_drawdown": analytics.q_max_drawdown,
-        "realized_volatility": analytics.q_realized_volatility,
-        "order_imbalance": analytics.q_order_imbalance,
-        "simhash": training_data.q_simhash,
-        "streaming_socket": _stream_socket,
-        "multimodal_metadata": training_data.q_multimodal_metadata,
-        "multimodal_frames": training_data.q_multimodal_frames,
-        "ann_ivf": training_data.q_ann_ivf,
-        "dedup_exact_docs": training_data.q_dedup_exact_docs,
-        # --- general OLAP (joins/set ops the engine adds, SURVEY §2.6) ---
-        "tpch_q1": tpch.q1_pricing_summary,
-        "tpch_q3": tpch.q3_shipping_priority,
-        "tpch_q5": tpch.q5_local_supplier_volume,
-        "tpch_q6": tpch.q6_revenue_forecast,
-        "tpch_q4_semijoin": tpch.q_order_priority_count,
-        "tpch_q9": tpch.q9_product_profit,
-        "tpch_q10": tpch.q10_returned_items,
-        "tpch_q14": tpch.q14_promo_revenue,
-        "tpch_q18": tpch.q18_large_orders,
-        "tpch_q7": tpch.q7_volume_shipping,
-        "tpch_q8": tpch.q8_market_share,
-        "tpch_q12_shiplag": tpch.q12_ship_lag,
-        "tpch_q13": tpch.q13_order_count_distribution,
-        "tpch_q15": tpch.q15_top_supplier,
-        "tpch_q17": tpch.q17_small_quantity_revenue,
-        "tpch_q19": tpch.q19_disjunctive_predicates,
-        "tpch_q2": tpch.q2_min_cost_supplier,
-        "tpch_q11": tpch.q11_important_stock,
-        "tpch_q16": tpch.q16_supplier_count,
-        "tpch_q20": tpch.q20_heavy_shippers,
-        "tpch_q21": tpch.q21_waiting_suppliers,
-        "tpch_q22": tpch.q22_idle_customers,
-        "top_parts_by_revenue": tpch.q_top_parts_by_revenue,
-    }
-    from marketstream_etl_spark.streaming.tws import HAS_TWS_RUNTIME
-
-    if HAS_TWS_RUNTIME:  # gRPC state-server runtime (cluster images only)
-        qs["streaming_tws"] = _stream_tws
-    return qs
+def queries() -> dict[str, Query]:
+    """GATE first, then every other query in registration order."""
+    return {**{name: QUERIES[name] for name in GATE}, **QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    sql = {
-        "trades_view": f"WITH trades AS ({TRADES_CTE}) SELECT * FROM trades",
-        "validate_split": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT trade_id, symbol, price, volume,
-                   (reason IS NULL) AS is_valid, reason AS reject_reason
-            FROM (SELECT *, {_REASON_CASE} AS reason FROM trades)
-        """,
-        "validate_rejects": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT trade_id, symbol, price, volume, reason AS reject_reason
-            FROM (SELECT *, {_REASON_CASE} AS reason FROM trades)
-            WHERE reason IS NOT NULL
-        """,
-        # the reference sample_data.csv golden: 10 valid rows, 3 rejects
-        # with first-failing reasons (lowercase symbol / negative price /
-        # zero volume — /root/reference/sample_data.csv:12-14)
-        "validate_fixture": """
-            SELECT CAST(trade_id AS BIGINT) AS trade_id, symbol,
-                   CAST(price AS DOUBLE) AS price,
-                   CAST(volume AS INTEGER) AS volume,
-                   is_valid, reject_reason
-            FROM (VALUES
-                (1000001, 'RELIANCE',  2456.75, 100,  TRUE,  NULL),
-                (1000002, 'RELIANCE',  2457.00, 250,  TRUE,  NULL),
-                (1000003, 'TCS',       3567.50, 75,   TRUE,  NULL),
-                (1000004, 'INFY',      1423.25, 500,  TRUE,  NULL),
-                (1000005, 'HDFC',      1678.90, 200,  TRUE,  NULL),
-                (1000006, 'WIPRO',      432.60, 1000, TRUE,  NULL),
-                (1000007, 'RELIANCE',  2458.00, 150,  TRUE,  NULL),
-                (1000008, 'TCS',       3565.25, 90,   TRUE,  NULL),
-                (1000009, 'ICICIBANK',  987.45, 300,  TRUE,  NULL),
-                (1000010, 'INFY',      1424.00, 450,  TRUE,  NULL),
-                (9999991, 'reliance',  1424.00, 450,  FALSE, 'invalid symbol'),
-                (9999992, 'WIPRO',      -50.00, 200,  FALSE, 'invalid price'),
-                (9999993, 'HDFC',      1678.90, 0,    FALSE, 'invalid volume')
-            ) t(trade_id, symbol, price, volume, is_valid, reject_reason)
-            ORDER BY trade_id
-        """,
-        # S1/S2 defaults golden: the post-defaults typed rows the reference
-        # parser yields for every defaults rule (zero-init numerics, 'N'/'M'
-        # char defaults, first byte of multi-char cells, is_pro int→bool) —
-        # see analytics.DEFAULTS_FIXTURE_CSV
-        "csv_fixture_roundtrip": """
-            SELECT CAST(trade_id AS BIGINT) AS trade_id, symbol,
-                   CAST(price AS DOUBLE) AS price,
-                   CAST(volume AS INTEGER) AS volume,
-                   side, "type", is_pro, is_valid, reject_reason
-            FROM (VALUES
-                (2000001, 'RELIANCE',  2456.75, 100, 'B', 'L', FALSE, TRUE,  NULL),
-                (2000002, 'TCS',       3567.50, 75,  'B', 'L', TRUE,  TRUE,  NULL),
-                (2000003, 'INFY',      1423.25, 500, 'N', 'M', FALSE, TRUE,  NULL),
-                (2000004, 'HDFC',         0.00, 200, 'B', 'L', FALSE, FALSE, 'invalid price'),
-                (2000005, 'WIPRO',      432.60, 0,   'S', 'L', TRUE,  FALSE, 'invalid volume'),
-                (2000006, '',           987.45, 300, 'B', 'L', FALSE, FALSE, 'invalid symbol'),
-                (2000007, 'TCS',       3565.25, 90,  'S', 'L', FALSE, FALSE, 'invalid timestamp'),
-                (2000008, 'ICICIBANK',  987.45, 300, 'B', 'L', FALSE, TRUE,  NULL)
-            ) t(trade_id, symbol, price, volume, side, "type", is_pro,
-                is_valid, reject_reason)
-            ORDER BY trade_id
-        """,
-        # S11/S12/X11: aggregates after the parquet write/read round-trip
-        # must equal the direct scan; the pinned run filename is compared too
-        "parquet_sink_roundtrip": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT side, count(*) AS n_trades,
-                   CAST(sum(volume) AS BIGINT) AS total_volume,
-                   round(sum(price * volume), 2) AS notional,
-                   'trades_20231025_091500.parquet' AS run_file
-            FROM trades GROUP BY side ORDER BY side
-        """,
-        # S9: the readback aggregate over the 4-connection Derby load must
-        # equal this direct derivation — same deterministic stream stamp
-        # (h32(trade_id) mod 4), no database involved on the oracle side
-        "parallel_jdbc_roundtrip": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT CAST({_h32_sql("CAST(trade_id AS VARCHAR)")} % 4 AS INTEGER)
-                       AS stream_id,
-                   count(*) AS n_rows,
-                   CAST(sum(volume) AS BIGINT) AS stream_volume,
-                   round(sum(price * volume), 2) AS notional
-            FROM trades GROUP BY 1 ORDER BY 1
-        """,
-        "validation_counts": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT count(*) AS total,
-                   CAST(sum(CASE WHEN reason IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS valid,
-                   CAST(sum(CASE WHEN reason IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS rejected
-            FROM (SELECT *, {_REASON_CASE} AS reason FROM trades)
-        """,
-        "indicators": _INDICATORS_SQL + " ORDER BY symbol",
-        "rsi_wilder": f"""
-            WITH trades AS ({TRADES_CTE}),
-            valid AS (SELECT * FROM trades WHERE {_VALID_WHERE}),
-            chg AS (
-                SELECT symbol,
-                    price - lag(price) OVER (PARTITION BY symbol
-                        ORDER BY "timestamp", trade_id) AS change,
-                    row_number() OVER (PARTITION BY symbol
-                        ORDER BY "timestamp", trade_id) - 1 AS j,
-                    count(*) OVER (PARTITION BY symbol) - 1 AS m
-                FROM valid
-            ),
-            wchg AS (
-                SELECT symbol, m, change,
-                    CASE WHEN m <= 14 THEN 1.0 / m
-                         WHEN j <= 14
-                             THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
-                         ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
-                    END AS w
-                FROM chg WHERE change IS NOT NULL
-            ),
-            agg AS (
-                SELECT symbol, max(m) AS n_changes,
-                    sum(w * greatest(change, 0.0)) AS ag,
-                    sum(w * greatest(-change, 0.0)) AS al
-                FROM wchg GROUP BY symbol
-            ),
-            rs AS (
-                SELECT symbol, n_changes,
-                    CASE WHEN n_changes < 1 THEN 50.0
-                         WHEN al = 0.0 THEN 100.0
-                         ELSE 100.0 - 100.0 / (1.0 + ag / al)
-                    END AS rsi_raw
-                FROM agg
-            )
-            SELECT symbol, n_changes, round(rsi_raw, 4) AS rsi_wilder,
-                CASE WHEN rsi_raw >= 70 THEN 'OVERBOUGHT'
-                     WHEN rsi_raw <= 30 THEN 'OVERSOLD'
-                     ELSE 'NEUTRAL' END AS signal
-            FROM rs ORDER BY symbol
-        """,
-        "trade_count": f"""
-            WITH trades AS ({TRADES_CTE}) SELECT count(*) AS n_trades FROM trades
-        """,
-        "symbol_leaderboard": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol, count(*) AS trades,
-                   CAST(sum(volume) AS BIGINT) AS total_volume
-            FROM trades GROUP BY symbol ORDER BY trades DESC, symbol
-        """,
-        "rsi_signals": f"""
-            WITH ind AS ({_INDICATORS_SQL})
-            SELECT symbol, rsi,
-                   CASE WHEN rsi >= 70 THEN 'OVERBOUGHT'
-                        WHEN rsi <= 30 THEN 'OVERSOLD'
-                        ELSE 'NEUTRAL' END AS signal,
-                   make_timestamp(1698208500000000) AS computed_ts
-            FROM ind ORDER BY computed_ts DESC, symbol LIMIT 20
-        """,
-        "symbol_history": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT trade_id, symbol, round(price, 6) AS price, "timestamp"
-            FROM trades WHERE symbol = 'PURCHASE' AND "timestamp" > 0
-            ORDER BY "timestamp", trade_id
-        """,
-        "vwap_by_symbol": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol,
-                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
-                       AS vwap
-            FROM trades WHERE {_VALID_WHERE}
-            GROUP BY symbol ORDER BY symbol
-        """,
-        # 1-minute OHLCV: first/last by (timestamp, trade_id) via the same
-        # double row_number ranking; // is DuckDB integer division
-        "ohlc_bars": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price, volume,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp, trade_id) AS rn_a,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            )
-            SELECT symbol, bar,
-                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
-                   round(max(price), 4) AS high,
-                   round(min(price), 4) AS low,
-                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
-                   CAST(sum(volume) AS BIGINT) AS bar_volume,
-                   count(*) AS n_trades
-            FROM r GROUP BY symbol, bar ORDER BY symbol, bar
-        """,
-        # candlestick census over the same bars CTE shape as ohlc_bars;
-        # identical round-4 inputs, identical IEEE shape tests, lag() over
-        # the canonical (symbol, bar) order
-        "candlestick_patterns": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price, volume,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp, trade_id) AS rn_a,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            bars AS (
-                SELECT symbol, bar,
-                       round(max(CASE WHEN rn_a = 1 THEN price END), 4)
-                           AS open,
-                       round(max(price), 4) AS high,
-                       round(min(price), 4) AS low,
-                       round(max(CASE WHEN rn_d = 1 THEN price END), 4)
-                           AS close
-                FROM r GROUP BY symbol, bar
-            ),
-            lagged AS (
-                SELECT *,
-                       lag(open) OVER w AS p_open,
-                       lag(close) OVER w AS p_close,
-                       abs(close - open) AS body,
-                       high - low AS rng,
-                       high - greatest(open, close) AS upper,
-                       least(open, close) - low AS lower
-                FROM bars
-                WINDOW w AS (PARTITION BY symbol ORDER BY bar)
-            )
-            SELECT symbol,
-                   count(*) AS n_bars,
-                   CAST(sum(CASE WHEN rng > 0 AND body <= rng * 0.1
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_doji,
-                   CAST(sum(CASE WHEN body > 0 AND lower >= body * 2
-                                  AND upper <= body
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_hammer,
-                   CAST(sum(CASE WHEN body > 0 AND upper >= body * 2
-                                  AND lower <= body
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_shooting_star,
-                   CAST(sum(CASE WHEN p_close < p_open AND close > open
-                                  AND open <= p_close AND close >= p_open
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_bull_engulf,
-                   CAST(sum(CASE WHEN p_close > p_open AND close < open
-                                  AND open >= p_close AND close <= p_open
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_bear_engulf
-            FROM lagged GROUP BY symbol ORDER BY symbol
-        """,
-        # minute-close co-movement; closes from the same rn_d ranking
-        "pairwise_correlation": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            )
-            SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
-                   count(*) AS n_bars,
-                   round(corr(a.close, b.close), 6) AS corr_close,
-                   round(covar_samp(a.close, b.close), 4) AS covar_close
-            FROM closes a JOIN closes b
-              ON a.bar = b.bar AND a.symbol < b.symbol
-            GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        "symbol_beta": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            idx AS (
-                SELECT bar, avg(close) AS index_close
-                FROM closes GROUP BY bar
-            )
-            SELECT c.symbol, count(*) AS n_bars,
-                   round(regr_slope(c.close, i.index_close), 6) AS beta,
-                   round(regr_intercept(c.close, i.index_close), 4) AS alpha,
-                   round(regr_r2(c.close, i.index_close), 6) AS r2
-            FROM closes c JOIN idx i ON c.bar = i.bar
-            GROUP BY c.symbol ORDER BY c.symbol
-        """,
-        # observe()-collected counters == the relational recompute
-        "observed_metrics": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT count(*) AS n_rows,
-                   CAST(sum(CASE WHEN ({_VALID_WHERE})
-                            THEN 0 ELSE 1 END) AS BIGINT) AS n_invalid,
-                   round(sum(CASE WHEN {_VALID_WHERE} THEN price END), 4)
-                       AS valid_price_sum
-            FROM trades
-        """,
-        # closed-form EWMA weights: seed (1-a)^(n-1), then a*(1-a)^(n-j)
-        "ewma_price": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            ann AS (
-                SELECT symbol, close,
-                       row_number() OVER (PARTITION BY symbol
-                                          ORDER BY bar) AS j,
-                       count(*) OVER (PARTITION BY symbol) AS n
-                FROM closes
-            )
-            SELECT symbol, CAST(max(n) AS BIGINT) AS n_bars,
-                   round(sum((CASE WHEN j = 1 THEN power(0.8, n - 1)
-                              ELSE 0.2 * power(0.8, n - j) END) * close), 4)
-                       AS ewma_close,
-                   round(arg_max(close, j), 4) AS last_close
-            FROM ann GROUP BY symbol ORDER BY symbol
-        """,
-        # stddev of log minute-close returns, same rn_d close ranking
-        "realized_volatility": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            rets AS (
-                SELECT symbol,
-                       ln(close / lag(close) OVER (PARTITION BY symbol
-                                                   ORDER BY bar)) AS log_ret
-                FROM closes
-            )
-            SELECT symbol, count(*) AS n_returns,
-                   round(stddev_samp(log_ret), 6) AS volatility,
-                   round(avg(log_ret), 6) AS mean_return
-            FROM rets WHERE log_ret IS NOT NULL
-            GROUP BY symbol ORDER BY symbol
-        """,
-        "return_autocorr": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            rets AS (
-                SELECT symbol, bar,
-                       ln(close / lag(close) OVER (PARTITION BY symbol
-                                                   ORDER BY bar)) AS log_ret
-                FROM closes
-            ),
-            lagged AS (
-                SELECT symbol, log_ret,
-                       lag(log_ret, 1) OVER (PARTITION BY symbol
-                                             ORDER BY bar) AS lag1,
-                       lag(log_ret, 2) OVER (PARTITION BY symbol
-                                             ORDER BY bar) AS lag2
-                FROM rets WHERE log_ret IS NOT NULL
-            )
-            SELECT symbol, count(*) AS n_returns,
-                   round(corr(log_ret, lag1), 6) AS autocorr_lag1,
-                   round(corr(log_ret, lag2), 6) AS autocorr_lag2
-            FROM lagged
-            GROUP BY symbol ORDER BY symbol
-        """,
-        # conditional aggregation on side; greatest() guards zero volume
-        "order_imbalance": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol,
-                   CAST(sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
-                        AS BIGINT) AS buy_volume,
-                   CAST(sum(CASE WHEN side = 'S' THEN volume ELSE 0 END)
-                        AS BIGINT) AS sell_volume,
-                   round((sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
-                          - sum(CASE WHEN side = 'S' THEN volume ELSE 0 END))
-                         / CAST(greatest(
-                               sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
-                               + sum(CASE WHEN side = 'S' THEN volume ELSE 0 END),
-                               1) AS DOUBLE), 6) AS imbalance
-            FROM trades GROUP BY symbol ORDER BY symbol
-        """,
-        "price_outliers": f"""
-            WITH trades AS ({TRADES_CTE}),
-            stats AS (
-                SELECT symbol, avg(price) AS mu,
-                       stddev_samp(price) AS sd
-                FROM trades GROUP BY symbol
-            )
-            SELECT t.symbol, count(*) AS n_trades,
-                   CAST(sum(CASE WHEN (CASE WHEN s.sd > 0
-                            THEN abs((t.price - s.mu) / s.sd)
-                            ELSE 0.0 END)
-                        > {analytics.OUTLIER_Z} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_outliers,
-                   round(max(CASE WHEN s.sd > 0
-                            THEN abs((t.price - s.mu) / s.sd)
-                            ELSE 0.0 END), 4) AS max_abs_z
-            FROM trades t JOIN stats s USING (symbol)
-            GROUP BY t.symbol ORDER BY t.symbol
-        """,
-        # running-peak drawdown over the same minute closes
-        "max_drawdown": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            dd AS (
-                SELECT symbol, close,
-                       max(close) OVER (PARTITION BY symbol ORDER BY bar
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS peak
-                FROM closes
-            )
-            SELECT symbol, count(*) AS n_bars,
-                   round(max(peak), 4) AS peak_close,
-                   round(min((close - peak) / peak), 6) AS max_drawdown
-            FROM dd GROUP BY symbol ORDER BY symbol
-        """,
-        # Bollinger: exact-integer ±2σ breach test (squared, BIGINT both
-        # sides), IEEE mid/σ/%B from identical integer inputs
-        "bollinger_breaches": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            closes AS (
-                SELECT symbol, bar,
-                       CAST(floor(price * 100 + 0.5) AS BIGINT) AS c
-                FROM r WHERE rn_d = 1 AND price > 0
-            ),
-            ann AS (
-                SELECT symbol, bar, c,
-                       count(*) OVER w AS m,
-                       sum(c) OVER w AS s,
-                       sum(c * c) OVER w AS q
-                FROM closes
-                WINDOW w AS (PARTITION BY symbol ORDER BY bar
-                             ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-            ),
-            f AS (
-                SELECT symbol, bar,
-                       (c * 20 - s) AS d, (q * 20 - s * s) AS var_num, s
-                FROM ann WHERE m = 20
-            ),
-            g AS (
-                SELECT symbol, bar,
-                       CASE WHEN d > 0 AND 19 * d * d > 80 * var_num
-                            THEN 1 ELSE 0 END AS up,
-                       CASE WHEN d < 0 AND 19 * d * d > 80 * var_num
-                            THEN 1 ELSE 0 END AS down,
-                       s::DOUBLE / 2000.0 AS mid,
-                       sqrt(var_num::DOUBLE / 380.0) / 100.0 AS sd,
-                       CASE WHEN var_num > 0 THEN
-                           (d::DOUBLE / 20.0
-                            + 2.0 * sqrt(var_num::DOUBLE / 380.0))
-                           / (4.0 * sqrt(var_num::DOUBLE / 380.0))
-                       END AS pctb
-                FROM f
-            )
-            SELECT symbol, count(*) AS n_eval,
-                   CAST(sum(up) AS BIGINT) AS breach_above,
-                   CAST(sum(down) AS BIGINT) AS breach_below,
-                   round(arg_max(mid, bar), 4) AS last_mid,
-                   round(arg_max(sd, bar), 6) AS last_sd,
-                   round(arg_max(pctb, bar), 6) AS last_pctb
-            FROM g GROUP BY symbol ORDER BY symbol
-        """,
-        # dense minute grid + forward-filled close, folded per symbol
-        "gap_fill": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol, timestamp // 60000000000 AS bar, price,
-                       row_number() OVER (PARTITION BY symbol,
-                                              timestamp // 60000000000
-                                          ORDER BY timestamp DESC,
-                                              trade_id DESC) AS rn_d
-                FROM trades
-            ),
-            bars AS (
-                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1
-            ),
-            bounds AS (
-                SELECT symbol, min(bar) AS lo, max(bar) AS hi
-                FROM bars GROUP BY symbol
-            ),
-            grid AS (
-                SELECT symbol, unnest(generate_series(lo, hi)) AS bar
-                FROM bounds
-            ),
-            filled AS (
-                SELECT g.symbol, g.bar, b.close,
-                       last_value(b.close IGNORE NULLS) OVER (
-                           PARTITION BY g.symbol ORDER BY g.bar
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS ffill
-                FROM grid g
-                LEFT JOIN bars b ON g.symbol = b.symbol AND g.bar = b.bar
-            )
-            SELECT symbol, count(*) AS n_minutes,
-                   CAST(sum(CASE WHEN close IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_gaps,
-                   round(sum(ffill), 2) AS filled_sum
-            FROM filled GROUP BY symbol ORDER BY symbol
-        """,
-        "dedup_trades": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT count(DISTINCT trade_id) AS n_unique_trades FROM trades
-        """,
-        "tpch_q1": """
-            SELECT l_returnflag, l_linestatus,
-                round(sum(l_quantity), 4) AS sum_qty,
-                round(sum(l_extendedprice), 4) AS sum_base_price,
-                round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-                round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4)
-                    AS sum_charge,
-                round(avg(l_quantity), 6) AS avg_qty,
-                round(avg(l_extendedprice), 6) AS avg_price,
-                round(avg(l_discount), 6) AS avg_disc,
-                count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "tpch_q3": """
-            SELECT l_orderkey, o_orderdate, o_orderpriority,
-                round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1995-03-15'
-              AND l_shipdate > TIMESTAMP '1995-03-15'
-            GROUP BY l_orderkey, o_orderdate, o_orderpriority
-            ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10
-        """,
-        "tpch_q5": """
-            SELECT n_name,
-                round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey
-                         AND c_nationkey = s_nationkey
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate < TIMESTAMP '1997-01-01'
-            GROUP BY n_name ORDER BY revenue DESC, n_name
-        """,
-        "tpch_q6": """
-            SELECT round(sum(l_extendedprice * l_discount), 4) AS revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate < TIMESTAMP '1997-01-01'
-              AND l_discount BETWEEN 0.05 AND 0.07
-              AND l_quantity < 24
-        """,
-        "tpch_q9": """
-            SELECT n_name AS nation,
-                   CAST(year(o_orderdate) AS INTEGER) AS o_year,
-                   round(sum(l_extendedprice * (1 - l_discount)
-                             - p_retailprice * l_quantity * 0.5), 4)
-                       AS sum_profit
-            FROM lineitem
-            JOIN part ON l_partkey = p_partkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN orders ON l_orderkey = o_orderkey
-            WHERE p_name LIKE '%widget%'
-            GROUP BY 1, 2 ORDER BY nation, o_year DESC
-        """,
-        "tpch_q10": """
-            SELECT c_custkey, c_name, n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            WHERE l_returnflag = 'R'
-              AND o_orderdate >= TIMESTAMP '1995-10-01'
-              AND o_orderdate < TIMESTAMP '1996-01-01'
-            GROUP BY 1, 2, 3 ORDER BY revenue DESC, c_custkey LIMIT 20
-        """,
-        "tpch_q14": """
-            SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                       THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
-                   / sum(l_extendedprice * (1 - l_discount)), 6)
-                       AS promo_revenue_pct
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE l_shipdate >= TIMESTAMP '1995-09-01'
-              AND l_shipdate < TIMESTAMP '1995-10-01'
-        """,
-        "tpch_q18": """
-            WITH big AS (
-                SELECT l_orderkey, sum(l_quantity) AS total_qty
-                FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 100
-            )
-            SELECT c_name, c_custkey, l_orderkey, o_orderdate, o_totalprice,
-                   round(total_qty, 4) AS total_qty
-            FROM big
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            ORDER BY o_totalprice DESC, l_orderkey LIMIT 20
-        """,
-        "tpch_q7": """
-            SELECT supp_nation, cust_nation, l_year,
-                   round(sum(volume), 4) AS revenue
-            FROM (
-                SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                       CAST(year(l_shipdate) AS INTEGER) AS l_year,
-                       l_extendedprice * (1 - l_discount) AS volume
-                FROM lineitem
-                JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-                JOIN supplier ON l_suppkey = s_suppkey
-                JOIN nation n1 ON s_nationkey = n1.n_nationkey
-                JOIN nation n2 ON c_nationkey = n2.n_nationkey
-                WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                  AND l_shipdate < TIMESTAMP '1998-01-01'
-                  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-                    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-            )
-            GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-        """,
-        "tpch_q8": """
-            SELECT o_year,
-                   round(sum(CASE WHEN supp_nation = 'NATION_3'
-                                  THEN volume ELSE 0.0 END) / sum(volume), 6)
-                       AS mkt_share
-            FROM (
-                SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-                       l_extendedprice * (1 - l_discount) AS volume,
-                       n2.n_name AS supp_nation
-                FROM lineitem
-                JOIN part ON l_partkey = p_partkey
-                JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-                JOIN nation n1 ON c_nationkey = n1.n_nationkey
-                JOIN region ON n1.n_regionkey = r_regionkey
-                JOIN supplier ON l_suppkey = s_suppkey
-                JOIN nation n2 ON s_nationkey = n2.n_nationkey
-                WHERE r_name = 'AMERICA' AND p_type = 'STANDARD'
-                  AND o_orderdate >= TIMESTAMP '1996-01-01'
-                  AND o_orderdate < TIMESTAMP '1998-01-01'
-            )
-            GROUP BY o_year ORDER BY o_year
-        """,
-        "tpch_q12_shiplag": """
-            SELECT CASE WHEN datediff('day', o_orderdate, l_shipdate) < 30
-                            THEN 'fast'
-                        WHEN datediff('day', o_orderdate, l_shipdate) < 90
-                            THEN 'medium'
-                        ELSE 'slow' END AS ship_bucket,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS high_priority_count,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                                 THEN 0 ELSE 1 END) AS BIGINT)
-                       AS low_priority_count
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            GROUP BY 1 ORDER BY 1
-        """,
-        "tpch_q13": """
-            SELECT c_count, count(*) AS custdist
-            FROM (
-                SELECT c_custkey, count(o_orderkey) AS c_count
-                FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-                GROUP BY c_custkey
-            )
-            GROUP BY c_count ORDER BY custdist DESC, c_count DESC
-        """,
-        "tpch_q15": """
-            WITH revenue AS (
-                SELECT l_suppkey AS supplier_no,
-                       round(sum(l_extendedprice * (1 - l_discount)), 4)
-                           AS total_revenue
-                FROM lineitem
-                WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                  AND l_shipdate < TIMESTAMP '1996-04-01'
-                GROUP BY l_suppkey
-            )
-            SELECT s_suppkey, s_name, total_revenue
-            FROM revenue JOIN supplier ON supplier_no = s_suppkey
-            WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-            ORDER BY s_suppkey
-        """,
-        "tpch_q17": """
-            WITH branded AS (
-                SELECT l_partkey, l_quantity, l_extendedprice
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                WHERE p_brand = 'Brand#1'
-            ),
-            avg_qty AS (
-                SELECT l_partkey AS a_partkey,
-                       avg(l_quantity) * 0.5 AS half_avg_qty
-                FROM branded GROUP BY 1
-            )
-            SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-            FROM branded JOIN avg_qty ON l_partkey = a_partkey
-            WHERE l_quantity < half_avg_qty
-        """,
-        "tpch_q19": """
-            SELECT round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-                   AND l_quantity BETWEEN 1 AND 11)
-               OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
-                   AND l_quantity BETWEEN 10 AND 20)
-               OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 50
-                   AND l_quantity BETWEEN 20 AND 30)
-        """,
-        "tpch_q2": """
-            WITH ps AS (
-                SELECT DISTINCT l_partkey, l_suppkey
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                WHERE p_type = 'STANDARD' AND p_size >= 25
-            ),
-            pss AS (
-                SELECT l_partkey, s_suppkey, s_name, s_acctbal
-                FROM ps JOIN supplier ON l_suppkey = s_suppkey
-            ),
-            mins AS (
-                SELECT l_partkey AS m_partkey, min(s_acctbal) AS min_bal
-                FROM pss GROUP BY 1
-            )
-            SELECT round(s_acctbal, 4) AS s_acctbal, s_name, p_partkey, p_name
-            FROM pss
-            JOIN mins ON l_partkey = m_partkey AND s_acctbal = min_bal
-            JOIN part ON l_partkey = p_partkey
-            ORDER BY s_acctbal, p_partkey, s_name LIMIT 100
-        """,
-        "tpch_q11": """
-            WITH base AS (
-                SELECT l_partkey,
-                       l_extendedprice * (1 - l_discount) AS rev
-                FROM lineitem
-                JOIN supplier ON l_suppkey = s_suppkey
-                JOIN nation ON s_nationkey = n_nationkey
-                WHERE n_name = 'NATION_5'
-            ),
-            per_part AS (
-                SELECT l_partkey, sum(rev) AS part_value
-                FROM base GROUP BY l_partkey
-            )
-            SELECT l_partkey, round(part_value, 4) AS part_value
-            FROM per_part
-            WHERE part_value > (SELECT sum(part_value) * 0.001 FROM per_part)
-            ORDER BY part_value DESC, l_partkey
-        """,
-        "tpch_q16": """
-            SELECT p_brand, p_type,
-                   p_size - p_size % 10 AS size_bucket,
-                   count(DISTINCT l_suppkey) AS supplier_cnt
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE p_brand <> 'Brand#5'
-              AND l_suppkey NOT IN (
-                    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-            GROUP BY 1, 2, 3
-            ORDER BY supplier_cnt DESC, p_brand, p_type, size_bucket
-        """,
-        "tpch_q20": """
-            WITH shipped AS (
-                SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                WHERE p_name LIKE '%widget%'
-                  AND l_shipdate >= TIMESTAMP '1997-01-01'
-                  AND l_shipdate < TIMESTAMP '1998-01-01'
-                GROUP BY 1, 2
-            ),
-            avg_per_part AS (
-                SELECT l_partkey AS a_partkey, avg(qty) * 0.5 AS half_avg
-                FROM shipped GROUP BY 1
-            ),
-            heavy AS (
-                SELECT DISTINCT l_suppkey
-                FROM shipped JOIN avg_per_part ON l_partkey = a_partkey
-                WHERE qty > half_avg
-            )
-            SELECT s_suppkey, s_name
-            FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            WHERE n_name = 'NATION_7'
-              AND s_suppkey IN (SELECT l_suppkey FROM heavy)
-            ORDER BY s_suppkey
-        """,
-        "tpch_q21": """
-            WITH j AS (
-                SELECT l_orderkey, l_suppkey,
-                       datediff('day', o_orderdate, l_shipdate) > 90 AS late
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                WHERE o_orderstatus = 'F'
-            ),
-            per_order AS (
-                SELECT l_orderkey,
-                       count(DISTINCT l_suppkey) AS n_supp,
-                       count(DISTINCT CASE WHEN late THEN l_suppkey END)
-                           AS n_late_supp,
-                       max(CASE WHEN late THEN l_suppkey END) AS late_supp
-                FROM j GROUP BY l_orderkey
-            )
-            SELECT s_name, count(*) AS numwait
-            FROM per_order JOIN supplier ON late_supp = s_suppkey
-            WHERE n_supp > 1 AND n_late_supp = 1
-            GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20
-        """,
-        "tpch_q22": """
-            SELECT c_nationkey, count(*) AS numcust,
-                   round(sum(c_acctbal), 4) AS totacctbal
-            FROM customer
-            WHERE c_acctbal > (
-                    SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
-              AND NOT EXISTS (
-                    SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                      AND o_orderdate >= TIMESTAMP '2000-01-01')
-            GROUP BY c_nationkey ORDER BY c_nationkey
-        """,
-        "tpch_q4_semijoin": """
-            SELECT o_orderpriority, count(*) AS order_count
-            FROM orders
-            WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-              AND o_orderdate < TIMESTAMP '1996-10-01'
-              AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-            GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """,
-        "top_parts_by_revenue": """
-            WITH rev AS (
-                SELECT p_brand, p_partkey,
-                    round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                GROUP BY p_brand, p_partkey
-            ),
-            ranked AS (
-                SELECT *, row_number() OVER (PARTITION BY p_brand
-                    ORDER BY revenue DESC, p_partkey) AS rank
-                FROM rev
-            )
-            SELECT p_brand, p_partkey, revenue, CAST(rank AS INTEGER) AS rank
-            FROM ranked WHERE rank <= 3 ORDER BY p_brand, rank
-        """,
-        "text_analysis": _text.analyze_documents_sql() + " ORDER BY doc_id",
-        "dedup_exact_docs": _dedup.EXACT_DEDUP_SQL + " ORDER BY fingerprint",
-        "dedup_ngram_jaccard": _dedup.NGRAM_JACCARD_SQL,
-        "dedup_minhash_lsh": _dedup.minhash_lsh_pairs_sql(),
-        "pii_redaction": _text.pii_redaction_sql(),
-        "readability_scores": _text.readability_sql(),
-        # deterministic hash k-fold + stratification chi audit
-        "kfold_assign": f"""
-            WITH cells AS MATERIALIZED (
-                SELECT {_h32_sql("CAST(doc_id AS VARCHAR)")} % 5 AS fold,
-                       lang, count(*) AS n_docs
-                FROM documents GROUP BY 1, 2
-            ),
-            totals AS (
-                SELECT lang, CAST(sum(n_docs) AS BIGINT) AS lang_total
-                FROM cells GROUP BY lang
-            )
-            SELECT c.fold, c.lang, c.n_docs, t.lang_total,
-                   round(c.n_docs::DOUBLE / t.lang_total::DOUBLE, 6)
-                       AS share,
-                   round(((c.n_docs * 5 - t.lang_total)
-                          * (c.n_docs * 5 - t.lang_total))::DOUBLE
-                         / (t.lang_total * 5)::DOUBLE, 6) AS chi_term
-            FROM cells c JOIN totals t USING (lang)
-            ORDER BY c.fold, c.lang
-        """,
-        # robust per-source outlier gate: integer-cleared z>3.5 test
-        # (13490·d > 35000·m4), medians exact in half-units
-        "mad_outliers": """
-            WITH base AS (
-                SELECT source, n_chars FROM documents
-            ),
-            med AS MATERIALIZED (
-                SELECT source,
-                       CAST(median(n_chars) * 2 AS BIGINT) AS m2
-                FROM base GROUP BY source
-            ),
-            d AS MATERIALIZED (
-                SELECT b.source, med.m2,
-                       abs(b.n_chars * 2 - med.m2) AS d
-                FROM base b JOIN med USING (source)
-            ),
-            mad AS MATERIALIZED (
-                SELECT source, CAST(median(d) * 2 AS BIGINT) AS m4
-                FROM d GROUP BY source
-            ),
-            flagged AS (
-                SELECT d.source, d.m2, mad.m4, d.d,
-                       CASE WHEN d.d * 13490 > mad.m4 * 35000
-                                 AND mad.m4 > 0
-                            THEN 1 ELSE 0 END AS is_out
-                FROM d JOIN mad USING (source)
-            )
-            SELECT source, count(*) AS n_docs,
-                   max(m2)::DOUBLE / 2.0 AS med_chars,
-                   max(m4)::DOUBLE / 4.0 AS mad_chars,
-                   CAST(sum(is_out) AS BIGINT) AS n_outliers,
-                   round(CASE WHEN max(m4) > 0 THEN
-                       CAST('1.349' AS DOUBLE) * max(d)::DOUBLE
-                       / max(m4)::DOUBLE END, 6) AS z_max
-            FROM flagged GROUP BY source ORDER BY source
-        """,
-        "cms_heavy_hitters": _sketch.cms_heavy_hitters_sql(),
-        "pattern_similarity": _patterns.pattern_similarity_sql(TRADES_CTE),
-        # final streamed sketch == batch sketch (algebraic merge), same oracle
-        "streaming_cms": _sketch.cms_heavy_hitters_sql(),
-        "doc_repetition": f"""
-            SELECT doc_id, round(rep, 6) AS rep_3gram,
-                   (rep >= 0.2) AS flag_repetitive
-            FROM (SELECT doc_id, {_text.repetition_sql('text')} AS rep
-                  FROM documents)
-            ORDER BY doc_id
-        """,
-        "simhash": _dedup.simhash_sql() + " ORDER BY doc_id",
-        "simhash_pairs": _dedup.simhash_near_pairs_sql(),
-        "part_triangles": _graph.part_triangles_sql(),
-        "link_prediction": _graph.link_prediction_sql(),
-        "ngram_novelty": _novelty.ngram_novelty_sql(),
-        "hll_cardinality": _sketch.hll_cardinality_sql(),
-        "bloom_contamination": _sketch.bloom_contamination_sql(),
-        "hll_set_ops": _sketch.hll_set_ops_sql(),
-        "winnowing_pairs": _winnow.winnowing_pairs_sql(),
-        "streaming_hll": _sketch.hll_cardinality_sql(),
-        "hdr_quantiles": _sketch.hdr_quantiles_sql(),
-        "streaming_hdr": _sketch.hdr_quantiles_sql(),
-        "hdr_quantiles_grouped": _sketch.hdr_quantiles_grouped_sql(),
-        "semantic_dedup": _sim.semantic_dedup_sql(
-            approx_rows=_table_row_count(
-                "/root/testdata/sf0.01", "embeddings"
-            )
-        ),
-        "asof_events_tolerance": _asof.asof_events_tolerance_sql(),
-        "ann_bruteforce": _sim.ann_bruteforce_sql(),
-        "ann_ivf": _sim.ann_ivf_sql(),
-        "embedding_neardup": _sim.embedding_neardup_pairs_sql(),
-        # codebook size derives from the gate SF's footer row count on
-        # BOTH sides, so Spark and the oracle bucket identically
-        "embedding_neardup_ivf": _sim.embedding_neardup_ivf_sql(
-            approx_rows=_table_row_count(
-                "/root/testdata/sf0.01", "embeddings"
-            )
-        ),
-        "embedding_stats": _sim.embedding_stats_sql(),
-        # multimodal_metadata: payload bytes are the utf-8 text, so DuckDB
-        # computes the same metadata from the string directly (strlen = byte
-        # length; md5 hashes the utf-8 bytes in both engines).
-        "multimodal_metadata": """
-            SELECT doc_id AS media_id,
-                CASE WHEN doc_id % 3 = 0 THEN 'png'
-                     WHEN doc_id % 3 = 1 THEN 'jpeg'
-                     ELSE 'wav' END AS media_type,
-                CAST(strlen(text) AS INTEGER) AS n_bytes,
-                md5(text) AS checksum,
-                CASE WHEN hex(encode(substr(text, 1, 4))) = '52494646' THEN 'wav'
-                     WHEN hex(encode(substr(text, 1, 4))) = '47494638' THEN 'gif'
-                     WHEN hex(encode(substr(text, 1, 3))) = 'FFD8FF' THEN 'jpeg'
-                     WHEN hex(encode(substr(text, 1, 4))) = '89504E47' THEN 'png'
-                     ELSE 'unknown' END AS sniffed_type
-            FROM documents ORDER BY media_id
-        """,
-        # multimodal_features: the stub decoder is acc[i%8] += byte over the
-        # ASCII payload then /= total — exact integer sums in doubles, so the
-        # DuckDB replay hash-matches the mapInPandas path bit for bit.
-        "multimodal_features": """
-            WITH pos AS (
-                -- uncorrelated series (DuckDB can't lateral-join
-                -- generate_series on a column); docs are < 4096 bytes
-                SELECT i FROM generate_series(0, 4095) s(i)
-            ),
-            bytes AS (
-                -- byte-exact: byte i of the utf-8 payload via hex-string
-                -- slicing (DuckDB lacks blob subscripting/md5(blob)), so
-                -- this matches Spark's encode(text) even for non-ASCII
-                SELECT doc_id AS media_id,
-                       (pos.i % 8) AS dim,
-                       CAST(('0x' || substr(hex(encode(text)),
-                            CAST(pos.i * 2 + 1 AS INTEGER), 2)) AS INTEGER) AS b
-                FROM documents, pos
-                WHERE pos.i < octet_length(encode(text))
-            ),
-            acc AS (
-                SELECT media_id, dim, CAST(sum(b) AS DOUBLE) AS a
-                FROM bytes GROUP BY 1, 2
-            ),
-            feat AS (
-                SELECT media_id,
-                       round(max(CASE WHEN dim = 0 THEN a END) / sum(a), 6) AS f0,
-                       round(max(CASE WHEN dim = 1 THEN a END) / sum(a), 6) AS f1,
-                       round(max(CASE WHEN dim = 2 THEN a END) / sum(a), 6) AS f2,
-                       round(max(CASE WHEN dim = 3 THEN a END) / sum(a), 6) AS f3,
-                       round(max(CASE WHEN dim = 4 THEN a END) / sum(a), 6) AS f4,
-                       round(max(CASE WHEN dim = 5 THEN a END) / sum(a), 6) AS f5,
-                       round(max(CASE WHEN dim = 6 THEN a END) / sum(a), 6) AS f6,
-                       round(max(CASE WHEN dim = 7 THEN a END) / sum(a), 6) AS f7
-                FROM acc GROUP BY media_id
-            )
-            SELECT d.doc_id AS media_id,
-                   CASE WHEN d.doc_id % 3 = 0 THEN 'png'
-                        WHEN d.doc_id % 3 = 1 THEN 'jpeg'
-                        ELSE 'wav' END AS media_type,
-                   CAST(octet_length(encode(d.text)) AS INTEGER) AS n_bytes,
-                   f.f0, f.f1, f.f2, f.f3, f.f4, f.f5, f.f6, f.f7
-            FROM documents d JOIN feat f ON f.media_id = d.doc_id
-            ORDER BY media_id
-        """,
-        # frame sampling: char slices == byte slices ONLY for ASCII corpora
-        # (this DuckDB has no md5(blob), so the checksum must hash VARCHAR);
-        # tests/test_multimodal.py::test_corpus_is_ascii guards the
-        # precondition loudly if regenerated testdata ever breaks it.
-        # min doc length 48 → k is always 4 frames of n//4 bytes.
-        "multimodal_frames": """
-            WITH media AS (
-                SELECT doc_id AS media_id, text,
-                       strlen(text) // 4 AS step
-                FROM documents
-            )
-            SELECT media_id, CAST(i AS INTEGER) AS frame_idx,
-                   CAST(step AS INTEGER) AS frame_bytes,
-                   md5(substr(text, i * step + 1, step)) AS checksum
-            FROM media, generate_series(0, 3) s(i)
-            ORDER BY media_id, frame_idx
-        """,
-        "corpus_curation": f"""
-            WITH analyzed AS ({_text.analyze_documents_sql()}),
-            quality AS (
-                SELECT * FROM analyzed WHERE quality_score >= 0.30
-            ),
-            keep_exact AS (
-                SELECT fingerprint, min(doc_id) AS doc_id
-                FROM quality GROUP BY 1
-            ),
-            survivors AS (
-                SELECT q.* FROM quality q
-                JOIN keep_exact k
-                  ON q.fingerprint = k.fingerprint AND q.doc_id = k.doc_id
-            ),
-            lsh AS (SELECT * FROM ({_dedup.minhash_lsh_pairs_sql()})),
-            drop_b AS (SELECT DISTINCT doc_b AS doc_id FROM lsh),
-            final AS (
-                SELECT * FROM survivors
-                WHERE doc_id NOT IN (SELECT doc_id FROM drop_b)
-            )
-            SELECT lang_pred, count(*) AS n_docs,
-                   CAST(sum(bpe_ish_tokens) AS BIGINT) AS total_tokens,
-                   round(avg(quality_score), 6) AS avg_quality
-            FROM final GROUP BY 1 ORDER BY lang_pred
-        """,
-        "bucketed_join": """
-            SELECT o_orderpriority, count(*) AS n_items,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-            GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """,
-        "vocab_topk": f"""
-            WITH toks AS (
-                SELECT doc_id, unnest({_tokens_sql("text")}) AS token
-                FROM documents
-            )
-            SELECT token, count(*) AS n_total,
-                   count(DISTINCT doc_id) AS n_docs
-            FROM toks GROUP BY token
-            ORDER BY n_total DESC, token LIMIT 50
-        """,
-        "source_mixture": f"""
-            WITH per_source AS (
-                SELECT source, count(*) AS n_docs,
-                       CAST(sum(len({_tokens_sql("text")})) AS BIGINT)
-                           AS n_tokens
-                FROM documents GROUP BY source
-            ), shared AS (
-                SELECT *, n_tokens * 1.0 / sum(n_tokens) OVER () AS share,
-                       sum(n_tokens) OVER () AS tot
-                FROM per_source
-            ), raw AS (
-                SELECT *, pow(share, {training_data.MIX_ALPHA}) AS r
-                FROM shared
-            )
-            SELECT source, n_docs, n_tokens,
-                   round(r / sum(r) OVER (), 6) AS mix_weight,
-                   round(r / sum(r) OVER () * tot / n_tokens, 4) AS epochs
-            FROM raw ORDER BY source
-        """,
-        "tokenize_ids": f"""
-            WITH toks AS (
-                SELECT doc_id, {_tokens_sql("text")} AS tks
-                FROM documents
-            ), vocab AS (
-                SELECT token,
-                       row_number() OVER (ORDER BY n DESC, token) AS id
-                FROM (
-                    SELECT u.token AS token, count(*) AS n
-                    FROM toks, unnest(tks) AS u(token)
-                    GROUP BY 1
-                )
-                ORDER BY n DESC, token LIMIT {training_data.VOCAB_SIZE}
-            ), tok_pos AS (
-                SELECT doc_id, r.pos AS pos, tks[r.pos] AS token
-                FROM toks, unnest(range(1, len(tks) + 1)) AS r(pos)
-            ), idm AS (
-                SELECT tp.doc_id, tp.pos, coalesce(v.id, 0) AS id
-                FROM tok_pos tp LEFT JOIN vocab v USING (token)
-            ), agg AS (
-                SELECT doc_id,
-                       list(CAST(id AS VARCHAR) ORDER BY pos) AS ids_s,
-                       CAST(sum(CASE WHEN id = 0 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_oov
-                FROM idm GROUP BY doc_id
-            )
-            SELECT t.doc_id, len(t.tks) AS n_tokens,
-                   coalesce(a.n_oov, 0) AS n_oov,
-                   coalesce(array_to_string(
-                       a.ids_s[1:{training_data.IDS_HEAD}], '-'), '')
-                       AS ids_head,
-                   md5(coalesce(array_to_string(a.ids_s, '-'), ''))
-                       AS ids_md5
-            FROM toks t LEFT JOIN agg a USING (doc_id)
-            ORDER BY t.doc_id
-        """,
-        "kmeans_embeddings": _sim.kmeans_sql(),
-        "ann_lsh": _sim.ann_lsh_sql(),
-        "dedup_edit_distance": _dedup.edit_distance_pairs_sql(),
-        "dedup_sorted_neighborhood": _dedup.snm_pairs_sql(),
-        "ann_pq": _sim.ann_pq_sql(),
-        "source_pagerank": _graph.source_pagerank_sql(),
-        "ann_ivfpq": _sim.ann_ivfpq_sql(),
-        # served regime: √N codebook from the gate SF's footer row count
-        # on BOTH sides, batches derived arithmetically (see operator)
-        "ann_ivfpq_served": _sim.ann_ivfpq_served_sql(
-            approx_rows=_table_row_count(
-                "/root/testdata/sf0.01", "embeddings"
-            )
-        ),
-        "embedding_neardup_ivf_capped": _sim.embedding_neardup_ivf_capped_sql(
-            approx_rows=_table_row_count(
-                "/root/testdata/sf0.01", "embeddings"
-            )
-        ),
-        "bm25_search": _relevance.bm25_search_sql(),
-        "tfidf_keywords": _relevance.tfidf_keywords_sql(),
-        "benford_audit": advanced.benford_audit_sql(),
-        "key_skew_profile": advanced.key_skew_profile_sql(),
-        "zipf_audit": training_data.zipf_audit_sql(),
-        "source_entropy": training_data.source_entropy_sql(),
-        "psi_drift": advanced.psi_drift_sql(),
-        "ks_drift": advanced.ks_drift_sql(),
-        "mannwhitney_drift": advanced.mannwhitney_drift_sql(),
-        # bounded replay == batch: the streaming twin reuses the oracle
-        "streaming_mwu": advanced.mannwhitney_drift_sql(),
-        "chi2_drift": advanced.chi2_drift_sql(),
-        "streaming_chi2": advanced.chi2_drift_sql(),
-        "ab_test": advanced.ab_test_sql(),
-        # the streaming twin's drained complete-mode state equals the
-        # batch (segment, bucket) histogram, so it shares ks_drift's oracle
-        "streaming_ks": advanced.ks_drift_sql(),
-        "session_transitions": advanced.session_transitions_sql(),
-        "funnel_steps": advanced.funnel_steps_sql(),
-        "k_anonymity": advanced.k_anonymity_sql(),
-        "cusum_changepoints": _changepoint.cusum_changepoints_sql().format(
-            TRADES_CTE=TRADES_CTE
-        ),
-        "l_diversity": advanced.l_diversity_sql(),
-        "rolling_distinct_users": advanced.rolling_distinct_users_sql(),
-        "lateness_audit": advanced.lateness_audit_sql(),
-        "padding_efficiency": training_data.padding_efficiency_sql(),
-        "roc_auc": training_data.roc_auc_sql(),
-        "calibration_ece": training_data.calibration_ece_sql(),
-        "information_value": training_data.information_value_sql(),
-        "embedding_drift": training_data.embedding_drift_sql(),
-        "t_closeness": advanced.t_closeness_sql(),
-        # the streaming twin's final complete-mode state equals the batch
-        # (segment, bucket) histogram, so it shares psi_drift's oracle
-        "streaming_psi": advanced.psi_drift_sql(),
-        "streaming_benford": advanced.benford_audit_sql(),
-        # final SCD1 snapshot == latest trade per symbol by the canonical
-        # (ts, trade_id) order, regardless of micro-batch split
-        "streaming_upsert": f"""
-            WITH trades AS ({TRADES_CTE}),
-            ranked AS (
-                SELECT symbol, price, "timestamp" AS ts_ns, trade_id,
-                       row_number() OVER (
-                           PARTITION BY symbol
-                           ORDER BY "timestamp" DESC, trade_id DESC
-                       ) AS rn
-                FROM trades
-            )
-            SELECT symbol, price AS last_price, ts_ns AS last_ts_ns,
-                   trade_id AS last_trade_id
-            FROM ranked WHERE rn = 1 ORDER BY symbol
-        """,
-        # volume bars: identical cumulative-volume bar ids and struct
-        # open/close (first/last by (ts, trade_id) within the bar)
-        "volume_bars": f"""
-            WITH trades AS ({TRADES_CTE}),
-            c AS (
-                SELECT symbol, price, volume, timestamp, trade_id,
-                       (sum(volume) OVER (PARTITION BY symbol
-                            ORDER BY timestamp, trade_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        - volume) // {analytics.VOLUME_BAR_SIZE} AS bar
-                FROM trades
-            ),
-            r AS (
-                SELECT *,
-                       row_number() OVER (PARTITION BY symbol, bar
-                           ORDER BY timestamp, trade_id) AS rn_a,
-                       row_number() OVER (PARTITION BY symbol, bar
-                           ORDER BY timestamp DESC, trade_id DESC) AS rn_d
-                FROM c
-            )
-            SELECT symbol, CAST(bar AS BIGINT) AS bar,
-                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
-                   round(max(price), 4) AS high,
-                   round(min(price), 4) AS low,
-                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
-                   CAST(sum(volume) AS BIGINT) AS bar_volume,
-                   count(*) AS n_trades
-            FROM r GROUP BY symbol, bar ORDER BY symbol, bar
-        """,
-        # microstructure panel: identical lag windows, moment aggregates,
-        # and the covariance-sign no-estimate case
-        "microstructure": f"""
-            WITH trades AS ({TRADES_CTE}),
-            d0 AS (
-                SELECT symbol, timestamp, trade_id, price, volume,
-                       lag(price) OVER w AS p_prev,
-                       price - lag(price) OVER w AS dp,
-                       CAST(CASE WHEN side = 'B' THEN volume
-                                 ELSE -volume END AS DOUBLE) AS signed_vol
-                FROM trades
-                WINDOW w AS (PARTITION BY symbol ORDER BY timestamp, trade_id)
-            ),
-            d AS (
-                SELECT *, lag(dp) OVER (PARTITION BY symbol
-                    ORDER BY timestamp, trade_id) AS dp_prev
-                FROM d0
-            )
-            SELECT symbol, count(*) AS n_changes,
-                   round(CASE WHEN covar_samp(dp, dp_prev)
-                                   < CAST(0 AS DOUBLE)
-                              THEN CAST(2.0 AS DOUBLE)
-                                   * sqrt(-covar_samp(dp, dp_prev)) END, 6)
-                       AS roll_spread,
-                   round(regr_slope(dp, signed_vol) * 1e6, 6)
-                       AS kyle_lambda_x1e6,
-                   round(avg(abs(dp) / p_prev / volume::DOUBLE) * 1e6, 6)
-                       AS amihud_x1e6
-            FROM d
-            WHERE dp IS NOT NULL AND p_prev > 0 AND volume > 0
-            GROUP BY symbol ORDER BY symbol
-        """,
-        # purged k-fold: residue counts -> per-fold test/embargo/train
-        "purged_kfold": f"""
-            WITH trades AS ({TRADES_CTE}),
-            res AS (
-                SELECT (timestamp // {analytics.PURGE_BLOCK_NS})
-                           % {analytics.PURGE_K} AS r,
-                       count(*) AS n
-                FROM trades GROUP BY 1
-            ),
-            total AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM res),
-            folds AS (SELECT unnest(range({analytics.PURGE_K})) AS fold)
-            SELECT f.fold,
-                   CAST(coalesce(t.n, 0) AS BIGINT) AS n_test,
-                   CAST(coalesce(p.n, 0) + coalesce(q.n, 0) AS BIGINT)
-                       AS n_embargoed,
-                   CAST(tt.n_total - coalesce(t.n, 0) - coalesce(p.n, 0)
-                        - coalesce(q.n, 0) AS BIGINT) AS n_train,
-                   round((tt.n_total - coalesce(t.n, 0) - coalesce(p.n, 0)
-                          - coalesce(q.n, 0))::DOUBLE
-                         / tt.n_total::DOUBLE, 6) AS train_frac
-            FROM folds f
-            LEFT JOIN res t ON t.r = f.fold
-            LEFT JOIN res p
-              ON p.r = (f.fold + 1) % {analytics.PURGE_K}
-            LEFT JOIN res q
-              ON q.r = (f.fold - 1 + {analytics.PURGE_K})
-                       % {analytics.PURGE_K}
-            CROSS JOIN total tt
-            ORDER BY f.fold
-        """,
-        "attribution_touch": advanced.attribution_touch_sql(),
-        "containment_pairs": _dedup.CONTAINMENT_PAIRS_SQL,
-        # batch equivalence of the watermarked left-outer interval join:
-        # every real buy either pairs within its 1-hour horizon or is
-        # flushed unmatched by the sentinel-advanced watermark
-        "streaming_join_outer": f"""
-            WITH trades AS ({TRADES_CTE}),
-            buys AS (SELECT symbol, price, "timestamp" AS bt
-                     FROM trades WHERE side = 'B'),
-            sells AS (SELECT symbol, price, "timestamp" AS st
-                      FROM trades WHERE side = 'S'),
-            joined AS (
-                SELECT b.symbol, b.price AS buy_price, s.price AS sell_price
-                FROM buys b LEFT JOIN sells s
-                  ON b.symbol = s.symbol
-                 AND s.st >= b.bt AND s.st <= b.bt + 3600000000000
-            )
-            SELECT symbol, count(sell_price) AS n_pairs,
-                   count(*) - count(sell_price) AS n_unmatched,
-                   CASE WHEN count(sell_price) > 0 THEN
-                        round(sum(CAST(floor((sell_price - buy_price) * 1e6
-                                   + CAST(0.5 AS DOUBLE)) AS BIGINT)
-                                  )::DOUBLE / count(sell_price) / 1e6, 6)
-                   END AS avg_spread
-            FROM joined GROUP BY symbol ORDER BY symbol
-        """,
-        # batch equivalence of the watermarked FULL OUTER interval join:
-        # unmatched rows from BOTH sides flush via the sentinel-advanced
-        # watermark on bounded replay
-        "streaming_join_full_outer": f"""
-            WITH trades AS ({TRADES_CTE}),
-            buys AS (SELECT symbol, price, "timestamp" AS bt
-                     FROM trades WHERE side = 'B'),
-            sells AS (SELECT symbol, price, "timestamp" AS st
-                      FROM trades WHERE side = 'S'),
-            joined AS (
-                SELECT coalesce(b.symbol, s.symbol) AS symbol,
-                       b.price AS buy_price, s.price AS sell_price
-                FROM buys b FULL JOIN sells s
-                  ON b.symbol = s.symbol
-                 AND s.st >= b.bt AND s.st <= b.bt + 3600000000000
-            )
-            SELECT symbol,
-                   CAST(sum(CASE WHEN buy_price IS NOT NULL
-                                  AND sell_price IS NOT NULL
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
-                   CAST(sum(CASE WHEN sell_price IS NULL
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_buy_unmatched,
-                   CAST(sum(CASE WHEN buy_price IS NULL
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_sell_unmatched,
-                   CASE WHEN count(sell_price - buy_price) > 0 THEN
-                        round(sum(CAST(floor((sell_price - buy_price) * 1e6
-                                   + CAST(0.5 AS DOUBLE)) AS BIGINT)
-                                  )::DOUBLE
-                              / count(sell_price - buy_price) / 1e6, 6)
-                   END AS avg_spread
-            FROM joined GROUP BY symbol ORDER BY symbol
-        """,
-        "hybrid_search_rrf": _fusion.hybrid_search_rrf_sql(),
-        "dedup_collapse_weighted": _dedup.collapse_weighted_sql(),
-        "streaming_ivf_assign": _stream_docs.stream_ivf_assign_sql(),
-        "lm_perplexity": _lm.lm_perplexity_sql(),
-        "top_pmi_bigrams": _lm.top_pmi_bigrams_sql(),
-        # chi-square drift: exact integer counts, IEEE-only float steps,
-        # per-term fixed-point floor(x*1e6+0.5) so the sum is
-        # order-independent — mirrors q_token_drift step for step
-        "token_drift": f"""
-            WITH toks AS MATERIALIZED (
-                SELECT source, unnest({_tokens_sql("text")}) AS token
-                FROM documents
-            ), per AS MATERIALIZED (
-                SELECT source, token, CAST(count(*) AS BIGINT) AS c
-                FROM toks GROUP BY 1, 2
-            ), gcnt AS MATERIALIZED (
-                SELECT token, CAST(sum(c) AS BIGINT) AS cg
-                FROM per GROUP BY 1 HAVING sum(c) >= 5
-            ), tg AS MATERIALIZED (
-                SELECT CAST(sum(cg) AS BIGINT) AS tg FROM gcnt
-            ), kept AS MATERIALIZED (
-                SELECT p.source, p.token, p.c, g.cg
-                FROM per p JOIN gcnt g USING (token)
-            ), totals AS MATERIALIZED (
-                SELECT source, CAST(sum(c) AS BIGINT) AS t,
-                       CAST(sum(cg) AS BIGINT) AS cg_present,
-                       count(*) AS n_tokens
-                FROM kept GROUP BY 1
-            ), present AS (
-                SELECT k.source,
-                       CAST(sum(CAST(floor(
-                           ((k.c::DOUBLE * tg.tg::DOUBLE)
-                              - (tt.t::DOUBLE * k.cg::DOUBLE))
-                           * ((k.c::DOUBLE * tg.tg::DOUBLE)
-                              - (tt.t::DOUBLE * k.cg::DOUBLE))
-                           / (tt.t::DOUBLE * k.cg::DOUBLE * tg.tg::DOUBLE)
-                           * 1e6 + 0.5
-                       ) AS BIGINT)) AS BIGINT) AS chi2_fp
-                FROM kept k
-                JOIN totals tt USING (source)
-                CROSS JOIN tg
-                GROUP BY 1
-            )
-            SELECT t.source, t.n_tokens,
-                   floor((p.chi2_fp::DOUBLE / 1e6
-                          + (t.t::DOUBLE / tg.tg::DOUBLE)
-                            * (tg.tg::DOUBLE - t.cg_present::DOUBLE))
-                         * 1e4 + 0.5) / 1e4 AS chi2
-            FROM totals t JOIN present p USING (source) CROSS JOIN tg
-            ORDER BY t.source
-        """,
-        # full-outer pair-set agreement over the two family oracles;
-        # floor(x*1e6+0.5) mirrors the Spark side's rounding-mode dodge
-        "dedup_family_agreement": f"""
-            WITH mh AS MATERIALIZED (
-                SELECT doc_a, doc_b FROM ({_dedup.minhash_lsh_pairs_sql()})
-            ), sh AS MATERIALIZED (
-                SELECT doc_a, doc_b FROM ({_dedup.simhash_near_pairs_sql()})
-            ), j AS (
-                SELECT coalesce(m.doc_a, s.doc_a) AS doc_a,
-                       m.doc_a IS NOT NULL AS in_mh,
-                       s.doc_a IS NOT NULL AS in_sh
-                FROM mh m
-                FULL OUTER JOIN sh s
-                  ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b
-            )
-            SELECT CAST(count(*) AS BIGINT) AS n_union,
-                   CAST(sum(CASE WHEN in_mh AND in_sh THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_both,
-                   CAST(sum(CASE WHEN in_mh AND NOT in_sh THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_minhash_only,
-                   CAST(sum(CASE WHEN NOT in_mh AND in_sh THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_simhash_only,
-                   floor(
-                       sum(CASE WHEN in_mh AND in_sh THEN 1 ELSE 0 END)::DOUBLE
-                       / count(*)::DOUBLE * 1e6 + 0.5
-                   ) / 1e6 AS pair_jaccard
-            FROM j
-        """,
-        # trained-codebook replay (kmeans_cent_rel: same init, 6-dp
-        # centroid rounding, (dist, cid) ties) + one assignment pass;
-        # majority pick ORDER BY n DESC, label = Spark's (n, -label)
-        # struct max; purity floor-fixed-pointed like the Spark side
-        "cluster_profile": f"""
-            WITH ev AS MATERIALIZED (
-                SELECT vec_id, label,
-                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                FROM embeddings
-            ), ce AS MATERIALIZED (
-                SELECT vec_id AS cid,
-                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-                FROM {_sim.kmeans_cent_rel()}
-            ), asg AS (
-                SELECT vec_id, label, cid FROM (
-                    SELECT d.*, row_number() OVER (
-                        PARTITION BY vec_id ORDER BY dist, cid) AS rn
-                    FROM (
-                        SELECT e.vec_id, e.label, c.cid,
-                               list_sum(list_transform(
-                                   range(1, {_sim.EMB_DIM} + 1),
-                                   j -> (e.v[j] - c.cv[j])
-                                        * (e.v[j] - c.cv[j])
-                               )) AS dist
-                        FROM ev e, ce c
-                    ) d
-                ) WHERE rn = 1
-            ), pl AS MATERIALIZED (
-                SELECT cid, label, CAST(count(*) AS BIGINT) AS n
-                FROM asg GROUP BY 1, 2
-            ), tot AS (
-                SELECT cid, CAST(sum(n) AS BIGINT) AS n_vectors
-                FROM pl GROUP BY 1
-            ), maj AS (
-                SELECT cid, label AS majority_label, n AS n_major FROM (
-                    SELECT pl.*, row_number() OVER (
-                        PARTITION BY cid ORDER BY n DESC, label) AS rn
-                    FROM pl
-                ) WHERE rn = 1
-            )
-            SELECT t.cid, t.n_vectors, m.majority_label,
-                   floor(m.n_major::DOUBLE / t.n_vectors::DOUBLE * 1e6 + 0.5)
-                       / 1e6 AS purity
-            FROM tot t JOIN maj m USING (cid)
-            ORDER BY t.cid
-        """,
-        # truncated-prefix recall vs full-dim exact top-k; list slicing
-        # embedding[1:d] mirrors Spark's F.slice(embedding, 1, d)
-        "ann_truncated_recall": f"""
-            WITH exact AS MATERIALIZED (
-                SELECT query_id, neighbor_id
-                FROM ({_sim.ann_bruteforce_sql()})
-            ), tot AS (
-                SELECT query_id, CAST(count(*) AS BIGINT) AS k
-                FROM exact GROUP BY 1
-            ), a16 AS MATERIALIZED (
-                SELECT query_id, neighbor_id
-                FROM ({_sim.ann_bruteforce_sql_over(
-                    q_rel=("(SELECT vec_id, embedding[1:16] AS embedding "
-                           f"FROM embeddings WHERE vec_id < {_sim.N_QUERIES})"),
-                    e_rel="(SELECT vec_id, embedding[1:16] AS embedding "
-                          "FROM embeddings)")})
-            ), a32 AS MATERIALIZED (
-                SELECT query_id, neighbor_id
-                FROM ({_sim.ann_bruteforce_sql_over(
-                    q_rel=("(SELECT vec_id, embedding[1:32] AS embedding "
-                           f"FROM embeddings WHERE vec_id < {_sim.N_QUERIES})"),
-                    e_rel="(SELECT vec_id, embedding[1:32] AS embedding "
-                          "FROM embeddings)")})
-            ), h16 AS (
-                SELECT e.query_id, CAST(count(*) AS BIGINT) AS h
-                FROM exact e JOIN a16 a
-                  ON e.query_id = a.query_id
-                 AND e.neighbor_id = a.neighbor_id
-                GROUP BY 1
-            ), h32 AS (
-                SELECT e.query_id, CAST(count(*) AS BIGINT) AS h
-                FROM exact e JOIN a32 a
-                  ON e.query_id = a.query_id
-                 AND e.neighbor_id = a.neighbor_id
-                GROUP BY 1
-            )
-            SELECT t.query_id,
-                   round(coalesce(h16.h, 0) / t.k, 6) AS recall_d16,
-                   round(coalesce(h32.h, 0) / t.k, 6) AS recall_d32
-            FROM tot t
-            LEFT JOIN h16 ON t.query_id = h16.query_id
-            LEFT JOIN h32 ON t.query_id = h32.query_id
-            ORDER BY t.query_id
-        """,
-        # 13-gram verbatim decontamination; floor fixed-point like Spark
-        "contamination_verbatim": f"""
-            WITH sh AS MATERIALIZED (
-                SELECT doc_id,
-                       {_h32_sql("CAST(doc_id AS VARCHAR)")} % 20 = 0
-                           AS is_bench,
-                       unnest(list_distinct(
-                           {_shingles_sql(_tokens_sql("text"), 13)}
-                       )) AS s
-                FROM documents
-            ), b AS (
-                SELECT DISTINCT s FROM sh WHERE is_bench
-            ), agg AS (
-                SELECT c.doc_id,
-                       CAST(count(*) AS BIGINT) AS n_13grams,
-                       CAST(count(b.s) AS BIGINT) AS n_hits
-                FROM (SELECT doc_id, s FROM sh WHERE NOT is_bench) c
-                LEFT JOIN b ON c.s = b.s
-                GROUP BY 1
-            )
-            SELECT doc_id, n_13grams, n_hits,
-                   floor(n_hits::DOUBLE / n_13grams::DOUBLE * 1e6 + 0.5)
-                       / 1e6 AS verbatim_frac
-            FROM agg WHERE n_hits > 0
-            ORDER BY doc_id
-        """,
-        # fuzzy decontamination: LSH pairs where exactly one side is bench
-        "contamination_neardup": f"""
-            WITH pairs AS MATERIALIZED (
-                SELECT * FROM ({_dedup.minhash_lsh_pairs_sql()})
-            ), flagged AS (
-                SELECT doc_a, doc_b, jaccard,
-                       {_h32_sql("CAST(doc_a AS VARCHAR)")} % 20 = 0
-                           AS bench_a,
-                       {_h32_sql("CAST(doc_b AS VARCHAR)")} % 20 = 0
-                           AS bench_b
-                FROM pairs
-            ), linked AS (
-                SELECT doc_a AS doc_id, doc_b AS bench_id, jaccard
-                FROM flagged WHERE bench_b AND NOT bench_a
-                UNION ALL
-                SELECT doc_b AS doc_id, doc_a AS bench_id, jaccard
-                FROM flagged WHERE bench_a AND NOT bench_b
-            )
-            SELECT doc_id,
-                   CAST(count(*) AS BIGINT) AS n_bench_neighbors,
-                   max(jaccard) AS max_jaccard,
-                   min(bench_id) AS first_bench_id
-            FROM linked
-            GROUP BY 1
-            ORDER BY doc_id
-        """,
-        "langid_confusion": f"""
-            WITH pred AS MATERIALIZED (
-                SELECT doc_id, lang,
-                       {_text.lang_id_sql("text")} AS lang_pred
-                FROM documents
-            ), cells AS MATERIALIZED (
-                SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
-                FROM pred GROUP BY 1, 2
-            ), row_tot AS (
-                SELECT lang AS r_lang, CAST(sum(n) AS BIGINT) AS row_n
-                FROM cells GROUP BY 1
-            )
-            SELECT c.lang, c.lang_pred, c.n,
-                   floor(c.n::DOUBLE / t.row_n::DOUBLE * 1e6 + 0.5) / 1e6
-                       AS row_share
-            FROM cells c JOIN row_tot t ON c.lang = t.r_lang
-            ORDER BY c.lang, c.lang_pred
-        """,
-        "split_leakage": f"""
-            WITH pairs AS MATERIALIZED (
-                SELECT * FROM ({_dedup.minhash_lsh_pairs_sql()})
-            ), tagged AS (
-                SELECT jaccard,
-                       CASE WHEN {_h32_sql("CAST(doc_a AS VARCHAR)")} % 100 < 80
-                                THEN 'train'
-                            WHEN {_h32_sql("CAST(doc_a AS VARCHAR)")} % 100 < 90
-                                THEN 'val'
-                            ELSE 'test' END AS sa,
-                       CASE WHEN {_h32_sql("CAST(doc_b AS VARCHAR)")} % 100 < 80
-                                THEN 'train'
-                            WHEN {_h32_sql("CAST(doc_b AS VARCHAR)")} % 100 < 90
-                                THEN 'val'
-                            ELSE 'test' END AS sb
-                FROM pairs
-            ), norm AS (
-                SELECT jaccard, least(sa, sb) AS split_a,
-                       greatest(sa, sb) AS split_b
-                FROM tagged
-            )
-            SELECT split_a, split_b,
-                   CAST(count(*) AS BIGINT) AS n_leaked_pairs,
-                   max(jaccard) AS max_jaccard
-            FROM norm WHERE split_a <> split_b
-            GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        # running-VWAP slippage: integer-cent cumulative mass (exact, any
-        # accumulation order), per-row fixed-point deviations
-        "vwap_deviation": f"""
-            WITH trades AS ({TRADES_CTE}),
-            t AS (
-                SELECT symbol, price, volume, timestamp, trade_id,
-                       CAST(floor(price * 100 + 0.5) AS BIGINT) AS cents
-                FROM trades WHERE price > 0 AND volume > 0
-            ), r AS (
-                SELECT symbol, price,
-                       sum(cents * volume) OVER w AS cum_pv,
-                       sum(volume) OVER w AS cum_v
-                FROM t
-                WINDOW w AS (PARTITION BY symbol
-                             ORDER BY timestamp, trade_id
-                             ROWS UNBOUNDED PRECEDING)
-            ), d AS (
-                SELECT symbol,
-                       CAST(floor(abs(price - cum_pv::DOUBLE
-                                      / (cum_v::DOUBLE * 100.0))
-                                  * 1e6 + 0.5) AS BIGINT) AS dev_fp
-                FROM r
-            )
-            SELECT symbol, count(*) AS n_trades,
-                   floor(sum(dev_fp)::DOUBLE / count(*)::DOUBLE + 0.5)
-                       / 1e6 AS avg_abs_dev,
-                   max(dev_fp)::DOUBLE / 1e6 AS max_abs_dev
-            FROM d GROUP BY symbol ORDER BY symbol
-        """,
-        # market-basket pair counting with lift vs independence
-        "symbol_affinity": f"""
-            WITH trades AS ({TRADES_CTE}),
-            held AS MATERIALIZED (
-                SELECT DISTINCT order_id AS account, symbol
-                FROM trades WHERE price > 0 AND volume > 0
-            ), tot AS (
-                SELECT CAST(count(DISTINCT account) AS BIGINT) AS n_accounts
-                FROM held
-            ), per_sym AS MATERIALIZED (
-                SELECT symbol, CAST(count(*) AS BIGINT) AS n_sym
-                FROM held GROUP BY 1
-            ), pairs AS (
-                SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
-                       CAST(count(*) AS BIGINT) AS n_both
-                FROM held a JOIN held b
-                  ON a.account = b.account AND a.symbol < b.symbol
-                GROUP BY 1, 2
-            )
-            SELECT p.symbol_a, p.symbol_b, p.n_both,
-                   floor(p.n_both::DOUBLE * t.n_accounts::DOUBLE
-                         / (sa.n_sym::DOUBLE * sb.n_sym::DOUBLE)
-                         * 1e6 + 0.5) / 1e6 AS lift
-            FROM pairs p
-            JOIN per_sym sa ON p.symbol_a = sa.symbol
-            JOIN per_sym sb ON p.symbol_b = sb.symbol
-            CROSS JOIN tot t
-            ORDER BY p.symbol_a, p.symbol_b
-        """,
-        # two-snapshot reconciliation vs the fixed sf0.001 baseline
-        "snapshot_diff": """
-            WITH cur AS (
-                SELECT doc_id, md5(text) AS h_cur FROM documents
-            ), base AS (
-                SELECT doc_id, md5(text) AS h_base
-                FROM '/root/testdata/sf0.001/documents.parquet'
-            ), j AS (
-                SELECT coalesce(c.doc_id, b.doc_id) AS doc_id,
-                       c.h_cur, b.h_base
-                FROM cur c FULL OUTER JOIN base b ON c.doc_id = b.doc_id
-            )
-            SELECT CAST(count(*) AS BIGINT) AS n_union,
-                   CAST(sum(CASE WHEN h_base IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_added,
-                   CAST(sum(CASE WHEN h_cur IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_removed,
-                   CAST(sum(CASE WHEN h_cur IS NOT NULL
-                                  AND h_base IS NOT NULL
-                                  AND h_cur <> h_base
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-                   CAST(sum(CASE WHEN h_cur = h_base THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_identical
-            FROM j
-        """,
-        "binary_ingest": _binassets.binary_ingest_sql(),
-        "embedding_quantize": _sim.embedding_quantize_error_sql(),
-        "json_corrupt_records": _formats.json_corrupt_records_sql(),
-        "weighted_reservoir": f"""
-            WITH keyed AS (
-                SELECT doc_id, source, n_chars,
-                       round(pow(
-                           ({_h32_sql("'res' || doc_id")} + 1)
-                               / CAST({2**32 + 1} AS DOUBLE),
-                           CAST(1.0 AS DOUBLE) / greatest(n_chars, 1)), 12) AS res_key
-                FROM documents
-            )
-            SELECT doc_id, source, n_chars, round(res_key, 9) AS res_key
-            FROM keyed ORDER BY res_key DESC, doc_id LIMIT 20
-        """,
-        "quality_percentile_filter": f"""
-            WITH scored AS (
-                SELECT doc_id, source,
-                       round({_text.quality_features_sql("text")["quality_score"]}, 9) AS q
-                FROM documents
-            ),
-            ranked AS (
-                SELECT *, percent_rank() OVER (
-                    PARTITION BY source ORDER BY q, doc_id) AS pr
-                FROM scored
-            )
-            SELECT source, count(*) AS n_kept,
-                   round(min(q), 6) AS min_kept_score,
-                   round(avg(q), 6) AS avg_kept_score
-            FROM ranked WHERE pr >= 0.4
-            GROUP BY source ORDER BY source
-        """,
-        "streaming_python_datasource": f"""
-            WITH gen AS ({_tradegen_cte(10000)})
-            SELECT symbol, count(*) AS n_trades,
-                   CAST(sum(volume) AS BIGINT) AS total_volume
-            FROM gen GROUP BY symbol ORDER BY symbol
-        """,
-        "ann_ivf_trained_recall": f"""
-            WITH exact AS (
-                SELECT query_id, neighbor_id
-                FROM ({_sim.ann_bruteforce_sql()})
-            ),
-            approx_s AS (
-                SELECT query_id, neighbor_id FROM ({_sim.ann_ivf_sql()})
-            ),
-            approx_t AS (
-                SELECT query_id, neighbor_id FROM ({_sim.ann_ivf_sql(
-                    cent_rel=_sim.kmeans_cent_rel(k=_sim.N_CENTROIDS))})
-            ),
-            totals AS (
-                SELECT query_id, count(*) AS k FROM exact GROUP BY 1
-            ),
-            hs AS (
-                SELECT e.query_id, count(*) AS h FROM exact e
-                JOIN approx_s a ON e.query_id = a.query_id
-                    AND e.neighbor_id = a.neighbor_id GROUP BY 1
-            ),
-            ht AS (
-                SELECT e.query_id, count(*) AS h FROM exact e
-                JOIN approx_t a ON e.query_id = a.query_id
-                    AND e.neighbor_id = a.neighbor_id GROUP BY 1
-            )
-            SELECT t.query_id,
-                   round(coalesce(s.h, 0) / t.k, 6) AS recall_sampled,
-                   round(coalesce(tr.h, 0) / t.k, 6) AS recall_trained
-            FROM totals t
-            LEFT JOIN hs s ON t.query_id = s.query_id
-            LEFT JOIN ht tr ON t.query_id = tr.query_id
-            ORDER BY t.query_id
-        """,
-        "contamination": f"""
-            WITH sh AS (
-                SELECT doc_id,
-                    {_h32_sql("CAST(doc_id AS VARCHAR)")} % 20 = 0 AS is_bench,
-                    list_distinct({_shingles_sql(_tokens_sql("text"), _dedup.SHINGLE_K)}) AS s
-                FROM documents
-            ),
-            bench AS (
-                SELECT DISTINCT unnest(s) AS sh FROM sh WHERE is_bench
-            ),
-            corpus AS (
-                SELECT doc_id, len(s) AS n_shingles, unnest(s) AS sh
-                FROM sh WHERE NOT is_bench
-            )
-            SELECT doc_id, any_value(n_shingles) AS n_shingles,
-                   count(*) AS n_overlap,
-                   round(count(*) / CAST(any_value(n_shingles) AS DOUBLE), 4)
-                       AS contamination
-            FROM corpus JOIN bench USING (sh)
-            GROUP BY doc_id ORDER BY doc_id
-        """,
-        "chunk_documents": f"""
-            WITH toks AS (
-                SELECT doc_id, {_tokens_sql("text")} AS tk FROM documents
-            ),
-            chunks AS (
-                SELECT doc_id, len(tk) AS n, tk,
-                       unnest(range(0, len(tk), 48)) AS s
-                FROM toks WHERE len(tk) > 0
-            )
-            SELECT doc_id,
-                   CAST(s // 48 AS INTEGER) AS chunk_idx,
-                   CAST(least(64, n - s) AS INTEGER) AS n_chunk_tokens,
-                   md5(array_to_string(tk[s+1 : s+64], ' ')) AS checksum
-            FROM chunks ORDER BY doc_id, chunk_idx
-        """,
-        "sequence_packing": f"""
-            WITH docs AS (
-                SELECT doc_id,
-                    len({_tokens_sql("text")}) AS n_tokens,
-                    {_h32_sql("CAST(doc_id AS VARCHAR)")} % 8 AS lane,
-                    md5('pack42:' || CAST(doc_id AS VARCHAR)) AS sk
-                FROM documents
-            ),
-            packed AS (
-                SELECT lane,
-                    CAST(floor((sum(n_tokens) OVER w - n_tokens) / 2048.0)
-                         AS BIGINT) AS bin,
-                    n_tokens
-                FROM docs
-                WINDOW w AS (PARTITION BY lane ORDER BY sk
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            )
-            SELECT lane, bin, count(*) AS n_docs,
-                   CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-            FROM packed GROUP BY lane, bin ORDER BY lane, bin
-        """,
-        # connected components via recursive transitive closure — the
-        # LSH near-dup graph is tiny, so full closure is fine oracle-side;
-        # Spark side converges by iterative min-label propagation.
-        "dedup_clusters": f"""
-            WITH RECURSIVE pairs AS MATERIALIZED ({_dedup.minhash_lsh_pairs_sql()}),
-            edges AS MATERIALIZED (
-                SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(id, lab) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.src, r.lab FROM edges e JOIN reach r ON e.dst = r.id
-            ),
-            comp AS (SELECT id, min(lab) AS cluster_rep FROM reach GROUP BY id)
-            SELECT cluster_rep, count(*) AS n_docs, max(id) AS max_doc
-            FROM comp GROUP BY cluster_rep ORDER BY cluster_rep
-        """,
-        "ann_ivf_recall": f"""
-            WITH exact AS (
-                SELECT query_id, neighbor_id FROM ({_sim.ann_bruteforce_sql()})
-            ),
-            approx AS (
-                SELECT query_id, neighbor_id FROM ({_sim.ann_ivf_sql()})
-            ),
-            hits AS (
-                SELECT e.query_id, count(*) AS hits
-                FROM exact e JOIN approx a
-                  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-                GROUP BY 1
-            ),
-            totals AS (SELECT query_id, count(*) AS k FROM exact GROUP BY 1)
-            SELECT t.query_id,
-                   round(coalesce(h.hits, 0) / t.k, 6) AS recall_at_5
-            FROM totals t LEFT JOIN hits h ON t.query_id = h.query_id
-            ORDER BY t.query_id
-        """,
-        # list_* HOFs mirror transform/aggregate/filter; double casts keep
-        # float32 element math off both sides
-        "array_functions": """
-            WITH v AS (
-                SELECT label,
-                       sqrt(list_sum(list_transform(embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                           AS norm,
-                       CAST(len(list_filter(embedding, x -> x > 0))
-                            AS DOUBLE) / len(embedding) AS pos_frac,
-                       CAST(list_max(embedding) AS DOUBLE) AS max_comp
-                FROM embeddings
-            )
-            SELECT CAST(label AS INTEGER) AS label, count(*) AS n_vectors,
-                   round(avg(norm), 4) AS avg_norm,
-                   round(avg(pos_frac), 4) AS avg_pos_frac,
-                   round(max(max_comp), 4) AS max_component
-            FROM v GROUP BY label ORDER BY label
-        """,
-        # identical md5 threshold -> bit-identical sample membership
-        "weighted_sample": """
-            SELECT source, count(*) AS n_docs,
-                   CAST(sum(CASE WHEN
-                       CAST(('0x' || substr(md5('mix' || doc_id), 1, 8))
-                            AS BIGINT) % 1000
-                       < (CAST(substr(source, 4) AS INTEGER) + 1) * 50
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                   CAST(sum(CASE WHEN
-                       CAST(('0x' || substr(md5('mix' || doc_id), 1, 8))
-                            AS BIGINT) % 1000
-                       < (CAST(substr(source, 4) AS INTEGER) + 1) * 50
-                       THEN n_chars ELSE 0 END) AS BIGINT) AS chars_kept
-            FROM documents GROUP BY source ORDER BY source
-        """,
-        "train_test_split": """
-            WITH b AS (
-                SELECT doc_id,
-                    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                        AS BIGINT) % 100 AS bucket
-                FROM documents
-            )
-            SELECT CASE WHEN bucket < 80 THEN 'train'
-                        WHEN bucket < 90 THEN 'val'
-                        ELSE 'test' END AS split,
-                   count(*) AS n_docs, min(doc_id) AS first_doc
-            FROM b GROUP BY 1 ORDER BY split
-        """,
-        "stratified_sample": """
-            WITH ranked AS (
-                SELECT doc_id, lang,
-                    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                        AS BIGINT) AS _h,
-                    row_number() OVER (PARTITION BY lang
-                        ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS
-                        VARCHAR)), 1, 8)) AS BIGINT), doc_id) AS rk
-                FROM documents
-            )
-            SELECT lang, doc_id, CAST(rk AS INTEGER) AS sample_rank
-            FROM ranked WHERE rk <= 50 ORDER BY lang, sample_rank
-        """,
-        "rolling_indicators": f"""
-            WITH trades AS ({TRADES_CTE}),
-            valid AS (SELECT * FROM trades WHERE {_VALID_WHERE}),
-            {_ROLLING_SQL_BODY}
-            SELECT trade_id, symbol, "timestamp",
-                   round(sma, 6) AS sma, round(rsi, 6) AS rsi,
-                   round(vwap, 6) AS vwap
-            FROM roll ORDER BY trade_id
-        """,
-        "asof_enrich": f"""
-            WITH trades AS ({TRADES_CTE}),
-            valid AS (SELECT * FROM trades WHERE {_VALID_WHERE}),
-            {_ROLLING_SQL_BODY},
-            log AS (
-                SELECT symbol, "timestamp" AS computed_at, sma, rsi, vwap
-                FROM roll WHERE trade_id % 20 = 0
-            )
-            SELECT t.trade_id, t.symbol, t."timestamp",
-                   round(l.sma, 6) AS asof_sma,
-                   round(l.rsi, 6) AS asof_rsi,
-                   round(l.vwap, 6) AS asof_vwap
-            FROM valid t
-            ASOF LEFT JOIN log l
-              ON t.symbol = l.symbol AND t."timestamp" >= l.computed_at
-            ORDER BY t.trade_id
-        """,
-        "events_tumbling": """
-            SELECT epoch_ns(ts) - epoch_ns(ts) % 86400000000000 AS day_start_ns,
-                   event_type, count(*) AS n_events,
-                   round(sum(value), 4) AS sum_value,
-                   round(avg(value), 6) AS avg_value
-            FROM events GROUP BY 1, 2 ORDER BY day_start_ns, event_type
-        """,
-        # interval-membership (band) join: broadcast nested-loop on Spark,
-        # plain theta join for the oracle
-        "range_join_bands": """
-            WITH bands(band, lo, hi) AS (VALUES
-                ('P0_20K', 0.0, 20000.0),
-                ('P20_40K', 20000.0, 40000.0),
-                ('P40_60K', 40000.0, 60000.0),
-                ('P60_80K', 60000.0, 80000.0),
-                ('P80K_UP', 80000.0, 1e18))
-            SELECT band, count(*) AS n_items,
-                   round(sum(l_extendedprice), 2) AS total_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem JOIN bands
-              ON l_extendedprice >= lo AND l_extendedprice < hi
-            GROUP BY band ORDER BY band
-        """,
-        "sessionization": """
-            WITH chg AS (
-                SELECT user_id, event_id, epoch_ns(ts) AS tns,
-                       epoch_ns(ts) - lag(epoch_ns(ts)) OVER
-                           (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-                FROM events
-            ),
-            sess AS (
-                SELECT user_id, tns,
-                    sum(CASE WHEN gap IS NULL OR gap > 1800000000000
-                             THEN 1 ELSE 0 END) OVER
-                        (PARTITION BY user_id ORDER BY tns, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS session_id
-                FROM chg
-            ),
-            per_session AS (
-                SELECT user_id, session_id, count(*) AS n_events,
-                       (max(tns) - min(tns)) / 1000000000 AS dur_s
-                FROM sess GROUP BY 1, 2
-            )
-            SELECT user_id, count(*) AS n_sessions,
-                   CAST(sum(n_events) AS BIGINT) AS n_events,
-                   round(avg(dur_s), 6) AS avg_session_s,
-                   round(max(dur_s), 6) AS max_session_s
-            FROM per_session GROUP BY user_id ORDER BY user_id
-        """,
-        # streaming session_window final state == batch islands
-        "streaming_sessions": """
-            WITH chg AS (
-                SELECT user_id, event_id, epoch_ns(ts) AS tns,
-                       epoch_ns(ts) - lag(epoch_ns(ts)) OVER
-                           (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-                FROM events
-            ),
-            sess AS (
-                SELECT user_id, tns,
-                    sum(CASE WHEN gap IS NULL OR gap > 1800000000000
-                             THEN 1 ELSE 0 END) OVER
-                        (PARTITION BY user_id ORDER BY tns, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS session_id
-                FROM chg
-            ),
-            per_session AS (
-                SELECT user_id, session_id, count(*) AS n_events,
-                       (max(tns) - min(tns)) / 1000000000 AS dur_s
-                FROM sess GROUP BY 1, 2
-            )
-            SELECT user_id, count(*) AS n_sessions,
-                   CAST(sum(n_events) AS BIGINT) AS n_events,
-                   round(avg(dur_s), 6) AS avg_session_s,
-                   round(max(dur_s), 6) AS max_session_s
-            FROM per_session GROUP BY user_id ORDER BY user_id
-        """,
-        "rollup_lineitem": """
-            SELECT l_returnflag, l_linestatus, count(*) AS n,
-                   round(sum(l_quantity), 4) AS sum_qty
-            FROM lineitem
-            GROUP BY ROLLUP (l_returnflag, l_linestatus)
-            ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-        """,
-        "pivot_status": """
-            SELECT l_returnflag,
-                   round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 4)
-                       AS qty_open,
-                   round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 4)
-                       AS qty_filled
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        "set_ops": """
-            WITH c94 AS (
-                SELECT DISTINCT o_custkey FROM orders
-                WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-                  AND o_orderdate < TIMESTAMP '1997-01-01'
-            ),
-            c95 AS (
-                SELECT DISTINCT o_custkey FROM orders
-                WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-                  AND o_orderdate < TIMESTAMP '1998-01-01'
-            )
-            SELECT o_custkey, 'both' AS cohort
-            FROM (SELECT o_custkey FROM c94 INTERSECT SELECT o_custkey FROM c95)
-            UNION ALL
-            SELECT o_custkey, 'only_1996'
-            FROM (SELECT o_custkey FROM c94 EXCEPT SELECT o_custkey FROM c95)
-            UNION ALL
-            SELECT o_custkey, 'only_1997'
-            FROM (SELECT o_custkey FROM c95 EXCEPT SELECT o_custkey FROM c94)
-            ORDER BY cohort, o_custkey
-        """,
-        "percentiles": """
-            SELECT l_returnflag,
-                   round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
-                   round(quantile_cont(l_extendedprice, 0.9), 4) AS p90_price,
-                   round(quantile_cont(l_extendedprice, 0.99), 4) AS p99_price,
-                   round(stddev_samp(l_extendedprice), 4) AS sd_price
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        "json_props": """
-            SELECT event_type, count(*) AS n,
-                   min(CAST(json_extract_string(props, '$.k') AS INTEGER))
-                       AS min_k,
-                   max(CAST(json_extract_string(props, '$.k') AS INTEGER))
-                       AS max_k,
-                   round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)),
-                         6) AS avg_k,
-                   count(DISTINCT CAST(json_extract_string(props, '$.k')
-                       AS INTEGER)) AS distinct_k
-            FROM events GROUP BY event_type ORDER BY event_type
-        """,
-        # approx_aggs: the sketch values themselves are implementation-
-        # defined, so the query exposes exact values + in-bound booleans and
-        # the oracle states the booleans as TRUE — hash-checks the bound.
-        "approx_aggs": """
-            SELECT count(DISTINCT l_partkey) AS exact_parts,
-                   TRUE AS parts_within_3pct,
-                   round(quantile_cont(l_extendedprice, 0.5), 4) AS exact_p50,
-                   TRUE AS p50_within_1pct
-            FROM lineitem
-        """,
-        "merge_upsert": f"""
-            WITH trades AS ({TRADES_CTE}),
-            source AS (
-                SELECT trade_id, symbol, round(price * 1.1, 6) AS price, volume
-                FROM trades WHERE trade_id % 7 = 0
-            )
-            SELECT trade_id, symbol, round(price, 6) AS price, volume
-            FROM trades WHERE trade_id NOT IN (SELECT trade_id FROM source)
-            UNION ALL
-            SELECT trade_id, symbol, price, volume FROM source
-            ORDER BY trade_id
-        """,
-        "scd2_customers": """
-            WITH dim AS (
-                SELECT c_custkey AS k, round(c_acctbal, 6) AS acctbal,
-                       CAST(0 AS BIGINT) AS valid_from,
-                       CAST(NULL AS BIGINT) AS valid_to
-                FROM customer
-            ),
-            changes AS (
-                SELECT c_custkey AS k, round(c_acctbal + 100, 6) AS acctbal
-                FROM customer WHERE c_custkey % 10 = 0
-            ),
-            changed_keys AS (
-                SELECT d.k FROM dim d JOIN changes c ON d.k = c.k
-                WHERE d.valid_to IS NULL
-                  AND d.acctbal IS DISTINCT FROM c.acctbal
-            )
-            SELECT d.k, d.acctbal, d.valid_from,
-                   CAST(1700000000000000000 AS BIGINT) AS valid_to
-            FROM dim d JOIN changed_keys ck ON d.k = ck.k
-            WHERE d.valid_to IS NULL
-            UNION ALL
-            SELECT d.k, d.acctbal, d.valid_from, d.valid_to
-            FROM dim d WHERE d.valid_to IS NULL
-              AND d.k NOT IN (SELECT k FROM changed_keys)
-            UNION ALL
-            SELECT c.k, c.acctbal,
-                   CAST(1700000000000000000 AS BIGINT) AS valid_from,
-                   CAST(NULL AS BIGINT) AS valid_to
-            FROM changes c JOIN changed_keys ck ON c.k = ck.k
-            ORDER BY k, valid_from
-        """,
-        "scalar_functions": """
-            SELECT l_orderkey, l_linenumber,
-                   concat_ws('-', l_returnflag, l_linestatus) AS flag_status,
-                   upper(l_returnflag) AS flag_upper,
-                   substr(CAST(l_shipdate AS VARCHAR), 1, 10) AS ship_day,
-                   strftime(l_shipdate, '%Y%m%d') AS ship_compact,
-                   CAST(year(l_shipdate) AS INTEGER) AS ship_year,
-                   round(abs(l_discount - 0.05), 6) AS disc_dev,
-                   greatest(l_quantity, 25.0) AS qty_floor25,
-                   CAST(floor(l_extendedprice) AS BIGINT) AS price_floor,
-                   lpad(CAST(l_orderkey AS VARCHAR), 10, '0') AS okey_padded,
-                   translate(l_returnflag, 'RNA', 'XYZ') AS flag_translated,
-                   CASE WHEN l_tax > 0.04 THEN 'high' ELSE 'low' END AS tax_band
-            FROM lineitem ORDER BY l_orderkey, l_linenumber
-        """,
-        "window_analytics": """
-            WITH w AS (
-                SELECT user_id, event_id, round(value, 4) AS value,
-                       rank() OVER win AS rnk,
-                       dense_rank() OVER win AS dense_rnk,
-                       ntile(4) OVER win AS quartile,
-                       round(lead(value, 1) OVER win, 4) AS next_value,
-                       round(lag(value, 1) OVER win, 4) AS prev_value,
-                       round(value / sum(value) OVER
-                           (PARTITION BY user_id), 6) AS share_of_user
-                FROM events WHERE event_type = 'purchase'
-                WINDOW win AS (PARTITION BY user_id
-                               ORDER BY value DESC, event_id)
-            )
-            SELECT user_id, event_id, value,
-                   CAST(rnk AS INTEGER) AS rnk,
-                   CAST(dense_rnk AS INTEGER) AS dense_rnk,
-                   CAST(quartile AS INTEGER) AS quartile,
-                   next_value, prev_value, share_of_user
-            FROM w WHERE rnk <= 3 ORDER BY user_id, rnk, event_id
-        """,
-        # dow from timezone-free epoch arithmetic (1970-01-01 = Thursday,
-        # Sunday = 0) because Spark sees ts as raw ns while DuckDB sees µs.
-        "cube_events": """
-            WITH ev AS (
-                SELECT event_type,
-                       CAST((epoch_ns(ts) // 86400000000000 + 4) % 7
-                            AS INTEGER) AS dow,
-                       value
-                FROM events
-            )
-            SELECT event_type, dow, count(*) AS n,
-                   round(sum(value), 4) AS sum_value
-            FROM ev
-            GROUP BY CUBE (event_type, dow)
-            ORDER BY event_type ASC NULLS FIRST, dow ASC NULLS FIRST
-        """,
-        "funnel": """
-            WITH per_user AS (
-                SELECT user_id,
-                    min(CASE WHEN event_type = 'view'
-                             THEN epoch_ns(ts) END) AS t_view,
-                    min(CASE WHEN event_type = 'click'
-                             THEN epoch_ns(ts) END) AS t_click,
-                    min(CASE WHEN event_type = 'purchase'
-                             THEN epoch_ns(ts) END) AS t_purchase
-                FROM events GROUP BY user_id
-            )
-            SELECT count(*) AS n_users,
-                CAST(sum(CASE WHEN t_view IS NOT NULL
-                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_view,
-                CAST(sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
-                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_click,
-                CAST(sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
-                               AND t_purchase > t_click
-                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_purchase
-            FROM per_user
-        """,
-        "retention_cohorts": """
-            WITH wk AS (
-                SELECT user_id,
-                       epoch_ns(ts) - epoch_ns(ts) % 604800000000000
-                           AS week_ns
-                FROM events
-            ),
-            cohort AS (
-                SELECT user_id, min(week_ns) AS cohort_ns FROM wk GROUP BY 1
-            ),
-            active AS (SELECT DISTINCT user_id, week_ns FROM wk)
-            SELECT cohort_ns,
-                   CAST((week_ns - cohort_ns) // 604800000000000 AS INTEGER)
-                       AS week_offset,
-                   count(DISTINCT a.user_id) AS active_users
-            FROM active a JOIN cohort c USING (user_id)
-            GROUP BY 1, 2 ORDER BY cohort_ns, week_offset
-        """,
-        "grouping_sets": """
-            SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue
-            FROM lineitem
-            GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                    (l_returnflag), ())
-            ORDER BY l_returnflag ASC NULLS FIRST,
-                     l_linestatus ASC NULLS FIRST
-        """,
-        # the partitioned layout must not change the answer: oracle is the
-        # plain filtered aggregate over the flat table
-        "partition_pruning": """
-            SELECT l_linestatus, count(*) AS n_items,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(avg(l_extendedprice), 4) AS avg_price
-            FROM lineitem WHERE l_returnflag = 'R'
-            GROUP BY l_linestatus ORDER BY l_linestatus
-        """,
-        # the pandas UDAF must equal the native expression exactly
-        "udaf_vwap": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol,
-                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
-                       AS vwap,
-                   count(*) AS n_trades
-            FROM trades WHERE {_VALID_WHERE}
-            GROUP BY symbol ORDER BY symbol
-        """,
-        "variant_props": """
-            WITH kv AS (
-                SELECT CAST(floor(CAST(json_extract_string(props, '$.k')
-                                       AS INTEGER) / 10.0) * 10 AS INTEGER)
-                           AS k_decade,
-                       value
-                FROM events
-            )
-            SELECT k_decade, count(*) AS n, round(sum(value), 4) AS sum_value
-            FROM kv GROUP BY k_decade ORDER BY k_decade
-        """,
-        # ORC write+read must preserve every value vs the flat parquet
-        "orc_roundtrip": """
-            SELECT o_orderstatus, count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS total_price,
-                   min(o_orderdate) AS first_date,
-                   max(o_orderdate) AS last_date
-            FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
-        """,
-        "rolling_time_window": """
-            WITH ev AS (
-                SELECT event_id, user_id, value,
-                       epoch_ns(ts) - epoch_ns(ts) % 1000 AS ts_ns
-                FROM events
-            )
-            SELECT event_id, user_id,
-                   count(*) OVER w AS n_1h,
-                   round(sum(value) OVER w, 4) AS sum_1h
-            FROM ev
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns
-                         RANGE BETWEEN 3600000000000 PRECEDING
-                         AND CURRENT ROW)
-            ORDER BY event_id
-        """,
-        # dynamic overwrite doubled exactly the min(day)+7 partition
-        "partition_backfill": """
-            WITH ev AS (
-                SELECT (epoch_us(ts) * 1000) // 86400000000000 AS day, value
-                FROM events
-            ),
-            m AS (SELECT min(day) + 7 AS bday FROM ev)
-            SELECT day, count(*) AS n_events,
-                   round(sum(CASE WHEN day = (SELECT bday FROM m)
-                             THEN value * 2 ELSE value END), 2)
-                       AS total_value
-            FROM ev GROUP BY day ORDER BY day
-        """,
-        # three formats in one plan == the plain three-table join
-        "federated_join": """
-            SELECT CAST(s_nationkey AS INTEGER) AS s_nationkey,
-                   count(*) AS n_items,
-                   round(sum(l_extendedprice), 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            WHERE o_orderstatus = 'F'
-            GROUP BY 1 ORDER BY 1
-        """,
-        # JSON-lines write+read must preserve every value
-        "jsonl_roundtrip": """
-            SELECT CAST(s_nationkey AS INTEGER) AS s_nationkey,
-                   count(*) AS n_suppliers,
-                   round(sum(s_acctbal), 2) AS total_acctbal,
-                   min(s_name) AS first_name
-            FROM supplier GROUP BY 1 ORDER BY 1
-        """,
-        # v1 generation (even keys) has no status column -> MISSING
-        "schema_evolution": """
-            SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'MISSING'
-                        ELSE o_orderstatus END AS status,
-                   count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS total_price
-            FROM orders GROUP BY 1 ORDER BY 1
-        """,
-        # anti join == NOT IN the surviving parent keys
-        "fk_orphans": """
-            SELECT l_returnflag, count(*) AS n_orphan_rows,
-                   count(DISTINCT l_orderkey) AS n_orphan_orders,
-                   round(sum(l_extendedprice), 2) AS orphan_value
-            FROM lineitem
-            WHERE l_orderkey NOT IN (
-                SELECT o_orderkey FROM orders WHERE o_orderkey % 1000 <> 0
-            )
-            GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        # compaction must preserve every row/byte: plain-scan equivalent
-        "compaction_roundtrip": """
-            SELECT lang, count(*) AS n_docs,
-                   count(DISTINCT doc_id) AS n_ids,
-                   CAST(sum(length(text)) AS BIGINT) AS total_chars
-            FROM documents GROUP BY lang ORDER BY lang
-        """,
-        # melt re-expressed as UNION ALL, one leg per metric column
-        "column_profile": """
-            WITH melted AS (
-                SELECT 'l_quantity' AS metric, l_quantity AS value FROM lineitem
-                UNION ALL
-                SELECT 'l_extendedprice', l_extendedprice FROM lineitem
-                UNION ALL
-                SELECT 'l_discount', l_discount FROM lineitem
-                UNION ALL
-                SELECT 'l_tax', l_tax FROM lineitem
-            )
-            SELECT metric, count(*) AS n_rows,
-                   CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_nulls,
-                   count(DISTINCT value) AS n_distinct,
-                   round(min(value), 4) AS min_value,
-                   round(max(value), 4) AS max_value,
-                   round(avg(value), 4) AS mean_value
-            FROM melted GROUP BY metric ORDER BY metric
-        """,
-        # same fixed 5000-wide buckets, top bucket clamped at 21
-        "price_histogram": """
-            SELECT CAST(least(floor(l_extendedprice / 5000), 21) AS INTEGER)
-                       AS bucket,
-                   count(*) AS n_items,
-                   round(sum(l_extendedprice), 2) AS bucket_value
-            FROM lineitem GROUP BY 1 ORDER BY 1
-        """,
-        # partial-merge refresh must equal the full recompute; exact
-        # integer-cent partials (repo fixed-point convention — a double
-        # sum through a two-level merge is association-dependent and ~6%
-        # of custkeys sit exactly on a round(avg,4) half-boundary), with
-        # derived doubles from one int->double cast + one division so
-        # both engines produce bit-identical values
-        "incremental_agg": """
-            WITH c AS (
-                SELECT o_custkey,
-                       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-                           AS cents
-                FROM orders
-            ), m AS (
-                SELECT o_custkey,
-                       CAST(count(*) AS BIGINT) AS n_orders,
-                       CAST(sum(cents) AS BIGINT) AS total_cents,
-                       max(cents) AS max_cents
-                FROM c GROUP BY o_custkey
-            )
-            SELECT o_custkey, n_orders,
-                   CAST(total_cents AS DOUBLE) / 100.0 AS total_spend,
-                   CAST(max_cents AS DOUBLE) / 100.0 AS max_order,
-                   CAST((200 * total_cents + n_orders) // (2 * n_orders)
-                        AS DOUBLE) / 10000.0 AS avg_order
-            FROM m ORDER BY o_custkey
-        """,
-        # z-ordered layout must not change any value: plain-scan equivalent
-        "zorder_skipping": """
-            SELECT l_returnflag, count(*) AS n_rows,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS revenue
-            FROM lineitem
-            WHERE l_partkey BETWEEN 100 AND 299
-              AND l_suppkey BETWEEN 10 AND 39
-            GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        # custom Python DataSource vs bit-identical DuckDB regeneration
-        "python_datasource": f"""
-            WITH gen AS ({_tradegen_cte(_tradegen_n)})
-            SELECT symbol, count(*) AS n_trades,
-                   CAST(sum(volume) AS BIGINT) AS total_volume,
-                   round(avg(price), 4) AS avg_price,
-                   min(ts_ns) AS first_ts, max(ts_ns) AS last_ts
-            FROM gen GROUP BY symbol ORDER BY symbol
-        """,
-        # XML write+read must preserve every value
-        "xml_roundtrip": """
-            SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
-                   count(*) AS n_nations,
-                   min(n_name) AS first_name, max(n_name) AS last_name
-            FROM nation GROUP BY 1 ORDER BY 1
-        """,
-        # same recursion, DuckDB dialect (// = integer division)
-        "recursive_rollup": """
-            WITH RECURSIVE anc(custkey, ancestor, depth) AS (
-                SELECT c_custkey, c_custkey // 10, 1
-                FROM customer WHERE c_custkey >= 10
-                UNION ALL
-                SELECT custkey, ancestor // 10, depth + 1
-                FROM anc WHERE ancestor >= 10
-            )
-            SELECT a.ancestor, count(*) AS n_descendants,
-                   CAST(max(a.depth) AS INTEGER) AS max_depth,
-                   round(sum(c.c_acctbal), 2) AS total_balance
-            FROM anc a JOIN customer c ON a.custkey = c.c_custkey
-            GROUP BY a.ancestor ORDER BY a.ancestor
-        """,
-        # the UDTF's imperative expansion re-derived relationally
-        "udtf_doc_terms": """
-            WITH toks AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                FROM documents
-            ),
-            counts AS (
-                SELECT doc_id, term, count(*) AS cnt
-                FROM toks GROUP BY doc_id, term
-            ),
-            ranked AS (
-                SELECT doc_id, term, cnt,
-                       row_number() OVER (PARTITION BY doc_id
-                                          ORDER BY cnt DESC, term)
-                           AS term_rank
-                FROM counts
-            )
-            SELECT doc_id, term, cnt, term_rank FROM ranked
-            WHERE term_rank <= 3 ORDER BY doc_id, term_rank
-        """,
-        # one BPE-trainer iteration: adjacent-symbol pair counts weighted
-        # by word frequency, top-20 merge candidates (ties broken by pair)
-        "bpe_merge_candidates": f"""
-            WITH words AS (
-                SELECT w AS word, count(*) AS cnt
-                FROM (SELECT unnest({_tokens_sql("text")}) AS w
-                      FROM documents)
-                GROUP BY w
-            ),
-            pos AS (
-                SELECT word, cnt,
-                       unnest(range(1, length(word))) AS i
-                FROM words WHERE length(word) >= 2
-            )
-            SELECT substr(word, CAST(i AS INTEGER), 1) AS left_sym,
-                   substr(word, CAST(i AS INTEGER) + 1, 1) AS right_sym,
-                   CAST(sum(cnt) AS BIGINT) AS pair_count
-            FROM pos GROUP BY 1, 2
-            ORDER BY pair_count DESC, left_sym, right_sym LIMIT 20
-        """,
-        # sentence-level exact dedup: every sentence seen >= 2 times,
-        # keyed by the normalized-content fingerprint; boilerplate is
-        # injected deterministically (inject→detect, see q_sentence_dedup)
-        "sentence_dedup": f"""
-            WITH injected AS (
-                SELECT doc_id,
-                       text || CASE
-                           WHEN doc_id % 7 = 0
-                               THEN '{training_data.BOILERPLATE_NEWSLETTER}'
-                           WHEN doc_id % 11 = 0
-                               THEN '{training_data.BOILERPLATE_COPYRIGHT}'
-                           ELSE '' END AS text
-                FROM documents
-            ),
-            sents AS (
-                SELECT doc_id, trim(s) AS sent
-                FROM (SELECT doc_id,
-                             unnest(regexp_split_to_array(text, '[.!?]+'))
-                                 AS s
-                      FROM injected)
-                WHERE length(trim(s)) >= 20
-            )
-            SELECT {_text.fingerprint_sql("sent")} AS fp,
-                   count(*) AS n_occurrences,
-                   count(DISTINCT doc_id) AS n_docs,
-                   min(sent) AS sample_sentence
-            FROM sents GROUP BY 1
-            HAVING count(*) >= 2
-            ORDER BY n_occurrences DESC, fp LIMIT 50
-        """,
-        # fixed linear model + RATIONAL sigmoid z/(1+|z|) — deliberately
-        # no exp/ln, so both engines agree bit-for-bit (see the query doc)
-        "quality_classifier": f"""
-            WITH analyzed AS ({_text.analyze_documents_sql()}),
-            scored AS (
-                SELECT doc_id,
-                       (-1.5 + 4.0 * stop_ratio - 6.0 * punct_ratio
-                        + 0.01 * LEAST(n_tokens, 200)) AS z
-                FROM analyzed
-            )
-            SELECT doc_id,
-                   round(0.5 + 0.5 * z / (1.0 + abs(z)), 6) AS quality_prob,
-                   (0.5 + 0.5 * z / (1.0 + abs(z))) >= 0.5 AS keep
-            FROM scored ORDER BY doc_id
-        """,
-        # delta-shard near-dedup over the LSH pair set: the ~10% "incoming
-        # shard" is h32('shard:'||doc_id)%10 == 9 on both engines
-        "incremental_dedup": f"""
-            WITH lsh AS ({_dedup.minhash_lsh_pairs_sql()}),
-            flagged AS (
-                SELECT doc_a, doc_b,
-                       ({_h32_sql("'shard:' || CAST(doc_a AS VARCHAR)")}
-                            % 10 = 9) AS new_a,
-                       ({_h32_sql("'shard:' || CAST(doc_b AS VARCHAR)")}
-                            % 10 = 9) AS new_b
-                FROM lsh
-            ),
-            dup_corpus AS (
-                SELECT DISTINCT doc_id FROM (
-                    SELECT doc_a AS doc_id FROM flagged
-                    WHERE new_a AND NOT new_b
-                    UNION ALL
-                    SELECT doc_b FROM flagged WHERE new_b AND NOT new_a
-                )
-            ),
-            dup_shard AS (
-                SELECT DISTINCT doc_b AS doc_id FROM flagged
-                WHERE new_a AND new_b
-                  AND doc_b NOT IN (SELECT doc_id FROM dup_corpus)
-            ),
-            new_docs AS (
-                SELECT doc_id, source FROM documents
-                WHERE {_h32_sql("'shard:' || CAST(doc_id AS VARCHAR)")}
-                      % 10 = 9
-            ),
-            marked AS (
-                SELECT source,
-                       CASE WHEN doc_id IN (SELECT doc_id FROM dup_corpus)
-                            THEN 1 ELSE 0 END AS c_dup,
-                       CASE WHEN doc_id IN (SELECT doc_id FROM dup_shard)
-                            THEN 1 ELSE 0 END AS s_dup
-                FROM new_docs
-            )
-            SELECT source, count(*) AS n_incoming,
-                   CAST(sum(c_dup) AS BIGINT) AS n_dup_corpus,
-                   CAST(sum(s_dup) AS BIGINT) AS n_dup_shard,
-                   CAST(count(*) - sum(c_dup) - sum(s_dup) AS BIGINT)
-                       AS n_survivors
-            FROM marked GROUP BY source ORDER BY source
-        """,
-        # which-crawls-overlap matrix over the LSH near-dup pairs
-        "source_overlap": f"""
-            WITH lsh AS ({_dedup.minhash_lsh_pairs_sql()}),
-            attached AS (
-                SELECT LEAST(sa.source, sb.source) AS source_a,
-                       GREATEST(sa.source, sb.source) AS source_b,
-                       l.jaccard
-                FROM lsh l
-                JOIN documents sa ON sa.doc_id = l.doc_a
-                JOIN documents sb ON sb.doc_id = l.doc_b
-            )
-            SELECT source_a, source_b, count(*) AS n_dup_pairs,
-                   round(avg(jaccard), 6) AS avg_jaccard
-            FROM attached GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        # salting must not change the answer: oracle is the PLAIN join
-        "skew_salted_join": """
-            WITH dim AS (
-                SELECT event_type, avg(value) AS type_avg
-                FROM events GROUP BY event_type
-            )
-            SELECT e.event_type, count(*) AS n,
-                   CAST(sum(CASE WHEN e.value > d.type_avg THEN 1 ELSE 0 END)
-                        AS BIGINT) AS above_avg,
-                   round(max(d.type_avg), 6) AS type_avg
-            FROM events e JOIN dim d ON e.event_type = d.event_type
-            GROUP BY e.event_type ORDER BY e.event_type
-        """,
-        # real streaming execution, batch-equivalent answer by construction
-        "streaming_counts": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol, count(*) AS n_ticks,
-                   CAST(sum(volume) AS BIGINT) AS total_volume
-            FROM trades WHERE price > 0 AND volume > 0
-            GROUP BY symbol ORDER BY symbol
-        """,
-        "streaming_anomaly": f"""
-            WITH trades AS ({TRADES_CTE}),
-            hot AS (SELECT * FROM trades WHERE price > 0 AND volume > 0),
-            stats AS (
-                SELECT symbol, avg(price) AS mu, stddev_samp(price) AS sd
-                FROM hot GROUP BY symbol
-            ),
-            z AS (
-                SELECT h.symbol,
-                       CASE WHEN s.sd > 0
-                            THEN abs((h.price - s.mu) / s.sd)
-                            ELSE 0.0 END AS abs_z
-                FROM hot h JOIN stats s USING (symbol)
-            )
-            SELECT symbol, count(*) AS n_ticks,
-                   CAST(sum(CASE WHEN abs_z > 2.0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_anomalies,
-                   round(max(abs_z), 4) AS max_abs_z
-            FROM z GROUP BY symbol ORDER BY symbol
-        """,
-        # windowed streaming on bounded replay == batch 1-minute bucketing
-        "streaming_windowed": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT "timestamp" - "timestamp" % 60000000000 AS window_start_ns,
-                   symbol, count(*) AS n_ticks,
-                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
-                       AS vwap,
-                   round(avg(price), 6) AS avg_price
-            FROM trades WHERE price > 0 AND volume > 0
-            GROUP BY 1, 2 ORDER BY window_start_ns, symbol
-        """,
-        # every 50th frame truncated -> unparseable; volume only from the
-        # clean side (corrupt rows carry no fields)
-        "streaming_deadletter": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT (trade_id % 50 = 0) AS parse_error,
-                   count(*) AS n_frames,
-                   CAST(sum(CASE WHEN trade_id % 50 <> 0 THEN volume END)
-                        AS BIGINT) AS total_volume
-            FROM trades GROUP BY 1 ORDER BY 1
-        """,
-        # socket ingest carries the identical corruption contract, so the
-        # network path proves out against the same batch oracle
-        "streaming_socket": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT (trade_id % 50 = 0) AS parse_error,
-                   count(*) AS n_frames,
-                   CAST(sum(CASE WHEN trade_id % 50 <> 0 THEN volume END)
-                        AS BIGINT) AS total_volume
-            FROM trades GROUP BY 1 ORDER BY 1
-        """,
-        # streaming windowed OHLC == batch resample on bounded replay;
-        # open/close are first/last by (timestamp, trade_id) within the bar
-        "streaming_ohlc": f"""
-            WITH trades AS ({TRADES_CTE}),
-            r AS (
-                SELECT symbol,
-                       "timestamp" - "timestamp" % 60000000000
-                           AS window_start_ns,
-                       price, volume,
-                       row_number() OVER (
-                           PARTITION BY symbol,
-                               "timestamp" - "timestamp" % 60000000000
-                           ORDER BY "timestamp", trade_id) AS rn_a,
-                       row_number() OVER (
-                           PARTITION BY symbol,
-                               "timestamp" - "timestamp" % 60000000000
-                           ORDER BY "timestamp" DESC, trade_id DESC) AS rn_d
-                FROM trades WHERE price > 0 AND volume > 0
-            )
-            SELECT symbol, window_start_ns,
-                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
-                   round(max(price), 4) AS high,
-                   round(min(price), 4) AS low,
-                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
-                   CAST(sum(volume) AS BIGINT) AS bar_volume,
-                   count(*) AS n_trades
-            FROM r GROUP BY symbol, window_start_ns
-            ORDER BY symbol, window_start_ns
-        """,
-        # doubled input through streaming dropDuplicates == plain counts
-        "streaming_dedup": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT symbol, count(DISTINCT trade_id) AS n_trades
-            FROM trades GROUP BY symbol ORDER BY symbol
-        """,
-        # stream-stream interval join on bounded replay == batch range join;
-        # event times are µs-truncated ns, so the 1h bound is 3600e9 ns
-        # avg from an exact e6 fixed-point per-pair sum (order-independent
-        # — mirrors the foreachBatch additive accumulator)
-        "streaming_join": f"""
-            WITH trades AS ({TRADES_CTE})
-            SELECT b.symbol AS symbol, count(*) AS n_pairs,
-                   round(sum(CAST(floor((s.price - b.price) * 1e6
-                                  + CAST(0.5 AS DOUBLE)) AS BIGINT)
-                             )::DOUBLE / count(*) / 1e6, 6) AS avg_spread
-            FROM trades b
-            JOIN trades s
-              ON b.symbol = s.symbol AND b.side = 'B' AND s.side = 'S'
-             AND s."timestamp" >= b."timestamp"
-             AND s."timestamp" <= b."timestamp" + 3600000000000
-            GROUP BY b.symbol ORDER BY symbol
-        """,
-        # applyInPandasWithState final state on bounded replay == the batch
-        # last-N snapshot (the same window math as the `indicators` oracle,
-        # plus the running row count)
-        "streaming_stateful": f"""
-            WITH trades AS ({TRADES_CTE}),
-            valid AS (SELECT * FROM trades WHERE {_VALID_WHERE}),
-            ann AS (
-                SELECT symbol, price, volume,
-                    row_number() OVER (PARTITION BY symbol
-                                       ORDER BY "timestamp" DESC, trade_id DESC) AS rn_desc,
-                    count(*) OVER (PARTITION BY symbol) AS n,
-                    price - lag(price) OVER (PARTITION BY symbol
-                                             ORDER BY "timestamp", trade_id) AS change
-                FROM valid
-            ),
-            agg AS (
-                SELECT symbol, max(n) AS n,
-                    avg(CASE WHEN rn_desc <= least(5, n) THEN price END) AS sma_raw,
-                    sum(CASE WHEN rn_desc <= least(5, n - 1) AND change > 0
-                             THEN change ELSE 0 END) AS gain_sum,
-                    sum(CASE WHEN rn_desc <= least(5, n - 1) AND change < 0
-                             THEN -change ELSE 0 END) AS loss_sum,
-                    sum(price * volume) AS pv,
-                    sum(CAST(volume AS DOUBLE)) AS v
-                FROM ann GROUP BY symbol
-            )
-            ,
-            wchg AS (
-                SELECT symbol,
-                    price - lag(price) OVER (PARTITION BY symbol
-                        ORDER BY "timestamp", trade_id) AS change,
-                    row_number() OVER (PARTITION BY symbol
-                        ORDER BY "timestamp", trade_id) - 1 AS j,
-                    count(*) OVER (PARTITION BY symbol) - 1 AS m
-                FROM valid
-            ),
-            wilder AS (
-                SELECT symbol, max(m) AS m,
-                    sum((CASE WHEN m <= 14 THEN 1.0 / m
-                              WHEN j <= 14
-                                  THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
-                              ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
-                         END) * greatest(change, 0.0)) AS ag,
-                    sum((CASE WHEN m <= 14 THEN 1.0 / m
-                              WHEN j <= 14
-                                  THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
-                              ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
-                         END) * greatest(-change, 0.0)) AS al
-                FROM wchg WHERE change IS NOT NULL GROUP BY symbol
-            )
-            SELECT agg.symbol,
-                n AS n_trades,
-                round(sma_raw, 6) AS sma,
-                round(CASE WHEN n < 2 OR least(5, n) <= 1 THEN 50.0
-                           WHEN loss_sum = 0.0 THEN 100.0
-                           ELSE 100.0 - 100.0 / (1.0 +
-                                (gain_sum / CAST(least(5, n - 1) AS DOUBLE))
-                              / (loss_sum / CAST(least(5, n - 1) AS DOUBLE)))
-                      END, 6) AS rsi,
-                round(CASE WHEN v = 0 THEN 0.0 ELSE pv / v END, 6) AS vwap,
-                CAST(least(5, n) AS INTEGER) AS period,
-                round(CASE WHEN w.m < 1 THEN 50.0
-                           WHEN w.al = 0.0 THEN 100.0
-                           ELSE 100.0 - 100.0 / (1.0 + w.ag / w.al)
-                      END, 4) AS rsi_wilder
-            FROM agg JOIN wilder w ON w.symbol = agg.symbol
-            ORDER BY agg.symbol
-        """,
-        # dual-sink landing: both JDBC tables must reproduce the plain
-        # per-symbol GROUP BY over valid trades (exactly-once, end-to-end).
-        "streaming_jdbc_sink": f"""
-            WITH trades AS ({TRADES_CTE}),
-            valid AS (SELECT * FROM trades WHERE {_VALID_WHERE})
-            SELECT symbol, count(*) AS n_trades,
-                   count(*) AS n_from_counts,
-                   CAST(sum(volume) AS BIGINT) AS total_volume
-            FROM valid GROUP BY symbol ORDER BY symbol
-        """,
-        # generator invariants: the random draws differ engine-to-engine by
-        # design; the invariant booleans are the deterministic contract.
-        "generator_invariants": """
-            SELECT CAST(10000 AS BIGINT) AS n,
-                   true AS price_bounded, true AS volume_bounded,
-                   true AS ts_gaps_in_range, true AS side_valid,
-                   true AS type_valid, true AS all_pass_validation
-        """,
-    }
-    # transformWithState backend computes the exact same snapshot as the
-    # applyInPandasWithState one — share the oracle verbatim (only when the
-    # query itself is registered, i.e. the gRPC runtime exists).
-    from marketstream_etl_spark.streaming.tws import HAS_TWS_RUNTIME
-
-    if HAS_TWS_RUNTIME:
-        sql["streaming_tws"] = sql["streaming_stateful"]
-    # the watermarked dedup variant has the identical exact-once contract
-    sql["streaming_dedup_watermarked"] = sql["streaming_dedup"]
-    # stream-static contamination must converge to the batch operator
-    sql["streaming_contamination"] = sql["contamination"]
-    # streaming twin shares the batch core (chi2_by_source), so the final
-    # replayed snapshot must equal the batch statistic exactly
-    sql["streaming_token_drift"] = sql["token_drift"]
-    # streaming twins drain their complete-mode histograms into the
-    # shared integer cores, so they reuse the batch oracles
-    sql["streaming_calibration"] = sql["calibration_ece"]
-    sql["streaming_roc"] = sql["roc_auc"]
-    sql["streaming_embedding_drift"] = sql["embedding_drift"]
-    sql["streaming_iv"] = sql["information_value"]
-    # the WS ingest shares the socket query's corruption contract exactly
-    sql["streaming_websocket"] = sql["streaming_socket"]
-    return sql
+    """Each query's DuckDB oracle SQL, building the deferred ones."""
+    oracles = {name: ORACLES[name] for name in queries()}
+    return {name: o() if callable(o) else o for name, o in oracles.items()}

@@ -31,6 +31,7 @@ from marketstream_etl_spark.functions.hashing import (
     tokens,
     tokens_sql,
 )
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.streaming.replay import drain_to_memory
 
 CMS_DEPTH = 4
@@ -234,6 +235,13 @@ def cms_heavy_hitters_sql(
                    AS within_bound
         FROM est ORDER BY exact_n DESC, tok
     """
+
+
+CMS_HEAVY_HITTERS_SQL = cms_heavy_hitters_sql()
+
+
+# final streamed sketch == batch sketch (algebraic merge), same oracle
+register("streaming_cms", streaming_cms_heavy_hitters, CMS_HEAVY_HITTERS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -496,6 +504,9 @@ def hll_cardinality_sql() -> str:
     """
 
 
+HLL_CARDINALITY_SQL = hll_cardinality_sql()
+
+
 # ---------------------------------------------------------------------------
 # Bloom-filter contamination probe (the membership sketch of the family)
 # ---------------------------------------------------------------------------
@@ -716,6 +727,9 @@ def streaming_hll_cardinality(spark, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     return _hll_report(regs, keyed)
+
+
+register("streaming_hll", streaming_hll_cardinality, HLL_CARDINALITY_SQL)
 
 
 def tokens_to_shingles_stream(text_col: F.Column) -> F.Column:
@@ -968,6 +982,9 @@ def hdr_quantiles_sql() -> str:
     """
 
 
+HDR_QUANTILES_SQL = hdr_quantiles_sql()
+
+
 def streaming_hdr_quantiles(spark, sf_dir: str) -> DataFrame:
     """The HDR grid as a STREAMING aggregate: bucket counts merge by
     cell-wise ADDITION (like the CMS), so groupBy(bid).count() runs
@@ -1004,6 +1021,9 @@ def streaming_hdr_quantiles(spark, sf_dir: str) -> DataFrame:
         counted_stream, "stream_hdr", sf_dir, "complete"
     ).localCheckpoint(eager=False)
     return _hdr_report(counted, _hdr_cents(load_table(spark, sf_dir, "lineitem")))
+
+
+register("streaming_hdr", streaming_hdr_quantiles, HDR_QUANTILES_SQL)
 
 
 def hdr_quantiles_grouped(lineitem: DataFrame) -> DataFrame:

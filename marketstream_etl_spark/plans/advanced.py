@@ -12,9 +12,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.operators import asof, patterns, sketch
 from marketstream_etl_spark.operators.indicators import rolling_indicators
 from marketstream_etl_spark.operators.validation import split_valid
-from marketstream_etl_spark.plans.trades_view import load_trades
+from marketstream_etl_spark.plans.trades_view import (
+    ROLLING_SQL_BODY,
+    TRADES_CTE,
+    VALID_WHERE,
+    load_trades,
+)
+from marketstream_etl_spark.registry import register
+from marketstream_etl_spark.sources.pyds import N_ROWS_DEFAULT, tradegen_oracle_cte
 from marketstream_etl_spark.sources.tables import load_table
 from marketstream_etl_spark.streaming.replay import drain_to_memory
 
@@ -43,6 +51,18 @@ def q_rolling_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ROLLING_INDICATORS_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            valid AS (SELECT * FROM trades WHERE {VALID_WHERE}),
+            {ROLLING_SQL_BODY}
+            SELECT trade_id, symbol, "timestamp",
+                   round(sma, 6) AS sma, round(rsi, 6) AS rsi,
+                   round(vwap, 6) AS vwap
+            FROM roll ORDER BY trade_id
+        """
+register("rolling_indicators", q_rolling_indicators, ROLLING_INDICATORS_SQL)
+
+
 def q_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each trade picks up the latest SAMPLED indicator
     (every-20th trade forms the indicator log) at or before its timestamp.
@@ -51,8 +71,6 @@ def q_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol, no range explosion (operators/asof.py).  Oracle: DuckDB's native
     ASOF JOIN over the identical log.
     """
-    from marketstream_etl_spark.operators.asof import asof_join_indicators
-
     valid, _ = split_valid(load_trades(spark, sf_dir, fan_out=True))
     log = (
         rolling_indicators(valid, period=5)
@@ -65,7 +83,7 @@ def q_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vwap",
         )
     )
-    out = asof_join_indicators(valid, log)
+    out = asof.asof_join_indicators(valid, log)
     return out.select(
         "trade_id",
         "symbol",
@@ -74,6 +92,26 @@ def q_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("asof_rsi", 6).alias("asof_rsi"),
         F.round("asof_vwap", 6).alias("asof_vwap"),
     )
+
+
+ASOF_ENRICH_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            valid AS (SELECT * FROM trades WHERE {VALID_WHERE}),
+            {ROLLING_SQL_BODY},
+            log AS (
+                SELECT symbol, "timestamp" AS computed_at, sma, rsi, vwap
+                FROM roll WHERE trade_id % 20 = 0
+            )
+            SELECT t.trade_id, t.symbol, t."timestamp",
+                   round(l.sma, 6) AS asof_sma,
+                   round(l.rsi, 6) AS asof_rsi,
+                   round(l.vwap, 6) AS asof_vwap
+            FROM valid t
+            ASOF LEFT JOIN log l
+              ON t.symbol = l.symbol AND t."timestamp" >= l.computed_at
+            ORDER BY t.trade_id
+        """
+register("asof_enrich", q_asof_enrich, ASOF_ENRICH_SQL)
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,6 +127,16 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("value"), 6).alias("avg_value"),
         )
     )
+
+
+EVENTS_TUMBLING_SQL = """
+            SELECT epoch_ns(ts) - epoch_ns(ts) % 86400000000000 AS day_start_ns,
+                   event_type, count(*) AS n_events,
+                   round(sum(value), 4) AS sum_value,
+                   round(avg(value), 6) AS avg_value
+            FROM events GROUP BY 1, 2 ORDER BY day_start_ns, event_type
+        """
+register("events_tumbling", q_events_tumbling, EVENTS_TUMBLING_SQL)
 
 
 def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,6 +170,36 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SESSIONIZATION_SQL = """
+            WITH chg AS (
+                SELECT user_id, event_id, epoch_ns(ts) AS tns,
+                       epoch_ns(ts) - lag(epoch_ns(ts)) OVER
+                           (PARTITION BY user_id ORDER BY ts, event_id) AS gap
+                FROM events
+            ),
+            sess AS (
+                SELECT user_id, tns,
+                    sum(CASE WHEN gap IS NULL OR gap > 1800000000000
+                             THEN 1 ELSE 0 END) OVER
+                        (PARTITION BY user_id ORDER BY tns, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                        AS session_id
+                FROM chg
+            ),
+            per_session AS (
+                SELECT user_id, session_id, count(*) AS n_events,
+                       (max(tns) - min(tns)) / 1000000000 AS dur_s
+                FROM sess GROUP BY 1, 2
+            )
+            SELECT user_id, count(*) AS n_sessions,
+                   CAST(sum(n_events) AS BIGINT) AS n_events,
+                   round(avg(dur_s), 6) AS avg_session_s,
+                   round(max(dur_s), 6) AS max_session_s
+            FROM per_session GROUP BY user_id ORDER BY user_id
+        """
+register("sessionization", q_sessionization, SESSIONIZATION_SQL)
+
+
 def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (returnflag, linestatus): subtotal + grand-total rows."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -138,6 +216,16 @@ def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ROLLUP_LINEITEM_SQL = """
+            SELECT l_returnflag, l_linestatus, count(*) AS n,
+                   round(sum(l_quantity), 4) AS sum_qty
+            FROM lineitem
+            GROUP BY ROLLUP (l_returnflag, l_linestatus)
+            ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
+        """
+register("rollup_lineitem", q_rollup_lineitem, ROLLUP_LINEITEM_SQL)
+
+
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot linestatus into columns per returnflag."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -147,6 +235,17 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("l_quantity"), 4))
         .withColumnsRenamed({"O": "qty_open", "F": "qty_filled"})
     )
+
+
+PIVOT_STATUS_SQL = """
+            SELECT l_returnflag,
+                   round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 4)
+                       AS qty_open,
+                   round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 4)
+                       AS qty_filled
+            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+        """
+register("pivot_status", q_pivot_status, PIVOT_STATUS_SQL)
 
 
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,6 +267,30 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SET_OPS_SQL = """
+            WITH c94 AS (
+                SELECT DISTINCT o_custkey FROM orders
+                WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+                  AND o_orderdate < TIMESTAMP '1997-01-01'
+            ),
+            c95 AS (
+                SELECT DISTINCT o_custkey FROM orders
+                WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+                  AND o_orderdate < TIMESTAMP '1998-01-01'
+            )
+            SELECT o_custkey, 'both' AS cohort
+            FROM (SELECT o_custkey FROM c94 INTERSECT SELECT o_custkey FROM c95)
+            UNION ALL
+            SELECT o_custkey, 'only_1996'
+            FROM (SELECT o_custkey FROM c94 EXCEPT SELECT o_custkey FROM c95)
+            UNION ALL
+            SELECT o_custkey, 'only_1997'
+            FROM (SELECT o_custkey FROM c95 EXCEPT SELECT o_custkey FROM c94)
+            ORDER BY cohort, o_custkey
+        """
+register("set_ops", q_set_ops, SET_OPS_SQL)
+
+
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles + dispersion per returnflag (linear interpolation —
     same definition as quantile_cont)."""
@@ -181,6 +304,17 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.stddev_samp("l_extendedprice"), 4).alias("sd_price"),
         )
     )
+
+
+PERCENTILES_SQL = """
+            SELECT l_returnflag,
+                   round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
+                   round(quantile_cont(l_extendedprice, 0.9), 4) AS p90_price,
+                   round(quantile_cont(l_extendedprice, 0.99), 4) AS p99_price,
+                   round(stddev_samp(l_extendedprice), 4) AS sd_price
+            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+        """
+register("percentiles", q_percentiles, PERCENTILES_SQL)
 
 
 def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,6 +332,21 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("k").alias("distinct_k"),
         )
     )
+
+
+JSON_PROPS_SQL = """
+            SELECT event_type, count(*) AS n,
+                   min(CAST(json_extract_string(props, '$.k') AS INTEGER))
+                       AS min_k,
+                   max(CAST(json_extract_string(props, '$.k') AS INTEGER))
+                       AS max_k,
+                   round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)),
+                         6) AS avg_k,
+                   count(DISTINCT CAST(json_extract_string(props, '$.k')
+                       AS INTEGER)) AS distinct_k
+            FROM events GROUP BY event_type ORDER BY event_type
+        """
+register("json_props", q_json_props, JSON_PROPS_SQL)
 
 
 def q_generator_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,6 +403,17 @@ def q_generator_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# generator invariants: the random draws differ engine-to-engine by
+# design; the invariant booleans are the deterministic contract.
+GENERATOR_INVARIANTS_SQL = """
+            SELECT CAST(10000 AS BIGINT) AS n,
+                   true AS price_bounded, true AS volume_bounded,
+                   true AS ts_gaps_in_range, true AS side_valid,
+                   true AS type_valid, true AS all_pass_validation
+        """
+register("generator_invariants", q_generator_invariants, GENERATOR_INVARIANTS_SQL)
+
+
 def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-function surface (SURVEY §2.7 X1-X12 generalized): string,
     math, date, and conditional functions in one projection — all JVM-side
@@ -284,6 +444,24 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SCALAR_FUNCTIONS_SQL = """
+            SELECT l_orderkey, l_linenumber,
+                   concat_ws('-', l_returnflag, l_linestatus) AS flag_status,
+                   upper(l_returnflag) AS flag_upper,
+                   substr(CAST(l_shipdate AS VARCHAR), 1, 10) AS ship_day,
+                   strftime(l_shipdate, '%Y%m%d') AS ship_compact,
+                   CAST(year(l_shipdate) AS INTEGER) AS ship_year,
+                   round(abs(l_discount - 0.05), 6) AS disc_dev,
+                   greatest(l_quantity, 25.0) AS qty_floor25,
+                   CAST(floor(l_extendedprice) AS BIGINT) AS price_floor,
+                   lpad(CAST(l_orderkey AS VARCHAR), 10, '0') AS okey_padded,
+                   translate(l_returnflag, 'RNA', 'XYZ') AS flag_translated,
+                   CASE WHEN l_tax > 0.04 THEN 'high' ELSE 'low' END AS tax_band
+            FROM lineitem ORDER BY l_orderkey, l_linenumber
+        """
+register("scalar_functions", q_scalar_functions, SCALAR_FUNCTIONS_SQL)
+
+
 SCD2_VERSION_TS = 1_700_000_000_000_000_000
 
 
@@ -300,6 +478,21 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select(
         "trade_id", "symbol", F.round("price", 6).alias("price"), "volume"
     )
+
+
+MERGE_UPSERT_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            source AS (
+                SELECT trade_id, symbol, round(price * 1.1, 6) AS price, volume
+                FROM trades WHERE trade_id % 7 = 0
+            )
+            SELECT trade_id, symbol, round(price, 6) AS price, volume
+            FROM trades WHERE trade_id NOT IN (SELECT trade_id FROM source)
+            UNION ALL
+            SELECT trade_id, symbol, price, volume FROM source
+            ORDER BY trade_id
+        """
+register("merge_upsert", q_merge_upsert, MERGE_UPSERT_SQL)
 
 
 def q_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,13 +515,52 @@ def q_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+SCD2_CUSTOMERS_SQL = """
+            WITH dim AS (
+                SELECT c_custkey AS k, round(c_acctbal, 6) AS acctbal,
+                       CAST(0 AS BIGINT) AS valid_from,
+                       CAST(NULL AS BIGINT) AS valid_to
+                FROM customer
+            ),
+            changes AS (
+                SELECT c_custkey AS k, round(c_acctbal + 100, 6) AS acctbal
+                FROM customer WHERE c_custkey % 10 = 0
+            ),
+            changed_keys AS (
+                SELECT d.k FROM dim d JOIN changes c ON d.k = c.k
+                WHERE d.valid_to IS NULL
+                  AND d.acctbal IS DISTINCT FROM c.acctbal
+            )
+            SELECT d.k, d.acctbal, d.valid_from,
+                   CAST(1700000000000000000 AS BIGINT) AS valid_to
+            FROM dim d JOIN changed_keys ck ON d.k = ck.k
+            WHERE d.valid_to IS NULL
+            UNION ALL
+            SELECT d.k, d.acctbal, d.valid_from, d.valid_to
+            FROM dim d WHERE d.valid_to IS NULL
+              AND d.k NOT IN (SELECT k FROM changed_keys)
+            UNION ALL
+            SELECT c.k, c.acctbal,
+                   CAST(1700000000000000000 AS BIGINT) AS valid_from,
+                   CAST(NULL AS BIGINT) AS valid_to
+            FROM changes c JOIN changed_keys ck ON c.k = ck.k
+            ORDER BY k, valid_from
+        """
+register("scd2_customers", q_scd2_customers, SCD2_CUSTOMERS_SQL)
+
+
 def q_pattern_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series subsequence similarity search: top-5 minute-close
     windows (any symbol) most similar to a deterministic query pattern,
     mean-centered Euclidean (operators/patterns.py)."""
-    from marketstream_etl_spark.operators.patterns import pattern_similarity
+    return patterns.pattern_similarity(load_trades(spark, sf_dir))
 
-    return pattern_similarity(load_trades(spark, sf_dir))
+
+register(
+    "pattern_similarity",
+    q_pattern_similarity,
+    patterns.pattern_similarity_sql(TRADES_CTE),
+)
 
 
 def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,6 +590,19 @@ def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.col("exact_p50") * 0.01
         ).alias("p50_within_1pct"),
     )
+
+
+# approx_aggs: the sketch values themselves are implementation-
+# defined, so the query exposes exact values + in-bound booleans and
+# the oracle states the booleans as TRUE — hash-checks the bound.
+APPROX_AGGS_SQL = """
+            SELECT count(DISTINCT l_partkey) AS exact_parts,
+                   TRUE AS parts_within_3pct,
+                   round(quantile_cont(l_extendedprice, 0.5), 4) AS exact_p50,
+                   TRUE AS p50_within_1pct
+            FROM lineitem
+        """
+register("approx_aggs", q_approx_aggs, APPROX_AGGS_SQL)
 
 
 def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,6 +635,30 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+WINDOW_ANALYTICS_SQL = """
+            WITH w AS (
+                SELECT user_id, event_id, round(value, 4) AS value,
+                       rank() OVER win AS rnk,
+                       dense_rank() OVER win AS dense_rnk,
+                       ntile(4) OVER win AS quartile,
+                       round(lead(value, 1) OVER win, 4) AS next_value,
+                       round(lag(value, 1) OVER win, 4) AS prev_value,
+                       round(value / sum(value) OVER
+                           (PARTITION BY user_id), 6) AS share_of_user
+                FROM events WHERE event_type = 'purchase'
+                WINDOW win AS (PARTITION BY user_id
+                               ORDER BY value DESC, event_id)
+            )
+            SELECT user_id, event_id, value,
+                   CAST(rnk AS INTEGER) AS rnk,
+                   CAST(dense_rnk AS INTEGER) AS dense_rnk,
+                   CAST(quartile AS INTEGER) AS quartile,
+                   next_value, prev_value, share_of_user
+            FROM w WHERE rnk <= 3 ORDER BY user_id, rnk, event_id
+        """
+register("window_analytics", q_window_analytics, WINDOW_ANALYTICS_SQL)
+
+
 def q_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregation over (event_type, day-of-week): all 4 grouping-set
     combinations in one pass — partial aggregation happens map-side per
@@ -414,6 +683,25 @@ def q_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# dow from timezone-free epoch arithmetic (1970-01-01 = Thursday,
+# Sunday = 0) because Spark sees ts as raw ns while DuckDB sees µs.
+CUBE_EVENTS_SQL = """
+            WITH ev AS (
+                SELECT event_type,
+                       CAST((epoch_ns(ts) // 86400000000000 + 4) % 7
+                            AS INTEGER) AS dow,
+                       value
+                FROM events
+            )
+            SELECT event_type, dow, count(*) AS n,
+                   round(sum(value), 4) AS sum_value
+            FROM ev
+            GROUP BY CUBE (event_type, dow)
+            ORDER BY event_type ASC NULLS FIRST, dow ASC NULLS FIRST
+        """
+register("cube_events", q_cube_events, CUBE_EVENTS_SQL)
+
+
 def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key join via explicit salting (functions/skew.py): events join a
     tiny per-type dimension on event_type (5 distinct values — maximal
@@ -434,6 +722,22 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("type_avg"), 6).alias("type_avg"),
         )
     )
+
+
+# salting must not change the answer: oracle is the PLAIN join
+SKEW_SALTED_JOIN_SQL = """
+            WITH dim AS (
+                SELECT event_type, avg(value) AS type_avg
+                FROM events GROUP BY event_type
+            )
+            SELECT e.event_type, count(*) AS n,
+                   CAST(sum(CASE WHEN e.value > d.type_avg THEN 1 ELSE 0 END)
+                        AS BIGINT) AS above_avg,
+                   round(max(d.type_avg), 6) AS type_avg
+            FROM events e JOIN dim d ON e.event_type = d.event_type
+            GROUP BY e.event_type ORDER BY e.event_type
+        """
+register("skew_salted_join", q_skew_salted_join, SKEW_SALTED_JOIN_SQL)
 
 
 WEEK_NS = 7 * DAY_NS
@@ -465,6 +769,30 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(reached_click.cast("long")).alias("stage_click"),
         F.sum(reached_purchase.cast("long")).alias("stage_purchase"),
     )
+
+
+FUNNEL_SQL = """
+            WITH per_user AS (
+                SELECT user_id,
+                    min(CASE WHEN event_type = 'view'
+                             THEN epoch_ns(ts) END) AS t_view,
+                    min(CASE WHEN event_type = 'click'
+                             THEN epoch_ns(ts) END) AS t_click,
+                    min(CASE WHEN event_type = 'purchase'
+                             THEN epoch_ns(ts) END) AS t_purchase
+                FROM events GROUP BY user_id
+            )
+            SELECT count(*) AS n_users,
+                CAST(sum(CASE WHEN t_view IS NOT NULL
+                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_view,
+                CAST(sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
+                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_click,
+                CAST(sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
+                               AND t_purchase > t_click
+                              THEN 1 ELSE 0 END) AS BIGINT) AS stage_purchase
+            FROM per_user
+        """
+register("funnel", q_funnel, FUNNEL_SQL)
 
 
 AB_Z_CRIT_E6 = 1_959_964  # two-sided 5% normal critical value, e6 fixed
@@ -635,6 +963,9 @@ def ab_test_sql() -> str:
     """
 
 
+register("ab_test", q_ab_test, ab_test_sql())
+
+
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention: users grouped by first-activity week, counted as
     active per week offset. Two aggregations sharing the user_id shuffle;
@@ -654,6 +985,27 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cohort_ns", "week_offset")
         .agg(F.countDistinct("user_id").alias("active_users"))
     )
+
+
+RETENTION_COHORTS_SQL = """
+            WITH wk AS (
+                SELECT user_id,
+                       epoch_ns(ts) - epoch_ns(ts) % 604800000000000
+                           AS week_ns
+                FROM events
+            ),
+            cohort AS (
+                SELECT user_id, min(week_ns) AS cohort_ns FROM wk GROUP BY 1
+            ),
+            active AS (SELECT DISTINCT user_id, week_ns FROM wk)
+            SELECT cohort_ns,
+                   CAST((week_ns - cohort_ns) // 604800000000000 AS INTEGER)
+                       AS week_offset,
+                   count(DISTINCT a.user_id) AS active_users
+            FROM active a JOIN cohort c USING (user_id)
+            GROUP BY 1, 2 ORDER BY cohort_ns, week_offset
+        """
+register("retention_cohorts", q_retention_cohorts, RETENTION_COHORTS_SQL)
 
 
 PRICE_BANDS = [
@@ -697,6 +1049,25 @@ def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# interval-membership (band) join: broadcast nested-loop on Spark,
+# plain theta join for the oracle
+RANGE_JOIN_BANDS_SQL = """
+            WITH bands(band, lo, hi) AS (VALUES
+                ('P0_20K', 0.0, 20000.0),
+                ('P20_40K', 20000.0, 40000.0),
+                ('P40_60K', 40000.0, 60000.0),
+                ('P60_80K', 60000.0, 80000.0),
+                ('P80K_UP', 80000.0, 1e18))
+            SELECT band, count(*) AS n_items,
+                   round(sum(l_extendedprice), 2) AS total_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+            FROM lineitem JOIN bands
+              ON l_extendedprice >= lo AND l_extendedprice < hi
+            GROUP BY band ORDER BY band
+        """
+register("range_join_bands", q_range_join_bands, RANGE_JOIN_BANDS_SQL)
+
+
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the general form of rollup/cube: exactly
     the three aggregation levels the caller names (flag x status, flag,
@@ -725,6 +1096,20 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+GROUPING_SETS_SQL = """
+            SELECT l_returnflag, l_linestatus, count(*) AS n_items,
+                   round(sum(l_quantity), 2) AS sum_qty,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2)
+                       AS revenue
+            FROM lineitem
+            GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                                    (l_returnflag), ())
+            ORDER BY l_returnflag ASC NULLS FIRST,
+                     l_linestatus ASC NULLS FIRST
+        """
+register("grouping_sets", q_grouping_sets, GROUPING_SETS_SQL)
+
+
 def q_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over ONE partition of a directory-partitioned table
     (sources/partitioned.py).  The l_returnflag='R' predicate resolves at
@@ -749,6 +1134,18 @@ def q_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the partitioned layout must not change the answer: oracle is the
+# plain filtered aggregate over the flat table
+PARTITION_PRUNING_SQL = """
+            SELECT l_linestatus, count(*) AS n_items,
+                   round(sum(l_quantity), 2) AS sum_qty,
+                   round(avg(l_extendedprice), 4) AS avg_price
+            FROM lineitem WHERE l_returnflag = 'R'
+            GROUP BY l_linestatus ORDER BY l_linestatus
+        """
+register("partition_pruning", q_partition_pruning, PARTITION_PRUNING_SQL)
+
+
 def q_udaf_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate via grouped-agg pandas UDF (operators/udaf_ops.py):
     per-symbol VWAP, checked exact against the native-expression oracle.
@@ -764,6 +1161,19 @@ def q_udaf_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
             count_udaf(F.col("volume")).alias("n_trades"),
         )
     )
+
+
+# the pandas UDAF must equal the native expression exactly
+UDAF_VWAP_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol,
+                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
+                       AS vwap,
+                   count(*) AS n_trades
+            FROM trades WHERE {VALID_WHERE}
+            GROUP BY symbol ORDER BY symbol
+        """
+register("udaf_vwap", q_udaf_vwap, UDAF_VWAP_SQL)
 
 
 def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,6 +1197,20 @@ def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+VARIANT_PROPS_SQL = """
+            WITH kv AS (
+                SELECT CAST(floor(CAST(json_extract_string(props, '$.k')
+                                       AS INTEGER) / 10.0) * 10 AS INTEGER)
+                           AS k_decade,
+                       value
+                FROM events
+            )
+            SELECT k_decade, count(*) AS n, round(sum(value), 4) AS sum_value
+            FROM kv GROUP BY k_decade ORDER BY k_decade
+        """
+register("variant_props", q_variant_props, VARIANT_PROPS_SQL)
+
+
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders written to ORC (sources/formats.py) and aggregated back —
     format round-trip must not change a single value vs. the flat-parquet
@@ -803,6 +1227,17 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderdate").alias("last_date"),
         )
     )
+
+
+# ORC write+read must preserve every value vs the flat parquet
+ORC_ROUNDTRIP_SQL = """
+            SELECT o_orderstatus, count(*) AS n_orders,
+                   round(sum(o_totalprice), 2) AS total_price,
+                   min(o_orderdate) AS first_date,
+                   max(o_orderdate) AS last_date
+            FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
+        """
+register("orc_roundtrip", q_orc_roundtrip, ORC_ROUNDTRIP_SQL)
 
 
 HOUR_NS = 3_600_000_000_000
@@ -831,6 +1266,24 @@ def q_rolling_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ROLLING_TIME_WINDOW_SQL = """
+            WITH ev AS (
+                SELECT event_id, user_id, value,
+                       epoch_ns(ts) - epoch_ns(ts) % 1000 AS ts_ns
+                FROM events
+            )
+            SELECT event_id, user_id,
+                   count(*) OVER w AS n_1h,
+                   round(sum(value) OVER w, 4) AS sum_1h
+            FROM ev
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns
+                         RANGE BETWEEN 3600000000000 PRECEDING
+                         AND CURRENT ROW)
+            ORDER BY event_id
+        """
+register("rolling_time_window", q_rolling_time_window, ROLLING_TIME_WINDOW_SQL)
+
+
 def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Box predicate over the z-ordered lineitem copy (sources/zorder.py).
 
@@ -856,6 +1309,19 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# z-ordered layout must not change any value: plain-scan equivalent
+ZORDER_SKIPPING_SQL = """
+            SELECT l_returnflag, count(*) AS n_rows,
+                   round(sum(l_quantity), 2) AS sum_qty,
+                   round(sum(l_extendedprice), 2) AS revenue
+            FROM lineitem
+            WHERE l_partkey BETWEEN 100 AND 299
+              AND l_suppkey BETWEEN 10 AND 39
+            GROUP BY l_returnflag ORDER BY l_returnflag
+        """
+register("zorder_skipping", q_zorder_skipping, ZORDER_SKIPPING_SQL)
+
+
 def q_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day totals over the backfilled day-partitioned events copy
     (sources/partitioned.py): dynamic partition overwrite must have
@@ -872,6 +1338,22 @@ def q_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
+
+
+# dynamic overwrite doubled exactly the min(day)+7 partition
+PARTITION_BACKFILL_SQL = """
+            WITH ev AS (
+                SELECT (epoch_us(ts) * 1000) // 86400000000000 AS day, value
+                FROM events
+            ),
+            m AS (SELECT min(day) + 7 AS bday FROM ev)
+            SELECT day, count(*) AS n_events,
+                   round(sum(CASE WHEN day = (SELECT bday FROM m)
+                             THEN value * 2 ELSE value END), 2)
+                       AS total_value
+            FROM ev GROUP BY day ORDER BY day
+        """
+register("partition_backfill", q_partition_backfill, PARTITION_BACKFILL_SQL)
 
 
 def q_federated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,6 +1386,20 @@ def q_federated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# three formats in one plan == the plain three-table join
+FEDERATED_JOIN_SQL = """
+            SELECT CAST(s_nationkey AS INTEGER) AS s_nationkey,
+                   count(*) AS n_items,
+                   round(sum(l_extendedprice), 2) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN supplier ON l_suppkey = s_suppkey
+            WHERE o_orderstatus = 'F'
+            GROUP BY 1 ORDER BY 1
+        """
+register("federated_join", q_federated_join, FEDERATED_JOIN_SQL)
+
+
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """supplier through JSON-lines and back (sources/formats.py): every
     value including doubles must survive the text round trip."""
@@ -918,6 +1414,17 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("s_name").alias("first_name"),
         )
     )
+
+
+# JSON-lines write+read must preserve every value
+JSONL_ROUNDTRIP_SQL = """
+            SELECT CAST(s_nationkey AS INTEGER) AS s_nationkey,
+                   count(*) AS n_suppliers,
+                   round(sum(s_acctbal), 2) AS total_acctbal,
+                   min(s_name) AS first_name
+            FROM supplier GROUP BY 1 ORDER BY 1
+        """
+register("jsonl_roundtrip", q_jsonl_roundtrip, JSONL_ROUNDTRIP_SQL)
 
 
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -938,6 +1445,17 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
     )
+
+
+# v1 generation (even keys) has no status column -> MISSING
+SCHEMA_EVOLUTION_SQL = """
+            SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'MISSING'
+                        ELSE o_orderstatus END AS status,
+                   count(*) AS n_orders,
+                   round(sum(o_totalprice), 2) AS total_price
+            FROM orders GROUP BY 1 ORDER BY 1
+        """
+register("schema_evolution", q_schema_evolution, SCHEMA_EVOLUTION_SQL)
 
 
 def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -963,6 +1481,20 @@ def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# anti join == NOT IN the surviving parent keys
+FK_ORPHANS_SQL = """
+            SELECT l_returnflag, count(*) AS n_orphan_rows,
+                   count(DISTINCT l_orderkey) AS n_orphan_orders,
+                   round(sum(l_extendedprice), 2) AS orphan_value
+            FROM lineitem
+            WHERE l_orderkey NOT IN (
+                SELECT o_orderkey FROM orders WHERE o_orderkey % 1000 <> 0
+            )
+            GROUP BY l_returnflag ORDER BY l_returnflag
+        """
+register("fk_orphans", q_fk_orphans, FK_ORPHANS_SQL)
+
+
 def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over the fragmented-then-compacted documents copy
     (sources/compaction.py) — every row, every byte of text, and every
@@ -976,6 +1508,16 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("doc_id").alias("n_ids"),
         F.sum(F.length("text")).alias("total_chars"),
     )
+
+
+# compaction must preserve every row/byte: plain-scan equivalent
+COMPACTION_ROUNDTRIP_SQL = """
+            SELECT lang, count(*) AS n_docs,
+                   count(DISTINCT doc_id) AS n_ids,
+                   CAST(sum(length(text)) AS BIGINT) AS total_chars
+            FROM documents GROUP BY lang ORDER BY lang
+        """
+register("compaction_roundtrip", q_compaction_roundtrip, COMPACTION_ROUNDTRIP_SQL)
 
 
 def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1011,6 +1553,29 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# melt re-expressed as UNION ALL, one leg per metric column
+COLUMN_PROFILE_SQL = """
+            WITH melted AS (
+                SELECT 'l_quantity' AS metric, l_quantity AS value FROM lineitem
+                UNION ALL
+                SELECT 'l_extendedprice', l_extendedprice FROM lineitem
+                UNION ALL
+                SELECT 'l_discount', l_discount FROM lineitem
+                UNION ALL
+                SELECT 'l_tax', l_tax FROM lineitem
+            )
+            SELECT metric, count(*) AS n_rows,
+                   CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_nulls,
+                   count(DISTINCT value) AS n_distinct,
+                   round(min(value), 4) AS min_value,
+                   round(max(value), 4) AS max_value,
+                   round(avg(value), 4) AS mean_value
+            FROM melted GROUP BY metric ORDER BY metric
+        """
+register("column_profile", q_column_profile, COLUMN_PROFILE_SQL)
+
+
 def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of l_extendedprice (5000-wide buckets, top
     bucket open-ended): one hash aggregate over a derived bucket key — the
@@ -1030,6 +1595,17 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice"), 2).alias("bucket_value"),
         )
     )
+
+
+# same fixed 5000-wide buckets, top bucket clamped at 21
+PRICE_HISTOGRAM_SQL = """
+            SELECT CAST(least(floor(l_extendedprice / 5000), 21) AS INTEGER)
+                       AS bucket,
+                   count(*) AS n_items,
+                   round(sum(l_extendedprice), 2) AS bucket_value
+            FROM lineitem GROUP BY 1 ORDER BY 1
+        """
+register("price_histogram", q_price_histogram, PRICE_HISTOGRAM_SQL)
 
 
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,6 +1674,35 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# partial-merge refresh must equal the full recompute; exact
+# integer-cent partials (repo fixed-point convention — a double
+# sum through a two-level merge is association-dependent and ~6%
+# of custkeys sit exactly on a round(avg,4) half-boundary), with
+# derived doubles from one int->double cast + one division so
+# both engines produce bit-identical values
+INCREMENTAL_AGG_SQL = """
+            WITH c AS (
+                SELECT o_custkey,
+                       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
+                           AS cents
+                FROM orders
+            ), m AS (
+                SELECT o_custkey,
+                       CAST(count(*) AS BIGINT) AS n_orders,
+                       CAST(sum(cents) AS BIGINT) AS total_cents,
+                       max(cents) AS max_cents
+                FROM c GROUP BY o_custkey
+            )
+            SELECT o_custkey, n_orders,
+                   CAST(total_cents AS DOUBLE) / 100.0 AS total_spend,
+                   CAST(max_cents AS DOUBLE) / 100.0 AS max_order,
+                   CAST((200 * total_cents + n_orders) // (2 * n_orders)
+                        AS DOUBLE) / 10000.0 AS avg_order
+            FROM m ORDER BY o_custkey
+        """
+register("incremental_agg", q_incremental_agg, INCREMENTAL_AGG_SQL)
+
+
 def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource scan (sources/pyds.py): 50K md5-derived
     trades generated partition-parallel by a pluggable source, then a
@@ -1125,6 +1730,18 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# custom Python DataSource vs bit-identical DuckDB regeneration
+PYTHON_DATASOURCE_SQL = f"""
+            WITH gen AS ({tradegen_oracle_cte(N_ROWS_DEFAULT)})
+            SELECT symbol, count(*) AS n_trades,
+                   CAST(sum(volume) AS BIGINT) AS total_volume,
+                   round(avg(price), 4) AS avg_price,
+                   min(ts_ns) AS first_ts, max(ts_ns) AS last_ts
+            FROM gen GROUP BY symbol ORDER BY symbol
+        """
+register("python_datasource", q_python_datasource, PYTHON_DATASOURCE_SQL)
+
+
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation through the Spark 4 built-in XML writer/reader and back into
     a per-region aggregate — values must survive the text round trip
@@ -1140,6 +1757,16 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_name").alias("last_name"),
         )
     )
+
+
+# XML write+read must preserve every value
+XML_ROUNDTRIP_SQL = """
+            SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
+                   count(*) AS n_nations,
+                   min(n_name) AS first_name, max(n_name) AS last_name
+            FROM nation GROUP BY 1 ORDER BY 1
+        """
+register("xml_roundtrip", q_xml_roundtrip, XML_ROUNDTRIP_SQL)
 
 
 def q_recursive_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1175,6 +1802,24 @@ def q_recursive_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# same recursion, DuckDB dialect (// = integer division)
+RECURSIVE_ROLLUP_SQL = """
+            WITH RECURSIVE anc(custkey, ancestor, depth) AS (
+                SELECT c_custkey, c_custkey // 10, 1
+                FROM customer WHERE c_custkey >= 10
+                UNION ALL
+                SELECT custkey, ancestor // 10, depth + 1
+                FROM anc WHERE ancestor >= 10
+            )
+            SELECT a.ancestor, count(*) AS n_descendants,
+                   CAST(max(a.depth) AS INTEGER) AS max_depth,
+                   round(sum(c.c_acctbal), 2) AS total_balance
+            FROM anc a JOIN customer c ON a.custkey = c.c_custkey
+            GROUP BY a.ancestor ORDER BY a.ancestor
+        """
+register("recursive_rollup", q_recursive_rollup, RECURSIVE_ROLLUP_SQL)
+
+
 def q_streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME custom Python source as a Structured Streaming source
     (sources/pyds.py::TradeGenStreamReader): offsets are row indexes,
@@ -1200,14 +1845,30 @@ def q_streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     return drain_to_memory(counts, "pyds_stream", sf_dir, "complete")
 
 
+STREAMING_PYTHON_DATASOURCE_SQL = f"""
+            WITH gen AS ({tradegen_oracle_cte(10000)})
+            SELECT symbol, count(*) AS n_trades,
+                   CAST(sum(volume) AS BIGINT) AS total_volume
+            FROM gen GROUP BY symbol ORDER BY symbol
+        """
+register(
+    "streaming_python_datasource",
+    q_streaming_python_datasource,
+    STREAMING_PYTHON_DATASOURCE_SQL,
+)
+
+
 def q_asof_events_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirectional tolerance as-of (operators/asof.py::
     asof_events_tolerance): purchase → latest view at-or-before and next
     click at-or-after, each within a 15-minute attribution window — the
     merge_asof(tolerance=...) surface, one union-window shuffle."""
-    from marketstream_etl_spark.operators.asof import asof_events_tolerance
+    return asof.asof_events_tolerance(load_table(spark, sf_dir, "events"))
 
-    return asof_events_tolerance(load_table(spark, sf_dir, "events"))
+
+register(
+    "asof_events_tolerance", q_asof_events_tolerance, asof.asof_events_tolerance_sql()
+)
 
 
 def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1216,9 +1877,10 @@ def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.2%-relative-width buckets, quantile probe via bounded prefix sums,
     and a distributed exact-rank audit — the quantile member of the
     CMS/HLL/Bloom sketch family."""
-    from marketstream_etl_spark.operators.sketch import hdr_quantiles
+    return sketch.hdr_quantiles(load_table(spark, sf_dir, "lineitem"))
 
-    return hdr_quantiles(load_table(spark, sf_dir, "lineitem"))
+
+register("hdr_quantiles", q_hdr_quantiles, sketch.HDR_QUANTILES_SQL)
 
 
 def q_hdr_quantiles_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1226,9 +1888,12 @@ def q_hdr_quantiles_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     hdr_quantiles_grouped): the sketch as a per-key aggregate — one
     grouped grid build, key-partitioned bounded prefix-sum windows, and
     the same distributed exact-rank bracketing audit per group."""
-    from marketstream_etl_spark.operators.sketch import hdr_quantiles_grouped
+    return sketch.hdr_quantiles_grouped(load_table(spark, sf_dir, "lineitem"))
 
-    return hdr_quantiles_grouped(load_table(spark, sf_dir, "lineitem"))
+
+register(
+    "hdr_quantiles_grouped", q_hdr_quantiles_grouped, sketch.hdr_quantiles_grouped_sql()
+)
 
 
 # --- Benford first-digit audit ----------------------------------------------
@@ -1408,6 +2073,9 @@ def benford_audit_sql() -> str:
     """
 
 
+register("benford_audit", q_benford_audit, benford_audit_sql())
+
+
 # --- join-key skew profile ---------------------------------------------------
 # The pre-flight diagnostic for the salting / AQE-skew-join decision
 # (functions/skew.py): per candidate join key, the key-frequency shape —
@@ -1555,6 +2223,9 @@ def key_skew_profile_sql() -> str:
     return f"{body}\n        ORDER BY key_col"
 
 
+register("key_skew_profile", q_key_skew_profile, key_skew_profile_sql())
+
+
 # --- conversion attribution ---------------------------------------------------
 # First-touch / last-touch attribution: every purchase is credited to the
 # first and to the most recent preceding non-purchase touch (click / view /
@@ -1674,6 +2345,9 @@ def attribution_touch_sql() -> str:
         FROM conv GROUP BY 2
         ORDER BY model, touch_type
     """
+
+
+register("attribution_touch", q_attribution_touch, attribution_touch_sql())
 
 
 # --- PSI drift -----------------------------------------------------------------
@@ -1988,6 +2662,9 @@ def ks_drift_sql() -> str:
     """
 
 
+register("ks_drift", q_ks_drift, ks_drift_sql())
+
+
 MWU_Z_CRIT_E6 = 1_959_964  # two-sided alpha = 0.05 normal critical, e6
 
 
@@ -2176,6 +2853,9 @@ def mannwhitney_drift_sql() -> str:
                         > {MWU_Z_CRIT_E6}, FALSE) AS drifted
         FROM stats
     """
+
+
+register("mannwhitney_drift", q_mannwhitney_drift, mannwhitney_drift_sql())
 
 
 # chi-square inverse CDF at alpha = 0.05 for dof 1..9 (e6 fixed-point):
@@ -2435,6 +3115,9 @@ def chi2_drift_sql() -> str:
     """
 
 
+register("chi2_drift", q_chi2_drift, chi2_drift_sql())
+
+
 def psi_drift_sql() -> str:
     """DuckDB replay: identical buckets, clamps, fixed-point contributions
     and banding."""
@@ -2479,6 +3162,9 @@ def psi_drift_sql() -> str:
         FROM fixed CROSS JOIN tot
         ORDER BY bucket
     """
+
+
+register("psi_drift", q_psi_drift, psi_drift_sql())
 
 
 def q_session_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2573,6 +3259,9 @@ def session_transitions_sql() -> str:
     """
 
 
+register("session_transitions", q_session_transitions, session_transitions_sql())
+
+
 HOUR_NS = 3_600_000_000_000
 
 
@@ -2616,6 +3305,11 @@ def rolling_distinct_users_sql() -> str:
         FROM events
         ORDER BY event_id
     """
+
+
+register(
+    "rolling_distinct_users", q_rolling_distinct_users, rolling_distinct_users_sql()
+)
 
 
 def q_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2684,6 +3378,9 @@ def lateness_audit_sql() -> str:
                    AS p95_late_ms
         FROM late GROUP BY event_type ORDER BY event_type
     """
+
+
+register("lateness_audit", q_lateness_audit, lateness_audit_sql())
 
 
 # --- ordered funnel ----------------------------------------------------------
@@ -2874,6 +3571,9 @@ def funnel_steps_sql() -> str:
     """
 
 
+register("funnel_steps", q_funnel_steps, funnel_steps_sql())
+
+
 # --- k-anonymity audit -------------------------------------------------------
 # Data-governance screen: group the event log by its quasi-identifier
 # tuple and measure equivalence-class sizes.  A class with fewer than K
@@ -2972,6 +3672,9 @@ def k_anonymity_sql() -> str:
     """
 
 
+register("k_anonymity", q_k_anonymity, k_anonymity_sql())
+
+
 L_DIV_L = 3
 
 
@@ -3056,6 +3759,9 @@ def l_diversity_sql() -> str:
         FROM banded CROSS JOIN total
         ORDER BY band
     """
+
+
+register("l_diversity", q_l_diversity, l_diversity_sql())
 
 
 T_CLOSE_T_E6 = 200_000  # t-closeness threshold t = 0.2 (Li et al. usage)
@@ -3241,3 +3947,6 @@ def t_closeness_sql() -> str:
         FROM banded CROSS JOIN total CROSS JOIN worst
         ORDER BY band
     """
+
+
+register("t_closeness", q_t_closeness, t_closeness_sql())

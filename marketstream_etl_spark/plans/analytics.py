@@ -3,7 +3,8 @@
 as DataFrame plans over the canonical trades view.
 
 Each function takes (spark, sf_dir) and returns a DataFrame whose column
-names match the DuckDB oracle in ``__spark_entry__.oracle_sql`` exactly.
+names match its DuckDB oracle exactly; the oracle is registered right after
+the function (``registry.register``).
 Double outputs are rounded to 6 decimals on BOTH sides so the driver's
 order-insensitive value hash is stable across accumulation orders.
 """
@@ -13,13 +14,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.hashing import h32_sql
+from marketstream_etl_spark.operators import changepoint
 from marketstream_etl_spark.operators.indicators import (
     compute_indicators,
     compute_rsi_wilder,
     rsi_signal,
 )
 from marketstream_etl_spark.operators.validation import split_valid, with_validation
-from marketstream_etl_spark.plans.trades_view import load_trades
+from marketstream_etl_spark.plans.trades_view import (
+    INDICATORS_SQL,
+    REASON_CASE,
+    TRADES_CTE,
+    VALID_WHERE,
+    load_trades,
+)
+from marketstream_etl_spark.registry import register
 
 # computed_at stamp injected as a constant for deterministic oracle parity
 # (the reference stamps wall-clock ns at save time, DatabaseLoader.cpp:314-316).
@@ -66,6 +76,10 @@ def _valid_trades_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_trades_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical trades mapping itself (scan + projection + JSON access)."""
     return load_trades(spark, sf_dir)
+
+
+TRADES_VIEW_SQL = f"WITH trades AS ({TRADES_CTE}) SELECT * FROM trades"
+register("trades_view", q_trades_view, TRADES_VIEW_SQL)
 
 
 # The reference repo's 13-row CSV test fixture (sample_data.csv): 10 valid
@@ -130,6 +144,34 @@ def q_validate_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the reference sample_data.csv golden: 10 valid rows, 3 rejects
+# with first-failing reasons (lowercase symbol / negative price /
+# zero volume — the reference sample_data.csv:12-14)
+VALIDATE_FIXTURE_SQL = """
+            SELECT CAST(trade_id AS BIGINT) AS trade_id, symbol,
+                   CAST(price AS DOUBLE) AS price,
+                   CAST(volume AS INTEGER) AS volume,
+                   is_valid, reject_reason
+            FROM (VALUES
+                (1000001, 'RELIANCE',  2456.75, 100,  TRUE,  NULL),
+                (1000002, 'RELIANCE',  2457.00, 250,  TRUE,  NULL),
+                (1000003, 'TCS',       3567.50, 75,   TRUE,  NULL),
+                (1000004, 'INFY',      1423.25, 500,  TRUE,  NULL),
+                (1000005, 'HDFC',      1678.90, 200,  TRUE,  NULL),
+                (1000006, 'WIPRO',      432.60, 1000, TRUE,  NULL),
+                (1000007, 'RELIANCE',  2458.00, 150,  TRUE,  NULL),
+                (1000008, 'TCS',       3565.25, 90,   TRUE,  NULL),
+                (1000009, 'ICICIBANK',  987.45, 300,  TRUE,  NULL),
+                (1000010, 'INFY',      1424.00, 450,  TRUE,  NULL),
+                (9999991, 'reliance',  1424.00, 450,  FALSE, 'invalid symbol'),
+                (9999992, 'WIPRO',      -50.00, 200,  FALSE, 'invalid price'),
+                (9999993, 'HDFC',      1678.90, 0,    FALSE, 'invalid volume')
+            ) t(trade_id, symbol, price, volume, is_valid, reject_reason)
+            ORDER BY trade_id
+        """
+register("validate_fixture", q_validate_fixture, VALIDATE_FIXTURE_SQL)
+
+
 # S2-focused CSV fixture: every defaults rule of the reference parser
 # (CsvParser.cpp:57-249) trips at least once — unparseable price → 0.0,
 # missing volume/timestamp → 0, missing side/type → 'N'/'M', multi-char
@@ -171,6 +213,31 @@ def q_csv_fixture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# S1/S2 defaults golden: the post-defaults typed rows the reference
+# parser yields for every defaults rule (zero-init numerics, 'N'/'M'
+# char defaults, first byte of multi-char cells, is_pro int→bool) —
+# see analytics.DEFAULTS_FIXTURE_CSV
+CSV_FIXTURE_ROUNDTRIP_SQL = """
+            SELECT CAST(trade_id AS BIGINT) AS trade_id, symbol,
+                   CAST(price AS DOUBLE) AS price,
+                   CAST(volume AS INTEGER) AS volume,
+                   side, "type", is_pro, is_valid, reject_reason
+            FROM (VALUES
+                (2000001, 'RELIANCE',  2456.75, 100, 'B', 'L', FALSE, TRUE,  NULL),
+                (2000002, 'TCS',       3567.50, 75,  'B', 'L', TRUE,  TRUE,  NULL),
+                (2000003, 'INFY',      1423.25, 500, 'N', 'M', FALSE, TRUE,  NULL),
+                (2000004, 'HDFC',         0.00, 200, 'B', 'L', FALSE, FALSE, 'invalid price'),
+                (2000005, 'WIPRO',      432.60, 0,   'S', 'L', TRUE,  FALSE, 'invalid volume'),
+                (2000006, '',           987.45, 300, 'B', 'L', FALSE, FALSE, 'invalid symbol'),
+                (2000007, 'TCS',       3565.25, 90,  'S', 'L', FALSE, FALSE, 'invalid timestamp'),
+                (2000008, 'ICICIBANK',  987.45, 300, 'B', 'L', FALSE, TRUE,  NULL)
+            ) t(trade_id, symbol, price, volume, side, "type", is_pro,
+                is_valid, reject_reason)
+            ORDER BY trade_id
+        """
+register("csv_fixture_roundtrip", q_csv_fixture_roundtrip, CSV_FIXTURE_ROUNDTRIP_SQL)
+
+
 def q_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11/S12/X11 end-to-end: trades written through the real sink (snappy,
     partitioned by side, dated trades_YYYYMMDD_HHMMSS run naming —
@@ -197,6 +264,19 @@ def q_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("run_file", F.lit(os.path.basename(out)))
     )
+
+
+# S11/S12/X11: aggregates after the parquet write/read round-trip
+# must equal the direct scan; the pinned run filename is compared too
+PARQUET_SINK_ROUNDTRIP_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT side, count(*) AS n_trades,
+                   CAST(sum(volume) AS BIGINT) AS total_volume,
+                   round(sum(price * volume), 2) AS notional,
+                   'trades_20231025_091500.parquet' AS run_file
+            FROM trades GROUP BY side ORDER BY side
+        """
+register("parquet_sink_roundtrip", q_parquet_sink_roundtrip, PARQUET_SINK_ROUNDTRIP_SQL)
 
 
 def q_parallel_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,6 +344,23 @@ def q_parallel_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# S9: the readback aggregate over the 4-connection Derby load must
+# equal this direct derivation — same deterministic stream stamp
+# (h32(trade_id) mod 4), no database involved on the oracle side
+PARALLEL_JDBC_ROUNDTRIP_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT CAST({h32_sql("CAST(trade_id AS VARCHAR)")} % 4 AS INTEGER)
+                       AS stream_id,
+                   count(*) AS n_rows,
+                   CAST(sum(volume) AS BIGINT) AS stream_volume,
+                   round(sum(price * volume), 2) AS notional
+            FROM trades GROUP BY 1 ORDER BY 1
+        """
+register(
+    "parallel_jdbc_roundtrip", q_parallel_jdbc_roundtrip, PARALLEL_JDBC_ROUNDTRIP_SQL
+)
+
+
 def q_validate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 annotate: every trade with is_valid + first-failing reject_reason."""
     # NOTE: no fan_out here — validation must stay a pure map-side pass
@@ -273,10 +370,28 @@ def q_validate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+VALIDATE_SPLIT_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT trade_id, symbol, price, volume,
+                   (reason IS NULL) AS is_valid, reason AS reject_reason
+            FROM (SELECT *, {REASON_CASE} AS reason FROM trades)
+        """
+register("validate_split", q_validate_split, VALIDATE_SPLIT_SQL)
+
+
 def q_validate_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 reject side: dead-letter rows with reasons."""
     _, rejects = split_valid(load_trades(spark, sf_dir))
     return rejects.select("trade_id", "symbol", "price", "volume", "reject_reason")
+
+
+VALIDATE_REJECTS_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT trade_id, symbol, price, volume, reason AS reject_reason
+            FROM (SELECT *, {REASON_CASE} AS reason FROM trades)
+            WHERE reason IS NOT NULL
+        """
+register("validate_rejects", q_validate_rejects, VALIDATE_REJECTS_SQL)
 
 
 def q_validation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,6 +399,18 @@ def q_validation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketstream_etl_spark.operators.validation import validation_counts
 
     return validation_counts(load_trades(spark, sf_dir))
+
+
+VALIDATION_COUNTS_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT count(*) AS total,
+                   CAST(sum(CASE WHEN reason IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS valid,
+                   CAST(sum(CASE WHEN reason IS NOT NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS rejected
+            FROM (SELECT *, {REASON_CASE} AS reason FROM trades)
+        """
+register("validation_counts", q_validation_counts, VALIDATION_COUNTS_SQL)
 
 
 def q_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,6 +425,9 @@ def q_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register("indicators", q_indicators, INDICATORS_SQL + " ORDER BY symbol")
+
+
 def q_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine extension: Wilder-smoothed RSI per symbol (closed-form EMA
     weights — see operators/indicators.compute_rsi_wilder)."""
@@ -310,9 +440,59 @@ def q_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+RSI_WILDER_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            valid AS (SELECT * FROM trades WHERE {VALID_WHERE}),
+            chg AS (
+                SELECT symbol,
+                    price - lag(price) OVER (PARTITION BY symbol
+                        ORDER BY "timestamp", trade_id) AS change,
+                    row_number() OVER (PARTITION BY symbol
+                        ORDER BY "timestamp", trade_id) - 1 AS j,
+                    count(*) OVER (PARTITION BY symbol) - 1 AS m
+                FROM valid
+            ),
+            wchg AS (
+                SELECT symbol, m, change,
+                    CASE WHEN m <= 14 THEN 1.0 / m
+                         WHEN j <= 14
+                             THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
+                         ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
+                    END AS w
+                FROM chg WHERE change IS NOT NULL
+            ),
+            agg AS (
+                SELECT symbol, max(m) AS n_changes,
+                    sum(w * greatest(change, 0.0)) AS ag,
+                    sum(w * greatest(-change, 0.0)) AS al
+                FROM wchg GROUP BY symbol
+            ),
+            rs AS (
+                SELECT symbol, n_changes,
+                    CASE WHEN n_changes < 1 THEN 50.0
+                         WHEN al = 0.0 THEN 100.0
+                         ELSE 100.0 - 100.0 / (1.0 + ag / al)
+                    END AS rsi_raw
+                FROM agg
+            )
+            SELECT symbol, n_changes, round(rsi_raw, 4) AS rsi_wilder,
+                CASE WHEN rsi_raw >= 70 THEN 'OVERBOUGHT'
+                     WHEN rsi_raw <= 30 THEN 'OVERSOLD'
+                     ELSE 'NEUTRAL' END AS signal
+            FROM rs ORDER BY symbol
+        """
+register("rsi_wilder", q_rsi_wilder, RSI_WILDER_SQL)
+
+
 def q_trade_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: SELECT COUNT(*) FROM trades (README.md:229)."""
     return load_trades(spark, sf_dir).agg(F.count("*").alias("n_trades"))
+
+
+TRADE_COUNT_SQL = f"""
+            WITH trades AS ({TRADES_CTE}) SELECT count(*) AS n_trades FROM trades
+        """
+register("trade_count", q_trade_count, TRADE_COUNT_SQL)
 
 
 def q_symbol_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,6 +504,15 @@ def q_symbol_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("trades"), F.sum("volume").alias("total_volume"))
         .orderBy(F.desc("trades"), "symbol")
     )
+
+
+SYMBOL_LEADERBOARD_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol, count(*) AS trades,
+                   CAST(sum(volume) AS BIGINT) AS total_volume
+            FROM trades GROUP BY symbol ORDER BY trades DESC, symbol
+        """
+register("symbol_leaderboard", q_symbol_leaderboard, SYMBOL_LEADERBOARD_SQL)
 
 
 def q_rsi_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,6 +538,18 @@ def q_rsi_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+RSI_SIGNALS_SQL = f"""
+            WITH ind AS ({INDICATORS_SQL})
+            SELECT symbol, rsi,
+                   CASE WHEN rsi >= 70 THEN 'OVERBOUGHT'
+                        WHEN rsi <= 30 THEN 'OVERSOLD'
+                        ELSE 'NEUTRAL' END AS signal,
+                   make_timestamp(1698208500000000) AS computed_ts
+            FROM ind ORDER BY computed_ts DESC, symbol LIMIT 20
+        """
+register("rsi_signals", q_rsi_signals, RSI_SIGNALS_SQL)
+
+
 def q_symbol_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/F5: single-symbol time-range scan — WHERE symbol='PURCHASE' AND
     timestamp range, ordered (README.md:248-251). Partition-prunable shape."""
@@ -359,6 +560,15 @@ def q_symbol_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("trade_id", "symbol", F.round("price", 6).alias("price"), "timestamp")
         .orderBy("timestamp", "trade_id")
     )
+
+
+SYMBOL_HISTORY_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT trade_id, symbol, round(price, 6) AS price, "timestamp"
+            FROM trades WHERE symbol = 'PURCHASE' AND "timestamp" > 0
+            ORDER BY "timestamp", trade_id
+        """
+register("symbol_history", q_symbol_history, SYMBOL_HISTORY_SQL)
 
 
 def q_vwap_by_symbol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,6 +584,17 @@ def q_vwap_by_symbol(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vwap")
         )
     )
+
+
+VWAP_BY_SYMBOL_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol,
+                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
+                       AS vwap
+            FROM trades WHERE {VALID_WHERE}
+            GROUP BY symbol ORDER BY symbol
+        """
+register("vwap_by_symbol", q_vwap_by_symbol, VWAP_BY_SYMBOL_SQL)
 
 
 def _ohlc_aggs():
@@ -413,6 +634,33 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("symbol", "bar")
         .agg(*_ohlc_aggs())
     )
+
+
+# 1-minute OHLCV: first/last by (timestamp, trade_id) via the same
+# double row_number ranking; // is DuckDB integer division
+OHLC_BARS_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price, volume,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp, trade_id) AS rn_a,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            )
+            SELECT symbol, bar,
+                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
+                   round(max(price), 4) AS high,
+                   round(min(price), 4) AS low,
+                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
+                   CAST(sum(volume) AS BIGINT) AS bar_volume,
+                   count(*) AS n_trades
+            FROM r GROUP BY symbol, bar ORDER BY symbol, bar
+        """
+register("ohlc_bars", q_ohlc_bars, OHLC_BARS_SQL)
 
 
 def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,6 +710,46 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("ffill"), 2).alias("filled_sum"),
         )
     )
+
+
+# dense minute grid + forward-filled close, folded per symbol
+GAP_FILL_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            bars AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1
+            ),
+            bounds AS (
+                SELECT symbol, min(bar) AS lo, max(bar) AS hi
+                FROM bars GROUP BY symbol
+            ),
+            grid AS (
+                SELECT symbol, unnest(generate_series(lo, hi)) AS bar
+                FROM bounds
+            ),
+            filled AS (
+                SELECT g.symbol, g.bar, b.close,
+                       last_value(b.close IGNORE NULLS) OVER (
+                           PARTITION BY g.symbol ORDER BY g.bar
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                       ) AS ffill
+                FROM grid g
+                LEFT JOIN bars b ON g.symbol = b.symbol AND g.bar = b.bar
+            )
+            SELECT symbol, count(*) AS n_minutes,
+                   CAST(sum(CASE WHEN close IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_gaps,
+                   round(sum(ffill), 2) AS filled_sum
+            FROM filled GROUP BY symbol ORDER BY symbol
+        """
+register("gap_fill", q_gap_fill, GAP_FILL_SQL)
 
 
 def _minute_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,6 +807,31 @@ def q_pairwise_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# minute-close co-movement; closes from the same rn_d ranking
+PAIRWISE_CORRELATION_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            )
+            SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
+                   count(*) AS n_bars,
+                   round(corr(a.close, b.close), 6) AS corr_close,
+                   round(covar_samp(a.close, b.close), 4) AS covar_close
+            FROM closes a JOIN closes b
+              ON a.bar = b.bar AND a.symbol < b.symbol
+            GROUP BY 1, 2 ORDER BY 1, 2
+        """
+register("pairwise_correlation", q_pairwise_correlation, PAIRWISE_CORRELATION_SQL)
+
+
 def q_symbol_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-symbol beta to the equal-weight market index: regress each
     symbol's minute close on the cross-symbol mean close of that minute
@@ -538,6 +851,33 @@ def q_symbol_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.regr_r2("close", "index_close"), 6).alias("r2"),
         )
     )
+
+
+SYMBOL_BETA_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            idx AS (
+                SELECT bar, avg(close) AS index_close
+                FROM closes GROUP BY bar
+            )
+            SELECT c.symbol, count(*) AS n_bars,
+                   round(regr_slope(c.close, i.index_close), 6) AS beta,
+                   round(regr_intercept(c.close, i.index_close), 4) AS alpha,
+                   round(regr_r2(c.close, i.index_close), 6) AS r2
+            FROM closes c JOIN idx i ON c.bar = i.bar
+            GROUP BY c.symbol ORDER BY c.symbol
+        """
+register("symbol_beta", q_symbol_beta, SYMBOL_BETA_SQL)
 
 
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,6 +910,35 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# running-peak drawdown over the same minute closes
+MAX_DRAWDOWN_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            dd AS (
+                SELECT symbol, close,
+                       max(close) OVER (PARTITION BY symbol ORDER BY bar
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                           AS peak
+                FROM closes
+            )
+            SELECT symbol, count(*) AS n_bars,
+                   round(max(peak), 4) AS peak_close,
+                   round(min((close - peak) / peak), 6) AS max_drawdown
+            FROM dd GROUP BY symbol ORDER BY symbol
+        """
+register("max_drawdown", q_max_drawdown, MAX_DRAWDOWN_SQL)
+
+
 def q_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline observability via the Observation API: data-quality
     counters (rows, invalid rows, distinct-symbol price sum) collected as
@@ -597,6 +966,19 @@ def q_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(m["n_rows"], m["n_invalid"], m["valid_price_sum"])],
         "n_rows long, n_invalid long, valid_price_sum double",
     )
+
+
+# observe()-collected counters == the relational recompute
+OBSERVED_METRICS_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT count(*) AS n_rows,
+                   CAST(sum(CASE WHEN ({VALID_WHERE})
+                            THEN 0 ELSE 1 END) AS BIGINT) AS n_invalid,
+                   round(sum(CASE WHEN {VALID_WHERE} THEN price END), 4)
+                       AS valid_price_sum
+            FROM trades
+        """
+register("observed_metrics", q_observed_metrics, OBSERVED_METRICS_SQL)
 
 
 def q_ewma_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -633,6 +1015,37 @@ def q_ewma_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# closed-form EWMA weights: seed (1-a)^(n-1), then a*(1-a)^(n-j)
+EWMA_PRICE_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            ann AS (
+                SELECT symbol, close,
+                       row_number() OVER (PARTITION BY symbol
+                                          ORDER BY bar) AS j,
+                       count(*) OVER (PARTITION BY symbol) AS n
+                FROM closes
+            )
+            SELECT symbol, CAST(max(n) AS BIGINT) AS n_bars,
+                   round(sum((CASE WHEN j = 1 THEN power(0.8, n - 1)
+                              ELSE 0.2 * power(0.8, n - j) END) * close), 4)
+                       AS ewma_close,
+                   round(arg_max(close, j), 4) AS last_close
+            FROM ann GROUP BY symbol ORDER BY symbol
+        """
+register("ewma_price", q_ewma_price, EWMA_PRICE_SQL)
+
+
 def q_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-symbol realized volatility: stddev of log minute-close returns
     (lag window -> ln ratio -> stddev_samp), plus the mean return — the
@@ -656,6 +1069,35 @@ def q_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# stddev of log minute-close returns, same rn_d close ranking
+REALIZED_VOLATILITY_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            rets AS (
+                SELECT symbol,
+                       ln(close / lag(close) OVER (PARTITION BY symbol
+                                                   ORDER BY bar)) AS log_ret
+                FROM closes
+            )
+            SELECT symbol, count(*) AS n_returns,
+                   round(stddev_samp(log_ret), 6) AS volatility,
+                   round(avg(log_ret), 6) AS mean_return
+            FROM rets WHERE log_ret IS NOT NULL
+            GROUP BY symbol ORDER BY symbol
+        """
+register("realized_volatility", q_realized_volatility, REALIZED_VOLATILITY_SQL)
+
+
 def q_order_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Buy/sell order-flow imbalance per symbol: conditional aggregation
     over the side column, (buy_vol - sell_vol) / total_vol — the
@@ -677,6 +1119,25 @@ def q_order_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# conditional aggregation on side; greatest() guards zero volume
+ORDER_IMBALANCE_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol,
+                   CAST(sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
+                        AS BIGINT) AS buy_volume,
+                   CAST(sum(CASE WHEN side = 'S' THEN volume ELSE 0 END)
+                        AS BIGINT) AS sell_volume,
+                   round((sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
+                          - sum(CASE WHEN side = 'S' THEN volume ELSE 0 END))
+                         / CAST(greatest(
+                               sum(CASE WHEN side = 'B' THEN volume ELSE 0 END)
+                               + sum(CASE WHEN side = 'S' THEN volume ELSE 0 END),
+                               1) AS DOUBLE), 6) AS imbalance
+            FROM trades GROUP BY symbol ORDER BY symbol
+        """
+register("order_imbalance", q_order_imbalance, ORDER_IMBALANCE_SQL)
+
+
 def q_dedup_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PK semantics (S8's ON CONFLICT DO NOTHING analog): keep one row per
     trade_id — dropDuplicates on the key, then count as evidence."""
@@ -684,6 +1145,13 @@ def q_dedup_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trades.dropDuplicates(["trade_id"]).agg(
         F.count("*").alias("n_unique_trades")
     )
+
+
+DEDUP_TRADES_SQL = f"""
+            WITH trades AS ({TRADES_CTE})
+            SELECT count(DISTINCT trade_id) AS n_unique_trades FROM trades
+        """
+register("dedup_trades", q_dedup_trades, DEDUP_TRADES_SQL)
 
 
 OUTLIER_Z = 2.0  # flag threshold; random-walk prices rarely exceed |z|>3
@@ -723,6 +1191,28 @@ def q_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+PRICE_OUTLIERS_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            stats AS (
+                SELECT symbol, avg(price) AS mu,
+                       stddev_samp(price) AS sd
+                FROM trades GROUP BY symbol
+            )
+            SELECT t.symbol, count(*) AS n_trades,
+                   CAST(sum(CASE WHEN (CASE WHEN s.sd > 0
+                            THEN abs((t.price - s.mu) / s.sd)
+                            ELSE 0.0 END)
+                        > {OUTLIER_Z} THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_outliers,
+                   round(max(CASE WHEN s.sd > 0
+                            THEN abs((t.price - s.mu) / s.sd)
+                            ELSE 0.0 END), 4) AS max_abs_z
+            FROM trades t JOIN stats s USING (symbol)
+            GROUP BY t.symbol ORDER BY t.symbol
+        """
+register("price_outliers", q_price_outliers, PRICE_OUTLIERS_SQL)
+
+
 def q_return_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-symbol serial dependence of minute returns: Pearson
     autocorrelation at lags 1 and 2 over the shared minute-close log
@@ -749,6 +1239,42 @@ def q_return_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.corr("log_ret", "lag2"), 6).alias("autocorr_lag2"),
         )
     )
+
+
+RETURN_AUTOCORR_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar, price AS close FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            rets AS (
+                SELECT symbol, bar,
+                       ln(close / lag(close) OVER (PARTITION BY symbol
+                                                   ORDER BY bar)) AS log_ret
+                FROM closes
+            ),
+            lagged AS (
+                SELECT symbol, log_ret,
+                       lag(log_ret, 1) OVER (PARTITION BY symbol
+                                             ORDER BY bar) AS lag1,
+                       lag(log_ret, 2) OVER (PARTITION BY symbol
+                                             ORDER BY bar) AS lag2
+                FROM rets WHERE log_ret IS NOT NULL
+            )
+            SELECT symbol, count(*) AS n_returns,
+                   round(corr(log_ret, lag1), 6) AS autocorr_lag1,
+                   round(corr(log_ret, lag2), 6) AS autocorr_lag2
+            FROM lagged
+            GROUP BY symbol ORDER BY symbol
+        """
+register("return_autocorr", q_return_autocorr, RETURN_AUTOCORR_SQL)
 
 
 def q_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,6 +1327,38 @@ def q_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+# running-VWAP slippage: integer-cent cumulative mass (exact, any
+# accumulation order), per-row fixed-point deviations
+VWAP_DEVIATION_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            t AS (
+                SELECT symbol, price, volume, timestamp, trade_id,
+                       CAST(floor(price * 100 + 0.5) AS BIGINT) AS cents
+                FROM trades WHERE price > 0 AND volume > 0
+            ), r AS (
+                SELECT symbol, price,
+                       sum(cents * volume) OVER w AS cum_pv,
+                       sum(volume) OVER w AS cum_v
+                FROM t
+                WINDOW w AS (PARTITION BY symbol
+                             ORDER BY timestamp, trade_id
+                             ROWS UNBOUNDED PRECEDING)
+            ), d AS (
+                SELECT symbol,
+                       CAST(floor(abs(price - cum_pv::DOUBLE
+                                      / (cum_v::DOUBLE * 100.0))
+                                  * 1e6 + 0.5) AS BIGINT) AS dev_fp
+                FROM r
+            )
+            SELECT symbol, count(*) AS n_trades,
+                   floor(sum(dev_fp)::DOUBLE / count(*)::DOUBLE + 0.5)
+                       / 1e6 AS avg_abs_dev,
+                   max(dev_fp)::DOUBLE / 1e6 AS max_abs_dev
+            FROM d GROUP BY symbol ORDER BY symbol
+        """
+register("vwap_deviation", q_vwap_deviation, VWAP_DEVIATION_SQL)
 
 
 def q_symbol_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,6 +1425,38 @@ def q_symbol_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_accounts))
         .select("symbol_a", "symbol_b", "n_both", lift.alias("lift"))
     )
+
+
+# market-basket pair counting with lift vs independence
+SYMBOL_AFFINITY_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            held AS MATERIALIZED (
+                SELECT DISTINCT order_id AS account, symbol
+                FROM trades WHERE price > 0 AND volume > 0
+            ), tot AS (
+                SELECT CAST(count(DISTINCT account) AS BIGINT) AS n_accounts
+                FROM held
+            ), per_sym AS MATERIALIZED (
+                SELECT symbol, CAST(count(*) AS BIGINT) AS n_sym
+                FROM held GROUP BY 1
+            ), pairs AS (
+                SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
+                       CAST(count(*) AS BIGINT) AS n_both
+                FROM held a JOIN held b
+                  ON a.account = b.account AND a.symbol < b.symbol
+                GROUP BY 1, 2
+            )
+            SELECT p.symbol_a, p.symbol_b, p.n_both,
+                   floor(p.n_both::DOUBLE * t.n_accounts::DOUBLE
+                         / (sa.n_sym::DOUBLE * sb.n_sym::DOUBLE)
+                         * 1e6 + 0.5) / 1e6 AS lift
+            FROM pairs p
+            JOIN per_sym sa ON p.symbol_a = sa.symbol
+            JOIN per_sym sb ON p.symbol_b = sb.symbol
+            CROSS JOIN tot t
+            ORDER BY p.symbol_a, p.symbol_b
+        """
+register("symbol_affinity", q_symbol_affinity, SYMBOL_AFFINITY_SQL)
 
 
 BOLL_N = 20  # rolling window length (bars)
@@ -947,6 +1537,63 @@ def q_bollinger_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Bollinger: exact-integer ±2σ breach test (squared, BIGINT both
+# sides), IEEE mid/σ/%B from identical integer inputs
+BOLLINGER_BREACHES_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            closes AS (
+                SELECT symbol, bar,
+                       CAST(floor(price * 100 + 0.5) AS BIGINT) AS c
+                FROM r WHERE rn_d = 1 AND price > 0
+            ),
+            ann AS (
+                SELECT symbol, bar, c,
+                       count(*) OVER w AS m,
+                       sum(c) OVER w AS s,
+                       sum(c * c) OVER w AS q
+                FROM closes
+                WINDOW w AS (PARTITION BY symbol ORDER BY bar
+                             ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
+            ),
+            f AS (
+                SELECT symbol, bar,
+                       (c * 20 - s) AS d, (q * 20 - s * s) AS var_num, s
+                FROM ann WHERE m = 20
+            ),
+            g AS (
+                SELECT symbol, bar,
+                       CASE WHEN d > 0 AND 19 * d * d > 80 * var_num
+                            THEN 1 ELSE 0 END AS up,
+                       CASE WHEN d < 0 AND 19 * d * d > 80 * var_num
+                            THEN 1 ELSE 0 END AS down,
+                       s::DOUBLE / 2000.0 AS mid,
+                       sqrt(var_num::DOUBLE / 380.0) / 100.0 AS sd,
+                       CASE WHEN var_num > 0 THEN
+                           (d::DOUBLE / 20.0
+                            + 2.0 * sqrt(var_num::DOUBLE / 380.0))
+                           / (4.0 * sqrt(var_num::DOUBLE / 380.0))
+                       END AS pctb
+                FROM f
+            )
+            SELECT symbol, count(*) AS n_eval,
+                   CAST(sum(up) AS BIGINT) AS breach_above,
+                   CAST(sum(down) AS BIGINT) AS breach_below,
+                   round(arg_max(mid, bar), 4) AS last_mid,
+                   round(arg_max(sd, bar), 6) AS last_sd,
+                   round(arg_max(pctb, bar), 6) AS last_pctb
+            FROM g GROUP BY symbol ORDER BY symbol
+        """
+register("bollinger_breaches", q_bollinger_breaches, BOLLINGER_BREACHES_SQL)
+
+
 # --- information-driven bars -------------------------------------------------
 
 VOLUME_BAR_SIZE = 10_000  # shares per bar (~10 bars/symbol at sf0.01)
@@ -978,6 +1625,38 @@ def q_volume_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         cum.groupBy("symbol", "bar")
         .agg(*_ohlc_aggs())
     )
+
+
+# volume bars: identical cumulative-volume bar ids and struct
+# open/close (first/last by (ts, trade_id) within the bar)
+VOLUME_BARS_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            c AS (
+                SELECT symbol, price, volume, timestamp, trade_id,
+                       (sum(volume) OVER (PARTITION BY symbol
+                            ORDER BY timestamp, trade_id
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                        - volume) // {VOLUME_BAR_SIZE} AS bar
+                FROM trades
+            ),
+            r AS (
+                SELECT *,
+                       row_number() OVER (PARTITION BY symbol, bar
+                           ORDER BY timestamp, trade_id) AS rn_a,
+                       row_number() OVER (PARTITION BY symbol, bar
+                           ORDER BY timestamp DESC, trade_id DESC) AS rn_d
+                FROM c
+            )
+            SELECT symbol, CAST(bar AS BIGINT) AS bar,
+                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
+                   round(max(price), 4) AS high,
+                   round(min(price), 4) AS low,
+                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
+                   CAST(sum(volume) AS BIGINT) AS bar_volume,
+                   count(*) AS n_trades
+            FROM r GROUP BY symbol, bar ORDER BY symbol, bar
+        """
+register("volume_bars", q_volume_bars, VOLUME_BARS_SQL)
 
 
 # --- purged k-fold with embargo ----------------------------------------------
@@ -1046,6 +1725,39 @@ def q_purged_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# purged k-fold: residue counts -> per-fold test/embargo/train
+PURGED_KFOLD_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            res AS (
+                SELECT (timestamp // {PURGE_BLOCK_NS})
+                           % {PURGE_K} AS r,
+                       count(*) AS n
+                FROM trades GROUP BY 1
+            ),
+            total AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM res),
+            folds AS (SELECT unnest(range({PURGE_K})) AS fold)
+            SELECT f.fold,
+                   CAST(coalesce(t.n, 0) AS BIGINT) AS n_test,
+                   CAST(coalesce(p.n, 0) + coalesce(q.n, 0) AS BIGINT)
+                       AS n_embargoed,
+                   CAST(tt.n_total - coalesce(t.n, 0) - coalesce(p.n, 0)
+                        - coalesce(q.n, 0) AS BIGINT) AS n_train,
+                   round((tt.n_total - coalesce(t.n, 0) - coalesce(p.n, 0)
+                          - coalesce(q.n, 0))::DOUBLE
+                         / tt.n_total::DOUBLE, 6) AS train_frac
+            FROM folds f
+            LEFT JOIN res t ON t.r = f.fold
+            LEFT JOIN res p
+              ON p.r = (f.fold + 1) % {PURGE_K}
+            LEFT JOIN res q
+              ON q.r = (f.fold - 1 + {PURGE_K})
+                       % {PURGE_K}
+            CROSS JOIN total tt
+            ORDER BY f.fold
+        """
+register("purged_kfold", q_purged_kfold, PURGED_KFOLD_SQL)
+
+
 # --- microstructure estimators -------------------------------------------------
 
 def q_microstructure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,6 +1820,41 @@ def q_microstructure(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("amihud_x1e6"),
         )
     )
+
+
+# microstructure panel: identical lag windows, moment aggregates,
+# and the covariance-sign no-estimate case
+MICROSTRUCTURE_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            d0 AS (
+                SELECT symbol, timestamp, trade_id, price, volume,
+                       lag(price) OVER w AS p_prev,
+                       price - lag(price) OVER w AS dp,
+                       CAST(CASE WHEN side = 'B' THEN volume
+                                 ELSE -volume END AS DOUBLE) AS signed_vol
+                FROM trades
+                WINDOW w AS (PARTITION BY symbol ORDER BY timestamp, trade_id)
+            ),
+            d AS (
+                SELECT *, lag(dp) OVER (PARTITION BY symbol
+                    ORDER BY timestamp, trade_id) AS dp_prev
+                FROM d0
+            )
+            SELECT symbol, count(*) AS n_changes,
+                   round(CASE WHEN covar_samp(dp, dp_prev)
+                                   < CAST(0 AS DOUBLE)
+                              THEN CAST(2.0 AS DOUBLE)
+                                   * sqrt(-covar_samp(dp, dp_prev)) END, 6)
+                       AS roll_spread,
+                   round(regr_slope(dp, signed_vol) * 1e6, 6)
+                       AS kyle_lambda_x1e6,
+                   round(avg(abs(dp) / p_prev / volume::DOUBLE) * 1e6, 6)
+                       AS amihud_x1e6
+            FROM d
+            WHERE dp IS NOT NULL AND p_prev > 0 AND volume > 0
+            GROUP BY symbol ORDER BY symbol
+        """
+register("microstructure", q_microstructure, MICROSTRUCTURE_SQL)
 
 
 # --- candlestick patterns ------------------------------------------------------
@@ -1192,14 +1939,78 @@ def q_candlestick_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# candlestick census over the same bars CTE shape as ohlc_bars;
+# identical round-4 inputs, identical IEEE shape tests, lag() over
+# the canonical (symbol, bar) order
+CANDLESTICK_PATTERNS_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol, timestamp // 60000000000 AS bar, price, volume,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp, trade_id) AS rn_a,
+                       row_number() OVER (PARTITION BY symbol,
+                                              timestamp // 60000000000
+                                          ORDER BY timestamp DESC,
+                                              trade_id DESC) AS rn_d
+                FROM trades
+            ),
+            bars AS (
+                SELECT symbol, bar,
+                       round(max(CASE WHEN rn_a = 1 THEN price END), 4)
+                           AS open,
+                       round(max(price), 4) AS high,
+                       round(min(price), 4) AS low,
+                       round(max(CASE WHEN rn_d = 1 THEN price END), 4)
+                           AS close
+                FROM r GROUP BY symbol, bar
+            ),
+            lagged AS (
+                SELECT *,
+                       lag(open) OVER w AS p_open,
+                       lag(close) OVER w AS p_close,
+                       abs(close - open) AS body,
+                       high - low AS rng,
+                       high - greatest(open, close) AS upper,
+                       least(open, close) - low AS lower
+                FROM bars
+                WINDOW w AS (PARTITION BY symbol ORDER BY bar)
+            )
+            SELECT symbol,
+                   count(*) AS n_bars,
+                   CAST(sum(CASE WHEN rng > 0 AND body <= rng * 0.1
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_doji,
+                   CAST(sum(CASE WHEN body > 0 AND lower >= body * 2
+                                  AND upper <= body
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_hammer,
+                   CAST(sum(CASE WHEN body > 0 AND upper >= body * 2
+                                  AND lower <= body
+                            THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_shooting_star,
+                   CAST(sum(CASE WHEN p_close < p_open AND close > open
+                                  AND open <= p_close AND close >= p_open
+                            THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_bull_engulf,
+                   CAST(sum(CASE WHEN p_close > p_open AND close < open
+                                  AND open >= p_close AND close <= p_open
+                            THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_bear_engulf
+            FROM lagged GROUP BY symbol ORDER BY symbol
+        """
+register("candlestick_patterns", q_candlestick_patterns, CANDLESTICK_PATTERNS_SQL)
+
+
 def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point alarms per symbol (operators/changepoint.py):
     the batch applyInPandas escape hatch — the alarm-reset recursion is
     not prefix-sum decomposable, so each symbol's bounded bar series
     runs through an Arrow-batched pandas loop in exact int64 fixed-point
     and a DuckDB RECURSIVE CTE replays it bit-for-bit."""
-    from marketstream_etl_spark.operators.changepoint import (
-        cusum_changepoints,
-    )
+    return changepoint.cusum_changepoints(load_trades(spark, sf_dir, fan_out=True))
 
-    return cusum_changepoints(load_trades(spark, sf_dir, fan_out=True))
+
+register(
+    "cusum_changepoints",
+    q_cusum_changepoints,
+    changepoint.cusum_changepoints_sql().format(TRADES_CTE=TRADES_CTE),
+)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.operators import graph
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.sources.tables import load_table
 
 
@@ -46,6 +48,25 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag", "l_linestatus")
     )
+
+
+TPCH_Q1_SQL = """
+            SELECT l_returnflag, l_linestatus,
+                round(sum(l_quantity), 4) AS sum_qty,
+                round(sum(l_extendedprice), 4) AS sum_base_price,
+                round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+                round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4)
+                    AS sum_charge,
+                round(avg(l_quantity), 6) AS avg_qty,
+                round(avg(l_extendedprice), 6) AS avg_price,
+                round(avg(l_discount), 6) AS avg_disc,
+                count(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+            GROUP BY l_returnflag, l_linestatus
+            ORDER BY l_returnflag, l_linestatus
+        """
+register("tpch_q1", q1_pricing_summary, TPCH_Q1_SQL)
 
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,6 +96,21 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
     )
+
+
+TPCH_Q3_SQL = """
+            SELECT l_orderkey, o_orderdate, o_orderpriority,
+                round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            WHERE c_mktsegment = 'BUILDING'
+              AND o_orderdate < TIMESTAMP '1995-03-15'
+              AND l_shipdate > TIMESTAMP '1995-03-15'
+            GROUP BY l_orderkey, o_orderdate, o_orderpriority
+            ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10
+        """
+register("tpch_q3", q3_shipping_priority, TPCH_Q3_SQL)
 
 
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,6 +146,24 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q5_SQL = """
+            SELECT n_name,
+                round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN supplier ON l_suppkey = s_suppkey
+                         AND c_nationkey = s_nationkey
+            JOIN nation ON s_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            WHERE r_name = 'ASIA'
+              AND o_orderdate >= TIMESTAMP '1996-01-01'
+              AND o_orderdate < TIMESTAMP '1997-01-01'
+            GROUP BY n_name ORDER BY revenue DESC, n_name
+        """
+register("tpch_q5", q5_local_supplier_volume, TPCH_Q5_SQL)
+
+
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure filter + single aggregate — the predicate-pushdown
     showcase (all three filters reach the parquet scan)."""
@@ -128,6 +182,17 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+
+
+TPCH_Q6_SQL = """
+            SELECT round(sum(l_extendedprice * l_discount), 4) AS revenue
+            FROM lineitem
+            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              AND l_shipdate < TIMESTAMP '1997-01-01'
+              AND l_discount BETWEEN 0.05 AND 0.07
+              AND l_quantity < 24
+        """
+register("tpch_q6", q6_revenue_forecast, TPCH_Q6_SQL)
 
 
 def q_top_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,6 +219,24 @@ def q_top_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_brand", "p_partkey", "revenue", "rank")
         .orderBy("p_brand", "rank")
     )
+
+
+TOP_PARTS_BY_REVENUE_SQL = """
+            WITH rev AS (
+                SELECT p_brand, p_partkey,
+                    round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+                FROM lineitem JOIN part ON l_partkey = p_partkey
+                GROUP BY p_brand, p_partkey
+            ),
+            ranked AS (
+                SELECT *, row_number() OVER (PARTITION BY p_brand
+                    ORDER BY revenue DESC, p_partkey) AS rank
+                FROM rev
+            )
+            SELECT p_brand, p_partkey, revenue, CAST(rank AS INTEGER) AS rank
+            FROM ranked WHERE rank <= 3 ORDER BY p_brand, rank
+        """
+register("top_parts_by_revenue", q_top_parts_by_revenue, TOP_PARTS_BY_REVENUE_SQL)
 
 
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,6 +266,23 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q9_SQL = """
+            SELECT n_name AS nation,
+                   CAST(year(o_orderdate) AS INTEGER) AS o_year,
+                   round(sum(l_extendedprice * (1 - l_discount)
+                             - p_retailprice * l_quantity * 0.5), 4)
+                       AS sum_profit
+            FROM lineitem
+            JOIN part ON l_partkey = p_partkey
+            JOIN supplier ON l_suppkey = s_suppkey
+            JOIN nation ON s_nationkey = n_nationkey
+            JOIN orders ON l_orderkey = o_orderkey
+            WHERE p_name LIKE '%widget%'
+            GROUP BY 1, 2 ORDER BY nation, o_year DESC
+        """
+register("tpch_q9", q9_product_profit, TPCH_Q9_SQL)
+
+
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by revenue lost to returns."""
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -209,6 +309,21 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q10_SQL = """
+            SELECT c_custkey, c_name, n_name,
+                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+            WHERE l_returnflag = 'R'
+              AND o_orderdate >= TIMESTAMP '1995-10-01'
+              AND o_orderdate < TIMESTAMP '1996-01-01'
+            GROUP BY 1, 2, 3 ORDER BY revenue DESC, c_custkey LIMIT 20
+        """
+register("tpch_q10", q10_returned_items, TPCH_Q10_SQL)
+
+
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promo revenue share — conditional aggregation ratio."""
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -228,6 +343,18 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("promo_revenue_pct")
         )
     )
+
+
+TPCH_Q14_SQL = """
+            SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
+                       THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
+                   / sum(l_extendedprice * (1 - l_discount)), 6)
+                       AS promo_revenue_pct
+            FROM lineitem JOIN part ON l_partkey = p_partkey
+            WHERE l_shipdate >= TIMESTAMP '1995-09-01'
+              AND l_shipdate < TIMESTAMP '1995-10-01'
+        """
+register("tpch_q14", q14_promo_revenue, TPCH_Q14_SQL)
 
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,6 +384,21 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q18_SQL = """
+            WITH big AS (
+                SELECT l_orderkey, sum(l_quantity) AS total_qty
+                FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 100
+            )
+            SELECT c_name, c_custkey, l_orderkey, o_orderdate, o_totalprice,
+                   round(total_qty, 4) AS total_qty
+            FROM big
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            ORDER BY o_totalprice DESC, l_orderkey LIMIT 20
+        """
+register("tpch_q18", q18_large_orders, TPCH_Q18_SQL)
+
+
 def q_order_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: order-priority counts for orders having at least one
     lineitem — EXISTS via left-semi join."""
@@ -271,6 +413,17 @@ def q_order_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("order_count"))
         .orderBy("o_orderpriority")
     )
+
+
+TPCH_Q4_SEMIJOIN_SQL = """
+            SELECT o_orderpriority, count(*) AS order_count
+            FROM orders
+            WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+              AND o_orderdate < TIMESTAMP '1996-10-01'
+              AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+            GROUP BY o_orderpriority ORDER BY o_orderpriority
+        """
+register("tpch_q4_semijoin", q_order_priority_count, TPCH_Q4_SEMIJOIN_SQL)
 
 
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,6 +468,29 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
+
+
+TPCH_Q7_SQL = """
+            SELECT supp_nation, cust_nation, l_year,
+                   round(sum(volume), 4) AS revenue
+            FROM (
+                SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+                       CAST(year(l_shipdate) AS INTEGER) AS l_year,
+                       l_extendedprice * (1 - l_discount) AS volume
+                FROM lineitem
+                JOIN orders ON l_orderkey = o_orderkey
+                JOIN customer ON o_custkey = c_custkey
+                JOIN supplier ON l_suppkey = s_suppkey
+                JOIN nation n1 ON s_nationkey = n1.n_nationkey
+                JOIN nation n2 ON c_nationkey = n2.n_nationkey
+                WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+                  AND l_shipdate < TIMESTAMP '1998-01-01'
+                  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+                    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+            )
+            GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+        """
+register("tpch_q7", q7_volume_shipping, TPCH_Q7_SQL)
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,6 +538,32 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q8_SQL = """
+            SELECT o_year,
+                   round(sum(CASE WHEN supp_nation = 'NATION_3'
+                                  THEN volume ELSE 0.0 END) / sum(volume), 6)
+                       AS mkt_share
+            FROM (
+                SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
+                       l_extendedprice * (1 - l_discount) AS volume,
+                       n2.n_name AS supp_nation
+                FROM lineitem
+                JOIN part ON l_partkey = p_partkey
+                JOIN orders ON l_orderkey = o_orderkey
+                JOIN customer ON o_custkey = c_custkey
+                JOIN nation n1 ON c_nationkey = n1.n_nationkey
+                JOIN region ON n1.n_regionkey = r_regionkey
+                JOIN supplier ON l_suppkey = s_suppkey
+                JOIN nation n2 ON s_nationkey = n2.n_nationkey
+                WHERE r_name = 'AMERICA' AND p_type = 'STANDARD'
+                  AND o_orderdate >= TIMESTAMP '1996-01-01'
+                  AND o_orderdate < TIMESTAMP '1998-01-01'
+            )
+            GROUP BY o_year ORDER BY o_year
+        """
+register("tpch_q8", q8_market_share, TPCH_Q8_SQL)
+
+
 def q12_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (adapted: testdata lineitem has no commit/receipt
     dates or shipmode, SURVEY §1.2) — bucket lines by order→ship lag and
@@ -387,6 +589,24 @@ def q12_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q12_SHIPLAG_SQL = """
+            SELECT CASE WHEN datediff('day', o_orderdate, l_shipdate) < 30
+                            THEN 'fast'
+                        WHEN datediff('day', o_orderdate, l_shipdate) < 90
+                            THEN 'medium'
+                        ELSE 'slow' END AS ship_bucket,
+                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                                 THEN 1 ELSE 0 END) AS BIGINT)
+                       AS high_priority_count,
+                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                                 THEN 0 ELSE 1 END) AS BIGINT)
+                       AS low_priority_count
+            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+            GROUP BY 1 ORDER BY 1
+        """
+register("tpch_q12_shiplag", q12_ship_lag, TPCH_Q12_SHIPLAG_SQL)
+
+
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13: distribution of customers by order count — LEFT OUTER
     join (customers with zero orders must appear) then two-level agg."""
@@ -402,6 +622,18 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("custdist"))
         .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
+
+
+TPCH_Q13_SQL = """
+            SELECT c_count, count(*) AS custdist
+            FROM (
+                SELECT c_custkey, count(o_orderkey) AS c_count
+                FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
+                GROUP BY c_custkey
+            )
+            GROUP BY c_count ORDER BY custdist DESC, c_count DESC
+        """
+register("tpch_q13", q13_order_count_distribution, TPCH_Q13_SQL)
 
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,6 +665,24 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q15_SQL = """
+            WITH revenue AS (
+                SELECT l_suppkey AS supplier_no,
+                       round(sum(l_extendedprice * (1 - l_discount)), 4)
+                           AS total_revenue
+                FROM lineitem
+                WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+                  AND l_shipdate < TIMESTAMP '1996-04-01'
+                GROUP BY l_suppkey
+            )
+            SELECT s_suppkey, s_name, total_revenue
+            FROM revenue JOIN supplier ON supplier_no = s_suppkey
+            WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+            ORDER BY s_suppkey
+        """
+register("tpch_q15", q15_top_supplier, TPCH_Q15_SQL)
+
+
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17: average yearly revenue lost if small-quantity orders for
     one brand were not filled — the correlated scalar subquery
@@ -456,6 +706,24 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+
+
+TPCH_Q17_SQL = """
+            WITH branded AS (
+                SELECT l_partkey, l_quantity, l_extendedprice
+                FROM lineitem JOIN part ON l_partkey = p_partkey
+                WHERE p_brand = 'Brand#1'
+            ),
+            avg_qty AS (
+                SELECT l_partkey AS a_partkey,
+                       avg(l_quantity) * 0.5 AS half_avg_qty
+                FROM branded GROUP BY 1
+            )
+            SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
+            FROM branded JOIN avg_qty ON l_partkey = a_partkey
+            WHERE l_quantity < half_avg_qty
+        """
+register("tpch_q17", q17_small_quantity_revenue, TPCH_Q17_SQL)
 
 
 def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,6 +758,19 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q19_SQL = """
+            SELECT round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem JOIN part ON l_partkey = p_partkey
+            WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+                   AND l_quantity BETWEEN 1 AND 11)
+               OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
+                   AND l_quantity BETWEEN 10 AND 20)
+               OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 50
+                   AND l_quantity BETWEEN 20 AND 30)
+        """
+register("tpch_q19", q19_disjunctive_predicates, TPCH_Q19_SQL)
+
+
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: customers with above-average positive balance and
     no order since 2000 — scalar-subquery average (broadcast 1-row cross
@@ -514,6 +795,20 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_nationkey")
     )
+
+
+TPCH_Q22_SQL = """
+            SELECT c_nationkey, count(*) AS numcust,
+                   round(sum(c_acctbal), 4) AS totacctbal
+            FROM customer
+            WHERE c_acctbal > (
+                    SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
+              AND NOT EXISTS (
+                    SELECT 1 FROM orders WHERE o_custkey = c_custkey
+                      AND o_orderdate >= TIMESTAMP '2000-01-01')
+            GROUP BY c_nationkey ORDER BY c_nationkey
+        """
+register("tpch_q22", q22_idle_customers, TPCH_Q22_SQL)
 
 
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -558,6 +853,29 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q21_SQL = """
+            WITH j AS (
+                SELECT l_orderkey, l_suppkey,
+                       datediff('day', o_orderdate, l_shipdate) > 90 AS late
+                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+                WHERE o_orderstatus = 'F'
+            ),
+            per_order AS (
+                SELECT l_orderkey,
+                       count(DISTINCT l_suppkey) AS n_supp,
+                       count(DISTINCT CASE WHEN late THEN l_suppkey END)
+                           AS n_late_supp,
+                       max(CASE WHEN late THEN l_suppkey END) AS late_supp
+                FROM j GROUP BY l_orderkey
+            )
+            SELECT s_name, count(*) AS numwait
+            FROM per_order JOIN supplier ON late_supp = s_suppkey
+            WHERE n_supp > 1 AND n_late_supp = 1
+            GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20
+        """
+register("tpch_q21", q21_waiting_suppliers, TPCH_Q21_SQL)
+
+
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (adapted: no partsupp table — the part↔supplier
     relation is derived from lineitem): for each STANDARD part of size
@@ -596,6 +914,29 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q2_SQL = """
+            WITH ps AS (
+                SELECT DISTINCT l_partkey, l_suppkey
+                FROM lineitem JOIN part ON l_partkey = p_partkey
+                WHERE p_type = 'STANDARD' AND p_size >= 25
+            ),
+            pss AS (
+                SELECT l_partkey, s_suppkey, s_name, s_acctbal
+                FROM ps JOIN supplier ON l_suppkey = s_suppkey
+            ),
+            mins AS (
+                SELECT l_partkey AS m_partkey, min(s_acctbal) AS min_bal
+                FROM pss GROUP BY 1
+            )
+            SELECT round(s_acctbal, 4) AS s_acctbal, s_name, p_partkey, p_name
+            FROM pss
+            JOIN mins ON l_partkey = m_partkey AND s_acctbal = min_bal
+            JOIN part ON l_partkey = p_partkey
+            ORDER BY s_acctbal, p_partkey, s_name LIMIT 100
+        """
+register("tpch_q2", q2_min_cost_supplier, TPCH_Q2_SQL)
+
+
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (adapted: shipped revenue stands in for partsupp
     stock value): parts whose revenue from NATION_5 suppliers exceeds
@@ -622,6 +963,27 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q11_SQL = """
+            WITH base AS (
+                SELECT l_partkey,
+                       l_extendedprice * (1 - l_discount) AS rev
+                FROM lineitem
+                JOIN supplier ON l_suppkey = s_suppkey
+                JOIN nation ON s_nationkey = n_nationkey
+                WHERE n_name = 'NATION_5'
+            ),
+            per_part AS (
+                SELECT l_partkey, sum(rev) AS part_value
+                FROM base GROUP BY l_partkey
+            )
+            SELECT l_partkey, round(part_value, 4) AS part_value
+            FROM per_part
+            WHERE part_value > (SELECT sum(part_value) * 0.001 FROM per_part)
+            ORDER BY part_value DESC, l_partkey
+        """
+register("tpch_q11", q11_important_stock, TPCH_Q11_SQL)
+
+
 def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier count per (brand, type, size
     bucket) for parts not of Brand#5, excluding suppliers with negative
@@ -644,6 +1006,20 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "size_bucket")
     )
+
+
+TPCH_Q16_SQL = """
+            SELECT p_brand, p_type,
+                   p_size - p_size % 10 AS size_bucket,
+                   count(DISTINCT l_suppkey) AS supplier_cnt
+            FROM lineitem JOIN part ON l_partkey = p_partkey
+            WHERE p_brand <> 'Brand#5'
+              AND l_suppkey NOT IN (
+                    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+            GROUP BY 1, 2, 3
+            ORDER BY supplier_cnt DESC, p_brand, p_type, size_bucket
+        """
+register("tpch_q16", q16_supplier_count, TPCH_Q16_SQL)
 
 
 def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,14 +1062,43 @@ def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TPCH_Q20_SQL = """
+            WITH shipped AS (
+                SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
+                FROM lineitem JOIN part ON l_partkey = p_partkey
+                WHERE p_name LIKE '%widget%'
+                  AND l_shipdate >= TIMESTAMP '1997-01-01'
+                  AND l_shipdate < TIMESTAMP '1998-01-01'
+                GROUP BY 1, 2
+            ),
+            avg_per_part AS (
+                SELECT l_partkey AS a_partkey, avg(qty) * 0.5 AS half_avg
+                FROM shipped GROUP BY 1
+            ),
+            heavy AS (
+                SELECT DISTINCT l_suppkey
+                FROM shipped JOIN avg_per_part ON l_partkey = a_partkey
+                WHERE qty > half_avg
+            )
+            SELECT s_suppkey, s_name
+            FROM supplier
+            JOIN nation ON s_nationkey = n_nationkey
+            WHERE n_name = 'NATION_7'
+              AND s_suppkey IN (SELECT l_suppkey FROM heavy)
+            ORDER BY s_suppkey
+        """
+register("tpch_q20", q20_heavy_shippers, TPCH_Q20_SQL)
+
+
 def q_part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle participation in the part co-purchase graph
     (operators/graph.py::part_triangles): degree-ordered wedge
     enumeration — the scalable motif-counting shape (each edge oriented
     low→high (degree, id); closure via one composite-key equi-join)."""
-    from marketstream_etl_spark.operators.graph import part_triangles
+    return graph.part_triangles(load_table(spark, sf_dir, "lineitem"))
 
-    return part_triangles(load_table(spark, sf_dir, "lineitem"))
+
+register("part_triangles", q_part_triangles, graph.part_triangles_sql())
 
 
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,6 +1106,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py::link_prediction): hub-capped wedge enumeration,
     fixed-point resource-allocation scores, anti-join against known
     edges, integer-first top-k."""
-    from marketstream_etl_spark.operators.graph import link_prediction
+    return graph.link_prediction(load_table(spark, sf_dir, "lineitem"))
 
-    return link_prediction(load_table(spark, sf_dir, "lineitem"))
+
+register("link_prediction", q_link_prediction, graph.link_prediction_sql())

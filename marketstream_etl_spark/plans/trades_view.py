@@ -46,6 +46,98 @@ TRADES_CTE = """
     FROM events
 """
 
+# Shared DuckDB fragments over the trades view; keep in lockstep with
+# operators/validation.py and operators/indicators.py.
+REASON_CASE = """
+    CASE
+        WHEN NOT coalesce(regexp_full_match(symbol, '[A-Z]{1,10}'), false)
+            THEN 'invalid symbol'
+        WHEN NOT coalesce(price > 0 AND price < 1000000.0, false)
+            THEN 'invalid price'
+        WHEN NOT coalesce(volume > 0, false) THEN 'invalid volume'
+        WHEN NOT coalesce(side IN ('B','S','N'), false) THEN 'invalid side'
+        WHEN NOT coalesce("type" IN ('M','L','I'), false) THEN 'invalid type'
+        WHEN NOT coalesce("timestamp" > 0, false) THEN 'invalid timestamp'
+        ELSE NULL
+    END
+"""
+
+VALID_WHERE = """
+    regexp_full_match(symbol, '[A-Z]{1,10}') AND price > 0
+    AND price < 1000000.0 AND volume > 0 AND side IN ('B','S','N')
+    AND "type" IN ('M','L','I') AND "timestamp" > 0
+"""
+
+# Rolling per-row indicators over valid trades (window SQL); shared by the
+# rolling_indicators and asof_enrich oracles.
+ROLLING_SQL_BODY = """
+chg AS (
+    SELECT trade_id, symbol, "timestamp", price, volume,
+           price - lag(price) OVER (PARTITION BY symbol
+               ORDER BY "timestamp", trade_id) AS change
+    FROM valid
+),
+roll AS (
+    SELECT trade_id, symbol, "timestamp",
+        avg(price) OVER w5 AS sma,
+        CASE WHEN count(change) OVER w5 < 1 THEN 50.0
+             WHEN sum(CASE WHEN change < 0 THEN -change ELSE 0 END) OVER w5 = 0.0
+                 THEN 100.0
+             ELSE 100.0 - 100.0 / (1.0 +
+                 (sum(CASE WHEN change > 0 THEN change ELSE 0 END) OVER w5
+                     / count(change) OVER w5)
+               / (sum(CASE WHEN change < 0 THEN -change ELSE 0 END) OVER w5
+                     / count(change) OVER w5))
+        END AS rsi,
+        sum(price * volume) OVER wrun
+            / sum(CAST(volume AS DOUBLE)) OVER wrun AS vwap
+    FROM chg
+    WINDOW
+        w5 AS (PARTITION BY symbol ORDER BY "timestamp", trade_id
+               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
+        wrun AS (PARTITION BY symbol ORDER BY "timestamp", trade_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+"""
+
+# Per-symbol indicator snapshot with exact reference semantics
+# (TechnicalIndicators.hpp:79-330); see operators/indicators.py.
+INDICATORS_SQL = f"""
+WITH trades AS ({TRADES_CTE}),
+valid AS (SELECT * FROM trades WHERE {VALID_WHERE}),
+ann AS (
+    SELECT symbol, price, volume,
+        row_number() OVER (PARTITION BY symbol
+                           ORDER BY "timestamp" DESC, trade_id DESC) AS rn_desc,
+        count(*) OVER (PARTITION BY symbol) AS n,
+        price - lag(price) OVER (PARTITION BY symbol
+                                 ORDER BY "timestamp", trade_id) AS change
+    FROM valid
+),
+agg AS (
+    SELECT symbol, max(n) AS n,
+        avg(CASE WHEN rn_desc <= least(5, n) THEN price END) AS sma_raw,
+        sum(CASE WHEN rn_desc <= least(5, n - 1) AND change > 0
+                 THEN change ELSE 0 END) AS gain_sum,
+        sum(CASE WHEN rn_desc <= least(5, n - 1) AND change < 0
+                 THEN -change ELSE 0 END) AS loss_sum,
+        sum(price * volume) AS pv,
+        sum(CAST(volume AS DOUBLE)) AS v
+    FROM ann GROUP BY symbol
+)
+SELECT symbol,
+    round(sma_raw, 6) AS sma,
+    round(CASE WHEN n < 2 OR least(5, n) <= 1 THEN 50.0
+               WHEN loss_sum = 0.0 THEN 100.0
+               ELSE 100.0 - 100.0 / (1.0 +
+                    (gain_sum / CAST(least(5, n - 1) AS DOUBLE))
+                  / (loss_sum / CAST(least(5, n - 1) AS DOUBLE)))
+          END, 6) AS rsi,
+    round(CASE WHEN v = 0 THEN 0.0 ELSE pv / v END, 6) AS vwap,
+    CAST(least(5, n) AS INTEGER) AS period
+FROM agg
+"""
+
 
 def trades_from_events(events: DataFrame) -> DataFrame:
     """Map the events table onto the canonical Trade schema (see module doc)."""

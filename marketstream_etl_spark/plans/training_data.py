@@ -1,6 +1,7 @@
 """Training-data pipeline queries (north-star surface): dedup, similarity
 search, text analysis, multimodal — (spark, sf_dir) -> DataFrame wrappers
-over the operators, paired with DuckDB oracle SQL in __spark_entry__.
+over the operators, each registered with its DuckDB oracle SQL right after
+the function (``registry.register``).
 """
 
 from __future__ import annotations
@@ -10,13 +11,27 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.operators import dedup, similarity, text
+from marketstream_etl_spark.functions.hashing import h32_sql, shingles_sql, tokens_sql
+from marketstream_etl_spark.operators import (
+    dedup,
+    fusion,
+    graph,
+    lm,
+    novelty,
+    relevance,
+    similarity,
+    sketch,
+    text,
+    winnow,
+)
 from marketstream_etl_spark.operators.multimodal import (
     extract_features,
     media_from_documents,
     media_metadata,
 )
-from marketstream_etl_spark.sources.tables import load_table
+from marketstream_etl_spark.registry import register
+from marketstream_etl_spark.sources import binary_assets, formats
+from marketstream_etl_spark.sources.tables import load_table, table_row_count
 
 
 def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -29,6 +44,11 @@ def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(
+    "text_analysis", q_text_analysis, text.analyze_documents_sql() + " ORDER BY doc_id"
+)
+
+
 def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing (emails/phones → placeholders) with found-counts and a
     redacted-text checksum; deterministic PII is injected first (the docs
@@ -36,6 +56,9 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/text.inject_pii for the contract."""
     docs = load_table(spark, sf_dir, "documents")
     return text.redact_pii(text.inject_pii(docs))
+
+
+register("pii_redaction", q_pii_redaction, text.pii_redaction_sql())
 
 
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,14 +78,25 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+DOC_REPETITION_SQL = f"""
+            SELECT doc_id, round(rep, 6) AS rep_3gram,
+                   (rep >= 0.2) AS flag_repetitive
+            FROM (SELECT doc_id, {text.repetition_sql('text')} AS rep
+                  FROM documents)
+            ORDER BY doc_id
+        """
+register("doc_repetition", q_doc_repetition, DOC_REPETITION_SQL)
+
+
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch token heavy hitters: exact top-20 with the sketch
     estimates and the CMS error-bound flag (operators/sketch.py — the
     fixed-size, map-side-mergeable alternative to a full vocabulary
     shuffle at corpus scale)."""
-    from marketstream_etl_spark.operators.sketch import cms_heavy_hitters
+    return sketch.cms_heavy_hitters(load_table(spark, sf_dir, "documents"))
 
-    return cms_heavy_hitters(load_table(spark, sf_dir, "documents"))
+
+register("cms_heavy_hitters", q_cms_heavy_hitters, sketch.CMS_HEAVY_HITTERS_SQL)
 
 
 def q_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,9 +106,19 @@ def q_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(
+    "dedup_exact_docs",
+    q_dedup_exact_docs,
+    dedup.EXACT_DEDUP_SQL + " ORDER BY fingerprint",
+)
+
+
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-Jaccard near-dup pairs via the DF-capped inverted index."""
     return dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
+
+
+register("dedup_ngram_jaccard", q_dedup_ngram_jaccard, dedup.NGRAM_JACCARD_SQL)
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,9 +129,15 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.containment_pairs(load_table(spark, sf_dir, "documents"))
 
 
+register("containment_pairs", q_containment_pairs, dedup.CONTAINMENT_PAIRS_SQL)
+
+
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup pairs; exact-Jaccard verify on candidates only."""
     return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+
+
+register("dedup_minhash_lsh", q_dedup_minhash_lsh, dedup.minhash_lsh_pairs_sql())
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,10 +145,11 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash(load_table(spark, sf_dir, "documents"))
 
 
+register("simhash", q_simhash, dedup.simhash_sql() + " ORDER BY doc_id")
+
+
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-pairs: pigeonhole byte-chunk equi-join on the 32-bit signature."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     # footer row count = free planner hint → no eager counting job
     return dedup.simhash_near_pairs(
         load_table(spark, sf_dir, "documents"),
@@ -106,14 +157,23 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register("simhash_pairs", q_simhash_pairs, dedup.simhash_near_pairs_sql())
+
+
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k per query vector (the ANN correctness baseline)."""
     return similarity.ann_bruteforce(load_table(spark, sf_dir, "embeddings"))
 
 
+register("ann_bruteforce", q_ann_bruteforce, similarity.ann_bruteforce_sql())
+
+
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k: broadcast centroids, nprobe bucket probe."""
     return similarity.ann_ivf(load_table(spark, sf_dir, "embeddings"))
+
+
+register("ann_ivf", q_ann_ivf, similarity.ann_ivf_sql())
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,15 +183,33 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(
+    "embedding_neardup", q_embedding_neardup, similarity.embedding_neardup_pairs_sql()
+)
+
+
+def _gate_rows() -> int:
+    """Footer row count of the sf0.01 embeddings table the oracles run on.
+    Read on first use, so importing this module reads no files."""
+    return table_row_count("/root/testdata/sf0.01", "embeddings")
+
+
 def q_embedding_neardup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide near-dup via IVF buckets (scale path; see operator).
     The footer row count sizes the codebook so buckets stay ~constant."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     return similarity.embedding_neardup_ivf(
         load_table(spark, sf_dir, "embeddings"),
         approx_rows=table_row_count(sf_dir, "embeddings"),
     )
+
+
+# codebook size derives from the gate SF's footer row count on
+# BOTH sides, so Spark and the oracle bucket identically
+register(
+    "embedding_neardup_ivf",
+    q_embedding_neardup_ivf,
+    lambda: similarity.embedding_neardup_ivf_sql(approx_rows=_gate_rows()),
+)
 
 
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,6 +233,22 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TRAIN_TEST_SPLIT_SQL = """
+            WITH b AS (
+                SELECT doc_id,
+                    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                        AS BIGINT) % 100 AS bucket
+                FROM documents
+            )
+            SELECT CASE WHEN bucket < 80 THEN 'train'
+                        WHEN bucket < 90 THEN 'val'
+                        ELSE 'test' END AS split,
+                   count(*) AS n_docs, min(doc_id) AS first_doc
+            FROM b GROUP BY 1 ORDER BY split
+        """
+register("train_test_split", q_train_test_split, TRAIN_TEST_SPLIT_SQL)
+
+
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sample: up to 50 docs per lang, chosen by
     hash rank (not rand()) so the sample is reproducible and shardable.
@@ -176,6 +270,22 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", "doc_id", F.col("rk").alias("sample_rank"))
         .orderBy("lang", "sample_rank")
     )
+
+
+STRATIFIED_SAMPLE_SQL = """
+            WITH ranked AS (
+                SELECT doc_id, lang,
+                    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                        AS BIGINT) AS _h,
+                    row_number() OVER (PARTITION BY lang
+                        ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS
+                        VARCHAR)), 1, 8)) AS BIGINT), doc_id) AS rk
+                FROM documents
+            )
+            SELECT lang, doc_id, CAST(rk AS INTEGER) AS sample_rank
+            FROM ranked WHERE rk <= 50 ORDER BY lang, sample_rank
+        """
+register("stratified_sample", q_stratified_sample, STRATIFIED_SAMPLE_SQL)
 
 
 QUALITY_MIN = 0.30
@@ -219,6 +329,34 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CORPUS_CURATION_SQL = f"""
+            WITH analyzed AS ({text.analyze_documents_sql()}),
+            quality AS (
+                SELECT * FROM analyzed WHERE quality_score >= 0.30
+            ),
+            keep_exact AS (
+                SELECT fingerprint, min(doc_id) AS doc_id
+                FROM quality GROUP BY 1
+            ),
+            survivors AS (
+                SELECT q.* FROM quality q
+                JOIN keep_exact k
+                  ON q.fingerprint = k.fingerprint AND q.doc_id = k.doc_id
+            ),
+            lsh AS (SELECT * FROM ({dedup.minhash_lsh_pairs_sql()})),
+            drop_b AS (SELECT DISTINCT doc_b AS doc_id FROM lsh),
+            final AS (
+                SELECT * FROM survivors
+                WHERE doc_id NOT IN (SELECT doc_id FROM drop_b)
+            )
+            SELECT lang_pred, count(*) AS n_docs,
+                   CAST(sum(bpe_ish_tokens) AS BIGINT) AS total_tokens,
+                   round(avg(quality_score), 6) AS avg_quality
+            FROM final GROUP BY 1 ORDER BY lang_pred
+        """
+register("corpus_curation", q_corpus_curation, CORPUS_CURATION_SQL)
+
+
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measure, don't guess: recall@5 of the IVF index against the exact
     brute-force ranking, per query — the quality metric a 100 TB similarity
@@ -251,12 +389,55 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ANN_IVF_RECALL_SQL = f"""
+            WITH exact AS (
+                SELECT query_id, neighbor_id FROM ({similarity.ann_bruteforce_sql()})
+            ),
+            approx AS (
+                SELECT query_id, neighbor_id FROM ({similarity.ann_ivf_sql()})
+            ),
+            hits AS (
+                SELECT e.query_id, count(*) AS hits
+                FROM exact e JOIN approx a
+                  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+                GROUP BY 1
+            ),
+            totals AS (SELECT query_id, count(*) AS k FROM exact GROUP BY 1)
+            SELECT t.query_id,
+                   round(coalesce(h.hits, 0) / t.k, 6) AS recall_at_5
+            FROM totals t LEFT JOIN hits h ON t.query_id = h.query_id
+            ORDER BY t.query_id
+        """
+register("ann_ivf_recall", q_ann_ivf_recall, ANN_IVF_RECALL_SQL)
+
+
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over MinHash-LSH near-dup pairs: one row per
     duplicate cluster (representative = min doc_id, member count) — the
     iterative-algorithm surface (driver-bounded label propagation)."""
     pairs = dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
     return dedup.cluster_report(pairs)
+
+
+# connected components via recursive transitive closure — the
+# LSH near-dup graph is tiny, so full closure is fine oracle-side;
+# Spark side converges by iterative min-label propagation.
+DEDUP_CLUSTERS_SQL = f"""
+            WITH RECURSIVE pairs AS MATERIALIZED ({dedup.minhash_lsh_pairs_sql()}),
+            edges AS MATERIALIZED (
+                SELECT doc_a AS src, doc_b AS dst FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs
+            ),
+            reach(id, lab) AS (
+                SELECT src, src FROM edges
+                UNION
+                SELECT e.src, r.lab FROM edges e JOIN reach r ON e.dst = r.id
+            ),
+            comp AS (SELECT id, min(lab) AS cluster_rep FROM reach GROUP BY id)
+            SELECT cluster_rep, count(*) AS n_docs, max(id) AS max_doc
+            FROM comp GROUP BY cluster_rep ORDER BY cluster_rep
+        """
+register("dedup_clusters", q_dedup_clusters, DEDUP_CLUSTERS_SQL)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,10 +460,78 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# multimodal_features: the stub decoder is acc[i%8] += byte over the
+# ASCII payload then /= total — exact integer sums in doubles, so the
+# DuckDB replay hash-matches the mapInPandas path bit for bit.
+MULTIMODAL_FEATURES_SQL = """
+            WITH pos AS (
+                -- uncorrelated series (DuckDB can't lateral-join
+                -- generate_series on a column); docs are < 4096 bytes
+                SELECT i FROM generate_series(0, 4095) s(i)
+            ),
+            bytes AS (
+                -- byte-exact: byte i of the utf-8 payload via hex-string
+                -- slicing (DuckDB lacks blob subscripting/md5(blob)), so
+                -- this matches Spark's encode(text) even for non-ASCII
+                SELECT doc_id AS media_id,
+                       (pos.i % 8) AS dim,
+                       CAST(('0x' || substr(hex(encode(text)),
+                            CAST(pos.i * 2 + 1 AS INTEGER), 2)) AS INTEGER) AS b
+                FROM documents, pos
+                WHERE pos.i < octet_length(encode(text))
+            ),
+            acc AS (
+                SELECT media_id, dim, CAST(sum(b) AS DOUBLE) AS a
+                FROM bytes GROUP BY 1, 2
+            ),
+            feat AS (
+                SELECT media_id,
+                       round(max(CASE WHEN dim = 0 THEN a END) / sum(a), 6) AS f0,
+                       round(max(CASE WHEN dim = 1 THEN a END) / sum(a), 6) AS f1,
+                       round(max(CASE WHEN dim = 2 THEN a END) / sum(a), 6) AS f2,
+                       round(max(CASE WHEN dim = 3 THEN a END) / sum(a), 6) AS f3,
+                       round(max(CASE WHEN dim = 4 THEN a END) / sum(a), 6) AS f4,
+                       round(max(CASE WHEN dim = 5 THEN a END) / sum(a), 6) AS f5,
+                       round(max(CASE WHEN dim = 6 THEN a END) / sum(a), 6) AS f6,
+                       round(max(CASE WHEN dim = 7 THEN a END) / sum(a), 6) AS f7
+                FROM acc GROUP BY media_id
+            )
+            SELECT d.doc_id AS media_id,
+                   CASE WHEN d.doc_id % 3 = 0 THEN 'png'
+                        WHEN d.doc_id % 3 = 1 THEN 'jpeg'
+                        ELSE 'wav' END AS media_type,
+                   CAST(octet_length(encode(d.text)) AS INTEGER) AS n_bytes,
+                   f.f0, f.f1, f.f2, f.f3, f.f4, f.f5, f.f6, f.f7
+            FROM documents d JOIN feat f ON f.media_id = d.doc_id
+            ORDER BY media_id
+        """
+register("multimodal_features", q_multimodal_features, MULTIMODAL_FEATURES_SQL)
+
+
 def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JVM-side binary metadata (length/checksum/magic sniff) — oracle-able."""
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
     return media_metadata(media)
+
+
+# multimodal_metadata: payload bytes are the utf-8 text, so DuckDB
+# computes the same metadata from the string directly (strlen = byte
+# length; md5 hashes the utf-8 bytes in both engines).
+MULTIMODAL_METADATA_SQL = """
+            SELECT doc_id AS media_id,
+                CASE WHEN doc_id % 3 = 0 THEN 'png'
+                     WHEN doc_id % 3 = 1 THEN 'jpeg'
+                     ELSE 'wav' END AS media_type,
+                CAST(strlen(text) AS INTEGER) AS n_bytes,
+                md5(text) AS checksum,
+                CASE WHEN hex(encode(substr(text, 1, 4))) = '52494646' THEN 'wav'
+                     WHEN hex(encode(substr(text, 1, 4))) = '47494638' THEN 'gif'
+                     WHEN hex(encode(substr(text, 1, 3))) = 'FFD8FF' THEN 'jpeg'
+                     WHEN hex(encode(substr(text, 1, 4))) = '89504E47' THEN 'png'
+                     ELSE 'unknown' END AS sniffed_type
+            FROM documents ORDER BY media_id
+        """
+register("multimodal_metadata", q_multimodal_metadata, MULTIMODAL_METADATA_SQL)
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,9 +550,32 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# frame sampling: char slices == byte slices ONLY for ASCII corpora
+# (this DuckDB has no md5(blob), so the checksum must hash VARCHAR);
+# tests/test_multimodal.py::test_corpus_is_ascii guards the
+# precondition loudly if regenerated testdata ever breaks it.
+# min doc length 48 → k is always 4 frames of n//4 bytes.
+MULTIMODAL_FRAMES_SQL = """
+            WITH media AS (
+                SELECT doc_id AS media_id, text,
+                       strlen(text) // 4 AS step
+                FROM documents
+            )
+            SELECT media_id, CAST(i AS INTEGER) AS frame_idx,
+                   CAST(step AS INTEGER) AS frame_bytes,
+                   md5(substr(text, i * step + 1, step)) AS checksum
+            FROM media, generate_series(0, 3) s(i)
+            ORDER BY media_id, frame_idx
+        """
+register("multimodal_frames", q_multimodal_frames, MULTIMODAL_FRAMES_SQL)
+
+
 def q_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector-corpus health stats (counts, norms, centroid norm)."""
     return similarity.embedding_stats(load_table(spark, sf_dir, "embeddings"))
+
+
+register("embedding_stats", q_embedding_stats, similarity.embedding_stats_sql())
 
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,6 +603,19 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_total"), "token")
         .limit(50)
     )
+
+
+VOCAB_TOPK_SQL = f"""
+            WITH toks AS (
+                SELECT doc_id, unnest({tokens_sql("text")}) AS token
+                FROM documents
+            )
+            SELECT token, count(*) AS n_total,
+                   count(DISTINCT doc_id) AS n_docs
+            FROM toks GROUP BY token
+            ORDER BY n_total DESC, token LIMIT 50
+        """
+register("vocab_topk", q_vocab_topk, VOCAB_TOPK_SQL)
 
 
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,6 +685,30 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CONTAMINATION_SQL = f"""
+            WITH sh AS (
+                SELECT doc_id,
+                    {h32_sql("CAST(doc_id AS VARCHAR)")} % 20 = 0 AS is_bench,
+                    list_distinct({shingles_sql(tokens_sql("text"), dedup.SHINGLE_K)}) AS s
+                FROM documents
+            ),
+            bench AS (
+                SELECT DISTINCT unnest(s) AS sh FROM sh WHERE is_bench
+            ),
+            corpus AS (
+                SELECT doc_id, len(s) AS n_shingles, unnest(s) AS sh
+                FROM sh WHERE NOT is_bench
+            )
+            SELECT doc_id, any_value(n_shingles) AS n_shingles,
+                   count(*) AS n_overlap,
+                   round(count(*) / CAST(any_value(n_shingles) AS DOUBLE), 4)
+                       AS contamination
+            FROM corpus JOIN bench USING (sh)
+            GROUP BY doc_id ORDER BY doc_id
+        """
+register("contamination", q_contamination, CONTAMINATION_SQL)
+
+
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic seeded corpus shuffle + streaming sequence packing.
 
@@ -443,6 +752,30 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SEQUENCE_PACKING_SQL = f"""
+            WITH docs AS (
+                SELECT doc_id,
+                    len({tokens_sql("text")}) AS n_tokens,
+                    {h32_sql("CAST(doc_id AS VARCHAR)")} % 8 AS lane,
+                    md5('pack42:' || CAST(doc_id AS VARCHAR)) AS sk
+                FROM documents
+            ),
+            packed AS (
+                SELECT lane,
+                    CAST(floor((sum(n_tokens) OVER w - n_tokens) / 2048.0)
+                         AS BIGINT) AS bin,
+                    n_tokens
+                FROM docs
+                WINDOW w AS (PARTITION BY lane ORDER BY sk
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            )
+            SELECT lane, bin, count(*) AS n_docs,
+                   CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
+            FROM packed GROUP BY lane, bin ORDER BY lane, bin
+        """
+register("sequence_packing", q_sequence_packing, SEQUENCE_PACKING_SQL)
+
+
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking: split every document into overlapping
     fixed-token windows (size 64, stride 48), the standard pre-tokenization
@@ -479,6 +812,24 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CHUNK_DOCUMENTS_SQL = f"""
+            WITH toks AS (
+                SELECT doc_id, {tokens_sql("text")} AS tk FROM documents
+            ),
+            chunks AS (
+                SELECT doc_id, len(tk) AS n, tk,
+                       unnest(range(0, len(tk), 48)) AS s
+                FROM toks WHERE len(tk) > 0
+            )
+            SELECT doc_id,
+                   CAST(s // 48 AS INTEGER) AS chunk_idx,
+                   CAST(least(64, n - s) AS INTEGER) AS n_chunk_tokens,
+                   md5(array_to_string(tk[s+1 : s+64], ' ')) AS checksum
+            FROM chunks ORDER BY doc_id, chunk_idx
+        """
+register("chunk_documents", q_chunk_documents, CHUNK_DOCUMENTS_SQL)
+
+
 def q_udtf_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (operators/udtf_ops.py): top-3 terms per document via a
     LATERAL table function — the user-extension point of SURVEY §2.9.  The
@@ -488,6 +839,29 @@ def q_udtf_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return doc_top_terms(spark, docs)
+
+
+# the UDTF's imperative expansion re-derived relationally
+UDTF_DOC_TERMS_SQL = """
+            WITH toks AS (
+                SELECT doc_id, unnest(string_split(text, ' ')) AS term
+                FROM documents
+            ),
+            counts AS (
+                SELECT doc_id, term, count(*) AS cnt
+                FROM toks GROUP BY doc_id, term
+            ),
+            ranked AS (
+                SELECT doc_id, term, cnt,
+                       row_number() OVER (PARTITION BY doc_id
+                                          ORDER BY cnt DESC, term)
+                           AS term_rank
+                FROM counts
+            )
+            SELECT doc_id, term, cnt, term_rank FROM ranked
+            WHERE term_rank <= 3 ORDER BY doc_id, term_rank
+        """
+register("udtf_doc_terms", q_udtf_doc_terms, UDTF_DOC_TERMS_SQL)
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,6 +894,24 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("chars_kept"),
         )
     )
+
+
+# identical md5 threshold -> bit-identical sample membership
+WEIGHTED_SAMPLE_SQL = """
+            SELECT source, count(*) AS n_docs,
+                   CAST(sum(CASE WHEN
+                       CAST(('0x' || substr(md5('mix' || doc_id), 1, 8))
+                            AS BIGINT) % 1000
+                       < (CAST(substr(source, 4) AS INTEGER) + 1) * 50
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+                   CAST(sum(CASE WHEN
+                       CAST(('0x' || substr(md5('mix' || doc_id), 1, 8))
+                            AS BIGINT) % 1000
+                       < (CAST(substr(source, 4) AS INTEGER) + 1) * 50
+                       THEN n_chars ELSE 0 END) AS BIGINT) AS chars_kept
+            FROM documents GROUP BY source ORDER BY source
+        """
+register("weighted_sample", q_weighted_sample, WEIGHTED_SAMPLE_SQL)
 
 
 BOILERPLATE_NEWSLETTER = (
@@ -588,6 +980,39 @@ def q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sentence-level exact dedup: every sentence seen >= 2 times,
+# keyed by the normalized-content fingerprint; boilerplate is
+# injected deterministically (inject→detect, see q_sentence_dedup)
+SENTENCE_DEDUP_SQL = f"""
+            WITH injected AS (
+                SELECT doc_id,
+                       text || CASE
+                           WHEN doc_id % 7 = 0
+                               THEN '{BOILERPLATE_NEWSLETTER}'
+                           WHEN doc_id % 11 = 0
+                               THEN '{BOILERPLATE_COPYRIGHT}'
+                           ELSE '' END AS text
+                FROM documents
+            ),
+            sents AS (
+                SELECT doc_id, trim(s) AS sent
+                FROM (SELECT doc_id,
+                             unnest(regexp_split_to_array(text, '[.!?]+'))
+                                 AS s
+                      FROM injected)
+                WHERE length(trim(s)) >= 20
+            )
+            SELECT {text.fingerprint_sql("sent")} AS fp,
+                   count(*) AS n_occurrences,
+                   count(DISTINCT doc_id) AS n_docs,
+                   min(sent) AS sample_sentence
+            FROM sents GROUP BY 1
+            HAVING count(*) >= 2
+            ORDER BY n_occurrences DESC, fp LIMIT 50
+        """
+register("sentence_dedup", q_sentence_dedup, SENTENCE_DEDUP_SQL)
+
+
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FineWeb-style model-based quality filter: a fixed linear model over
     the analysis features (stop-word ratio up-weights, punctuation noise
@@ -613,6 +1038,24 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(score, 6).alias("quality_prob"),
         (score >= 0.5).alias("keep"),
     )
+
+
+# fixed linear model + RATIONAL sigmoid z/(1+|z|) — deliberately
+# no exp/ln, so both engines agree bit-for-bit (see the query doc)
+QUALITY_CLASSIFIER_SQL = f"""
+            WITH analyzed AS ({text.analyze_documents_sql()}),
+            scored AS (
+                SELECT doc_id,
+                       (-1.5 + 4.0 * stop_ratio - 6.0 * punct_ratio
+                        + 0.01 * LEAST(n_tokens, 200)) AS z
+                FROM analyzed
+            )
+            SELECT doc_id,
+                   round(0.5 + 0.5 * z / (1.0 + abs(z)), 6) AS quality_prob,
+                   (0.5 + 0.5 * z / (1.0 + abs(z))) >= 0.5 AS keep
+            FROM scored ORDER BY doc_id
+        """
+register("quality_classifier", q_quality_classifier, QUALITY_CLASSIFIER_SQL)
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,6 +1126,54 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# delta-shard near-dedup over the LSH pair set: the ~10% "incoming
+# shard" is h32('shard:'||doc_id)%10 == 9 on both engines
+INCREMENTAL_DEDUP_SQL = f"""
+            WITH lsh AS ({dedup.minhash_lsh_pairs_sql()}),
+            flagged AS (
+                SELECT doc_a, doc_b,
+                       ({h32_sql("'shard:' || CAST(doc_a AS VARCHAR)")}
+                            % 10 = 9) AS new_a,
+                       ({h32_sql("'shard:' || CAST(doc_b AS VARCHAR)")}
+                            % 10 = 9) AS new_b
+                FROM lsh
+            ),
+            dup_corpus AS (
+                SELECT DISTINCT doc_id FROM (
+                    SELECT doc_a AS doc_id FROM flagged
+                    WHERE new_a AND NOT new_b
+                    UNION ALL
+                    SELECT doc_b FROM flagged WHERE new_b AND NOT new_a
+                )
+            ),
+            dup_shard AS (
+                SELECT DISTINCT doc_b AS doc_id FROM flagged
+                WHERE new_a AND new_b
+                  AND doc_b NOT IN (SELECT doc_id FROM dup_corpus)
+            ),
+            new_docs AS (
+                SELECT doc_id, source FROM documents
+                WHERE {h32_sql("'shard:' || CAST(doc_id AS VARCHAR)")}
+                      % 10 = 9
+            ),
+            marked AS (
+                SELECT source,
+                       CASE WHEN doc_id IN (SELECT doc_id FROM dup_corpus)
+                            THEN 1 ELSE 0 END AS c_dup,
+                       CASE WHEN doc_id IN (SELECT doc_id FROM dup_shard)
+                            THEN 1 ELSE 0 END AS s_dup
+                FROM new_docs
+            )
+            SELECT source, count(*) AS n_incoming,
+                   CAST(sum(c_dup) AS BIGINT) AS n_dup_corpus,
+                   CAST(sum(s_dup) AS BIGINT) AS n_dup_shard,
+                   CAST(count(*) - sum(c_dup) - sum(s_dup) AS BIGINT)
+                       AS n_survivors
+            FROM marked GROUP BY source ORDER BY source
+        """
+register("incremental_dedup", q_incremental_dedup, INCREMENTAL_DEDUP_SQL)
+
+
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication matrix: for every unordered source pair,
     how many near-duplicate doc pairs (MinHash-LSH) span them — the
@@ -718,6 +1209,24 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("jaccard"), 6).alias("avg_jaccard"),
         )
     )
+
+
+# which-crawls-overlap matrix over the LSH near-dup pairs
+SOURCE_OVERLAP_SQL = f"""
+            WITH lsh AS ({dedup.minhash_lsh_pairs_sql()}),
+            attached AS (
+                SELECT LEAST(sa.source, sb.source) AS source_a,
+                       GREATEST(sa.source, sb.source) AS source_b,
+                       l.jaccard
+                FROM lsh l
+                JOIN documents sa ON sa.doc_id = l.doc_a
+                JOIN documents sb ON sb.doc_id = l.doc_b
+            )
+            SELECT source_a, source_b, count(*) AS n_dup_pairs,
+                   round(avg(jaccard), 6) AS avg_jaccard
+            FROM attached GROUP BY 1, 2 ORDER BY 1, 2
+        """
+register("source_overlap", q_source_overlap, SOURCE_OVERLAP_SQL)
 
 
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,6 +1273,29 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# one BPE-trainer iteration: adjacent-symbol pair counts weighted
+# by word frequency, top-20 merge candidates (ties broken by pair)
+BPE_MERGE_CANDIDATES_SQL = f"""
+            WITH words AS (
+                SELECT w AS word, count(*) AS cnt
+                FROM (SELECT unnest({tokens_sql("text")}) AS w
+                      FROM documents)
+                GROUP BY w
+            ),
+            pos AS (
+                SELECT word, cnt,
+                       unnest(range(1, length(word))) AS i
+                FROM words WHERE length(word) >= 2
+            )
+            SELECT substr(word, CAST(i AS INTEGER), 1) AS left_sym,
+                   substr(word, CAST(i AS INTEGER) + 1, 1) AS right_sym,
+                   CAST(sum(cnt) AS BIGINT) AS pair_count
+            FROM pos GROUP BY 1, 2
+            ORDER BY pair_count DESC, left_sym, right_sym LIMIT 20
+        """
+register("bpe_merge_candidates", q_bpe_merge_candidates, BPE_MERGE_CANDIDATES_SQL)
+
+
 def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order functions over the embedding column — transform
     / aggregate / filter / array_max as pure JVM expressions (no UDF), the
@@ -792,6 +1324,28 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("max_comp"), 4).alias("max_component"),
         )
     )
+
+
+# list_* HOFs mirror transform/aggregate/filter; double casts keep
+# float32 element math off both sides
+ARRAY_FUNCTIONS_SQL = """
+            WITH v AS (
+                SELECT label,
+                       sqrt(list_sum(list_transform(embedding,
+                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                           AS norm,
+                       CAST(len(list_filter(embedding, x -> x > 0))
+                            AS DOUBLE) / len(embedding) AS pos_frac,
+                       CAST(list_max(embedding) AS DOUBLE) AS max_comp
+                FROM embeddings
+            )
+            SELECT CAST(label AS INTEGER) AS label, count(*) AS n_vectors,
+                   round(avg(norm), 4) AS avg_norm,
+                   round(avg(pos_frac), 4) AS avg_pos_frac,
+                   round(max(max_comp), 4) AS max_component
+            FROM v GROUP BY label ORDER BY label
+        """
+register("array_functions", q_array_functions, ARRAY_FUNCTIONS_SQL)
 
 
 MIX_ALPHA = 0.5  # mixture temperature (sqrt-scaling, à la multilingual LMs)
@@ -860,6 +1414,28 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SOURCE_MIXTURE_SQL = f"""
+            WITH per_source AS (
+                SELECT source, count(*) AS n_docs,
+                       CAST(sum(len({tokens_sql("text")})) AS BIGINT)
+                           AS n_tokens
+                FROM documents GROUP BY source
+            ), shared AS (
+                SELECT *, n_tokens * 1.0 / sum(n_tokens) OVER () AS share,
+                       sum(n_tokens) OVER () AS tot
+                FROM per_source
+            ), raw AS (
+                SELECT *, pow(share, {MIX_ALPHA}) AS r
+                FROM shared
+            )
+            SELECT source, n_docs, n_tokens,
+                   round(r / sum(r) OVER (), 6) AS mix_weight,
+                   round(r / sum(r) OVER () * tot / n_tokens, 4) AS epochs
+            FROM raw ORDER BY source
+        """
+register("source_mixture", q_source_mixture, SOURCE_MIXTURE_SQL)
+
+
 VOCAB_SIZE = 64  # top-V token vocabulary; id 0 is reserved for <unk>
 IDS_HEAD = 12
 
@@ -921,6 +1497,45 @@ def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TOKENIZE_IDS_SQL = f"""
+            WITH toks AS (
+                SELECT doc_id, {tokens_sql("text")} AS tks
+                FROM documents
+            ), vocab AS (
+                SELECT token,
+                       row_number() OVER (ORDER BY n DESC, token) AS id
+                FROM (
+                    SELECT u.token AS token, count(*) AS n
+                    FROM toks, unnest(tks) AS u(token)
+                    GROUP BY 1
+                )
+                ORDER BY n DESC, token LIMIT {VOCAB_SIZE}
+            ), tok_pos AS (
+                SELECT doc_id, r.pos AS pos, tks[r.pos] AS token
+                FROM toks, unnest(range(1, len(tks) + 1)) AS r(pos)
+            ), idm AS (
+                SELECT tp.doc_id, tp.pos, coalesce(v.id, 0) AS id
+                FROM tok_pos tp LEFT JOIN vocab v USING (token)
+            ), agg AS (
+                SELECT doc_id,
+                       list(CAST(id AS VARCHAR) ORDER BY pos) AS ids_s,
+                       CAST(sum(CASE WHEN id = 0 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS n_oov
+                FROM idm GROUP BY doc_id
+            )
+            SELECT t.doc_id, len(t.tks) AS n_tokens,
+                   coalesce(a.n_oov, 0) AS n_oov,
+                   coalesce(array_to_string(
+                       a.ids_s[1:{IDS_HEAD}], '-'), '')
+                       AS ids_head,
+                   md5(coalesce(array_to_string(a.ids_s, '-'), ''))
+                       AS ids_md5
+            FROM toks t LEFT JOIN agg a USING (doc_id)
+            ORDER BY t.doc_id
+        """
+register("tokenize_ids", q_tokenize_ids, TOKENIZE_IDS_SQL)
+
+
 def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embedding corpus (operators/similarity.py
     ::kmeans_train) — the offline codebook trainer behind the IVF
@@ -933,6 +1548,9 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.kmeans_train(load_table(spark, sf_dir, "embeddings"))
 
 
+register("kmeans_embeddings", q_kmeans_embeddings, similarity.kmeans_sql())
+
+
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-LSH bucketed ANN (operators/similarity.py::ann_lsh): md5-
     derived ±1 hyperplanes → 16-bit signatures (map-only), hamming-1
@@ -940,6 +1558,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     only.  n_candidates in the output is the measured pruning factor vs
     the brute-force scan the IVF variant also avoids."""
     return similarity.ann_lsh(load_table(spark, sf_dir, "embeddings"))
+
+
+register("ann_lsh", q_ann_lsh, similarity.ann_lsh_sql())
 
 
 def q_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,28 +1571,21 @@ def q_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     step the IVF docstring assumed now exists and is measured, not
     assumed.  The DuckDB oracle replays the full composition (training
     rounds + both index probes + brute-force truth)."""
-    from marketstream_etl_spark.operators.similarity import (
-        N_CENTROIDS,
-        ann_bruteforce_gt_cached,
-        ann_ivf,
-        kmeans_fit,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # ground truth from the shared per-generation cache; the codebook
     # from the kmeans_fit memo — the whole setup is now generation-
     # cached, so the timed query measures the index probes themselves
-    exact = ann_bruteforce_gt_cached(emb).select(
+    exact = similarity.ann_bruteforce_gt_cached(emb).select(
         "query_id", F.col("neighbor_id").alias("exact_n")
     )
-    cents = kmeans_fit(emb, k=N_CENTROIDS)
+    cents = similarity.kmeans_fit(emb, k=similarity.N_CENTROIDS)
     cent_df = spark.createDataFrame(
         [(cid, c) for cid, c in sorted(cents.items())],
         "centroid_id int, cvec array<double>",
     )
     variants = {
-        "recall_sampled": ann_ivf(emb),
-        "recall_trained": ann_ivf(emb, centroids=cent_df),
+        "recall_sampled": similarity.ann_ivf(emb),
+        "recall_trained": similarity.ann_ivf(emb, centroids=cent_df),
     }
     totals = exact.groupBy("query_id").agg(F.count("*").alias("k"))
     out = totals
@@ -999,6 +1613,42 @@ def q_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ANN_IVF_TRAINED_RECALL_SQL = f"""
+            WITH exact AS (
+                SELECT query_id, neighbor_id
+                FROM ({similarity.ann_bruteforce_sql()})
+            ),
+            approx_s AS (
+                SELECT query_id, neighbor_id FROM ({similarity.ann_ivf_sql()})
+            ),
+            approx_t AS (
+                SELECT query_id, neighbor_id FROM ({similarity.ann_ivf_sql(
+                    cent_rel=similarity.kmeans_cent_rel(k=similarity.N_CENTROIDS))})
+            ),
+            totals AS (
+                SELECT query_id, count(*) AS k FROM exact GROUP BY 1
+            ),
+            hs AS (
+                SELECT e.query_id, count(*) AS h FROM exact e
+                JOIN approx_s a ON e.query_id = a.query_id
+                    AND e.neighbor_id = a.neighbor_id GROUP BY 1
+            ),
+            ht AS (
+                SELECT e.query_id, count(*) AS h FROM exact e
+                JOIN approx_t a ON e.query_id = a.query_id
+                    AND e.neighbor_id = a.neighbor_id GROUP BY 1
+            )
+            SELECT t.query_id,
+                   round(coalesce(s.h, 0) / t.k, 6) AS recall_sampled,
+                   round(coalesce(tr.h, 0) / t.k, 6) AS recall_trained
+            FROM totals t
+            LEFT JOIN hs s ON t.query_id = s.query_id
+            LEFT JOIN ht tr ON t.query_id = tr.query_id
+            ORDER BY t.query_id
+        """
+register("ann_ivf_trained_recall", q_ann_ivf_trained_recall, ANN_IVF_TRAINED_RECALL_SQL)
+
+
 def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-level near-dup pairs within 8 edits over the normalized
     80-char lead (operators/dedup.py::edit_distance_pairs) — the fifth
@@ -1006,6 +1656,9 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF cap and shared-gram count prefilter; exact levenshtein on
     candidates only, each O(80^2) bounded."""
     return dedup.edit_distance_pairs(load_table(spark, sf_dir, "documents"))
+
+
+register("dedup_edit_distance", q_dedup_edit_distance, dedup.edit_distance_pairs_sql())
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1016,6 +1669,9 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_pq(load_table(spark, sf_dir, "embeddings"))
 
 
+register("ann_pq", q_ann_pq, similarity.ann_pq_sql())
+
+
 def q_source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the cross-source duplication graph
     (operators/graph.py::source_pagerank): sources sharing near-dup
@@ -1023,10 +1679,11 @@ def q_source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaderboard that orders dedup and weights acquisition.  Runs in 1e-9
     fixed point so the iterative trajectory is bit-exact across engines
     (float rounding modes diverge on this graph's dyadic rationals)."""
-    from marketstream_etl_spark.operators import graph
-
     docs = load_table(spark, sf_dir, "documents")
     return graph.source_pagerank(docs, dedup.minhash_lsh_pairs(docs))
+
+
+register("source_pagerank", q_source_pagerank, graph.source_pagerank_sql())
 
 
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1041,6 +1698,9 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_ivfpq(load_table(spark, sf_dir, "embeddings"))
 
 
+register("ann_ivfpq", q_ann_ivfpq, similarity.ann_ivfpq_sql())
+
+
 def q_ann_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVED-index IVF-PQ (operators/similarity.py::ann_ivfpq_served):
     the √N-codebook regime — index built once per corpus generation
@@ -1048,12 +1708,19 @@ def q_ann_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     it.  The row the one-shot ann_ivfpq docstring has deferred since
     r11: amortized per-batch cost + the same oracle-checkable ADC
     ranking, batch by batch."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     return similarity.ann_ivfpq_served(
         load_table(spark, sf_dir, "embeddings"),
         approx_rows=table_row_count(sf_dir, "embeddings"),
     )
+
+
+# served regime: √N codebook from the gate SF's footer row count
+# on BOTH sides, batches derived arithmetically (see operator)
+register(
+    "ann_ivfpq_served",
+    q_ann_ivfpq_served,
+    lambda: similarity.ann_ivfpq_served_sql(approx_rows=_gate_rows()),
+)
 
 
 def q_embedding_neardup_ivf_capped(
@@ -1065,12 +1732,17 @@ def q_embedding_neardup_ivf_capped(
     audit's grows with duplication density (326M pairs at sf100).  The
     uncapped query stays declared; this is what a downstream collapse
     materializes at scale."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     return similarity.embedding_neardup_ivf_capped(
         load_table(spark, sf_dir, "embeddings"),
         approx_rows=table_row_count(sf_dir, "embeddings"),
     )
+
+
+register(
+    "embedding_neardup_ivf_capped",
+    q_embedding_neardup_ivf_capped,
+    lambda: similarity.embedding_neardup_ivf_capped_sql(approx_rows=_gate_rows()),
+)
 
 
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1078,9 +1750,10 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval / decontamination / hard-negative mining ranking.  Scoring
     is an inverted-index equi-join of broadcast query terms against the
     postings frame — no document is touched unless it shares a term."""
-    from marketstream_etl_spark.operators import relevance
-
     return relevance.bm25_search(load_table(spark, sf_dir, "documents"))
+
+
+register("bm25_search", q_bm25_search, relevance.bm25_search_sql())
 
 
 def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1089,9 +1762,10 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 — shares its postings frame through the rotation cache, attaches
     idf by a term-keyed shuffle join (vocabulary never broadcast), and
     ranks with the salted two-phase top-k."""
-    from marketstream_etl_spark.operators import relevance
-
     return relevance.tfidf_keywords(load_table(spark, sf_dir, "documents"))
+
+
+register("tfidf_keywords", q_tfidf_keywords, relevance.tfidf_keywords_sql())
 
 
 def q_dedup_collapse_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,6 +1775,11 @@ def q_dedup_collapse_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     source mixture's mass."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.collapse_weighted(docs, dedup.minhash_lsh_pairs(docs))
+
+
+register(
+    "dedup_collapse_weighted", q_dedup_collapse_weighted, dedup.collapse_weighted_sql()
+)
 
 
 def q_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,14 +1792,48 @@ def q_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return file_stream_ivf_assign(spark, sf_dir)
 
 
+def stream_ivf_assign_sql(n_centroids: int = 16, dim: int = 64) -> str:
+    """Batch replay of the final streaming state: same deterministic
+    codebook, same (dist, cid) argmin tie-break, same inertia rounding."""
+    return f"""
+        WITH e AS (
+            SELECT vec_id,
+                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+            FROM embeddings
+        ), c AS (
+            SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {n_centroids}
+        ), a AS (
+            SELECT vec_id, cid, dist FROM (
+                SELECT d.*, row_number() OVER (
+                    PARTITION BY vec_id ORDER BY dist, cid) AS rn
+                FROM (
+                    SELECT e.vec_id, c.cid,
+                           list_sum(list_transform(range(1, {dim} + 1),
+                               j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])
+                           )) AS dist
+                    FROM e, c
+                ) d
+            ) WHERE rn = 1
+        )
+        SELECT cid AS bucket, count(*) AS n_vectors,
+               min(vec_id) AS min_vec_id,
+               round(sum(dist), 4) AS inertia
+        FROM a GROUP BY cid ORDER BY bucket
+    """
+
+
+register("streaming_ivf_assign", q_streaming_ivf_assign, stream_ivf_assign_sql())
+
+
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical-LM quality scoring (operators/lm.py::lm_perplexity):
     per-doc perplexity under the corpus's add-one bigram model — the
     CCNet-style filter whose high-perplexity tail is gibberish and
     boilerplate.  Two count groupBys to train, equi-joins to score."""
-    from marketstream_etl_spark.operators import lm
-
     return lm.lm_perplexity(load_table(spark, sf_dir, "documents"))
+
+
+register("lm_perplexity", q_lm_perplexity, lm.lm_perplexity_sql())
 
 
 def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,9 +1841,10 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     native binaryFile source scans the asset directory into (file,
     n_bytes, checksum, magic8) rows — the multimodal pipeline's front
     door, value-checked against spec-derived literals."""
-    from marketstream_etl_spark.sources.binary_assets import binary_ingest
+    return binary_assets.binary_ingest(spark, sf_dir)
 
-    return binary_ingest(spark, sf_dir)
+
+register("binary_ingest", q_binary_ingest, binary_assets.binary_ingest_sql())
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1143,14 +1857,24 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(
+    "embedding_quantize",
+    q_embedding_quantize,
+    similarity.embedding_quantize_error_sql(),
+)
+
+
 def q_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch bad-record quarantine (sources/formats.py::
     json_corrupt_records): PERMISSIVE JSON parsing with a corrupt-record
     column — malformed lines are surfaced, partial parses keep their
     good fields, nothing fails or silently drops."""
-    from marketstream_etl_spark.sources.formats import json_corrupt_records
+    return formats.json_corrupt_records(spark, sf_dir)
 
-    return json_corrupt_records(spark, sf_dir)
+
+register(
+    "json_corrupt_records", q_json_corrupt_records, formats.json_corrupt_records_sql()
+)
 
 
 def q_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1192,6 +1916,21 @@ def q_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+WEIGHTED_RESERVOIR_SQL = f"""
+            WITH keyed AS (
+                SELECT doc_id, source, n_chars,
+                       round(pow(
+                           ({h32_sql("'res' || doc_id")} + 1)
+                               / CAST({2**32 + 1} AS DOUBLE),
+                           CAST(1.0 AS DOUBLE) / greatest(n_chars, 1)), 12) AS res_key
+                FROM documents
+            )
+            SELECT doc_id, source, n_chars, round(res_key, 9) AS res_key
+            FROM keyed ORDER BY res_key DESC, doc_id LIMIT 20
+        """
+register("weighted_reservoir", q_weighted_reservoir, WEIGHTED_RESERVOIR_SQL)
+
+
 def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RELATIVE quality gating: within each source, keep the top 60% of
     docs by quality score (percent_rank >= 0.4) — the per-source quantile
@@ -1203,10 +1942,8 @@ def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the source, so the sort parallelizes across sources at scale."""
     from pyspark.sql import Window
 
-    from marketstream_etl_spark.operators.text import quality_features
-
     docs = load_table(spark, sf_dir, "documents")
-    q = F.round(quality_features(F.col("text"))["quality_score"], 9)
+    q = F.round(text.quality_features(F.col("text"))["quality_score"], 9)
     scored = docs.select("doc_id", "source", q.alias("q"))
     w = Window.partitionBy("source").orderBy("q", "doc_id")
     kept = scored.withColumn("pr", F.percent_rank().over(w)).filter(
@@ -1222,13 +1959,38 @@ def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+QUALITY_PERCENTILE_FILTER_SQL = f"""
+            WITH scored AS (
+                SELECT doc_id, source,
+                       round({text.quality_features_sql("text")["quality_score"]}, 9) AS q
+                FROM documents
+            ),
+            ranked AS (
+                SELECT *, percent_rank() OVER (
+                    PARTITION BY source ORDER BY q, doc_id) AS pr
+                FROM scored
+            )
+            SELECT source, count(*) AS n_kept,
+                   round(min(q), 6) AS min_kept_score,
+                   round(avg(q), 6) AS avg_kept_score
+            FROM ranked WHERE pr >= 0.4
+            GROUP BY source ORDER BY source
+        """
+register(
+    "quality_percentile_filter",
+    q_quality_percentile_filter,
+    QUALITY_PERCENTILE_FILTER_SQL,
+)
+
+
 def q_top_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI collocation discovery (operators/lm.py::top_pmi_bigrams): the
     multi-word units a phrase-merging tokenizer should fuse, from the
     same cached token streams lm_perplexity trains on."""
-    from marketstream_etl_spark.operators import lm
-
     return lm.top_pmi_bigrams(load_table(spark, sf_dir, "documents"))
+
+
+register("top_pmi_bigrams", q_top_pmi_bigrams, lm.top_pmi_bigrams_sql())
 
 
 def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,6 +2020,55 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per = toks.groupBy("source", "token").agg(F.count("*").alias("c"))
     return chi2_by_source(per)
+
+
+# chi-square drift: exact integer counts, IEEE-only float steps,
+# per-term fixed-point floor(x*1e6+0.5) so the sum is
+# order-independent — mirrors q_token_drift step for step
+TOKEN_DRIFT_SQL = f"""
+            WITH toks AS MATERIALIZED (
+                SELECT source, unnest({tokens_sql("text")}) AS token
+                FROM documents
+            ), per AS MATERIALIZED (
+                SELECT source, token, CAST(count(*) AS BIGINT) AS c
+                FROM toks GROUP BY 1, 2
+            ), gcnt AS MATERIALIZED (
+                SELECT token, CAST(sum(c) AS BIGINT) AS cg
+                FROM per GROUP BY 1 HAVING sum(c) >= 5
+            ), tg AS MATERIALIZED (
+                SELECT CAST(sum(cg) AS BIGINT) AS tg FROM gcnt
+            ), kept AS MATERIALIZED (
+                SELECT p.source, p.token, p.c, g.cg
+                FROM per p JOIN gcnt g USING (token)
+            ), totals AS MATERIALIZED (
+                SELECT source, CAST(sum(c) AS BIGINT) AS t,
+                       CAST(sum(cg) AS BIGINT) AS cg_present,
+                       count(*) AS n_tokens
+                FROM kept GROUP BY 1
+            ), present AS (
+                SELECT k.source,
+                       CAST(sum(CAST(floor(
+                           ((k.c::DOUBLE * tg.tg::DOUBLE)
+                              - (tt.t::DOUBLE * k.cg::DOUBLE))
+                           * ((k.c::DOUBLE * tg.tg::DOUBLE)
+                              - (tt.t::DOUBLE * k.cg::DOUBLE))
+                           / (tt.t::DOUBLE * k.cg::DOUBLE * tg.tg::DOUBLE)
+                           * 1e6 + 0.5
+                       ) AS BIGINT)) AS BIGINT) AS chi2_fp
+                FROM kept k
+                JOIN totals tt USING (source)
+                CROSS JOIN tg
+                GROUP BY 1
+            )
+            SELECT t.source, t.n_tokens,
+                   floor((p.chi2_fp::DOUBLE / 1e6
+                          + (t.t::DOUBLE / tg.tg::DOUBLE)
+                            * (tg.tg::DOUBLE - t.cg_present::DOUBLE))
+                         * 1e4 + 0.5) / 1e4 AS chi2
+            FROM totals t JOIN present p USING (source) CROSS JOIN tg
+            ORDER BY t.source
+        """
+register("token_drift", q_token_drift, TOKEN_DRIFT_SQL)
 
 
 def chi2_by_source(per: DataFrame) -> DataFrame:
@@ -1343,8 +2154,6 @@ def q_dedup_family_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     One full-outer join of two already-cached tiny pair frames, then a
     single-row aggregate; both inputs come from their generation caches,
     so this audit is free after any dedup pass has run."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     docs = load_table(spark, sf_dir, "documents")
     mh = (
         dedup.minhash_lsh_pairs(docs)
@@ -1393,6 +2202,37 @@ def q_dedup_family_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# full-outer pair-set agreement over the two family oracles;
+# floor(x*1e6+0.5) mirrors the Spark side's rounding-mode dodge
+DEDUP_FAMILY_AGREEMENT_SQL = f"""
+            WITH mh AS MATERIALIZED (
+                SELECT doc_a, doc_b FROM ({dedup.minhash_lsh_pairs_sql()})
+            ), sh AS MATERIALIZED (
+                SELECT doc_a, doc_b FROM ({dedup.simhash_near_pairs_sql()})
+            ), j AS (
+                SELECT coalesce(m.doc_a, s.doc_a) AS doc_a,
+                       m.doc_a IS NOT NULL AS in_mh,
+                       s.doc_a IS NOT NULL AS in_sh
+                FROM mh m
+                FULL OUTER JOIN sh s
+                  ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b
+            )
+            SELECT CAST(count(*) AS BIGINT) AS n_union,
+                   CAST(sum(CASE WHEN in_mh AND in_sh THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_both,
+                   CAST(sum(CASE WHEN in_mh AND NOT in_sh THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_minhash_only,
+                   CAST(sum(CASE WHEN NOT in_mh AND in_sh THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_simhash_only,
+                   floor(
+                       sum(CASE WHEN in_mh AND in_sh THEN 1 ELSE 0 END)::DOUBLE
+                       / count(*)::DOUBLE * 1e6 + 0.5
+                   ) / 1e6 AS pair_jaccard
+            FROM j
+        """
+register("dedup_family_agreement", q_dedup_family_agreement, DEDUP_FAMILY_AGREEMENT_SQL)
+
+
 def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-cluster purity profile: assign every embedding to its
     trained k-means centroid (similarity.kmeans_fit — the same Lloyd's
@@ -1411,14 +2251,9 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a lexicographic struct max — (n, −label), so ties break on the LOWER
     label exactly like the oracle's ORDER BY n DESC, label; purity uses
     the floor(x·1e6 + 0.5) fixed-point rounding both engines share."""
-    from marketstream_etl_spark.operators.similarity import (
-        kmeans_assign,
-        kmeans_fit,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_fit(emb)
-    labeled = kmeans_assign(emb, cents).join(
+    cents = similarity.kmeans_fit(emb)
+    labeled = similarity.kmeans_assign(emb, cents).join(
         emb.select("vec_id", "label"), "vec_id"
     )
     # k × n_labels bounded; checkpointed so the assignment pass runs once
@@ -1452,6 +2287,55 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# trained-codebook replay (kmeans_cent_rel: same init, 6-dp
+# centroid rounding, (dist, cid) ties) + one assignment pass;
+# majority pick ORDER BY n DESC, label = Spark's (n, -label)
+# struct max; purity floor-fixed-pointed like the Spark side
+CLUSTER_PROFILE_SQL = f"""
+            WITH ev AS MATERIALIZED (
+                SELECT vec_id, label,
+                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                FROM embeddings
+            ), ce AS MATERIALIZED (
+                SELECT vec_id AS cid,
+                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+                FROM {similarity.kmeans_cent_rel()}
+            ), asg AS (
+                SELECT vec_id, label, cid FROM (
+                    SELECT d.*, row_number() OVER (
+                        PARTITION BY vec_id ORDER BY dist, cid) AS rn
+                    FROM (
+                        SELECT e.vec_id, e.label, c.cid,
+                               list_sum(list_transform(
+                                   range(1, {similarity.EMB_DIM} + 1),
+                                   j -> (e.v[j] - c.cv[j])
+                                        * (e.v[j] - c.cv[j])
+                               )) AS dist
+                        FROM ev e, ce c
+                    ) d
+                ) WHERE rn = 1
+            ), pl AS MATERIALIZED (
+                SELECT cid, label, CAST(count(*) AS BIGINT) AS n
+                FROM asg GROUP BY 1, 2
+            ), tot AS (
+                SELECT cid, CAST(sum(n) AS BIGINT) AS n_vectors
+                FROM pl GROUP BY 1
+            ), maj AS (
+                SELECT cid, label AS majority_label, n AS n_major FROM (
+                    SELECT pl.*, row_number() OVER (
+                        PARTITION BY cid ORDER BY n DESC, label) AS rn
+                    FROM pl
+                ) WHERE rn = 1
+            )
+            SELECT t.cid, t.n_vectors, m.majority_label,
+                   floor(m.n_major::DOUBLE / t.n_vectors::DOUBLE * 1e6 + 0.5)
+                       / 1e6 AS purity
+            FROM tot t JOIN maj m USING (cid)
+            ORDER BY t.cid
+        """
+register("cluster_profile", q_cluster_profile, CLUSTER_PROFILE_SQL)
+
+
 def q_ann_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation audit: recall@k of exact
     cosine top-k computed on only the FIRST 16 / 32 of the 64 embedding
@@ -1464,20 +2348,15 @@ def q_ann_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, each truncated variant joined per query; all cosine arithmetic
     is the shared left-to-right double accumulation, truncation is
     F.slice / list-slice so both engines score identical prefixes."""
-    from marketstream_etl_spark.operators.similarity import (
-        ann_bruteforce,
-        ann_bruteforce_gt_cached,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # full-dim ground truth from the shared per-generation cache; the
     # truncated variants below are the op under audit and re-rank live
-    exact = ann_bruteforce_gt_cached(emb).select(
+    exact = similarity.ann_bruteforce_gt_cached(emb).select(
         "query_id", F.col("neighbor_id").alias("exact_n")
     )
     out = exact.groupBy("query_id").agg(F.count("*").alias("k"))
     for d in (16, 32):
-        approx = ann_bruteforce(
+        approx = similarity.ann_bruteforce(
             emb.withColumn("embedding", F.slice("embedding", 1, d))
         ).select("query_id", F.col("neighbor_id").alias("approx_n"))
         hits = (
@@ -1498,6 +2377,53 @@ def q_ann_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "query_id", "recall_d16", "recall_d32"
     )
+
+
+# truncated-prefix recall vs full-dim exact top-k; list slicing
+# embedding[1:d] mirrors Spark's F.slice(embedding, 1, d)
+ANN_TRUNCATED_RECALL_SQL = f"""
+            WITH exact AS MATERIALIZED (
+                SELECT query_id, neighbor_id
+                FROM ({similarity.ann_bruteforce_sql()})
+            ), tot AS (
+                SELECT query_id, CAST(count(*) AS BIGINT) AS k
+                FROM exact GROUP BY 1
+            ), a16 AS MATERIALIZED (
+                SELECT query_id, neighbor_id
+                FROM ({similarity.ann_bruteforce_sql_over(
+                    q_rel=("(SELECT vec_id, embedding[1:16] AS embedding "
+                           f"FROM embeddings WHERE vec_id < {similarity.N_QUERIES})"),
+                    e_rel="(SELECT vec_id, embedding[1:16] AS embedding "
+                          "FROM embeddings)")})
+            ), a32 AS MATERIALIZED (
+                SELECT query_id, neighbor_id
+                FROM ({similarity.ann_bruteforce_sql_over(
+                    q_rel=("(SELECT vec_id, embedding[1:32] AS embedding "
+                           f"FROM embeddings WHERE vec_id < {similarity.N_QUERIES})"),
+                    e_rel="(SELECT vec_id, embedding[1:32] AS embedding "
+                          "FROM embeddings)")})
+            ), h16 AS (
+                SELECT e.query_id, CAST(count(*) AS BIGINT) AS h
+                FROM exact e JOIN a16 a
+                  ON e.query_id = a.query_id
+                 AND e.neighbor_id = a.neighbor_id
+                GROUP BY 1
+            ), h32 AS (
+                SELECT e.query_id, CAST(count(*) AS BIGINT) AS h
+                FROM exact e JOIN a32 a
+                  ON e.query_id = a.query_id
+                 AND e.neighbor_id = a.neighbor_id
+                GROUP BY 1
+            )
+            SELECT t.query_id,
+                   round(coalesce(h16.h, 0) / t.k, 6) AS recall_d16,
+                   round(coalesce(h32.h, 0) / t.k, 6) AS recall_d32
+            FROM tot t
+            LEFT JOIN h16 ON t.query_id = h16.query_id
+            LEFT JOIN h32 ON t.query_id = h32.query_id
+            ORDER BY t.query_id
+        """
+register("ann_truncated_recall", q_ann_truncated_recall, ANN_TRUNCATED_RECALL_SQL)
 
 
 _VERBATIM_K = 13
@@ -1598,13 +2524,11 @@ def q_contamination_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from marketstream_etl_spark.functions.hashing import h32, shingles, tokens
-    from marketstream_etl_spark.operators.dedup import _spread
-
     # small-file corpora arrive as ONE scan partition and the 13-gram
     # work is CPU-bound — spread before the heavy map (measured 4.6 s
     # single-threaded vs sub-second across the cluster at sf0.1; at scale
     # the scan is already parallel and this is a cheap (id, text) shuffle)
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = dedup._spread(load_table(spark, sf_dir, "documents"))
     is_bench = h32(F.col("doc_id").cast("string")) % 20 == 0
     bench_docs = docs.filter(is_bench)
     corpus_docs = docs.filter(~is_bench)
@@ -1704,6 +2628,35 @@ def q_contamination_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# 13-gram verbatim decontamination; floor fixed-point like Spark
+CONTAMINATION_VERBATIM_SQL = f"""
+            WITH sh AS MATERIALIZED (
+                SELECT doc_id,
+                       {h32_sql("CAST(doc_id AS VARCHAR)")} % 20 = 0
+                           AS is_bench,
+                       unnest(list_distinct(
+                           {shingles_sql(tokens_sql("text"), 13)}
+                       )) AS s
+                FROM documents
+            ), b AS (
+                SELECT DISTINCT s FROM sh WHERE is_bench
+            ), agg AS (
+                SELECT c.doc_id,
+                       CAST(count(*) AS BIGINT) AS n_13grams,
+                       CAST(count(b.s) AS BIGINT) AS n_hits
+                FROM (SELECT doc_id, s FROM sh WHERE NOT is_bench) c
+                LEFT JOIN b ON c.s = b.s
+                GROUP BY 1
+            )
+            SELECT doc_id, n_13grams, n_hits,
+                   floor(n_hits::DOUBLE / n_13grams::DOUBLE * 1e6 + 0.5)
+                       / 1e6 AS verbatim_frac
+            FROM agg WHERE n_hits > 0
+            ORDER BY doc_id
+        """
+register("contamination_verbatim", q_contamination_verbatim, CONTAMINATION_VERBATIM_SQL)
+
+
 def q_contamination_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate contamination linkage: corpus documents that are
     MinHash-LSH near-dups OF a benchmark-slice document — the fuzzy
@@ -1744,6 +2697,35 @@ def q_contamination_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# fuzzy decontamination: LSH pairs where exactly one side is bench
+CONTAMINATION_NEARDUP_SQL = f"""
+            WITH pairs AS MATERIALIZED (
+                SELECT * FROM ({dedup.minhash_lsh_pairs_sql()})
+            ), flagged AS (
+                SELECT doc_a, doc_b, jaccard,
+                       {h32_sql("CAST(doc_a AS VARCHAR)")} % 20 = 0
+                           AS bench_a,
+                       {h32_sql("CAST(doc_b AS VARCHAR)")} % 20 = 0
+                           AS bench_b
+                FROM pairs
+            ), linked AS (
+                SELECT doc_a AS doc_id, doc_b AS bench_id, jaccard
+                FROM flagged WHERE bench_b AND NOT bench_a
+                UNION ALL
+                SELECT doc_b AS doc_id, doc_a AS bench_id, jaccard
+                FROM flagged WHERE bench_a AND NOT bench_b
+            )
+            SELECT doc_id,
+                   CAST(count(*) AS BIGINT) AS n_bench_neighbors,
+                   max(jaccard) AS max_jaccard,
+                   min(bench_id) AS first_bench_id
+            FROM linked
+            GROUP BY 1
+            ORDER BY doc_id
+        """
+register("contamination_neardup", q_contamination_neardup, CONTAMINATION_NEARDUP_SQL)
+
+
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix: predicted language (the marker-
     stopword classifier every doc already gets in text_analysis) against
@@ -1779,6 +2761,27 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.join(row_tot, cells["lang"] == row_tot["r_lang"])
         .select("lang", "lang_pred", "n", share.alias("row_share"))
     )
+
+
+LANGID_CONFUSION_SQL = f"""
+            WITH pred AS MATERIALIZED (
+                SELECT doc_id, lang,
+                       {text.lang_id_sql("text")} AS lang_pred
+                FROM documents
+            ), cells AS MATERIALIZED (
+                SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
+                FROM pred GROUP BY 1, 2
+            ), row_tot AS (
+                SELECT lang AS r_lang, CAST(sum(n) AS BIGINT) AS row_n
+                FROM cells GROUP BY 1
+            )
+            SELECT c.lang, c.lang_pred, c.n,
+                   floor(c.n::DOUBLE / t.row_n::DOUBLE * 1e6 + 0.5) / 1e6
+                       AS row_share
+            FROM cells c JOIN row_tot t ON c.lang = t.r_lang
+            ORDER BY c.lang, c.lang_pred
+        """
+register("langid_confusion", q_langid_confusion, LANGID_CONFUSION_SQL)
 
 
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1822,6 +2825,36 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SPLIT_LEAKAGE_SQL = f"""
+            WITH pairs AS MATERIALIZED (
+                SELECT * FROM ({dedup.minhash_lsh_pairs_sql()})
+            ), tagged AS (
+                SELECT jaccard,
+                       CASE WHEN {h32_sql("CAST(doc_a AS VARCHAR)")} % 100 < 80
+                                THEN 'train'
+                            WHEN {h32_sql("CAST(doc_a AS VARCHAR)")} % 100 < 90
+                                THEN 'val'
+                            ELSE 'test' END AS sa,
+                       CASE WHEN {h32_sql("CAST(doc_b AS VARCHAR)")} % 100 < 80
+                                THEN 'train'
+                            WHEN {h32_sql("CAST(doc_b AS VARCHAR)")} % 100 < 90
+                                THEN 'val'
+                            ELSE 'test' END AS sb
+                FROM pairs
+            ), norm AS (
+                SELECT jaccard, least(sa, sb) AS split_a,
+                       greatest(sa, sb) AS split_b
+                FROM tagged
+            )
+            SELECT split_a, split_b,
+                   CAST(count(*) AS BIGINT) AS n_leaked_pairs,
+                   max(jaccard) AS max_jaccard
+            FROM norm WHERE split_a <> split_b
+            GROUP BY 1, 2 ORDER BY 1, 2
+        """
+register("split_leakage", q_split_leakage, SPLIT_LEAKAGE_SQL)
+
+
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot corpus reconciliation: diff the CURRENT documents
     snapshot against the fixed baseline snapshot (sf0.001) by doc_id —
@@ -1862,17 +2895,46 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# two-snapshot reconciliation vs the fixed sf0.001 baseline
+SNAPSHOT_DIFF_SQL = """
+            WITH cur AS (
+                SELECT doc_id, md5(text) AS h_cur FROM documents
+            ), base AS (
+                SELECT doc_id, md5(text) AS h_base
+                FROM '/root/testdata/sf0.001/documents.parquet'
+            ), j AS (
+                SELECT coalesce(c.doc_id, b.doc_id) AS doc_id,
+                       c.h_cur, b.h_base
+                FROM cur c FULL OUTER JOIN base b ON c.doc_id = b.doc_id
+            )
+            SELECT CAST(count(*) AS BIGINT) AS n_union,
+                   CAST(sum(CASE WHEN h_base IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_added,
+                   CAST(sum(CASE WHEN h_cur IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_removed,
+                   CAST(sum(CASE WHEN h_cur IS NOT NULL
+                                  AND h_base IS NOT NULL
+                                  AND h_cur <> h_base
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
+                   CAST(sum(CASE WHEN h_cur = h_base THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_identical
+            FROM j
+        """
+register("snapshot_diff", q_snapshot_diff, SNAPSHOT_DIFF_SQL)
+
+
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+dense retrieval fused by reciprocal-rank fusion
     (operators/fusion.py::hybrid_search_rrf): BM25 inverted-index ranking
     and brute-force cosine ranking, fused with exact-integer RRF scores
     over bounded per-system candidate lists."""
-    from marketstream_etl_spark.operators.fusion import hybrid_search_rrf
-
-    return hybrid_search_rrf(
+    return fusion.hybrid_search_rrf(
         load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
     )
+
+
+register("hybrid_search_rrf", q_hybrid_search_rrf, fusion.hybrid_search_rrf_sql())
 
 
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1880,9 +2942,10 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/novelty.py::ngram_novelty): first-occurrence attribution
     over the shared shingle cache and a bucketed two-phase prefix sum —
     no global single-partition window at any corpus size."""
-    from marketstream_etl_spark.operators.novelty import ngram_novelty
+    return novelty.ngram_novelty(load_table(spark, sf_dir, "documents"))
 
-    return ngram_novelty(load_table(spark, sf_dir, "documents"))
+
+register("ngram_novelty", q_ngram_novelty, novelty.ngram_novelty_sql())
 
 
 def q_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1890,9 +2953,10 @@ def q_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hll_cardinality): per-source distinct-shingle estimates plus the
     cell-wise-MAX merged corpus sketch, audited against exact counts —
     the mergeable cardinality twin of the CMS heavy-hitter sketch."""
-    from marketstream_etl_spark.operators.sketch import hll_cardinality
+    return sketch.hll_cardinality(load_table(spark, sf_dir, "documents"))
 
-    return hll_cardinality(load_table(spark, sf_dir, "documents"))
+
+register("hll_cardinality", q_hll_cardinality, sketch.HLL_CARDINALITY_SQL)
 
 
 def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1901,9 +2965,10 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed 2^16-bit membership sketch and audited against the exact join —
     the broadcast-a-filter (not the raw benchmark) shape that n-gram
     decontamination takes at 100 TB."""
-    from marketstream_etl_spark.operators.sketch import bloom_contamination
+    return sketch.bloom_contamination(load_table(spark, sf_dir, "documents"))
 
-    return bloom_contamination(load_table(spark, sf_dir, "documents"))
+
+register("bloom_contamination", q_bloom_contamination, sketch.bloom_contamination_sql())
 
 
 def q_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1911,9 +2976,10 @@ def q_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-min k-gram fingerprint sets with the shared-substring
     guarantee, paired on shared fingerprints through a DF-capped inverted
     index — the robust-fingerprinting member of the dedup family."""
-    from marketstream_etl_spark.operators.winnow import winnowing_pairs
+    return winnow.winnowing_pairs(load_table(spark, sf_dir, "documents"))
 
-    return winnowing_pairs(load_table(spark, sf_dir, "documents"))
+
+register("winnowing_pairs", q_winnowing_pairs, winnow.winnowing_pairs_sql())
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,12 +2988,17 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-priority within-cluster cosine near-duplicate (keep rule: least
     centroid-similar survives), one relational pass — the embedding-space
     member of the dedup family's collapse stage."""
-    from marketstream_etl_spark.sources.tables import table_row_count
-
     return similarity.semantic_dedup(
         load_table(spark, sf_dir, "embeddings"),
         approx_rows=table_row_count(sf_dir, "embeddings"),
     )
+
+
+register(
+    "semantic_dedup",
+    q_semantic_dedup,
+    lambda: similarity.semantic_dedup_sql(approx_rows=_gate_rows()),
+)
 
 
 def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1935,6 +3006,9 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     readability): exact integer counts, fixed-point scores, integer-banded
     difficulty labels — map-only inside the scan."""
     return text.readability(load_table(spark, sf_dir, "documents"))
+
+
+register("readability_scores", q_readability_scores, text.readability_sql())
 
 
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2004,6 +3078,45 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# robust per-source outlier gate: integer-cleared z>3.5 test
+# (13490·d > 35000·m4), medians exact in half-units
+MAD_OUTLIERS_SQL = """
+            WITH base AS (
+                SELECT source, n_chars FROM documents
+            ),
+            med AS MATERIALIZED (
+                SELECT source,
+                       CAST(median(n_chars) * 2 AS BIGINT) AS m2
+                FROM base GROUP BY source
+            ),
+            d AS MATERIALIZED (
+                SELECT b.source, med.m2,
+                       abs(b.n_chars * 2 - med.m2) AS d
+                FROM base b JOIN med USING (source)
+            ),
+            mad AS MATERIALIZED (
+                SELECT source, CAST(median(d) * 2 AS BIGINT) AS m4
+                FROM d GROUP BY source
+            ),
+            flagged AS (
+                SELECT d.source, d.m2, mad.m4, d.d,
+                       CASE WHEN d.d * 13490 > mad.m4 * 35000
+                                 AND mad.m4 > 0
+                            THEN 1 ELSE 0 END AS is_out
+                FROM d JOIN mad USING (source)
+            )
+            SELECT source, count(*) AS n_docs,
+                   max(m2)::DOUBLE / 2.0 AS med_chars,
+                   max(m4)::DOUBLE / 4.0 AS mad_chars,
+                   CAST(sum(is_out) AS BIGINT) AS n_outliers,
+                   round(CASE WHEN max(m4) > 0 THEN
+                       CAST('1.349' AS DOUBLE) * max(d)::DOUBLE
+                       / max(m4)::DOUBLE END, 6) AS z_max
+            FROM flagged GROUP BY source ORDER BY source
+        """
+register("mad_outliers", q_mad_outliers, MAD_OUTLIERS_SQL)
+
+
 KFOLD_K = 5
 
 
@@ -2055,13 +3168,37 @@ def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# deterministic hash k-fold + stratification chi audit
+KFOLD_ASSIGN_SQL = f"""
+            WITH cells AS MATERIALIZED (
+                SELECT {h32_sql("CAST(doc_id AS VARCHAR)")} % 5 AS fold,
+                       lang, count(*) AS n_docs
+                FROM documents GROUP BY 1, 2
+            ),
+            totals AS (
+                SELECT lang, CAST(sum(n_docs) AS BIGINT) AS lang_total
+                FROM cells GROUP BY lang
+            )
+            SELECT c.fold, c.lang, c.n_docs, t.lang_total,
+                   round(c.n_docs::DOUBLE / t.lang_total::DOUBLE, 6)
+                       AS share,
+                   round(((c.n_docs * 5 - t.lang_total)
+                          * (c.n_docs * 5 - t.lang_total))::DOUBLE
+                         / (t.lang_total * 5)::DOUBLE, 6) AS chi_term
+            FROM cells c JOIN totals t USING (lang)
+            ORDER BY c.fold, c.lang
+        """
+register("kfold_assign", q_kfold_assign, KFOLD_ASSIGN_SQL)
+
+
 def q_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL set algebra (operators/sketch.py::hll_set_ops): pairwise
     source union/intersection/Jaccard from register-max sketch merges
     with integer inclusion-exclusion, audited against exact overlap."""
-    from marketstream_etl_spark.operators.sketch import hll_set_ops
+    return sketch.hll_set_ops(load_table(spark, sf_dir, "documents"))
 
-    return hll_set_ops(load_table(spark, sf_dir, "documents"))
+
+register("hll_set_ops", q_hll_set_ops, sketch.hll_set_ops_sql())
 
 
 ZIPF_TOP_K = 500
@@ -2142,8 +3279,6 @@ def q_zipf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def zipf_audit_sql() -> str:
     """DuckDB replay: identical counts, TakeOrdered top-K, broadcast-rank
     self-join, and regr_* moments."""
-    from marketstream_etl_spark.functions.hashing import tokens_sql
-
     return f"""
         WITH counts AS MATERIALIZED (
             SELECT t AS token, count(*) AS cnt
@@ -2174,6 +3309,9 @@ def zipf_audit_sql() -> str:
                round(regr_r2(ln(cnt), ln(rank)), 6) AS zipf_r2
         FROM ranked
     """
+
+
+register("zipf_audit", q_zipf_audit, zipf_audit_sql())
 
 
 def q_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2227,8 +3365,6 @@ def q_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_entropy_sql() -> str:
     """DuckDB replay: identical fixed-point per-term contributions and
     BIGINT summation."""
-    from marketstream_etl_spark.functions.hashing import tokens_sql
-
     return f"""
         WITH tok AS (
             SELECT source, t, count(*) AS cnt
@@ -2256,6 +3392,9 @@ def source_entropy_sql() -> str:
                    AS type_token_ratio
         FROM per_src ORDER BY source
     """
+
+
+register("source_entropy", q_source_entropy, source_entropy_sql())
 
 
 PAD_BUCKETS = (128, 256, 512, 1024)
@@ -2310,8 +3449,6 @@ def q_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def padding_efficiency_sql() -> str:
     """DuckDB replay: identical bucket CASE chain and integer accounting."""
-    from marketstream_etl_spark.functions.hashing import tokens_sql
-
     cases = " ".join(
         f"WHEN n_tok <= {b} THEN {b}" for b in PAD_BUCKETS
     )
@@ -2338,6 +3475,9 @@ def padding_efficiency_sql() -> str:
                    AS efficiency
         FROM per ORDER BY bucket
     """
+
+
+register("padding_efficiency", q_padding_efficiency, padding_efficiency_sql())
 
 
 # --- classifier evaluation: ROC-AUC + calibration ----------------------------
@@ -2615,6 +3755,10 @@ def roc_auc_sql() -> str:
     """
 
 
+ROC_AUC_SQL = roc_auc_sql()
+register("roc_auc", q_roc_auc, ROC_AUC_SQL)
+
+
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + Expected Calibration Error of the quality
     score against the lang='en' label: CAL_N_BINS equal-width probability
@@ -2783,6 +3927,10 @@ def calibration_ece_sql() -> str:
     """
 
 
+CALIBRATION_ECE_SQL = calibration_ece_sql()
+register("calibration_ece", q_calibration_ece, CALIBRATION_ECE_SQL)
+
+
 # Siddiqi's conventional IV predictiveness bands, e6 fixed-point:
 # < 0.02 useless, < 0.1 weak, < 0.3 medium, else strong.
 IV_CLAMP = 1e-4  # same share-smoothing discipline as the PSI family
@@ -2941,6 +4089,10 @@ def information_value_sql() -> str:
         FROM fixed CROSS JOIN total
         ORDER BY bin
     """
+
+
+INFORMATION_VALUE_SQL = information_value_sql()
+register("information_value", q_information_value, INFORMATION_VALUE_SQL)
 
 
 # --- embedding drift ---------------------------------------------------------
@@ -3144,6 +4296,10 @@ def embedding_drift_sql() -> str:
     """
 
 
+EMBEDDING_DRIFT_SQL = embedding_drift_sql()
+register("embedding_drift", q_embedding_drift, EMBEDDING_DRIFT_SQL)
+
+
 def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood near-dup pairs (operators/dedup.py::snm_pairs)
     — the ninth dedup family: Hernandez-Stolfo SNM with EXACT global sort
@@ -3152,3 +4308,8 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join candidates (n*(w-1) volume), levenshtein verify on
     candidates only."""
     return dedup.snm_pairs(load_table(spark, sf_dir, "documents"))
+
+
+register(
+    "dedup_sorted_neighborhood", q_dedup_sorted_neighborhood, dedup.snm_pairs_sql()
+)

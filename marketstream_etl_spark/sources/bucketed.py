@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.sources.tables import load_table
 
 N_BUCKETS = 8
@@ -92,3 +93,12 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
         )
     )
+
+
+BUCKETED_JOIN_SQL = """
+            SELECT o_orderpriority, count(*) AS n_items,
+                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+            GROUP BY o_orderpriority ORDER BY o_orderpriority
+        """
+register("bucketed_join", q_bucketed_join, BUCKETED_JOIN_SQL)

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.hashing import h32, shingles, tokens
+from marketstream_etl_spark.plans import training_data as batch
+from marketstream_etl_spark.registry import register
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,6 +130,10 @@ def file_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# stream-static contamination must converge to the batch operator
+register("streaming_contamination", file_stream_contamination, batch.CONTAMINATION_SQL)
+
+
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings.parquet as a bounded file-source stream."""
     from marketstream_etl_spark.sources.tables import ensure_engine_confs
@@ -189,36 +195,6 @@ def file_stream_ivf_assign(
     return final.orderBy("bucket")
 
 
-def stream_ivf_assign_sql(n_centroids: int = 16, dim: int = 64) -> str:
-    """Batch replay of the final streaming state: same deterministic
-    codebook, same (dist, cid) argmin tie-break, same inertia rounding."""
-    return f"""
-        WITH e AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), c AS (
-            SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {n_centroids}
-        ), a AS (
-            SELECT vec_id, cid, dist FROM (
-                SELECT d.*, row_number() OVER (
-                    PARTITION BY vec_id ORDER BY dist, cid) AS rn
-                FROM (
-                    SELECT e.vec_id, c.cid,
-                           list_sum(list_transform(range(1, {dim} + 1),
-                               j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])
-                           )) AS dist
-                    FROM e, c
-                ) d
-            ) WHERE rn = 1
-        )
-        SELECT cid AS bucket, count(*) AS n_vectors,
-               min(vec_id) AS min_vec_id,
-               round(sum(dist), 4) AS inertia
-        FROM a GROUP BY cid ORDER BY bucket
-    """
-
-
 def file_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of plans.training_data.q_token_drift: documents
     stream in and per-(source, token) counts accumulate incrementally
@@ -258,6 +234,11 @@ def file_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi2_by_source(per)
 
 
+# streaming twin shares the batch core (chi2_by_source), so the final
+# replayed snapshot must equal the batch statistic exactly
+register("streaming_token_drift", file_stream_token_drift, batch.TOKEN_DRIFT_SQL)
+
+
 def file_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming calibration monitor: documents stream in, each
     micro-batch is scored by the stream-safe quality scorer
@@ -290,6 +271,11 @@ def file_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return calibration_from_counts(spark, state.localCheckpoint(eager=False))
 
 
+# streaming twins drain their complete-mode histograms into the
+# shared integer cores, so they reuse the batch oracles
+register("streaming_calibration", file_stream_calibration, batch.CALIBRATION_ECE_SQL)
+
+
 def file_stream_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ROC-AUC monitor — the calibration twin's ranking
     companion: documents stream in, each micro-batch is scored by the
@@ -315,6 +301,9 @@ def file_stream_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage-truncate before the core's triangular self-join (same
     # DeduplicateRelations guard as file_stream_token_drift)
     return roc_from_counts(spark, state.localCheckpoint(eager=False))
+
+
+register("streaming_roc", file_stream_roc, batch.ROC_AUC_SQL)
 
 
 def file_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,6 +332,11 @@ def file_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb_drift_from_counts(spark, state.localCheckpoint(eager=False))
 
 
+register(
+    "streaming_embedding_drift", file_stream_embedding_drift, batch.EMBEDDING_DRIFT_SQL
+)
+
+
 def file_stream_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Information-Value monitor — the fourth streaming member
     of the classifier-evaluation family (ROC ranks, calibration checks
@@ -364,3 +358,6 @@ def file_stream_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         grp, "stream_iv", sf_dir, output_mode="complete"
     )
     return iv_from_counts(spark, state.localCheckpoint(eager=False))
+
+
+register("streaming_iv", file_stream_iv, batch.INFORMATION_VALUE_SQL)

@@ -23,6 +23,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.plans.trades_view import TRADES_CTE, VALID_WHERE
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.sources.tables import sink_name
 from marketstream_etl_spark.streaming.replay import run_bounded
 
@@ -176,3 +178,16 @@ def file_stream_jdbc_dual_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("symbol")
     )
+
+
+# dual-sink landing: both JDBC tables must reproduce the plain
+# per-symbol GROUP BY over valid trades (exactly-once, end-to-end).
+STREAMING_JDBC_SINK_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            valid AS (SELECT * FROM trades WHERE {VALID_WHERE})
+            SELECT symbol, count(*) AS n_trades,
+                   count(*) AS n_from_counts,
+                   CAST(sum(volume) AS BIGINT) AS total_volume
+            FROM valid GROUP BY symbol ORDER BY symbol
+        """
+register("streaming_jdbc_sink", file_stream_jdbc_dual_sink, STREAMING_JDBC_SINK_SQL)

@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from marketstream_etl_spark.plans.trades_view import TRADES_CTE, VALID_WHERE
+from marketstream_etl_spark.registry import register
+
 DEFAULT_PERIOD = 5
 
 WILDER_PERIOD = 14
@@ -223,3 +226,74 @@ def file_stream_stateful_indicators(spark, sf_dir: str) -> DataFrame:
     ind = streaming_indicators(valid, period=DEFAULT_PERIOD)
     emitted = drain_to_memory(ind, "stream_stateful", sf_dir)
     return final_indicator_snapshot(emitted)
+
+
+# applyInPandasWithState final state on bounded replay == the batch
+# last-N snapshot (the same window math as the `indicators` oracle,
+# plus the running row count)
+STREAMING_STATEFUL_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            valid AS (SELECT * FROM trades WHERE {VALID_WHERE}),
+            ann AS (
+                SELECT symbol, price, volume,
+                    row_number() OVER (PARTITION BY symbol
+                                       ORDER BY "timestamp" DESC, trade_id DESC) AS rn_desc,
+                    count(*) OVER (PARTITION BY symbol) AS n,
+                    price - lag(price) OVER (PARTITION BY symbol
+                                             ORDER BY "timestamp", trade_id) AS change
+                FROM valid
+            ),
+            agg AS (
+                SELECT symbol, max(n) AS n,
+                    avg(CASE WHEN rn_desc <= least(5, n) THEN price END) AS sma_raw,
+                    sum(CASE WHEN rn_desc <= least(5, n - 1) AND change > 0
+                             THEN change ELSE 0 END) AS gain_sum,
+                    sum(CASE WHEN rn_desc <= least(5, n - 1) AND change < 0
+                             THEN -change ELSE 0 END) AS loss_sum,
+                    sum(price * volume) AS pv,
+                    sum(CAST(volume AS DOUBLE)) AS v
+                FROM ann GROUP BY symbol
+            )
+            ,
+            wchg AS (
+                SELECT symbol,
+                    price - lag(price) OVER (PARTITION BY symbol
+                        ORDER BY "timestamp", trade_id) AS change,
+                    row_number() OVER (PARTITION BY symbol
+                        ORDER BY "timestamp", trade_id) - 1 AS j,
+                    count(*) OVER (PARTITION BY symbol) - 1 AS m
+                FROM valid
+            ),
+            wilder AS (
+                SELECT symbol, max(m) AS m,
+                    sum((CASE WHEN m <= 14 THEN 1.0 / m
+                              WHEN j <= 14
+                                  THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
+                              ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
+                         END) * greatest(change, 0.0)) AS ag,
+                    sum((CASE WHEN m <= 14 THEN 1.0 / m
+                              WHEN j <= 14
+                                  THEN power(1.0 - 1.0/14.0, m - 14.0) / 14.0
+                              ELSE (1.0/14.0) * power(1.0 - 1.0/14.0, m - j)
+                         END) * greatest(-change, 0.0)) AS al
+                FROM wchg WHERE change IS NOT NULL GROUP BY symbol
+            )
+            SELECT agg.symbol,
+                n AS n_trades,
+                round(sma_raw, 6) AS sma,
+                round(CASE WHEN n < 2 OR least(5, n) <= 1 THEN 50.0
+                           WHEN loss_sum = 0.0 THEN 100.0
+                           ELSE 100.0 - 100.0 / (1.0 +
+                                (gain_sum / CAST(least(5, n - 1) AS DOUBLE))
+                              / (loss_sum / CAST(least(5, n - 1) AS DOUBLE)))
+                      END, 6) AS rsi,
+                round(CASE WHEN v = 0 THEN 0.0 ELSE pv / v END, 6) AS vwap,
+                CAST(least(5, n) AS INTEGER) AS period,
+                round(CASE WHEN w.m < 1 THEN 50.0
+                           WHEN w.al = 0.0 THEN 100.0
+                           ELSE 100.0 - 100.0 / (1.0 + w.ag / w.al)
+                      END, 4) AS rsi_wilder
+            FROM agg JOIN wilder w ON w.symbol = agg.symbol
+            ORDER BY agg.symbol
+        """
+register("streaming_stateful", file_stream_stateful_indicators, STREAMING_STATEFUL_SQL)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from marketstream_etl_spark.registry import Oracle, register
 from marketstream_etl_spark.schemas import TICK_SCHEMA
 from marketstream_etl_spark.sources.tables import sink_name
 from marketstream_etl_spark.streaming.replay import (
@@ -44,6 +45,34 @@ class EmitterCapExceeded(RuntimeError):
 
 STREAM_EPOCH_NS = 1_698_208_500_000_000_000  # TickServer.hpp:186
 STREAM_SYMBOLS = ["RELIANCE", "TCS", "INFY", "HDFC", "WIPRO"]  # :196
+
+
+def _over_trades(template: str) -> Oracle:
+    """An oracle over the DuckDB trades view, formatted on first use: the
+    view's SQL lives in plans/, which this module does not import at load
+    time, so the tick path stays free of the query plans."""
+
+    def oracle() -> str:
+        from marketstream_etl_spark.plans.trades_view import TRADES_CTE
+
+        return template.format(TRADES_CTE=TRADES_CTE)
+
+    return oracle
+
+
+def _batch_twin(attr: str) -> Oracle:
+    """The batch twin's oracle in plans/advanced.py (a constant or a
+    ``*_sql()`` function), built on first use for the same reason: the
+    streaming twin's final state equals the batch result, so both share
+    one oracle."""
+
+    def oracle() -> str:
+        from marketstream_etl_spark.plans import advanced
+
+        sql = getattr(advanced, attr)
+        return sql() if callable(sql) else sql
+
+    return oracle
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,6 +269,17 @@ def file_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained.orderBy("symbol")
 
 
+# real streaming execution, batch-equivalent answer by construction
+STREAMING_COUNTS_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol, count(*) AS n_ticks,
+                   CAST(sum(volume) AS BIGINT) AS total_volume
+            FROM trades WHERE price > 0 AND volume > 0
+            GROUP BY symbol ORDER BY symbol
+        """)
+register("streaming_counts", file_stream_counts, STREAMING_COUNTS_ORACLE)
+
+
 def file_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST4 with the driver's gate: tumbling 1-minute windowed per-symbol
     stats as a real streaming query (watermark + window + availableNow).
@@ -262,6 +302,20 @@ def file_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = drain_to_memory(out, "stream_windowed", sf_dir, "complete")
     return drained.orderBy("window_start_ns", "symbol")
+
+
+# windowed streaming on bounded replay == batch 1-minute bucketing
+STREAMING_WINDOWED_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE})
+            SELECT "timestamp" - "timestamp" % 60000000000 AS window_start_ns,
+                   symbol, count(*) AS n_ticks,
+                   round(sum(price * volume) / sum(CAST(volume AS DOUBLE)), 6)
+                       AS vwap,
+                   round(avg(price), 6) AS avg_price
+            FROM trades WHERE price > 0 AND volume > 0
+            GROUP BY 1, 2 ORDER BY window_start_ns, symbol
+        """)
+register("streaming_windowed", file_stream_windowed, STREAMING_WINDOWED_ORACLE)
 
 
 def file_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,6 +355,38 @@ def file_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained.orderBy("symbol", "window_start_ns")
 
 
+# streaming windowed OHLC == batch resample on bounded replay;
+# open/close are first/last by (timestamp, trade_id) within the bar
+STREAMING_OHLC_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE}),
+            r AS (
+                SELECT symbol,
+                       "timestamp" - "timestamp" % 60000000000
+                           AS window_start_ns,
+                       price, volume,
+                       row_number() OVER (
+                           PARTITION BY symbol,
+                               "timestamp" - "timestamp" % 60000000000
+                           ORDER BY "timestamp", trade_id) AS rn_a,
+                       row_number() OVER (
+                           PARTITION BY symbol,
+                               "timestamp" - "timestamp" % 60000000000
+                           ORDER BY "timestamp" DESC, trade_id DESC) AS rn_d
+                FROM trades WHERE price > 0 AND volume > 0
+            )
+            SELECT symbol, window_start_ns,
+                   round(max(CASE WHEN rn_a = 1 THEN price END), 4) AS open,
+                   round(max(price), 4) AS high,
+                   round(min(price), 4) AS low,
+                   round(max(CASE WHEN rn_d = 1 THEN price END), 4) AS close,
+                   CAST(sum(volume) AS BIGINT) AS bar_volume,
+                   count(*) AS n_trades
+            FROM r GROUP BY symbol, window_start_ns
+            ORDER BY symbol, window_start_ns
+        """)
+register("streaming_ohlc", file_stream_ohlc, STREAMING_OHLC_ORACLE)
+
+
 def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST6 `parse_errors` as an oracle-checked streaming run: serialize
     the replayed trades to JSON wire frames, deterministically corrupt
@@ -335,6 +421,19 @@ def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     with single_parse_ingest(spark):
         drained = drain_to_memory(out, "stream_deadletter", sf_dir, "complete")
     return drained.orderBy("parse_error")
+
+
+# every 50th frame truncated -> unparseable; volume only from the
+# clean side (corrupt rows carry no fields)
+STREAMING_DEADLETTER_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE})
+            SELECT (trade_id % 50 = 0) AS parse_error,
+                   count(*) AS n_frames,
+                   CAST(sum(CASE WHEN trade_id % 50 <> 0 THEN volume END)
+                        AS BIGINT) AS total_volume
+            FROM trades GROUP BY 1 ORDER BY 1
+        """)
+register("streaming_deadletter", file_stream_deadletter, STREAMING_DEADLETTER_ORACLE)
 
 
 # one definition of the buy→sell pairing semantics for BOTH the inner and
@@ -493,6 +592,26 @@ def file_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# stream-stream interval join on bounded replay == batch range join;
+# event times are µs-truncated ns, so the 1h bound is 3600e9 ns
+# avg from an exact e6 fixed-point per-pair sum (order-independent
+# — mirrors the foreachBatch additive accumulator)
+STREAMING_JOIN_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE})
+            SELECT b.symbol AS symbol, count(*) AS n_pairs,
+                   round(sum(CAST(floor((s.price - b.price) * 1e6
+                                  + CAST(0.5 AS DOUBLE)) AS BIGINT)
+                             )::DOUBLE / count(*) / 1e6, 6) AS avg_spread
+            FROM trades b
+            JOIN trades s
+              ON b.symbol = s.symbol AND b.side = 'B' AND s.side = 'S'
+             AND s."timestamp" >= b."timestamp"
+             AND s."timestamp" <= b."timestamp" + 3600000000000
+            GROUP BY b.symbol ORDER BY symbol
+        """)
+register("streaming_join", file_stream_join, STREAMING_JOIN_ORACLE)
+
+
 def _spread_sum_fp() -> F.Column:
     """Exact e6 fixed-point per-pair spread sum (order-independent;
     NULL sells from outer joins are skipped by sum's null semantics)."""
@@ -584,6 +703,11 @@ def socket_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_deadletter_socket(
         spark, port, n_expected, done, "stream_socket", sf_dir
     )
+
+
+# socket ingest carries the identical corruption contract, so the
+# network path proves out against the same batch oracle
+register("streaming_socket", socket_stream_deadletter, STREAMING_DEADLETTER_ORACLE)
 
 
 def build_deadletter_payload(
@@ -746,6 +870,10 @@ def file_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# streaming session_window final state == batch islands
+register("streaming_sessions", file_stream_sessions, _batch_twin("SESSIONIZATION_SQL"))
+
+
 def file_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication (the staging-table `ON CONFLICT DO NOTHING`
     pattern of README.md:78-82, as a stream): input rows are deliberately
@@ -769,6 +897,15 @@ def file_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, deduped, "dedup_acc", partial, ["n_trades"]
     )
     return acc.select("symbol", "n_trades").orderBy("symbol")
+
+
+# doubled input through streaming dropDuplicates == plain counts
+STREAMING_DEDUP_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE})
+            SELECT symbol, count(DISTINCT trade_id) AS n_trades
+            FROM trades GROUP BY symbol ORDER BY symbol
+        """)
+register("streaming_dedup", file_stream_dedup_counts, STREAMING_DEDUP_ORACLE)
 
 
 def file_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,6 +948,12 @@ def file_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     return acc.select("symbol", "n_trades").orderBy("symbol")
 
 
+# the watermarked dedup variant has the identical exact-once contract
+register(
+    "streaming_dedup_watermarked", file_stream_dedup_watermarked, STREAMING_DEDUP_ORACLE
+)
+
+
 def file_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming z-score tripwire — the stream twin of q_price_outliers:
     per-symbol mean/stddev are trained BATCH-side (the model), broadcast
@@ -849,6 +992,29 @@ def file_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = drain_to_memory(out, "stream_anomaly", sf_dir, "complete")
     return drained.orderBy("symbol")
+
+
+STREAMING_ANOMALY_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE}),
+            hot AS (SELECT * FROM trades WHERE price > 0 AND volume > 0),
+            stats AS (
+                SELECT symbol, avg(price) AS mu, stddev_samp(price) AS sd
+                FROM hot GROUP BY symbol
+            ),
+            z AS (
+                SELECT h.symbol,
+                       CASE WHEN s.sd > 0
+                            THEN abs((h.price - s.mu) / s.sd)
+                            ELSE 0.0 END AS abs_z
+                FROM hot h JOIN stats s USING (symbol)
+            )
+            SELECT symbol, count(*) AS n_ticks,
+                   CAST(sum(CASE WHEN abs_z > 2.0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_anomalies,
+                   round(max(abs_z), 4) AS max_abs_z
+            FROM z GROUP BY symbol ORDER BY symbol
+        """)
+register("streaming_anomaly", file_stream_anomaly, STREAMING_ANOMALY_ORACLE)
 
 
 def _sentineled_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,6 +1144,33 @@ def file_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# batch equivalence of the watermarked left-outer interval join:
+# every real buy either pairs within its 1-hour horizon or is
+# flushed unmatched by the sentinel-advanced watermark
+STREAMING_JOIN_OUTER_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE}),
+            buys AS (SELECT symbol, price, "timestamp" AS bt
+                     FROM trades WHERE side = 'B'),
+            sells AS (SELECT symbol, price, "timestamp" AS st
+                      FROM trades WHERE side = 'S'),
+            joined AS (
+                SELECT b.symbol, b.price AS buy_price, s.price AS sell_price
+                FROM buys b LEFT JOIN sells s
+                  ON b.symbol = s.symbol
+                 AND s.st >= b.bt AND s.st <= b.bt + 3600000000000
+            )
+            SELECT symbol, count(sell_price) AS n_pairs,
+                   count(*) - count(sell_price) AS n_unmatched,
+                   CASE WHEN count(sell_price) > 0 THEN
+                        round(sum(CAST(floor((sell_price - buy_price) * 1e6
+                                   + CAST(0.5 AS DOUBLE)) AS BIGINT)
+                                  )::DOUBLE / count(sell_price) / 1e6, 6)
+                   END AS avg_spread
+            FROM joined GROUP BY symbol ORDER BY symbol
+        """)
+register("streaming_join_outer", file_stream_join_outer, STREAMING_JOIN_OUTER_ORACLE)
+
+
 def file_stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER interval join — completes the outer-join
     family (inner: streaming_join; left: streaming_join_outer): unmatched
@@ -1055,6 +1248,47 @@ def file_stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# batch equivalence of the watermarked FULL OUTER interval join:
+# unmatched rows from BOTH sides flush via the sentinel-advanced
+# watermark on bounded replay
+STREAMING_JOIN_FULL_OUTER_ORACLE = _over_trades("""
+            WITH trades AS ({TRADES_CTE}),
+            buys AS (SELECT symbol, price, "timestamp" AS bt
+                     FROM trades WHERE side = 'B'),
+            sells AS (SELECT symbol, price, "timestamp" AS st
+                      FROM trades WHERE side = 'S'),
+            joined AS (
+                SELECT coalesce(b.symbol, s.symbol) AS symbol,
+                       b.price AS buy_price, s.price AS sell_price
+                FROM buys b FULL JOIN sells s
+                  ON b.symbol = s.symbol
+                 AND s.st >= b.bt AND s.st <= b.bt + 3600000000000
+            )
+            SELECT symbol,
+                   CAST(sum(CASE WHEN buy_price IS NOT NULL
+                                  AND sell_price IS NOT NULL
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
+                   CAST(sum(CASE WHEN sell_price IS NULL
+                            THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_buy_unmatched,
+                   CAST(sum(CASE WHEN buy_price IS NULL
+                            THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_sell_unmatched,
+                   CASE WHEN count(sell_price - buy_price) > 0 THEN
+                        round(sum(CAST(floor((sell_price - buy_price) * 1e6
+                                   + CAST(0.5 AS DOUBLE)) AS BIGINT)
+                                  )::DOUBLE
+                              / count(sell_price - buy_price) / 1e6, 6)
+                   END AS avg_spread
+            FROM joined GROUP BY symbol ORDER BY symbol
+        """)
+register(
+    "streaming_join_full_outer",
+    file_stream_join_full_outer,
+    STREAMING_JOIN_FULL_OUTER_ORACLE,
+)
+
+
 def file_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Benford first-digit monitor: the per-digit counts run as
     a real complete-mode streaming aggregation (bounded state — 9
@@ -1086,6 +1320,9 @@ def file_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         drain_to_memory(counts_stream, "stream_benford", sf_dir, "complete"),
     )
+
+
+register("streaming_benford", file_stream_benford, _batch_twin("benford_audit_sql"))
 
 
 def _drift_histogram(
@@ -1124,6 +1361,11 @@ def file_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the streaming twin's final complete-mode state equals the batch
+# (segment, bucket) histogram, so it shares psi_drift's oracle
+register("streaming_psi", file_stream_psi, _batch_twin("psi_drift_sql"))
+
+
 def file_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KS drift monitor — the PSI twin's reject/accept
     companion: the shared drift histogram drained into the exact-integer
@@ -1131,6 +1373,11 @@ def file_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketstream_etl_spark.plans.advanced import ks_from_counts
 
     return ks_from_counts(spark, _drift_histogram(spark, sf_dir, "stream_ks"))
+
+
+# the streaming twin's drained complete-mode state equals the
+# batch (segment, bucket) histogram, so it shares ks_drift's oracle
+register("streaming_ks", file_stream_ks, _batch_twin("ks_drift_sql"))
 
 
 def file_stream_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1145,6 +1392,10 @@ def file_stream_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# bounded replay == batch: the streaming twin reuses the oracle
+register("streaming_mwu", file_stream_mwu, _batch_twin("mannwhitney_drift_sql"))
+
+
 def file_stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming chi-square drift monitor — fourth member of the
     streaming drift family (full-table shape): the shared drift histogram
@@ -1155,3 +1406,6 @@ def file_stream_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi2_from_counts(
         spark, _drift_histogram(spark, sf_dir, "stream_chi2")
     )
+
+
+register("streaming_chi2", file_stream_chi2, _batch_twin("chi2_drift_sql"))

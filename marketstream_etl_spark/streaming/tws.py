@@ -24,7 +24,9 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.streaming.stateful import (
+    STREAMING_STATEFUL_SQL,
     DEFAULT_PERIOD,
     OUTPUT_SCHEMA,
     STATE_SCHEMA,
@@ -126,3 +128,9 @@ def file_stream_tws_indicators(spark, sf_dir: str) -> DataFrame:
     ind = streaming_indicators_tws(valid, period=DEFAULT_PERIOD)
     emitted = drain_to_memory(ind, "stream_tws", sf_dir)
     return final_indicator_snapshot(emitted)
+
+
+# same snapshot as the applyInPandasWithState backend, so the same
+# oracle; registered only where the gRPC state-server runtime exists
+if HAS_TWS_RUNTIME:
+    register("streaming_tws", file_stream_tws_indicators, STREAMING_STATEFUL_SQL)

@@ -28,6 +28,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.plans.trades_view import TRADES_CTE
+from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.streaming.replay import run_bounded
 
 
@@ -107,3 +109,22 @@ def file_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("symbol")
     )
+
+
+# final SCD1 snapshot == latest trade per symbol by the canonical
+# (ts, trade_id) order, regardless of micro-batch split
+STREAMING_UPSERT_SQL = f"""
+            WITH trades AS ({TRADES_CTE}),
+            ranked AS (
+                SELECT symbol, price, "timestamp" AS ts_ns, trade_id,
+                       row_number() OVER (
+                           PARTITION BY symbol
+                           ORDER BY "timestamp" DESC, trade_id DESC
+                       ) AS rn
+                FROM trades
+            )
+            SELECT symbol, price AS last_price, ts_ns AS last_ts_ns,
+                   trade_id AS last_trade_id
+            FROM ranked WHERE rn = 1 ORDER BY symbol
+        """
+register("streaming_upsert", file_stream_upsert_snapshot, STREAMING_UPSERT_SQL)

@@ -42,6 +42,9 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from marketstream_etl_spark.registry import register
+from marketstream_etl_spark.streaming.ticks import STREAMING_DEADLETTER_ORACLE
+
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
 
 OP_CONT = 0x0
@@ -374,3 +377,9 @@ def websocket_stream_deadletter(
             "contract was not exercised"
         )
     return out
+
+
+# the WS ingest shares the socket query's corruption contract exactly
+register(
+    "streaming_websocket", websocket_stream_deadletter, STREAMING_DEADLETTER_ORACLE
+)

@@ -1,41 +1,45 @@
-"""Generate docs/QUERY_INDEX.md — one row per registered query with its
-implementing function and summary (first docstring line).  Regenerate
-after adding queries: python tools/gen_query_index.py
+"""Generate docs/QUERY_INDEX.md from the query registry — one row per
+registered query with its implementing function and summary (first
+docstring line).  Regenerate after adding a query:
+
+    python tools/gen_query_index.py
+
+tests/test_entry.py fails while the committed file is stale.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+INDEX = os.path.join(ROOT, "docs", "QUERY_INDEX.md")
+
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
-qs = entry.queries()
-oracles = entry.oracle_sql()
 
-lines = [
-    "# Query index",
-    "",
-    f"All {len(qs)} registered queries (auto-generated by "
-    "tools/gen_query_index.py; `driver gate` marks the first 50 slots "
-    "the external correctness gate records).  Every query listed has a "
-    "DuckDB oracle and is value-hash checked by tools/check_oracle.py.",
-    "",
-    "| # | query | implementation | summary |",
-    "|---|---|---|---|",
-]
-for i, (name, fn) in enumerate(qs.items(), 1):
-    target = fn
-    while hasattr(target, "__wrapped__"):
-        target = target.__wrapped__
-    mod = getattr(target, "__module__", "?").replace(
-        "marketstream_etl_spark.", ""
-    )
-    doc = (target.__doc__ or "").strip().split("\n")[0].strip()
-    gate = " *(driver gate)*" if i <= 50 else ""
-    assert name in oracles, name
-    lines.append(f"| {i}{gate} | `{name}` | `{mod}.{target.__name__}` | {doc} |")
+def render() -> str:
+    qs = entry.queries()
+    lines = [
+        "# Query index",
+        "",
+        f"All {len(qs)} registered queries (auto-generated by "
+        "tools/gen_query_index.py; `driver gate` marks the first 50 slots "
+        "the external correctness gate records).  Every query listed has a "
+        "DuckDB oracle and is value-hash checked by tools/check_oracle.py.",
+        "",
+        "| # | query | implementation | summary |",
+        "|---|---|---|---|",
+    ]
+    for i, (name, fn) in enumerate(qs.items(), 1):
+        mod = fn.__module__.replace("marketstream_etl_spark.", "")
+        doc = (fn.__doc__ or "").strip().split("\n")[0].strip()
+        gate = " *(driver gate)*" if name in entry.GATE else ""
+        lines.append(f"| {i}{gate} | `{name}` | `{mod}.{fn.__name__}` | {doc} |")
+    return "\n".join(lines) + "\n"
 
-out = "\n".join(lines) + "\n"
-with open("/root/repo/docs/QUERY_INDEX.md", "w") as f:
-    f.write(out)
-print(f"wrote docs/QUERY_INDEX.md ({len(qs)} queries)")
+
+if __name__ == "__main__":
+    with open(INDEX, "w") as f:
+        f.write(render())
+    print(f"wrote {os.path.relpath(INDEX, ROOT)}")

@@ -175,7 +175,10 @@ def _setup_ivfpq_served(spark, sf_dir: str) -> None:
     # (generation cache) — the timed query runs then measure SERVING the
     # five batches against the warm index, which is the regime's point
     from marketstream_etl_spark.operators.similarity import (
+        _CodebookHandle,
+        _centroids,
         _ivfpq_served_index,
+        _vectors,
         served_centroid_count,
     )
     from marketstream_etl_spark.sources.tables import (
@@ -185,7 +188,8 @@ def _setup_ivfpq_served(spark, sf_dir: str) -> None:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_centroids = served_centroid_count(table_row_count(sf_dir, "embeddings"))
-    for frame in _ivfpq_served_index(emb, n_centroids):
+    codebook = _CodebookHandle(_centroids(_vectors(emb), n_centroids))
+    for frame in _ivfpq_served_index(emb, codebook):
         frame.write.format("noop").mode("overwrite").save()
 
 

@@ -127,6 +127,14 @@ def _spread_emb(emb: DataFrame) -> DataFrame:
     return spread(emb)
 
 
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, vec array<double>): the spread embedding scan every
+    vector operator scores."""
+    return _spread_emb(emb).select(
+        "vec_id", _dvec(F.col("embedding")).alias("vec")
+    )
+
+
 def ann_bruteforce(
     emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
@@ -140,9 +148,7 @@ def ann_bruteforce(
     # ~2/3 of all per-pair HOF work).  The per-pair expression stays
     # dot/(qn·nn), the identical double association as cosine(), so every
     # cos value is the same double bit-for-bit.
-    base = _spread_emb(emb).select(
-        "vec_id", _dvec(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", norm(F.col("vec")))
+    base = _vectors(emb).withColumn("nrm", norm(F.col("vec")))
     queries = base.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
@@ -261,7 +267,8 @@ def _rebuild_codebook_handle(bc):
 
 
 class _CodebookHandle:
-    """Lazy driver-side codebook for the map-only assignment kernel.
+    """Lazy driver-side codebook for the map-only assignment kernel
+    (_rank_codebook).
 
     Three properties, each an r11 ADVICE fix:
 
@@ -281,9 +288,9 @@ class _CodebookHandle:
       CODEBOOK_MAX_CENTROIDS cap the ~34 MB payload rides the torrent
       once per executor instead of being re-pickled into every task
       command.
-    - SHARED: sibling calls (ann_ivf / ann_ivfpq assign + probe) pass
-      ONE handle, so each query build collects and broadcasts the
-      codebook once, not twice.
+    - SHARED: every consumer in one query build (ann_ivfpq_served's
+      index build and its per-batch probes) passes ONE handle, so each
+      query build collects and broadcasts the codebook once.
 
     Lifecycle (r12 ADVICE): the broadcast (~34 MB at the
     CODEBOOK_MAX_CENTROIDS cap) is otherwise reclaimed only when the
@@ -333,46 +340,55 @@ class _CodebookHandle:
         return (_rebuild_codebook_handle, (self._bc,))
 
 
-def _nearest_buckets_kernel(
-    codebook: "_CodebookHandle",
-    n: int,
+def _rank_codebook(
+    df: DataFrame,
+    codebook: _CodebookHandle,
     id_col: str,
     vec_col: str,
-    out: str,
-):
-    """mapInPandas kernel: per-row top-n nearest centroids with
-    SPARK-EXACT ordering — every double matches the declarative
-    cosine() + row_number(desc ccos, asc centroid_id) plan it replaced:
+    depth: int,
+    emit,
+    schema: str,
+) -> DataFrame:
+    """The one IVF assignment kernel: every row's codebook centroids
+    ranked by cosine, map-only, with SPARK-EXACT arithmetic and order —
+    every double matches the declarative cosine() +
+    row_number(desc ccos, asc centroid_id) plan it replaced:
 
     - dot accumulates in an ascending-dimension loop (acc += v_i·c_i,
       IEEE two-step, no FMA), the identical left-associated order as the
       dot() aggregate fold; vector and centroid norms use the identical
-      ascending x·x fold + sqrt, and ccos = dot/(vnorm·cnorm) with the
-      same product-then-divide shape as cosine();
-    - top-n selection sorts by (desc ccos, asc centroid_id) via a STABLE
-      argsort over centroid columns already in ascending-id order, with
-      NaN ranked greatest (Spark's double window order puts NaN first
-      under desc).  Scope note, as for _semantic_assign_kernel: on a
+      ascending x·x fold + sqrt as norm(), and ccos = dot/(vnorm·cnorm)
+      with the same product-then-divide shape as cosine();
+    - the order is a STABLE argsort by (desc ccos, asc centroid_id) over
+      centroid columns already in ascending-id order, with NaN ranked
+      greatest (Spark's double order puts NaN first under desc).  Its
+      first column is therefore also the max(struct(ccos, -centroid_id))
+      argmax: ties go to the lower id, NaN ranks first, and ±0.0 compare
+      equal (stable → lower centroid_id, where Java's Double.compare
+      orders -0.0 < 0.0).  At depth 1 the kernel takes that column as
+      the first-occurrence argmax, which skips the N×C sort.  On a
       zero-norm vector or centroid the declarative plan under ANSI mode
       would raise DIVIDE_BY_ZERO while this kernel's 0/0 yields NaN and
-      ranks it first; and ±0.0 compare equal here (stable → lower
-      centroid_id) where Java's Double.compare orders -0.0 < 0.0.
-      Embeddings here are nonzero, so neither case is reachable; both
-      gate-SF hash checks pin the equivalence on real data.
+      ranks it first.  Embeddings here are nonzero, so neither case is
+      reachable; the gate-SF hash checks pin the equivalence on real
+      data.
 
-    Per Arrow batch the work is dim vectorized (rows×C) fused rounds —
-    map-ONLY.  The r1-r10 shape (broadcast-join the codebook, score N×C
-    slim rows, window-shuffle them for the per-id rank) materialized and
-    SHUFFLED an N×C frame: 5.7 BILLION rows at the sf100 decade probe
-    (2M vectors × 2,829 corpus-adaptive centroids), which failed the
-    probe outright.  This kernel never materializes N×C rows off-core:
-    the codebook rides into each task (bounded ≤ CODEBOOK_MAX_CENTROIDS
-    by construction at every call site) and only the n winner rows per
-    vector leave the batch."""
+    Per Arrow batch the work is dim vectorized (rows×C) fused rounds.
+    The r1-r10 shape (broadcast-join the codebook, score N×C slim rows,
+    window-shuffle them for the per-id rank) materialized and SHUFFLED
+    an N×C frame: 5.7 BILLION rows at the sf100 decade probe (2M vectors
+    × 2,829 corpus-adaptive centroids), which failed the probe outright.
+    This kernel never materializes N×C rows off-core: the codebook rides
+    into each task (bounded ≤ CODEBOOK_MAX_CENTROIDS by construction at
+    every call site) and only what `emit` keeps leaves the batch.
+
+    `emit(ids, ranked, top_cos)` receives the batch's int64 ids, each
+    row's best min(depth, C) centroid ids best-first, and each row's best
+    cosine; it returns the output batch's columns, typed by `schema`."""
     import numpy as np
     import pandas as pd
 
-    def assign(batches):
+    def kernel(batches):
         cids, C = codebook.arrays()
         if C.size == 0:
             return
@@ -381,158 +397,100 @@ def _nearest_buckets_kernel(
         for i in range(dim):
             cn += C[:, i] * C[:, i]
         cn = np.sqrt(cn)
-        take = min(n, nc)
         for pdf in batches:
             nr = len(pdf)
             if nr == 0:
                 continue
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             vn = np.zeros(nr, dtype=np.float64)
-            for i in range(dim):
-                vn += V[:, i] * V[:, i]
-            vn = np.sqrt(vn)
             D = np.zeros((nr, nc), dtype=np.float64)
             for i in range(dim):
+                vn += V[:, i] * V[:, i]
                 D += V[:, i : i + 1] * C[None, :, i]
+            vn = np.sqrt(vn)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cc = D / (vn[:, None] * cn[None, :])
             key = np.where(np.isnan(cc), np.inf, cc)
-            order = np.argsort(-key, axis=1, kind="stable")[:, :take]
+            if depth == 1:  # the stable order's first column, unsorted
+                order = key.argmax(axis=1)[:, None]
+            else:
+                order = np.argsort(-key, axis=1, kind="stable")
             yield pd.DataFrame(
-                {
-                    id_col: np.repeat(
-                        pdf[id_col].to_numpy(dtype=np.int64), take
-                    ),
-                    out: cids[order].ravel(),
-                }
+                emit(
+                    pdf[id_col].to_numpy(dtype=np.int64),
+                    cids[order[:, :depth]],
+                    cc[np.arange(nr), order[:, 0]],
+                )
             )
 
-    return assign
-
-
-def _assign_probe_kernel(
-    codebook: "_CodebookHandle",
-    nprobe: int,
-    n_queries: int,
-    id_col: str,
-    vec_col: str,
-):
-    """Fused variant of _nearest_buckets_kernel for the IVF consumers
-    that need BOTH the corpus top-1 assignment and the query rows'
-    top-nprobe probe lists (queries are a prefix subset of the corpus:
-    id < n_queries).  The cosine matrix for a batch is computed ONCE and
-    serves both selections — arithmetic per row is identical to two
-    separate kernel passes (row-wise ops are independent), so every
-    emitted double/bucket matches the two-pass plan bit-for-bit.  Emits
-    (id, bucket, probe): probe=0 rows are the assignment (1 per vector),
-    probe=1 rows the query probe lists (nprobe per query).  Halves the
-    JVM→Python Arrow roundtrips and job count of the assignment phase
-    (guide §4.1: the boundary itself is the cost at small batches)."""
-    import numpy as np
-    import pandas as pd
-
-    def assign(batches):
-        cids, C = codebook.arrays()
-        if C.size == 0:
-            return
-        nc, dim = C.shape
-        cn = np.zeros(nc, dtype=np.float64)
-        for i in range(dim):
-            cn += C[:, i] * C[:, i]
-        cn = np.sqrt(cn)
-        take_p = min(nprobe, nc)
-        for pdf in batches:
-            nr = len(pdf)
-            if nr == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = np.zeros(nr, dtype=np.float64)
-            for i in range(dim):
-                vn += V[:, i] * V[:, i]
-            vn = np.sqrt(vn)
-            D = np.zeros((nr, nc), dtype=np.float64)
-            for i in range(dim):
-                D += V[:, i : i + 1] * C[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cc = D / (vn[:, None] * cn[None, :])
-            key = np.where(np.isnan(cc), np.inf, cc)
-            order = np.argsort(-key, axis=1, kind="stable")
-            out_ids = [ids]
-            out_buckets = [cids[order[:, 0]]]
-            out_probe = [np.zeros(nr, dtype=np.int32)]
-            qmask = ids < n_queries
-            nq = int(qmask.sum())
-            if nq:
-                out_ids.append(np.repeat(ids[qmask], take_p))
-                out_buckets.append(cids[order[qmask, :take_p]].ravel())
-                out_probe.append(np.ones(nq * take_p, dtype=np.int32))
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_ids),
-                    "bucket": np.concatenate(out_buckets),
-                    "probe": np.concatenate(out_probe),
-                }
-            )
-
-    return assign
-
-
-def _assign_and_probe(
-    df: DataFrame,
-    codebook: "_CodebookHandle",
-    id_col: str,
-    vec_col: str,
-    n_queries: int,
-    nprobe: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(assigned, probes) from ONE fused kernel pass over the corpus —
-    see _assign_probe_kernel.  The combined slim output (N + Q·nprobe
-    rows) is truncated behind a non-eager localCheckpoint so its two
-    filtered consumers share a single materialization instead of each
-    re-running the Arrow pass."""
-    kern = _assign_probe_kernel(codebook, nprobe, n_queries, id_col, vec_col)
-    combined = (
-        df.select(id_col, vec_col)
-        .mapInPandas(kern, f"{id_col} long, bucket long, probe int")
-        .localCheckpoint(eager=False)
-    )
-    assigned = combined.filter(F.col("probe") == 0).select(id_col, "bucket")
-    probes = combined.filter(F.col("probe") == 1).select(id_col, "bucket")
-    return assigned, probes
+    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
 def _nearest_buckets(
     df: DataFrame,
-    centroids: "DataFrame | _CodebookHandle",
+    codebook: _CodebookHandle,
     id_col: str,
     vec_col: str,
     n: int,
     out: str,
 ) -> DataFrame:
-    """Each row's `n` nearest centroid buckets: Arrow-batched map-only
-    top-n against the lazily-collected, broadcast codebook (bounded — the
-    _centroids sample, a kmeans k-row codebook, or the capped
-    corpus-adaptive C ≤ CODEBOOK_MAX_CENTROIDS; the same k-row-collect
-    class as kmeans_fit/semantic_dedup).  `centroids` is either the
-    codebook DataFrame or a pre-built _CodebookHandle — callers that
-    assign twice per query (ann_ivf/ann_ivfpq) pass one handle so the
-    collect + broadcast happens once.  See _nearest_buckets_kernel for
-    the exactness argument and for why the previous broadcast-join +
-    window shape failed at the sf100 decade (N×C shuffle).  Returns the
-    SLIM (id, bucket) frame; callers that need the vector (or its
-    precomputed norm) re-attach it with one N-row equi-join — callers
-    that only need the bucket (ann_ivfpq's code index) skip that join
-    entirely."""
-    codebook = (
-        centroids
-        if isinstance(centroids, _CodebookHandle)
-        else _CodebookHandle(centroids)
+    """Each row's `n` nearest centroid buckets as the SLIM (id, out)
+    frame, n rows per id (see _rank_codebook).  Callers that need the
+    vector (or its precomputed norm) re-attach it with one N-row
+    equi-join; callers that only need the bucket (the served code index)
+    skip that join entirely."""
+    import numpy as np
+
+    def emit(ids, ranked, top_cos):
+        return {id_col: np.repeat(ids, ranked.shape[1]), out: ranked.ravel()}
+
+    return _rank_codebook(
+        df, codebook, id_col, vec_col, n, emit, f"{id_col} long, {out} long"
     )
-    kern = _nearest_buckets_kernel(codebook, n, id_col, vec_col, out)
-    return df.select(id_col, vec_col).mapInPandas(
-        kern, f"{id_col} long, {out} long"
-    )
+
+
+def _assign_and_probe(
+    df: DataFrame,
+    codebook: _CodebookHandle,
+    id_col: str,
+    vec_col: str,
+    n_queries: int,
+    nprobe: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(assigned, probes) from ONE kernel pass over the corpus: every
+    row's top-1 bucket, plus the top-nprobe probe list of the query rows
+    (queries are the id < n_queries prefix of the corpus).  Halves the
+    JVM→Python Arrow roundtrips and job count of two separate passes
+    (guide §4.1: the boundary itself is the cost at small batches).  The
+    combined slim output (N + Q·nprobe rows, tagged probe=0/1) is
+    truncated behind a non-eager localCheckpoint so its two filtered
+    consumers share a single materialization instead of each re-running
+    the Arrow pass."""
+    import numpy as np
+
+    def emit(ids, ranked, top_cos):
+        q = ids < n_queries
+        probes = ranked[q, :nprobe]
+        return {
+            id_col: np.concatenate([ids, np.repeat(ids[q], probes.shape[1])]),
+            "bucket": np.concatenate([ranked[:, 0], probes.ravel()]),
+            "probe": np.concatenate(
+                [np.zeros(len(ids), np.int32), np.ones(probes.size, np.int32)]
+            ),
+        }
+
+    combined = _rank_codebook(
+        df,
+        codebook,
+        id_col,
+        vec_col,
+        max(nprobe, 1),
+        emit,
+        f"{id_col} long, bucket long, probe int",
+    ).localCheckpoint(eager=False)
+    assigned = combined.filter(F.col("probe") == 0).select(id_col, "bucket")
+    probes = combined.filter(F.col("probe") == 1).select(id_col, "bucket")
+    return assigned, probes
 
 
 def ann_ivf(
@@ -552,18 +510,15 @@ def ann_ivf(
     the deterministic sample."""
     # norm once per vector (see ann_bruteforce: same doubles, 1/3 the
     # per-pair fold work)
-    base = _spread_emb(emb).select(
-        "vec_id", _dvec(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", norm(F.col("vec")))
+    base = _vectors(emb).withColumn("nrm", norm(F.col("vec")))
     if centroids is None:
         centroids = _centroids(base, n_centroids)
-    codebook = _CodebookHandle(centroids)  # one collect+broadcast for both
+    codebook = _CodebookHandle(centroids)
 
-    # ONE fused kernel pass over the corpus yields the top-1 assignment
-    # AND the query probe lists (queries are the id < n_queries prefix of
-    # the same corpus) — half the Arrow roundtrips of the old two-pass
-    # shape, bit-identical buckets (see _assign_probe_kernel); the slim
-    # (id, bucket) outputs re-attach vector + norm with one N-row join
+    # ONE kernel pass over the corpus yields the top-1 assignment AND the
+    # query probe lists (queries are the id < n_queries prefix of the
+    # same corpus) — see _assign_and_probe; the slim (id, bucket)
+    # outputs re-attach vector + norm with one N-row join
     a_slim, p_slim = _assign_and_probe(
         base, codebook, "vec_id", "vec", n_queries, nprobe
     )
@@ -669,8 +624,7 @@ def embedding_neardup_pairs(
     vectors (bounded block so the demo stays quadratic-in-small-n; the scale
     path is ann_ivf with a threshold filter)."""
     base = (
-        _spread_emb(emb)
-        .select("vec_id", _dvec(F.col("embedding")).alias("vec"))
+        _vectors(emb)
         .filter(F.col("vec_id") < n_queries)
         # norm once per vector, dot/(na·nb) per pair — identical doubles
         # as cosine() (see ann_bruteforce / semantic_dedup)
@@ -766,12 +720,8 @@ def embedding_neardup_ivf(
     `approx_rows` is the parquet-footer row count (no Spark job)."""
     if n_centroids is None:
         n_centroids = neardup_centroid_count(approx_rows, nassign)
-    base = (
-        _spread_emb(emb)
-        .select("vec_id", _dvec(F.col("embedding")).alias("vec"))
-        .withColumn("vnorm", norm(F.col("vec")))
-    )
-    centroids = _centroids(base, n_centroids)
+    base = _vectors(emb).withColumn("vnorm", norm(F.col("vec")))
+    codebook = _CodebookHandle(_centroids(base, n_centroids))
     # slim (vec_id, bucket) assignment (map-only kernel), then ONE N-row
     # join re-attaches vector + precomputed norm.  Norms computed once per
     # ROW, not re-folded twice per PAIR: the verify cosine below stays
@@ -785,7 +735,7 @@ def embedding_neardup_ivf(
     # project different columns).  The checkpointed frame is the bounded
     # (vec_id, bucket) pairs — N·nassign slim rows, never the vectors.
     assigned = (
-        _nearest_buckets(base, centroids, "vec_id", "vec", nassign, "bucket")
+        _nearest_buckets(base, codebook, "vec_id", "vec", nassign, "bucket")
         .localCheckpoint(eager=False)
         .join(base, "vec_id")
     )
@@ -1352,9 +1302,7 @@ def ann_lsh(
     # projection-collapse fix): lsh_band_keys is O(bands x band_bits x
     # dim) of dot products per evaluation and would otherwise
     # re-evaluate once per emitted band row
-    base = _spread_emb(emb).select(
-        "vec_id", _dvec(F.col("embedding")).alias("vec")
-    ).withColumn(
+    base = _vectors(emb).withColumn(
         # norm once per vector, materialized in the checkpoint (see
         # ann_bruteforce: dot/(qn·nn) is the identical double association)
         "nrm", norm(F.col("vec"))
@@ -1570,14 +1518,14 @@ def _pq_codebook(subs: DataFrame, n_codes: int) -> DataFrame:
     )
 
 
-def _adc_tables(base: DataFrame, cb: DataFrame, n_queries: int) -> DataFrame:
+def _adc_tables(queries: DataFrame, cb: DataFrame) -> DataFrame:
     """(query_id, m, code, qdist) — each query's distance to every
-    codebook centroid; Q×M×K rows, built map-side for broadcasting."""
+    codebook centroid; Q×M×K rows, built map-side for broadcasting.
+    `queries` holds the (vec_id, vec) rows of one query set: the
+    id < n_queries prefix, or one serve batch's id range."""
     return (
         _subvectors(
-            base.filter(F.col("vec_id") < n_queries).select(
-                F.col("vec_id").alias("query_id"), "vec"
-            ),
+            queries.select(F.col("vec_id").alias("query_id"), "vec"),
             "query_id",
             "vec",
         )
@@ -1591,21 +1539,11 @@ def _adc_tables(base: DataFrame, cb: DataFrame, n_queries: int) -> DataFrame:
     )
 
 
-def pq_encode(
-    emb: DataFrame,
-    n_codes: int = PQ_K,
-    subs: DataFrame | None = None,
-    cb: DataFrame | None = None,
-) -> DataFrame:
-    """(vec_id, m, code) PQ codes vs the deterministic-sample codebook —
-    the compressed index a 100 TB deployment persists instead of floats.
-    Callers that already built `subs`/`cb` pass them in so the sub-vector
-    explode and codebook are constructed once per query, not per stage."""
-    if subs is None:
-        base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("vec"))
-        subs = _subvectors(base, "vec_id", "vec")
-    if cb is None:
-        cb = _pq_codebook(subs, n_codes)
+def pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, m, code) PQ codes of the `_subvectors` frame `subs`
+    against the `_pq_codebook` `cb` — the compressed index a 100 TB
+    deployment persists instead of floats.  Callers build `subs` and `cb`
+    once per query and share them with the ADC tables."""
     best = F.min(
         F.struct(
             _subdist(F.col("sub"), F.col("csub")).alias("dist"),
@@ -1631,11 +1569,11 @@ def ann_pq(
 
     Output: (query_id, neighbor_id, adc_dist, rank) — rank by adc_dist
     asc (closest first), neighbor_id asc tie-break; self excluded."""
-    base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("vec"))
+    base = _vectors(emb)
     subs = _subvectors(base, "vec_id", "vec")
     cb = _pq_codebook(subs, n_codes)
-    enc = pq_encode(emb, n_codes, subs=subs, cb=cb)
-    qd = _adc_tables(base, cb, n_queries)
+    enc = pq_encode(subs, cb)
+    qd = _adc_tables(base.filter(F.col("vec_id") < n_queries), cb)
     scored = (
         enc.join(F.broadcast(qd), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1752,21 +1690,33 @@ def ann_ivfpq(
     Plan: the code index (vec_id, bucket, m, code) is the ONLY corpus-
     sized frame after encode; probes and ADC tables are broadcast, so the
     scan is one map-side join chain + one partial-aggregated groupBy."""
-    base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("vec"))
-    centroids = _centroids(base, n_centroids)
-    codebook = _CodebookHandle(centroids)  # one collect+broadcast for both
-    # fused assignment + probe: one Arrow pass over the corpus instead of
-    # two (queries are the id < n_queries prefix), bit-identical buckets
-    # — see _assign_probe_kernel
-    assigned, p_slim = _assign_and_probe(
+    base = _vectors(emb)
+    codebook = _CodebookHandle(_centroids(base, n_centroids))
+    # one kernel pass yields the corpus assignment and the probe lists of
+    # the id < n_queries prefix — see _assign_and_probe
+    assigned, probes = _assign_and_probe(
         base, codebook, "vec_id", "vec", n_queries, nprobe
     )
-    probes = p_slim.withColumnRenamed("vec_id", "query_id")
-
     subs = _subvectors(base, "vec_id", "vec")
     cb = _pq_codebook(subs, n_codes)
-    enc = pq_encode(emb, n_codes, subs=subs, cb=cb)
-    qd = _adc_tables(base, cb, n_queries)
+    qd = _adc_tables(base.filter(F.col("vec_id") < n_queries), cb)
+    return _adc_top_k(assigned, probes, pq_encode(subs, cb), qd, k)
+
+
+def _adc_top_k(
+    assigned: DataFrame,
+    probes: DataFrame,
+    enc: DataFrame,
+    qd: DataFrame,
+    k: int,
+) -> DataFrame:
+    """The IVF-PQ scorer: (query_id, neighbor_id, adc_dist, rank) of the
+    corpus vectors in each query's probed buckets, ranked by ADC distance
+    (the sum of the query's `qd` sub-distances at the vector's `enc`
+    codes), neighbor_id asc tie-break, self excluded.  `assigned` is the
+    slim (vec_id, bucket) corpus assignment and `probes` the slim
+    (vec_id, bucket) probe lists of the queries in `qd`."""
+    probes = probes.withColumnRenamed("vec_id", "query_id")
     # every vector lives in exactly one bucket and probe buckets are
     # distinct, so (query, vec) candidates are already unique — no
     # dedup shuffle needed (unlike multi-band LSH)
@@ -1786,9 +1736,7 @@ def ann_ivfpq(
         k=k,
         salt_src="neighbor_id",
     )
-    return topk.select(
-        "query_id", "neighbor_id", "adc_dist", "rank"
-    )
+    return topk.select("query_id", "neighbor_id", "adc_dist", "rank")
 
 
 def ann_ivfpq_sql(
@@ -1898,12 +1846,14 @@ def served_centroid_count(approx_rows: int | None) -> int:
 
 
 def _ivfpq_served_index(
-    emb: DataFrame, n_centroids: int, n_codes: int = PQ_K
+    emb: DataFrame, codebook: _CodebookHandle, n_codes: int = PQ_K
 ) -> tuple[DataFrame, ...]:
     """Generation-cached served IVF-PQ index: (assigned, cb, enc) —
-    coarse top-1 bucket per vector, the PQ sub-space codebook, and the
-    code index.  All three derive from the corpus alone (never from a
-    query), the same cache-family contract as the BM25 index."""
+    coarse top-1 bucket per vector against `codebook`, the PQ sub-space
+    codebook, and the code index.  All three derive from the corpus alone
+    (never from a query), the same cache-family contract as the BM25
+    index.  The caller passes the coarse codebook handle it also probes
+    with, so a cold serve collects and broadcasts it once."""
     from marketstream_etl_spark.functions.cachegen import (
         cache_key,
         input_paths,
@@ -1915,40 +1865,15 @@ def _ivfpq_served_index(
     hit = lookup("ivfpq_served", key, current=emb)
     if hit is not None:
         return tuple(hit)
-    base = _spread_emb(emb).select(
-        "vec_id", _dvec(F.col("embedding")).alias("vec")
-    )
-    handle = _CodebookHandle(_centroids(base, n_centroids))
+    base = _vectors(emb)
     assigned = _nearest_buckets(
-        base, handle, "vec_id", "vec", 1, "bucket"
+        base, codebook, "vec_id", "vec", 1, "bucket"
     ).persist()
     subs = _subvectors(base, "vec_id", "vec")
     cb = _pq_codebook(subs, n_codes).persist()
-    enc = pq_encode(emb, n_codes, subs=subs, cb=cb).persist()
+    enc = pq_encode(subs, cb).persist()
     rotate("ivfpq_served", key, [assigned, cb, enc], input_paths(emb))
     return assigned, cb, enc
-
-
-def _adc_tables_between(
-    base: DataFrame, cb: DataFrame, lo: int, hi: int
-) -> DataFrame:
-    """_adc_tables for the query id range [lo, hi) — one serve batch."""
-    return (
-        _subvectors(
-            base.filter(
-                (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-            ).select(F.col("vec_id").alias("query_id"), "vec"),
-            "query_id",
-            "vec",
-        )
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "code",
-            _subdist(F.col("sub"), F.col("csub")).alias("qdist"),
-        )
-    )
 
 
 def ann_ivfpq_served(
@@ -1971,44 +1896,21 @@ def ann_ivfpq_served(
     arithmetically; equality with the batched Spark plan is exact.
 
     Output: (batch_id, query_id, neighbor_id, adc_dist, rank)."""
-    n_centroids = served_centroid_count(approx_rows)
-    assigned, cb, enc = _ivfpq_served_index(emb, n_centroids, n_codes)
-    base = _spread_emb(emb).select(
-        "vec_id", _dvec(F.col("embedding")).alias("vec")
+    base = _vectors(emb)
+    codebook = _CodebookHandle(
+        _centroids(base, served_centroid_count(approx_rows))
     )
-    handle = _CodebookHandle(_centroids(base, n_centroids))
+    assigned, cb, enc = _ivfpq_served_index(emb, codebook, n_codes)
     out = None
     for b in range(n_batches):
         lo, hi = b * batch_size, (b + 1) * batch_size
         qbase = base.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         probes = _nearest_buckets(
-            qbase, handle, "vec_id", "vec", nprobe, "bucket"
-        ).withColumnRenamed("vec_id", "query_id")
-        qd = _adc_tables_between(base, cb, lo, hi)
-        cand = (
-            assigned.join(F.broadcast(probes), "bucket")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id")
+            qbase, codebook, "vec_id", "vec", nprobe, "bucket"
         )
-        scored = (
-            cand.join(enc, "vec_id")
-            .join(F.broadcast(qd), ["query_id", "m", "code"])
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(F.round(F.sum("qdist"), 6).alias("adc_dist"))
-        )
-        topk = top_k_per_key(
-            scored,
-            key="query_id",
-            order_by=[F.asc("adc_dist"), F.col("neighbor_id")],
-            k=k,
-            salt_src="neighbor_id",
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "query_id",
-            "neighbor_id",
-            "adc_dist",
-            "rank",
-        )
+        topk = _adc_top_k(
+            assigned, probes, enc, _adc_tables(qbase, cb), k
+        ).select(F.lit(b).alias("batch_id"), "*")
         out = topk if out is None else out.unionByName(topk)
     return out
 
@@ -2133,82 +2035,28 @@ def embedding_quantize_error_sql(
 
 # --- semantic dedup (SemDeDup) ----------------------------------------------
 
-def _semantic_assign_kernel(codebook: "_CodebookHandle"):
-    """mapInPandas kernel: nearest-centroid assignment with SPARK-EXACT
-    arithmetic — every double matches the declarative
-    dot/(norm·norm) + max(struct(ccos, -centroid_id)) plan bit-for-bit:
-
-    - dot accumulates in an ascending-dimension loop (acc += v_i·c_i,
-      product rounded then added — IEEE two-step, no FMA), the same
-      left-associated order as the dot() aggregate fold, whose 0.0 seed
-      is exact (0.0 + x == x);
-    - centroid norms use the identical ascending x·x fold + sqrt;
-    - the argmax scans centroid ids ascending with strictly-greater
-      replacement: ties keep the earlier (lower) centroid_id and NaN
-      ranks greatest, Spark's struct-comparator order;
-    - cent_e6 = floor(ccos·1e6 + 0.5), NaN -> NULL like the cast.
-
-    Per Arrow batch the work is dim vectorized (n×C) fused rounds — the
-    documented escape hatch for the one hot loop Catalyst evaluates
-    interpreted (higher-order functions never enter codegen).
-
-    Scope of the bit-identity claim: it holds for nonzero vector and
-    centroid norms.  On a zero-norm vector or centroid the declarative
-    plan under ANSI mode (Spark 4 default) would raise DIVIDE_BY_ZERO,
-    while this kernel's 0/0 silently yields NaN -> NULL cent_e6 and
-    keeps the row (the NaN-ranks-greatest argmax path).  Embeddings here
-    are L2-normalized upstream so the case is unreachable in practice,
-    but degenerate input diverges rather than matching the SQL plan."""
+def _semantic_assign(df: DataFrame, codebook: _CodebookHandle) -> DataFrame:
+    """(vec_id, bucket, cent_e6): each vector's nearest centroid and its
+    fixed-point similarity cent_e6 = floor(ccos·1e6 + 0.5), NaN -> NULL
+    like the cast.  The bucket is the first column of _rank_codebook's
+    stable order, which is the declarative max(struct(ccos,
+    -centroid_id)) argmax: ties keep the lower centroid_id, NaN ranks
+    greatest."""
     import numpy as np
     import pandas as pd
 
-    def assign(batches):
-        cids, C = codebook.arrays()
-        if C.size == 0:
-            return
-        nc, dim = C.shape
-        cn = np.zeros(nc, dtype=np.float64)
-        for i in range(dim):
-            cn += C[:, i] * C[:, i]
-        cn = np.sqrt(cn)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            vn = pdf["vnorm"].to_numpy(dtype=np.float64)
-            D = np.zeros((n, nc), dtype=np.float64)
-            for i in range(dim):
-                D += V[:, i : i + 1] * C[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cc = D / (vn[:, None] * cn[None, :])
-            best = np.full(n, -np.inf)
-            best_id = np.full(n, cids[0] if nc else 0, dtype=np.int64)
-            best_nan = np.zeros(n, dtype=bool)
-            for j in range(nc):
-                c = cc[:, j]
-                is_nan = np.isnan(c)
-                better = (~best_nan) & (is_nan | (c > best))
-                best = np.where(better, c, best)
-                best_id = np.where(better, cids[j], best_id)
-                best_nan |= better & is_nan
-            e6 = np.floor(best * 1e6 + 0.5)
-            if best_nan.any():  # NaN ccos -> NULL cent_e6, like the cast
-                cent = pd.array(
-                    np.where(best_nan, 0, e6).astype(np.int64), dtype="Int64"
-                )
-                cent[best_nan] = None
-            else:
-                cent = pd.array(e6.astype(np.int64), dtype="Int64")
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "bucket": best_id,
-                    "cent_e6": cent,
-                }
-            )
+    def emit(ids, ranked, top_cos):
+        e6 = np.floor(top_cos * 1e6 + 0.5)
+        nan = np.isnan(top_cos)
+        if nan.any():  # NaN ccos -> NULL cent_e6, like the cast
+            cent = pd.array(np.where(nan, 0, e6).astype(np.int64), dtype="Int64")
+            cent[nan] = None
+        else:
+            cent = pd.array(e6.astype(np.int64), dtype="Int64")
+        return {"vec_id": ids, "bucket": ranked[:, 0], "cent_e6": cent}
 
-    return assign
+    schema = "vec_id long, bucket long, cent_e6 long"
+    return _rank_codebook(df, codebook, "vec_id", "vec", 1, emit, schema)
 
 
 def semantic_dedup(
@@ -2242,14 +2090,13 @@ def semantic_dedup(
     BOTH 64-dim norms per PAIR, which at 90M assignment pairs + 45M
     verify pairs was ~2/3 of all per-pair work; the per-pair expression
     stays dot/(na·nb) with the identical double association, so every
-    cos value is the same double.  (b) the N×C assignment argmax runs as
-    an Arrow-batched mapInPandas scorer against the driver-collected
-    codebook (bounded: C = √rows rows, the same k-row-collect class as
-    the kmeans codebook): the numpy kernel accumulates the dot in an
-    ascending-dimension loop (acc += v_i·c_i), which is the identical
-    IEEE left-associated order as the dot() fold, divides by the same
-    (vnorm·cnorm) product, and arg-maxes with Spark's exact ordering
-    (strictly-greater wins, ties keep the lower centroid_id, NaN ranks
+    cos value is the same double.  (b) the N×C assignment argmax runs in
+    the shared IVF assignment kernel (_rank_codebook) against the
+    driver-collected codebook (bounded: C = √rows rows, the same
+    k-row-collect class as the kmeans codebook): it folds dot and norms
+    in the identical IEEE left-associated order as dot()/norm(), divides
+    by the same (vnorm·cnorm) product, and takes the first column of
+    Spark's exact order (ties keep the lower centroid_id, NaN ranks
     greatest) — bit-identical assignment, ~10x over the interpreted
     higher-order-function path which cannot enter codegen.  (c) only
     victim-direction pairs (witness priority < victim priority) reach
@@ -2267,24 +2114,17 @@ def semantic_dedup(
     """
     if n_centroids is None:
         n_centroids = neardup_centroid_count(approx_rows, 1)
-    base = (
-        _spread_emb(emb)
-        .select("vec_id", _dvec(F.col("embedding")).alias("vec"))
-        .withColumn("vnorm", norm(F.col("vec")))
-    )
+    base = _vectors(emb).withColumn("vnorm", norm(F.col("vec")))
     # bounded codebook: C = √rows rows of dim doubles (same class as the
     # kmeans k-row codebook); collected lazily at first kernel pickle and
-    # shipped as a Spark broadcast, like _nearest_buckets (r12)
-    assign = _semantic_assign_kernel(
-        _CodebookHandle(_centroids(base, n_centroids))
-    )
+    # shipped as a Spark broadcast (r12)
+    codebook = _CodebookHandle(_centroids(base, n_centroids))
     # asg feeds THREE consumers (both self-join legs and the final verdict
     # join); without truncation each re-runs the NxC assignment scoring
     # pass (plan audit: 18 scans before, one assignment pass after).
     # Slim frame: one vector + 4 scalars per input row.
     asg = (
-        base.select("vec_id", "vec", "vnorm")
-        .mapInPandas(assign, "vec_id long, bucket long, cent_e6 long")
+        _semantic_assign(base, codebook)
         .join(base, "vec_id")
         .localCheckpoint(eager=False)
     )

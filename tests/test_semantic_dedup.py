@@ -76,14 +76,17 @@ def test_assignment_kernel_matches_declarative_plan(spark):
     plan it replaced: same left-associated dot accumulation, same
     argmax tie order (lower centroid_id wins), same e6 fixed point —
     over vectors engineered for ties (duplicates of centroids, shared
-    directions at different magnitudes) and an edge corpus."""
+    directions at different magnitudes) and an edge corpus.  The kernel
+    (_rank_codebook, shared by every IVF assignment) folds each vector's
+    norm in numpy; the reference reads Spark's norm() column, so this
+    test also proves the two folds agree."""
     import numpy as np
     from pyspark.sql import Row, Window
     from pyspark.sql import functions as F
     from marketstream_etl_spark.operators.similarity import (
         _centroids,
         _dvec,
-        _semantic_assign_kernel,
+        _semantic_assign,
         dot,
         norm,
     )
@@ -140,14 +143,9 @@ def test_assignment_kernel_matches_declarative_plan(spark):
 
     got = {
         r["vec_id"]: (r["bucket"], r["cent_e6"])
-        for r in base.select("vec_id", "vec", "vnorm")
-        .mapInPandas(
-            _semantic_assign_kernel(
-                _CodebookHandle(cents.select("centroid_id", "cvec"))
-            ),
-            "vec_id long, bucket long, cent_e6 long",
-        )
-        .collect()
+        for r in _semantic_assign(
+            base, _CodebookHandle(cents.select("centroid_id", "cvec"))
+        ).collect()
     }
     assert got == ref
 

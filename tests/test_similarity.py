@@ -88,12 +88,16 @@ def test_pq_encode_codes_bounded_and_complete(spark, sf_dir):
     from marketstream_etl_spark.operators.similarity import (
         PQ_K,
         PQ_M,
+        _pq_codebook,
+        _subvectors,
+        _vectors,
         pq_encode,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
-    codes = pq_encode(emb).collect()
+    subs = _subvectors(_vectors(emb), "vec_id", "vec")
+    codes = pq_encode(subs, _pq_codebook(subs, PQ_K)).collect()
     # every vector gets exactly M codes, each within the codebook range
     assert len(codes) == n * PQ_M
     assert all(0 <= r["code"] < PQ_K for r in codes)
@@ -295,12 +299,16 @@ def test_nearest_buckets_kernel_matches_declarative_plan(spark):
     replaced (r11 VERDICT item 2): same ascending-dimension IEEE dot fold,
     same stable top-n tie order — over a corpus engineered for exact-cosine
     ties (exact/scaled copies of a centroid, a duplicated centroid
-    direction inside the codebook) and a 1-ulp near-tie, at top-n 1 and 3."""
+    direction inside the codebook) and a 1-ulp near-tie, at top-n 1 and 3,
+    and for the one-pass assign+probe caller (top-1 for every row plus
+    top-nprobe for the id < n_queries prefix)."""
     import numpy as np
     from pyspark.sql import Row, Window
     from pyspark.sql import functions as F
 
     from marketstream_etl_spark.operators.similarity import (
+        _CodebookHandle,
+        _assign_and_probe,
         _centroids,
         _dvec,
         _nearest_buckets,
@@ -323,20 +331,15 @@ def test_nearest_buckets_kernel_matches_declarative_plan(spark):
     df = spark.createDataFrame([Row(vec_id=i, embedding=v) for i, v in vecs])
     base = df.select("vec_id", _dvec(F.col("embedding")).alias("vec"))
     cents = _centroids(base, 8)
+    handle = _CodebookHandle(cents)
 
-    for n in (1, 3):
-        got = sorted(
-            (r["vec_id"], r["bucket"])
-            for r in _nearest_buckets(
-                base, cents, "vec_id", "vec", n, "bucket"
-            ).collect()
-        )
+    def ref(rows, n):
         w = Window.partitionBy("vec_id").orderBy(
             F.desc("ccos"), F.col("centroid_id")
         )
-        ref = sorted(
+        return sorted(
             (r["vec_id"], r["centroid_id"])
-            for r in base.join(F.broadcast(cents))
+            for r in rows.join(F.broadcast(cents))
             .select(
                 "vec_id",
                 "centroid_id",
@@ -346,7 +349,21 @@ def test_nearest_buckets_kernel_matches_declarative_plan(spark):
             .filter(F.col("r") <= n)
             .collect()
         )
-        assert got == ref
+
+    def got(frame):
+        return sorted((r["vec_id"], r["bucket"]) for r in frame.collect())
+
+    for n in (1, 3):
+        assert got(
+            _nearest_buckets(base, handle, "vec_id", "vec", n, "bucket")
+        ) == ref(base, n)
+
+    n_queries, nprobe = 5, 3
+    assigned, probes = _assign_and_probe(
+        base, handle, "vec_id", "vec", n_queries, nprobe
+    )
+    assert got(assigned) == ref(base, 1)
+    assert got(probes) == ref(base.filter(F.col("vec_id") < n_queries), nprobe)
 
 
 def test_nearest_buckets_codebook_collected_once_and_shared(spark):
@@ -381,62 +398,28 @@ def test_nearest_buckets_codebook_collected_once_and_shared(spark):
     assert handle._bc is bc, "actions reuse the broadcast too"
 
 
-def test_assign_and_probe_matches_two_pass_kernel(spark):
-    """The r13 fused assign+probe kernel must be bit-identical to the two
-    separate _nearest_buckets passes it replaced (one corpus top-1 pass +
-    one query top-nprobe pass): the batch cosine matrix is shared, but
-    row-wise arithmetic and the stable tie order are unchanged — checked
-    over the same tie-engineered corpus as the kernel-vs-declarative test
-    (scaled centroid copies, duplicated centroid direction, 1-ulp bump)."""
-    import numpy as np
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
+def test_ivfpq_served_cold_call_collects_codebook_once(
+    spark, sf_dir, monkeypatch
+):
+    """A cold ann_ivfpq_served call (no cached index) collects and
+    broadcasts the coarse codebook ONCE: the index build and every
+    batch's probes share one _CodebookHandle."""
+    from marketstream_etl_spark.functions import cachegen
+    from marketstream_etl_spark.operators import similarity
 
-    from marketstream_etl_spark.operators.similarity import (
-        _CodebookHandle,
-        _assign_and_probe,
-        _centroids,
-        _dvec,
-        _nearest_buckets,
-    )
+    materialized = []
+    real = similarity._CodebookHandle._materialize
 
-    rng = np.random.default_rng(12)
-    dim = 6
-    vecs = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(48)]
-    vecs[1] = (1, [3.0 * x for x in vecs[0][1]])
-    vecs.append((48, list(vecs[0][1])))
-    vecs.append((49, [0.5 * x for x in vecs[0][1]]))
-    bumped = list(vecs[2][1])
-    bumped[0] = float(np.nextafter(bumped[0], np.inf))
-    vecs.append((50, bumped))
-    df = spark.createDataFrame([Row(vec_id=i, embedding=v) for i, v in vecs])
-    base = df.select("vec_id", _dvec(F.col("embedding")).alias("vec"))
-    cents = _centroids(base, 8)
+    def counted(self):
+        materialized.append(self)
+        return real(self)
 
-    n_queries, nprobe = 5, 3
-    handle = _CodebookHandle(cents)
-    a_slim, p_slim = _assign_and_probe(
-        base, handle, "vec_id", "vec", n_queries, nprobe
-    )
-    got_assign = sorted(
-        (r["vec_id"], r["bucket"]) for r in a_slim.collect()
-    )
-    got_probe = sorted(
-        (r["vec_id"], r["bucket"]) for r in p_slim.collect()
-    )
-
-    ref_assign = sorted(
-        (r["vec_id"], r["bucket"])
-        for r in _nearest_buckets(
-            base, cents, "vec_id", "vec", 1, "bucket"
-        ).collect()
-    )
-    queries = base.filter(F.col("vec_id") < n_queries)
-    ref_probe = sorted(
-        (r["vec_id"], r["bucket"])
-        for r in _nearest_buckets(
-            queries, cents, "vec_id", "vec", nprobe, "bucket"
-        ).collect()
-    )
-    assert got_assign == ref_assign
-    assert got_probe == ref_probe
+    monkeypatch.setattr(similarity._CodebookHandle, "_materialize", counted)
+    cachegen.clear("ivfpq_served")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    try:
+        served = similarity.ann_ivfpq_served(emb, approx_rows=emb.count())
+        assert served.count() > 0
+    finally:
+        cachegen.clear("ivfpq_served")
+    assert len(materialized) == 1

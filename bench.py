@@ -265,13 +265,17 @@ STREAM_ROWS = 1_000_000
 STREAM_FRAMES_DIR = "/tmp/marketstream_bench_frames_1m"
 
 
-def bench_stream_1m(spark) -> dict[str, float]:
+def bench_stream_1m(spark) -> tuple[dict[str, float], list[dict]]:
     """Streaming-ingest throughput, BASELINE-comparable: 1M JSON tick
     frames through a REAL Structured Streaming query (file source,
     availableNow) doing parse → dead-letter split → hot filter →
     per-symbol counts. The reference demo feeds ~5,000 ticks/s over a
     WebSocket (TickServer.hpp:183,239-241); this measures the same
-    logical pipeline at engine speed."""
+    logical pipeline at engine speed.
+
+    Also returns, per trigger of the last timed run, the state width
+    (state-store instances) and the state commit time, read from the
+    query's progress."""
     from pyspark.sql import functions as F
 
     from marketstream_etl_spark.sources.generator import generate_trades
@@ -297,18 +301,20 @@ def bench_stream_1m(spark) -> dict[str, float]:
             generate_trades(spark, 10_000).withColumn("exchange", F.lit("WSS"))
         ).coalesce(1).write.mode("overwrite").parquet(warm_dir)
 
-    def run(src_dir: str, qname: str) -> None:
+    def run(src_dir: str, qname: str) -> list[dict]:
         # single_parse_ingest is the repo's JSON-ingest conf scope (see
-        # streaming/ticks.py): predicate pushdown excluded for THIS query
-        # only, so the microbatch parses each frame once instead of per
-        # pushed-down predicate.  Same pipeline, same timing methodology.
+        # streaming/ticks.py), for THIS query only: predicate pushdown
+        # excluded, so the microbatch parses each frame once instead of
+        # per pushed-down predicate, and spark.sql.shuffle.partitions=1,
+        # so the 10-symbol state is one state-store instance instead of
+        # one per core.  Same pipeline, same timing methodology.
         frames = spark.readStream.schema("value string").parquet(src_dir)
         parsed = parse_json_frames(frames)
         counts = symbol_counts(
             hot_path_filter(parsed.filter(~F.col("parse_error")))
         )
         with single_parse_ingest(spark):
-            run_bounded(
+            return run_bounded(
                 counts.writeStream.format("memory")
                 .queryName(qname)
                 .outputMode("complete")
@@ -318,13 +324,22 @@ def bench_stream_1m(spark) -> dict[str, float]:
     dt = float("inf")
     for _ in range(3):  # best of three (see bench_etl_1m)
         t0 = time.perf_counter()
-        run(STREAM_FRAMES_DIR, "bench_stream_counts")
+        progress = run(STREAM_FRAMES_DIR, "bench_stream_counts")
         dt = min(dt, time.perf_counter() - t0)
     n = spark.table("bench_stream_counts").agg(F.sum("n_ticks")).collect()[0][0]
+    triggers = [
+        {
+            "batch_id": p["batchId"],
+            "state_width": p["stateOperators"][0]["numShufflePartitions"],
+            "state_commit_ms": p["stateOperators"][0]["commitTimeMs"],
+        }
+        for p in progress
+        if p["stateOperators"]
+    ]
     return {
         "stream_1m_total": round(dt, 4),
         "stream_1m_rows_per_sec": round(n / dt, 1),
-    }
+    }, triggers
 
 
 # Ambient-calibration canary (r10 VERDICT item 2): a fixed, code-stable
@@ -434,7 +449,7 @@ def main() -> None:
     cold_total = sum(r[0] for r in all_runs.values()) + etl["etl_1m_total"]
     timings.update(etl)
     spark.catalog.clearCache()  # streaming section starts from a clean heap
-    stream = bench_stream_1m(spark)
+    stream, stream_triggers = bench_stream_1m(spark)
     total += stream["stream_1m_total"]
     cold_total += stream["stream_1m_total"]
     timings.update(stream)
@@ -534,6 +549,7 @@ def main() -> None:
         "all_runs": all_runs,
         "extras": extras,
         "extras_split": extras_split,
+        "stream_1m_triggers": stream_triggers,
         "canary_seconds": canary,
     }
     # The committed round-close BENCH_DETAIL.json is the canary-adjudicated

@@ -14,6 +14,7 @@ the deadline, the stop and the checkpoint cleanup are defined once.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -31,12 +32,13 @@ from marketstream_etl_spark.sources.tables import sink_name
 STREAM_DEADLINE_S = 600
 
 
-def run_bounded(writer: DataStreamWriter) -> None:
+def run_bounded(writer: DataStreamWriter) -> list[dict]:
     """Run one bounded streaming query to completion: a fresh temp
     checkpoint, the availableNow trigger, and a STREAM_DEADLINE_S wait.
     awaitTermination re-raises the query's own failure; a drain still
     running at the deadline raises TimeoutError.  On every exit path the
-    query is stopped and its checkpoint removed."""
+    query is stopped and its checkpoint removed.  Returns the stopped
+    query's `recentProgress`, one dict per trigger."""
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
     q = None
     try:
@@ -54,6 +56,7 @@ def run_bounded(writer: DataStreamWriter) -> None:
         if q is not None:
             q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
+    return [json.loads(p.json) for p in q.recentProgress]
 
 
 def valid_trades_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

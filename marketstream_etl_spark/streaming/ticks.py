@@ -165,13 +165,19 @@ def parse_json_frames(
 
 _PUSHDOWN_RULE = "org.apache.spark.sql.catalyst.optimizer.PushDownPredicates"
 
+_INGEST_CONFS = {
+    "spark.sql.optimizer.excludedRules": _PUSHDOWN_RULE,
+    "spark.sql.shuffle.partitions": "1",
+}
+
 
 @contextmanager
 def single_parse_ingest(spark: SparkSession):
-    """Scope `spark.sql.optimizer.excludedRules=PushDownPredicates` around
-    a JSON-frame ingest streaming run (start → awaitTermination/stop).
+    """Scope the JSON-frame ingest confs around a streaming run (start →
+    awaitTermination/stop): `spark.sql.optimizer.excludedRules=
+    PushDownPredicates` and `spark.sql.shuffle.partitions=1`.
 
-    Why (guide §4.1/§2.2, r13 VERDICT item 5): predicate pushdown
+    Pushdown (guide §4.1/§2.2, r13 VERDICT item 5): predicate pushdown
     substitutes the `tick` parse alias into every downstream filter
     conjunct, so the ingest microbatch evaluates per-field pruned
     `from_json` re-parses per predicate (each re-scans the frame string);
@@ -181,23 +187,33 @@ def single_parse_ingest(spark: SparkSession):
     interleaved A/B: 2.33 → 1.95 s best / every pair agreeing (~15–20%);
     microbatch plan drops from 5 to 3 from_json occurrences.
 
-    Scope ONLY around from_json ingest queries: for parquet-scan batch or
-    streaming plans the exclusion would forfeit real scan pushdown.  The
-    conf is restored on exit even on error; microbatches plan inside the
-    scope, so it must wrap the whole drain, not just `.start()`."""
-    key = "spark.sql.optimizer.excludedRules"
+    Width: every caller aggregates a small, known key domain (10 symbols
+    or the 2 `parse_error` values) with integer sums, so one shuffle
+    partition keeps one state-store instance, which writes one delta
+    file per trigger instead of one per core.  The narrower shuffle
+    cannot change a value.  README "Tick ingest state width" has the
+    measurements.
+
+    Scope ONLY around from_json ingest queries over a small key domain:
+    for parquet-scan plans the exclusion would forfeit real scan
+    pushdown, and state that grows with the input needs its width.  The
+    query clones the session at `.start()`, so the scope must cover
+    `.start()`; later triggers keep the width and plan of that clone.
+    On every exit path each conf gets back the caller's exact value: a
+    conf that was unset is unset again, and one that was set is set back,
+    never unset, since unsetting the shuffle width falls back to Spark's
+    default of 200."""
+    prev = {key: spark.conf.get(key, None) for key in _INGEST_CONFS}
     try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, _PUSHDOWN_RULE)
-    try:
+        for key, value in _INGEST_CONFS.items():
+            spark.conf.set(key, value)
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def hot_path_filter(ticks: DataFrame) -> DataFrame:

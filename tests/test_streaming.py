@@ -418,29 +418,82 @@ def test_accumulate_stream_empty_source_yields_empty_frame(spark, tmp_path):
 
 
 def test_single_parse_ingest_scopes_and_restores_conf(spark):
+    """Both ingest confs are pinned inside the scope; after a normal exit
+    and after an error the caller's exact values are back.  The width
+    is restored with set, never unset: an unset width reads Spark's
+    default of 200, not the caller's."""
+    import pytest
+
     from marketstream_etl_spark.streaming.ticks import (
         _PUSHDOWN_RULE,
         single_parse_ingest,
     )
 
     key = "spark.sql.optimizer.excludedRules"
+    width = "spark.sql.shuffle.partitions"
+    prior_width = spark.conf.get(width)
     spark.conf.set(key, "some.Other.Rule")
+    spark.conf.set(width, "7")
     try:
         with single_parse_ingest(spark):
             assert spark.conf.get(key) == _PUSHDOWN_RULE
+            assert spark.conf.get(width) == "1"
         assert spark.conf.get(key) == "some.Other.Rule"
+        assert spark.conf.get(width) == "7"
+        spark.conf.unset(key)
+        # unset baseline: restored to unset, even on error inside the scope
+        with pytest.raises(RuntimeError, match="boom"):
+            with single_parse_ingest(spark):
+                assert spark.conf.get(key) == _PUSHDOWN_RULE
+                assert spark.conf.get(width) == "1"
+                raise RuntimeError("boom")
+        # excludedRules has a None default, so "restored to unset" reads
+        # back as None rather than raising
+        assert spark.conf.get(key) in (None, "<undefined>")
+        assert spark.conf.get(width) == "7"
     finally:
         spark.conf.unset(key)
-    # unset baseline: restored to unset, even on error inside the scope
+        spark.conf.set(width, prior_width)
+
+
+def test_tick_ingest_keeps_one_state_instance(spark, tmp_path):
+    """The tick pipeline drained inside single_parse_ingest keeps its
+    per-symbol state in one state-store instance on every trigger, and
+    its counts equal the batch counts."""
+    from marketstream_etl_spark.streaming.replay import run_bounded
+    from marketstream_etl_spark.streaming.ticks import single_parse_ingest
+
+    frames = make_frames(spark, n=60, corrupt=3)
+    src = str(tmp_path / "src")
+    frames.repartition(3).write.parquet(src)
+
+    def counts(df):
+        return symbol_counts(
+            hot_path_filter(parse_json_frames(df).filter(~F.col("parse_error")))
+        )
+
+    stream = (
+        spark.readStream.schema("value string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    with single_parse_ingest(spark):
+        progress = run_bounded(
+            counts(stream).writeStream.format("memory")
+            .queryName("one_state_instance")
+            .outputMode("complete")
+        )
+    widths = [p["stateOperators"][0]["numShufflePartitions"] for p in progress]
+    assert len(widths) >= 2
+    assert widths == [1] * len(widths)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
     try:
-        with single_parse_ingest(spark):
-            assert spark.conf.get(key) == _PUSHDOWN_RULE
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    # excludedRules has a None default, so "restored to unset" reads back
-    # as None rather than raising
-    assert spark.conf.get(key) in (None, "<undefined>")
+        assert rows(spark.table("one_state_instance")) == rows(counts(frames))
+    finally:
+        spark.catalog.dropTempView("one_state_instance")
 
 
 def _spy_mkdtemp(monkeypatch) -> list[str]:

@@ -103,31 +103,6 @@ def compute_indicators(
     return out
 
 
-def compute_indicators_sums(trades: DataFrame) -> DataFrame:
-    """Whole-history indicator snapshot in PURE codegen sums — the
-    reference-speed lever documented in README's indicators-floor decision
-    note.  One hash aggregate, no window, no second pass: measures at the
-    ~170-213 ms scan floor on 1M rows (tests/test_indicator_floor.py),
-    i.e. at par with the reference's 150 ms single-thread fold.
-
-    SEMANTIC TRADE, stated plainly: `sma` here averages ALL of a symbol's
-    trades (not the last N) and there is NO RSI column — RSI needs ordered
-    price diffs, and any exact ordered-diff mechanism is precisely the
-    ~0.5 s last-N tail cost this variant exists to avoid.  `vwap` is exact
-    (it is whole-history by definition).  NOT the pipeline default; see
-    the decision note for why exact last-N semantics win."""
-    agg = trades.groupBy("symbol").agg(
-        F.count("*").alias("n_trades"),
-        F.avg("price").alias("sma_all"),
-        F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-        F.sum(F.col("volume").cast("double")).alias("_v"),
-    )
-    vwap = F.when(F.col("_v") == 0.0, F.lit(0.0)).otherwise(
-        F.col("_pv") / F.col("_v")
-    )
-    return agg.select("symbol", "n_trades", "sma_all", vwap.alias("vwap"))
-
-
 def rsi_signal(rsi: Column) -> Column:
     """F4: RSI → OVERBOUGHT / OVERSOLD / NEUTRAL label
     (TechnicalIndicators.hpp:157-163, README.md:239-241)."""
@@ -175,103 +150,6 @@ def rolling_indicators(trades: DataFrame, period: int = DEFAULT_PERIOD) -> DataF
         )
         .drop("_change")
     )
-
-
-def compute_indicators_topk(
-    trades: DataFrame,
-    period: int = DEFAULT_PERIOD,
-    computed_at_ns: int | None = None,
-    n_salt: int = 32,
-) -> DataFrame:
-    """`compute_indicators` with the low-cardinality-key hazard removed.
-
-    The window form partitions by symbol; with ~10 symbols (the reference's
-    universe, DataGenerator.hpp:86-97) every row of a symbol lands on ONE
-    reducer and the per-symbol sort serializes — fatal at 100 TB.  This
-    variant never sorts the full history:
-
-      1. VWAP + row count: plain groupBy(symbol) — map-side partial agg,
-         parallelism independent of symbol count.
-      2. last (period+1) rows per symbol: salted two-phase top-k
-         (functions/topk.py) — every task's work is bounded by k·n_salt.
-      3. SMA/RSI from the ≤(period+1)-row tail: array HOFs on a per-symbol
-         array — O(period) per symbol.
-
-    Output and semantics identical to `compute_indicators` (same clamps and
-    edge cases, TechnicalIndicators.hpp:125,252-290).
-    """
-    from marketstream_etl_spark.functions.topk import top_k_per_key
-
-    totals = trades.groupBy("symbol").agg(
-        F.count("*").alias("_n"),
-        F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-        F.sum(F.col("volume").cast("double")).alias("_v"),
-    )
-
-    tail_rows = top_k_per_key(
-        trades.select("symbol", "timestamp", "trade_id", "price"),
-        key="symbol",
-        order_by=[F.col("timestamp").desc(), F.col("trade_id").desc()],
-        k=period + 1,
-        salt_src="trade_id",
-        n_salt=n_salt,
-    )
-    # rank 1 = most recent; array_sort on (rank, price) structs keeps the
-    # most-recent-first order inside the collected array.
-    tails = tail_rows.groupBy("symbol").agg(
-        F.array_sort(F.collect_list(F.struct("rank", "price"))).alias("_t")
-    )
-
-    prices = F.col("_t").getField("price")  # most-recent-first
-    # change between consecutive prices, most-recent change first:
-    # changes[i] = prices[i] - prices[i+1]  (1-based element_at below)
-    changes = F.expr(
-        "transform(slice(_t.price, 1, size(_t.price) - 1),"
-        " (p, i) -> p - element_at(_t.price, i + 2))"
-    )
-
-    joined = totals.join(tails, "symbol")
-    n = F.col("_n")
-    eff = F.least(F.lit(period), n)
-    n_ch = F.least(eff, n - 1)
-
-    sma_window = F.slice(prices, 1, eff)
-    sma = F.aggregate(
-        sma_window, F.lit(0.0), lambda acc, x: acc + x
-    ) / eff.cast("double")
-
-    used = F.slice(changes, 1, n_ch)
-    gain_sum = F.aggregate(
-        used, F.lit(0.0), lambda acc, x: acc + F.greatest(x, F.lit(0.0))
-    )
-    loss_sum = F.aggregate(
-        used, F.lit(0.0), lambda acc, x: acc + F.greatest(-x, F.lit(0.0))
-    )
-    avg_gain = gain_sum / n_ch.cast("double")
-    avg_loss = loss_sum / n_ch.cast("double")
-    rsi = (
-        F.when((n < 2) | (eff <= 1), F.lit(50.0))
-        .when(avg_loss == 0.0, F.lit(100.0))
-        .otherwise(
-            F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + avg_gain / avg_loss)
-        )
-    )
-    vwap = F.when(F.col("_v") == 0.0, F.lit(0.0)).otherwise(
-        F.col("_pv") / F.col("_v")
-    )
-
-    out = joined.select(
-        "symbol",
-        sma.alias("sma"),
-        rsi.alias("rsi"),
-        vwap.alias("vwap"),
-        eff.cast("int").alias("period"),
-    )
-    if computed_at_ns is not None:
-        out = out.withColumn(
-            "computed_at", F.lit(int(computed_at_ns)).cast("long")
-        )
-    return out
 
 
 def _tail_indicators(
@@ -334,8 +212,9 @@ def compute_indicators_fused(
 ) -> DataFrame:
     """Single-pass fused indicator aggregate — the scale plan.
 
-    The window form sorts every row of a symbol on one reducer; the salted
-    top-k form avoids the serialization but still SHUFFLES every row once.
+    The window form sorts every row of a symbol on one reducer; a salted
+    two-phase top-k avoids the serialization but still SHUFFLES every row
+    once.
     This variant shuffles almost nothing: group by (spark_partition_id,
     symbol) so each group is complete within its input partition — the
     "partial" aggregation IS the full group — computing count/Σpv/Σv plus a

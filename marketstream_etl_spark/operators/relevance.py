@@ -138,9 +138,16 @@ def bm25_search(
     # cannot prune a doc_id predicate).  Row-identical to the old
     # post.filter(doc_id < n) projection: postings are distinct per
     # (doc, term) and scoring never reads the query side's tf.
-    qterms = docs.filter(F.col("doc_id") < n_queries).select(
-        F.col("doc_id").alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
+    # distinct after the explode, not array_distinct inside it: the plan
+    # manifest forbids an explode over an array_distinct build (the
+    # collapsed-Generate class)
+    qterms = (
+        docs.filter(F.col("doc_id") < n_queries)
+        .select(
+            F.col("doc_id").alias("query_id"),
+            F.explode(tokens(F.col("text"))).alias("term"),
+        )
+        .distinct()
     )
     # the bounded query vocabulary is collected once per search (the same
     # driver-side class as the codebook collect: a query parse, not data)

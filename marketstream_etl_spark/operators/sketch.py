@@ -1229,7 +1229,7 @@ def hll_set_ops(docs: DataFrame) -> DataFrame:
     # feeds); broadcasting one side makes the < self-join a
     # BroadcastNestedLoopJoin rather than a single-partition
     # CartesianProduct (same row count, but the work distributes — the
-    # registry-wide plan_smells scan flags bare cartesians)
+    # plan manifest test fails on any CartesianProduct)
     srcs = per_est.select("source")
     sp = (
         srcs.alias("a")

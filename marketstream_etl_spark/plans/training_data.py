@@ -2081,8 +2081,9 @@ def chi2_by_source(per: DataFrame) -> DataFrame:
     (r6) derived cg / t / tg as separate aggregations joined back onto
     the count rows — semantically the textbook SQL, but the physical
     plan re-scanned and re-exploded the corpus SIX times (52 Exchange
-    nodes; PLANS.md caught it).  Per-token and per-source totals are
-    partitioned window sums over the SAME rows, so the whole statistic
+    nodes; a plan dump caught it, and the plan manifest test now pins
+    the count).  Per-token and per-source totals are partitioned window
+    sums over the SAME rows, so the whole statistic
     is one scan of `per`, two window exchanges, and a 1-row global
     total — the plan that survives a 100× corpus.  All window sums are
     integer (exact, order-independent); every float step is unchanged,

@@ -9,7 +9,7 @@ trades, min of 3 warm runs):
     codegen groupBy(symbol) sums (VWAP parts)    170 ms   <- at par with the
     + max(struct) (single latest row)            213 ms      reference's 150 ms
     window variant (full compute_all parity)     688 ms
-    salted top-k variant                         781 ms
+    salted top-k variant (since removed)         781 ms
     fused partial-agg variant                    751 ms
 
 The sums half of the indicator is at reference speed; the entire remaining
@@ -35,7 +35,6 @@ across 10 symbols), so correctness needs a detect-and-redo fallback.  A
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from marketstream_etl_spark.operators import indicators as I
 from marketstream_etl_spark.sources.generator import generate_trades
@@ -60,7 +59,6 @@ def _snapshot(df):
 
 def test_all_strategies_agree(trades):
     base = _snapshot(I.compute_indicators(trades, period=5))
-    assert _snapshot(I.compute_indicators_topk(trades, period=5)) == base
     assert _snapshot(I.compute_indicators_fused(trades, period=5)) == base
     assert _snapshot(I.compute_indicators_auto(trades, period=5)) == base
 
@@ -70,6 +68,20 @@ def test_fused_handles_tiny_groups(spark):
     tiny = generate_trades(spark, 7)
     base = _snapshot(I.compute_indicators(tiny, period=5))
     assert _snapshot(I.compute_indicators_fused(tiny, period=5)) == base
+    # Single-price symbol → RSI 50; all-gains symbol → RSI 100: the same
+    # guards as the window form (TechnicalIndicators.hpp:252-284).
+    edge = spark.createDataFrame(
+        [
+            (1, 100, "ONE", 10.0, 5),
+            (2, 100, "UP", 10.0, 5),
+            (3, 200, "UP", 11.0, 5),
+            (4, 300, "UP", 12.0, 5),
+        ],
+        "trade_id long, timestamp long, symbol string, price double, volume int",
+    )
+    out = _snapshot(I.compute_indicators_fused(edge, period=5))
+    assert out == _snapshot(I.compute_indicators(edge, period=5))
+    assert out == [("ONE", 10.0, 50.0, 10.0, 1), ("UP", 11.0, 100.0, 11.0, 3)]
 
 
 def test_fused_shuffle_is_size_independent(trades):
@@ -91,19 +103,3 @@ def test_fused_single_full_scan(trades):
     plan = I.compute_indicators_fused(trades, period=5)._jdf.queryExecution(
     ).executedPlan().toString()
     assert plan.count("InMemoryTableScan") == 1
-
-
-def test_sums_variant_is_codegen_only_and_vwap_exact(trades):
-    """The README decision-note lever: compute_indicators_sums must (a)
-    agree exactly with the default variant on VWAP (whole-history on both
-    sides), and (b) plan as a pure hash aggregate — no window sort, which
-    is the entire point of the variant."""
-    full = {r.symbol: r for r in I.compute_indicators(trades, period=5).collect()}
-    sums_df = I.compute_indicators_sums(trades)
-    sums = {r.symbol: r for r in sums_df.collect()}
-    assert set(full) == set(sums)
-    for s in full:
-        assert abs(full[s].vwap - sums[s].vwap) <= 1e-9 * max(1.0, abs(full[s].vwap))
-    plan = sums_df._jdf.queryExecution().executedPlan().toString()
-    own = plan.split("InMemoryTableScan")[0]
-    assert "Window" not in own and "Sort" not in own

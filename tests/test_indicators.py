@@ -119,49 +119,6 @@ def test_rolling_indicators_shape(spark):
     assert out[4]["vwap"] == pytest.approx(sum([100, 102, 101, 103, 105]) / 5)
 
 
-def test_topk_variant_matches_window_form(spark, sf_dir):
-    """compute_indicators_topk (the 100 TB path: salted two-phase top-k +
-    array HOFs, no full per-symbol sort) must agree with the window form
-    on every symbol and every column."""
-    from marketstream_etl_spark.operators.indicators import (
-        compute_indicators,
-        compute_indicators_topk,
-    )
-    from marketstream_etl_spark.operators.validation import split_valid
-    from marketstream_etl_spark.plans.trades_view import load_trades
-
-    valid, _ = split_valid(load_trades(spark, sf_dir))
-    ref = {r["symbol"]: r for r in compute_indicators(valid).collect()}
-    got = {r["symbol"]: r for r in compute_indicators_topk(valid).collect()}
-    assert set(ref) == set(got)
-    for s in ref:
-        assert got[s]["period"] == ref[s]["period"]
-        for c in ("sma", "rsi", "vwap"):
-            assert abs(got[s][c] - ref[s][c]) < 1e-9, (s, c)
-
-
-def test_topk_variant_edge_cases(spark):
-    """Single-price symbol → RSI 50; all-gains symbol → RSI 100 — same
-    guards as the window form (TechnicalIndicators.hpp:252-284)."""
-    from marketstream_etl_spark.operators.indicators import (
-        compute_indicators_topk,
-    )
-
-    rows = [
-        (1, 100, "ONE", 10.0, 5),
-        (2, 100, "UP", 10.0, 5),
-        (3, 200, "UP", 11.0, 5),
-        (4, 300, "UP", 12.0, 5),
-    ]
-    df = spark.createDataFrame(
-        rows, "trade_id long, timestamp long, symbol string, price double, volume int"
-    )
-    out = {r["symbol"]: r for r in compute_indicators_topk(df).collect()}
-    assert out["ONE"]["rsi"] == 50.0 and out["ONE"]["period"] == 1
-    assert out["UP"]["rsi"] == 100.0
-    assert abs(out["UP"]["sma"] - 11.0) < 1e-12
-
-
 def _wilder_rsi_recursive(prices, period=14):
     """Literal Wilder recursion (textbook form) for the closed-form check."""
     changes = [b - a for a, b in zip(prices, prices[1:])]

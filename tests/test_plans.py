@@ -3,15 +3,26 @@
 These parse `.explain("formatted")` output and fail if a regression
 reintroduces a scale hazard: a filter that stops pushing down to parquet, a
 dimension join that stops broadcasting, an extra shuffle in the indicator
-plan, or a Python UDF sneaking into a hot path.
+plan, or a Python UDF sneaking into a hot path.  The plan manifest test
+covers every batch query's node counts (tools/gen_plan_manifest.py).
 """
 
 from __future__ import annotations
 
 import io
+import json
+import os
+import subprocess
+import sys
 from contextlib import redirect_stdout
 
+import __spark_entry__ as entrymod
 from marketstream_etl_spark.plans import advanced, analytics, tpch
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+import gen_plan_manifest  # noqa: E402
 
 
 def plan_of(df) -> str:
@@ -484,3 +495,51 @@ def test_kfold_cells_partition_and_balance(spark, sf_dir):
         if r.n_docs > 0  # fold exists; recompute membership directly
     }
     assert expect_fold in got
+
+
+def test_committed_plan_manifest_is_current(tmp_path):
+    """plans/manifest.json equals a fresh build, covers every batch query,
+    and records no CartesianProduct, unpartitioned Window or collapsed
+    Generate."""
+    # A fresh interpreter at the repo root: Python workers import the
+    # package from there, and the session is the generator's pinned one.
+    out = tmp_path / "manifest.json"
+    build = (
+        "import sys; sys.path.insert(0, 'tools'); import gen_plan_manifest as g; "
+        f"open({str(out)!r}, 'w').write(g.render())"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", build],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=1200,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    built = json.loads(out.read_text())
+    batch = {n for n in entrymod.queries() if gen_plan_manifest.is_batch(n)}
+    assert set(built) == batch
+    smells = [
+        f"{name}: {key} {counts[key]}"
+        for name, counts in built.items()
+        for key in gen_plan_manifest.SMELLS
+        if key in counts
+    ]
+    assert not smells, "plan smells:\n" + "\n".join(smells)
+
+    with open(gen_plan_manifest.MANIFEST) as f:
+        committed_text = f.read()
+    committed = json.loads(committed_text)
+    diffs = []
+    for name in sorted(set(committed) | set(built)):
+        old, new = committed.get(name), built.get(name)
+        if old is None or new is None:
+            diffs.append(f"{name}: {'added' if old is None else 'removed'}")
+            continue
+        for key in sorted(set(old) | set(new)):
+            if old.get(key, 0) != new.get(key, 0):
+                diffs.append(f"{name}: {key} {old.get(key, 0)} → {new.get(key, 0)}")
+    assert not diffs and committed_text == out.read_text(), (
+        "plans/manifest.json is stale; run python tools/gen_plan_manifest.py\n"
+        + "\n".join(diffs)
+    )

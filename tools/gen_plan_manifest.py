@@ -1,0 +1,134 @@
+"""Generate plans/manifest.json: physical-plan node counts for every batch
+query.  Regenerate after a change that moves a plan:
+
+    python tools/gen_plan_manifest.py
+
+An intended plan change regenerates the manifest in the same commit, so
+the diff shows the plan change.  tests/test_plans.py fails while the
+committed file is stale, and on any entry with a CartesianProduct, an
+unpartitioned Window or a collapsed Generate.  The input is the same sf0.001
+testdata the test suite's ``sf_dir`` fixture reads.
+
+Each batch query (every registered name not starting with ``streaming_``)
+is built, never collected, at sf0.001 and its
+``queryExecution().executedPlan()`` is read.  A node is counted by the name
+at the start of its plan line, so ``BroadcastExchange`` is not also an
+``Exchange``.  The session is pinned: ``defaultParallelism`` sizes some
+plans (scan coalescing, the layout fan-out), so the core count is a
+constant here, not the box's.  Spark job counts are left out: fixture
+tables are written on a cold run only.
+"""
+
+import json
+import os
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MANIFEST = os.path.join(ROOT, "plans", "manifest.json")
+SF_DIR = "/root/testdata/sf0.001"
+MASTER = "local[4]"
+SHUFFLE_PARTITIONS = 4
+
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry
+from marketstream_etl_spark.session import get_spark
+
+COUNTED = {
+    "Exchange",
+    "BroadcastExchange",
+    "CartesianProduct",
+    "BroadcastNestedLoopJoin",
+    "Window",
+    "Generate",
+    "InMemoryRelation",
+    # where Python runs
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "BatchEvalPythonUDTF",
+    "FlatMapGroupsInPandas",
+    "MapInArrow",
+    "MapInPandas",
+}
+# Plan smells, counted so that a regenerated manifest cannot hide one; the
+# manifest test requires each to be zero.
+UNPARTITIONED_WINDOW = "Window unpartitioned"
+COLLAPSED_GENERATE = "Generate collapsed"
+SMELLS = ("CartesianProduct", UNPARTITIONED_WINDOW, COLLAPSED_GENERATE)
+
+_NODE = re.compile(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+) ?(.*)$")
+_SORT_ORDER = re.compile(r" (?:ASC|DESC) NULLS (?:FIRST|LAST)")
+
+
+def is_batch(name: str) -> bool:
+    return not name.startswith("streaming_")
+
+
+def _top_level_args(text: str) -> list[str]:
+    """Split a node's argument string on the ", " that no bracket encloses."""
+    args, depth, start = [], 0, 0
+    for i, ch in enumerate(text):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif depth == 0 and text.startswith(", ", i):
+            args.append(text[start:i])
+            start = i + 2
+    return args + [text[start:]]
+
+
+def node_counts(plan: str) -> dict[str, int]:
+    """Counted node names of one plan string, zero counts left out."""
+    counts: dict[str, int] = {}
+    for line in plan.splitlines():
+        m = _NODE.match(line)
+        if not m or m.group(1) not in COUNTED:
+            continue
+        name, args = m.group(1), _top_level_args(m.group(2))
+        keys = [name]
+        # Window [functions], [partition], [order]: Spark omits an empty
+        # list, so no partition list leaves the order (or nothing) second.
+        if name == "Window" and (len(args) < 2 or _SORT_ORDER.search(args[1])):
+            keys.append(UNPARTITIONED_WINDOW)
+        # (pos)explode over an array_distinct / zip_with build re-evaluates
+        # the build once per output row (projection collapse through
+        # GenerateExec): the measured ~40x class that a localCheckpoint
+        # before the explode fixes.
+        if (
+            name == "Generate"
+            and re.match(r"(?:pos)?explode\(", args[0])
+            and re.search(r"array_distinct\(|zip_with\(", args[0])
+        ):
+            keys.append(COLLAPSED_GENERATE)
+        for key in keys:
+            counts[key] = counts.get(key, 0) + 1
+    return counts
+
+
+def render() -> str:
+    spark = get_spark(
+        "plan-manifest", master=MASTER, shuffle_partitions=SHUFFLE_PARTITIONS
+    )
+    lines = []
+    try:
+        for name, fn in sorted(entry.queries().items()):
+            if not is_batch(name):
+                continue
+            try:
+                plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+            except Exception as e:
+                raise RuntimeError(f"batch query {name!r} failed to build") from e
+            counts = json.dumps(node_counts(plan.toString()), sort_keys=True)
+            lines.append(f"{json.dumps(name)}: {counts}")
+    finally:
+        spark.stop()
+    return "{\n" + ",\n".join(lines) + "\n}\n"
+
+
+if __name__ == "__main__":
+    text = render()
+    with open(MANIFEST, "w") as f:
+        f.write(text)
+    print(f"wrote {os.path.relpath(MANIFEST, ROOT)} ({len(json.loads(text))} queries)")

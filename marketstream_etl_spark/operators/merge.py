@@ -6,7 +6,6 @@ Without Delta/Iceberg jars in this environment, MERGE INTO is composed from
 primitives that shuffle once on the merge key:
 
   upsert        = target ⟕anti source  ∪  source       (source wins)
-  insert-only   = target ∪ (source ⟕anti target)       (ON CONFLICT DO NOTHING)
   SCD2          = close changed rows (valid_to = now) + append new versions
 
 All deterministic → DuckDB-oracle-able.
@@ -25,14 +24,6 @@ def merge_upsert(
     passes through. One shuffle on the key (the anti join); the union is
     shuffle-free."""
     return target.join(source, keys, "left_anti").unionByName(source)
-
-
-def merge_insert_only(
-    target: DataFrame, source: DataFrame, keys: list[str]
-) -> DataFrame:
-    """ON CONFLICT DO NOTHING semantics: only keys not already present are
-    inserted (the reference's rejected staging design, README.md:78-82)."""
-    return target.unionByName(source.join(target, keys, "left_anti"))
 
 
 def scd2_apply(

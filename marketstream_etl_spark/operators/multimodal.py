@@ -132,17 +132,6 @@ FRAME_SCHEMA = T.StructType(
     ]
 )
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("n_bytes_in", T.IntegerType(), True),
-        T.StructField("n_bytes_out", T.IntegerType(), True),
-        T.StructField("resized", T.BinaryType(), True),
-    ]
-)
-
-
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """1-to-N frame sampling via mapInPandas: each payload yields
     `n_frames` evenly-spaced byte slices (the deterministic stand-in for
@@ -174,33 +163,3 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
             )
 
     return media.mapInPandas(op, schema=FRAME_SCHEMA)
-
-
-def resize_media(media: DataFrame, target_bytes: int = 64) -> DataFrame:
-    """Resize stub via mapInPandas: truncate-or-cycle each payload to
-    exactly `target_bytes` (stands in for PIL Image.resize; swap the body
-    for a real codec, the plumbing is final)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for payload in pdf["payload"]:
-                b = bytes(payload)
-                if not b:
-                    outs.append(b)
-                    continue
-                reps = (target_bytes + len(b) - 1) // len(b)
-                outs.append((b * reps)[:target_bytes])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes_in": pdf["payload"].map(len).astype("int32"),
-                    "n_bytes_out": pd.Series(
-                        [len(o) for o in outs], dtype="int32"
-                    ),
-                    "resized": pd.Series(outs, dtype="object"),
-                }
-            )
-
-    return media.mapInPandas(op, schema=RESIZE_SCHEMA)

@@ -282,29 +282,29 @@ register("parquet_sink_roundtrip", q_parquet_sink_roundtrip, PARQUET_SINK_ROUNDT
 def q_parallel_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 end-to-end: N-connection parallel relational load — the
     reference's ParallelLoader spreads the batch over N worker threads,
-    each owning one COPY stream (ParallelLoader.hpp:71-275); here each
-    trade is assigned a deterministic stream by h32(trade_id) mod 4 and
-    repartitioned on it, so every stream's rows flow through exactly one
-    executor-side JDBC connection into embedded Derby.  The readback
-    aggregates per stream — counts/volumes must match the direct oracle,
-    proving all N connections landed their slice exactly once.
+    each owning one COPY stream (ParallelLoader.hpp:71-275); here
+    sinks.write_jdbc_bulk round-robins the trades over 4 partitions, each
+    writing through its own executor-side JDBC connection into embedded
+    Derby (overwrite with TRUNCATE, as prepare_for_parallel_load does).
+    Each trade carries a deterministic slice label, h32(trade_id) mod 4;
+    the readback aggregates per label — counts/volumes must match the
+    direct oracle, proving the load landed every row exactly once.
 
-    The stream stamp is an md5-derived hash (functions/hashing.h32), not
-    spark_partition_id(), so the per-stream assignment itself is
-    engine-independent and oracle-checkable."""
+    The label is an md5-derived hash (functions/hashing.h32), not
+    spark_partition_id(), so it is engine-independent and
+    oracle-checkable."""
     from marketstream_etl_spark.functions.hashing import h32
-    from marketstream_etl_spark.sources.tables import source_key
-    from marketstream_etl_spark.streaming.jdbc_sink import (
+    from marketstream_etl_spark.sources.sinks import (
         DERBY_DRIVER,
-        _derby_url,
-        _drop_if_exists,
-        _read_jdbc,
+        derby_url,
+        read_jdbc,
+        write_jdbc_bulk,
     )
+    from marketstream_etl_spark.sources.tables import source_key
 
     n_streams = 4
-    url = _derby_url(f"parallel_load_{source_key(sf_dir)}")
+    url = derby_url(f"parallel_load_{source_key(sf_dir)}")
     table = "parallel_trades"
-    _drop_if_exists(spark, url, [table])
     trades = load_trades(spark, sf_dir).select(
         "trade_id", "symbol", "price", "volume"
     )
@@ -314,24 +314,12 @@ def q_parallel_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "int"
         ),
     )
-    # repartition hashes the expression with murmur3 mod n — and for raw
-    # stream_id 0..3 that mapping COLLIDES ({0,1,3} land in one partition,
-    # measured), which would silently run the "4-connection" load on two
-    # connections.  The *14 remap makes murmur3(x*14) mod 4 injective on
-    # 0..3 (fixed Spark hash seed, so stable), pinning exactly one stream
-    # per partition = one JDBC connection per stream, like the reference's
-    # one COPY stream per worker thread.
-    (
-        stamped.repartition(
-            n_streams, (F.col("stream_id") * 14).cast("int")
-        )
-        .write.mode("append")
-        .option("batchsize", 10_000)
-        .jdbc(url, table, properties={"driver": DERBY_DRIVER})
+    write_jdbc_bulk(
+        stamped, url, table, {"driver": DERBY_DRIVER}, num_streams=n_streams
     )
     # retry-proof readback: trade_id dedups any transiently re-appended
     # partition (same contract as the streaming JDBC sink)
-    back = _read_jdbc(spark, url, table).dropDuplicates(["trade_id"])
+    back = read_jdbc(spark, url, table).dropDuplicates(["trade_id"])
     return (
         back.groupBy("stream_id")
         .agg(

@@ -26,7 +26,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.operators.indicators import compute_indicators_fused
@@ -116,17 +116,3 @@ def run_pipeline(
     report.n_symbols = written.get["n_symbols"]
     report.stage_seconds["indicators_sink"] = time.perf_counter() - t0
     return report
-
-
-def pipeline_results(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    """Read back what the pipeline wrote (the README verification queries
-    run over these)."""
-    trades = spark.read.parquet(f"{out_dir}/trades")
-    ind = spark.read.parquet(f"{out_dir}/technical_indicators")
-    return {
-        "trades": trades,
-        "indicators": ind,
-        "leaderboard": trades.groupBy("symbol")
-        .agg(F.count("*").alias("trades"), F.sum("volume").alias("total_volume"))
-        .orderBy(F.desc("trades")),
-    }

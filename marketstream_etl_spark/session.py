@@ -91,7 +91,7 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _silence_benign_scheduler_errors(spark)
     # keep embedded Derby's engine log out of the process CWD (repo root)
-    from marketstream_etl_spark.streaming.jdbc_sink import redirect_derby_log
+    from marketstream_etl_spark.sources.sinks import redirect_derby_log
 
     redirect_derby_log(spark)
     return spark

@@ -17,7 +17,7 @@ B-tree index `(symbol, timestamp)` (DatabaseLoader.cpp:117-125, SURVEY §4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned_sorted(
@@ -50,14 +50,6 @@ def write_bucketed_table(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
-
-
-def read_pruned(
-    spark: SparkSession, path: str, partition_col: str, value
-) -> DataFrame:
-    """Partition-pruned scan: only the matching hive partition is read."""
-    df = spark.read.parquet(path)
-    return df.filter(df[partition_col] == value)
 
 
 # COMPRESSED bytes of input per fan-out task.  The fanned-out consumers

@@ -1,6 +1,12 @@
 """Sinks (S7-S12): parquet writer, run-partitioned output naming, JDBC bulk
 load orchestration, and the concurrent dual-sink pattern.
 
+This is the one module that writes to a JDBC target, runs statements on it
+and reads it back: every relational write in the package goes through
+`write_jdbc_bulk`, so the option set the tests lock is the one every query
+runs.  Embedded Derby (in-JVM) is the relational target in queries and
+tests — the real JDBC writer path with no external service.
+
 Reference mapping (SURVEY §2.1):
 - S11 ParquetWriter → `df.write.parquet` (snappy + dictionary + footer
   stats are the Spark/parquet defaults; the reference hand-builds all
@@ -10,8 +16,7 @@ Reference mapping (SURVEY §2.1):
   parallel COPY streams (ParallelLoader.hpp:71-275); `truncate` option ≈
   prepare_for_parallel_load's TRUNCATE (DatabaseLoader.cpp:377-404).
   Drop/rebuild-index DDL has no Spark analog — issued driver-side around
-  the write when a live connection exists.  Everything JDBC is gated so
-  tests never need a database.
+  the write over a driver-side py4j connection (`_jdbc_exec`).
 - PipelineExecutor's concurrent trades ∥ indicators write
   (PipelineExecutor.hpp:80-184) → persist + two writes from two driver
   threads; the scheduler overlaps them.
@@ -20,9 +25,11 @@ Reference mapping (SURVEY §2.1):
 from __future__ import annotations
 
 import datetime as _dt
+import os
+import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -40,13 +47,10 @@ def run_output_path(base_dir: str, run_ts: _dt.datetime | None = None) -> str:
 
 
 DEFAULT_BATCHSIZE = 10_000
+ISOLATION_LEVEL = "READ_COMMITTED"
 
 
-def jdbc_write_options(
-    truncate: bool = True,
-    batchsize: int = DEFAULT_BATCHSIZE,
-    isolation_level: str = "READ_COMMITTED",
-) -> dict[str, str]:
+def jdbc_write_options(truncate: bool = True) -> dict[str, str]:
     """The writer option set a real PostgreSQL bulk target needs — built
     in one place so the sandbox (embedded Derby) and a production
     Postgres exercise the SAME surface (r5 VERDICT item 7: the
@@ -56,18 +60,17 @@ def jdbc_write_options(
       preserves Postgres table DDL (indexes, grants, partitioning)
       exactly like the reference's prepare_for_parallel_load
       (/root/reference/src/database/DatabaseLoader.cpp:377-404).
-    - ``batchsize``: rows per executor-side batched INSERT (the lever
-      that, with the driver's reWriteBatchedInserts, approaches COPY
-      throughput).
-    - ``isolationLevel``: transaction isolation for the write connections;
-      READ_COMMITTED is the Postgres default and the right level for
-      append-only bulk streams.
+    - ``batchsize`` (`DEFAULT_BATCHSIZE`): rows per executor-side batched
+      INSERT (the lever that, with the driver's reWriteBatchedInserts,
+      approaches COPY throughput).
+    - ``isolationLevel`` (`ISOLATION_LEVEL`): READ_COMMITTED is the
+      Postgres default and the right level for append-only bulk streams.
 
     All values are strings — the DataSourceV1 option map is untyped."""
     return {
         "truncate": str(truncate).lower(),
-        "batchsize": str(batchsize),
-        "isolationLevel": isolation_level,
+        "batchsize": str(DEFAULT_BATCHSIZE),
+        "isolationLevel": ISOLATION_LEVEL,
     }
 
 
@@ -122,18 +125,25 @@ def write_dual_sinks(
         f2.result()
 
 
-def _jdbc_exec(spark, url: str, statements: list[str]) -> None:
-    """Run DDL statements over a driver-side JDBC connection (py4j into the
-    JVM's DriverManager — the same classpath the executors' writers use)."""
+def _jdbc_exec(spark, url: str, statements: list[str]) -> list[str]:
+    """Run statements over one driver-side JDBC connection (py4j into the
+    JVM's DriverManager — the same classpath the executors' writers use);
+    returns the first column of every row a statement selects."""
     jvm = spark._sc._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
+    rows: list[str] = []
     try:
         st = conn.createStatement()
         for sql in statements:
-            st.execute(sql)
+            if st.execute(sql):
+                rs = st.getResultSet()
+                while rs.next():
+                    rows.append(rs.getString(1))
+                rs.close()
         st.close()
     finally:
         conn.close()
+    return rows
 
 
 def bulk_load_with_index_ddl(
@@ -157,16 +167,7 @@ def bulk_load_with_index_ddl(
         [f"DROP INDEX {index_name}"],
     )
     try:
-        (
-            df.repartition(num_streams)
-            .write.mode("append")
-            .options(**jdbc_write_options(truncate=False))
-            .jdbc(
-                url,
-                table,
-                properties=pg_connection_properties(properties, url),
-            )
-        )
+        write_jdbc_bulk(df, url, table, properties, num_streams, truncate=False)
     finally:
         # Spark's JDBC writer quotes column identifiers (case-sensitive in
         # Derby/Postgres), so the DDL must quote them too
@@ -176,3 +177,61 @@ def bulk_load_with_index_ddl(
             url,
             [f"CREATE INDEX {index_name} ON {table} ({cols})"],
         )
+
+
+DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+def derby_url(name: str) -> str:
+    return f"jdbc:derby:memory:{name};create=true"
+
+
+def derby_log_path() -> str:
+    """Per-user, per-process log path — never a fixed world-shared file.
+
+    A fixed /tmp name on a multi-user host could be owned by another user
+    (or pre-planted as a symlink), making Derby's engine boot fail or write
+    through the link; uid+pid in the name sidesteps both."""
+    uid = os.getuid() if hasattr(os, "getuid") else 0
+    return os.path.join(
+        tempfile.gettempdir(), f"spark_graft_derby_{uid}_{os.getpid()}.log"
+    )
+
+
+def redirect_derby_log(spark: SparkSession) -> None:
+    """Point Derby's engine log at a per-process temp path instead of CWD.
+
+    Embedded Derby writes ``derby.log`` to the working directory the first
+    time the engine boots in a JVM (so a sweep run from the repo root
+    litters ``git status``).  The path is controlled by the JVM system
+    property ``derby.stream.error.file``, read at engine boot — set it via
+    py4j before the first connection.  Idempotence is keyed on the JVM
+    (System.getProperty probe), not a Python global, so a new JVM created
+    later in the same Python process gets the property re-applied.
+    """
+    jsys = spark._sc._jvm.java.lang.System
+    if jsys.getProperty("derby.stream.error.file") is None:
+        jsys.setProperty("derby.stream.error.file", derby_log_path())
+
+
+def drop_if_exists(spark: SparkSession, url: str, tables: list[str]) -> None:
+    """Derby has no DROP TABLE IF EXISTS; probe the catalog first."""
+    redirect_derby_log(spark)
+    names = ", ".join(f"'{t.upper()}'" for t in tables)
+    found = _jdbc_exec(
+        spark,
+        url,
+        [f"SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME IN ({names})"],
+    )
+    if found:
+        _jdbc_exec(spark, url, [f"DROP TABLE {t}" for t in found])
+
+
+def read_jdbc(spark: SparkSession, url: str, table: str) -> DataFrame:
+    return (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", table)
+        .option("driver", DERBY_DRIVER)
+        .load()
+    )

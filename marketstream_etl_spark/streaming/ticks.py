@@ -1,7 +1,7 @@
 """Structured Streaming tick pipeline — the Spark re-expression of the
 reference's WebSocket demo (SURVEY §2.8, §3.2):
 
-  TickServer (JSON over WS, ~5K ticks/s)  → rate source + column generation
+  TickServer (JSON over WS, ~5K ticks/s)  → websocket.WSTickServer
   TickClient (parse JSON → Trade, SPSC)   → from_json + dead-letter channel
   consumer (filter + per-symbol counts)   → stateful streaming aggregation
 
@@ -42,10 +42,6 @@ class EmitterCapExceeded(RuntimeError):
     emitter is a test harness, not a benchmarkable source), distinct
     from an operator failure so sweeps can record it as a by-design
     skip."""
-
-STREAM_EPOCH_NS = 1_698_208_500_000_000_000  # TickServer.hpp:186
-STREAM_SYMBOLS = ["RELIANCE", "TCS", "INFY", "HDFC", "WIPRO"]  # :196
-
 
 def _over_trades(template: str) -> Oracle:
     """An oracle over the DuckDB trades view, formatted on first use: the
@@ -94,33 +90,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return normalize_event_ts(spark, raw)
-
-
-def tick_stream(spark: SparkSession, rows_per_second: int = 5000) -> DataFrame:
-    """S4: rate-source tick generator with the server's column semantics —
-    5K ticks/s, event time advancing 10µs/tick from a fixed epoch
-    (TickServer.hpp:200-241), prices random-walk-ish per symbol."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    sym = F.element_at(
-        F.array(*[F.lit(s) for s in STREAM_SYMBOLS]),
-        (F.col("value") % len(STREAM_SYMBOLS) + 1).cast("int"),
-    )
-    return rate.select(
-        (F.lit(3_000_000) + F.col("value")).alias("trade_id"),
-        (F.lit(4_000_000) + F.col("value")).alias("order_id"),
-        (F.lit(STREAM_EPOCH_NS) + F.col("value") * 10_000).alias("timestamp"),
-        sym.alias("symbol"),
-        F.round(
-            F.lit(1000.0) + F.pmod(F.col("value") * F.lit(7.77), F.lit(500.0)), 2
-        ).alias("price"),
-        (F.pmod(F.col("value") * 37, 4991) + 10).cast("int").alias("volume"),
-        F.when(F.col("value") % 2 == 0, F.lit("B")).otherwise(F.lit("S")).alias("side"),
-        F.lit("M").alias("type"),
-        F.lit(False).alias("is_pro"),
-        F.lit("WSS").alias("exchange"),  # TickMessage.hpp:164
-    )
 
 
 def to_json_frames(ticks: DataFrame) -> DataFrame:
@@ -254,17 +223,6 @@ def windowed_symbol_stats(
             F.avg("price").alias("avg_price"),
         )
     )
-
-
-def run_demo_batch(spark: SparkSession, frames: DataFrame) -> dict[str, DataFrame]:
-    """The websocket_demo consumer as one availableNow pass over a bounded
-    frame source: parse → dead-letter split → filter → counts.  Used by
-    tests; production would writeStream each branch (foreachBatch for the
-    dual sink)."""
-    parsed = parse_json_frames(frames)
-    good = hot_path_filter(parsed.filter(~F.col("parse_error")))
-    dead = parsed.filter(F.col("parse_error")).select("raw_frame")
-    return {"counts": symbol_counts(good), "dead_letter": dead}
 
 
 def file_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,11 +6,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.skew import salted_join
-from marketstream_etl_spark.operators.merge import (
-    merge_insert_only,
-    merge_upsert,
-    scd2_apply,
-)
+from marketstream_etl_spark.operators.merge import merge_upsert, scd2_apply
 
 
 def test_merge_upsert_source_wins(spark):
@@ -20,14 +16,6 @@ def test_merge_upsert_source_wins(spark):
     source = spark.createDataFrame([Row(k=2, v="new2"), Row(k=4, v="new4")])
     got = {r["k"]: r["v"] for r in merge_upsert(target, source, ["k"]).collect()}
     assert got == {1: "old1", 2: "new2", 3: "old3", 4: "new4"}
-
-
-def test_merge_insert_only_on_conflict_do_nothing(spark):
-    target = spark.createDataFrame([Row(k=1, v="old1"), Row(k=2, v="old2")])
-    source = spark.createDataFrame([Row(k=2, v="new2"), Row(k=4, v="new4")])
-    got = {r["k"]: r["v"] for r in
-           merge_insert_only(target, source, ["k"]).collect()}
-    assert got == {1: "old1", 2: "old2", 4: "new4"}
 
 
 def test_scd2_versions(spark):

@@ -81,21 +81,6 @@ def test_sample_frames_multiplicity_and_content(spark, sf_dir):
         assert joined == payloads[mid][: 4 * step]
 
 
-def test_resize_media_exact_target(spark, sf_dir):
-    from marketstream_etl_spark.operators.multimodal import (
-        media_from_documents,
-        resize_media,
-    )
-
-    media = media_from_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ).limit(10)
-    out = resize_media(media, target_bytes=64).collect()
-    assert len(out) == 10
-    for r in out:
-        assert r["n_bytes_out"] == 64 and len(bytes(r["resized"])) == 64
-
-
 def test_corpus_is_ascii(spark, sf_dir):
     """Precondition guard for the multimodal_frames char-based oracle
     (DuckDB has no md5(blob)): every document must be pure ASCII so char

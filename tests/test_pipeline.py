@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from marketstream_etl_spark.operators.indicators import compute_indicators
 from marketstream_etl_spark.operators.validation import split_valid
-from marketstream_etl_spark.plans.pipeline import (
-    init_schema,
-    pipeline_results,
-    run_pipeline,
-)
+from marketstream_etl_spark.plans.pipeline import init_schema, run_pipeline
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
 from marketstream_etl_spark.sources.generator import generate_trades
 
@@ -95,15 +91,18 @@ def test_pipeline_end_to_end(spark):
         assert report.n_valid == 3000
         assert 8 <= report.n_symbols <= 10
 
-        out = pipeline_results(spark, f"{d}/out")
-        assert out["trades"].count() == 3000
-        ind = {r["symbol"]: r for r in out["indicators"].collect()}
+        trades_out = spark.read.parquet(f"{d}/out/trades")
+        assert trades_out.count() == 3000
+        ind = {
+            r["symbol"]: r
+            for r in spark.read.parquet(
+                f"{d}/out/technical_indicators"
+            ).collect()
+        }
         assert len(ind) == report.n_symbols
         for r in ind.values():
             assert 0.0 <= r["rsi"] <= 100.0
             assert r["vwap"] > 0 and r["period"] == 5
-        lb = out["leaderboard"].collect()
-        assert sum(r["trades"] for r in lb) == 3000
 
 
 def test_pipeline_reject_path(spark):
@@ -121,10 +120,15 @@ def test_pipeline_reject_path(spark):
         assert report.n_rejected == n_rejected
         assert report.n_input == n_valid + n_rejected
 
-        out = pipeline_results(spark, f"{d}/out")
-        assert _rows_and_hash(out["trades"]) == _rows_and_hash(expected_valid)
+        trades_out = spark.read.parquet(f"{d}/out/trades")
+        assert _rows_and_hash(trades_out) == _rows_and_hash(expected_valid)
 
-        got = {r["symbol"]: r for r in out["indicators"].collect()}
+        got = {
+            r["symbol"]: r
+            for r in spark.read.parquet(
+                f"{d}/out/technical_indicators"
+            ).collect()
+        }
         want = {
             r["symbol"]: r
             for r in compute_indicators(expected_valid, period=5).collect()

@@ -12,12 +12,18 @@ paid to learn, so a future edit cannot silently reintroduce them.
    tool code starts a writeStream, awaits a query or sets a checkpoint
    location; bounded drains go through replay.run_bounded, which owns
    the deadline, the stop and the checkpoint.
+4. One relational writer: outside sources/sinks.py no package code writes
+   to a JDBC target or opens a driver-side JDBC connection.
+5. No test-only package code: every top-level function and class in the
+   package is named somewhere outside tests/, except the allow-listed
+   reference implementations.
 """
 
 from __future__ import annotations
 
 import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -175,3 +181,61 @@ def test_streams_run_only_through_the_runner():
     )
     # a stale allow-list entry would silently widen the lint
     assert allowed_seen == STREAM_LIFECYCLE_ALLOWED
+
+
+SINKS = "marketstream_etl_spark/sources/sinks.py"
+
+
+def test_jdbc_writes_only_through_sinks():
+    offenders = [
+        f"{py.relative_to(ROOT).as_posix()}:{i}"
+        for py in PKG.rglob("*.py")
+        if py.relative_to(ROOT).as_posix() != SINKS
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if ".jdbc(" in line or "DriverManager" in line
+    ]
+    assert offenders == [], (
+        "relational writes and driver-side JDBC statements go through "
+        f"sources/sinks.py (write_jdbc_bulk, drop_if_exists); found: {offenders}"
+    )
+
+
+# top-level definitions that only tests call, each kept on purpose
+TEST_ONLY_ALLOWED = {
+    "z_value_py": "the pure-Python Morton reference test_zorder checks against",
+    "init_schema": "S7 DDL parity, README's coverage row for init_schema",
+    "bulk_load_with_index_ddl": "S8's adopted drop/rebuild-index bulk load",
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def test_package_code_is_used_outside_tests():
+    """A name counts as used when it appears as a word anywhere in these
+    files outside its own definition, prose included."""
+    files = [
+        *PKG.rglob("*.py"),
+        *(ROOT / "tools").rglob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        *(p for p in (ROOT / "perfbench").rglob("*.py")
+          if not p.name.startswith("test_")),
+    ]
+    mentions: Counter[str] = Counter()
+    for py in files:
+        mentions.update(re.findall(r"\w+", py.read_text()))
+    unused = set()
+    for py in PKG.rglob("*.py"):
+        lines = py.read_text().splitlines()
+        for node in ast.parse("\n".join(lines)).body:
+            if isinstance(node, _DEFS):
+                own = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+                in_own = re.findall(r"\w+", own).count(node.name)
+                if mentions[node.name] == in_own:
+                    unused.add(node.name)
+    assert unused == set(TEST_ONLY_ALLOWED), (
+        "every top-level package function or class needs a caller outside "
+        "tests/ (wire it into a query path or delete it); an entry of "
+        "TEST_ONLY_ALLOWED that now has a caller is stale. Unused: "
+        f"{sorted(unused)}"
+    )

@@ -9,7 +9,12 @@ import tempfile
 from marketstream_etl_spark.operators.validation import split_valid
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
 from marketstream_etl_spark.sources.generator import EPOCH_NS, generate_trades
-from marketstream_etl_spark.sources.sinks import write_dual_sinks, write_parquet
+from marketstream_etl_spark.sources.sinks import (
+    DERBY_DRIVER,
+    read_jdbc,
+    write_dual_sinks,
+    write_parquet,
+)
 
 CSV = """trade_id,order_id,timestamp,symbol,price,volume,side,type,is_pro
 1,11,1698208500000000000,RELIANCE,2456.75,100,B,M,0
@@ -94,17 +99,7 @@ def test_parquet_sink_roundtrip_and_dual_sink(spark):
 
 
 DERBY_URL = "jdbc:derby:memory:marketstream_test;create=true"
-DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-
-
-def _read_jdbc(spark, table):
-    return (
-        spark.read.format("jdbc")
-        .option("url", DERBY_URL)
-        .option("dbtable", table)
-        .option("driver", DERBY_PROPS["driver"])
-        .load()
-    )
+DERBY_PROPS = {"driver": DERBY_DRIVER}
 
 
 def test_jdbc_parallel_bulk_load_roundtrip(spark, sf_dir):
@@ -119,7 +114,7 @@ def test_jdbc_parallel_bulk_load_roundtrip(spark, sf_dir):
     valid = valid.limit(2000).cache()
     n = valid.count()
     write_jdbc_bulk(valid, DERBY_URL, "trades_bulk", DERBY_PROPS, num_streams=4)
-    back = _read_jdbc(spark, "trades_bulk")
+    back = read_jdbc(spark, DERBY_URL, "trades_bulk")
     assert back.count() == n
     assert back.select("trade_id").distinct().count() == n
     valid.unpersist()
@@ -140,7 +135,7 @@ def test_jdbc_indicator_append_sink(spark, sf_dir):
         ind.write.mode("append").option(
             "driver", DERBY_PROPS["driver"]
         ).jdbc(DERBY_URL, "indicator_log", properties=DERBY_PROPS)
-    back = _read_jdbc(spark, "indicator_log")
+    back = read_jdbc(spark, DERBY_URL, "indicator_log")
     assert back.count() == 2 * n
 
 
@@ -171,40 +166,17 @@ def test_bulk_load_drop_rebuild_index(spark, sf_dir):
         spark, batch, DERBY_URL, "trades_ddl", "idx_sym",
         ["symbol"], DERBY_PROPS, num_streams=4,
     )
-    assert _read_jdbc(spark, "trades_ddl").count() == n
+    assert read_jdbc(spark, DERBY_URL, "trades_ddl").count() == n
     # the index exists again (Derby catalogs it in SYSCONGLOMERATES)
-    idx = (
-        spark.read.format("jdbc")
-        .option("url", DERBY_URL)
-        .option(
-            "query",
+    assert _jdbc_exec(
+        spark,
+        DERBY_URL,
+        [
             "SELECT CONGLOMERATENAME FROM SYS.SYSCONGLOMERATES "
-            "WHERE CONGLOMERATENAME = 'IDX_SYM'",
-        )
-        .option("driver", DERBY_PROPS["driver"])
-        .load()
-    )
-    assert idx.count() == 1
+            "WHERE CONGLOMERATENAME = 'IDX_SYM'"
+        ],
+    ) == ["IDX_SYM"]
     batch.unpersist()
-
-
-def test_parallel_jdbc_stream_partitioning_is_injective(spark):
-    """code-review r5: murmur3(stream_id) mod 4 collides {0,1,3} into one
-    partition, silently degrading the S9 'four-connection' load; the *14
-    remap used by q_parallel_jdbc_roundtrip must map each stream to its
-    own partition (one JDBC connection per stream)."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(400).select((F.col("id") % 4).cast("int").alias("stream_id"))
-    placed = (
-        df.repartition(4, (F.col("stream_id") * 14).cast("int"))
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("stream_id")
-        .agg(F.countDistinct("pid").alias("n_pids"), F.first("pid").alias("pid"))
-        .collect()
-    )
-    assert all(r.n_pids == 1 for r in placed)  # each stream in ONE partition
-    assert len({r.pid for r in placed}) == 4   # and four DISTINCT partitions
 
 
 def test_json_corrupt_records_quarantine_semantics(spark, sf_dir):

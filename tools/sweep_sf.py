@@ -47,8 +47,8 @@ def ensure_shuffle_width(sf_dir: str) -> None:
     a global AQE initialPartitionNum fix was tried and rejected by
     measurement (see session.py).
 
-    Multi-dir runs (probe_decade, decompose_sessions) call this once per
-    dir BEFORE the shared session is built; r12 ADVICE caught that an
+    Multi-dir runs (probe_decade) call this once per dir BEFORE the
+    shared session is built; r12 ADVICE caught that an
     early-return on an already-set env let the FIRST >32-width dir win,
     so ascending dirs (sf1, sf10, sf100) ran the largest decade at the
     smaller dir's width.  An auto-set width (marked by the _AUTO twin

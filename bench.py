@@ -13,11 +13,15 @@ import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
+from marketstream_etl_spark.session import get_spark
 
 import __spark_entry__ as entrymod
-from marketstream_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

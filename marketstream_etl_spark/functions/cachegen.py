@@ -74,20 +74,19 @@ def input_bytes(df: DataFrame) -> int:
     return total
 
 
-def scan_coalesce(
-    df: DataFrame,
-    source: DataFrame,
-    expansion: float = 40.0,
-    target_bytes: int = 32 << 20,
-) -> DataFrame:
+# the coalesced frame's in-memory blowup vs its source files (word
+# shingles over compressed parquet text ≈ 40×), and the bytes per task
+SCAN_EXPANSION = 40.0
+SCAN_TARGET_BYTES = 32 << 20
+
+
+def scan_coalesce(df: DataFrame, source: DataFrame) -> DataFrame:
     """Coalesce a (typically cached) frame for scan-bound consumers so a
     small dataset is not read in defaultParallelism near-empty tasks.
 
-    partitions = clamp(source_input_bytes * expansion / target_bytes,
-                       1, defaultParallelism)
+    partitions = clamp(source_input_bytes * SCAN_EXPANSION
+                       / SCAN_TARGET_BYTES, 1, defaultParallelism)
 
-    - `expansion` estimates the frame's in-memory blowup vs its source
-      files (word shingles over compressed parquet text ≈ 40×).
     - Unknown input size → no coalesce (never guess below the cluster).
     - At large inputs the clamp hits defaultParallelism and coalesce()
       is a no-op, so the 100 TB plan is untouched; this only removes
@@ -99,7 +98,7 @@ def scan_coalesce(
     if nbytes <= 0:
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
-    n = max(1, min(par, int(nbytes * expansion // target_bytes) + 1))
+    n = max(1, min(par, int(nbytes * SCAN_EXPANSION // SCAN_TARGET_BYTES) + 1))
     return df.coalesce(n) if n < par else df
 
 

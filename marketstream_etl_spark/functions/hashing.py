@@ -19,6 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MERSENNE_P = (1 << 61) - 1  # prime modulus for minhash permutations
+MINHASH_SEED = 42  # start of the (a, b) generator sequence
 
 
 def h32(col: Column) -> Column:
@@ -41,7 +42,7 @@ def h60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def minhash_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
+def minhash_params(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the minhash permutation family.
 
     Generated from a fixed linear-congruential sequence (NOT Python's
@@ -49,7 +50,7 @@ def minhash_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     be inlined into oracle SQL).
     """
     params = []
-    x = seed
+    x = MINHASH_SEED
     for _ in range(num_perm):
         x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         a = (x % ((1 << 30) - 1)) + 1  # 1 <= a < 2^30

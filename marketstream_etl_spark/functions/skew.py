@@ -22,9 +22,8 @@ def salted_join(
     key: str,
     salt_src: str,
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join on `key` with the left side salted by hash(salt_src).
+    """Inner equi-join on `key` with the left side salted by hash(salt_src).
 
     `salt_src` must be a left column with high cardinality (e.g. the row's
     primary key) — NOT the join key, or every copy of a hot key would land
@@ -36,5 +35,5 @@ def salted_join(
     replicated_right = right.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
-    out = salted_left.join(replicated_right, [key, "_salt"], how)
+    out = salted_left.join(replicated_right, [key, "_salt"])
     return out.drop("_salt")

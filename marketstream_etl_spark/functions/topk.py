@@ -26,7 +26,6 @@ def top_k_per_key(
     k: int,
     salt_src: str,
     n_salt: int = 32,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Exact top-k rows per `key` ordered by `order_by` (include a unique
     tie-break column, e.g. the item id, for determinism). `salt_src` must be
@@ -42,8 +41,8 @@ def top_k_per_key(
     )
     w2 = Window.partitionBy(key).orderBy(*order_by)
     return (
-        survivors.withColumn(rank_col, F.row_number().over(w2))
-        .filter(F.col(rank_col) <= k)
+        survivors.withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -52,7 +51,6 @@ def top_k_per_key_bounded(
     key: str,
     order_by: list[Column],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Single-window top-k for inputs whose per-key row count is BOUNDED
     BY CONSTRUCTION (e.g. RRF fusion of two lists capped at k_each rows
@@ -63,6 +61,6 @@ def top_k_per_key_bounded(
     per-key cardinality scales with the data MUST keep the salted form."""
     w = Window.partitionBy(key).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )

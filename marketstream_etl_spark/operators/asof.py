@@ -157,7 +157,7 @@ def asof_events_tolerance(
     )
 
 
-def asof_events_tolerance_sql(tol_ns: int = ASOF_TOL_NS) -> str:
+def asof_events_tolerance_sql() -> str:
     """DuckDB replay via LATERAL nearest-neighbor probes with the
     tolerance in the probe predicate (equivalent per the post-filter
     argument above); tie-breaks mirror the window sort exactly."""
@@ -177,13 +177,13 @@ def asof_events_tolerance_sql(tol_ns: int = ASOF_TOL_NS) -> str:
         LEFT JOIN LATERAL (
             SELECT event_id, t_ns FROM ev v
             WHERE v.user_id = p.user_id AND v.event_type = 'view'
-              AND v.t_ns <= p.t_ns AND p.t_ns - v.t_ns <= {tol_ns}
+              AND v.t_ns <= p.t_ns AND p.t_ns - v.t_ns <= {ASOF_TOL_NS}
             ORDER BY v.t_ns DESC, v.event_id DESC LIMIT 1
         ) v ON true
         LEFT JOIN LATERAL (
             SELECT event_id, t_ns FROM ev c
             WHERE c.user_id = p.user_id AND c.event_type = 'click'
-              AND c.t_ns >= p.t_ns AND c.t_ns - p.t_ns <= {tol_ns}
+              AND c.t_ns >= p.t_ns AND c.t_ns - p.t_ns <= {ASOF_TOL_NS}
             ORDER BY c.t_ns ASC, c.event_id ASC LIMIT 1
         ) c ON true
         ORDER BY p.event_id

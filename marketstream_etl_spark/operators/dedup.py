@@ -229,12 +229,12 @@ NGRAM_JACCARD_SQL = f"""
 
 # --- MinHash + LSH ----------------------------------------------------------
 
-def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, mh_0..mh_{n-1}) minhash signature columns.
 
     Signature j = min over shingles of (a_j * h32(shingle) + b_j) mod P.
     Shape: the shared distinct (doc_id, shingle) frame → hash each ONCE →
-    groupBy(doc_id) with `num_perm` cheap arithmetic mins.  One shuffle;
+    groupBy(doc_id) with NUM_PERM cheap arithmetic mins.  One shuffle;
     md5 is computed once per distinct (doc, shingle) instead of once per
     permutation (an array-HOF formulation re-evaluates the hash inside
     every array_min after projection collapse).  min over the distinct
@@ -251,12 +251,12 @@ def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MERSENNE_P)).alias(
             f"mh_{j}"
         )
-        for j, (a, b) in enumerate(minhash_params(num_perm))
+        for j, (a, b) in enumerate(minhash_params(NUM_PERM))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _minhash_sig_sql(num_perm: int = NUM_PERM) -> str:
+def _minhash_sig_sql() -> str:
     # Mirror the Spark shape: unnest shingles, md5 each ONCE, then num_perm
     # cheap min-aggregates — the list_transform-per-permutation form
     # re-hashed every shingle num_perm times (measured 10x slower in the
@@ -265,7 +265,7 @@ def _minhash_sig_sql(num_perm: int = NUM_PERM) -> str:
     sh = shingles_sql(tokens_sql("text"), SHINGLE_K)
     mins = ", ".join(
         f"min(({a} * h + {b}) % {MERSENNE_P}) AS mh_{j}"
-        for j, (a, b) in enumerate(minhash_params(num_perm))
+        for j, (a, b) in enumerate(minhash_params(NUM_PERM))
     )
     return (
         f"SELECT doc_id, {mins} FROM ("
@@ -276,28 +276,25 @@ def _minhash_sig_sql(num_perm: int = NUM_PERM) -> str:
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-    threshold: float = JACCARD_THRESHOLD,
+    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Near-duplicate pairs via banded LSH candidates + exact-Jaccard verify.
 
-    Bands hash r=num_perm/num_bands consecutive signature values; two docs
+    Bands hash r=NUM_PERM/NUM_BANDS consecutive signature values; two docs
     sharing any band key become a candidate pair (one shuffle on the band
     key); candidates are verified against the exact shingle Jaccard.
     """
-    # operator parameters select the cache FAMILY (not the key): a caller
-    # with non-default bands/threshold gets its own generation slot, so
-    # param variants coexist instead of path-evicting each other, while
+    # the signature shape and threshold select the cache FAMILY (not the
+    # key): a caller with a non-default threshold gets its own generation
+    # slot, so variants coexist instead of path-evicting each other, while
     # the data-identity key still guards against rewritten inputs
-    family = f"minhash_lsh[{num_perm},{num_bands},{threshold}]"
+    family = f"minhash_lsh[{NUM_PERM},{NUM_BANDS},{threshold}]"
     gen_key = _cache_key(docs)
     hit = _lookup(family, gen_key, current=docs)
     if hit is not None:
         return hit[-1]  # the persisted result frame
-    r = num_perm // num_bands
-    sig = minhash_signatures(docs, num_perm)
+    r = NUM_PERM // NUM_BANDS
+    sig = minhash_signatures(docs)
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -309,7 +306,7 @@ def minhash_lsh_pairs(
                             "_", *[F.col(f"mh_{i * r + j}") for j in range(r)]
                         ).alias("band_key"),
                     )
-                    for i in range(num_bands)
+                    for i in range(NUM_BANDS)
                 ]
             )
         ).alias("band"),
@@ -368,21 +365,18 @@ def minhash_lsh_pairs(
     return out
 
 
-def minhash_lsh_pairs_sql(
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-) -> str:
-    r = num_perm // num_bands
+def minhash_lsh_pairs_sql() -> str:
+    r = NUM_PERM // NUM_BANDS
     band_selects = " UNION ALL ".join(
         "SELECT doc_id, {i} AS band_id, concat_ws('_', {keys}) AS band_key "
         "FROM sig".format(
             i=i,
             keys=", ".join(f"mh_{i * r + j}" for j in range(r)),
         )
-        for i in range(num_bands)
+        for i in range(NUM_BANDS)
     )
     return f"""
-        WITH sig AS ({_minhash_sig_sql(num_perm)}),
+        WITH sig AS ({_minhash_sig_sql()}),
         bands AS ({band_selects}),
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -449,14 +443,15 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def simhash_sql(bits: int = SIMHASH_BITS) -> str:
+def simhash_sql() -> str:
     bit_sums = ", ".join(
         f"CAST(sum(CASE WHEN (h // {1 << b}) % 2 = 1 THEN cnt ELSE -cnt END) "
         f"AS BIGINT) AS s_{b}"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     sim = " + ".join(
-        f"(CASE WHEN s_{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(bits)
+        f"(CASE WHEN s_{b} > 0 THEN {1 << b} ELSE 0 END)"
+        for b in range(SIMHASH_BITS)
     )
     return f"""
         WITH tok AS (
@@ -482,12 +477,9 @@ _BROADCAST_MAX_BYTES = 32 << 20
 
 
 def simhash_near_pairs(
-    docs: DataFrame,
-    bits: int = SIMHASH_BITS,
-    max_hamming: int = HAMMING_MAX,
-    approx_docs: int | None = None,
+    docs: DataFrame, approx_docs: int | None = None
 ) -> DataFrame:
-    """Pairs with simhash hamming distance <= max_hamming via the pigeonhole
+    """Pairs with simhash hamming distance <= HAMMING_MAX via the pigeonhole
     equi-join: split the signature into 4 bytes; hamming <= 3 guarantees at
     least one byte matches, so candidates come from a per-byte equi-join.
 
@@ -498,17 +490,17 @@ def simhash_near_pairs(
     Scale note: 8-bit chunks give 256 buckets per chunk — ample at test
     scale, but a billion-doc corpus needs wider signatures and chunks
     (64-bit simhash, 16-bit chunks -> 65k buckets) to keep bucket joins
-    bounded; both are the `bits` / chunk-width parameters here."""
-    # parameters select the family (see minhash_lsh_pairs); approx_docs is
-    # a planner hint only (never changes results) and stays out of both
-    family = f"simhash_pairs[{bits},{max_hamming}]"
+    bounded; both are SIMHASH_BITS / the chunk width here."""
+    # the constants name the family (see minhash_lsh_pairs); approx_docs
+    # is a planner hint only (never changes results) and stays out of both
+    family = f"simhash_pairs[{SIMHASH_BITS},{HAMMING_MAX}]"
     gen_key = _cache_key(docs)
     hit = _lookup(family, gen_key, current=docs)
     if hit is not None:
         return hit[-1]  # the persisted result frame
-    sig = simhash(docs, bits)
+    sig = simhash(docs, SIMHASH_BITS)
     n_chunks = 4
-    chunk_bits = bits // n_chunks
+    chunk_bits = SIMHASH_BITS // n_chunks
     mask = (1 << chunk_bits) - 1
     chunks = sig.select(
         "doc_id",
@@ -567,7 +559,7 @@ def simhash_near_pairs(
     # hamming filter BEFORE the dedup shuffle: a pair can match in several
     # chunks, but only near-pairs need to survive into distinct()
     out = (
-        cand.filter(F.col("hamming") <= max_hamming)
+        cand.filter(F.col("hamming") <= HAMMING_MAX)
         .distinct()
         .persist()  # tiny result; repeat calls and consumers hit the cache
     )
@@ -577,11 +569,9 @@ def simhash_near_pairs(
     return out
 
 
-def simhash_near_pairs_sql(
-    bits: int = SIMHASH_BITS, max_hamming: int = HAMMING_MAX
-) -> str:
+def simhash_near_pairs_sql() -> str:
     n_chunks = 4
-    chunk_bits = bits // n_chunks
+    chunk_bits = SIMHASH_BITS // n_chunks
     chunk_selects = " UNION ALL ".join(
         f"SELECT doc_id, simhash, {c} AS chunk_id, "
         f"(simhash // {1 << (c * chunk_bits)}) % {1 << chunk_bits} AS chunk_val "
@@ -589,7 +579,7 @@ def simhash_near_pairs_sql(
         for c in range(n_chunks)
     )
     return f"""
-        WITH sig AS ({simhash_sql(bits)}),
+        WITH sig AS ({simhash_sql()}),
         chunks AS ({chunk_selects}),
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -601,14 +591,17 @@ def simhash_near_pairs_sql(
         SELECT doc_a, doc_b,
                CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
         FROM cand
-        WHERE bit_count(xor(sim_a, sim_b)) <= {max_hamming}
+        WHERE bit_count(xor(sim_a, sim_b)) <= {HAMMING_MAX}
         ORDER BY doc_a, doc_b
     """
 
 
 # --- duplicate clusters (connected components) ------------------------------
 
-def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+CLUSTER_MAX_ITER = 20  # label-propagation rounds before giving up on fixpoint
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_rep).
 
     Min-label propagation: every node starts labeled with its own id; each
@@ -643,7 +636,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CLUSTER_MAX_ITER):
         neighbor_min = (
             edges.join(
                 labels.select(
@@ -712,11 +705,10 @@ def _doc_leads(docs: DataFrame) -> DataFrame:
     )
 
 
-def edit_distance_pairs(
-    docs: DataFrame, max_dist: int = EDIT_MAX_DIST
-) -> DataFrame:
-    """All doc pairs whose normalized 80-char leads are within `max_dist`
-    edits (doc_a < doc_b), candidates via the char-4-gram inverted index."""
+def edit_distance_pairs(docs: DataFrame) -> DataFrame:
+    """All doc pairs whose normalized 80-char leads are within
+    EDIT_MAX_DIST edits (doc_a < doc_b), candidates via the char-4-gram
+    inverted index."""
     lead = _doc_leads(docs)
     # build the doc's distinct gram SET in-array (transform over the
     # position sequence + array_distinct), then explode: same rows as the
@@ -764,13 +756,13 @@ def edit_distance_pairs(
         # the full O(len²) table; EXACT distance for every surviving row
         # (returns -1 iff dist > max_dist, so >= 0 is the same predicate
         # as <= max_dist) — output bit-identical, verify ~5x cheaper
-        .withColumn("edit_dist", F.levenshtein("la", "lb", max_dist))
+        .withColumn("edit_dist", F.levenshtein("la", "lb", EDIT_MAX_DIST))
         .filter(F.col("edit_dist") >= 0)
         .select("doc_a", "doc_b", "edit_dist")
     )
 
 
-def edit_distance_pairs_sql(max_dist: int = EDIT_MAX_DIST) -> str:
+def edit_distance_pairs_sql() -> str:
     """DuckDB twin: same normalization, gram index, cap, and threshold."""
     return f"""
         WITH lead AS (
@@ -799,7 +791,7 @@ def edit_distance_pairs_sql(max_dist: int = EDIT_MAX_DIST) -> str:
         FROM cand c
         JOIN lead la ON la.doc_id = c.doc_a
         JOIN lead lb ON lb.doc_id = c.doc_b
-        WHERE levenshtein(la.lead, lb.lead) <= {max_dist}
+        WHERE levenshtein(la.lead, lb.lead) <= {EDIT_MAX_DIST}
         ORDER BY c.doc_a, c.doc_b
     """
 
@@ -966,9 +958,9 @@ SNM_BLOCK_LEN = 2  # prefix block key length (bounded block domain)
 SNM_MAX_DIST = EDIT_MAX_DIST  # same verify bar as the gram-index family
 
 
-def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW) -> DataFrame:
+def snm_pairs(docs: DataFrame) -> DataFrame:
     """Sorted-neighborhood near-dup pairs: (doc_a, doc_b, pos_gap,
-    edit_dist) for docs within `window` positions in the (normalized
+    edit_dist) for docs within SNM_WINDOW positions in the (normalized
     lead, doc_id) sort order whose leads verify within SNM_MAX_DIST
     edits; doc_a < doc_b, ordered."""
     lead = _doc_leads(docs)
@@ -999,12 +991,12 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # two consumers (both band sides)
     )
-    w = F.lit(window)
+    w = F.lit(SNM_WINDOW)
     a = pos.select(
         F.col("doc_id").alias("id_a"),
         F.col("lead").alias("la"),
         F.col("pos").alias("pa"),
-        F.expr(f"(pos - 1) DIV {window}").alias("bd"),
+        F.expr(f"(pos - 1) DIV {SNM_WINDOW}").alias("bd"),
     )
     b = pos.select(
         F.col("doc_id").alias("id_b"),
@@ -1012,8 +1004,8 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW) -> DataFrame:
         F.col("pos").alias("pb"),
         F.explode(
             F.array(
-                F.expr(f"(pos - 1) DIV {window}"),
-                F.expr(f"(pos - 1) DIV {window} - 1"),
+                F.expr(f"(pos - 1) DIV {SNM_WINDOW}"),
+                F.expr(f"(pos - 1) DIV {SNM_WINDOW} - 1"),
             )
         ).alias("bd"),
     )
@@ -1037,7 +1029,7 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW) -> DataFrame:
     )
 
 
-def snm_pairs_sql(window: int = SNM_WINDOW) -> str:
+def snm_pairs_sql() -> str:
     """DuckDB twin: one global row_number (DuckDB is the oracle, not the
     scale path) over the identical sort key, gap-bounded self-join,
     identical levenshtein verify."""
@@ -1058,7 +1050,7 @@ def snm_pairs_sql(window: int = SNM_WINDOW) -> str:
                b.pos - a.pos AS pos_gap,
                levenshtein(a.lead, b.lead) AS edit_dist
         FROM pos a JOIN pos b
-          ON b.pos > a.pos AND b.pos - a.pos <= {window - 1}
+          ON b.pos > a.pos AND b.pos - a.pos <= {SNM_WINDOW - 1}
         WHERE levenshtein(a.lead, b.lead) <= {SNM_MAX_DIST}
         ORDER BY doc_a, doc_b, pos_gap
     """

@@ -15,10 +15,10 @@ rounding-mode divergence is possible (see the repo-wide fixed-point
 convention in operators/graph.py pagerank).
 
 Scale design (100 TB posture):
-- Each system retrieves its own bounded top-`k_each` candidate list per
+- Each system retrieves its own bounded top-K_EACH candidate list per
   query (BM25 via the inverted-index join, cosine via the broadcast-query
   scan — both already salted-top-k bounded).  Fusion then joins two
-  frames of at most ``n_queries × k_each`` rows — bounded by
+  frames of at most ``n_queries × K_EACH`` rows — bounded by
   construction, independent of corpus size.
 - The full-outer join on (query_id, item_id) is the textbook RRF shape:
   an item ranked by only one system keeps that single contribution.
@@ -56,25 +56,21 @@ def _contrib(rank_col: str) -> F.Column:
 
 
 def hybrid_search_rrf(
-    docs: DataFrame,
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    k_each: int = K_EACH,
+    docs: DataFrame, emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
     """Fused top-k per query: BM25 (lexical) + brute-force cosine (dense).
 
     Output: (query_id, item_id, rrf_score, lex_rank, vec_rank, rank) —
     rrf_score is an exact BIGINT; rank by rrf_score desc, item_id asc.
     lex_rank / vec_rank are NULL when that system did not retrieve the
-    item within its top-`k_each`.
+    item within its top-K_EACH.
     """
-    lex = bm25_search(docs, n_queries=n_queries, k=k_each).select(
+    lex = bm25_search(docs, n_queries=n_queries, k=K_EACH).select(
         "query_id",
         F.col("doc_id").alias("item_id"),
         F.col("rank").alias("lex_rank"),
     )
-    vec = ann_bruteforce(emb, n_queries=n_queries, k=k_each).select(
+    vec = ann_bruteforce(emb, n_queries=n_queries, k=K_EACH).select(
         "query_id",
         F.col("neighbor_id").alias("item_id"),
         F.col("rank").alias("vec_rank"),
@@ -109,14 +105,12 @@ def hybrid_search_rrf(
     )
 
 
-def hybrid_search_rrf_sql(
-    n_queries: int = N_QUERIES, k: int = TOP_K, k_each: int = K_EACH
-) -> str:
+def hybrid_search_rrf_sql() -> str:
     """DuckDB replay: the component oracles verbatim as CTEs, then the
     identical integer-division fusion (`//` is DuckDB's DIV)."""
     return f"""
-        WITH lex_full AS MATERIALIZED ({bm25_search_sql(n_queries, k_each)}),
-        vec_full AS MATERIALIZED ({ann_bruteforce_sql(n_queries, k_each)}),
+        WITH lex_full AS MATERIALIZED ({bm25_search_sql(N_QUERIES, K_EACH)}),
+        vec_full AS MATERIALIZED ({ann_bruteforce_sql(N_QUERIES, K_EACH)}),
         l AS (SELECT query_id, doc_id AS item_id, rank AS lex_rank
               FROM lex_full),
         v AS (SELECT query_id, neighbor_id AS item_id, rank AS vec_rank
@@ -140,6 +134,6 @@ def hybrid_search_rrf_sql(
         )
         SELECT query_id, item_id, rrf_score, lex_rank, vec_rank,
                CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
     """

@@ -45,13 +45,7 @@ PR_DAMP_DEN = 100
 PR_ITERS = 5
 
 
-def pagerank(
-    edges: DataFrame,
-    nodes: DataFrame,
-    damp_num: int = PR_DAMP_NUM,
-    damp_den: int = PR_DAMP_DEN,
-    iters: int = PR_ITERS,
-) -> DataFrame:
+def pagerank(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Weighted PageRank in 1e-9 fixed point: `edges` is (src, dst,
     weight) directed with integer-valued weights, `nodes` is (node,) and
     must cover every src/dst.  Returns (node, rank double, rank_fp long).
@@ -73,7 +67,7 @@ def pagerank(
             F.lit(0.0).alias("rank"),
             F.lit(0).cast("long").alias("rank_fp"),
         )
-    teleport = ((damp_den - damp_num) * PR_SCALE) // (damp_den * n)
+    teleport = ((PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE) // (PR_DAMP_DEN * n)
     outw = edges.groupBy("src").agg(
         F.sum(F.col("weight").cast("long")).alias("outw")
     )
@@ -85,7 +79,7 @@ def pagerank(
     ranks = nodes.select(
         "node", F.lit(PR_SCALE // n).cast("long").alias("rank_fp")
     )
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         # share(u→v) = r(u)·w div outw(u): exact long arithmetic; the
         # groupBy(dst) sum is a plain partial-aggregable long sum
         contrib = (
@@ -105,13 +99,13 @@ def pagerank(
                 "node",
                 F.expr(
                     f"cast({teleport} as bigint)"
-                    f" + ({damp_num} * coalesce(c, 0L)) div {damp_den}"
+                    f" + ({PR_DAMP_NUM} * coalesce(c, 0L)) div {PR_DAMP_DEN}"
                 ).cast("long").alias("rank_fp"),
             )
             # NON-eager: still truncates the Catalyst plan per iteration
             # (the DataFrame becomes an RDD scan node), but defers the
             # per-iteration materialization to ONE job at the end instead
-            # of `iters` driver-blocking jobs during plan build.  RDD
+            # of PR_ITERS driver-blocking jobs during plan build.  RDD
             # lineage grows only across the bounded iterations; the
             # cached ew/nodes serve every iteration inside that one job.
             .localCheckpoint(eager=False)
@@ -178,11 +172,7 @@ def source_pagerank(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def source_pagerank_sql(
-    damp_num: int = PR_DAMP_NUM,
-    damp_den: int = PR_DAMP_DEN,
-    iters: int = PR_ITERS,
-) -> str:
+def source_pagerank_sql() -> str:
     """DuckDB replay: same LSH pair set, same edge symmetrization, same
     unrolled fixed-point rounds (// is DuckDB integer division; all
     operands are BIGINT and positive, matching Spark's truncating div)."""
@@ -220,15 +210,15 @@ def source_pagerank_sql(
         )"""
     ]
     tele = (
-        f"CAST(({damp_den - damp_num} * {s}::BIGINT)"
-        f" // ({damp_den} * (SELECT n FROM nn)) AS BIGINT)"
+        f"CAST(({PR_DAMP_DEN - PR_DAMP_NUM} * {s}::BIGINT)"
+        f" // ({PR_DAMP_DEN} * (SELECT n FROM nn)) AS BIGINT)"
     )
-    for i in range(1, iters + 1):
+    for i in range(1, PR_ITERS + 1):
         parts.append(
             f""", r{i} AS (
             SELECT nd.node,
                    CAST({tele}
-                        + ({damp_num} * coalesce(c.c, 0)) // {damp_den}
+                        + ({PR_DAMP_NUM} * coalesce(c.c, 0)) // {PR_DAMP_DEN}
                         AS BIGINT) AS rank_fp
             FROM nodes nd LEFT JOIN (
                 SELECT ew.dst AS node,
@@ -243,7 +233,7 @@ def source_pagerank_sql(
         SELECT r.node AS source,
                CAST(r.rank_fp AS DOUBLE) / {s} AS pagerank,
                CAST(coalesce(g.n_dup_edges, 0) AS INTEGER) AS n_dup_edges
-        FROM r{iters} r LEFT JOIN (
+        FROM r{PR_ITERS} r LEFT JOIN (
             SELECT src AS node, count(*) AS n_dup_edges
             FROM edges GROUP BY 1
         ) g USING (node)
@@ -259,11 +249,11 @@ def source_pagerank_sql(
 TRI_MIN_WEIGHT = 2  # co-occurrence support for an edge (prunes noise pairs)
 
 
-def part_triangles(lineitem: DataFrame, min_weight: int = TRI_MIN_WEIGHT) -> DataFrame:
+def part_triangles(lineitem: DataFrame) -> DataFrame:
     """Per-part triangle participation in the co-purchase graph.
 
     Graph: vertices are parts; an undirected edge (a, b) exists when the
-    pair co-occurs in at least `min_weight` distinct orders.  A triangle
+    pair co-occurs in at least TRI_MIN_WEIGHT distinct orders.  A triangle
     is three parts pairwise co-purchased — the classic basket-affinity
     motif (recommendation seeds, assortment analysis).
 
@@ -297,7 +287,7 @@ def part_triangles(lineitem: DataFrame, min_weight: int = TRI_MIN_WEIGHT) -> Dat
     edges = (
         pairs.groupBy("pa", "pb")
         .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_weight)
+        .filter(F.col("w") >= TRI_MIN_WEIGHT)
         .select("pa", "pb")
     )
     deg = (
@@ -372,7 +362,7 @@ def part_triangles(lineitem: DataFrame, min_weight: int = TRI_MIN_WEIGHT) -> Dat
     return per_part
 
 
-def part_triangles_sql(min_weight: int = TRI_MIN_WEIGHT) -> str:
+def part_triangles_sql() -> str:
     """DuckDB replay: identical pair-join, weight filter, (degree, id)
     orientation, wedge closure, and per-vertex explode."""
     return f"""
@@ -383,7 +373,7 @@ def part_triangles_sql(min_weight: int = TRI_MIN_WEIGHT) -> str:
         ),
         e0 AS MATERIALIZED (
             SELECT pa, pb FROM pairs GROUP BY pa, pb
-            HAVING count(*) >= {min_weight}
+            HAVING count(*) >= {TRI_MIN_WEIGHT}
         ),
         deg AS MATERIALIZED (
             SELECT v, count(*) AS d FROM (
@@ -421,10 +411,7 @@ RA_SCALE = 1_000_000  # resource-allocation unit = 1e-6 (fixed point)
 
 
 def link_prediction(
-    lineitem: DataFrame,
-    min_weight: int = TRI_MIN_WEIGHT,
-    hub_cap: int = LP_HUB_CAP,
-    topk: int = LP_TOPK,
+    lineitem: DataFrame, hub_cap: int = LP_HUB_CAP
 ) -> DataFrame:
     """Predict missing co-purchase edges: for part pairs NOT currently
     linked, score how strongly their neighborhoods overlap — the classic
@@ -472,7 +459,7 @@ def link_prediction(
     edges = (
         pairs.groupBy("pa", "pb")
         .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_weight)
+        .filter(F.col("w") >= TRI_MIN_WEIGHT)
         .select("pa", "pb")
         # feeds adjacency (x2), the anti-join leg, and degrees — truncate
         # so the pair-join does not re-run per consumer (plan-audit lesson)
@@ -520,14 +507,10 @@ def link_prediction(
     )
     return scored.orderBy(
         F.desc("ra_micro"), F.desc("cn"), "pa", "pb"
-    ).limit(topk)
+    ).limit(LP_TOPK)
 
 
-def link_prediction_sql(
-    min_weight: int = TRI_MIN_WEIGHT,
-    hub_cap: int = LP_HUB_CAP,
-    topk: int = LP_TOPK,
-) -> str:
+def link_prediction_sql() -> str:
     """DuckDB replay: identical edge support filter, hub-capped wedge
     join, integer RA accumulation, anti-join, and integer-first top-k."""
     return f"""
@@ -538,7 +521,7 @@ def link_prediction_sql(
         ),
         e0 AS MATERIALIZED (
             SELECT pa, pb FROM pairs GROUP BY pa, pb
-            HAVING count(*) >= {min_weight}
+            HAVING count(*) >= {TRI_MIN_WEIGHT}
         ),
         adj AS MATERIALIZED (
             SELECT pa AS w, pb AS nbr FROM e0
@@ -549,7 +532,7 @@ def link_prediction_sql(
         ),
         centers AS (
             SELECT adj.w, adj.nbr, deg.d FROM adj JOIN deg USING (w)
-            WHERE deg.d <= {hub_cap}
+            WHERE deg.d <= {LP_HUB_CAP}
         ),
         cand AS (
             SELECT x.nbr AS pa, y.nbr AS pb,
@@ -569,5 +552,5 @@ def link_prediction_sql(
         JOIN deg da ON da.w = f.pa
         JOIN deg db ON db.w = f.pb
         ORDER BY f.ra_micro DESC, f.cn DESC, f.pa, f.pb
-        LIMIT {topk}
+        LIMIT {LP_TOPK}
     """

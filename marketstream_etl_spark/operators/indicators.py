@@ -341,11 +341,13 @@ def compute_rsi_wilder(
     ).withColumn("signal", rsi_signal(F.col("rsi_wilder")))
 
 
+AUTO_FUSED_MIN_PARTITIONS = 8  # input partitions that switch _auto to _fused
+
+
 def compute_indicators_auto(
     trades: DataFrame,
     period: int = DEFAULT_PERIOD,
     computed_at_ns: int | None = None,
-    partition_threshold: int = 8,
 ) -> DataFrame:
     """Strategy dispatch: the window form wins on small inputs (one
     exchange, no join); the fused partial-aggregate form wins once
@@ -355,7 +357,7 @@ def compute_indicators_auto(
     floor study: tests/test_indicator_floor.py, README §performance).
     Input partition count is the cheap, statistics-free size proxy."""
     n_parts = trades.rdd.getNumPartitions()
-    if n_parts >= partition_threshold:
+    if n_parts >= AUTO_FUSED_MIN_PARTITIONS:
         return compute_indicators_fused(
             trades, period=period, computed_at_ns=computed_at_ns
         )

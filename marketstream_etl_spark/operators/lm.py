@@ -199,9 +199,7 @@ def top_pmi_bigrams(
     ).limit(k)
 
 
-def top_pmi_bigrams_sql(
-    min_count: int = PMI_MIN_COUNT, k: int = PMI_TOP_K
-) -> str:
+def top_pmi_bigrams_sql() -> str:
     """DuckDB replay: identical counts, ratio, rounding, and tie-break."""
     tk = tokens_sql("text")
     return f"""
@@ -221,7 +219,7 @@ def top_pmi_bigrams_sql(
         nbi AS (SELECT CAST(count(*) AS DOUBLE) AS n_bi FROM bi),
         bic AS (
             SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2
-            HAVING count(*) >= {min_count}
+            HAVING count(*) >= {PMI_MIN_COUNT}
         )
         SELECT b.w1, b.w2, b.cb,
                round(ln(
@@ -233,5 +231,5 @@ def top_pmi_bigrams_sql(
         JOIN uni u1 ON u1.w = b.w1
         JOIN uni u2 ON u2.w = b.w2
         ORDER BY pmi DESC, b.w1, b.w2
-        LIMIT {k}
+        LIMIT {PMI_TOP_K}
     """

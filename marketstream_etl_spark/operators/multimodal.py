@@ -1,10 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary` columns
 with typed metadata, processed by Arrow-batched Pandas UDFs via mapInPandas.
 
-The container has no image/audio codecs, so the decode step is a STUB: a
-deterministic fake decoder (`_fake_decode`) stands in for PIL/ffmpeg, and
-`decode_real` raises NotImplementedError with the intended dependency.  The
-Spark-side plumbing — schema, batch iteration, partition-parallel UDF
+No image/audio codec (PIL, pyav) is a dependency, so the decode step is a
+STUB: a deterministic fake decoder (`_fake_decode`) stands in for
+PIL/ffmpeg.  The Spark-side plumbing — schema, batch iteration, partition-parallel UDF
 signature, metadata extraction — is real and tested; swapping in a real
 codec is a one-function change.
 
@@ -81,16 +80,6 @@ def media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def decode_real(payload: bytes, media_type: str):
-    """The real decoder hook. Requires PIL / soundfile / av — not available
-    in this container."""
-    raise NotImplementedError(
-        "media decode requires image/audio codecs (PIL/pyav) not present in "
-        "this environment; wire the codec here and extract_features picks "
-        "it up unchanged"
-    )
-
-
 def _fake_decode(payload: bytes, n_dims: int = 8) -> list[float]:
     """Deterministic stand-in decoder: fold payload bytes into n_dims
     accumulators (a checksum-ish 'feature'). Pure-Python but runs inside an
@@ -104,8 +93,7 @@ def _fake_decode(payload: bytes, n_dims: int = 8) -> list[float]:
 
 def extract_features(media: DataFrame, n_dims: int = 8) -> DataFrame:
     """mapInPandas feature extraction: (media_id, media_type, n_bytes,
-    feature array).  Arrow-batched; swap _fake_decode for decode_real when
-    codecs exist."""
+    feature array).  Arrow-batched; a real codec replaces _fake_decode."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -17,7 +17,7 @@ Scale design (100 TB posture):
   same partial-aggregated shuffle every dedup op uses.
 - The cumulative sum is NOT a global single-partition window (the known
   scale-killer).  It is the classic TWO-PHASE PREFIX SUM: doc_ids are
-  range-bucketed into <= `n_buckets` fixed buckets (width derived from
+  range-bucketed into <= N_BUCKETS fixed buckets (width derived from
   max(doc_id), a 1-row broadcast), the within-bucket cumsum runs
   partitioned by bucket, and only the <= n_buckets bucket-total rows pass
   through the global window — bounded at ANY corpus size.
@@ -42,7 +42,7 @@ N_BUCKETS = 4096  # global-window rows are bounded by this at any scale
 PPM = 1_000_000
 
 
-def ngram_novelty(docs: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document novelty and cumulative corpus coverage, doc_id order.
 
     Output (all BIGINT): doc_id, n_grams (distinct shingles in the doc),
@@ -77,7 +77,7 @@ def ngram_novelty(docs: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     # bucket width from max(doc_id): a 1-row broadcast, never a collect
     width = docs.agg(
         (
-            F.max("doc_id") / F.lit(n_buckets)
+            F.max("doc_id") / F.lit(N_BUCKETS)
         ).cast("long").alias("w")
     ).select((F.col("w") + 1).alias("bucket_width"))
     bucketed = per_doc.join(F.broadcast(width)).withColumn(

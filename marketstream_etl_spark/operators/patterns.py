@@ -38,9 +38,7 @@ def _centered(arr):
     return F.transform(arr, lambda x: x - mean)
 
 
-def pattern_similarity(
-    trades: DataFrame, p: int = PATTERN_LEN, top_k: int = TOP_K
-) -> DataFrame:
+def pattern_similarity(trades: DataFrame) -> DataFrame:
     """Top-k windows most similar to the query pattern (the FIRST p-bar
     window of the lexicographically smallest symbol — a deterministic
     stand-in for a user-supplied pattern), mean-centered Euclidean.
@@ -53,8 +51,10 @@ def pattern_similarity(
     wins = closes.select(
         "symbol",
         "bar",
-        F.collect_list("close").over(w.rowsBetween(0, p - 1)).alias("wv"),
-    ).filter(F.size("wv") == p).localCheckpoint(eager=False)
+        F.collect_list("close")
+        .over(w.rowsBetween(0, PATTERN_LEN - 1))
+        .alias("wv"),
+    ).filter(F.size("wv") == PATTERN_LEN).localCheckpoint(eager=False)
     # localCheckpoint, not persist: a bare persist here pins one cached
     # copy per invocation for the session lifetime (bench repeats); the
     # checkpoint serves the same three consumers and frees on RDD GC.
@@ -94,7 +94,7 @@ def pattern_similarity(
     # the memory budget of every later query in a long-lived session
     out = (
         scored.orderBy("dist", "symbol", "bar")
-        .limit(top_k)
+        .limit(TOP_K)
         .select("symbol", "bar", F.round("dist", 6).alias("dist"))
         .localCheckpoint()
     )
@@ -102,9 +102,7 @@ def pattern_similarity(
     return out
 
 
-def pattern_similarity_sql(
-    trades_cte: str, p: int = PATTERN_LEN, top_k: int = TOP_K
-) -> str:
+def pattern_similarity_sql(trades_cte: str) -> str:
     """DuckDB twin (list window + list HOFs)."""
     return f"""
         WITH trades AS ({trades_cte}),
@@ -120,10 +118,10 @@ def pattern_similarity_sql(
         win AS (
             SELECT symbol, bar,
                    list(close) OVER (PARTITION BY symbol ORDER BY bar
-                        ROWS BETWEEN CURRENT ROW AND {p - 1} FOLLOWING) AS wv
+                        ROWS BETWEEN CURRENT ROW AND {PATTERN_LEN - 1} FOLLOWING) AS wv
             FROM closes
         ),
-        full_win AS (SELECT * FROM win WHERE len(wv) = {p}),
+        full_win AS (SELECT * FROM win WHERE len(wv) = {PATTERN_LEN}),
         cent AS (
             SELECT symbol, bar,
                    list_transform(wv, x -> x - list_avg(wv)) AS cv
@@ -136,12 +134,12 @@ def pattern_similarity_sql(
         ),
         scored AS (
             SELECT c.symbol, c.bar,
-                   sqrt(list_sum(list_transform(range(1, {p} + 1),
+                   sqrt(list_sum(list_transform(range(1, {PATTERN_LEN} + 1),
                         i -> (c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i]))))
                        AS dist
             FROM cent c, q
             WHERE NOT (c.symbol = q.qsym AND c.bar = q.qbar)
         )
         SELECT symbol, bar, round(dist, 6) AS dist
-        FROM scored ORDER BY dist, symbol, bar LIMIT {top_k}
+        FROM scored ORDER BY dist, symbol, bar LIMIT {TOP_K}
     """

@@ -113,11 +113,7 @@ def _bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
 
 
 def bm25_search(
-    docs: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    docs: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
     """Top-k documents per query document by BM25.
 
@@ -165,10 +161,10 @@ def bm25_search(
         + (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
     )
-    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
+    tf_part = (F.col("tf") * F.lit(BM25_K1 + 1.0)) / (
         F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        + F.lit(BM25_K1)
+        * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
     )
     # dl rides on the postings frame (attached at index build), so the
     # scoring path is broadcast-joins + one partial-aggregated groupBy —
@@ -190,12 +186,7 @@ def bm25_search(
     return out
 
 
-def bm25_search_sql(
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> str:
+def bm25_search_sql(n_queries: int = N_QUERIES, k: int = TOP_K) -> str:
     """DuckDB replay: identical postings, statistics, idf/tf formulas, and
     (rounded score, doc_id) ranking."""
     return f"""
@@ -224,10 +215,10 @@ def bm25_search_sql(
                        ln(CAST(1.0 AS DOUBLE)
                           + (s.n_docs - f.df + CAST(0.5 AS DOUBLE))
                             / (f.df + CAST(0.5 AS DOUBLE)))
-                       * (p.tf * CAST({k1 + 1.0} AS DOUBLE))
-                         / (p.tf + CAST({k1} AS DOUBLE)
-                            * (CAST({1.0 - b} AS DOUBLE)
-                               + CAST({b} AS DOUBLE) * d.dl / s.avgdl))
+                       * (p.tf * CAST({BM25_K1 + 1.0} AS DOUBLE))
+                         / (p.tf + CAST({BM25_K1} AS DOUBLE)
+                            * (CAST({1.0 - BM25_B} AS DOUBLE)
+                               + CAST({BM25_B} AS DOUBLE) * d.dl / s.avgdl))
                    ), 6) AS bm25
             FROM post p
             JOIN qterms q USING (term)
@@ -309,7 +300,7 @@ def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     )
 
 
-def tfidf_keywords_sql(k: int = TFIDF_TOP_K) -> str:
+def tfidf_keywords_sql() -> str:
     """DuckDB replay: identical postings, smoothed idf, rounding, and
     (score, term) ranking."""
     return f"""
@@ -340,6 +331,6 @@ def tfidf_keywords_sql(k: int = TFIDF_TOP_K) -> str:
             FROM scored
         )
         SELECT doc_id, term, tfidf, CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TFIDF_TOP_K}
         ORDER BY doc_id, rank
     """

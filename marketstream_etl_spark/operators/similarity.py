@@ -10,8 +10,8 @@ Scale design (100 TB posture):
 - IVF: centroids are a deterministic sample (first C vec_ids — a stand-in
   for a k-means codebook the pipeline would train offline).  Every vector is
   assigned to its nearest centroid once (map-side vs broadcast centroids);
-  queries probe the nearest `nprobe` centroid buckets only, turning a full
-  scan into a partition-pruned scan of ~nprobe/C of the data.
+  queries probe the nearest N_PROBE centroid buckets only, turning a full
+  scan into a partition-pruned scan of ~N_PROBE/C of the data.
 - All dot products run in double via zip_with + aggregate — built-in higher-
   order functions, JVM-side, no Python boundary.
 """
@@ -39,7 +39,7 @@ def _dvec(col: Column) -> Column:
 FX = 1_000_000  # 1e-6 fixed-point quantum (the repo-wide exact-sum scale)
 
 
-def favg_fx(col: Column, scale: int = FX) -> Column:
+def favg_fx(col: Column) -> Column:
     """Order-independent mean of a double column.
 
     Quantize each value to BIGINT fixed point (round-half-up), sum
@@ -52,7 +52,7 @@ def favg_fx(col: Column, scale: int = FX) -> Column:
     discipline as the PSI/CUSUM families; the DuckDB oracles mirror the
     identical expression so both engines see bit-identical doubles.
     """
-    s = float(scale)
+    s = float(FX)
     return (
         F.sum(F.floor(col * F.lit(s) + F.lit(0.5))).cast("double")
         / F.count(F.lit(1))
@@ -66,11 +66,11 @@ def fsum_fx(col: Column, scale: int = FX) -> Column:
     return F.sum(F.floor(col * F.lit(s) + F.lit(0.5))).cast("double") / F.lit(s)
 
 
-def avg_fx_sql(expr: str, scale: int = FX) -> str:
+def avg_fx_sql(expr: str) -> str:
     """DuckDB twin of favg_fx — identical op order, identical doubles."""
     return (
-        f"CAST(sum(CAST(floor(({expr}) * {scale} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / count(*) / {scale}"
+        f"CAST(sum(CAST(floor(({expr}) * {FX} + 0.5) AS BIGINT)) AS DOUBLE)"
+        f" / count(*) / {FX}"
     )
 
 
@@ -208,9 +208,7 @@ def ann_bruteforce_gt_cached(emb: DataFrame) -> DataFrame:
     return gt
 
 
-def ann_bruteforce_sql_over(
-    q_rel: str, e_rel: str, k: int = TOP_K
-) -> str:
+def ann_bruteforce_sql_over(q_rel: str, e_rel: str) -> str:
     """ann_bruteforce's oracle over ARBITRARY (vec_id, embedding)
     relations — lets composed audits (dimension truncation, re-ranking)
     replay the exact top-k against transformed embedding views."""
@@ -225,7 +223,7 @@ def ann_bruteforce_sql_over(
         )
         SELECT query_id, neighbor_id, round(cos, 6) AS cos,
                CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
     """
 
@@ -493,16 +491,9 @@ def _assign_and_probe(
     return assigned, probes
 
 
-def ann_ivf(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = N_PROBE,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def ann_ivf(emb: DataFrame, centroids: DataFrame | None = None) -> DataFrame:
     """IVF-style approximate top-k: assign vectors to their nearest centroid
-    (coarse quantizer), probe only the `nprobe` centroid buckets nearest to
+    (coarse quantizer), probe only the N_PROBE centroid buckets nearest to
     each query.  Same output shape as ann_bruteforce; recall < 1 by design.
 
     `centroids` swaps in an externally trained codebook, (centroid_id,
@@ -512,7 +503,7 @@ def ann_ivf(
     # per-pair fold work)
     base = _vectors(emb).withColumn("nrm", norm(F.col("vec")))
     if centroids is None:
-        centroids = _centroids(base, n_centroids)
+        centroids = _centroids(base, N_CENTROIDS)
     codebook = _CodebookHandle(centroids)
 
     # ONE kernel pass over the corpus yields the top-1 assignment AND the
@@ -520,10 +511,10 @@ def ann_ivf(
     # same corpus) — see _assign_and_probe; the slim (id, bucket)
     # outputs re-attach vector + norm with one N-row join
     a_slim, p_slim = _assign_and_probe(
-        base, codebook, "vec_id", "vec", n_queries, nprobe
+        base, codebook, "vec_id", "vec", N_QUERIES, N_PROBE
     )
     assigned = a_slim.join(base, "vec_id")
-    queries = base.filter(F.col("vec_id") < n_queries).select(
+    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
         F.col("nrm").alias("qn"),
@@ -554,7 +545,7 @@ def ann_ivf(
         scored,
         key="query_id",
         order_by=[F.desc("cos_raw"), F.col("neighbor_id")],
-        k=k,
+        k=TOP_K,
         salt_src="neighbor_id",
     )
     return topk.select(
@@ -565,15 +556,9 @@ def ann_ivf(
     )
 
 
-def ann_ivf_sql(
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = N_PROBE,
-    cent_rel: str | None = None,
-) -> str:
+def ann_ivf_sql(cent_rel: str | None = None) -> str:
     cent = cent_rel or (
-        f"(SELECT * FROM embeddings WHERE vec_id < {n_centroids})"
+        f"(SELECT * FROM embeddings WHERE vec_id < {N_CENTROIDS})"
     )
     all_to_cent = _COSINE_PAIR_SQL.format(q="embeddings", e=cent)
     return f"""
@@ -588,8 +573,8 @@ def ann_ivf_sql(
             SELECT query_id, neighbor_id AS bucket FROM (
                 SELECT *, row_number() OVER (PARTITION BY query_id
                     ORDER BY cos DESC, neighbor_id) AS r FROM a2c
-                WHERE query_id < {n_queries}
-            ) WHERE r <= {nprobe}
+                WHERE query_id < {N_QUERIES}
+            ) WHERE r <= {N_PROBE}
         ),
         pairs AS (
             SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
@@ -597,7 +582,7 @@ def ann_ivf_sql(
             WHERE a.vec_id <> p.query_id
         ),
         cos_all AS ({_COSINE_PAIR_SQL.format(
-            q=f"(SELECT * FROM embeddings WHERE vec_id < {n_queries})",
+            q=f"(SELECT * FROM embeddings WHERE vec_id < {N_QUERIES})",
             e="embeddings")}),
         scored AS (
             SELECT c.query_id, c.neighbor_id, c.cos
@@ -612,13 +597,18 @@ def ann_ivf_sql(
         )
         SELECT query_id, neighbor_id, round(cos, 6) AS cos,
                CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
     """
 
 
+NEARDUP_BLOCK = 64  # vectors in embedding_neardup_pairs' all-pairs block
+
+
 def embedding_neardup_pairs(
-    emb: DataFrame, threshold: float = NEARDUP_COSINE, n_queries: int = 64
+    emb: DataFrame,
+    threshold: float = NEARDUP_COSINE,
+    n_queries: int = NEARDUP_BLOCK,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs among the first `n_queries`
     vectors (bounded block so the demo stays quadratic-in-small-n; the scale
@@ -655,25 +645,24 @@ def embedding_neardup_pairs(
     )
 
 
-def embedding_neardup_pairs_sql(
-    threshold: float = NEARDUP_COSINE, n_queries: int = 64
-) -> str:
-    sub = f"(SELECT * FROM embeddings WHERE vec_id < {n_queries})"
+def embedding_neardup_pairs_sql() -> str:
+    sub = f"(SELECT * FROM embeddings WHERE vec_id < {NEARDUP_BLOCK})"
     pair = _COSINE_PAIR_SQL.format(q=sub, e=sub)
     return f"""
         WITH scored AS ({pair})
         SELECT query_id AS id_a, neighbor_id AS id_b, round(cos, 6) AS cos
         FROM scored
-        WHERE query_id < neighbor_id AND round(cos, 6) >= {threshold}
+        WHERE query_id < neighbor_id AND round(cos, 6) >= {NEARDUP_COSINE}
         ORDER BY id_a, id_b
     """
 
 
 CODEBOOK_MAX_CENTROIDS = 65_536
+NEARDUP_NASSIGN = 2  # buckets each vector joins in embedding_neardup_ivf
 
 
 def neardup_centroid_count(
-    approx_rows: int | None, nassign: int = 2
+    approx_rows: int | None, nassign: int = NEARDUP_NASSIGN
 ) -> int:
     """Corpus-adaptive codebook size, C = min(nassign·√rows, 65,536) —
     the classic IVF balance: assignment costs rows·C cosines and
@@ -703,23 +692,18 @@ def neardup_centroid_count(
 
 
 def embedding_neardup_ivf(
-    emb: DataFrame,
-    threshold: float = NEARDUP_COSINE,
-    n_centroids: int | None = None,
-    nassign: int = 2,
-    approx_rows: int | None = None,
+    emb: DataFrame, approx_rows: int | None = None
 ) -> DataFrame:
     """CORPUS-WIDE embedding near-dup — the scale path the bounded
     embedding_neardup_pairs block documents: multi-assign every vector to
-    its `nassign` nearest centroid buckets (multi-probe indexing raises
+    its NEARDUP_NASSIGN nearest centroid buckets (multi-probe indexing raises
     recall across bucket boundaries), generate candidates as WITHIN-BUCKET
     pairs only, verify with the exact cosine.  The IVF analog of LSH
     banding: with the corpus-adaptive codebook (neardup_centroid_count)
     candidate count stays linear in the corpus, never quadratic, and every
     stage is an equi-join / window over the broadcast codebook.
     `approx_rows` is the parquet-footer row count (no Spark job)."""
-    if n_centroids is None:
-        n_centroids = neardup_centroid_count(approx_rows, nassign)
+    n_centroids = neardup_centroid_count(approx_rows, NEARDUP_NASSIGN)
     base = _vectors(emb).withColumn("vnorm", norm(F.col("vec")))
     codebook = _CodebookHandle(_centroids(base, n_centroids))
     # slim (vec_id, bucket) assignment (map-only kernel), then ONE N-row
@@ -733,9 +717,12 @@ def embedding_neardup_ivf(
     # without truncation the Arrow kernel pass executes once per leg
     # (identical-subtree reuse only applies to exchanges, and the legs
     # project different columns).  The checkpointed frame is the bounded
-    # (vec_id, bucket) pairs — N·nassign slim rows, never the vectors.
+    # (vec_id, bucket) pairs — N·NEARDUP_NASSIGN slim rows, never the
+    # vectors.
     assigned = (
-        _nearest_buckets(base, codebook, "vec_id", "vec", nassign, "bucket")
+        _nearest_buckets(
+            base, codebook, "vec_id", "vec", NEARDUP_NASSIGN, "bucket"
+        )
         .localCheckpoint(eager=False)
         .join(base, "vec_id")
     )
@@ -765,19 +752,13 @@ def embedding_neardup_ivf(
                 6,
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= NEARDUP_COSINE)
         .distinct()
     )
 
 
-def embedding_neardup_ivf_sql(
-    threshold: float = NEARDUP_COSINE,
-    n_centroids: int | None = None,
-    nassign: int = 2,
-    approx_rows: int | None = None,
-) -> str:
-    if n_centroids is None:
-        n_centroids = neardup_centroid_count(approx_rows, nassign)
+def embedding_neardup_ivf_sql(approx_rows: int | None = None) -> str:
+    n_centroids = neardup_centroid_count(approx_rows, NEARDUP_NASSIGN)
     cent = f"(SELECT * FROM embeddings WHERE vec_id < {n_centroids})"
     a2c = _COSINE_PAIR_SQL.format(q="embeddings", e=cent)
     return f"""
@@ -786,7 +767,7 @@ def embedding_neardup_ivf_sql(
             SELECT query_id AS vec_id, neighbor_id AS bucket FROM (
                 SELECT *, row_number() OVER (PARTITION BY query_id
                     ORDER BY cos DESC, neighbor_id) AS r FROM a2c
-            ) WHERE r <= {nassign}
+            ) WHERE r <= {NEARDUP_NASSIGN}
         ),
         cand AS (
             SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
@@ -809,7 +790,7 @@ def embedding_neardup_ivf_sql(
             GROUP BY 1, 2
         )
         SELECT id_a, id_b, round(cos, 6) AS cos FROM verify
-        WHERE round(cos, 6) >= {threshold}
+        WHERE round(cos, 6) >= {NEARDUP_COSINE}
         ORDER BY id_a, id_b
     """
 
@@ -818,16 +799,11 @@ NEARDUP_MAX_PAIRS_PER_DOC = 4
 
 
 def embedding_neardup_ivf_capped(
-    emb: DataFrame,
-    threshold: float = NEARDUP_COSINE,
-    max_pairs_per_doc: int = NEARDUP_MAX_PAIRS_PER_DOC,
-    n_centroids: int | None = None,
-    nassign: int = 2,
-    approx_rows: int | None = None,
+    emb: DataFrame, approx_rows: int | None = None
 ) -> DataFrame:
     """BOUNDED-OUTPUT corpus near-dup (the 100 TB posture for
     embedding_neardup_ivf, r12 VERDICT item 4): every doc keeps at most
-    its `max_pairs_per_doc` strongest pairs, so the emitted pair set is
+    its NEARDUP_MAX_PAIRS_PER_DOC strongest pairs, so the emitted pair set is
     <= N·cap rows — LINEAR in the corpus — where the uncapped audit's
     output grows with true duplication density (326M pairs at the sf100
     probe).  A pair survives if EITHER endpoint ranks it inside its own
@@ -842,9 +818,7 @@ def embedding_neardup_ivf_capped(
     work as the uncapped audit (the cap bounds the OUTPUT, which is what
     downstream shuffles/writes) plus one salted top-k over the surviving
     pairs — bounded reducers via functions/topk.py."""
-    pairs = embedding_neardup_ivf(
-        emb, threshold, n_centroids, nassign, approx_rows
-    )
+    pairs = embedding_neardup_ivf(emb, approx_rows)
     sides = pairs.select(
         F.col("id_a").alias("doc_id"), F.col("id_b").alias("partner"), "cos"
     ).unionByName(
@@ -858,7 +832,7 @@ def embedding_neardup_ivf_capped(
         sides,
         key="doc_id",
         order_by=[F.desc("cos"), F.col("partner")],
-        k=max_pairs_per_doc,
+        k=NEARDUP_MAX_PAIRS_PER_DOC,
         salt_src="partner",
     )
     return (
@@ -871,18 +845,10 @@ def embedding_neardup_ivf_capped(
     )
 
 
-def embedding_neardup_ivf_capped_sql(
-    threshold: float = NEARDUP_COSINE,
-    max_pairs_per_doc: int = NEARDUP_MAX_PAIRS_PER_DOC,
-    n_centroids: int | None = None,
-    nassign: int = 2,
-    approx_rows: int | None = None,
-) -> str:
+def embedding_neardup_ivf_capped_sql(approx_rows: int | None = None) -> str:
     """DuckDB replay: the uncapped pair set, each pair doubled to both
     endpoints, per-doc rank (cos desc, partner asc), cap, canonicalize."""
-    uncapped = embedding_neardup_ivf_sql(
-        threshold, n_centroids, nassign, approx_rows
-    )
+    uncapped = embedding_neardup_ivf_sql(approx_rows)
     return f"""
         WITH pairs AS MATERIALIZED ({uncapped}),
         sides AS (
@@ -895,7 +861,7 @@ def embedding_neardup_ivf_capped_sql(
                 SELECT *, row_number() OVER (PARTITION BY doc_id
                     ORDER BY cos DESC, partner) AS r
                 FROM sides
-            ) WHERE r <= {max_pairs_per_doc}
+            ) WHERE r <= {NEARDUP_MAX_PAIRS_PER_DOC}
         )
         SELECT DISTINCT least(doc_id, partner) AS id_a,
                greatest(doc_id, partner) AS id_b, cos
@@ -1021,12 +987,7 @@ def _assign(base: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     )
 
 
-def kmeans_train(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def kmeans_train(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding corpus.
 
     Per iteration: one map-only assignment pass against the broadcast
@@ -1042,7 +1003,7 @@ def kmeans_train(
     per surviving cluster with member count, within-cluster inertia, and
     the final centroid L2 norm."""
     base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
-    cents = kmeans_fit(emb, k=k, iters=iters, dim=dim)
+    cents = kmeans_fit(emb, iters=iters)
     final = _assign(base, cents)
     norm_map = F.create_map(
         *[
@@ -1073,10 +1034,7 @@ def kmeans_assign(
 
 
 def kmeans_fit(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    dim: int = EMB_DIM,
+    emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ) -> dict[int, list[float]]:
     """Run the Lloyd's rounds and return the final codebook as
     {cid: centroid} — the fitting core shared by kmeans_train (which adds
@@ -1097,7 +1055,7 @@ def kmeans_fit(
         obj_rotate,
     )
 
-    memo_key = (cache_key(emb), k, iters, dim)
+    memo_key = (cache_key(emb), k, iters, EMB_DIM)
     hit = obj_lookup("kmeans_codebook", memo_key)
     if hit is not None:
         return {cid: list(c) for cid, c in hit.items()}
@@ -1115,21 +1073,19 @@ def kmeans_fit(
             .agg(
                 *[
                     F.round(favg_fx(F.col("v")[d]), 6).alias(f"c{d}")
-                    for d in range(dim)
+                    for d in range(EMB_DIM)
                 ]
             )
             .collect()
         )
         cents = {
-            r["cid"]: [r[f"c{d}"] for d in range(dim)] for r in new_rows
+            r["cid"]: [r[f"c{d}"] for d in range(EMB_DIM)] for r in new_rows
         }
     obj_rotate("kmeans_codebook", memo_key, cents)
     return {cid: list(c) for cid, c in cents.items()}
 
 
-def kmeans_cent_rel(
-    k: int = KMEANS_K, iters: int = KMEANS_ITERS, dim: int = EMB_DIM
-) -> str:
+def kmeans_cent_rel(k: int = KMEANS_K) -> str:
     """Parenthesized DuckDB relation of the TRAINED codebook, shaped
     (vec_id, embedding) for splicing into ann_ivf_sql's `cent_rel` — the
     SQL twin of kmeans_fit().  Self-contained (own WITH scope)."""
@@ -1143,7 +1099,7 @@ def kmeans_cent_rel(
             FROM e ORDER BY vec_id LIMIT {k}
         )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, KMEANS_ITERS + 1):
         prev = f"c{i - 1}"
         parts.append(
             f""", a{i} AS (
@@ -1152,7 +1108,7 @@ def kmeans_cent_rel(
                     PARTITION BY vec_id ORDER BY dist, cid) AS rn
                 FROM (
                     SELECT e.vec_id, c.cid,
-                           list_sum(list_transform(range(1, {dim} + 1),
+                           list_sum(list_transform(range(1, {EMB_DIM} + 1),
                                j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])
                            )) AS dist
                     FROM e, {prev} c
@@ -1163,20 +1119,18 @@ def kmeans_cent_rel(
                 SELECT a.cid, u.dm AS dm,
                        round({avg_fx_sql("e.v[u.dm]")}, 6) AS cd
                 FROM a{i} a JOIN e USING (vec_id),
-                     unnest(range(1, {dim} + 1)) AS u(dm)
+                     unnest(range(1, {EMB_DIM} + 1)) AS u(dm)
                 GROUP BY a.cid, u.dm
             ) GROUP BY cid
         )"""
         )
     parts.append(
-        f" SELECT cid AS vec_id, c AS embedding FROM c{iters})"
+        f" SELECT cid AS vec_id, c AS embedding FROM c{KMEANS_ITERS})"
     )
     return "".join(parts)
 
 
-def kmeans_sql(
-    k: int = KMEANS_K, iters: int = KMEANS_ITERS, dim: int = EMB_DIM
-) -> str:
+def kmeans_sql() -> str:
     """DuckDB replay of kmeans_train: identical init, per-round 6-decimal
     centroid rounding, and (dist, cid) tie-breaking."""
     parts = [
@@ -1186,10 +1140,11 @@ def kmeans_sql(
             FROM embeddings
         ), c0 AS (
             SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-            FROM e ORDER BY vec_id LIMIT {k}
+            FROM e ORDER BY vec_id LIMIT {KMEANS_K}
         )"""
     ]
-    for i in range(1, iters + 2):  # iters updates + one final assignment
+    # KMEANS_ITERS updates + one final assignment
+    for i in range(1, KMEANS_ITERS + 2):
         prev = f"c{i - 1}"
         parts.append(
             f""", a{i} AS (
@@ -1198,7 +1153,7 @@ def kmeans_sql(
                     PARTITION BY vec_id ORDER BY dist, cid) AS rn
                 FROM (
                     SELECT e.vec_id, c.cid,
-                           list_sum(list_transform(range(1, {dim} + 1),
+                           list_sum(list_transform(range(1, {EMB_DIM} + 1),
                                j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])
                            )) AS dist
                     FROM e, {prev} c
@@ -1206,14 +1161,14 @@ def kmeans_sql(
             ) WHERE rn = 1
         )"""
         )
-        if i <= iters:
+        if i <= KMEANS_ITERS:
             parts.append(
                 f""", c{i} AS (
             SELECT cid, list(cd ORDER BY dm) AS c FROM (
                 SELECT a.cid, u.dm AS dm,
                        round({avg_fx_sql("e.v[u.dm]")}, 6) AS cd
                 FROM a{i} a JOIN e USING (vec_id),
-                     unnest(range(1, {dim} + 1)) AS u(dm)
+                     unnest(range(1, {EMB_DIM} + 1)) AS u(dm)
                 GROUP BY a.cid, u.dm
             ) GROUP BY cid
         )"""
@@ -1224,7 +1179,7 @@ def kmeans_sql(
                round({sum_fx_sql("a.dist")}, 4) AS inertia,
                round(sqrt(list_sum(list_transform(c.c, x -> x * x))), 4)
                    AS centroid_norm
-        FROM a{iters + 1} a JOIN c{iters} c USING (cid)
+        FROM a{KMEANS_ITERS + 1} a JOIN c{KMEANS_ITERS} c USING (cid)
         GROUP BY a.cid, c.c ORDER BY a.cid"""
     )
     return "".join(parts)
@@ -1245,7 +1200,7 @@ LSH_BAND_BITS = 6
 LSH_BITS = LSH_BANDS * LSH_BAND_BITS
 
 
-def lsh_hyperplanes(bits: int = LSH_BITS, dim: int = EMB_DIM) -> list[list[int]]:
+def lsh_hyperplanes(bits: int = LSH_BITS) -> list[list[int]]:
     """±1 hyperplane matrix from md5("lsh{b}:{d}") parity — deterministic,
     engine-independent, and regenerable inline in oracle SQL."""
     import hashlib
@@ -1259,7 +1214,7 @@ def lsh_hyperplanes(bits: int = LSH_BITS, dim: int = EMB_DIM) -> list[list[int]]
             % 2
             == 0
             else -1
-            for d in range(dim)
+            for d in range(EMB_DIM)
         ]
         for b in range(bits)
     ]
@@ -1278,16 +1233,10 @@ def lsh_band_keys(vec: Column, hp: list[list[int]], band_bits: int) -> Column:
     return F.array(*keys)
 
 
-def ann_lsh(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    bands: int = LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
-) -> DataFrame:
+def ann_lsh(emb: DataFrame) -> DataFrame:
     """Approximate top-k via banded cosine LSH: signature pass (map-only),
     candidate generation by (band_id, band_key) equi-join — a pair is a
-    candidate iff it agrees on all `band_bits` hyperplane signs of at
+    candidate iff it agrees on all LSH_BAND_BITS hyperplane signs of at
     least one band — then exact cosine verification on candidates only.
     Output adds n_candidates per query: the measured pruning factor vs
     the brute-force full scan.
@@ -1295,9 +1244,9 @@ def ann_lsh(
     At 100 TB: the corpus side explodes ×bands into (band_id, band_key)
     rows joined against the broadcast query bands; no pair of vectors
     that never collides is ever scored, and the per-bucket population is
-    capped by the 2^band_bits keyspace per band (band_bits tunes the
+    capped by the 2^LSH_BAND_BITS keyspace per band (LSH_BAND_BITS tunes the
     recall/pruning trade exactly like MinHash-LSH's band width)."""
-    hp = lsh_hyperplanes(bands * band_bits)
+    hp = lsh_hyperplanes(LSH_BANDS * LSH_BAND_BITS)
     # checkpoint barrier before the posexplode (r8 GenerateExec
     # projection-collapse fix): lsh_band_keys is O(bands x band_bits x
     # dim) of dot products per evaluation and would otherwise
@@ -1307,7 +1256,7 @@ def ann_lsh(
         # ann_bruteforce: dot/(qn·nn) is the identical double association)
         "nrm", norm(F.col("vec"))
     ).withColumn(
-        "bkeys", lsh_band_keys(F.col("vec"), hp, band_bits)
+        "bkeys", lsh_band_keys(F.col("vec"), hp, LSH_BAND_BITS)
     ).localCheckpoint(eager=False)
     corpus_bands = base.select(
         "vec_id",
@@ -1315,7 +1264,7 @@ def ann_lsh(
         "nrm",
         F.posexplode("bkeys").alias("band_id", "band_key"),
     )
-    query_bands = corpus_bands.filter(F.col("vec_id") < n_queries).select(
+    query_bands = corpus_bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
         F.col("nrm").alias("qn"),
@@ -1358,7 +1307,7 @@ def ann_lsh(
         cand,
         key="query_id",
         order_by=[F.desc("cos_raw"), F.col("neighbor_id")],
-        k=k,
+        k=TOP_K,
         salt_src="neighbor_id",
     )
     return (
@@ -1373,16 +1322,10 @@ def ann_lsh(
     )
 
 
-def ann_lsh_sql(
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    bands: int = LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
-    dim: int = EMB_DIM,
-) -> str:
+def ann_lsh_sql() -> str:
     """DuckDB replay: same md5 hyperplanes, banded sign keys, ≥1-shared-
     band candidates, candidate-only cosine, (cos desc, neighbor_id) rank."""
-    bits = bands * band_bits
+    bits = LSH_BANDS * LSH_BAND_BITS
     return f"""
         WITH e AS (
             SELECT vec_id,
@@ -1394,22 +1337,22 @@ def ann_lsh_sql(
                             md5('lsh' || b.b || ':' || d.d), 1, 8))
                         AS BIGINT) % 2 = 0 THEN 1 ELSE -1 END AS r
             FROM unnest(range(0, {bits})) b(b),
-                 unnest(range(0, {dim})) d(d)
+                 unnest(range(0, {EMB_DIM})) d(d)
         ), dots AS (
             SELECT e.vec_id, hp.b, sum(e.v[hp.d + 1] * hp.r) AS dotv
             FROM e, hp GROUP BY e.vec_id, hp.b
         ), bkeys AS (
-            SELECT vec_id, b // {band_bits} AS band_id,
+            SELECT vec_id, b // {LSH_BAND_BITS} AS band_id,
                    CAST(sum(CASE WHEN dotv >= 0
-                        THEN (1::BIGINT << (b % {band_bits}))
+                        THEN (1::BIGINT << (b % {LSH_BAND_BITS}))
                         ELSE 0 END) AS BIGINT) AS band_key
-            FROM dots GROUP BY vec_id, b // {band_bits}
+            FROM dots GROUP BY vec_id, b // {LSH_BAND_BITS}
         ), cand AS (
             SELECT DISTINCT q.vec_id AS query_id, s.vec_id AS neighbor_id
             FROM bkeys q
             JOIN bkeys s ON s.band_id = q.band_id
                         AND s.band_key = q.band_key
-            WHERE q.vec_id < {n_queries} AND s.vec_id <> q.vec_id
+            WHERE q.vec_id < {N_QUERIES} AND s.vec_id <> q.vec_id
         ), uv AS (
             SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
                    unnest(range(len(embedding))) AS i
@@ -1434,7 +1377,7 @@ def ann_lsh_sql(
         SELECT r.query_id, r.neighbor_id, round(r.cos, 6) AS cos,
                CAST(r.rank AS INTEGER) AS rank, c.n_candidates
         FROM ranked r JOIN counts c USING (query_id)
-        WHERE r.rank <= {k}
+        WHERE r.rank <= {TOP_K}
         ORDER BY r.query_id, r.rank
     """
 
@@ -1559,10 +1502,7 @@ def pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
 
 
 def ann_pq(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_codes: int = PQ_K,
+    emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
     """Approximate top-k by PQ/ADC distance: rank corpus vectors for each
     query by the sum of query→centroid sub-distances of their codes.
@@ -1571,7 +1511,7 @@ def ann_pq(
     asc (closest first), neighbor_id asc tie-break; self excluded."""
     base = _vectors(emb)
     subs = _subvectors(base, "vec_id", "vec")
-    cb = _pq_codebook(subs, n_codes)
+    cb = _pq_codebook(subs, PQ_K)
     enc = pq_encode(subs, cb)
     qd = _adc_tables(base.filter(F.col("vec_id") < n_queries), cb)
     scored = (
@@ -1592,17 +1532,11 @@ def ann_pq(
     )
 
 
-def ann_pq_sql(
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_codes: int = PQ_K,
-    m_subs: int = PQ_M,
-    sub_dim: int = PQ_SUB_DIM,
-) -> str:
+def ann_pq_sql() -> str:
     """DuckDB replay: same slices, same deterministic codebook, same 9/6 dp
     rounding, same (adc_dist, neighbor_id) rank order."""
     sq = (
-        f"round(list_sum(list_transform(range(1, {sub_dim} + 1), "
+        f"round(list_sum(list_transform(range(1, {PQ_SUB_DIM} + 1), "
         f"j -> (s.sub[j] - c.csub[j]) * (s.sub[j] - c.csub[j]))), 9)"
     )
     return f"""
@@ -1612,12 +1546,12 @@ def ann_pq_sql(
             FROM embeddings
         ), subs AS (
             SELECT vec_id, m.m AS m,
-                   list_slice(v, m.m * {sub_dim} + 1,
-                              m.m * {sub_dim} + {sub_dim}) AS sub
-            FROM e, unnest(range(0, {m_subs})) AS m(m)
+                   list_slice(v, m.m * {PQ_SUB_DIM} + 1,
+                              m.m * {PQ_SUB_DIM} + {PQ_SUB_DIM}) AS sub
+            FROM e, unnest(range(0, {PQ_M})) AS m(m)
         ), cb AS (
             SELECT m, CAST(vec_id AS INTEGER) AS code, sub AS csub
-            FROM subs WHERE vec_id < {n_codes}
+            FROM subs WHERE vec_id < {PQ_K}
         ), enc AS (
             SELECT vec_id, m, code FROM (
                 SELECT s.vec_id, s.m, c.code,
@@ -1629,7 +1563,7 @@ def ann_pq_sql(
         ), qd AS (
             SELECT s.vec_id AS query_id, s.m, c.code, {sq} AS qdist
             FROM subs s JOIN cb c USING (m)
-            WHERE s.vec_id < {n_queries}
+            WHERE s.vec_id < {N_QUERIES}
         ), scored AS (
             SELECT q.query_id, e.vec_id AS neighbor_id,
                    round(sum(q.qdist), 6) AS adc_dist
@@ -1643,7 +1577,7 @@ def ann_pq_sql(
             FROM scored
         )
         SELECT query_id, neighbor_id, adc_dist, CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
     """
 
@@ -1661,19 +1595,14 @@ def ann_pq_sql(
 # ---------------------------------------------------------------------------
 
 def ann_ivfpq(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = N_PROBE,
-    n_codes: int = PQ_K,
+    emb: DataFrame, n_queries: int = N_QUERIES, n_centroids: int = N_CENTROIDS
 ) -> DataFrame:
     """Approximate top-k: IVF coarse quantizer restricts each query to its
-    `nprobe` nearest centroid buckets; within them, neighbors are ranked
+    N_PROBE nearest centroid buckets; within them, neighbors are ranked
     by PQ/ADC distance over the code index.  Output shape = ann_pq.
 
     Codebook sizing — MEASURED decision (r11 VERDICT item 5): C stays a
-    user knob with the fixed recall-friendly default (nprobe/C = 25 % of
+    user knob with the fixed recall-friendly default (N_PROBE/C = 25 % of
     the corpus scanned).  The corpus-adaptive √N rule that
     embedding_neardup_ivf uses was tried as the default in r12 and
     FALSIFIED by the sf100 probe: this query is a ONE-SHOT batch (index
@@ -1695,12 +1624,12 @@ def ann_ivfpq(
     # one kernel pass yields the corpus assignment and the probe lists of
     # the id < n_queries prefix — see _assign_and_probe
     assigned, probes = _assign_and_probe(
-        base, codebook, "vec_id", "vec", n_queries, nprobe
+        base, codebook, "vec_id", "vec", n_queries, N_PROBE
     )
     subs = _subvectors(base, "vec_id", "vec")
-    cb = _pq_codebook(subs, n_codes)
+    cb = _pq_codebook(subs, PQ_K)
     qd = _adc_tables(base.filter(F.col("vec_id") < n_queries), cb)
-    return _adc_top_k(assigned, probes, pq_encode(subs, cb), qd, k)
+    return _adc_top_k(assigned, probes, pq_encode(subs, cb), qd, TOP_K)
 
 
 def _adc_top_k(
@@ -1740,13 +1669,7 @@ def _adc_top_k(
 
 
 def ann_ivfpq_sql(
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = N_PROBE,
-    n_codes: int = PQ_K,
-    m_subs: int = PQ_M,
-    sub_dim: int = PQ_SUB_DIM,
+    n_queries: int = N_QUERIES, n_centroids: int = N_CENTROIDS
 ) -> str:
     """DuckDB replay: ann_ivf's coarse assignment/probe CTEs composed with
     ann_pq's encode/ADC CTEs (MATERIALIZED — both are referenced more
@@ -1754,7 +1677,7 @@ def ann_ivfpq_sql(
     cent = f"(SELECT * FROM embeddings WHERE vec_id < {n_centroids})"
     a2c = _COSINE_PAIR_SQL.format(q="embeddings", e=cent)
     sq = (
-        f"round(list_sum(list_transform(range(1, {sub_dim} + 1), "
+        f"round(list_sum(list_transform(range(1, {PQ_SUB_DIM} + 1), "
         f"j -> (s.sub[j] - c.csub[j]) * (s.sub[j] - c.csub[j]))), 9)"
     )
     return f"""
@@ -1770,7 +1693,7 @@ def ann_ivfpq_sql(
                 SELECT *, row_number() OVER (PARTITION BY query_id
                     ORDER BY cos DESC, neighbor_id) AS r FROM a2c
                 WHERE query_id < {n_queries}
-            ) WHERE r <= {nprobe}
+            ) WHERE r <= {N_PROBE}
         ),
         e AS (
             SELECT vec_id,
@@ -1778,12 +1701,12 @@ def ann_ivfpq_sql(
             FROM embeddings
         ), subs AS MATERIALIZED (
             SELECT vec_id, m.m AS m,
-                   list_slice(v, m.m * {sub_dim} + 1,
-                              m.m * {sub_dim} + {sub_dim}) AS sub
-            FROM e, unnest(range(0, {m_subs})) AS m(m)
+                   list_slice(v, m.m * {PQ_SUB_DIM} + 1,
+                              m.m * {PQ_SUB_DIM} + {PQ_SUB_DIM}) AS sub
+            FROM e, unnest(range(0, {PQ_M})) AS m(m)
         ), cb AS (
             SELECT m, CAST(vec_id AS INTEGER) AS code, sub AS csub
-            FROM subs WHERE vec_id < {n_codes}
+            FROM subs WHERE vec_id < {PQ_K}
         ), enc AS MATERIALIZED (
             SELECT vec_id, m, code FROM (
                 SELECT s.vec_id, s.m, c.code,
@@ -1815,7 +1738,7 @@ def ann_ivfpq_sql(
             FROM scored
         )
         SELECT query_id, neighbor_id, adc_dist, CAST(rank AS INTEGER) AS rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
     """
 
@@ -1846,7 +1769,7 @@ def served_centroid_count(approx_rows: int | None) -> int:
 
 
 def _ivfpq_served_index(
-    emb: DataFrame, codebook: _CodebookHandle, n_codes: int = PQ_K
+    emb: DataFrame, codebook: _CodebookHandle
 ) -> tuple[DataFrame, ...]:
     """Generation-cached served IVF-PQ index: (assigned, cb, enc) —
     coarse top-1 bucket per vector against `codebook`, the PQ sub-space
@@ -1870,25 +1793,19 @@ def _ivfpq_served_index(
         base, codebook, "vec_id", "vec", 1, "bucket"
     ).persist()
     subs = _subvectors(base, "vec_id", "vec")
-    cb = _pq_codebook(subs, n_codes).persist()
+    cb = _pq_codebook(subs, PQ_K).persist()
     enc = pq_encode(subs, cb).persist()
     rotate("ivfpq_served", key, [assigned, cb, enc], input_paths(emb))
     return assigned, cb, enc
 
 
 def ann_ivfpq_served(
-    emb: DataFrame,
-    n_batches: int = SERVED_N_BATCHES,
-    batch_size: int = SERVED_BATCH_SIZE,
-    k: int = TOP_K,
-    nprobe: int = N_PROBE,
-    n_codes: int = PQ_K,
-    approx_rows: int | None = None,
+    emb: DataFrame, approx_rows: int | None = None
 ) -> DataFrame:
-    """Serve `n_batches` independent query batches against the cached
+    """Serve SERVED_N_BATCHES independent query batches against the cached
     √N IVF-PQ index.  Each batch is a SEPARATE probe + bucket-pruned ADC
     scoring subplan (the serving shape: probes for 8 queries are one
-    bounded Arrow pass, the candidate scan touches ~nprobe/√N of the
+    bounded Arrow pass, the candidate scan touches ~N_PROBE/√N of the
     code index, the ADC tables are per-batch broadcasts) — the union of
     the batches is the declared result, with `batch_id` identifying the
     serve call.  Per-query results are independent of batching, so the
@@ -1900,47 +1817,30 @@ def ann_ivfpq_served(
     codebook = _CodebookHandle(
         _centroids(base, served_centroid_count(approx_rows))
     )
-    assigned, cb, enc = _ivfpq_served_index(emb, codebook, n_codes)
+    assigned, cb, enc = _ivfpq_served_index(emb, codebook)
     out = None
-    for b in range(n_batches):
-        lo, hi = b * batch_size, (b + 1) * batch_size
+    for b in range(SERVED_N_BATCHES):
+        lo, hi = b * SERVED_BATCH_SIZE, (b + 1) * SERVED_BATCH_SIZE
         qbase = base.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         probes = _nearest_buckets(
-            qbase, codebook, "vec_id", "vec", nprobe, "bucket"
+            qbase, codebook, "vec_id", "vec", N_PROBE, "bucket"
         )
         topk = _adc_top_k(
-            assigned, probes, enc, _adc_tables(qbase, cb), k
+            assigned, probes, enc, _adc_tables(qbase, cb), TOP_K
         ).select(F.lit(b).alias("batch_id"), "*")
         out = topk if out is None else out.unionByName(topk)
     return out
 
 
-def ann_ivfpq_served_sql(
-    n_batches: int = SERVED_N_BATCHES,
-    batch_size: int = SERVED_BATCH_SIZE,
-    k: int = TOP_K,
-    nprobe: int = N_PROBE,
-    n_codes: int = PQ_K,
-    m_subs: int = PQ_M,
-    sub_dim: int = PQ_SUB_DIM,
-    approx_rows: int | None = None,
-) -> str:
+def ann_ivfpq_served_sql(approx_rows: int | None = None) -> str:
     """DuckDB replay: ann_ivfpq_sql at the served √N codebook size and
-    n_batches·batch_size queries, batch_id derived from query_id (valid
-    because per-query results are batching-independent)."""
+    SERVED_N_BATCHES·SERVED_BATCH_SIZE queries, batch_id derived from
+    query_id (valid because per-query results are batching-independent)."""
     n_centroids = served_centroid_count(approx_rows)
-    n_queries = n_batches * batch_size
-    inner = ann_ivfpq_sql(
-        n_queries=n_queries,
-        k=k,
-        n_centroids=n_centroids,
-        nprobe=nprobe,
-        n_codes=n_codes,
-        m_subs=m_subs,
-        sub_dim=sub_dim,
-    )
+    n_queries = SERVED_N_BATCHES * SERVED_BATCH_SIZE
+    inner = ann_ivfpq_sql(n_queries=n_queries, n_centroids=n_centroids)
     return f"""
-        SELECT CAST(query_id // {batch_size} AS INTEGER) AS batch_id,
+        SELECT CAST(query_id // {SERVED_BATCH_SIZE} AS INTEGER) AS batch_id,
                query_id, neighbor_id, adc_dist, rank
         FROM ({inner})
         ORDER BY batch_id, query_id, rank
@@ -1960,7 +1860,7 @@ def ann_ivfpq_served_sql(
 QUANT_LEVELS = 255
 
 
-def embedding_quantize_error(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
+def embedding_quantize_error(emb: DataFrame) -> DataFrame:
     """(label, n_vectors, max_abs_err, mse) of the uint8 round-trip under
     per-dimension corpus min/max scaling, ordered by label.  Codes span
     0..QUANT_LEVELS (0..255) — UNSIGNED one-byte storage; signed int8
@@ -1997,16 +1897,14 @@ def embedding_quantize_error(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
         .agg(
             # integer `div`, exact and identical to the oracle's `//`
             # (a double divide + cast would truncate vs round half-even)
-            F.expr(f"count(*) div {dim}").alias("n_vectors"),
+            F.expr(f"count(*) div {EMB_DIM}").alias("n_vectors"),
             F.round(F.max("err"), 6).alias("max_abs_err"),
             F.round(F.avg(F.col("err") * F.col("err")), 9).alias("mse"),
         )
     )
 
 
-def embedding_quantize_error_sql(
-    levels: int = QUANT_LEVELS, dim: int = EMB_DIM
-) -> str:
+def embedding_quantize_error_sql() -> str:
     """DuckDB replay: same per-dim min/max, same explicit floor(v+0.5)
     quantizer, same error aggregation and rounding."""
     return f"""
@@ -2021,12 +1919,12 @@ def embedding_quantize_error_sql(
             SELECT e.label,
                    abs(e.x - CASE WHEN d.mx > d.mn
                        THEN d.mn + floor((e.x - d.mn) / (d.mx - d.mn)
-                                         * {levels} + CAST(0.5 AS DOUBLE))
-                            / {levels} * (d.mx - d.mn)
+                                         * {QUANT_LEVELS} + CAST(0.5 AS DOUBLE))
+                            / {QUANT_LEVELS} * (d.mx - d.mn)
                        ELSE d.mn END) AS err
             FROM elems e JOIN dims d USING (pos)
         )
-        SELECT label, CAST(count(*) // {dim} AS BIGINT) AS n_vectors,
+        SELECT label, CAST(count(*) // {EMB_DIM} AS BIGINT) AS n_vectors,
                round(max(err), 6) AS max_abs_err,
                round(avg(err * err), 9) AS mse
         FROM errs GROUP BY label ORDER BY label
@@ -2060,10 +1958,7 @@ def _semantic_assign(df: DataFrame, codebook: _CodebookHandle) -> DataFrame:
 
 
 def semantic_dedup(
-    emb: DataFrame,
-    threshold: float = NEARDUP_COSINE,
-    n_centroids: int | None = None,
-    approx_rows: int | None = None,
+    emb: DataFrame, approx_rows: int | None = None
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023): cluster
     embeddings, find within-cluster cosine near-duplicates, and keep the
@@ -2112,8 +2007,7 @@ def semantic_dedup(
     vector, ordered by vec_id; n_dominating counts the higher-priority
     near-duplicates that evicted it (0 for kept rows).
     """
-    if n_centroids is None:
-        n_centroids = neardup_centroid_count(approx_rows, 1)
+    n_centroids = neardup_centroid_count(approx_rows, 1)
     base = _vectors(emb).withColumn("vnorm", norm(F.col("vec")))
     # bounded codebook: C = √rows rows of dim doubles (same class as the
     # kmeans k-row codebook); collected lazily at first kernel pickle and
@@ -2161,7 +2055,7 @@ def semantic_dedup(
                 6,
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= F.lit(threshold))
+        .filter(F.col("cos") >= F.lit(NEARDUP_COSINE))
         .groupBy(F.col("id_a").alias("vec_id"))
         .agg(F.count("*").alias("n_dominating"))
     )
@@ -2179,15 +2073,10 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_sql(
-    threshold: float = NEARDUP_COSINE,
-    n_centroids: int | None = None,
-    approx_rows: int | None = None,
-) -> str:
+def semantic_dedup_sql(approx_rows: int | None = None) -> str:
     """DuckDB replay: identical assignment ranking, fixed-point centroid
     priorities, and the same directed-domination drop rule."""
-    if n_centroids is None:
-        n_centroids = neardup_centroid_count(approx_rows, 1)
+    n_centroids = neardup_centroid_count(approx_rows, 1)
     cent = f"(SELECT * FROM embeddings WHERE vec_id < {n_centroids})"
     a2c = _COSINE_PAIR_SQL.format(q="embeddings", e=cent)
     return f"""
@@ -2225,7 +2114,7 @@ def semantic_dedup_sql(
         dominated AS (
             SELECT id_a AS vec_id, count(*) AS n_dominating
             FROM verify
-            WHERE cos >= {threshold}
+            WHERE cos >= {NEARDUP_COSINE}
               AND (cent_b < cent_a
                    OR (cent_b = cent_a AND id_b < id_a))
             GROUP BY 1

@@ -43,12 +43,7 @@ def _bucket(tok_col: F.Column, row: int, width: int) -> F.Column:
     return h32(F.concat(F.lit(f"cms{row}|"), tok_col)) % width
 
 
-def cms_heavy_hitters(
-    docs: DataFrame,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    top_k: int = TOP_K,
-) -> DataFrame:
+def cms_heavy_hitters(docs: DataFrame) -> DataFrame:
     """Exact top-k tokens with their CMS estimates and the error-bound flag.
 
     Plan shape: one explode pass feeds BOTH the d×w sketch (map-side
@@ -64,9 +59,9 @@ def cms_heavy_hitters(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _bucket(F.col("tok"), r, width).alias("bucket"),
+                        _bucket(F.col("tok"), r, CMS_WIDTH).alias("bucket"),
                     )
-                    for r in range(depth)
+                    for r in range(CMS_DEPTH)
                 ]
             )
         ).alias("c")
@@ -74,7 +69,7 @@ def cms_heavy_hitters(
     sketch = cells.groupBy("c.row", "c.bucket").agg(F.count("*").alias("cnt"))
 
     exact = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    top = exact.orderBy(F.desc("exact_n"), "tok").limit(top_k)
+    top = exact.orderBy(F.desc("exact_n"), "tok").limit(TOP_K)
 
     probes = top.select(
         "tok",
@@ -84,9 +79,9 @@ def cms_heavy_hitters(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _bucket(F.col("tok"), r, width).alias("bucket"),
+                        _bucket(F.col("tok"), r, CMS_WIDTH).alias("bucket"),
                     )
-                    for r in range(depth)
+                    for r in range(CMS_DEPTH)
                 ]
             )
         ).alias("p"),
@@ -100,7 +95,7 @@ def cms_heavy_hitters(
         .agg(F.min("cnt").alias("est_n"))
     )
     n_total = toks.count()  # scalar for the bound only (demo-side)
-    bound = int(2.718281828459045 / width * n_total) + 1
+    bound = int(2.718281828459045 / CMS_WIDTH * n_total) + 1
     return est.select(
         "tok",
         "exact_n",
@@ -194,14 +189,12 @@ def streaming_cms_heavy_hitters(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def cms_heavy_hitters_sql(
-    depth: int = CMS_DEPTH, width: int = CMS_WIDTH, top_k: int = TOP_K
-) -> str:
+def cms_heavy_hitters_sql() -> str:
     """DuckDB twin: identical md5 buckets → identical sketch → identical
     estimates.  The bound flag is TRUE by the CMS guarantee (and would
     hash-mismatch if the Spark side ever violated it)."""
-    rows = ", ".join(str(r) for r in range(depth))
-    bucket = h32_sql("('cms' || r || '|' || tok)") + f" % {width}"
+    rows = ", ".join(str(r) for r in range(CMS_DEPTH))
+    bucket = h32_sql("('cms' || r || '|' || tok)") + f" % {CMS_WIDTH}"
     return f"""
         WITH toks AS (
             SELECT unnest({tokens_sql('text')}) AS tok FROM documents
@@ -216,7 +209,7 @@ def cms_heavy_hitters_sql(
         exact AS (SELECT tok, count(*) AS exact_n FROM toks GROUP BY tok),
         top AS (
             SELECT tok, exact_n FROM exact
-            ORDER BY exact_n DESC, tok LIMIT {top_k}
+            ORDER BY exact_n DESC, tok LIMIT {TOP_K}
         ),
         probes AS (
             SELECT tok, exact_n, r, {bucket} AS bucket
@@ -230,7 +223,7 @@ def cms_heavy_hitters_sql(
         )
         SELECT tok, exact_n, est_n,
                (est_n >= exact_n AND est_n - exact_n <=
-                CAST(floor(2.718281828459045 / {width}
+                CAST(floor(2.718281828459045 / {CMS_WIDTH}
                      * (SELECT count(*) FROM toks)) AS BIGINT) + 1)
                    AS within_bound
         FROM est ORDER BY exact_n DESC, tok

@@ -264,14 +264,17 @@ def pii_redaction_sql() -> str:
 
 # --- within-document repetition (Gopher/C4-style quality rule) --------------
 
-def repetition_ratio(toks: Column, n: int = 3) -> Column:
+REPETITION_N = 3  # word n-gram length of the repetition rule
+
+
+def repetition_ratio(toks: Column) -> Column:
     """Fraction of duplicate n-gram occurrences inside one document:
     1 − distinct_ngrams/total_ngrams.  High values flag boilerplate /
     degenerate text that quality filters drop before training.  Pure array
     HOFs — computed inside the scan stage, no shuffle."""
     from marketstream_etl_spark.functions.hashing import shingles
 
-    grams = shingles(toks, n)
+    grams = shingles(toks, REPETITION_N)
     return F.when(F.size(grams) <= 0, F.lit(0.0)).otherwise(
         1.0
         - F.size(F.array_distinct(grams)).cast("double")
@@ -279,10 +282,10 @@ def repetition_ratio(toks: Column, n: int = 3) -> Column:
     )
 
 
-def repetition_sql(text_expr: str, n: int = 3) -> str:
+def repetition_sql(text_expr: str) -> str:
     from marketstream_etl_spark.functions.hashing import shingles_sql, tokens_sql
 
-    grams = shingles_sql(tokens_sql(text_expr), n)
+    grams = shingles_sql(tokens_sql(text_expr), REPETITION_N)
     return (
         f"CASE WHEN len({grams}) <= 0 THEN 0.0 ELSE "
         f"1.0 - CAST(len(list_distinct({grams})) AS DOUBLE)"

@@ -30,10 +30,10 @@ DAY_NS = 86_400_000_000_000
 SESSION_GAP_NS = 1_800_000_000_000  # 30 minutes
 
 
-def _ts_us_ns(col: str = "ts") -> F.Column:
+def _ts_us_ns() -> F.Column:
     """events.ts truncated from ns to µs resolution (still ns units) so
     duration arithmetic matches the µs-precision oracle exactly."""
-    return F.col(col) - F.col(col) % 1000
+    return F.col("ts") - F.col("ts") % 1000
 
 
 def q_rolling_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1924,11 +1924,11 @@ BENFORD_P = {  # repr(log10(1 + 1/d)) — identical literals on both engines
 BENFORD_CHI2_CRIT_FP = 15_507_000  # chi2(0.05, dof=8) = 15.507 in 1e-6 units
 
 
-def benford_digit_col(value_col: str = "o_totalprice") -> F.Column:
-    """Leading decimal digit via the BIGINT string (exact in both
-    engines — no float formatting, no log10 on data)."""
+def benford_digit_col() -> F.Column:
+    """Leading decimal digit of o_totalprice via the BIGINT string (exact
+    in both engines — no float formatting, no log10 on data)."""
     return F.substring(
-        F.floor(F.col(value_col)).cast("long").cast("string"), 1, 1
+        F.floor(F.col("o_totalprice")).cast("long").cast("string"), 1, 1
     ).cast("int")
 
 

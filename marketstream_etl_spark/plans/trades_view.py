@@ -174,9 +174,6 @@ def load_trades(
 
         from marketstream_etl_spark.sources.layout import fan_out_small_scan
 
-        try:
-            nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-        except OSError:
-            nbytes = None  # non-file layout: legacy RDD-probe path
+        nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
         events = fan_out_small_scan(events, input_bytes=nbytes)
     return trades_from_events(events)

@@ -1792,7 +1792,7 @@ def q_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return file_stream_ivf_assign(spark, sf_dir)
 
 
-def stream_ivf_assign_sql(n_centroids: int = 16, dim: int = 64) -> str:
+def stream_ivf_assign_sql() -> str:
     """Batch replay of the final streaming state: same deterministic
     codebook, same (dist, cid) argmin tie-break, same inertia rounding."""
     return f"""
@@ -1801,14 +1801,14 @@ def stream_ivf_assign_sql(n_centroids: int = 16, dim: int = 64) -> str:
                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings
         ), c AS (
-            SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {n_centroids}
+            SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {similarity.N_CENTROIDS}
         ), a AS (
             SELECT vec_id, cid, dist FROM (
                 SELECT d.*, row_number() OVER (
                     PARTITION BY vec_id ORDER BY dist, cid) AS rn
                 FROM (
                     SELECT e.vec_id, c.cid,
-                           list_sum(list_transform(range(1, {dim} + 1),
+                           list_sum(list_transform(range(1, {similarity.EMB_DIM} + 1),
                                j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])
                            )) AS dist
                     FROM e, c

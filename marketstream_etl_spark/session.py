@@ -31,31 +31,11 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # SPARK_GRAFT_SHUFFLE_PARTITIONS: input-scaled shuffle WIDTH for
-        # decade-scale runs (tools/sweep_sf.ensure_shuffle_width sets it
-        # from the input byte size, the same pattern as the driver-mem
-        # auto-provisioning).  Fixed 32 spills once per-partition shuffle
-        # blocks outgrow memory — measured at the sf100 decade:
-        # tfidf_keywords' ~300M-row postings shuffles run 90.0 s at 32 vs
-        # 57.0 s at 256 warm (226 -> 84 s cold).  A GLOBAL AQE fix
-        # (coalescePartitions.initialPartitionNum=1024, with and without
-        # parallelismFirst=false) was tried first and REJECTED by
-        # measurement: cached plans materialize at full initial width
-        # (AQE cannot re-coalesce a cache without
-        # canChangeCachedPlanOutputPartitioning) and the sf0.1 headline
-        # regressed 13.9 -> 17.2/20.2 s (etl_1m sink 0.32 -> 3.2/3.3 s
-        # writing hundreds of tiny files).  On a real cluster this knob
-        # is the ops-owned spark.sql.shuffle.partitions sizing; the env
-        # override is its harness analog.
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        # r12 ADVICE: isdigit() alone admits "0", which Spark rejects at
-        # session build — require a strictly positive int or fall back.
-        if env_parts and env_parts.isdigit() and int(env_parts) > 0:
-            shuffle_partitions = int(env_parts)
-        else:
-            shuffle_partitions = (
-                int(cpus) if cpus.isdigit() else DEFAULT_SHUFFLE_PARTITIONS
-            )
+        # decade-scale tools pass an input-scaled width instead
+        # (tools/sweep_sf.shuffle_width)
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else DEFAULT_SHUFFLE_PARTITIONS
+        )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -33,15 +33,13 @@ def _clear_table(spark: SparkSession, table: str) -> None:
     shutil.rmtree(f"{warehouse}/{table.lower()}", ignore_errors=True)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = N_BUCKETS
-) -> None:
+def write_bucketed(df: DataFrame, table: str, key: str) -> None:
     """Persist as a managed table bucketed AND sorted by the join key: the
     per-bucket sort order makes later sort-merge joins skip their sort."""
     _clear_table(df.sparkSession, table)
     (
         df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
+        .bucketBy(N_BUCKETS, key)
         .sortBy(key)
         .format("parquet")
         .saveAsTable(table)

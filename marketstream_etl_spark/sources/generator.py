@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 EPOCH_NS = 1_698_208_500_000_000_000  # DataGenerator.hpp:151
+SEED = 42  # base seed of every rand() column
 
 # (symbol, start_price) — DataGenerator.hpp:86-97,122-132; repetition in the
 # pick table gives RELIANCE/TCS 3×, INFY/HDFC 2× weight.
@@ -46,13 +47,13 @@ SYMBOLS = [
 ]
 
 
-def generate_trades(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
+def generate_trades(spark: SparkSession, n: int) -> DataFrame:
     """n synthetic trades with the reference generator's distributions."""
     df = spark.range(n).withColumnRenamed("id", "i")
 
     pick = F.element_at(
         F.array(*[F.lit(s) for s, _ in SYMBOLS]),
-        (F.floor(F.rand(seed) * len(SYMBOLS)) + 1).cast("int"),
+        (F.floor(F.rand(SEED) * len(SYMBOLS)) + 1).cast("int"),
     )
     start = F.element_at(
         F.create_map(
@@ -70,16 +71,16 @@ def generate_trades(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         (F.lit(2_000_000) + F.col("i")).alias("order_id"),
         F.col("i"),
         pick.alias("symbol"),
-        (F.floor(F.rand(seed + 1) * 4991) + 10).cast("int").alias("volume"),
-        F.when(F.rand(seed + 2) < 0.5, F.lit("B")).otherwise(F.lit("S")).alias("side"),
-        F.when(F.rand(seed + 3) < 0.3, F.lit("M"))
-        .when(F.rand(seed + 3) < 0.9, F.lit("L"))
+        (F.floor(F.rand(SEED + 1) * 4991) + 10).cast("int").alias("volume"),
+        F.when(F.rand(SEED + 2) < 0.5, F.lit("B")).otherwise(F.lit("S")).alias("side"),
+        F.when(F.rand(SEED + 3) < 0.3, F.lit("M"))
+        .when(F.rand(SEED + 3) < 0.9, F.lit("L"))
         .otherwise(F.lit("I"))
         .alias("type"),
-        (F.rand(seed + 4) < 0.2).alias("is_pro"),
-        (F.randn(seed + 5) * 0.5).alias("_step"),
+        (F.rand(SEED + 4) < 0.2).alias("is_pro"),
+        (F.randn(SEED + 5) * 0.5).alias("_step"),
         # per-row jitter for the timestamp (see below)
-        F.floor(F.rand(seed + 6) * 22_501).alias("_jitter"),
+        F.floor(F.rand(SEED + 6) * 22_501).alias("_jitter"),
     )
 
     w_sym = Window.partitionBy("symbol").orderBy("i")

@@ -1,55 +1,18 @@
-"""Data-layout helpers — the lakehouse analog of the reference's composite
-B-tree index `(symbol, timestamp)` (DatabaseLoader.cpp:117-125, SURVEY §4):
+"""Scan layout: `fan_out_small_scan` gives expression-heavy operators full
+parallelism when the source scan has fewer splits than cores (small
+single-row-group files — a test-scale artifact; at production scale scans
+split naturally and this is a no-op).
 
-- `write_partitioned_sorted`: hive-partition by the equality key and sort
-  files by the range key → `WHERE symbol='X' AND ts BETWEEN a AND b` becomes
-  partition pruning + parquet min/max row-group skipping.  That is the F5
-  "key lookup" query served without any index structure.
-- `write_bucketed_table`: pre-shuffle a fact table into N buckets on the
-  join key so repeated joins on that key are co-located — no exchange at
-  query time (the managed-table analog of the reference's one-off index
-  rebuild amortized over many queries).
-- `fan_out_small_scan`: give expression-heavy operators full parallelism
-  when the source scan has fewer splits than cores (small single-row-group
-  files — a test-scale artifact; at production scale scans split naturally
-  and this is a no-op).
+The written layouts that serve the reference's composite B-tree index
+`(symbol, timestamp)` (DatabaseLoader.cpp:117-125, SURVEY §4) live next to
+their queries: `sources/partitioned.py` (partition pruning),
+`sources/bucketed.py` (co-located joins) and `sources/zorder.py`
+(multi-column data skipping).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_partitioned_sorted(
-    df: DataFrame,
-    path: str,
-    partition_col: str,
-    sort_cols: list[str],
-    target_file_partitions: int | None = None,
-) -> None:
-    """Partition by `partition_col`, one sorted parquet file per partition
-    (sortWithinPartitions → parquet writes monotone min/max page stats)."""
-    n = target_file_partitions or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartition(n, partition_col)
-        .sortWithinPartitions(partition_col, *sort_cols)
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort_col: str | None = None,
-) -> None:
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
 
 
 # COMPRESSED bytes of input per fan-out task.  The fanned-out consumers
@@ -65,7 +28,7 @@ def write_bucketed_table(
 _FAN_OUT_TARGET_BYTES = 512 * 1024
 
 
-def fan_out_small_scan(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
+def fan_out_small_scan(df: DataFrame, input_bytes: int) -> DataFrame:
     """Round-robin repartition toward full parallelism when the scan has
     fewer splits than the data warrants.
 
@@ -75,25 +38,16 @@ def fan_out_small_scan(df: DataFrame, input_bytes: int | None = None) -> DataFra
     core.  The shuffle moves only the scan's raw bytes (small by premise);
     callers apply it BEFORE expensive projections so those run wide.
 
-    The width is INPUT-SCALED when the caller supplies `input_bytes`
+    The width is INPUT-SCALED from `input_bytes`, the source's file size
     (optimization guide §2: derive partitioning from input size, not a
     constant tuned for one deployment): ceil(bytes / 512 KB) clamped to
     [1, defaultParallelism] — see _FAN_OUT_TARGET_BYTES for the width
     measurement.  A tiny input keeps its natural split count while
     anything over 512 KB * defaultParallelism still fans out to full
-    width exactly as before.  Skipped entirely when the scan itself
-    already yields at least
+    width.  Skipped entirely when the scan itself already yields at least
     that many splits (estimated from maxPartitionBytes driver-side; no
-    df.rdd materialization, which cost ~50 ms per plan build).
-
-    Without `input_bytes` the legacy behavior stands: probe the RDD and
-    fan out to full parallelism when narrower."""
-    sc = df.sparkSession.sparkContext
-    para = sc.defaultParallelism
-    if input_bytes is None:
-        if df.rdd.getNumPartitions() >= para:
-            return df
-        return df.repartition(para)
+    df.rdd materialization, which cost ~50 ms per plan build)."""
+    para = df.sparkSession.sparkContext.defaultParallelism
     width = min(para, max(1, -(-int(input_bytes) // _FAN_OUT_TARGET_BYTES)))
     try:
         max_pb = int(

@@ -1,6 +1,6 @@
 """Z-ordered lineitem layout — two-dimensional data skipping from one copy.
 
-``write_partitioned_sorted`` (sources/layout.py) serves the reference's
+A hive-partitioned table (sources/partitioned.py) serves the reference's
 composite-index query pattern for ONE leading key.  This module lays
 lineitem out in Morton order of ``(l_partkey, l_suppkey)``
 (functions/zorder.py): repartitionByRange on the z-value puts nearby

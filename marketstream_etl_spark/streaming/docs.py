@@ -147,9 +147,7 @@ def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def file_stream_ivf_assign(
-    spark: SparkSession, sf_dir: str, n_centroids: int = 16
-) -> DataFrame:
+def file_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online vector indexing — the streaming half of the IVF story:
     embeddings STREAM in and are assigned to their nearest coarse-codebook
     bucket map-side; one streaming aggregate keeps the index's bucket
@@ -164,14 +162,18 @@ def file_stream_ivf_assign(
     argmin, the kmeans _assign expression; batch IVF search uses cosine —
     both are standard coarse quantizers).
     """
-    from marketstream_etl_spark.operators.similarity import _assign, _dvec
+    from marketstream_etl_spark.operators.similarity import (
+        N_CENTROIDS,
+        _assign,
+        _dvec,
+    )
     from marketstream_etl_spark.sources.tables import load_table
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
     static = load_table(spark, sf_dir, "embeddings")
     cents = {
         int(r["vec_id"]): list(r["v"])
-        for r in static.filter(F.col("vec_id") < n_centroids)
+        for r in static.filter(F.col("vec_id") < N_CENTROIDS)
         .select("vec_id", _dvec(F.col("embedding")).alias("v"))
         .collect()
     }

@@ -96,10 +96,7 @@ def _wilder_from_state(m: int, wag: float, wal: float) -> float:
 
 
 def fold_batch(
-    existing: tuple | None,
-    batch: pd.DataFrame,
-    period: int = DEFAULT_PERIOD,
-    wilder_period: int = WILDER_PERIOD,
+    existing: tuple | None, batch: pd.DataFrame, period: int = DEFAULT_PERIOD
 ) -> tuple[tuple, dict]:
     """The keyed state transition shared by BOTH state backends
     (applyInPandasWithState and transformWithState): fold one micro-batch
@@ -122,7 +119,7 @@ def fold_batch(
     if order_cols:
         batch = batch.sort_values(order_cols)
     keep = period + 1
-    wp = float(wilder_period)
+    wp = float(WILDER_PERIOD)
     for price, volume in zip(batch["price"], batch["volume"]):
         price = float(price)
         if n >= 1:
@@ -130,7 +127,7 @@ def fold_batch(
             gain = change if change > 0 else 0.0
             loss = -change if change < 0 else 0.0
             m = n  # change index (1-based) == rows seen so far
-            if m <= wilder_period:
+            if m <= WILDER_PERIOD:
                 wsg += gain
                 wsl += loss
                 wag = wsg / m

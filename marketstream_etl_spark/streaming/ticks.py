@@ -199,10 +199,11 @@ def symbol_counts(ticks: DataFrame) -> DataFrame:
     )
 
 
+WINDOWED_WATERMARK = "10 seconds"  # lateness bound of windowed_symbol_stats
+
+
 def windowed_symbol_stats(
-    ticks: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "10 seconds",
+    ticks: DataFrame, window: str = "1 minute"
 ) -> DataFrame:
     """ST4 (engine extension): tumbling-window per-symbol stats with a
     watermark for late data. The reference's last-N-rows indicators are not
@@ -212,7 +213,7 @@ def windowed_symbol_stats(
         "event_time", F.timestamp_micros(F.expr("timestamp div 1000"))
     )
     return (
-        with_ts.withWatermark("event_time", watermark)
+        with_ts.withWatermark("event_time", WINDOWED_WATERMARK)
         .groupBy(F.window("event_time", window), "symbol")
         .agg(
             F.count("*").alias("n_ticks"),
@@ -718,13 +719,17 @@ def build_deadletter_payload(
     return [r.value for r in frames.collect()]
 
 
-def send_lines_chunked(conn, lines: list[str], batch: int = 1000) -> None:
-    """Emit lines over a socket in `batch`-sized newline-joined writes —
+SOCKET_SEND_LINES = 1000  # lines per socket write
+
+
+def send_lines_chunked(conn, lines: list[str]) -> None:
+    """Emit lines over a socket in SOCKET_SEND_LINES-line writes —
     never one giant wire buffer, never one syscall per line.  Shared by
     the plain-TCP emitter and the WebSocket bridge (the two feeds of
     drain_deadletter_socket)."""
-    for i in range(0, len(lines), batch):
-        conn.sendall(("\n".join(lines[i : i + batch]) + "\n").encode())
+    for i in range(0, len(lines), SOCKET_SEND_LINES):
+        chunk = lines[i : i + SOCKET_SEND_LINES]
+        conn.sendall(("\n".join(chunk) + "\n").encode())
 
 
 def drain_deadletter_socket(

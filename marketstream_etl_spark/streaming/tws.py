@@ -85,9 +85,7 @@ class IndicatorProcessor(StatefulProcessor):
         pass
 
 
-def streaming_indicators_tws(
-    ticks: DataFrame, period: int = DEFAULT_PERIOD
-) -> DataFrame:
+def streaming_indicators_tws(ticks: DataFrame) -> DataFrame:
     """Per-symbol last-N indicator stream on the transformWithState API."""
     cols = ["symbol", "price", "volume"]
     for order_col in ("timestamp", "trade_id"):
@@ -97,7 +95,7 @@ def streaming_indicators_tws(
         ticks.select(*cols)
         .groupBy("symbol")
         .transformWithStateInPandas(
-            IndicatorProcessor(period),
+            IndicatorProcessor(DEFAULT_PERIOD),
             outputStructType=OUTPUT_SCHEMA,
             outputMode="Update",
             timeMode="None",
@@ -125,7 +123,7 @@ def file_stream_tws_indicators(spark, sf_dir: str) -> DataFrame:
     )
 
     valid = valid_trades_stream(spark, sf_dir)
-    ind = streaming_indicators_tws(valid, period=DEFAULT_PERIOD)
+    ind = streaming_indicators_tws(valid)
     emitted = drain_to_memory(ind, "stream_tws", sf_dir)
     return final_indicator_snapshot(emitted)
 

@@ -65,12 +65,11 @@ def encode_frame(
     payload: bytes,
     opcode: int = OP_TEXT,
     mask: bytes | None = None,
-    fin: bool = True,
 ) -> bytes:
-    """One WebSocket frame (§5.2).  `mask` of 4 bytes → masked (client→
-    server direction); None → unmasked (server→client)."""
+    """One unfragmented (FIN) WebSocket frame (§5.2).  `mask` of 4 bytes
+    → masked (client→server direction); None → unmasked (server→client)."""
     head = bytearray()
-    head.append((0x80 if fin else 0x00) | (opcode & 0x0F))
+    head.append(0x80 | (opcode & 0x0F))
     mask_bit = 0x80 if mask is not None else 0x00
     n = len(payload)
     if n < 126:

@@ -4,9 +4,6 @@ from __future__ import annotations
 
 import glob
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -8,8 +8,6 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 from marketstream_etl_spark import registry
 

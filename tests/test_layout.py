@@ -3,42 +3,11 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.sources.bucketed import write_bucketed
 from marketstream_etl_spark.sources.generator import generate_trades
-from marketstream_etl_spark.sources.layout import (
-    write_bucketed_table,
-    write_partitioned_sorted,
-)
 from tests.test_plans import plan_of
-
-
-def test_partition_pruning_for_symbol_range_query(spark):
-    trades = generate_trades(spark, 5000)
-    with tempfile.TemporaryDirectory() as d:
-        write_partitioned_sorted(
-            trades, f"{d}/t", "symbol", ["timestamp"], target_file_partitions=4
-        )
-        pruned = spark.read.parquet(f"{d}/t").filter(
-            (F.col("symbol") == "RELIANCE") & (F.col("timestamp") > 0)
-        )
-        plan = plan_of(pruned)
-        # the equality predicate became a partition filter, not a data filter
-        assert "PartitionFilters: [isnotnull(symbol" in plan.replace(
-            "#", ""
-        ) or "symbol" in plan.split("PartitionFilters")[1].splitlines()[0]
-        rows = pruned.collect()
-        assert len(rows) > 0
-        assert all(r["symbol"] == "RELIANCE" for r in rows)
-        # file-level sort preserved within the partition read order
-        got = [r["timestamp"] for r in pruned.collect()]
-        # correctness does not depend on read order; assert the data content
-        assert sorted(got) == sorted(
-            r["timestamp"]
-            for r in trades.filter(F.col("symbol") == "RELIANCE").collect()
-        )
 
 
 def test_bucketed_join_is_shuffle_free(spark):
@@ -47,8 +16,8 @@ def test_bucketed_join_is_shuffle_free(spark):
         F.col("trade_id"), F.col("volume")
     )
     try:
-        write_bucketed_table(li, "b_trades", "trade_id", 4, sort_col="trade_id")
-        write_bucketed_table(orders, "b_orders", "trade_id", 4, sort_col="trade_id")
+        write_bucketed(li, "b_trades", "trade_id")
+        write_bucketed(orders, "b_orders", "trade_id")
         joined = spark.table("b_trades").join(
             spark.table("b_orders").hint("merge"), "trade_id"
         )

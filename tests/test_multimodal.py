@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 
 from marketstream_etl_spark.operators.multimodal import (
-    decode_real,
     extract_features,
     media_from_documents,
     media_metadata,
@@ -50,11 +48,6 @@ def test_extract_features_deterministic(spark):
     a = extract_features(media).collect()[0]["feature"]
     b = extract_features(media).collect()[0]["feature"]
     assert a == b
-
-
-def test_decode_real_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        decode_real(b"...", "png")
 
 
 def test_sample_frames_multiplicity_and_content(spark, sf_dir):

@@ -319,7 +319,7 @@ def test_tpch_no_forced_broadcast_of_scaling_tables():
     import re
 
     src = open(
-        "/root/repo/marketstream_etl_spark/plans/tpch.py"
+        os.path.join(ROOT, "marketstream_etl_spark", "plans", "tpch.py")
     ).read()
     hinted = re.findall(r"F\.broadcast\((\w+)\)", src)
     allowed = {

@@ -54,7 +54,8 @@ def test_unknown_query_suggests_close_names(capsys):
 
 
 def test_no_recount_after_show():
-    src = pathlib.Path("/root/repo/tools/run_query.py").read_text()
+    root = pathlib.Path(__file__).resolve().parents[1]
+    src = (root / "tools" / "run_query.py").read_text()
     # the single-materialization contract: no bare df.count() in the
     # display path (it would re-execute the whole query after show)
     assert "df.count()" not in src

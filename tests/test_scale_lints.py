@@ -15,8 +15,14 @@ paid to learn, so a future edit cannot silently reintroduce them.
 4. One relational writer: outside sources/sinks.py no package code writes
    to a JDBC target or opens a driver-side JDBC connection.
 5. No test-only package code: every top-level function and class in the
-   package is named somewhere outside tests/, except the allow-listed
-   reference implementations.
+   package is used as an identifier (a name, an attribute or an import)
+   somewhere outside tests/, except the allow-listed reference
+   implementations.  A docstring that names a function is not a use.
+6. No setting without a setter: every defaulted parameter of a top-level
+   package function that is called by name is passed by at least one
+   call; an option no caller sets is a module constant.
+7. Runs from any checkout: no Python file names the absolute checkout
+   path except __spark_entry__.py, whose loader is external.
 """
 
 from __future__ import annotations
@@ -205,37 +211,204 @@ TEST_ONLY_ALLOWED = {
     "z_value_py": "the pure-Python Morton reference test_zorder checks against",
     "init_schema": "S7 DDL parity, README's coverage row for init_schema",
     "bulk_load_with_index_ddl": "S8's adopted drop/rebuild-index bulk load",
+    "cosine": "the declarative cosine the similarity kernels are checked against",
+    "kafka_tick_stream": "BASELINE's Kafka source, gated on the connector jar",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
+def _py_files(*roots: Path) -> list[Path]:
+    return [p for r in roots for p in ([r] if r.is_file() else r.rglob("*.py"))]
+
+
+def identifier_uses(tree: ast.AST) -> Counter[str]:
+    """Names, attributes and imported names in `tree`; prose never counts."""
+    uses: Counter[str] = Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            uses[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            uses[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            uses[n.name.rsplit(".", 1)[-1]] += 1
+    return uses
+
+
+def unused_definitions(package: list[str], users: list[str]) -> set[str]:
+    """Top-level functions and classes of the `package` sources that no
+    source in `package` + `users` uses outside their own definition."""
+    uses: Counter[str] = Counter()
+    trees = [ast.parse(src) for src in package]
+    for tree in [*trees, *map(ast.parse, users)]:
+        uses.update(identifier_uses(tree))
+    return {
+        node.name
+        for tree in trees
+        for node in tree.body
+        if isinstance(node, _DEFS)
+        and uses[node.name] == identifier_uses(node)[node.name]
+    }
+
+
+def test_rule5_detects_a_function_named_only_in_a_docstring():
+    package = [
+        "def helper():\n    return 1\n\n\n"
+        "def query():\n    \"\"\"Calls helper() once.\"\"\"\n    return 2\n"
+    ]
+    users = ["from pkg import query\nquery()\n"]
+    assert unused_definitions(package, users) == {"helper"}
+
+
 def test_package_code_is_used_outside_tests():
-    """A name counts as used when it appears as a word anywhere in these
-    files outside its own definition, prose included."""
-    files = [
-        *PKG.rglob("*.py"),
-        *(ROOT / "tools").rglob("*.py"),
+    users = _py_files(
+        ROOT / "tools",
         ROOT / "bench.py",
         ROOT / "__spark_entry__.py",
         *(p for p in (ROOT / "perfbench").rglob("*.py")
           if not p.name.startswith("test_")),
-    ]
-    mentions: Counter[str] = Counter()
-    for py in files:
-        mentions.update(re.findall(r"\w+", py.read_text()))
-    unused = set()
-    for py in PKG.rglob("*.py"):
-        lines = py.read_text().splitlines()
-        for node in ast.parse("\n".join(lines)).body:
-            if isinstance(node, _DEFS):
-                own = "\n".join(lines[node.lineno - 1 : node.end_lineno])
-                in_own = re.findall(r"\w+", own).count(node.name)
-                if mentions[node.name] == in_own:
-                    unused.add(node.name)
+    )
+    unused = unused_definitions(
+        [p.read_text() for p in PKG.rglob("*.py")],
+        [p.read_text() for p in users],
+    )
     assert unused == set(TEST_ONLY_ALLOWED), (
         "every top-level package function or class needs a caller outside "
         "tests/ (wire it into a query path or delete it); an entry of "
         "TEST_ONLY_ALLOWED that now has a caller is stale. Unused: "
         f"{sorted(unused)}"
+    )
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of each defaulted param."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (None, p.arg)
+        for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def unpassed_defaults(package: dict[str, str], callers: list[str]) -> list[str]:
+    """`file:function.param` for every defaulted parameter of a top-level
+    function in `package` ({file: source}) that no call in `package` +
+    `callers` passes, by keyword or by position.  Functions never called
+    by name, used as a value (a callback, a partial, a kernel) or called
+    with *args/**kwargs are skipped: their call sites cannot be read."""
+    passed: dict[str, set[str | int]] = {}
+    opaque: set[str] = set()
+    for src in [*package.values(), *callers]:
+        tree = ast.parse(src)
+        renamed = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.asname
+        }
+        callees = set()
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            if not isinstance(f, (ast.Name, ast.Attribute)):
+                continue
+            callees.add(id(f))
+            name = f.id if isinstance(f, ast.Name) else f.attr
+            name = renamed.get(name, name)
+            if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            ):
+                opaque.add(name)
+            seen = passed.setdefault(name, set())
+            seen.update(range(len(n.args)))
+            seen.update(k.arg for k in n.keywords)
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
+                name = n.id if isinstance(n, ast.Name) else n.attr
+                opaque.add(renamed.get(name, name))
+    found = []
+    for file, src in package.items():
+        for fn in ast.parse(src).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if fn.name in opaque or fn.name not in passed:
+                continue
+            for i, param in _defaulted(fn):
+                if param not in passed[fn.name] and i not in passed[fn.name]:
+                    found.append(f"{file}:{fn.name}.{param}")
+    return found
+
+
+def test_rule6_detects_a_default_no_call_passes():
+    package = {
+        "pkg.py": "def top(df, k=5, n=8):\n    return df\n\n\n"
+        "def run(df):\n    return top(df, 3)\n"
+    }
+    assert unpassed_defaults(package, []) == ["pkg.py:top.n"]
+
+
+def test_rule6_keeps_a_parameter_only_a_test_passes():
+    package = {"pkg.py": "def top(df, k=5):\n    return df\n\n\nx = top(1)\n"}
+    assert unpassed_defaults(package, ["def test_small():\n    top(1, k=2)\n"]) == []
+
+
+def test_every_default_has_a_caller_that_sets_it():
+    package = {
+        py.relative_to(ROOT).as_posix(): py.read_text()
+        for py in PKG.rglob("*.py")
+    }
+    callers = _py_files(
+        ROOT / "tools",
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        ROOT / "perfbench",
+        ROOT / "tests",
+    )
+    unpassed = unpassed_defaults(package, [p.read_text() for p in callers])
+    assert unpassed == [], (
+        "a defaulted parameter that no call passes is an option with one "
+        "value: read the module constant in the body and delete the "
+        f"parameter (a test passing it keeps it). Unpassed: {unpassed}"
+    )
+
+
+ENTRY = "__spark_entry__.py"
+
+
+def pinned_checkouts(entry_src: str) -> set[str]:
+    """The literal paths the entry module puts on sys.path for its
+    external loader — the one place a checkout path may be written."""
+    return {
+        a.value
+        for n in ast.walk(ast.parse(entry_src))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "insert"
+        and _chain_has_attr(n.func.value, "path")
+        for a in n.args
+        if isinstance(a, ast.Constant) and isinstance(a.value, str)
+    }
+
+
+def test_no_absolute_checkout_path():
+    pinned = pinned_checkouts((ROOT / ENTRY).read_text())
+    offenders = []
+    for py in ROOT.rglob("*.py"):
+        rel = py.relative_to(ROOT)
+        if rel.parts[0].startswith(".") or rel.as_posix() == ENTRY:
+            continue
+        for n in ast.walk(ast.parse(py.read_text())):
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and any(
+                n.value == p or n.value.startswith(p + "/") for p in pinned
+            ):
+                offenders.append(f"{rel.as_posix()}:{n.lineno}")
+    assert offenders == [], (
+        "resolve the checkout from __file__ (Path(__file__).resolve()."
+        f"parents[...]) instead of naming it; found: {offenders}"
     )

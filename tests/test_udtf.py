@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_eval_top3_with_lexicographic_ties():
     from marketstream_etl_spark.operators.udtf_ops import DocTopTerms

@@ -9,10 +9,6 @@ files for either dimension.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pyarrow.parquet as pq
 from hypothesis import given
 from hypothesis import strategies as st

@@ -24,14 +24,18 @@ import math
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 
-import __spark_entry__ as entrymod
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
 from marketstream_etl_spark.schemas import TESTDATA_TABLES
 from marketstream_etl_spark.session import get_spark
+
+import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
 

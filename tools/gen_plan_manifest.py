@@ -32,8 +32,11 @@ SHUFFLE_PARTITIONS = 4
 
 sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entry
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
 from marketstream_etl_spark.session import get_spark
+
+import __spark_entry__ as entry
 
 COUNTED = {
     "Exchange",

@@ -19,11 +19,16 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
+from marketstream_etl_spark.session import get_spark
+from tools.sweep_sf import ensure_driver_mem, shuffle_width
 
 import __spark_entry__ as entrymod
-from marketstream_etl_spark.session import get_spark
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/marketstream_sf1"
@@ -69,12 +74,13 @@ def main() -> None:
     # list that includes a >64 MB decade must not OOM the default 4g test
     # heap mid-batch (an sf10 dedup_clusters probe killed the context via
     # GCLocker allocation failure and poisoned every later row)
-    from tools.sweep_sf import ensure_driver_mem, ensure_shuffle_width
-
     for d in dirs:
         ensure_driver_mem(d)
-        ensure_shuffle_width(d)
-    spark = get_spark("probe-decade")
+    # one shared session: the largest dir's width serves every decade
+    widths = [w for w in map(shuffle_width, dirs) if w is not None]
+    spark = get_spark(
+        "probe-decade", shuffle_partitions=max(widths, default=None)
+    )
     qs = entrymod.queries()
     hdr = "".join(f"{d.rstrip('/').rsplit('/', 1)[-1]:>18}" for d in dirs)
     print(f"{'op':<22}{hdr}   (best-of-{N} s, rows; ratio vs previous)")

@@ -18,11 +18,15 @@ from __future__ import annotations
 import re
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
+from marketstream_etl_spark.session import get_spark
 
 import __spark_entry__ as entrymod
-from marketstream_etl_spark.session import get_spark
 
 DEFAULT_SF = "/root/testdata/sf0.01"
 DEFAULT_LIMIT = 20

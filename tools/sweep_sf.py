@@ -19,11 +19,15 @@ import glob
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# the package before the entry module, whose own sys.path line would
+# otherwise pick the package of another checkout
+from marketstream_etl_spark.session import get_spark
 
 import __spark_entry__ as entrymod
-from marketstream_etl_spark.session import get_spark
 from marketstream_etl_spark.streaming.ticks import EmitterCapExceeded
 
 # Above this input volume the default 4g test heap is known-insufficient
@@ -35,46 +39,42 @@ BIG_SWEEP_BYTES = 64 * 1024 * 1024
 BIG_SWEEP_MEM = "32g"  # still modest: 1 GiB per local[32] thread
 
 
-def ensure_shuffle_width(sf_dir: str) -> None:
-    """Input-scaled shuffle width for decade-scale runs (r12): fixed 32
-    reduce slots spill once per-partition shuffle blocks outgrow memory
-    — tfidf_keywords' ~300M-row postings shuffles measured 90.0 s at 32
-    vs 57.0 s at 256 warm (226 -> 84 s cold) at the sf100 decade.  Sets
-    SPARK_GRAFT_SHUFFLE_PARTITIONS (read by session.get_spark) to
-    ~input_bytes/32MB clamped to [32, 1024]; small inputs stay at the
-    harness default and an explicitly-set env is respected.  On a real
-    cluster this is the ops-owned spark.sql.shuffle.partitions sizing —
-    a global AQE initialPartitionNum fix was tried and rejected by
-    measurement (see session.py).
-
-    Multi-dir runs (probe_decade) call this once per dir BEFORE the
-    shared session is built; r12 ADVICE caught that an
-    early-return on an already-set env let the FIRST >32-width dir win,
-    so ascending dirs (sf1, sf10, sf100) ran the largest decade at the
-    smaller dir's width.  An auto-set width (marked by the _AUTO twin
-    env) is therefore raised to the max over all dirs seen; only a
-    user-set env (no marker) is respected as-is."""
-    env_width = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    auto_marked = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS_AUTO") == "1"
-    if env_width and not auto_marked:
-        return  # user-set: respect verbatim
-    nbytes = sum(
+def _input_bytes(sf_dir: str) -> int:
+    return sum(
         os.stat(p).st_size
         for pat in ("*.parquet", "*/*.parquet")
         for p in glob.glob(os.path.join(sf_dir, pat))
     )
-    width = max(32, min(1024, nbytes // (32 * 1024 * 1024)))
-    if auto_marked and env_width and env_width.isdigit():
-        width = max(width, int(env_width))
-    if width > 32:
-        os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(width)
-        os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS_AUTO"] = "1"
-        print(
-            f"sweep: input {nbytes / 1e6:.0f} MB — auto-set "
-            f"SPARK_GRAFT_SHUFFLE_PARTITIONS={width} (fixed 32 spills at "
-            "decade scale; see session.get_spark)",
-            flush=True,
-        )
+
+
+def shuffle_width(sf_dir: str) -> int | None:
+    """Input-scaled shuffle width for decade-scale runs (r12), or None
+    when the input needs no more than the default 32: fixed 32 reduce
+    slots spill once per-partition shuffle blocks outgrow memory —
+    tfidf_keywords' ~300M-row postings shuffles measured 90.0 s at 32
+    vs 57.0 s at 256 warm (226 -> 84 s cold) at the sf100 decade.  The
+    width is ~input_bytes/32MB capped at 1024 and goes to
+    get_spark(shuffle_partitions=...).  On a real cluster this is the
+    ops-owned spark.sql.shuffle.partitions sizing.
+
+    A GLOBAL fix via AQE (coalescePartitions.initialPartitionNum=1024,
+    with and without parallelismFirst=false) was tried first and
+    rejected by measurement: cached plans materialize at full initial
+    width (AQE cannot re-coalesce a cache without
+    canChangeCachedPlanOutputPartitioning) and the sf0.1 headline
+    regressed 13.9 -> 17.2/20.2 s (etl_1m sink 0.32 -> 3.2/3.3 s writing
+    hundreds of tiny files), so the width stays scoped to the tool runs
+    whose input demands it."""
+    nbytes = _input_bytes(sf_dir)
+    width = min(1024, nbytes // (32 * 1024 * 1024))
+    if width <= 32:
+        return None
+    print(
+        f"sweep: input {nbytes / 1e6:.0f} MB — shuffle width {width} "
+        "(fixed 32 spills at decade scale)",
+        flush=True,
+    )
+    return width
 
 
 def _mem_gib(spec: str) -> float:
@@ -90,11 +90,7 @@ def ensure_driver_mem(sf_dir: str) -> None:
     the session starts, instead of OOMing 40 minutes into the sweep
     (r8 VERDICT item 5).  Unset → auto-set 32g for big inputs; explicitly
     set too low → exit immediately with the posture note."""
-    nbytes = sum(
-        os.stat(p).st_size
-        for pat in ("*.parquet", "*/*.parquet")
-        for p in glob.glob(os.path.join(sf_dir, pat))
-    )
+    nbytes = _input_bytes(sf_dir)
     if nbytes <= BIG_SWEEP_BYTES:
         return
     cur = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
@@ -128,8 +124,7 @@ def main() -> int:
         del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     ensure_driver_mem(sf_dir)
-    ensure_shuffle_width(sf_dir)
-    spark = get_spark("sweep-sf")
+    spark = get_spark("sweep-sf", shuffle_partitions=shuffle_width(sf_dir))
     qs = entrymod.queries()
     fails: list[str] = []
     n_skipped = 0

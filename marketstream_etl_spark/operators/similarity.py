@@ -1998,7 +1998,7 @@ def semantic_dedup(
     the verify cosine — the strict priority order means each unordered
     near-dup pair contributes exactly one directed row, so the count is
     unchanged and half the pair cosines vanish.  sf10 probe (200K rows,
-    tools/probe_decade.py basis): 51 s (r9) -> 3.6 s, with the dominated
+    count()-forced best-of-3): 51 s (r9) -> 3.6 s, with the dominated
     census (188,940 evicted rows, 3.3M dominating pairs) unchanged;
     still ~rows^1.5 in the verify term but with the constant an IVF
     sweep can afford.

@@ -8,10 +8,14 @@ partitions, Arrow) are set so the same plans survive a 1000-executor run.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the checkout this module belongs to: Python workers import the package
+# from here, not from whatever directory the process started in
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def get_spark(
@@ -27,6 +31,8 @@ def get_spark(
     - Arrow on: every Pandas-UDF boundary is Arrow-batched.
     - UTC session timezone: deterministic oracle comparison (DuckDB is
       UTC-naive).
+    - Workers' PYTHONPATH holds this checkout, so Python UDFs and
+      ``mapInPandas`` kernels import the driver's package from any cwd.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -51,6 +57,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # 16 MB scan splits (default 128 MB): the single-FILE testdata
         # layout otherwise maps a whole 100+ MB table to ONE scan task at

@@ -66,8 +66,12 @@ def test_bench_stops_jvm_before_headline_print():
 
 
 def test_bench_disables_console_progress():
-    src = BENCH.read_text()
-    assert '"spark.ui.showConsoleProgress": "false"' in src
+    # a progress bar would swallow the line printed next to it: the bench
+    # headline, or the tools' per-query result lines
+    tools = BENCH.parent / "tools"
+    for path in (BENCH, tools / "check_oracle.py", tools / "sweep_sf.py"):
+        src = path.read_text()
+        assert '"spark.ui.showConsoleProgress": "false"' in src, path.name
 
 
 def test_canary_missing_fixture_returns_none(monkeypatch):

@@ -46,23 +46,63 @@ def test_register_returns_fn_and_rejects_a_duplicate_name(monkeypatch):
     assert registry.ORACLES == {"q": "SELECT 1"}
 
 
-def test_committed_query_index_is_current():
-    # Rendered in a fresh interpreter, as the driver imports the entry
-    # module: past GATE, queries() follows registration order, and that
-    # depends on which modules this process imported first.
-    root = os.path.dirname(os.path.abspath(entrymod.__file__))
-    render = (
-        "import sys; sys.path.insert(0, 'tools'); "
-        "import gen_query_index as g; sys.stdout.write(g.render())"
-    )
-    rendered = subprocess.run(
-        [sys.executable, "-c", render],
-        cwd=root,
+def _run(code: str, cwd: str) -> str:
+    return subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=cwd,
         capture_output=True,
         text=True,
         check=True,
         timeout=300,
     ).stdout
+
+
+def test_query_order_does_not_depend_on_import_order():
+    # importing a registering module first registers its queries first;
+    # queries() lists them by MODULES all the same
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    listing = (
+        f"import sys; sys.path.insert(0, {root!r}); {{}}"
+        "import __spark_entry__ as e; print(list(e.queries()))"
+    )
+    clean = _run(listing.format(""), root)
+    ticks_first = "import marketstream_etl_spark.streaming.ticks; "
+    assert _run(listing.format(ticks_first), root) == clean
+    assert clean.strip() == str(list(entrymod.queries()))
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    # the Python workers start in the process cwd, which need not hold
+    # the package; get_spark hands them this checkout's root
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    where = f"""
+import sys
+sys.path.insert(0, {root!r})
+from marketstream_etl_spark.session import get_spark
+
+def where(batches):
+    import pandas as pd
+
+    import marketstream_etl_spark
+    for b in batches:
+        yield pd.DataFrame({{"path": [marketstream_etl_spark.__file__] * len(b)}})
+
+spark = get_spark("worker-path", master="local[1]")
+print(spark.range(1).mapInPandas(where, "path string").first().path)
+"""
+    out = _run(where, str(tmp_path)).strip().splitlines()[-1]
+    assert out == os.path.join(root, "marketstream_etl_spark", "__init__.py")
+
+
+def test_committed_query_index_is_current():
+    # Rendered in a fresh interpreter, as the driver imports the entry
+    # module.
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    render = (
+        "import sys; sys.path.insert(0, 'tools'); "
+        "import gen_query_index as g; sys.stdout.write(g.render())"
+    )
+    rendered = _run(render, root)
     with open(os.path.join(root, "docs", "QUERY_INDEX.md")) as f:
         committed = f.read()
     assert committed == rendered, (

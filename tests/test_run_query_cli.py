@@ -1,7 +1,8 @@
 """tools/run_query.py argument handling (r10 ADVICE fixes): bad --limit
 values must produce a friendly usage error (exit 2) BEFORE any Spark
 session is built, and the single-materialization contract is locked by
-reading the source (no .count() after .show())."""
+reading the source (no .count() after .show()).  check_oracle.py rejects
+an unknown query name the same way."""
 
 from __future__ import annotations
 
@@ -51,6 +52,14 @@ def test_unknown_query_suggests_close_names(capsys):
     assert _main_rc(["symbol_leaderboar"]) == 2
     out = capsys.readouterr().out
     assert "unknown query" in out and "symbol_leaderboard" in out
+
+
+def test_check_oracle_rejects_an_unknown_query(capsys, monkeypatch):
+    import tools.check_oracle as co
+
+    monkeypatch.setattr(sys, "argv", ["check_oracle.py", "symbol_leaderboar"])
+    assert co.main() == 2
+    assert "unknown queries: ['symbol_leaderboar']" in capsys.readouterr().out
 
 
 def test_no_recount_after_show():

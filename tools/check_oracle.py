@@ -4,6 +4,8 @@ shape, and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [--vanilla] [--json OUT] [query ...]
 
+A name that is not a registered query exits 2 before anything runs.
+
 --json writes a machine-readable summary (the CORRECTNESS_LOCAL.json
 artifact committed per round) after the run.
 
@@ -61,11 +63,6 @@ def table_hash(rows, colnames):
 
 
 def main() -> int:
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
     if vanilla:
@@ -75,17 +72,29 @@ def main() -> int:
         i = args.index("--json")
         json_out = args[i + 1]
         del args[i : i + 2]
+    qs = entrymod.queries()
+    only = set(args)
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+        )
+    # result lines start a line only without the console progress bar
+    quiet = {"spark.ui.showConsoleProgress": "false"}
     if vanilla:
         # Plain session, no session.py confs: replicates the external driver.
         from pyspark.sql import SparkSession
 
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
+        builder = SparkSession.builder.master(f"local[{cpus}]")
+        spark = builder.config(map=quiet).getOrCreate()
     else:
-        spark = get_spark("oracle-check")
-    qs = entrymod.queries()
+        spark = get_spark("oracle-check", extra_conf=quiet)
     oracles = entrymod.oracle_sql()
-    only = set(args)
     failures = 0
     results: dict[str, dict] = {}
     for name, fn in qs.items():

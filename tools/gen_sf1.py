@@ -1,5 +1,5 @@
-"""Synthesize an 'sf1' dataset — 10x sf0.1 — for the second-decade scale
-probe (tools/probe_decade.py): 1M events, 50K documents, 20K embeddings,
+"""Synthesize an 'sf1' dataset — 10x sf0.1 — for the decade tool
+(tools/sweep_sf.py DIR DIR): 1M events, 50K documents, 20K embeddings,
 schema-identical to the driver testdata so every registered query runs
 on it unmodified via its sf_dir parameter.
 
@@ -75,9 +75,9 @@ def write_single(df, path: str) -> None:
 def main() -> None:
     # gen_sf1.py [out_dir] [--scale N] [--skip-tpch]
     # --scale 10 --skip-tpch produces the 'sf10' third-decade probe set
-    # (events/documents/embeddings only — the five headline probes in
-    # tools/probe_decade.py need no TPC-H tables, and skipping the 60M-row
-    # lineitem keeps generation to ~2 min).
+    # (events/documents/embeddings only — the headline decade rows
+    # `tools/sweep_sf.py --ops` times need no TPC-H tables, and skipping
+    # the 60M-row lineitem keeps generation to ~2 min).
     args = sys.argv[1:]
     scale = 1
     if "--scale" in args:

@@ -1,16 +1,28 @@
-"""Execute EVERY registered query end-to-end at a given scale factor and
-report failures — the scale-abort sweep.
+"""The decade tool: run registered queries at one or more scale factors
+and report each query's best wall time, its row count and, from the
+second dir on, the ratio to the previous dir.
 
-The correctness gate runs at sf0.01; this sweep exists to catch failures
-that only manifest at larger data (its first run caught a real one: an
-ANSI DIVIDE_BY_ZERO from a parser-default 0.0 close that no sf0.01 bar
-ever hits).  Run after operator changes and before a round closes:
+    python tools/sweep_sf.py [--ops a,b,...] [DIR ...]
 
-    python tools/sweep_sf.py                      # sf0.1 (10x the gate)
-    python tools/sweep_sf.py /root/testdata/sf0.01
+Defaults: every registered query, at /root/testdata/sf0.1.  `--ops`
+names the queries and times each best of 3 (the first run warms codegen);
+the whole registry runs once per query.  A failure prints FAIL, the
+socket emitter's by-design cap prints SKIP, the run goes on, and the exit
+code is 1 on any FAIL.  The correctness gate runs at sf0.01; the sweep
+catches failures that only show at larger data (its first run caught an
+ANSI DIVIDE_BY_ZERO from a parser-default 0.0 close no sf0.01 bar hits).
 
-Rows are counted (forces full materialization); values are NOT compared
-— that is check_oracle.py's job at the gate SF.
+    python tools/sweep_sf.py                      # scale-abort sweep, sf0.1
+    python tools/gen_sf1.py                       # once: the 10x dir
+    python tools/sweep_sf.py --ops indicators,ohlc_bars,ann_ivf \
+        /root/testdata/sf0.1 /tmp/marketstream_sf1
+    python tools/gen_sf1.py /tmp/marketstream_sf10 --scale 10 --skip-tpch
+
+Every run forces the query one way: an observation counts the rows while
+a noop write computes every output column in the same action (count() lets
+Catalyst prune a column nothing aggregates, so a failing or expensive
+output column read "ok" and cheap).  Values are NOT compared — that is
+check_oracle.py's job at the gate SF.
 """
 
 from __future__ import annotations
@@ -23,12 +35,18 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 # the package before the entry module, whose own sys.path line would
 # otherwise pick the package of another checkout
 from marketstream_etl_spark.session import get_spark
+from marketstream_etl_spark.streaming.ticks import EmitterCapExceeded
 
 import __spark_entry__ as entrymod
-from marketstream_etl_spark.streaming.ticks import EmitterCapExceeded
+
+DEFAULT_DIR = "/root/testdata/sf0.1"
+BEST_OF = 3
 
 # Above this input volume the default 4g test heap is known-insufficient
 # (sf1's containment_pairs shingle explode OOMs mid-sweep: local[32]
@@ -114,41 +132,73 @@ def ensure_driver_mem(sf_dir: str) -> None:
         raise SystemExit(2)
 
 
+def forced_rows(spark, fn, sf_dir: str) -> int:
+    """Run one query to completion, every output column computed, and
+    return its row count, counted in the same action."""
+    seen = Observation()
+    df = fn(spark, sf_dir).observe(seen, F.count(F.lit(1)).alias("rows"))
+    df.write.format("noop").mode("overwrite").save()
+    return seen.get["rows"]
+
+
+def _line(e: Exception) -> str:
+    return " ".join(str(e).split())[:200]
+
+
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    skips: dict[str, str] = {}
-    while "--skip" in args:
-        i = args.index("--skip")
-        name, reason = args[i + 1].split("=", 1)
-        skips[name] = reason
+    args = sys.argv[1:]
+    ops = None
+    if "--ops" in args:
+        i = args.index("--ops")
+        ops = args[i + 1].split(",")
         del args[i : i + 2]
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
-    ensure_driver_mem(sf_dir)
-    spark = get_spark("sweep-sf", shuffle_partitions=shuffle_width(sf_dir))
+    dirs = args or [DEFAULT_DIR]
     qs = entrymod.queries()
+    unknown = [name for name in ops or () if name not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+    names, runs = (ops, BEST_OF) if ops else (list(qs), 1)
+    # fail fast on the heap before the session starts; one shared session
+    # takes the widest dir's shuffle width
+    for d in dirs:
+        ensure_driver_mem(d)
+    widths = [w for w in map(shuffle_width, dirs) if w is not None]
+    spark = get_spark(
+        "sweep-sf",
+        shuffle_partitions=max(widths, default=None),
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    pad = max(map(len, names)) + 2
+    hdr = "".join(f"{Path(d).name:>27}" for d in dirs)
+    print(f"{'query':<{pad}}{hdr}   (best of {runs}: s, rows, x previous)")
     fails: list[str] = []
-    n_skipped = 0
-    for name, fn in qs.items():
-        if name in skips:
-            # no silent caps: every skipped query is logged with its reason
-            n_skipped += 1
-            print(f"SKIP {name}: {skips[name]}", flush=True)
-            continue
-        t0 = time.time()
+    skips: list[str] = []
+    for name in names:
+        cells, prev = "", None
         try:
-            n = fn(spark, sf_dir).count()
-            print(f"ok   {name} ({time.time() - t0:.1f}s, {n} rows)", flush=True)
+            for d in dirs:
+                times = []
+                for _ in range(runs):
+                    t0 = time.perf_counter()
+                    rows = forced_rows(spark, qs[name], d)
+                    times.append(time.perf_counter() - t0)
+                best = min(times)
+                ratio = "" if prev is None else f"x{best / prev:.1f}"
+                cells += f"{best:>9.2f}s {rows:>9}{ratio:>7}"
+                prev = best
         except EmitterCapExceeded as e:
             # by-design guard, not an operator failure: the socket-test
             # emitter refuses driver-side buffers past its documented cap
-            n_skipped += 1
-            print(f"SKIP {name}: {str(e)[:200]}", flush=True)
+            skips.append(name)
+            cells += f"  SKIP {_line(e)}"
         except Exception as e:  # noqa: BLE001 — report and continue
             fails.append(name)
-            print(f"FAIL {name}: {type(e).__name__} {str(e)[:200]}", flush=True)
+            cells += f"  FAIL {type(e).__name__}: {_line(e)}"
+        print(f"{name:<{pad}}{cells}", flush=True)
     print(
-        f"sweep done: {len(qs) - len(fails) - n_skipped}/{len(qs)} ok"
-        f" ({n_skipped} skipped, reasons above); fails: {fails}"
+        f"sweep done: {len(names) - len(fails) - len(skips)}/{len(names)} ok, "
+        f"{len(skips)} skipped {skips}, {len(fails)} failed {fails}"
     )
     return 1 if fails else 0
 

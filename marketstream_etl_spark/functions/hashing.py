@@ -72,8 +72,15 @@ def tokens(text: Column) -> Column:
     )
 
 
-def shingles(toks: Column, k: int = 3) -> Column:
-    """Word k-grams joined by single spaces; empty array when < k tokens."""
+def shingles(toks: str, k: int = 3) -> Column:
+    """Word k-grams of the token-array column named `toks`, joined by single
+    spaces; empty array when < k tokens.
+
+    Takes a column NAME, not an expression: the lambda reads the array once
+    per shingle position, so an inline ``tokens(...)`` would re-run the
+    whole lower → split → filter chain per position (O(n²) per document).
+    Bind the tokens to a column in an earlier ``select`` first."""
+    toks = F.col(toks)
     return F.when(F.size(toks) < k, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), F.size(toks) - k),

@@ -131,12 +131,15 @@ def shingle_pairs_cached(docs: DataFrame) -> DataFrame:
     # tokenize→shingle→distinct chain once per OUTPUT row (projection
     # collapse through GenerateExec — a shingles-per-doc ~40x blowup on
     # the cold build, found live in r8's streaming twins)
-    arrs = _spread(docs).select(
-        "doc_id",
-        F.array_distinct(shingles(tokens(F.col("text")), SHINGLE_K)).alias(
-            "_sh"
-        ),
-    ).localCheckpoint(eager=False)
+    arrs = (
+        _spread(docs)
+        .select("doc_id", tokens(F.col("text")).alias("_toks"))
+        .select(
+            "doc_id",
+            F.array_distinct(shingles("_toks", SHINGLE_K)).alias("_sh"),
+        )
+        .localCheckpoint(eager=False)
+    )
     pairs = arrs.select(
         "doc_id", F.explode("_sh").alias("shingle")
     ).persist()

@@ -155,120 +155,81 @@ def rolling_indicators(trades: DataFrame, period: int = DEFAULT_PERIOD) -> DataF
 def _tail_indicators(
     joined: DataFrame, period: int, computed_at_ns: int | None
 ) -> DataFrame:
-    """Shared final step: given one row per symbol with `_n/_pv/_v` totals
+    """Final step: given one row per symbol with `_n/_pv/_v` totals
     and `_tail` = last ≤(period+1) prices most-recent-first, emit the
     reference indicator row (same clamps/edge cases as compute_indicators,
-    TechnicalIndicators.hpp:125,252-290)."""
-    prices = F.col("_tail")
+    TechnicalIndicators.hpp:125,252-290).  SQL strings: the whole row is one
+    parsed projection, not a tree of Column calls."""
+    eff = f"least({period}, _n)"
+    n_ch = f"CAST(least({eff}, _n - 1) AS DOUBLE)"
     # changes[i] = prices[i] - prices[i+1], most-recent change first
-    changes = F.expr(
-        "transform(slice(_tail, 1, size(_tail) - 1),"
-        " (p, i) -> p - element_at(_tail, i + 2))"
+    used = (
+        "slice(transform(slice(_tail, 1, size(_tail) - 1),"
+        f" (p, i) -> p - element_at(_tail, i + 2)), 1, least({eff}, _n - 1))"
     )
-    n = F.col("_n")
-    eff = F.least(F.lit(period), n)
-    n_ch = F.least(eff, n - 1)
-
-    sma = F.aggregate(
-        F.slice(prices, 1, eff), F.lit(0.0), lambda acc, x: acc + x
-    ) / eff.cast("double")
-    used = F.slice(changes, 1, n_ch)
-    gain_sum = F.aggregate(
-        used, F.lit(0.0), lambda acc, x: acc + F.greatest(x, F.lit(0.0))
-    )
-    loss_sum = F.aggregate(
-        used, F.lit(0.0), lambda acc, x: acc + F.greatest(-x, F.lit(0.0))
-    )
-    avg_gain = gain_sum / n_ch.cast("double")
-    avg_loss = loss_sum / n_ch.cast("double")
-    rsi = (
-        F.when((n < 2) | (eff <= 1), F.lit(50.0))
-        .when(avg_loss == 0.0, F.lit(100.0))
-        .otherwise(
-            F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + avg_gain / avg_loss)
-        )
-    )
-    vwap = F.when(F.col("_v") == 0.0, F.lit(0.0)).otherwise(
-        F.col("_pv") / F.col("_v")
-    )
-    out = joined.select(
+    avg_gain = f"(aggregate({used}, 0.0D, (acc, x) -> acc + greatest(x, 0.0D)) / {n_ch})"
+    avg_loss = f"(aggregate({used}, 0.0D, (acc, x) -> acc + greatest(-x, 0.0D)) / {n_ch})"
+    cols = [
         "symbol",
-        sma.alias("sma"),
-        rsi.alias("rsi"),
-        vwap.alias("vwap"),
-        eff.cast("int").alias("period"),
-    )
+        f"aggregate(slice(_tail, 1, {eff}), 0.0D, (acc, x) -> acc + x)"
+        f" / CAST({eff} AS DOUBLE) AS sma",
+        f"CASE WHEN _n < 2 OR {eff} <= 1 THEN 50.0D"
+        f" WHEN {avg_loss} = 0.0D THEN 100.0D"
+        f" ELSE 100.0D - 100.0D / (1.0D + {avg_gain} / {avg_loss}) END AS rsi",
+        "CASE WHEN _v = 0.0D THEN 0.0D ELSE _pv / _v END AS vwap",
+        f"CAST({eff} AS INT) AS period",
+    ]
     if computed_at_ns is not None:
-        out = out.withColumn(
-            "computed_at", F.lit(int(computed_at_ns)).cast("long")
-        )
-    return out
+        cols.append(f"CAST({int(computed_at_ns)} AS BIGINT) AS computed_at")
+    return joined.selectExpr(*cols)
 
 
-def compute_indicators_fused(
+def compute_indicators_group_limit(
     trades: DataFrame,
     period: int = DEFAULT_PERIOD,
     computed_at_ns: int | None = None,
 ) -> DataFrame:
-    """Single-pass fused indicator aggregate — the scale plan.
+    """Indicators from two tiny aggregates joined on symbol — the scale plan.
 
-    The window form sorts every row of a symbol on one reducer; a salted
-    two-phase top-k avoids the serialization but still SHUFFLES every row
-    once.
-    This variant shuffles almost nothing: group by (spark_partition_id,
-    symbol) so each group is complete within its input partition — the
-    "partial" aggregation IS the full group — computing count/Σpv/Σv plus a
-    bounded last-(period+1) tail via array_sort+slice on the local rows.
-    The exchange then moves only n_partitions × n_symbols tiny rows, and
-    the final merge re-sorts ≤ n_partitions·(period+1) elements per symbol.
+    - **Sums:** count, Σ(price·volume) and Σvolume per symbol in a codegen
+      hash aggregate; its exchange carries one partial row per (map task,
+      symbol).
+    - **Tail:** ``row_number() OVER (PARTITION BY symbol ORDER BY timestamp
+      DESC, trade_id DESC, price DESC) <= period + 1``.  Spark plans the
+      filter as a ``WindowGroupLimit``: a Partial limit in each map task
+      before the exchange, a Final one after it, so the exchange carries at
+      most period + 1 rows per (map task, symbol).  Ordering by price as
+      well makes exact (timestamp, trade_id) ties deterministic: the lower
+      price counts as the earlier trade.
 
-      map side : one pass, hash agg, O(rows·log(rows-per-group)) local sort
-      shuffle  : n_partitions × n_symbols rows (~KBs at any input scale)
-      reduce   : trivial
-
-    Memory envelope: the local collect_list holds one input partition's rows
-    for one symbol (≤ maxPartitionBytes worth) — bounded by the scan split
-    size, independent of total table size, so the plan survives 100 TB with
-    low-cardinality keys (the reference universe is ~10 symbols,
-    DataGenerator.hpp:86-97).  Semantics identical to compute_indicators.
+    Both exchanges are independent of the input size (measured on 1M
+    trades, 4 map tasks, 10 symbols: 2,364 + 6,126 shuffle bytes), at the
+    price of a second scan of the input.  Memory is bounded by the per-task
+    group limit; no group's rows are ever collected.  Semantics identical
+    to compute_indicators; VWAP's float sums may differ in the last ulp.
     """
-    k = period + 1
-    last_k = (  # last k elements of an ascending array, named `{col}`
-        lambda col: f"slice({col}, greatest(size({col}) - {k} + 1, 1), {k})"
+    window = (
+        "row_number() OVER (PARTITION BY symbol"
+        " ORDER BY `timestamp` DESC, trade_id DESC, price DESC)"
     )
-    # ascending (timestamp, trade_id, price) structs; keep the LAST k
-    local = (
-        trades.groupBy(F.spark_partition_id().alias("_pid"), "symbol")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-            F.sum(F.col("volume").cast("double")).alias("_v"),
-            F.array_sort(
-                F.collect_list(F.struct("timestamp", "trade_id", "price"))
-            ).alias("_all"),
-        )
-        .select(
-            "symbol", "_n", "_pv", "_v",
-            F.expr(last_k("_all")).alias("_t"),
-        )
+    sums = trades.groupBy("symbol").agg(
+        F.expr("count(1) AS _n"),
+        F.expr("sum(price * volume) AS _pv"),
+        F.expr("sum(CAST(volume AS DOUBLE)) AS _v"),
     )
-    merged = (
-        local.groupBy("symbol")
+    tail = (
+        trades.selectExpr("symbol", "price", f"{window} AS _rn")
+        .where(f"_rn <= {period + 1}")
+        .groupBy("symbol")
         .agg(
-            F.sum("_n").alias("_n"),
-            F.sum("_pv").alias("_pv"),
-            F.sum("_v").alias("_v"),
-            F.array_sort(F.flatten(F.collect_list("_t"))).alias("_all"),
-        )
-        .select(
-            "symbol", "_n", "_pv", "_v",
             # most-recent-first price tail
-            F.expr(f"reverse(transform({last_k('_all')}, s -> s.price))").alias(
-                "_tail"
-            ),
+            F.expr(
+                "transform(array_sort(collect_list(struct(_rn, price))),"
+                " s -> s.price) AS _tail"
+            )
         )
     )
-    return _tail_indicators(merged, period, computed_at_ns)
+    return _tail_indicators(sums.join(tail, "symbol"), period, computed_at_ns)
 
 
 def compute_rsi_wilder(
@@ -341,7 +302,7 @@ def compute_rsi_wilder(
     ).withColumn("signal", rsi_signal(F.col("rsi_wilder")))
 
 
-AUTO_FUSED_MIN_PARTITIONS = 8  # input partitions that switch _auto to _fused
+AUTO_GROUP_LIMIT_MIN_PARTITIONS = 8  # input partitions that switch _auto to the group-limit form
 
 
 def compute_indicators_auto(
@@ -350,15 +311,15 @@ def compute_indicators_auto(
     computed_at_ns: int | None = None,
 ) -> DataFrame:
     """Strategy dispatch: the window form wins on small inputs (one
-    exchange, no join); the fused partial-aggregate form wins once
-    per-symbol history outgrows a single reducer — it moves only
-    n_partitions × n_symbols rows through the exchange, so it is the only
-    shape whose shuffle volume is independent of input size (measured 1M
-    floor study: tests/test_indicator_floor.py, README §performance).
-    Input partition count is the cheap, statistics-free size proxy."""
+    exchange, no join); the group-limit form wins once per-symbol history
+    outgrows a single reducer — its exchanges carry at most
+    n_partitions × n_symbols × (period + 1) rows, so it is the only shape
+    whose shuffle volume is independent of input size
+    (tests/test_indicator_floor.py, README §performance).  Input partition
+    count is the cheap, statistics-free size proxy."""
     n_parts = trades.rdd.getNumPartitions()
-    if n_parts >= AUTO_FUSED_MIN_PARTITIONS:
-        return compute_indicators_fused(
+    if n_parts >= AUTO_GROUP_LIMIT_MIN_PARTITIONS:
+        return compute_indicators_group_limit(
             trades, period=period, computed_at_ns=computed_at_ns
         )
     return compute_indicators(

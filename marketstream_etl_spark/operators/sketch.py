@@ -27,6 +27,7 @@ from marketstream_etl_spark.functions.hashing import (
     h32_sql,
     h60,
     h60_sql,
+    shingles,
     shingles_sql,
     tokens,
     tokens_sql,
@@ -674,6 +675,7 @@ def streaming_hll_cardinality(spark, sf_dir: str) -> DataFrame:
     The exact-count audit side is batch-built from the same table (the
     streamed sketch is the product; the exact side exists to verify it,
     as in the batch op)."""
+    from marketstream_etl_spark.operators.dedup import SHINGLE_K
     from marketstream_etl_spark.sources.tables import load_table
     from marketstream_etl_spark.streaming.docs import stream_documents
     from marketstream_etl_spark.streaming.replay import accumulate_stream
@@ -691,12 +693,15 @@ def streaming_hll_cardinality(spark, sf_dir: str) -> DataFrame:
         # expression re-evaluates the whole tokenize→shingle→distinct
         # chain once per OUTPUT row (projection collapse through
         # GenerateExec — same fix as streaming_contamination, r8).
-        arrs = spread(batch).select(
-            "source",
-            F.array_distinct(
-                tokens_to_shingles_stream(F.col("text"))
-            ).alias("_sh"),
-        ).localCheckpoint(eager=False)
+        arrs = (
+            spread(batch)
+            .select("source", tokens(F.col("text")).alias("_toks"))
+            .select(
+                "source",
+                F.array_distinct(shingles("_toks", SHINGLE_K)).alias("_sh"),
+            )
+            .localCheckpoint(eager=False)
+        )
         keyed = arrs.select(
             "source", F.explode("_sh").alias("shingle")
         ).select("source", h60(F.col("shingle")).alias("h"))
@@ -723,15 +728,6 @@ def streaming_hll_cardinality(spark, sf_dir: str) -> DataFrame:
 
 
 register("streaming_hll", streaming_hll_cardinality, HLL_CARDINALITY_SQL)
-
-
-def tokens_to_shingles_stream(text_col: F.Column) -> F.Column:
-    """Shingle array for the streaming path (same tokenization + k as the
-    dedup family's shared batch frame)."""
-    from marketstream_etl_spark.functions.hashing import shingles, tokens
-    from marketstream_etl_spark.operators.dedup import SHINGLE_K
-
-    return shingles(tokens(text_col), SHINGLE_K)
 
 
 # ---------------------------------------------------------------------------

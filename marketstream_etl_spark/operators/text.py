@@ -267,18 +267,20 @@ def pii_redaction_sql() -> str:
 REPETITION_N = 3  # word n-gram length of the repetition rule
 
 
-def repetition_ratio(toks: Column) -> Column:
+def repetition_ratio(toks: str) -> Column:
     """Fraction of duplicate n-gram occurrences inside one document:
-    1 − distinct_ngrams/total_ngrams.  High values flag boilerplate /
-    degenerate text that quality filters drop before training.  Pure array
-    HOFs — computed inside the scan stage, no shuffle."""
+    1 − distinct_ngrams/total_ngrams, over the token-array column named
+    `toks` (see `shingles`).  High values flag boilerplate / degenerate
+    text that quality filters drop before training.  Pure array HOFs —
+    computed inside the scan stage, no shuffle.  The grams are built once:
+    a document of n ≥ N tokens has n − N + 1 of them."""
     from marketstream_etl_spark.functions.hashing import shingles
 
-    grams = shingles(toks, REPETITION_N)
-    return F.when(F.size(grams) <= 0, F.lit(0.0)).otherwise(
+    n = F.size(toks)
+    return F.when(n < REPETITION_N, F.lit(0.0)).otherwise(
         1.0
-        - F.size(F.array_distinct(grams)).cast("double")
-        / F.size(grams).cast("double")
+        - F.size(F.array_distinct(shingles(toks, REPETITION_N))).cast("double")
+        / (n - (REPETITION_N - 1)).cast("double")
     )
 
 

@@ -5,7 +5,7 @@ Six conjunctive predicates, each with a structured failure reason; a batch
 is split into clean rows and rejects carrying the FIRST failing reason (the
 reference short-circuits in rule order).
 
-Spark-first: the whole rule chain is one `when`-ladder column, so Catalyst
+Spark-first: the whole rule chain is one SQL `CASE` column, so Catalyst
 codegens it into the scan stage — no UDF, no extra pass, and the reject
 split is two filters over the same cached plan.  At 100 TB this is a pure
 map-side operation with zero shuffle.
@@ -13,7 +13,7 @@ map-side operation with zero shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Reason strings mirror TradeValidator.hpp's messages (abbreviated, stable).
@@ -26,40 +26,35 @@ R_TIMESTAMP = "invalid timestamp"
 
 PRICE_MAX = 1_000_000.0
 
+# (SQL predicate, failure reason) in reference evaluation order
+# (TradeValidator.hpp:109-178).
+RULES = (
+    ("symbol RLIKE '^[A-Z]{1,10}$'", R_SYMBOL),  # V1
+    (f"price > 0 AND price < {PRICE_MAX!r}D", R_PRICE),  # V2
+    ("volume > 0", R_VOLUME),  # V3
+    ("side IN ('B', 'S', 'N')", R_SIDE),  # V4
+    ("`type` IN ('M', 'L', 'I')", R_TYPE),  # V5
+    ("`timestamp` > 0", R_TIMESTAMP),  # V6
+)
 
-def rule_columns() -> list[tuple[Column, str]]:
-    """(predicate, failure-reason) pairs in reference evaluation order
-    (TradeValidator.hpp:109-178)."""
-    return [
-        (F.col("symbol").rlike("^[A-Z]{1,10}$"), R_SYMBOL),  # V1
-        ((F.col("price") > 0) & (F.col("price") < PRICE_MAX), R_PRICE),  # V2
-        (F.col("volume") > 0, R_VOLUME),  # V3
-        (F.col("side").isin("B", "S", "N"), R_SIDE),  # V4
-        (F.col("type").isin("M", "L", "I"), R_TYPE),  # V5
-        (F.col("timestamp") > 0, R_TIMESTAMP),  # V6
-    ]
-
-
-def reject_reason() -> Column:
-    """First-failing-rule reason, NULL when the row is valid.
-
-    Nulls in the underlying column must fail the rule (the reference's
-    defaults-then-reject parser never yields nulls, but the Spark engine can
-    see them from permissive sources), so each predicate is wrapped in
-    coalesce(pred, false).
-    """
-    reason = F.lit(None).cast("string")
-    # Build the ladder in reverse so the FIRST rule wins.
-    for pred, why in reversed(rule_columns()):
-        reason = F.when(~F.coalesce(pred, F.lit(False)), F.lit(why)).otherwise(reason)
-    return reason
+# First-failing-rule reason, NULL when the row is valid: the CASE stops at
+# the first rule that fails.  Nulls in the underlying column must fail the
+# rule (the reference's defaults-then-reject parser never yields nulls, but
+# the Spark engine can see them from permissive sources), so each predicate
+# is wrapped in coalesce(pred, false).
+REJECT_REASON = (
+    "CASE "
+    + " ".join(f"WHEN NOT coalesce({pred}, false) THEN '{why}'" for pred, why in RULES)
+    + " END"
+)
 
 
 def with_validation(trades: DataFrame) -> DataFrame:
     """Append `reject_reason` (string, NULL=valid) and `is_valid` columns."""
-    reason = reject_reason()
-    return trades.withColumn("reject_reason", reason).withColumn(
-        "is_valid", reason.isNull()
+    return trades.selectExpr(
+        "*",
+        f"{REJECT_REASON} AS reject_reason",
+        f"({REJECT_REASON}) IS NULL AS is_valid",
     )
 
 

@@ -78,10 +78,11 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     # checkpoint barrier before posexplode — same GenerateExec projection
     # collapse as the dedup family's shingle pairs (r8): without it the
     # gram-sequence chain re-evaluates once per emitted gram
-    arrs = docs.select(
-        "doc_id",
-        shingles(tokens(F.col("text")), SHINGLE_K).alias("_grams"),
-    ).localCheckpoint(eager=False)
+    arrs = (
+        docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
+        .select("doc_id", shingles("_toks", SHINGLE_K).alias("_grams"))
+        .localCheckpoint(eager=False)
+    )
     grams = arrs.select(
         "doc_id",
         F.posexplode("_grams").alias("pos", "gram"),

@@ -11,9 +11,14 @@ and no cache:
    on that same job counts valid and rejected rows, so there is no separate
    count job and the CSV is parsed exactly once;
 2. the indicators are computed from the trades parquet just written (the
-   fused partial-aggregate form: its exchange moves only
-   n_partitions × n_symbols rows) and written with a second Observation
-   that counts the indicator rows.
+   group-limit form: a codegen sum aggregate joined to a map-side
+   top-(period+1) tail per symbol, so its two exchanges carry KBs at any
+   input size) and written with a second Observation that counts the
+   indicator rows.
+
+Each plan is built from SQL expression strings (`selectExpr`, `F.expr`):
+the driver-side cost of building it is a few hundred py4j calls, not
+thousands of Column-tree calls.
 
 `run_pipeline` returns per-stage timings in the shape of the reference's
 benchmark report (Benchmarker.hpp:36-71).  Spark stages are lazy, so the
@@ -29,10 +34,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.operators.indicators import compute_indicators_fused
+from marketstream_etl_spark.operators.indicators import compute_indicators_group_limit
 from marketstream_etl_spark.operators.validation import with_validation
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
-from marketstream_etl_spark.sources.sinks import write_parquet
+from marketstream_etl_spark.sources.sinks import write_parquet, write_trades_parquet
 
 
 @dataclass
@@ -86,13 +91,13 @@ def run_pipeline(
         with_validation(read_trades_csv(spark, csv_path))
         .observe(
             validation,
-            F.sum(F.col("is_valid").cast("long")).alias("n_valid"),
-            F.sum((~F.col("is_valid")).cast("long")).alias("n_rejected"),
+            F.expr("sum(CAST(is_valid AS BIGINT)) AS n_valid"),
+            F.expr("sum(CAST(NOT is_valid AS BIGINT)) AS n_rejected"),
         )
-        .filter(F.col("is_valid"))
+        .where("is_valid")
         .drop("reject_reason", "is_valid")
     )
-    write_parquet(valid, trades_path)
+    write_trades_parquet(valid, trades_path)
     counts = validation.get
     report.n_valid = counts["n_valid"] or 0  # NULL sums on an empty CSV
     report.n_rejected = counts["n_rejected"] or 0
@@ -101,16 +106,16 @@ def run_pipeline(
 
     t0 = time.perf_counter()
     # The known schema skips the footer-inference job on read-back.  The
-    # fused form is called directly: the read-back has few partitions, where
-    # compute_indicators_auto would pick the slower window form.
-    indicators = compute_indicators_fused(
+    # group-limit form is called directly: the read-back has few partitions,
+    # where compute_indicators_auto would pick the slower window form.
+    indicators = compute_indicators_group_limit(
         spark.read.schema(valid.schema).parquet(trades_path),
         period=period,
         computed_at_ns=computed_at_ns,
     )
     written = Observation("pipeline_indicators")
     write_parquet(
-        indicators.observe(written, F.count(F.lit(1)).alias("n_symbols")),
+        indicators.observe(written, F.expr("count(1) AS n_symbols")),
         f"{out_dir}/technical_indicators",
     )
     report.n_symbols = written.get["n_symbols"]

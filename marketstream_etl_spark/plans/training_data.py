@@ -67,9 +67,10 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketstream_etl_spark.functions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # project the ratio once; both output columns read the named column
-    scored = docs.select(
-        "doc_id", text.repetition_ratio(tokens(F.col("text"))).alias("rep")
+    # tokens bound once (repetition_ratio reads them per shingle); the
+    # ratio projected once, both output columns read the named column
+    scored = docs.select("doc_id", tokens(F.col("text")).alias("_toks")).select(
+        "doc_id", text.repetition_ratio("_toks").alias("rep")
     )
     return scored.select(
         "doc_id",
@@ -2596,15 +2597,19 @@ def q_contamination_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint barriers before BOTH explodes (r8 GenerateExec
     # projection-collapse fix): without them the 13-gram chain
     # re-evaluates once per emitted gram
-    arr13 = F.array_distinct(shingles(tokens(F.col("text")), _VERBATIM_K))
+    def grams13(frame: DataFrame, *keep: str) -> DataFrame:
+        return frame.select(*keep, tokens(F.col("text")).alias("_toks")).select(
+            *keep, F.array_distinct(shingles("_toks", _VERBATIM_K)).alias("_s")
+        )
+
     bench = (
-        bench_docs.select(arr13.alias("_s"))
+        grams13(bench_docs)
         .localCheckpoint(eager=False)
         .select(F.explode("_s").alias("s"))
         .distinct()
     )
     corpus = (
-        corpus_docs.select("doc_id", arr13.alias("_s"))
+        grams13(corpus_docs, "doc_id")
         .localCheckpoint(eager=False)
         .select(
             "doc_id",

@@ -7,31 +7,33 @@ semantics (/root/reference/src/parser/CsvParser.cpp:57-249, SURVEY §1.3):
 - is_pro parsed as int 0/1 → boolean
 - the parser NEVER yields nulls; validation later rejects the zero defaults
 
-Spark: permissive schema read, then coalesce/when to reproduce the defaults
-— a map-only projection fused into the scan.
+Spark: permissive schema read, then one `selectExpr` of coalesces to
+reproduce the defaults — a map-only projection fused into the scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from marketstream_etl_spark.schemas import TRADE_CSV_RAW_SCHEMA
+
+# The parser's defaults, one SQL expression per output column.
+DEFAULTS = (
+    "coalesce(trade_id, 0) AS trade_id",
+    "coalesce(order_id, 0) AS order_id",
+    "coalesce(`timestamp`, 0) AS `timestamp`",
+    "coalesce(symbol, '') AS symbol",
+    "coalesce(price, 0.0D) AS price",
+    "coalesce(volume, 0) AS volume",
+    # char fields take the FIRST byte of the cell (CsvParser.cpp:231,237)
+    "coalesce(substring(side, 1, 1), 'N') AS side",
+    "coalesce(substring(`type`, 1, 1), 'M') AS `type`",
+    "coalesce(is_pro != 0, false) AS is_pro",
+)
 
 
 def read_trades_csv(spark: SparkSession, path: str) -> DataFrame:
     raw = spark.read.csv(
         path, header=True, schema=TRADE_CSV_RAW_SCHEMA, mode="PERMISSIVE"
     )
-    return raw.select(
-        F.coalesce("trade_id", F.lit(0)).alias("trade_id"),
-        F.coalesce("order_id", F.lit(0)).alias("order_id"),
-        F.coalesce("timestamp", F.lit(0)).alias("timestamp"),
-        F.coalesce("symbol", F.lit("")).alias("symbol"),
-        F.coalesce("price", F.lit(0.0)).alias("price"),
-        F.coalesce("volume", F.lit(0)).alias("volume"),
-        # char fields take the FIRST byte of the cell (CsvParser.cpp:231,237)
-        F.coalesce(F.substring("side", 1, 1), F.lit("N")).alias("side"),
-        F.coalesce(F.substring("type", 1, 1), F.lit("M")).alias("type"),
-        F.coalesce(F.col("is_pro") != 0, F.lit(False)).alias("is_pro"),
-    )
+    return raw.selectExpr(*DEFAULTS)

@@ -10,7 +10,8 @@ tests — the real JDBC writer path with no external service.
 Reference mapping (SURVEY §2.1):
 - S11 ParquetWriter → `df.write.parquet` (snappy + dictionary + footer
   stats are the Spark/parquet defaults; the reference hand-builds all
-  three, ParquetWriter.cpp:89-361).
+  three, ParquetWriter.cpp:89-361).  The trades table skips the
+  dictionary pass over its unique keys (`write_trades_parquet`).
 - S12 run-partitioned naming → timestamped subdirectory per run.
 - S8/S9 PostgreSQL COPY → `df.write.jdbc` with `numPartitions` N ≈ N
   parallel COPY streams (ParallelLoader.hpp:71-275); `truncate` option ≈
@@ -38,6 +39,22 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+# The trades table's unique key columns: one value per row, so a dictionary
+# page for them is built and then thrown away by the parquet writer.
+TRADES_PLAIN_COLUMNS = ("trade_id", "order_id", "timestamp")
+
+
+def write_trades_parquet(df: DataFrame, path: str) -> None:
+    """S11 for the trades table: `write_parquet` without the dictionary
+    pass over TRADES_PLAIN_COLUMNS.  symbol, side, type, price and volume
+    keep dictionary encoding; the reference dictionary-encodes symbol, side
+    and type (ParquetWriter.cpp:116-119)."""
+    df.write.mode("overwrite").options(
+        compression="snappy",
+        **{f"parquet.enable.dictionary#{c}": "false" for c in TRADES_PLAIN_COLUMNS},
+    ).parquet(path)
 
 
 def run_output_path(base_dir: str, run_ts: _dt.datetime | None = None) -> str:
@@ -119,7 +136,7 @@ def write_dual_sinks(
     run_pipeline does not use this: its indicators read back the written
     trades file, so the two writes are sequential jobs."""
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(write_parquet, trades, trades_path)
+        f1 = pool.submit(write_trades_parquet, trades, trades_path)
         f2 = pool.submit(write_parquet, indicators, indicators_path)
         f1.result()
         f2.result()

@@ -90,12 +90,15 @@ def file_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         # which would serialize the CPU-bound shingle map on one thread
         # (measured 45 s single-threaded vs ~2 s spread at the 52K-doc
         # sf1 replay)
-        arrs = spread(batch).select(
-            "doc_id",
-            F.array_distinct(
-                shingles(tokens(F.col("text")), k=SHINGLE_K)
-            ).alias("_sh"),
-        ).localCheckpoint(eager=False)  # barrier: arrays compute ONCE
+        arrs = (
+            spread(batch)
+            .select("doc_id", tokens(F.col("text")).alias("_toks"))
+            .select(
+                "doc_id",
+                F.array_distinct(shingles("_toks", k=SHINGLE_K)).alias("_sh"),
+            )
+            .localCheckpoint(eager=False)  # barrier: arrays compute ONCE
+        )
         exploded = arrs.select(
             "doc_id",
             F.size("_sh").alias("n_shingles"),

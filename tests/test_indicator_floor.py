@@ -30,24 +30,49 @@ bound (~2 × 190 ms scan + job overhead), while the sketch can return the
 per-symbol MAX at extreme quantiles (observed: 5 surviving tail rows
 across 10 symbols), so correctness needs a detect-and-redo fallback.  A
 ~0.1 s gain does not buy that failure mode; the exact strategies stay.
+
+Addendum — the table above was measured before Spark's map-side
+WindowGroupLimit (3.5+), and its fused form's claim that the exchange
+"moves only n_partitions × n_symbols rows" held for the row count but not
+the bytes: each row carried its group's whole collect_list buffer, 19.7 MB
+on the 1M-row ETL input (4 map tasks, 10 symbols).  The fused form is
+replaced by compute_indicators_group_limit: a codegen sum aggregate joined
+to a row_number() <= period + 1 filter that Spark limits on the map side,
+6,126 + 2,364 shuffle bytes on the same input.
+test_group_limit_exchange_is_size_independent measures that exchange.
 """
 
 from __future__ import annotations
 
+import tempfile
+import uuid
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from marketstream_etl_spark.operators import indicators as I
 from marketstream_etl_spark.sources.generator import generate_trades
 
 N_ROWS = 50_000
+N_FILES = 4
+# An exchange row is a symbol plus a few numbers; measured about 30 bytes.
+MAX_BYTES_PER_ROW = 128
+
+
+def _read_back(spark, n: int, path: str):
+    """n generated trades, written to N_FILES Parquet files with every
+    symbol in each and read back, as run_pipeline reads its trades: a
+    generated frame is already hash-partitioned by symbol, so the
+    indicator forms would need no exchange on it."""
+    generate_trades(spark, n).repartition(N_FILES).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == N_FILES
+    return df
 
 
 @pytest.fixture(scope="module")
-def trades(spark):
-    df = generate_trades(spark, N_ROWS).persist()
-    df.count()
-    yield df
-    df.unpersist()
+def trades(spark, tmp_path_factory):
+    return _read_back(spark, N_ROWS, str(tmp_path_factory.mktemp("trades") / "t"))
 
 
 def _snapshot(df):
@@ -59,47 +84,82 @@ def _snapshot(df):
 
 def test_all_strategies_agree(trades):
     base = _snapshot(I.compute_indicators(trades, period=5))
-    assert _snapshot(I.compute_indicators_fused(trades, period=5)) == base
+    assert _snapshot(I.compute_indicators_group_limit(trades, period=5)) == base
     assert _snapshot(I.compute_indicators_auto(trades, period=5)) == base
 
 
-def test_fused_handles_tiny_groups(spark):
+def test_group_limit_handles_tiny_groups(spark):
     # fewer rows than period+1 per symbol: clamps (eff=n, n_changes=n-1)
     tiny = generate_trades(spark, 7)
     base = _snapshot(I.compute_indicators(tiny, period=5))
-    assert _snapshot(I.compute_indicators_fused(tiny, period=5)) == base
+    assert _snapshot(I.compute_indicators_group_limit(tiny, period=5)) == base
     # Single-price symbol → RSI 50; all-gains symbol → RSI 100: the same
     # guards as the window form (TechnicalIndicators.hpp:252-284).
-    edge = spark.createDataFrame(
-        [
-            (1, 100, "ONE", 10.0, 5),
-            (2, 100, "UP", 10.0, 5),
-            (3, 200, "UP", 11.0, 5),
-            (4, 300, "UP", 12.0, 5),
-        ],
-        "trade_id long, timestamp long, symbol string, price double, volume int",
-    )
-    out = _snapshot(I.compute_indicators_fused(edge, period=5))
+    schema = "trade_id long, timestamp long, symbol string, price double, volume int"
+    rows = [
+        (1, 100, "ONE", 10.0, 5),
+        (2, 100, "UP", 10.0, 5),
+        (3, 200, "UP", 11.0, 5),
+        (4, 300, "UP", 12.0, 5),
+    ]
+    # Two trades tie on (timestamp, trade_id): price breaks the tie, so
+    # the order is 10, 11, 12 and both changes are gains (RSI 100; the
+    # other order, 10, 12, 11, would give RSI 66.7).  The window form
+    # leaves such a tie unordered, so only the written-out row checks it.
+    tie = [
+        (5, 100, "TIE", 10.0, 5),
+        (6, 200, "TIE", 12.0, 5),
+        (6, 200, "TIE", 11.0, 5),
+    ]
+    edge = spark.createDataFrame(rows, schema)
+    out = _snapshot(I.compute_indicators_group_limit(edge, period=5))
     assert out == _snapshot(I.compute_indicators(edge, period=5))
     assert out == [("ONE", 10.0, 50.0, 10.0, 1), ("UP", 11.0, 100.0, 11.0, 3)]
+    tied = _snapshot(
+        I.compute_indicators_group_limit(spark.createDataFrame(tie, schema), period=5)
+    )
+    assert tied == [("TIE", 11.0, 100.0, 11.0, 3)]
 
 
-def test_fused_shuffle_is_size_independent(trades):
-    """The exchange between the local and merge aggregates must carry one
-    row per (input partition, symbol) — not the input rows."""
-    plan = I.compute_indicators_fused(trades, period=5)._jdf.queryExecution(
-    ).executedPlan().toString()
-    # inspect only the aggregate plan itself, not the cached source's
-    # embedded plan description below the scan
-    own = plan.split("InMemoryTableScan")[0]
-    # aggregates only: no window sort of the full input and no join
-    assert "Window" not in own
-    assert "SortMergeJoin" not in own and "BroadcastHashJoin" not in own
+def _exchange(spark, trades) -> tuple[int, int]:
+    """Shuffle-write (records, bytes) of one indicator write, read from
+    the status store."""
+    sc = spark.sparkContext
+    group = f"indicator-exchange-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "indicator exchange")
+    try:
+        I.compute_indicators_group_limit(trades, period=5).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    records = written = 0
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        for stage_id in sc.statusTracker().getJobInfo(job_id).stageIds:
+            try:
+                st = store.lastStageAttempt(stage_id)
+            except Py4JJavaError:  # a skipped stage never ran
+                continue
+            records += st.shuffleWriteRecords()
+            written += st.shuffleWriteBytes()
+    return records, written
 
 
-def test_fused_single_full_scan(trades):
-    """One pass over the input: exactly one InMemoryTableScan feeds the
-    plan (the sums and the tail are computed in the same aggregate)."""
-    plan = I.compute_indicators_fused(trades, period=5)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert plan.count("InMemoryTableScan") == 1
+def test_group_limit_exchange_is_size_independent(spark):
+    """The exchanges carry at most period + 2 rows per (map task, symbol):
+    one partial sum and period + 1 tail rows.  The same count at 50K and
+    200K input rows, and a few dozen bytes per row, not a group's history
+    (the former collect_list form wrote about 1 MB here at 50K rows)."""
+    with tempfile.TemporaryDirectory() as d:
+        got = []
+        for n in (N_ROWS, 4 * N_ROWS):
+            trades = _read_back(spark, n, f"{d}/trades-{n}")
+            got.append(_exchange(spark, trades))
+        n_symbols = trades.select("symbol").distinct().count()
+    bound = N_FILES * n_symbols * (5 + 2)
+    (small, small_bytes), (large, large_bytes) = got
+    assert small == large <= bound
+    assert max(small_bytes, large_bytes) <= MAX_BYTES_PER_ROW * bound

@@ -3,14 +3,18 @@
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
+
+import pyarrow.parquet as pq
 
 from marketstream_etl_spark.operators.validation import split_valid
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
 from marketstream_etl_spark.sources.generator import EPOCH_NS, generate_trades
 from marketstream_etl_spark.sources.sinks import (
     DERBY_DRIVER,
+    TRADES_PLAIN_COLUMNS,
     read_jdbc,
     write_dual_sinks,
     write_parquet,
@@ -96,6 +100,17 @@ def test_parquet_sink_roundtrip_and_dual_sink(spark):
         write_dual_sinks(df, ind, f"{d}/dual_trades", f"{d}/dual_ind")
         assert spark.read.parquet(f"{d}/dual_trades").count() == 500
         assert spark.read.parquet(f"{d}/dual_ind").count() == ind.count()
+        # the trades table's unique keys skip the dictionary pass; the
+        # low-cardinality columns keep it (ParquetWriter.cpp:116-119)
+        for f in glob.glob(f"{d}/dual_trades/*.parquet"):
+            rg = pq.ParquetFile(f).metadata.row_group(0)
+            dict_cols = {
+                rg.column(i).path_in_schema
+                for i in range(rg.num_columns)
+                if rg.column(i).has_dictionary_page
+            }
+            assert not dict_cols & set(TRADES_PLAIN_COLUMNS)
+            assert {"symbol", "side", "type"} <= dict_cols
 
 
 DERBY_URL = "jdbc:derby:memory:marketstream_test;create=true"

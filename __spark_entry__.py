@@ -34,7 +34,6 @@ MODULES = tuple(
         "streaming.jdbc_sink",
         "streaming.stateful",
         "streaming.ticks",
-        "streaming.tws",
         "streaming.upsert",
         "streaming.websocket",
     )

@@ -16,10 +16,12 @@ Reference: ``/root/reference/src/indicators/TechnicalIndicators.hpp``.
 "Last" is by (timestamp, trade_id) — the intended canonical ordering
 (Trade.hpp:36-37; generator timestamps are monotone).
 
-Spark-first plan: one shuffle on `symbol`.  The window functions
-(row_number desc, lag) and the final groupBy all share the same hash
-partitioning on symbol, so Catalyst reuses a single exchange; partial
-aggregation happens map-side.  No UDFs anywhere.
+Spark-first plan (`compute_indicators`): two small aggregates joined on
+`symbol`.  The per-symbol sums are a codegen hash aggregate, and the
+last-(period + 1) price tail is a `row_number()` filter that Spark limits
+in each map task before its exchange.  Neither exchange grows with the
+input.  No UDFs anywhere.  `rolling_indicators` (per-row values) and
+`compute_rsi_wilder` (Wilder smoothing) compute other outputs over windows.
 """
 
 from __future__ import annotations
@@ -28,79 +30,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_PERIOD = 5
-
-
-def _annotated(trades: DataFrame) -> DataFrame:
-    """Per-row helpers shared by the indicator aggregates: descending row
-    number, group size, and lag-diff (price change)."""
-    w_desc = Window.partitionBy("symbol").orderBy(
-        F.col("timestamp").desc(), F.col("trade_id").desc()
-    )
-    w_asc = Window.partitionBy("symbol").orderBy("timestamp", "trade_id")
-    w_all = Window.partitionBy("symbol")
-    return trades.select(
-        "symbol",
-        "price",
-        "volume",
-        F.row_number().over(w_desc).alias("_rn_desc"),
-        F.count("*").over(w_all).alias("_n"),
-        (F.col("price") - F.lag("price").over(w_asc)).alias("_change"),
-    )
-
-
-def compute_indicators(
-    trades: DataFrame,
-    period: int = DEFAULT_PERIOD,
-    computed_at_ns: int | None = None,
-) -> DataFrame:
-    """One indicator row per symbol — exact `compute_all` parity.
-
-    Returns columns: symbol, sma, rsi, vwap, period
-    (+ computed_at when `computed_at_ns` is given, mirroring the save-time
-    stamp at DatabaseLoader.cpp:314-316 — injected for deterministic tests).
-    """
-    ann = _annotated(trades)
-    eff = F.least(F.lit(period), F.col("_n"))  # effective_period (:125)
-    # number of RSI changes actually averaged = min(effective_period, n-1)
-    n_changes = F.least(eff, F.col("_n") - 1)
-
-    in_sma = F.col("_rn_desc") <= eff
-    in_rsi = F.col("_rn_desc") <= n_changes  # last row has no defined change
-    # at the first row (_rn_desc == _n) _change is NULL; in_rsi excludes it
-    gain = F.when(in_rsi & (F.col("_change") > 0), F.col("_change")).otherwise(F.lit(0.0))
-    loss = F.when(in_rsi & (F.col("_change") < 0), -F.col("_change")).otherwise(F.lit(0.0))
-
-    agg = ann.groupBy("symbol").agg(
-        F.max("_n").alias("_n"),
-        F.avg(F.when(in_sma, F.col("price"))).alias("_sma"),
-        F.sum(gain).alias("_gain_sum"),
-        F.sum(loss).alias("_loss_sum"),
-        F.sum(F.col("price") * F.col("volume")).alias("_pv"),
-        F.sum(F.col("volume").cast("double")).alias("_v"),
-    )
-
-    n = F.col("_n")
-    eff_out = F.least(F.lit(period), n)
-    n_ch = F.least(eff_out, n - 1).cast("double")
-    avg_gain = F.col("_gain_sum") / n_ch
-    avg_loss = F.col("_loss_sum") / n_ch
-    rsi = (
-        F.when((n < 2) | (eff_out <= 1), F.lit(50.0))
-        .when(avg_loss == 0.0, F.lit(100.0))
-        .otherwise(F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + avg_gain / avg_loss))
-    )
-    vwap = F.when(F.col("_v") == 0.0, F.lit(0.0)).otherwise(F.col("_pv") / F.col("_v"))
-
-    out = agg.select(
-        "symbol",
-        F.col("_sma").alias("sma"),
-        rsi.alias("rsi"),
-        vwap.alias("vwap"),
-        eff_out.cast("int").alias("period"),
-    )
-    if computed_at_ns is not None:
-        out = out.withColumn("computed_at", F.lit(int(computed_at_ns)).cast("long"))
-    return out
 
 
 def rsi_signal(rsi: Column) -> Column:
@@ -157,8 +86,8 @@ def _tail_indicators(
 ) -> DataFrame:
     """Final step: given one row per symbol with `_n/_pv/_v` totals
     and `_tail` = last ≤(period+1) prices most-recent-first, emit the
-    reference indicator row (same clamps/edge cases as compute_indicators,
-    TechnicalIndicators.hpp:125,252-290).  SQL strings: the whole row is one
+    reference indicator row (the clamps and edge cases of the module
+    docstring, TechnicalIndicators.hpp:125,252-290).  SQL strings: the whole row is one
     parsed projection, not a tree of Column calls."""
     eff = f"least({period}, _n)"
     n_ch = f"CAST(least({eff}, _n - 1) AS DOUBLE)"
@@ -184,12 +113,17 @@ def _tail_indicators(
     return joined.selectExpr(*cols)
 
 
-def compute_indicators_group_limit(
+def compute_indicators(
     trades: DataFrame,
     period: int = DEFAULT_PERIOD,
     computed_at_ns: int | None = None,
 ) -> DataFrame:
-    """Indicators from two tiny aggregates joined on symbol — the scale plan.
+    """One indicator row per symbol — exact `compute_all` parity.
+
+    Returns columns: symbol, sma, rsi, vwap, period (+ computed_at when
+    `computed_at_ns` is given, mirroring the save-time stamp at
+    DatabaseLoader.cpp:314-316).  The plan is two tiny aggregates joined on
+    symbol:
 
     - **Sums:** count, Σ(price·volume) and Σvolume per symbol in a codegen
       hash aggregate; its exchange carries one partial row per (map task,
@@ -205,8 +139,9 @@ def compute_indicators_group_limit(
     Both exchanges are independent of the input size (measured on 1M
     trades, 4 map tasks, 10 symbols: 2,364 + 6,126 shuffle bytes), at the
     price of a second scan of the input.  Memory is bounded by the per-task
-    group limit; no group's rows are ever collected.  Semantics identical
-    to compute_indicators; VWAP's float sums may differ in the last ulp.
+    group limit; no group's rows are ever collected.  VWAP's float sums
+    follow the partial-sum order, so another plan's may differ in the last
+    ulp.
     """
     window = (
         "row_number() OVER (PARTITION BY symbol"
@@ -250,10 +185,9 @@ def compute_rsi_wilder(
         else       : α · (1−α)^(m−j)             (recursion unrolled)
 
     avg_gain = Σ wⱼ·gainⱼ, avg_loss = Σ wⱼ·lossⱼ — exact, per-row weights,
-    fully parallel partial aggregation.  At 100 TB this is the same plan
-    shape as `compute_indicators`: one hash shuffle on symbol, no per-symbol
-    sort of the full history in the aggregate itself (the lag/row_number
-    window is the only sort, shared with every other indicator).
+    fully parallel partial aggregation.  At 100 TB this is one hash shuffle
+    on symbol, with no per-symbol sort of the full history in the aggregate
+    itself (the lag/row_number window is the only sort).
 
     Output: symbol, n_changes, rsi_wilder, signal — one row per symbol.
     """
@@ -302,26 +236,7 @@ def compute_rsi_wilder(
     ).withColumn("signal", rsi_signal(F.col("rsi_wilder")))
 
 
-AUTO_GROUP_LIMIT_MIN_PARTITIONS = 8  # input partitions that switch _auto to the group-limit form
-
-
-def compute_indicators_auto(
-    trades: DataFrame,
-    period: int = DEFAULT_PERIOD,
-    computed_at_ns: int | None = None,
-) -> DataFrame:
-    """Strategy dispatch: the window form wins on small inputs (one
-    exchange, no join); the group-limit form wins once per-symbol history
-    outgrows a single reducer — its exchanges carry at most
-    n_partitions × n_symbols × (period + 1) rows, so it is the only shape
-    whose shuffle volume is independent of input size
-    (tests/test_indicator_floor.py, README §performance).  Input partition
-    count is the cheap, statistics-free size proxy."""
-    n_parts = trades.rdd.getNumPartitions()
-    if n_parts >= AUTO_GROUP_LIMIT_MIN_PARTITIONS:
-        return compute_indicators_group_limit(
-            trades, period=period, computed_at_ns=computed_at_ns
-        )
-    return compute_indicators(
-        trades, period=period, computed_at_ns=computed_at_ns
-    )
+# The traced etl_1m mirror (perfbench/workloads.py::Etl._traced) is this
+# name's only importer; ROADMAP item 8's benchmark change moves that mirror
+# to compute_indicators and deletes this alias.
+compute_indicators_auto = compute_indicators

@@ -34,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.operators.indicators import compute_indicators_group_limit
+from marketstream_etl_spark.operators.indicators import compute_indicators
 from marketstream_etl_spark.operators.validation import with_validation
 from marketstream_etl_spark.sources.csv_trades import read_trades_csv
 from marketstream_etl_spark.sources.sinks import write_parquet, write_trades_parquet
@@ -105,10 +105,8 @@ def run_pipeline(
     report.stage_seconds["parse_validate_sink"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    # The known schema skips the footer-inference job on read-back.  The
-    # group-limit form is called directly: the read-back has few partitions,
-    # where compute_indicators_auto would pick the slower window form.
-    indicators = compute_indicators_group_limit(
+    # The known schema skips the footer-inference job on read-back.
+    indicators = compute_indicators(
         spark.read.schema(valid.schema).parquet(trades_path),
         period=period,
         computed_at_ns=computed_at_ns,

@@ -98,12 +98,11 @@ def _wilder_from_state(m: int, wag: float, wal: float) -> float:
 def fold_batch(
     existing: tuple | None, batch: pd.DataFrame, period: int = DEFAULT_PERIOD
 ) -> tuple[tuple, dict]:
-    """The keyed state transition shared by BOTH state backends
-    (applyInPandasWithState and transformWithState): fold one micro-batch
-    in canonical (timestamp, trade_id) order — shuffle delivery order is
-    not deterministic, and the last-N tail depends on it (Trade.hpp:36-37
-    ordering); across batches the watermark-free contract is source order,
-    as in the reference's SPSC queue.
+    """The keyed state transition of applyInPandasWithState: fold one
+    micro-batch in canonical (timestamp, trade_id) order — shuffle delivery
+    order is not deterministic, and the last-N tail depends on it
+    (Trade.hpp:36-37 ordering); across batches the watermark-free contract
+    is source order, as in the reference's SPSC queue.
 
     Returns (new_state_tuple, output_column_dict).  The Wilder recursion
     avg_t = (avg_{t-1}·(p−1) + x_t)/p with a simple-average seed is the

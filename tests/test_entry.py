@@ -94,6 +94,26 @@ print(spark.range(1).mapInPandas(where, "path string").first().path)
     assert out == os.path.join(root, "marketstream_etl_spark", "__init__.py")
 
 
+def test_vanilla_oracle_check_imports_the_package_from_any_cwd(tmp_path):
+    # --vanilla's plain session does not get get_spark's worker path;
+    # ann_ivf_trained_recall's Python workers start in tmp_path and
+    # unpickle functions of the package
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "1"
+    done = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "check_oracle.py"),
+         "--vanilla", "ann_ivf_trained_recall"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stdout[-2000:] + done.stderr[-2000:]
+    assert "PASS ann_ivf_trained_recall" in done.stdout
+
+
 def test_committed_query_index_is_current():
     # Rendered in a fresh interpreter, as the driver imports the entry
     # module.

@@ -1,4 +1,5 @@
-"""Indicator-stage strategy parity + the measured 1M-row floor.
+"""The indicator stage against the reference model + the measured 1M-row
+floor.
 
 VERDICT r1 flagged the indicators stage as 6.3× the reference's 150 ms and
 asked for either a faster plan or a measured floor with evidence.  The
@@ -18,9 +19,8 @@ sort-bearing window, a second pass, or a collect_list object aggregate
 (which disables whole-stage codegen for that operator).  All exact
 strategies therefore tie at ~0.7 s on 1M rows — a fixed overhead that
 amortizes at scale, where the fused form's O(n_partitions × n_symbols)
-shuffle (vs the others' full-data shuffle) makes it the only
-size-independent plan.  compute_indicators_auto picks fused for large
-inputs on that basis.
+shuffle (vs the others' full-data shuffle) made it the only
+size-independent plan of the three.
 
 r4 addendum — a fourth strategy was prototyped and rejected: a two-pass
 approx-threshold plan (pass 1: sums + percentile_approx(ts, 0.999) per
@@ -35,11 +35,12 @@ Addendum — the table above was measured before Spark's map-side
 WindowGroupLimit (3.5+), and its fused form's claim that the exchange
 "moves only n_partitions × n_symbols rows" held for the row count but not
 the bytes: each row carried its group's whole collect_list buffer, 19.7 MB
-on the 1M-row ETL input (4 map tasks, 10 symbols).  The fused form is
-replaced by compute_indicators_group_limit: a codegen sum aggregate joined
-to a row_number() <= period + 1 filter that Spark limits on the map side,
-6,126 + 2,364 shuffle bytes on the same input.
-test_group_limit_exchange_is_size_independent measures that exchange.
+on the 1M-row ETL input (4 map tasks, 10 symbols).  The fused form was
+replaced by a group-limit plan: a codegen sum aggregate joined to a
+row_number() <= period + 1 filter that Spark limits on the map side,
+6,126 + 2,364 shuffle bytes on the same input.  That plan is now the one
+compute_indicators, and the window and fused forms are gone;
+test_group_limit_exchange_is_size_independent measures its exchange.
 """
 
 from __future__ import annotations
@@ -50,8 +51,9 @@ import uuid
 import pytest
 from py4j.protocol import Py4JJavaError
 
-from marketstream_etl_spark.operators import indicators as I
+from marketstream_etl_spark.operators.indicators import compute_indicators
 from marketstream_etl_spark.sources.generator import generate_trades
+from tests.test_property_indicators import model_rsi, model_sma, model_vwap
 
 N_ROWS = 50_000
 N_FILES = 4
@@ -63,7 +65,7 @@ def _read_back(spark, n: int, path: str):
     """n generated trades, written to N_FILES Parquet files with every
     symbol in each and read back, as run_pipeline reads its trades: a
     generated frame is already hash-partitioned by symbol, so the
-    indicator forms would need no exchange on it."""
+    indicator plan would need no exchange on it."""
     generate_trades(spark, n).repartition(N_FILES).write.parquet(path)
     df = spark.read.parquet(path)
     assert df.rdd.getNumPartitions() == N_FILES
@@ -82,19 +84,30 @@ def _snapshot(df):
     )
 
 
-def test_all_strategies_agree(trades):
-    base = _snapshot(I.compute_indicators(trades, period=5))
-    assert _snapshot(I.compute_indicators_group_limit(trades, period=5)) == base
-    assert _snapshot(I.compute_indicators_auto(trades, period=5)) == base
+def test_matches_reference_model(trades):
+    """Every symbol of the 4-file fixture, across a real exchange, equals
+    the pure-Python transcription of the reference over its trades in
+    (timestamp, trade_id) order."""
+    history: dict[str, list[tuple[float, int]]] = {}
+    for r in trades.orderBy("timestamp", "trade_id", "price").collect():
+        history.setdefault(r.symbol, []).append((r.price, r.volume))
+    got = {r.symbol: r for r in compute_indicators(trades, period=5).collect()}
+    assert set(got) == set(history)
+    for sym, pvs in history.items():
+        prices = [p for p, _ in pvs]
+        eff = min(5, len(prices))
+        row = got[sym]
+        assert row.period == eff
+        assert row.sma == pytest.approx(model_sma(prices, eff), rel=1e-9)
+        assert row.rsi == pytest.approx(model_rsi(prices, eff), rel=1e-9, abs=1e-9)
+        assert row.vwap == pytest.approx(
+            model_vwap(prices, [v for _, v in pvs]), rel=1e-9
+        )
 
 
 def test_group_limit_handles_tiny_groups(spark):
-    # fewer rows than period+1 per symbol: clamps (eff=n, n_changes=n-1)
-    tiny = generate_trades(spark, 7)
-    base = _snapshot(I.compute_indicators(tiny, period=5))
-    assert _snapshot(I.compute_indicators_group_limit(tiny, period=5)) == base
-    # Single-price symbol → RSI 50; all-gains symbol → RSI 100: the same
-    # guards as the window form (TechnicalIndicators.hpp:252-284).
+    # Single-price symbol → RSI 50; all-gains symbol → RSI 100; fewer rows
+    # than period + 1 clamp eff = n (TechnicalIndicators.hpp:125,252-284).
     schema = "trade_id long, timestamp long, symbol string, price double, volume int"
     rows = [
         (1, 100, "ONE", 10.0, 5),
@@ -104,20 +117,15 @@ def test_group_limit_handles_tiny_groups(spark):
     ]
     # Two trades tie on (timestamp, trade_id): price breaks the tie, so
     # the order is 10, 11, 12 and both changes are gains (RSI 100; the
-    # other order, 10, 12, 11, would give RSI 66.7).  The window form
-    # leaves such a tie unordered, so only the written-out row checks it.
+    # other order, 10, 12, 11, would give RSI 66.7).
     tie = [
         (5, 100, "TIE", 10.0, 5),
         (6, 200, "TIE", 12.0, 5),
         (6, 200, "TIE", 11.0, 5),
     ]
-    edge = spark.createDataFrame(rows, schema)
-    out = _snapshot(I.compute_indicators_group_limit(edge, period=5))
-    assert out == _snapshot(I.compute_indicators(edge, period=5))
+    out = _snapshot(compute_indicators(spark.createDataFrame(rows, schema), period=5))
     assert out == [("ONE", 10.0, 50.0, 10.0, 1), ("UP", 11.0, 100.0, 11.0, 3)]
-    tied = _snapshot(
-        I.compute_indicators_group_limit(spark.createDataFrame(tie, schema), period=5)
-    )
+    tied = _snapshot(compute_indicators(spark.createDataFrame(tie, schema), period=5))
     assert tied == [("TIE", 11.0, 100.0, 11.0, 3)]
 
 
@@ -128,9 +136,9 @@ def _exchange(spark, trades) -> tuple[int, int]:
     group = f"indicator-exchange-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "indicator exchange")
     try:
-        I.compute_indicators_group_limit(trades, period=5).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        compute_indicators(trades, period=5).write.format("noop").mode(
+            "overwrite"
+        ).save()
     finally:
         sc._jsc.clearJobGroup()
     jsc = sc._jsc.sc()

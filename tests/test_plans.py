@@ -53,12 +53,15 @@ def test_q5_all_dims_broadcast(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 4  # cust/supp/nation/region
 
 
-def test_indicators_single_exchange_on_symbol(spark, sf_dir):
+def test_indicators_limit_the_tail_map_side(spark, sf_dir):
     plan = plan_of(analytics.q_indicators(spark, sf_dir))
-    # one hash exchange for windows+agg on symbol; one range exchange for
-    # the final tiny orderBy — nothing else
+    # two hash exchanges on symbol, the sums' and the tail's; each map
+    # task keeps at most period + 1 tail rows per symbol before its
+    # exchange (Partial), and the reducer limits again (Final)
     hash_exchanges = plan.count("hashpartitioning(symbol")
-    assert hash_exchanges == 1, f"expected 1 symbol shuffle, plan:\n{plan}"
+    assert hash_exchanges == 2, f"expected 2 symbol shuffles, plan:\n{plan}"
+    for mode in ("Partial", "Final"):
+        assert f"row_number(), 6, {mode}" in plan, plan
 
 
 def test_validation_is_shuffle_free(spark, sf_dir):

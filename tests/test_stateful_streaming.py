@@ -96,109 +96,3 @@ def test_file_stream_stateful_equals_batch(spark, sf_dir):
         .collect()
     }
     assert streamed == batch and len(streamed) > 0
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-
-def test_tws_processor_fold_matches_stateful_update_fn():
-    """The transformWithState processor and the applyInPandasWithState
-    update fn must fold identical state from identical micro-batches —
-    checked without Spark (the gRPC runtime is absent in this container)."""
-    import pandas as pd
-
-    from marketstream_etl_spark.streaming.stateful import make_update_fn
-    from marketstream_etl_spark.streaming.tws import IndicatorProcessor
-
-    batches = [
-        pd.DataFrame(
-            {
-                "price": [100.0, 102.0, 101.0],
-                "volume": [10, 20, 30],
-                "timestamp": [3, 1, 2],
-                "trade_id": [3, 1, 2],
-            }
-        ),
-        pd.DataFrame(
-            {
-                "price": [103.0, 105.0, 104.0, 107.0],
-                "volume": [5, 5, 5, 5],
-                "timestamp": [4, 6, 5, 7],
-                "trade_id": [4, 6, 5, 7],
-            }
-        ),
-    ]
-
-    proc = IndicatorProcessor(period=5)
-    proc.init(_FakeHandle())
-    for b in batches:
-        (tws_out,) = list(proc.handleInputRows(("SYM",), iter([b]), None))
-
-    class _LegacyState:
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.get = v
-            self.exists = True
-
-    legacy = _LegacyState()
-    fn = make_update_fn(period=5)
-    for b in batches:
-        (legacy_out,) = list(fn(("SYM",), iter([b]), legacy))
-
-    pd.testing.assert_frame_equal(tws_out, legacy_out)
-    assert tws_out["n_trades"].iloc[0] == 7
-
-
-def test_file_stream_tws_equals_batch(spark, sf_dir):
-    """End-to-end transformWithState replay == batch snapshot — runs only
-    where the gRPC state-server runtime (grpcio+protobuf) is available."""
-    import pytest
-
-    from marketstream_etl_spark.streaming.tws import HAS_TWS_RUNTIME
-
-    if not HAS_TWS_RUNTIME:
-        pytest.skip("transformWithState needs grpcio+protobuf")
-
-    from pyspark.sql import functions as F
-
-    from marketstream_etl_spark.operators.indicators import compute_indicators
-    from marketstream_etl_spark.operators.validation import split_valid
-    from marketstream_etl_spark.plans.trades_view import load_trades
-    from marketstream_etl_spark.streaming.tws import file_stream_tws_indicators
-
-    streamed = {
-        r["symbol"]: (r["n_trades"], r["sma"], r["rsi"], r["vwap"], r["period"])
-        for r in file_stream_tws_indicators(spark, sf_dir).collect()
-    }
-    valid, _ = split_valid(load_trades(spark, sf_dir))
-    batch = {
-        r["symbol"]: (
-            r["n"],
-            round(r["sma"], 6),
-            round(r["rsi"], 6),
-            round(r["vwap"], 6),
-            r["period"],
-        )
-        for r in compute_indicators(valid, period=5)
-        .join(valid.groupBy("symbol").agg(F.count("*").alias("n")), "symbol")
-        .collect()
-    }
-    assert streamed == batch and len(streamed) > 0

@@ -28,7 +28,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -87,8 +88,14 @@ def main() -> int:
     quiet = {"spark.ui.showConsoleProgress": "false"}
     if vanilla:
         # Plain session, no session.py confs: replicates the external driver.
+        # The JVM it starts inherits this process's PYTHONPATH and hands it
+        # to the Python workers, which start in the cwd and must import
+        # this checkout's package too.
         from pyspark.sql import SparkSession
 
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+        )
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         builder = SparkSession.builder.master(f"local[{cpus}]")
         spark = builder.config(map=quiet).getOrCreate()

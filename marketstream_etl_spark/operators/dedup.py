@@ -616,11 +616,11 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     converges in a handful of iterations; each iteration is one equi-join
     + groupBy on doc_id. localCheckpoint truncates the lineage so the plan
     does not grow exponentially with iterations. The driver-side loop only
-    reads a scalar convergence count per round.
+    reads a scalar convergence count per round.  Both callers pass the
+    pairs frame that minhash_lsh_pairs keeps persisted in its generation
+    cache, so the symmetric union reads it from memory; this function
+    neither persists nor unpersists it.
     """
-    # the pair source is typically an expensive DAG (LSH); cache it so the
-    # symmetric union below does not evaluate it twice
-    pairs = pairs.persist()
     edges = (
         pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -668,7 +668,6 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
         if changed == 0:
             break
     edges.unpersist()
-    pairs.unpersist()
     return labels.select("id", F.col("label").alias("cluster_rep"))
 
 

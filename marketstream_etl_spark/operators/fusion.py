@@ -17,7 +17,7 @@ convention in operators/graph.py pagerank).
 Scale design (100 TB posture):
 - Each system retrieves its own bounded top-K_EACH candidate list per
   query (BM25 via the inverted-index join, cosine via the broadcast-query
-  scan — both already salted-top-k bounded).  Fusion then joins two
+  scan — both already top-k bounded).  Fusion then joins two
   frames of at most ``n_queries × K_EACH`` rows — bounded by
   construction, independent of corpus size.
 - The full-outer join on (query_id, item_id) is the textbook RRF shape:
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.functions.topk import top_k_per_key_bounded
+from marketstream_etl_spark.functions.topk import top_k_per_key
 from marketstream_etl_spark.operators.relevance import bm25_search, bm25_search_sql
 from marketstream_etl_spark.operators.similarity import (
     ann_bruteforce,
@@ -85,11 +85,7 @@ def hybrid_search_rrf(
             (_contrib("lex_rank") + _contrib("vec_rank")).alias("rrf_score"),
         )
     )
-    # fused is bounded at ≤ 2·k_each rows per query BY CONSTRUCTION (each
-    # system contributes a capped candidate list), so the single-window
-    # rank is exact and safe at any corpus size — one Exchange instead of
-    # the salted two-phase pair (guide §2.4)
-    out = top_k_per_key_bounded(
+    out = top_k_per_key(
         fused,
         key="query_id",
         order_by=[F.desc("rrf_score"), F.col("item_id")],

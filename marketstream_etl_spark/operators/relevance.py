@@ -181,7 +181,6 @@ def bm25_search(
         key="query_id",
         order_by=[F.desc("bm25"), F.col("doc_id")],
         k=k,
-        salt_src="doc_id",
     ).select("query_id", "doc_id", "bm25", "rank")
     return out
 
@@ -261,7 +260,7 @@ def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     once); df is a term-keyed partial agg; N is a 1-row broadcast; the
     idf attach is a shuffle equi-join on term (the full vocabulary is
     NOT broadcast — at the 100 TB posture it is multi-GB); top-k per doc
-    is the salted two-phase ranking, no single reducer."""
+    is limited to k rows per (map task, doc) before its exchange."""
     post, dl, df_, stats = _bm25_index(docs)
     # n_docs = count over dl, the same definition the cached stats frame
     # holds (docs with >= 1 token) — one shared 1-row broadcast
@@ -294,7 +293,6 @@ def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
             key="doc_id",
             order_by=[F.desc("tfidf"), F.col("term")],
             k=k,
-            salt_src="term",
         )
         .select("doc_id", "term", "tfidf", "rank")
     )

@@ -4,9 +4,10 @@ variant (the scale path), plus embedding-cosine near-duplicate pairs.
 
 Scale design (100 TB posture):
 - The query set is small → `F.broadcast` it; the big side streams through a
-  map-side cosine, then a TWO-PHASE top-k (functions/topk.py): per-(query,
-  salt) pre-top-k bounds every reducer, so 8 query keys never serialize a
-  100M-vector scored set through 8 tasks.
+  map-side cosine, then a top-k per query (functions/topk.py) whose
+  map-side limit ships at most k rows per (map task, query) to the
+  exchange, so 8 query keys never serialize a 100M-vector scored set
+  through 8 tasks.
 - IVF: centroids are a deterministic sample (first C vec_ids — a stand-in
   for a k-means codebook the pipeline would train offline).  Every vector is
   assigned to its nearest centroid once (map-side vs broadcast centroids);
@@ -170,7 +171,6 @@ def ann_bruteforce(
         key="query_id",
         order_by=[F.desc("cos_raw"), F.col("neighbor_id")],
         k=k,
-        salt_src="neighbor_id",
     )
     return topk.select(
         "query_id",
@@ -546,7 +546,6 @@ def ann_ivf(emb: DataFrame, centroids: DataFrame | None = None) -> DataFrame:
         key="query_id",
         order_by=[F.desc("cos_raw"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_src="neighbor_id",
     )
     return topk.select(
         "query_id",
@@ -816,8 +815,8 @@ def embedding_neardup_ivf_capped(
 
     Cost note: candidate generation and exact verification are the SAME
     work as the uncapped audit (the cap bounds the OUTPUT, which is what
-    downstream shuffles/writes) plus one salted top-k over the surviving
-    pairs — bounded reducers via functions/topk.py."""
+    downstream shuffles/writes) plus one top-k over the surviving pairs,
+    limited map-side by functions/topk.py."""
     pairs = embedding_neardup_ivf(emb, approx_rows)
     sides = pairs.select(
         F.col("id_a").alias("doc_id"), F.col("id_b").alias("partner"), "cos"
@@ -833,7 +832,6 @@ def embedding_neardup_ivf_capped(
         key="doc_id",
         order_by=[F.desc("cos"), F.col("partner")],
         k=NEARDUP_MAX_PAIRS_PER_DOC,
-        salt_src="partner",
     )
     return (
         kept.select(
@@ -1308,7 +1306,6 @@ def ann_lsh(emb: DataFrame) -> DataFrame:
         key="query_id",
         order_by=[F.desc("cos_raw"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_src="neighbor_id",
     )
     return (
         topk.join(F.broadcast(n_cand), "query_id")
@@ -1525,7 +1522,6 @@ def ann_pq(
         key="query_id",
         order_by=[F.asc("adc_dist"), F.col("neighbor_id")],
         k=k,
-        salt_src="neighbor_id",
     )
     return topk.select(
         "query_id", "neighbor_id", "adc_dist", "rank"
@@ -1663,7 +1659,6 @@ def _adc_top_k(
         key="query_id",
         order_by=[F.asc("adc_dist"), F.col("neighbor_id")],
         k=k,
-        salt_src="neighbor_id",
     )
     return topk.select("query_id", "neighbor_id", "adc_dist", "rank")
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.topk import top_k_per_key
 from marketstream_etl_spark.operators import graph
 from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.sources.tables import load_table
@@ -197,8 +198,6 @@ register("tpch_q6", q6_revenue_forecast, TPCH_Q6_SQL)
 
 def q_top_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group: highest-revenue part per brand (window + row_number)."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     rev = (
@@ -210,12 +209,10 @@ def q_top_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue")
         )
     )
-    w = Window.partitionBy("p_brand").orderBy(
-        F.desc("revenue"), F.col("p_partkey")
-    )
     return (
-        rev.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        top_k_per_key(
+            rev, "p_brand", [F.desc("revenue"), F.col("p_partkey")], 3
+        )
         .select("p_brand", "p_partkey", "revenue", "rank")
         .orderBy("p_brand", "rank")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.hashing import h32_sql, shingles_sql, tokens_sql
+from marketstream_etl_spark.functions.topk import top_k_per_key
 from marketstream_etl_spark.operators import (
     dedup,
     fusion,
@@ -255,20 +256,14 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash rank (not rand()) so the sample is reproducible and shardable.
     One shuffle on lang."""
     from marketstream_etl_spark.functions.hashing import h32
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    ranked = docs.select(
+    hashed = docs.select(
         "doc_id", "lang", h32(F.col("doc_id").cast("string")).alias("_h")
-    ).withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("lang").orderBy("_h", "doc_id")
-        ),
     )
     return (
-        ranked.filter(F.col("rk") <= 50)
-        .select("lang", "doc_id", F.col("rk").alias("sample_rank"))
+        top_k_per_key(hashed, "lang", [F.col("_h"), F.col("doc_id")], 50)
+        .select("lang", "doc_id", F.col("rank").alias("sample_rank"))
         .orderBy("lang", "sample_rank")
     )
 
@@ -1762,7 +1757,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tfidf_keywords): the corpus-summarization / topic-tagging twin of
     BM25 — shares its postings frame through the rotation cache, attaches
     idf by a term-keyed shuffle join (vocabulary never broadcast), and
-    ranks with the salted two-phase top-k."""
+    ranks with the map-side-limited top-k (functions/topk.py)."""
     return relevance.tfidf_keywords(load_table(spark, sf_dir, "documents"))
 
 

@@ -92,12 +92,32 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(spark, raw)
 
 
-def to_json_frames(ticks: DataFrame) -> DataFrame:
-    """S6 serialize: one JSON text frame per tick (wire format)."""
+def to_json_frames(
+    ticks: DataFrame, passthrough: tuple[str, ...] = ()
+) -> DataFrame:
+    """S6 serialize: one JSON text frame per tick (wire format).
+    `passthrough` names tick columns to carry along beside the frame."""
     return ticks.select(
         F.to_json(F.struct(*[F.col(f.name) for f in TICK_SCHEMA.fields])).alias(
             "value"
-        )
+        ),
+        *passthrough,
+    )
+
+
+def deadletter_frames(events: DataFrame) -> DataFrame:
+    """The dead-letter queries' wire: the events' trades as JSON frames
+    (to_json_frames, exchange WSS) with every 50th trade's frame
+    truncated to 10 bytes, which is never valid JSON.  This deterministic
+    corruption is what STREAMING_DEADLETTER_ORACLE counts."""
+    from marketstream_etl_spark.plans.trades_view import trades_from_events
+
+    ticks = trades_from_events(events).withColumn("exchange", F.lit("WSS"))
+    frames = to_json_frames(ticks, passthrough=("trade_id",))
+    return frames.select(
+        F.when(F.col("trade_id") % 50 == 0, F.substring("value", 1, 10))
+        .otherwise(F.col("value"))
+        .alias("value")
     )
 
 
@@ -369,26 +389,7 @@ def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     real from_json ingest, and count the dead-letter split plus the
     clean-side volume.  The reference counts exactly this channel in
     TickClient.hpp:224-231; here the counter is a verifiable query."""
-    from pyspark.sql import functions as F
-
-    from marketstream_etl_spark.plans.trades_view import trades_from_events
-
-    events = stream_events(spark, sf_dir)
-    ticks = trades_from_events(events).withColumn("exchange", F.lit("WSS"))
-    frames = ticks.select(
-        "trade_id",
-        F.to_json(
-            F.struct(*[F.col(f.name) for f in TICK_SCHEMA.fields])
-        ).alias("value"),
-    )
-    wire = frames.select(
-        F.when(
-            F.col("trade_id") % 50 == 0, F.substring("value", 1, 10)
-        )
-        .otherwise(F.col("value"))
-        .alias("value")
-    )
-    parsed = parse_json_frames(wire)
+    parsed = parse_json_frames(deadletter_frames(stream_events(spark, sf_dir)))
     out = parsed.groupBy("parse_error").agg(
         F.count("*").alias("n_frames"),
         F.sum("volume").alias("total_volume"),
@@ -661,22 +662,27 @@ def socket_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     server.listen(1)
     port = server.getsockname()[1]
     done = threading.Event()
+    feed_error: list = []
 
     def serve() -> None:
-        conn, _ = server.accept()
         try:
-            send_lines_chunked(conn, payload)
-            # keep the connection open until the reader has drained — the
-            # socket source treats a close as stream end mid-read
-            done.wait(timeout=120)
+            conn, _ = server.accept()
+            try:
+                send_lines_chunked(conn, payload)
+                # keep the connection open until the reader has drained —
+                # the socket source treats a close as stream end mid-read
+                done.wait(timeout=120)
+            finally:
+                conn.close()
+        except Exception as e:  # noqa: BLE001 — surface to the drain loop
+            feed_error.append(e)
         finally:
-            conn.close()
             server.close()
 
     threading.Thread(target=serve, daemon=True).start()
 
     return drain_deadletter_socket(
-        spark, port, n_expected, done, "stream_socket", sf_dir
+        spark, port, n_expected, done, "stream_socket", sf_dir, feed_error
     )
 
 
@@ -697,18 +703,9 @@ def build_deadletter_payload(
     fail with a clear message, never OOM the driver or silently truncate
     (the counts are oracle-compared, so a silent cap would be a wrong
     answer)."""
-    from marketstream_etl_spark.plans.trades_view import trades_from_events
     from marketstream_etl_spark.sources.tables import load_table
 
-    ticks = trades_from_events(load_table(spark, sf_dir, "events")).withColumn(
-        "exchange", F.lit("WSS")
-    )
-    wire_json = F.to_json(F.struct(*[F.col(f.name) for f in TICK_SCHEMA.fields]))
-    frames = ticks.select(
-        F.when(F.col("trade_id") % 50 == 0, F.substring(wire_json, 1, 10))
-        .otherwise(wire_json)
-        .alias("value")
-    )
+    frames = deadletter_frames(load_table(spark, sf_dir, "events"))
     n_expected = frames.count()
     if n_expected > SOCKET_EMITTER_MAX_ROWS:
         raise EmitterCapExceeded(
@@ -739,7 +736,7 @@ def drain_deadletter_socket(
     done,
     name_prefix: str,
     sf_dir: str,
-    feed_error: list | None = None,
+    feed_error: list,
 ) -> DataFrame:
     """Shared ingest tail for the network dead-letter queries: socket
     source → JSON parse → error split → complete-mode counts, drained
@@ -747,10 +744,10 @@ def drain_deadletter_socket(
     the socket source is non-replayable, so a partial table is
     permanently wrong).
 
-    `feed_error`: optional shared list a feeder thread appends its
-    exception to; the poll loop checks it each tick and aborts with the
-    ROOT cause immediately instead of stalling out the full deadline on
-    a bogus count mismatch."""
+    `feed_error`: the list the feeder thread appends its exception to;
+    the poll loop checks it each tick and aborts with the ROOT cause
+    immediately instead of stalling out the full deadline on a bogus
+    count mismatch."""
     import time
 
     lines = (

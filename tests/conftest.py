@@ -1,9 +1,11 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -26,6 +28,31 @@ def spark_prop(spark):
     """Alias fixture for hypothesis tests (function-scoped @given works with
     a session-scoped session)."""
     return spark
+
+
+def shuffle_write(spark, action) -> tuple[int, int]:
+    """Shuffle-write (records, bytes) of the jobs that `action()` runs,
+    read from the status store."""
+    sc = spark.sparkContext
+    group = f"shuffle-write-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "shuffle write")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    records = written = 0
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        for stage_id in sc.statusTracker().getJobInfo(job_id).stageIds:
+            try:
+                st = store.lastStageAttempt(stage_id)
+            except Py4JJavaError:  # a skipped stage never ran
+                continue
+            records += st.shuffleWriteRecords()
+            written += st.shuffleWriteBytes()
+    return records, written
 
 
 def write_docs_parquet(path: str, texts: dict[int, str]) -> None:

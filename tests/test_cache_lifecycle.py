@@ -50,6 +50,18 @@ def test_lsh_cache_generations_are_lru_bounded(spark, tmp_path):
     cachegen.clear()  # drain for other tests
 
 
+def test_cluster_report_keeps_the_lsh_generation_cached(spark, sf_dir):
+    """duplicate_clusters reads the pairs frame from the LSH generation
+    cache and leaves it persisted for the next caller.  The frame is held
+    and checked directly: a later lookup would re-persist an evicted
+    frame and hide the eviction (at the price of a rebuild)."""
+    cachegen.clear()
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.minhash_lsh_pairs(docs)
+    dedup.cluster_report(pairs).count()
+    assert pairs.storageLevel.useMemory
+    assert dedup.minhash_lsh_pairs(docs) is pairs
+    cachegen.clear()
 
 
 def test_dedup_cache_rotates_on_rewrite_in_place(spark, tmp_path):

@@ -46,10 +46,9 @@ test_group_limit_exchange_is_size_independent measures its exchange.
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 import pytest
-from py4j.protocol import Py4JJavaError
+from conftest import shuffle_write
 
 from marketstream_etl_spark.operators.indicators import compute_indicators
 from marketstream_etl_spark.sources.generator import generate_trades
@@ -130,30 +129,13 @@ def test_group_limit_handles_tiny_groups(spark):
 
 
 def _exchange(spark, trades) -> tuple[int, int]:
-    """Shuffle-write (records, bytes) of one indicator write, read from
-    the status store."""
-    sc = spark.sparkContext
-    group = f"indicator-exchange-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "indicator exchange")
-    try:
+    """Shuffle-write (records, bytes) of one indicator write."""
+    return shuffle_write(
+        spark,
         compute_indicators(trades, period=5).write.format("noop").mode(
             "overwrite"
-        ).save()
-    finally:
-        sc._jsc.clearJobGroup()
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    records = written = 0
-    for job_id in sc.statusTracker().getJobIdsForGroup(group):
-        for stage_id in sc.statusTracker().getJobInfo(job_id).stageIds:
-            try:
-                st = store.lastStageAttempt(stage_id)
-            except Py4JJavaError:  # a skipped stage never ran
-                continue
-            records += st.shuffleWriteRecords()
-            written += st.shuffleWriteBytes()
-    return records, written
+        ).save,
+    )
 
 
 def test_group_limit_exchange_is_size_independent(spark):

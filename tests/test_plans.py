@@ -502,10 +502,23 @@ def test_kfold_cells_partition_and_balance(spark, sf_dir):
     assert expect_fold in got
 
 
+def test_manifest_flags_a_distinct_aggregate_beside_a_sketch():
+    """The smell key matches approx_aggs' former one-aggregate plan line,
+    and not the same line without its DISTINCT."""
+    line = (
+        "+- ObjectHashAggregate(keys=[], functions=[approx_count_distinct("
+        "l_partkey#1L, 0.01, 0, 0), percentile(l_extendedprice#5, 0.5, 1, 0, "
+        "0, false), count(distinct l_partkey#1L)], output=[exact_parts#12L])"
+    )
+    smell = gen_plan_manifest.DISTINCT_BESIDE_SKETCH
+    assert gen_plan_manifest.node_counts(line) == {smell: 1}
+    assert gen_plan_manifest.node_counts(line.replace("(distinct ", "(")) == {}
+
+
 def test_committed_plan_manifest_is_current(tmp_path):
     """plans/manifest.json equals a fresh build, covers every batch query,
-    and records no CartesianProduct, unpartitioned Window or collapsed
-    Generate."""
+    and records no CartesianProduct, unpartitioned Window, collapsed
+    Generate or DISTINCT aggregate beside a sketch."""
     # A fresh interpreter at the repo root: Python workers import the
     # package from there, and the session is the generator's pinned one.
     out = tmp_path / "manifest.json"

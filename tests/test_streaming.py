@@ -217,6 +217,29 @@ def test_socket_emitter_cap_fails_loudly(spark, monkeypatch):
         ticksmod.socket_stream_deadletter(spark, "/root/testdata/sf0.001")
 
 
+def test_socket_feeder_failure_is_the_drain_error(spark, sf_dir, monkeypatch):
+    """A plain-TCP feeder that raises ends the drain within seconds, with
+    the feeder's error as the cause, not a count mismatch at the drain's
+    120 s deadline."""
+    import time
+
+    import pytest
+
+    from marketstream_etl_spark.streaming import ticks as ticksmod
+
+    broken = OSError("feeder write failed")
+
+    def fail(conn, lines):
+        raise broken
+
+    monkeypatch.setattr(ticksmod, "send_lines_chunked", fail)
+    start = time.monotonic()
+    with pytest.raises(RuntimeError) as raised:
+        ticksmod.socket_stream_deadletter(spark, sf_dir)
+    assert raised.value.__cause__ is broken
+    assert time.monotonic() - start < 30
+
+
 def test_stream_anomaly_matches_batch_zscore(spark, sf_dir):
     """The streaming tripwire's final state equals the batch z-score pass
     over the same hot-filtered trades."""

@@ -6,8 +6,9 @@ query.  Regenerate after a change that moves a plan:
 An intended plan change regenerates the manifest in the same commit, so
 the diff shows the plan change.  tests/test_plans.py fails while the
 committed file is stale, and on any entry with a CartesianProduct, an
-unpartitioned Window or a collapsed Generate.  The input is the same sf0.001
-testdata the test suite's ``sf_dir`` fixture reads.
+unpartitioned Window, a collapsed Generate or a DISTINCT aggregate beside
+a sketch.  The input is the same sf0.001 testdata the test suite's
+``sf_dir`` fixture reads.
 
 Each batch query (every registered name not starting with ``streaming_``)
 is built, never collected, at sf0.001 and its
@@ -44,6 +45,7 @@ COUNTED = {
     "CartesianProduct",
     "BroadcastNestedLoopJoin",
     "Window",
+    "WindowGroupLimit",
     "Generate",
     "InMemoryRelation",
     # where Python runs
@@ -58,10 +60,17 @@ COUNTED = {
 # manifest test requires each to be zero.
 UNPARTITIONED_WINDOW = "Window unpartitioned"
 COLLAPSED_GENERATE = "Generate collapsed"
-SMELLS = ("CartesianProduct", UNPARTITIONED_WINDOW, COLLAPSED_GENERATE)
+DISTINCT_BESIDE_SKETCH = "Aggregate distinct beside a sketch"
+SMELLS = (
+    "CartesianProduct",
+    UNPARTITIONED_WINDOW,
+    COLLAPSED_GENERATE,
+    DISTINCT_BESIDE_SKETCH,
+)
 
 _NODE = re.compile(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+) ?(.*)$")
 _SORT_ORDER = re.compile(r" (?:ASC|DESC) NULLS (?:FIRST|LAST)")
+_SKETCH = re.compile(r"approx_count_distinct\(|percentile|collect_")
 
 
 def is_batch(name: str) -> bool:
@@ -87,10 +96,20 @@ def node_counts(plan: str) -> dict[str, int]:
     counts: dict[str, int] = {}
     for line in plan.splitlines():
         m = _NODE.match(line)
-        if not m or m.group(1) not in COUNTED:
+        if not m:
             continue
-        name, args = m.group(1), _top_level_args(m.group(2))
-        keys = [name]
+        name, rest = m.group(1), m.group(2)
+        keys = [name] if name in COUNTED else []
+        # A DISTINCT aggregate next to a buffer aggregate: Spark's distinct
+        # rewrite groups by the distinct key first and carries every
+        # sketch buffer per key (approx_aggs' measured class).
+        if name.endswith("Aggregate"):
+            functions = rest.partition("functions=")[2]
+            if "(distinct " in functions and _SKETCH.search(functions):
+                keys.append(DISTINCT_BESIDE_SKETCH)
+        if not keys:
+            continue
+        args = _top_level_args(rest)
         # Window [functions], [partition], [order]: Spark omits an empty
         # list, so no partition list leaves the order (or nothing) second.
         if name == "Window" and (len(args) < 2 or _SORT_ORDER.search(args[1])):

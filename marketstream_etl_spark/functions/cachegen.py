@@ -1,43 +1,61 @@
-"""Generation-scoped persisted-frame caching shared by operator families.
+"""One generation cache: `memo(op, keyed, build)`.
 
-The pattern (grown in operators/dedup.py, generalized here in r5): an
-operator family persists expensive intermediates and memoizes them at the
-Python level so repeat calls and sibling operators over the SAME input
-reuse one materialization.  Each family keeps a tiny LRU of generations
-(capacity 2 — a session alternating between two datasets, e.g. a staging
-and a production corpus or two scale factors, must not thrash); inserting
-a third generation evicts and unpersists the least-recently-used one, so
-storage stays bounded and a stale generation is never served.
+An operator family builds an expensive artifact once per input
+generation (one version of the input data) and every later call over the
+same generation gets the same object back.  The artifact is whatever
+`build()` returns: a persisted DataFrame, a tuple of them (the builder
+persists its own frames, at its own storage level), or a plain
+driver-side value such as a trained k-means codebook.  Hyperparameters
+that change the artifact go in the family name (`minhash_lsh[64,16,0.5]`),
+so variants keep their own slots instead of evicting each other.
 
 The generation key is plan identity (semanticHash) composed with
 input-DATA identity (path, mtime_ns, size of every scan input file),
 because a file rewritten in place leaves the plan hash unchanged — the
 silent-stale-cache hazard this project's testdata has actually exercised
-twice (r4 VERDICT finding 1).  A rewritten input lands on a NEW key —
-and because Spark's CacheManager matches canonicalized plans by PATH, the
-old generation's persisted blocks would still be substituted into the new
-plans if they stayed cached.  rotate() therefore evicts any generation
-whose input paths intersect the incoming one's (measured live: the
-rewrite-in-place regression test fails without this), while generations
-over disjoint paths (two real datasets) coexist in the LRU.
+twice (r4 VERDICT finding 1).
+
+The policy `memo` owns, for every family:
+- LRU capacity GENERATIONS_PER_FAMILY (2): a session alternating between
+  two datasets (a staging and a production corpus, two scale factors)
+  does not thrash; a third generation evicts the least-recently-used one.
+- Path-overlap eviction: a new generation evicts any generation that
+  shares an input path.  Spark's CacheManager matches canonicalized plans
+  by PATH, so a rewritten file's old cached blocks would otherwise still
+  be substituted into the new plans (measured live: the rewrite-in-place
+  regression test fails without this).  Disjoint datasets coexist.
+- A generation built in another SparkContext (a stopped session) is
+  dropped, never served: its handles are bound to a dead context.
+- An UNVERIFIABLE key (the input listing failed) is never served, and it
+  holds one slot of its own, so it never evicts a servable generation;
+  the next unverifiable build releases it.
+- A hit re-persists any frame an external `spark.catalog.clearCache()`
+  dropped (found live: bench extras ran 6x slow after the streaming
+  section's clearCache; same key == same input data, so re-persisting
+  the identical plan is always safe).
+Evicting a generation unpersists every DataFrame in it.  Calls nest
+across families (a builder may memo its own inputs).
 """
 
 from __future__ import annotations
 
 import os
 from collections import OrderedDict
-from typing import Callable
-
+from typing import Callable, TypeVar
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
 GENERATIONS_PER_FAMILY = 2
 
-# op family -> key -> (frames, input paths, owning applicationId)
-_GENERATIONS: dict[
-    str, OrderedDict[int, tuple[list[DataFrame], frozenset[str], str]]
-] = {}
+_T = TypeVar("_T")
+
+# family -> key -> (value, input paths, owning applicationId)
+_GENERATIONS: dict[str, OrderedDict[object, tuple[object, frozenset[str], str]]] = {}
+
+# Unique sentinel, not an int: a legitimate key of 0 (a hash that lands
+# on 0) must not be confused with "input identity unknown" (r8 ADVICE).
+_UNVERIFIABLE = object()
 
 
 def _app_id(df: DataFrame) -> str:
@@ -47,22 +65,17 @@ def _app_id(df: DataFrame) -> str:
         return ""
 
 
-def input_paths(df: DataFrame) -> frozenset[str]:
+def _input_paths(df: DataFrame) -> frozenset[str]:
     """Local paths of the frame's scan input files (empty for in-memory
-    frames) — rotate()'s same-path eviction predicate."""
+    frames) — the path-overlap eviction predicate."""
     try:
         return frozenset(urlparse(u).path for u in df.inputFiles())
     except Exception:
         return frozenset()
 
 
-def input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of the frame's scan inputs (0 when unknown).
-    Used to size SCAN parallelism to the data rather than the cluster:
-    a cached frame built at defaultParallelism for CPU-bound map work
-    can be read by scan-light consumers at a byte-proportional partition
-    count (see scan_coalesce) — per-task scheduling overhead dominates
-    tiny partitions, while at real scale the clamp makes it a no-op."""
+def _input_bytes(df: DataFrame) -> int:
+    """Total on-disk bytes of the frame's scan inputs (0 when unknown)."""
     total = 0
     try:
         for uri in df.inputFiles():
@@ -76,16 +89,16 @@ def input_bytes(df: DataFrame) -> int:
 
 # the coalesced frame's in-memory blowup vs its source files (word
 # shingles over compressed parquet text ≈ 40×), and the bytes per task
-SCAN_EXPANSION = 40.0
-SCAN_TARGET_BYTES = 32 << 20
+_SCAN_EXPANSION = 40.0
+_SCAN_TARGET_BYTES = 32 << 20
 
 
 def scan_coalesce(df: DataFrame, source: DataFrame) -> DataFrame:
     """Coalesce a (typically cached) frame for scan-bound consumers so a
     small dataset is not read in defaultParallelism near-empty tasks.
 
-    partitions = clamp(source_input_bytes * SCAN_EXPANSION
-                       / SCAN_TARGET_BYTES, 1, defaultParallelism)
+    partitions = clamp(source_input_bytes * _SCAN_EXPANSION
+                       / _SCAN_TARGET_BYTES, 1, defaultParallelism)
 
     - Unknown input size → no coalesce (never guess below the cluster).
     - At large inputs the clamp hits defaultParallelism and coalesce()
@@ -94,33 +107,15 @@ def scan_coalesce(df: DataFrame, source: DataFrame) -> DataFrame:
       ~0.5 s/query at sf0.1 for 32 near-empty tasks per stage).
     coalesce() is narrow — no shuffle; it merges cached partitions at
     read time and leaves the build's parallelism alone."""
-    nbytes = input_bytes(source)
+    nbytes = _input_bytes(source)
     if nbytes <= 0:
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
-    n = max(1, min(par, int(nbytes * SCAN_EXPANSION // SCAN_TARGET_BYTES) + 1))
+    n = max(1, min(par, int(nbytes * _SCAN_EXPANSION // _SCAN_TARGET_BYTES) + 1))
     return df.coalesce(n) if n < par else df
 
 
-# Unique sentinel, not an int: a legitimate key component of 0 (a
-# hyperparameter, a False, or a hash that lands on 0) must not be
-# confused with "input identity unknown" (r8 ADVICE).  Identity
-# comparison (`is`) everywhere; the object is hashable so it can still
-# transit dict keys and composite tuples.
-_UNVERIFIABLE = object()
-
-
-def _has_unverifiable(key: object) -> bool:
-    """True if `key` is, or (recursively) contains, the UNVERIFIABLE
-    marker — composite obj-cache keys may nest tuples."""
-    if key is _UNVERIFIABLE:
-        return True
-    if isinstance(key, tuple):
-        return any(_has_unverifiable(e) for e in key)
-    return False
-
-
-def cache_key(df: DataFrame) -> object:
+def _cache_key(df: DataFrame) -> object:
     """Generation key = plan identity ∘ input-file identity (see module
     doc).
 
@@ -130,9 +125,7 @@ def cache_key(df: DataFrame) -> object:
     - non-local URI (object store) → the URI string itself: parquet
       writers emit unique part filenames per job, so any real dataset
       rewrite changes the listing and therefore the key;
-    - listing itself fails → UNVERIFIABLE: the caller must never reuse a
-      generation it cannot tie to input data (get_or_build and the dedup
-      operators treat this as a forced miss), degrading to
+    - listing itself fails → UNVERIFIABLE: never served, degrading to
       correct-but-cold rather than possibly-stale.
     Frames with no file scan at all (createDataFrame fixtures) key on the
     plan hash alone — their data is part of the plan."""
@@ -150,145 +143,61 @@ def cache_key(df: DataFrame) -> object:
     return hash((df.semanticHash(), tuple(sorted(sig))))
 
 
-def _unpersist_all(frames: list[DataFrame]) -> None:
-    for f in frames:
+def _frames(value: object) -> list[DataFrame]:
+    items = value if isinstance(value, tuple) else (value,)
+    return [v for v in items if isinstance(v, DataFrame)]
+
+
+def _release(value: object) -> None:
+    for f in _frames(value):
         try:
             f.unpersist()
         except Exception:
             pass  # session may already be gone
 
 
-def lookup(
-    op: str, key: int, current: DataFrame | None = None
-) -> list[DataFrame] | None:
-    """Family `op`'s frames for `key`, refreshing its LRU position.
-
-    When `current` (any frame of the caller's session) is given, a hit
-    from a DIFFERENT applicationId is dropped instead of returned — those
-    handles are bound to a stopped SparkContext (same latent bug class the
-    r4 ADVICE flagged for the valid-trades cache)."""
-    if key is _UNVERIFIABLE:
-        return None  # input identity unknown: never serve a cached gen
-    gens = _GENERATIONS.get(op)
-    if gens is None or key not in gens:
-        return None
-    frames, _, owner = gens[key]
-    if current is not None and owner and owner != _app_id(current):
-        del gens[key]  # dead-session handles: no unpersist possible
-        return None
-    # an external spark.catalog.clearCache() unregisters the frames from
-    # the CacheManager but leaves this registry populated — without
-    # re-marking, every consumer silently recomputes the full build per
-    # action FOREVER after (found live: bench extras ran 6x slow after the
-    # streaming section's clearCache; same key == same input data, so
-    # re-persisting the identical plan is always safe)
-    for f in frames:
+def _repersist(value: object) -> None:
+    for f in _frames(value):
         try:
             sl = f.storageLevel
             if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
                 f.persist()
         except Exception:
-            pass  # storage introspection must never break a lookup
-    gens.move_to_end(key)
-    return frames
+            pass  # storage introspection must never break a hit
 
 
-def rotate(
-    op: str,
-    key: int,
-    frames: list[DataFrame],
-    paths: frozenset[str] = frozenset(),
-) -> None:
-    """Install `frames` as family `op`'s generation for `key`.  A repeat
-    key replaces the handle list WITHOUT unpersisting (the plans are
-    identical, so Spark's CacheManager backs both lists with the same
-    storage).  A new key first evicts any generation sharing an input
-    path (in-place rewrite — its cached blocks would be plan-matched and
-    served stale, see module doc), then evicts + unpersists LRU
-    generations beyond capacity."""
-    owner = _app_id(frames[0]) if frames else ""
+def memo(op: str, keyed: DataFrame, build: Callable[[], _T]) -> _T:
+    """Family `op`'s value for `keyed`'s input generation: the stored one
+    on a hit, else `build()`'s result, stored and returned (see the module
+    doc for the eviction policy)."""
+    key = _cache_key(keyed)
+    owner = _app_id(keyed)
+    gens = _GENERATIONS.get(op)
+    if key is not _UNVERIFIABLE and gens is not None and key in gens:
+        value, _, built_in = gens[key]
+        if not built_in or built_in == owner:
+            _repersist(value)
+            gens.move_to_end(key)
+            return value
+        del gens[key]  # dead-session handles: no unpersist possible
+    value = build()
+    paths = _input_paths(keyed)
     gens = _GENERATIONS.setdefault(op, OrderedDict())
-    if key in gens:
-        if key is _UNVERIFIABLE:
-            # unverifiable generations are never served (lookup refuses),
-            # and their plans may differ call-to-call — unpersist the
-            # previous one instead of assuming shared storage
-            _unpersist_all(gens[key][0])
-        gens.move_to_end(key)
-        gens[key] = (frames, paths, owner)
-        return
+    if key in gens:  # only the unverifiable slot is ever replaced
+        _release(gens.pop(key)[0])
     if paths:
         for stale in [k for k, (_, p, _o) in gens.items() if p & paths]:
-            old, _, _ = gens.pop(stale)
-            _unpersist_all(old)
-    gens[key] = (frames, paths, owner)
-    while len(gens) > GENERATIONS_PER_FAMILY:
-        _, (old, _, _) = gens.popitem(last=False)
-        _unpersist_all(old)
-
-
-def get_or_build(
-    op: str, keyed_df: DataFrame, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Return family `op`'s persisted frame for `keyed_df`'s generation,
-    building (and persisting) it via `build()` on a generation miss."""
-    key = cache_key(keyed_df)
-    hit = lookup(op, key, current=keyed_df)
-    if hit is not None:
-        return hit[0]
-    frame = build().persist()
-    rotate(op, key, [frame], input_paths(keyed_df))
-    return frame
+            _release(gens.pop(stale)[0])
+    gens[key] = (value, paths, owner)
+    servable = [k for k in gens if k is not _UNVERIFIABLE]
+    for old in servable[: max(0, len(servable) - GENERATIONS_PER_FAMILY)]:
+        _release(gens.pop(old)[0])
+    return value
 
 
 def clear(op: str | None = None) -> None:
     """Unpersist and drop every generation of `op` (or of ALL families) —
     test/teardown hook."""
-    ops = [op] if op is not None else list(_GENERATIONS)
-    for o in ops:
-        for frames, _, _ in _GENERATIONS.pop(o, OrderedDict()).values():
-            _unpersist_all(frames)
-    obj_ops = [op] if op is not None else list(_OBJ_GENERATIONS)
-    for o in obj_ops:
-        _OBJ_GENERATIONS.pop(o, None)
-
-
-# --- driver-side object generations -----------------------------------
-# Same generation discipline for BOUNDED driver-side artifacts that are
-# plain Python values rather than persisted frames: a trained k-means
-# codebook ({cid: centroid}, k×dim floats), a PQ codebook, a fitted
-# vocabulary.  These are deterministic functions of (input-data identity,
-# hyperparameters), so the composite key is (cache_key(input_df), params);
-# an in-place input rewrite changes cache_key and lands on a new
-# generation exactly like the frame cache.  No unpersist is needed —
-# eviction is plain dict removal — but capacity stays GENERATIONS_PER_
-# FAMILY so a session alternating two corpora never thrashes.
-
-_OBJ_GENERATIONS: dict[str, OrderedDict[tuple, object]] = {}
-
-
-def obj_lookup(op: str, key: tuple) -> object | None:
-    """Family `op`'s driver-side artifact for `key` (None on miss).
-    Keys containing the UNVERIFIABLE input marker are never served —
-    same correct-but-cold degradation as the frame cache."""
-    if _has_unverifiable(key):
-        return None
-    gens = _OBJ_GENERATIONS.get(op)
-    if gens is None or key not in gens:
-        return None
-    gens.move_to_end(key)
-    return gens[key]
-
-
-def obj_rotate(op: str, key: tuple, value: object) -> None:
-    """Install `value` as family `op`'s artifact for `key`, evicting
-    LRU generations beyond capacity.  Unverifiable keys are dropped, not
-    stored — obj_lookup can never serve them, so storing one would only
-    burn an LRU slot (r8 ADVICE)."""
-    if _has_unverifiable(key):
-        return
-    gens = _OBJ_GENERATIONS.setdefault(op, OrderedDict())
-    gens[key] = value
-    gens.move_to_end(key)
-    while len(gens) > GENERATIONS_PER_FAMILY:
-        gens.popitem(last=False)
+    for o in [op] if op is not None else list(_GENERATIONS):
+        for value, _, _ in _GENERATIONS.pop(o, OrderedDict()).values():
+            _release(value)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import (
     MERSENNE_P,
     h32,
@@ -38,6 +39,7 @@ from marketstream_etl_spark.operators.text import (
     fingerprint,
     fingerprint_sql,
 )
+from marketstream_etl_spark.sources.tables import spread
 
 SHINGLE_K = 3
 NUM_PERM = 16
@@ -73,39 +75,16 @@ EXACT_DEDUP_SQL = f"""
 
 # --- shingle inverted index (shared by jaccard + minhash verify) -----------
 
-# Generation-scoped cache bookkeeping: the lazy plans these operators return
-# must keep their persisted intermediates alive until the CALLER materializes
-# them, so unpersist-inside-the-builder is not an option (and eager
-# checkpointing measured slower than the lazy shape).  The persisted frames
-# also double as cross-call memoization: Spark's CacheManager substitutes a
-# cached plan into any LATER query with the same canonicalized subplan, so
-# a repeat call over the same input (bench loops, curation after dedup)
-# reuses the materialized shingle/band frames instead of recomputing them —
-# unpersisting eagerly measured 2× slower across the bench.  Each family
-# keeps a 2-generation LRU keyed by input-data identity: a new input
-# beyond capacity evicts (unpersists) the least-recently-used generation,
-# so a long-lived session alternating between two datasets never
-# thrashes, storage stays bounded, and the warm path stays warm.
-# Generalized in r5 into functions/cachegen.py (the text-analysis family
-# shares the same machinery, and each family now keeps a 2-generation
-# LRU); these aliases keep the dedup-local names earlier rounds'
-# documentation references.
-from marketstream_etl_spark.functions.cachegen import (  # noqa: E402
-    cache_key as _cache_key,
-    input_paths as _input_paths,
-    lookup as _lookup,
-    rotate as _rotate_caches,
-)
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """Small-file inputs arrive as one scan partition; the hash/shingle work
-    is CPU-bound, so spread it across the cluster before the heavy map.
-    (Generalized into sources.tables.spread in r7 — this alias keeps the
-    dedup-local name earlier rounds' documentation references.)"""
-    from marketstream_etl_spark.sources.tables import spread
-
-    return spread(docs)
+# Generation-cached intermediates (functions/cachegen.memo): the lazy plans
+# these operators return must keep their persisted intermediates alive until
+# the CALLER materializes them, so unpersist-inside-the-builder is not an
+# option (and eager checkpointing measured slower than the lazy shape).  The
+# persisted frames also double as cross-call memoization: Spark's
+# CacheManager substitutes a cached plan into any LATER query with the same
+# canonicalized subplan, so a repeat call over the same input (bench loops,
+# curation after dedup) reuses the materialized shingle/band frames instead
+# of recomputing them — unpersisting eagerly measured 2× slower across the
+# bench.
 
 
 def shingle_pairs_cached(docs: DataFrame) -> DataFrame:
@@ -115,12 +94,12 @@ def shingle_pairs_cached(docs: DataFrame) -> DataFrame:
     all derive from it, so the heavy tokenize→shingle→distinct pass runs
     ONCE per corpus generation instead of once per operator family.
     Memoized at the Python level (same DataFrame object handed to every
-    consumer) under its own rotation family, keyed by input-data identity
+    consumer) under its own memo family, keyed by input-data identity
     like every other generation cache."""
-    key = _cache_key(docs)
-    hit = _lookup("shingle_pairs", key, current=docs)
-    if hit is not None:
-        return hit[0]
+    return memo("shingle_pairs", docs, lambda: _shingle_pairs(docs))
+
+
+def _shingle_pairs(docs: DataFrame) -> DataFrame:
     # distinct-per-doc via array_distinct BEFORE the explode: rows from
     # different docs can never collide on (doc_id, shingle), so in-array
     # dedup is exactly equivalent to a global .distinct() — minus the
@@ -132,7 +111,7 @@ def shingle_pairs_cached(docs: DataFrame) -> DataFrame:
     # collapse through GenerateExec — a shingles-per-doc ~40x blowup on
     # the cold build, found live in r8's streaming twins)
     arrs = (
-        _spread(docs)
+        spread(docs)
         .select("doc_id", tokens(F.col("text")).alias("_toks"))
         .select(
             "doc_id",
@@ -140,11 +119,7 @@ def shingle_pairs_cached(docs: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    pairs = arrs.select(
-        "doc_id", F.explode("_sh").alias("shingle")
-    ).persist()
-    _rotate_caches("shingle_pairs", key, [pairs], _input_paths(docs))
-    return pairs
+    return arrs.select("doc_id", F.explode("_sh").alias("shingle")).persist()
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
@@ -154,10 +129,10 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
     of the intersection join), and without a materialization point the
     hot-shingle aggregate would re-run per consumer (measured ~2.5 s extra
     on the LSH cold path at sf0.1)."""
-    key = _cache_key(docs)
-    hit = _lookup("kept_shingles", key, current=docs)
-    if hit is not None:
-        return hit[0]
+    return memo("kept_shingles", docs, lambda: _kept_shingles(docs))
+
+
+def _kept_shingles(docs: DataFrame) -> DataFrame:
     pairs = shingle_pairs_cached(docs)
     hot = (
         pairs.groupBy("shingle")
@@ -165,9 +140,7 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
         .filter(F.col("df") > DF_CAP)
         .select("shingle")
     )
-    kept = pairs.join(F.broadcast(hot), "shingle", "left_anti").persist()
-    _rotate_caches("kept_shingles", key, [kept], _input_paths(docs))
-    return kept
+    return pairs.join(F.broadcast(hot), "shingle", "left_anti").persist()
 
 
 _DOC_SHINGLES_SQL = f"""
@@ -291,11 +264,18 @@ def minhash_lsh_pairs(
     # key): a caller with a non-default threshold gets its own generation
     # slot, so variants coexist instead of path-evicting each other, while
     # the data-identity key still guards against rewritten inputs
-    family = f"minhash_lsh[{NUM_PERM},{NUM_BANDS},{threshold}]"
-    gen_key = _cache_key(docs)
-    hit = _lookup(family, gen_key, current=docs)
-    if hit is not None:
-        return hit[-1]  # the persisted result frame
+    return memo(
+        f"minhash_lsh[{NUM_PERM},{NUM_BANDS},{threshold}]",
+        docs,
+        lambda: _lsh_generation(docs, threshold),
+    )[-1]
+
+
+def _lsh_generation(
+    docs: DataFrame, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """(bands, pairs): the persisted band keys and verified pairs of one
+    input generation."""
     r = NUM_PERM // NUM_BANDS
     sig = minhash_signatures(docs)
     bands = sig.select(
@@ -316,7 +296,6 @@ def minhash_lsh_pairs(
     ).select("doc_id", "band.band_id", "band.band_key").filter(
         F.col("band_key") != ""
     ).persist()  # both sides of the self-join reuse one signature pass
-    caches: list[DataFrame] = [bands]
     a = bands.alias("a")
     b = bands.alias("b")
     candidates = (
@@ -363,9 +342,7 @@ def minhash_lsh_pairs(
         # repeat calls resolve to this cache instead of re-running the
         # candidate join + verify
     )
-    caches.append(out)
-    _rotate_caches(family, gen_key, caches, _input_paths(docs))
-    return out
+    return bands, out
 
 
 def minhash_lsh_pairs_sql() -> str:
@@ -428,7 +405,7 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     collapses each map partition to n_docs × `bits` longs before the only
     shuffle; bit b is set iff 2·c_b > n.
     """
-    tok = _spread(docs).select(
+    tok = spread(docs).select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     )
     tok = tok.select("doc_id", h32(F.col("token")).alias("h"))
@@ -496,11 +473,18 @@ def simhash_near_pairs(
     bounded; both are SIMHASH_BITS / the chunk width here."""
     # the constants name the family (see minhash_lsh_pairs); approx_docs
     # is a planner hint only (never changes results) and stays out of both
-    family = f"simhash_pairs[{SIMHASH_BITS},{HAMMING_MAX}]"
-    gen_key = _cache_key(docs)
-    hit = _lookup(family, gen_key, current=docs)
-    if hit is not None:
-        return hit[-1]  # the persisted result frame
+    return memo(
+        f"simhash_pairs[{SIMHASH_BITS},{HAMMING_MAX}]",
+        docs,
+        lambda: _simhash_generation(docs, approx_docs),
+    )[-1]
+
+
+def _simhash_generation(
+    docs: DataFrame, approx_docs: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """(chunks, pairs): the persisted signature chunks and near pairs of
+    one input generation."""
     sig = simhash(docs, SIMHASH_BITS)
     n_chunks = 4
     chunk_bits = SIMHASH_BITS // n_chunks
@@ -566,10 +550,7 @@ def simhash_near_pairs(
         .distinct()
         .persist()  # tiny result; repeat calls and consumers hit the cache
     )
-    _rotate_caches(
-        family, gen_key, [cached_chunks, out], _input_paths(docs)
-    )
-    return out
+    return cached_chunks, out
 
 
 def simhash_near_pairs_sql() -> str:

@@ -30,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.functions.cachegen import (
-    cache_key as _cache_key,
-    input_paths as _input_paths,
-    lookup as _lookup,
-    rotate as _rotate_caches,
-)
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import tokens, tokens_sql
 
 
@@ -64,23 +59,20 @@ def _doc_bigrams(docs: DataFrame) -> DataFrame:
 
 def _token_streams(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(toks, bi) — the corpus token and bigram streams, materialized ONCE
-    per input generation under the shared rotation registry: every
-    consumer reads both ≥2 times, and without a persistence point the
-    regexp tokenize pass re-runs per subtree (the DuckDB oracles
-    MATERIALIZE the same two CTEs for the same reason)."""
-    key = _cache_key(docs)
-    hit = _lookup("lm_token_streams", key, current=docs)
-    if hit is not None:
-        toks, bi = hit
-    else:
-        toks = docs.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-        ).persist()
-        bi = _doc_bigrams(docs).persist()
-        _rotate_caches(
-            "lm_token_streams", key, [toks, bi], _input_paths(docs)
-        )
-    return toks, bi
+    per input generation (functions/cachegen.memo): every consumer reads
+    both ≥2 times, and without a persistence point the regexp tokenize
+    pass re-runs per subtree (the DuckDB oracles MATERIALIZE the same two
+    CTEs for the same reason)."""
+    return memo(
+        "lm_token_streams",
+        docs,
+        lambda: (
+            docs.select(
+                "doc_id", F.explode(tokens(F.col("text"))).alias("w")
+            ).persist(),
+            _doc_bigrams(docs).persist(),
+        ),
+    )
 
 
 def lm_perplexity(docs: DataFrame) -> DataFrame:

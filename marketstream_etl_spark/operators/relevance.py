@@ -26,12 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.functions.cachegen import (
-    cache_key as _cache_key,
-    input_paths as _input_paths,
-    lookup as _lookup,
-    rotate as _rotate_caches,
-)
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import tokens, tokens_sql
 from marketstream_etl_spark.functions.topk import top_k_per_key
 
@@ -65,12 +60,12 @@ def _bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
     the index, as in Lucene), so scoring never shuffle-joins the corpus
     by doc_id; `dl` is still returned for stats derivation and any
     aggregate consumer."""
+    return memo("bm25_postings", docs, lambda: _build_bm25_index(docs))
+
+
+def _build_bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
     from pyspark import StorageLevel
 
-    key = _cache_key(docs)
-    hit = _lookup("bm25_postings", key, current=docs)
-    if hit is not None:
-        return tuple(hit)
     post0 = _postings(docs)
     dl = post0.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     # dl is stored NEXT TO the postings (the Lucene-norms layout): the
@@ -106,9 +101,6 @@ def _bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     ).persist()
-    _rotate_caches(
-        "bm25_postings", key, [post, dl, dfreq, stats], _input_paths(docs)
-    )
     return post, dl, dfreq, stats
 
 

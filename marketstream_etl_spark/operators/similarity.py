@@ -24,7 +24,9 @@ from math import sqrt as math_sqrt
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.topk import top_k_per_key
+from marketstream_etl_spark.sources.tables import spread
 
 N_QUERIES = 8  # vec_id < 8 are the benchmark query vectors
 TOP_K = 5
@@ -49,9 +51,10 @@ def favg_fx(col: Column) -> Column:
     once in double space.  The plain ``F.avg`` it replaces merges
     per-partition double partial sums in nondeterministic order, which
     can flip the last decimal at a ``round()`` boundary once the input
-    is multi-partition (the r8 ``_spread_emb`` change made it so).  Same
-    discipline as the PSI/CUSUM families; the DuckDB oracles mirror the
-    identical expression so both engines see bit-identical doubles.
+    is multi-partition (the r8 spread of the embedding scan made it
+    so).  Same discipline as the PSI/CUSUM families; the DuckDB oracles
+    mirror the identical expression so both engines see bit-identical
+    doubles.
     """
     s = float(FX)
     return (
@@ -115,23 +118,10 @@ _COSINE_PAIR_SQL = """
 """
 
 
-def _spread_emb(emb: DataFrame) -> DataFrame:
-    """Repartition the embedding scan to cluster parallelism before the
-    CPU-bound per-row vector maps (cosine scans, centroid argmins, PQ
-    distances).  Small single-file corpora arrive as ONE scan partition
-    — measured at the 20K-vector sf1 probe: ann_bruteforce 2.3 s on one
-    thread vs 0.8 s spread — while at real scale the scan is already
-    parallel and this degrades to a cheap narrow shuffle (same contract
-    as sources.tables.spread, which this wraps)."""
-    from marketstream_etl_spark.sources.tables import spread
-
-    return spread(emb)
-
-
 def _vectors(emb: DataFrame) -> DataFrame:
     """(vec_id, vec array<double>): the spread embedding scan every
     vector operator scores."""
-    return _spread_emb(emb).select(
+    return spread(emb).select(
         "vec_id", _dvec(F.col("embedding")).alias("vec")
     )
 
@@ -183,7 +173,7 @@ def ann_bruteforce(
 def ann_bruteforce_gt_cached(emb: DataFrame) -> DataFrame:
     """Exact-top-k GROUND TRUTH (query_id, neighbor_id) persisted once
     per corpus generation — the recall probes' shared setup artifact
-    (functions/cachegen.py family, winnow_fps_cached precedent).
+    (functions/cachegen.memo).
 
     Every recall probe (ann_ivf_recall, ann_ivf_trained_recall,
     ann_pq_recall-style audits) joins its approximate ranking against
@@ -192,20 +182,11 @@ def ann_bruteforce_gt_cached(emb: DataFrame) -> DataFrame:
     frame is bounded (n_queries x k rows), so persisting it is the
     production posture: ground truth is computed once per corpus and
     reused for every index-quality audit."""
-    from marketstream_etl_spark.functions.cachegen import (
-        cache_key,
-        input_paths,
-        lookup,
-        rotate,
+    return memo(
+        "ann_gt",
+        emb,
+        lambda: ann_bruteforce(emb).select("query_id", "neighbor_id").persist(),
     )
-
-    key = cache_key(emb)
-    hit = lookup("ann_gt", key, current=emb)
-    if hit is not None:
-        return hit[0]
-    gt = ann_bruteforce(emb).select("query_id", "neighbor_id").persist()
-    rotate("ann_gt", key, [gt], input_paths(emb))
-    return gt
 
 
 def ann_bruteforce_sql_over(q_rel: str, e_rel: str) -> str:
@@ -875,7 +856,7 @@ def embedding_stats(emb: DataFrame) -> DataFrame:
     Scale: per-vector norms are map-side array HOFs; the centroid is a
     (label, dim) exploded aggregation — shuffle rows = labels × dims, not
     vectors × dims, thanks to map-side partial sums."""
-    base = _spread_emb(emb).select(
+    base = spread(emb).select(
         "label", norm(_dvec(F.col("embedding"))).alias("vnorm")
     )
     stats = base.groupBy("label").agg(
@@ -887,7 +868,7 @@ def embedding_stats(emb: DataFrame) -> DataFrame:
     # would be order-nondeterministic at the round() boundary.  cmean²
     # values are O(1e-2), so the squared layer uses a 1e-12 quantum.
     cent = (
-        _spread_emb(emb).select("label", _dvec(F.col("embedding")).alias("_v"))
+        spread(emb).select("label", _dvec(F.col("embedding")).alias("_v"))
         # barrier before posexplode: _dvec is an O(dim) transform that
         # would re-evaluate per emitted (pos, val) row (r8 collapse fix)
         .localCheckpoint(eager=False)
@@ -1000,7 +981,7 @@ def kmeans_train(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     Deterministic init: the first k vectors by vec_id.  Output: one row
     per surviving cluster with member count, within-cluster inertia, and
     the final centroid L2 norm."""
-    base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
+    base = spread(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
     cents = kmeans_fit(emb, iters=iters)
     final = _assign(base, cents)
     norm_map = F.create_map(
@@ -1027,7 +1008,7 @@ def kmeans_assign(
     (vec_id, cid) via the same broadcast-literal argmin as training
     (_assign), so downstream profiling ops never reach into the
     module's privates."""
-    base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
+    base = spread(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
     return _assign(base, cents).select("vec_id", "cid")
 
 
@@ -1040,24 +1021,23 @@ def kmeans_fit(
 
     The trained codebook is a bounded driver-side artifact (k x dim
     floats) that is a deterministic function of (corpus identity, k,
-    iters, dim), so it lives in the generation-cache family
-    (functions/cachegen.py obj_* — the winnow_fps_cached precedent,
+    iters, dim), so it is generation-cached (functions/cachegen.memo,
     r7): every consumer of the SAME corpus generation (kmeans_train,
     ann_ivf's trained path, cluster_profile, recall probes) shares one
     training run instead of each re-paying iters x (assign + agg)
     passes (~6.7 s at sf0.1).  A rewritten corpus lands on a new
-    cache_key, so stale codebooks are never served."""
-    from marketstream_etl_spark.functions.cachegen import (
-        cache_key,
-        obj_lookup,
-        obj_rotate,
+    generation key, so stale codebooks are never served.  The memo
+    holds its own copy: callers may mutate what they get back."""
+    cents = memo(
+        f"kmeans_codebook[{k},{iters},{EMB_DIM}]",
+        emb,
+        lambda: _lloyd(emb, k, iters),
     )
+    return {cid: list(c) for cid, c in cents.items()}
 
-    memo_key = (cache_key(emb), k, iters, EMB_DIM)
-    hit = obj_lookup("kmeans_codebook", memo_key)
-    if hit is not None:
-        return {cid: list(c) for cid, c in hit.items()}
-    base = _spread_emb(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
+
+def _lloyd(emb: DataFrame, k: int, iters: int) -> dict[int, list[float]]:
+    base = spread(emb).select("vec_id", _dvec(F.col("embedding")).alias("v"))
     # init = first k vec_ids; the k-row frame is collected anyway, so the
     # cid numbering happens driver-side — no window exec at all (a
     # no-partition Window here is bounded at k rows but still logs the
@@ -1079,8 +1059,7 @@ def kmeans_fit(
         cents = {
             r["cid"]: [r[f"c{d}"] for d in range(EMB_DIM)] for r in new_rows
         }
-    obj_rotate("kmeans_codebook", memo_key, cents)
-    return {cid: list(c) for cid, c in cents.items()}
+    return cents
 
 
 def kmeans_cent_rel(k: int = KMEANS_K) -> str:
@@ -1772,17 +1751,14 @@ def _ivfpq_served_index(
     (never from a query), the same cache-family contract as the BM25
     index.  The caller passes the coarse codebook handle it also probes
     with, so a cold serve collects and broadcasts it once."""
-    from marketstream_etl_spark.functions.cachegen import (
-        cache_key,
-        input_paths,
-        lookup,
-        rotate,
+    return memo(
+        "ivfpq_served", emb, lambda: _build_ivfpq_served(emb, codebook)
     )
 
-    key = cache_key(emb)
-    hit = lookup("ivfpq_served", key, current=emb)
-    if hit is not None:
-        return tuple(hit)
+
+def _build_ivfpq_served(
+    emb: DataFrame, codebook: _CodebookHandle
+) -> tuple[DataFrame, ...]:
     base = _vectors(emb)
     assigned = _nearest_buckets(
         base, codebook, "vec_id", "vec", 1, "bucket"
@@ -1790,7 +1766,6 @@ def _ivfpq_served_index(
     subs = _subvectors(base, "vec_id", "vec")
     cb = _pq_codebook(subs, PQ_K).persist()
     enc = pq_encode(subs, cb).persist()
-    rotate("ivfpq_served", key, [assigned, cb, enc], input_paths(emb))
     return assigned, cb, enc
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import tokens, tokens_sql
 
 # --- language ID ------------------------------------------------------------
@@ -334,10 +335,8 @@ def analyzed_documents_cached(docs: DataFrame) -> DataFrame:
     consumer — the standalone text_analysis query, the curation pipeline's
     quality gate and dedup keys — reads the persisted frame.  Same
     contract as dedup.shingle_pairs_cached."""
-    from marketstream_etl_spark.functions.cachegen import get_or_build
-
-    return get_or_build(
-        "analyzed_docs", docs, lambda: analyze_documents(docs)
+    return memo(
+        "analyzed_docs", docs, lambda: analyze_documents(docs).persist()
     )
 
 

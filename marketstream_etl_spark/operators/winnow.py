@@ -45,12 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from marketstream_etl_spark.functions.cachegen import (
-    cache_key as _cache_key,
-    input_paths as _input_paths,
-    lookup as _lookup,
-    rotate as _rotate_caches,
-)
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import (
     h32,
     h32_sql,
@@ -60,6 +55,7 @@ from marketstream_etl_spark.functions.hashing import (
     tokens_sql,
 )
 from marketstream_etl_spark.operators.dedup import SHINGLE_K
+from marketstream_etl_spark.sources.tables import spread
 
 WINNOW_W = 8  # window size: guarantee threshold = w + k - 1 tokens
 POS_BITS = 24
@@ -69,12 +65,10 @@ MIN_SHARED = 2
 
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fp, fp_pos): the winnowed fingerprint set per document."""
-    from marketstream_etl_spark.operators.dedup import _spread
-
     # small-file corpora arrive as ONE scan partition; the tokenize +
     # posexplode is CPU-bound, so spread before the heavy map (at scale
     # the scan is already parallel and this is a cheap (id, text) shuffle)
-    docs = _spread(docs)
+    docs = spread(docs)
     # checkpoint barrier before posexplode — same GenerateExec projection
     # collapse as the dedup family's shingle pairs (r8): without it the
     # gram-sequence chain re-evaluates once per emitted gram
@@ -124,13 +118,14 @@ def winnow_fps_cached(docs: DataFrame) -> DataFrame:
     posexplode + window upstream (~5 s of the op's 6.9 s at sf0.1);
     generation-keyed like the dedup family's shingle cache, so a
     rewritten corpus can never serve stale fingerprints."""
-    key = _cache_key(docs)
-    hit = _lookup("winnow_fps", key, current=docs)
-    if hit is not None:
-        return hit[0]
-    fps = winnow_fingerprints(docs).select("doc_id", "fp").distinct().persist()
-    _rotate_caches("winnow_fps", key, [fps], _input_paths(docs))
-    return fps
+    return memo(
+        "winnow_fps",
+        docs,
+        lambda: winnow_fingerprints(docs)
+        .select("doc_id", "fp")
+        .distinct()
+        .persist(),
+    )
 
 
 def winnowing_pairs(docs: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.cachegen import memo
 from marketstream_etl_spark.functions.hashing import h32_sql
 from marketstream_etl_spark.operators import changepoint
 from marketstream_etl_spark.operators.indicators import (
@@ -30,47 +31,30 @@ from marketstream_etl_spark.plans.trades_view import (
     load_trades,
 )
 from marketstream_etl_spark.registry import register
+from marketstream_etl_spark.sources.tables import load_table
 
 # computed_at stamp injected as a constant for deterministic oracle parity
 # (the reference stamps wall-clock ns at save time, DatabaseLoader.cpp:314-316).
 FIXED_COMPUTED_AT_NS = 1_698_208_500_000_000_000
 
-# Session-scoped persisted valid-trades frames, keyed by (application id,
-# sf_dir, source mtime).  The reference pipeline parses+validates once and
-# serves every indicator query from the in-memory batch
-# (PipelineExecutor.hpp:80-184); this is the engine's distributed analog —
-# the JSON-bearing projection and the validation ladder run once per source
-# generation, and the window/agg consumers (indicators, Wilder RSI, RSI
-# signals) read the cache.  Regenerated testdata changes the mtime key, so
-# stale entries are unpersisted and rebuilt, never served.
-_VALID_TRADES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 
 def _valid_trades_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from marketstream_etl_spark.sources.tables import source_key
+    """The persisted valid trades of `sf_dir`'s events generation.  The
+    reference pipeline parses+validates once and serves every indicator
+    query from the in-memory batch (PipelineExecutor.hpp:80-184); this is
+    the engine's distributed analog — the JSON-bearing projection and the
+    validation ladder run once per source generation, and the window/agg
+    consumers (indicators, Wilder RSI, RSI signals) read the cache.  The
+    valid trades come from events.parquet alone, so the events scan is
+    the exact generation key (functions/cachegen.memo)."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, source_key(sf_dir))
-    df = _VALID_TRADES_CACHE.get(key)
-    if df is None:
-        # evict superseded generations of THIS (appId, sf_dir) and any
-        # entry from a stopped session (different appId) — those hold
-        # DataFrame handles bound to a dead SparkContext (r4 ADVICE)
-        stale_keys = [
-            k
-            for k in list(_VALID_TRADES_CACHE)
-            if k[:2] == key[:2] or k[0] != key[0]
-        ]
-        for stale in stale_keys:
-            old = _VALID_TRADES_CACHE.pop(stale)
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # context already gone; dropping the handle suffices
+    def build() -> DataFrame:
         valid, _ = split_valid(load_trades(spark, sf_dir, fan_out=True))
         df = valid.persist()
         df.count()  # materialize now: consumers must never race to build it
-        _VALID_TRADES_CACHE[key] = df
-    return df
+        return df
+
+    return memo("valid_trades", load_table(spark, sf_dir, "events"), build)
 
 
 def q_trades_view(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,11 @@ from marketstream_etl_spark.operators.multimodal import (
 )
 from marketstream_etl_spark.registry import register
 from marketstream_etl_spark.sources import binary_assets, formats
-from marketstream_etl_spark.sources.tables import load_table, table_row_count
+from marketstream_etl_spark.sources.tables import (
+    load_table,
+    spread,
+    table_row_count,
+)
 
 
 def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2525,7 +2529,7 @@ def q_contamination_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work is CPU-bound — spread before the heavy map (measured 4.6 s
     # single-threaded vs sub-second across the cluster at sf0.1; at scale
     # the scan is already parallel and this is a cheap (id, text) shuffle)
-    docs = dedup._spread(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     is_bench = h32(F.col("doc_id").cast("string")) % 20 == 0
     bench_docs = docs.filter(is_bench)
     corpus_docs = docs.filter(~is_bench)

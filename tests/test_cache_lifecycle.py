@@ -4,14 +4,19 @@
   persisted intermediates per operator family — repeat calls over the
   same input reuse the warm frames, two alternating inputs coexist
   without thrash, and a third input evicts + unpersists the LRU one;
-- the analytics valid-trades cache is keyed by source mtime, so a
-  regenerated testdata directory is never served stale results.
+- the analytics valid-trades cache is keyed by the events file's
+  identity, so a regenerated testdata directory is never served stale
+  results;
+- every generation goes through functions/cachegen.memo, so clear()
+  releases all of them and no query unpersists one behind its back.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -192,3 +197,85 @@ def test_generation_survives_external_clearcache(spark, sf_dir):
     )
     # and it still computes the same thing
     assert again.count() == pairs.count()
+
+
+def _force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_clear_releases_the_valid_trades_generation(spark, sf_dir):
+    # persisted RDD ids, not counts: the context cleaner may drop an
+    # unrelated earlier RDD at any moment
+    def cached_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    cachegen.clear()
+    spark.catalog.clearCache()
+    before = cached_ids()
+    _force(analytics.q_indicators(spark, sf_dir))
+    built = cached_ids() - before
+    assert built
+    cachegen.clear()
+    assert not built & cached_ids()
+
+
+# one registered query per generation family (dedup_clusters reads the
+# shingle, kept-shingle and LSH families)
+ONE_QUERY_PER_FAMILY = (
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "simhash_pairs",
+    "bm25_search",
+    "lm_perplexity",
+    "winnowing_pairs",
+    "ann_ivf_recall",
+    "ann_ivfpq_served",
+    "kmeans_embeddings",
+    "text_analysis",
+    "indicators",
+)
+
+
+def _memo_families() -> set[str]:
+    """The family of every memo call in the package, hyperparameters cut."""
+    families = set()
+    pkg = Path(__file__).resolve().parents[1] / "marketstream_etl_spark"
+    for py in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", None))
+                == "memo"
+            ):
+                name = node.args[0]
+                if isinstance(name, ast.JoinedStr):
+                    name = name.values[0]
+                families.add(name.value.split("[")[0])
+    return families
+
+
+def test_no_query_evicts_a_generation(spark, sf_dir):
+    """A memo hit re-persists a frame that a caller unpersisted, so such an
+    eviction costs a rebuild, never a failure: check the registry itself
+    after every query."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    cachegen.clear()
+    for name in ONE_QUERY_PER_FAMILY:
+        _force(queries[name](spark, sf_dir))
+        dropped = [
+            family
+            for family, gens in cachegen._GENERATIONS.items()
+            for value, _, _ in gens.values()
+            for f in cachegen._frames(value)
+            if not (f.storageLevel.useMemory or f.storageLevel.useDisk)
+        ]
+        assert dropped == [], f"{name} unpersisted a generation of {dropped}"
+    seen = {
+        family.split("[")[0]
+        for family, gens in cachegen._GENERATIONS.items()
+        if gens
+    }
+    assert seen == _memo_families()
+    cachegen.clear()

@@ -176,13 +176,16 @@ def test_kmeans_fit_memo_hits_and_is_mutation_safe(spark):
     memo (defensive copies both ways)."""
     from marketstream_etl_spark.functions import cachegen
 
-    cachegen.clear("kmeans_codebook")
+    family = (
+        f"kmeans_codebook[{similarity.KMEANS_K},{similarity.KMEANS_ITERS},"
+        f"{similarity.EMB_DIM}]"
+    )
+    cachegen.clear(family)
     emb = _load_emb(spark)
     first = similarity.kmeans_fit(emb)
-    assert cachegen.obj_lookup is not None
     # memo is populated: the second call must hit it
-    fams = cachegen._OBJ_GENERATIONS.get("kmeans_codebook")
-    assert fams and len(fams) == 1
+    gens = cachegen._GENERATIONS.get(family)
+    assert gens and len(gens) == 1
     second = similarity.kmeans_fit(emb)
     assert first == second
     # caller-side mutation must not leak into the memoized artifact

@@ -515,6 +515,16 @@ def test_manifest_flags_a_distinct_aggregate_beside_a_sketch():
     assert gen_plan_manifest.node_counts(line.replace("(distinct ", "(")) == {}
 
 
+def test_manifest_entry_does_not_depend_on_build_order(spark):
+    """An entry's counts are the same built alone and built after a query
+    that materializes the generation caches it reads."""
+    queries = entrymod.queries()
+    alone = gen_plan_manifest.entry_counts(spark, queries["dedup_minhash_lsh"])
+    gen_plan_manifest.entry_counts(spark, queries["dedup_clusters"])
+    after = gen_plan_manifest.entry_counts(spark, queries["dedup_minhash_lsh"])
+    assert after == alone
+
+
 def test_committed_plan_manifest_is_current(tmp_path):
     """plans/manifest.json equals a fresh build, covers every batch query,
     and records no CartesianProduct, unpartitioned Window, collapsed

@@ -23,6 +23,10 @@ paid to learn, so a future edit cannot silently reintroduce them.
    call; an option no caller sets is a module constant.
 7. Runs from any checkout: no Python file names the absolute checkout
    path except __spark_entry__.py, whose loader is external.
+8. One generation cache: outside functions/cachegen.py no package module
+   imports OrderedDict or keeps a module-level dict annotated with
+   DataFrame; cachegen's public names are memo, clear, scan_coalesce and
+   GENERATIONS_PER_FAMILY, and no code imports any other name from it.
 """
 
 from __future__ import annotations
@@ -412,3 +416,79 @@ def test_no_absolute_checkout_path():
         "resolve the checkout from __file__ (Path(__file__).resolve()."
         f"parents[...]) instead of naming it; found: {offenders}"
     )
+
+
+CACHEGEN = "marketstream_etl_spark/functions/cachegen.py"
+CACHEGEN_IMPORTS = {"memo", "clear", "scan_coalesce"}
+CACHEGEN_EXPORTS = CACHEGEN_IMPORTS | {"GENERATIONS_PER_FAMILY"}
+
+
+def private_caches(src: str) -> list[str]:
+    """OrderedDict imports and module-level dicts annotated with DataFrame
+    in `src`: the makings of a cache beside cachegen.memo."""
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.alias) and node.name.endswith("OrderedDict"):
+            found.append(f"{node.lineno}: imports OrderedDict")
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.AnnAssign):
+            ann = ast.unparse(node.annotation)
+            if "dict" in ann.lower() and "DataFrame" in ann:
+                found.append(f"{node.lineno}: module-level {ann}")
+    return found
+
+
+def cachegen_imports(src: str) -> set[str]:
+    """Names imported from functions.cachegen in `src`."""
+    return {
+        a.name
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").endswith("functions.cachegen")
+        for a in node.names
+    }
+
+
+def test_rule8_detects_a_private_frame_cache():
+    src = (
+        "from collections import OrderedDict\n"
+        "_CACHE: dict[tuple[str, str], DataFrame] = {}\n"
+        "def f():\n    seen: dict[str, DataFrame] = {}\n"
+    )
+    assert private_caches(src) == [
+        "1: imports OrderedDict",
+        "2: module-level dict[tuple[str, str], DataFrame]",
+    ]
+
+
+def test_one_generation_cache():
+    offenders = [
+        f"{py.relative_to(ROOT).as_posix()}:{site}"
+        for py in PKG.rglob("*.py")
+        if py.relative_to(ROOT).as_posix() != CACHEGEN
+        for site in private_caches(py.read_text())
+    ]
+    assert offenders == [], (
+        "per-generation caching goes through functions/cachegen.memo, which "
+        f"owns keying and eviction; found: {offenders}"
+    )
+    importers = _py_files(
+        PKG, ROOT / "tools", ROOT / "bench.py", ROOT / "__spark_entry__.py",
+        ROOT / "tests",
+    )
+    imported = {
+        f"{py.relative_to(ROOT).as_posix()}: {name}"
+        for py in importers
+        for name in cachegen_imports(py.read_text())
+        if name not in CACHEGEN_IMPORTS
+    }
+    assert imported == set(), f"import only memo/clear/scan_coalesce: {imported}"
+    defined = set()
+    for node in ast.parse((ROOT / CACHEGEN).read_text()).body:
+        if isinstance(node, _DEFS):
+            defined.add(node.name)
+        elif isinstance(node, ast.Assign):
+            defined.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign):
+            defined.add(node.target.id)
+    assert {n for n in defined if not n.startswith("_")} == CACHEGEN_EXPORTS

@@ -17,7 +17,10 @@ at the start of its plan line, so ``BroadcastExchange`` is not also an
 ``Exchange``.  The session is pinned: ``defaultParallelism`` sizes some
 plans (scan coalescing, the layout fan-out), so the core count is a
 constant here, not the box's.  Spark job counts are left out: fixture
-tables are written on a cold run only.
+tables are written on a cold run only.  Every entry starts from empty
+caches (the generation registry and Spark's CacheManager), so its counts
+do not depend on the entries built before it: a cached frame's
+``InMemoryRelation`` prints its final adaptive plan.
 """
 
 import json
@@ -35,6 +38,7 @@ sys.path.insert(0, ROOT)
 
 # the package before the entry module, whose own sys.path line would
 # otherwise pick the package of another checkout
+from marketstream_etl_spark.functions import cachegen
 from marketstream_etl_spark.session import get_spark
 
 import __spark_entry__ as entry
@@ -129,6 +133,14 @@ def node_counts(plan: str) -> dict[str, int]:
     return counts
 
 
+def entry_counts(spark, fn) -> dict[str, int]:
+    """Counted nodes of one query's plan, built from empty caches."""
+    cachegen.clear()
+    spark.catalog.clearCache()
+    plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+    return node_counts(plan.toString())
+
+
 def render() -> str:
     spark = get_spark(
         "plan-manifest", master=MASTER, shuffle_partitions=SHUFFLE_PARTITIONS
@@ -139,10 +151,9 @@ def render() -> str:
             if not is_batch(name):
                 continue
             try:
-                plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+                counts = json.dumps(entry_counts(spark, fn), sort_keys=True)
             except Exception as e:
                 raise RuntimeError(f"batch query {name!r} failed to build") from e
-            counts = json.dumps(node_counts(plan.toString()), sort_keys=True)
             lines.append(f"{json.dumps(name)}: {counts}")
     finally:
         spark.stop()

@@ -270,14 +270,6 @@ class _CodebookHandle:
     - SHARED: every consumer in one query build (ann_ivfpq_served's
       index build and its per-batch probes) passes ONE handle, so each
       query build collects and broadcasts the codebook once.
-
-    Lifecycle (r12 ADVICE): the broadcast (~34 MB at the
-    CODEBOOK_MAX_CENTROIDS cap) is otherwise reclaimed only when the
-    ContextCleaner's GC-driven cleanup notices the handle is dead; a
-    long-lived session building many ANN/semantic-dedup queries can call
-    ``release()`` after a query's action completes to return the blocks
-    eagerly.  Queries built from a released handle will lazily re-collect
-    on next use, so release() is always safe.
     """
 
     def __init__(self, centroids: DataFrame):
@@ -303,16 +295,6 @@ class _CodebookHandle:
             sc = self._centroids.sparkSession.sparkContext
             self._bc = sc.broadcast(self._materialize())
         return self._bc.value
-
-    def release(self) -> None:
-        """Eagerly unpersist the broadcast blocks (driver-side only).
-
-        No-op if never materialized or already released; a later
-        ``arrays()`` re-collects and re-broadcasts.  Executor-side
-        rebuilt handles (``_centroids is None``) cannot release."""
-        if self._bc is not None and self._centroids is not None:
-            self._bc.unpersist(blocking=False)
-            self._bc = None
 
     def __reduce__(self):
         self.arrays()  # ensure the broadcast exists before shipping

@@ -117,18 +117,9 @@ def streaming_cms_heavy_hitters(spark, sf_dir: str) -> DataFrame:
     oracle as the batch query."""
     from pyspark.sql import functions as F
 
-    from marketstream_etl_spark.sources.tables import (
-        ensure_engine_confs,
-        load_table,
-    )
+    from marketstream_etl_spark.sources.tables import load_table, stream_table
 
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = stream_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
     cells = toks.select(
         F.explode(
@@ -676,11 +667,10 @@ def streaming_hll_cardinality(spark, sf_dir: str) -> DataFrame:
     streamed sketch is the product; the exact side exists to verify it,
     as in the batch op)."""
     from marketstream_etl_spark.operators.dedup import SHINGLE_K
-    from marketstream_etl_spark.sources.tables import load_table
-    from marketstream_etl_spark.streaming.docs import stream_documents
+    from marketstream_etl_spark.sources.tables import load_table, stream_table
     from marketstream_etl_spark.streaming.replay import accumulate_stream
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
 
     def partial(batch: DataFrame) -> DataFrame:
         from marketstream_etl_spark.sources.tables import spread
@@ -983,18 +973,9 @@ def streaming_hdr_quantiles(spark, sf_dir: str) -> DataFrame:
     shared verbatim, and the driver reuses the hdr_quantiles oracle.
     The exact-rank audit side reads the same table batch-side, as in the
     batch op."""
-    from marketstream_etl_spark.sources.tables import (
-        ensure_engine_confs,
-        load_table,
-    )
+    from marketstream_etl_spark.sources.tables import load_table, stream_table
 
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
-    li_stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
+    li_stream = stream_table(spark, sf_dir, "lineitem")
     counted_stream = (
         _hdr_cents(li_stream)
         .select(

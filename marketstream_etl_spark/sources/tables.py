@@ -2,7 +2,8 @@
 
 Thin wrappers over ``spark.read.parquet`` — the vectorized Parquet reader
 gives predicate pushdown, column pruning and row-group skipping for free, so
-there is nothing to hand-build here (SURVEY §4).
+there is nothing to hand-build here (SURVEY §4).  ``stream_table`` reads the
+same tables as bounded file-source streams.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from marketstream_etl_spark.schemas import TESTDATA_TABLES
 
@@ -156,27 +158,46 @@ def ensure_engine_confs(spark: SparkSession) -> None:
 # regenerated testdata file re-infers.  The inferred schema depends on
 # spark.sql.legacy.parquet.nanosAsLong, which ensure_engine_confs pins
 # before every inference, so entries are session-portable.
-_SCHEMA_CACHE: dict[tuple[str, int], object] = {}
+_SCHEMA_CACHE: dict[tuple[str, int], StructType] = {}
 
 
-def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
+def _table_schema(spark: SparkSession, path: str) -> StructType:
+    """The footer schema of one testdata table file, inferred once per
+    (path, mtime) and served from _SCHEMA_CACHE after that."""
     try:
-        mtime = os.stat(path).st_mtime_ns
+        key = (path, os.stat(path).st_mtime_ns)
     except OSError:
-        return spark.read.parquet(path)  # let Spark raise its own error
-    key = (path, mtime)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+        return spark.read.parquet(path).schema  # let Spark raise its own error
+    if key not in _SCHEMA_CACHE:
+        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return _SCHEMA_CACHE[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_engine_confs(spark)
-    df = _read_parquet_cached_schema(
-        spark, os.path.join(sf_dir, f"{name}.parquet")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_table_schema(spark, path)).parquet(path)
+    if name == "events":
+        df = normalize_event_ts(spark, df)
+    return df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The testdata table `name` as a bounded file-source stream: the
+    streaming twin of load_table, with the same cached schema and, for
+    events, the same int64 epoch-ns `ts`.
+
+    The file source reads a directory, so `sf_dir` is filtered down to
+    the one file with pathGlobFilter=<name>.parquet.  That needs the
+    testdata's single-file layout (tools/gen_sf1.write_single): the
+    part-NNNN files of a Spark-written table directory do not match the
+    filter, and the stream would replay nothing."""
+    ensure_engine_confs(spark)
+    schema = _table_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
     )
     if name == "events":
         df = normalize_event_ts(spark, df)

@@ -18,20 +18,7 @@ from pyspark.sql import functions as F
 from marketstream_etl_spark.functions.hashing import h32, shingles, tokens
 from marketstream_etl_spark.plans import training_data as batch
 from marketstream_etl_spark.registry import register
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a bounded file-source stream (same replay
-    contract as streaming.ticks.stream_events)."""
-    from marketstream_etl_spark.sources.tables import ensure_engine_confs
-
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+from marketstream_etl_spark.sources.tables import stream_table
 
 
 def file_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,7 +66,7 @@ def file_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (projection collapse through GenerateExec; measured 2.2 s to build
     # the arrays vs 104 s through the collapsed explode at sf1, a ~43x =
     # shingles-per-doc blowup), so each batch pins the arrays first.
-    docs = stream_documents(spark, sf_dir).filter(~is_bench).select(
+    docs = stream_table(spark, sf_dir, "documents").filter(~is_bench).select(
         "doc_id", "text"
     )
 
@@ -137,19 +124,6 @@ def file_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("streaming_contamination", file_stream_contamination, batch.CONTAMINATION_SQL)
 
 
-def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings.parquet as a bounded file-source stream."""
-    from marketstream_etl_spark.sources.tables import ensure_engine_confs
-
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def file_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online vector indexing — the streaming half of the IVF story:
     embeddings STREAM in and are assigned to their nearest coarse-codebook
@@ -181,7 +155,7 @@ def file_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
 
-    base = stream_embeddings(spark, sf_dir).select(
+    base = stream_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v")
     )
     occ = (
@@ -217,7 +191,7 @@ def file_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketstream_etl_spark.plans.training_data import chi2_by_source
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(tokens(F.col("text"))).alias("token")
     )
@@ -266,7 +240,7 @@ def file_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     grp = _calibration_counts(scored_from_raw(docs))
     state = drain_to_memory(
         grp, "stream_calibration", sf_dir, output_mode="complete"
@@ -298,7 +272,7 @@ def file_stream_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     grp = _roc_counts(scored_from_raw(docs))
     state = drain_to_memory(
         grp, "stream_roc", sf_dir, output_mode="complete"
@@ -327,7 +301,7 @@ def file_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
-    emb = stream_embeddings(spark, sf_dir)
+    emb = stream_table(spark, sf_dir, "embeddings")
     grp = _emb_drift_counts(emb)
     state = drain_to_memory(
         grp, "stream_emb_drift", sf_dir, output_mode="complete"
@@ -357,7 +331,7 @@ def file_stream_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from marketstream_etl_spark.streaming.replay import drain_to_memory
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     grp = _iv_counts(scored_from_raw(docs))
     state = drain_to_memory(
         grp, "stream_iv", sf_dir, output_mode="complete"

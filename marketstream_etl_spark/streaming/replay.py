@@ -4,8 +4,9 @@ Every streaming driver query follows the same contract: replay the
 events-derived VALID trades through a real Structured Streaming query
 (file source + availableNow), drain into a memory sink, and reduce the
 emissions to a final snapshot the DuckDB oracle can reproduce with batch
-SQL.  The scaffold lives here once so the replay contract (source schema,
-glob, sink naming, final-emission tie-break) has a single definition.
+SQL.  The scaffold lives here once so the replay contract (sink naming,
+final-emission tie-break) has a single definition; the source itself is
+sources/tables.stream_table.
 
 `run_bounded` is the one place a bounded (availableNow) query is started:
 every drain in the package, the bench and the tools goes through it, so
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from marketstream_etl_spark.sources.tables import sink_name
+from marketstream_etl_spark.sources.tables import sink_name, stream_table
 
 # Wall-clock bound on one bounded drain.  The slowest recorded streaming
 # query takes ~63 s (streaming_join_full_outer, sf0.01, 4-vCPU VM); the
@@ -63,9 +64,10 @@ def valid_trades_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a bounded stream, mapped to valid trades."""
     from marketstream_etl_spark.operators.validation import split_valid
     from marketstream_etl_spark.plans.trades_view import trades_from_events
-    from marketstream_etl_spark.streaming.ticks import stream_events
 
-    valid, _ = split_valid(trades_from_events(stream_events(spark, sf_dir)))
+    valid, _ = split_valid(
+        trades_from_events(stream_table(spark, sf_dir, "events"))
+    )
     return valid
 
 

@@ -14,6 +14,7 @@ full stream prefix (verified in tests against the batch implementation).
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterator
 from typing import Any
 
@@ -24,6 +25,17 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from marketstream_etl_spark.plans.trades_view import TRADES_CTE, VALID_WHERE
 from marketstream_etl_spark.registry import register
+
+# PySpark 4.1.2's applyInPandasWithState serializer pads each output batch
+# with all-NA rows and passes them to pd.concat
+# (pyspark/sql/pandas/serializers.py:1696), so pandas prints this
+# FutureWarning once per batch.  The Python workers import this module to
+# unpickle the state function, so the filter runs where it is raised.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA",
+    category=FutureWarning,
+)
 
 DEFAULT_PERIOD = 5
 

@@ -16,7 +16,11 @@ engine-native generalization for late data.
 
 from __future__ import annotations
 
+import socket as socketlib
+import threading
+from collections.abc import Iterable
 from contextlib import contextmanager
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +28,12 @@ from pyspark.sql import types as T
 
 from marketstream_etl_spark.registry import Oracle, register
 from marketstream_etl_spark.schemas import TICK_SCHEMA
-from marketstream_etl_spark.sources.tables import sink_name
+from marketstream_etl_spark.sources.tables import (
+    load_table,
+    sink_name,
+    stream_table,
+    table_row_count,
+)
 from marketstream_etl_spark.streaming.replay import (
     accumulate_stream,
     drain_to_memory,
@@ -69,27 +78,6 @@ def _batch_twin(attr: str) -> Oracle:
         return sql() if callable(sql) else sql
 
     return oracle
-
-
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic bounded replay of events.parquet as a file-source
-    stream, with `ts` normalized to int64 epoch-ns exactly like the batch
-    loader (sources/tables.normalize_event_ts) so streaming plans share the
-    batch time model."""
-    from marketstream_etl_spark.sources.tables import (
-        ensure_engine_confs,
-        normalize_event_ts,
-    )
-
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the file source wants a directory; glob-filter down to the one table
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_event_ts(spark, raw)
 
 
 def to_json_frames(
@@ -258,7 +246,7 @@ def file_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     websocket_demo.cpp:174-214)."""
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     counts = symbol_counts(hot_path_filter(trades_from_events(events)))
     drained = drain_to_memory(counts, "stream_counts", sf_dir, "complete")
     return drained.orderBy("symbol")
@@ -284,7 +272,7 @@ def file_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     stats = windowed_symbol_stats(
         hot_path_filter(trades_from_events(events)), window="1 minute"
     )
@@ -324,7 +312,7 @@ def file_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     ticks = hot_path_filter(trades_from_events(events)).withColumn(
         "event_time", F.timestamp_micros(F.expr("timestamp DIV 1000"))
     )
@@ -389,7 +377,7 @@ def file_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     real from_json ingest, and count the dead-letter split plus the
     clean-side volume.  The reference counts exactly this channel in
     TickClient.hpp:224-231; here the counter is a verifiable query."""
-    parsed = parse_json_frames(deadletter_frames(stream_events(spark, sf_dir)))
+    parsed = parse_json_frames(deadletter_frames(stream_table(spark, sf_dir, "events")))
     out = parsed.groupBy("parse_error").agg(
         F.count("*").alias("n_frames"),
         F.sum("volume").alias("total_volume"),
@@ -542,7 +530,7 @@ def file_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     average order-independent — float-sum determinism courtesy."""
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     trades = trades_from_events(events).withColumn(
         "event_time", F.timestamp_micros(F.expr("timestamp div 1000"))
     )
@@ -650,39 +638,9 @@ def socket_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage at Kafka — streaming/kafka.py); the ingest path under test — the
     socket source, JSON parse, error channel, stateful counts — is the real
     streaming machinery."""
-    import socket as socketlib
-    import threading
-
     payload = build_deadletter_payload(spark, sf_dir, "socket_stream_deadletter")
-    n_expected = len(payload)
-
-    server = socketlib.socket(socketlib.AF_INET, socketlib.SOCK_STREAM)
-    server.setsockopt(socketlib.SOL_SOCKET, socketlib.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", 0))
-    server.listen(1)
-    port = server.getsockname()[1]
-    done = threading.Event()
-    feed_error: list = []
-
-    def serve() -> None:
-        try:
-            conn, _ = server.accept()
-            try:
-                send_lines_chunked(conn, payload)
-                # keep the connection open until the reader has drained —
-                # the socket source treats a close as stream end mid-read
-                done.wait(timeout=120)
-            finally:
-                conn.close()
-        except Exception as e:  # noqa: BLE001 — surface to the drain loop
-            feed_error.append(e)
-        finally:
-            server.close()
-
-    threading.Thread(target=serve, daemon=True).start()
-
     return drain_deadletter_socket(
-        spark, port, n_expected, done, "stream_socket", sf_dir, feed_error
+        spark, LineFeed(payload), len(payload), "stream_socket", sf_dir
     )
 
 
@@ -703,40 +661,63 @@ def build_deadletter_payload(
     fail with a clear message, never OOM the driver or silently truncate
     (the counts are oracle-compared, so a silent cap would be a wrong
     answer)."""
-    from marketstream_etl_spark.sources.tables import load_table
-
-    frames = deadletter_frames(load_table(spark, sf_dir, "events"))
-    n_expected = frames.count()
-    if n_expected > SOCKET_EMITTER_MAX_ROWS:
+    # deadletter_frames is a 1:1 select over events, so the footer's row
+    # count is the frame count: the cap holds before any Spark job runs
+    n_frames = table_row_count(sf_dir, "events")
+    if n_frames is not None and n_frames > SOCKET_EMITTER_MAX_ROWS:
         raise EmitterCapExceeded(
-            f"{caller} fixture: {n_expected} frames exceeds "
+            f"{caller} fixture: {n_frames} frames exceeds "
             f"the driver-side emitter cap of {SOCKET_EMITTER_MAX_ROWS}; "
             "point this query at a smaller sf_dir or raise the cap knowingly"
         )
+    frames = deadletter_frames(load_table(spark, sf_dir, "events"))
     return [r.value for r in frames.collect()]
 
 
 SOCKET_SEND_LINES = 1000  # lines per socket write
+# Wall-clock bound on one live socket drain, and on how long a LineFeed
+# waits for its reader; the README decision note "Stream deadline" gives
+# the evidence.
+LIVE_DRAIN_DEADLINE_S = 120
 
 
-def send_lines_chunked(conn, lines: list[str]) -> None:
-    """Emit lines over a socket in SOCKET_SEND_LINES-line writes —
-    never one giant wire buffer, never one syscall per line.  Shared by
-    the plain-TCP emitter and the WebSocket bridge (the two feeds of
-    drain_deadletter_socket)."""
-    for i in range(0, len(lines), SOCKET_SEND_LINES):
-        chunk = lines[i : i + SOCKET_SEND_LINES]
-        conn.sendall(("\n".join(chunk) + "\n").encode())
+class LineFeed:
+    """The one localhost line server that Spark's socket source reads: it
+    binds 127.0.0.1:0, accepts one client and sends `lines` in
+    SOCKET_SEND_LINES-line writes (never one giant wire buffer, never one
+    syscall per line).  `lines` may be a generator; it is iterated on the
+    feed's own thread.  The connection stays open until `done` is set,
+    because the socket source treats a close as stream end mid-read; any
+    exception the feed meets is kept in `error`."""
+
+    def __init__(self, lines: Iterable[str]):
+        self._server = socketlib.create_server(("127.0.0.1", 0), backlog=1)
+        self._server.settimeout(LIVE_DRAIN_DEADLINE_S)
+        self.port = self._server.getsockname()[1]
+        self.done = threading.Event()
+        self.error: Exception | None = None
+        threading.Thread(target=self._serve, args=(lines,), daemon=True).start()
+
+    def _serve(self, lines: Iterable[str]) -> None:
+        try:
+            conn, _ = self._server.accept()
+            with conn:
+                it = iter(lines)
+                while chunk := list(islice(it, SOCKET_SEND_LINES)):
+                    conn.sendall(("\n".join(chunk) + "\n").encode())
+                self.done.wait(timeout=LIVE_DRAIN_DEADLINE_S)
+        except Exception as e:  # noqa: BLE001 — surfaced by the drain loop
+            self.error = e
+        finally:
+            self._server.close()
 
 
 def drain_deadletter_socket(
     spark: SparkSession,
-    port: int,
+    feed: LineFeed,
     n_expected: int,
-    done,
     name_prefix: str,
     sf_dir: str,
-    feed_error: list,
 ) -> DataFrame:
     """Shared ingest tail for the network dead-letter queries: socket
     source → JSON parse → error split → complete-mode counts, drained
@@ -744,16 +725,15 @@ def drain_deadletter_socket(
     the socket source is non-replayable, so a partial table is
     permanently wrong).
 
-    `feed_error`: the list the feeder thread appends its exception to;
-    the poll loop checks it each tick and aborts with the ROOT cause
-    immediately instead of stalling out the full deadline on a bogus
-    count mismatch."""
+    The poll loop checks `feed.error` each tick and aborts with the ROOT
+    cause immediately instead of stalling out the full deadline on a
+    bogus count mismatch."""
     import time
 
     lines = (
         spark.readStream.format("socket")
         .option("host", "127.0.0.1")
-        .option("port", port)
+        .option("port", feed.port)
         .load()
     )
     parsed = parse_json_frames(lines)
@@ -773,13 +753,13 @@ def drain_deadletter_socket(
                 .outputMode("complete")
                 .start()
             )
-            deadline = time.time() + 120
+            deadline = time.time() + LIVE_DRAIN_DEADLINE_S
             counted = None
             while time.time() < deadline:
-                if feed_error:
+                if feed.error is not None:
                     raise RuntimeError(
                         f"{name_prefix}: feeder thread failed"
-                    ) from feed_error[0]
+                    ) from feed.error
                 counted = spark.table(name).agg(F.sum("n_frames")).first()[0]
                 if counted == n_expected:
                     break
@@ -789,12 +769,13 @@ def drain_deadletter_socket(
             if counted != n_expected:
                 raise RuntimeError(
                     f"{name_prefix}: drained {counted} of "
-                    f"{n_expected} frames before the 120s deadline"
+                    f"{n_expected} frames before the "
+                    f"{LIVE_DRAIN_DEADLINE_S}s deadline"
                 )
         finally:
             if q is not None:
                 q.stop()
-            done.set()
+            feed.done.set()
     return spark.table(name).orderBy("parse_error")
 
 
@@ -815,7 +796,7 @@ def file_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL as the batch query.  Per-user stats are a batch step over the sink
     table — chaining a second stateful aggregation onto the session window
     is deliberately avoided."""
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     with_ts = events.select(
         "user_id",
         F.timestamp_micros(F.expr("ts div 1000")).alias("event_time"),
@@ -858,7 +839,7 @@ def file_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch counts — oracle-checkable."""
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     trades = trades_from_events(events)
     doubled = trades.withColumn(
         "_copy", F.explode(F.array(F.lit(1), F.lit(2)))
@@ -899,7 +880,7 @@ def file_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     watermark), deduped per-symbol counts equal the plain batch counts."""
     from marketstream_etl_spark.plans.trades_view import trades_from_events
 
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     trades = trades_from_events(events)
     doubled = trades.withColumn(
         "_copy", F.explode(F.array(F.lit(1), F.lit(2)))
@@ -952,7 +933,7 @@ def file_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("price").alias("mu"),
         F.stddev_samp("price").alias("sd"),
     )
-    stream = hot_path_filter(trades_from_events(stream_events(spark, sf_dir)))
+    stream = hot_path_filter(trades_from_events(stream_table(spark, sf_dir, "events")))
     abs_z = F.when(
         F.col("sd") > 0, F.abs((F.col("price") - F.col("mu")) / F.col("sd"))
     ).otherwise(F.lit(0.0))
@@ -1004,10 +985,7 @@ def _sentineled_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from marketstream_etl_spark.plans.trades_view import trades_from_events
-    from marketstream_etl_spark.sources.tables import (
-        load_table,
-        warehouse_path,
-    )
+    from marketstream_etl_spark.sources.tables import warehouse_path
 
     day_ns = 86_400_000_000_000
     sent_dir = warehouse_path(spark, "join_outer_sentinel", sf_dir)
@@ -1062,7 +1040,7 @@ def _sentineled_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "sent*.parquet")
         .parquet(sent_dir)
     )
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     trades = trades_from_events(events).select(
         "symbol", "price", "side", F.col("timestamp").alias("ts_ns")
     )
@@ -1278,15 +1256,8 @@ def file_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         benford_digit_col,
         benford_from_counts,
     )
-    from marketstream_etl_spark.sources.tables import ensure_engine_confs
 
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    orders = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    orders = stream_table(spark, sf_dir, "orders")
     counts_stream = (
         orders.filter(F.col("o_totalprice") >= 1.0)
         .groupBy(benford_digit_col().alias("digit"))
@@ -1313,7 +1284,7 @@ def _drift_histogram(
     from marketstream_etl_spark.plans.advanced import psi_bucket_col
 
     hist = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(
             F.col("event_type").alias("segment"),

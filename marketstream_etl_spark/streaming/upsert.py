@@ -56,7 +56,6 @@ def file_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from marketstream_etl_spark.plans.trades_view import trades_from_events
     from marketstream_etl_spark.sources.tables import warehouse_path
-    from marketstream_etl_spark.streaming.ticks import stream_events
 
     # create-once 4-file replay fixture: any split yields the same final
     # snapshot (latest-per-key is associative), so non-deterministic

@@ -43,7 +43,12 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from marketstream_etl_spark.registry import register
-from marketstream_etl_spark.streaming.ticks import STREAMING_DEADLETTER_ORACLE
+from marketstream_etl_spark.streaming.ticks import (
+    STREAMING_DEADLETTER_ORACLE,
+    LineFeed,
+    build_deadletter_payload,
+    drain_deadletter_socket,
+)
 
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
 
@@ -204,8 +209,8 @@ class WSTickServer:
             )
             # chunked writes: one sendall per 1000 frames, not per frame —
             # the decode side is a streaming parser, so frame boundaries
-            # need not align with writes (same batching rationale as the
-            # plain-TCP twin's line emitter)
+            # need not align with writes (same batching rationale as
+            # ticks.LineFeed)
             for i in range(0, len(self._payloads), 1000):
                 conn.sendall(
                     b"".join(
@@ -311,63 +316,16 @@ def websocket_stream_deadletter(
     all genuinely exercised on every run (the server asserts a clean
     masked CLOSE echo before the query returns).  Downstream is the
     shared dead-letter tail, so the same batch oracle applies."""
-    from marketstream_etl_spark.streaming.ticks import (
-        build_deadletter_payload,
-        drain_deadletter_socket,
-    )
-
     payload = build_deadletter_payload(
         spark, sf_dir, "websocket_stream_deadletter"
     )
-    n_expected = len(payload)
-
     ws = WSTickServer(payload)
     threading.Thread(target=ws.serve_forever_once, daemon=True).start()
-
-    # bridge: WS client → plain line socket for Spark's socket source
-    bridge = socketlib.socket(socketlib.AF_INET, socketlib.SOCK_STREAM)
-    bridge.setsockopt(socketlib.SOL_SOCKET, socketlib.SO_REUSEADDR, 1)
-    bridge.bind(("127.0.0.1", 0))
-    bridge.listen(1)
-    bridge_port = bridge.getsockname()[1]
-    done = threading.Event()
-
-    feed_error: list = []
-
-    def run_bridge() -> None:
-        conn, _ = bridge.accept()
-        try:
-            from marketstream_etl_spark.streaming.ticks import (
-                send_lines_chunked,
-            )
-
-            batch: list[str] = []
-            for msg in ws_client_frames("127.0.0.1", ws.port):
-                batch.append(msg)
-                if len(batch) >= 1000:
-                    send_lines_chunked(conn, batch)
-                    batch = []
-            if batch:
-                send_lines_chunked(conn, batch)
-            done.wait(timeout=120)
-        except Exception as e:  # noqa: BLE001 — surface to the drain loop
-            # the drain poll aborts with THIS as the root cause instead of
-            # stalling out its deadline on a bogus count mismatch
-            feed_error.append(e)
-        finally:
-            conn.close()
-            bridge.close()
-
-    threading.Thread(target=run_bridge, daemon=True).start()
-
+    # the bridge: the WS client's decoded messages are the lines that
+    # Spark's socket source reads
+    bridge = LineFeed(ws_client_frames("127.0.0.1", ws.port))
     out = drain_deadletter_socket(
-        spark,
-        bridge_port,
-        n_expected,
-        done,
-        "stream_websocket",
-        sf_dir,
-        feed_error=feed_error,
+        spark, bridge, len(payload), "stream_websocket", sf_dir
     )
     if not ws.closed_clean.wait(timeout=30):
         raise RuntimeError(

@@ -27,6 +27,11 @@ paid to learn, so a future edit cannot silently reintroduce them.
    imports OrderedDict or keeps a module-level dict annotated with
    DataFrame; cachegen's public names are memo, clear, scan_coalesce and
    GENERATIONS_PER_FAMILY, and no code imports any other name from it.
+9. One table stream: outside sources/tables.py no package code opens a
+   file-source stream over sf_dir (a readStream chain ending in
+   .parquet(sf_dir)); testdata tables stream through
+   tables.stream_table, beside load_table.  A stream over a directory
+   the package wrote itself (a replay fixture) is not a testdata table.
 """
 
 from __future__ import annotations
@@ -492,3 +497,59 @@ def test_one_generation_cache():
         elif isinstance(node, ast.AnnAssign):
             defined.add(node.target.id)
     assert {n for n in defined if not n.startswith("_")} == CACHEGEN_EXPORTS
+
+
+TABLES = "marketstream_etl_spark/sources/tables.py"
+
+
+def table_stream_sites(src: str) -> list[str]:
+    """The enclosing function of every readStream….parquet(sf_dir) call
+    in `src`."""
+    sites: list[str] = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+                and _chain_has_attr(child.func.value, "readStream")
+                and any(
+                    isinstance(a, ast.Name) and a.id == "sf_dir"
+                    for a in child.args
+                )
+            ):
+                sites.append(fn)
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else fn)
+
+    visit(ast.parse(src), "<module>")
+    return sites
+
+
+def test_rule9_detects_a_hand_written_table_stream():
+    src = (
+        "def docs(spark, sf_dir):\n"
+        "    schema = spark.read.parquet(sf_dir).schema\n"
+        "    return spark.readStream.schema(schema).option(\n"
+        "        'pathGlobFilter', 'documents.parquet').parquet(sf_dir)\n"
+        "\n\n"
+        "def replay(spark, replay_dir):\n"
+        "    return spark.readStream.schema('v string').parquet(replay_dir)\n"
+    )
+    assert table_stream_sites(src) == ["docs"]
+
+
+def test_testdata_tables_stream_only_through_stream_table():
+    offenders = [
+        f"{py.relative_to(ROOT).as_posix()}:{fn}"
+        for py in PKG.rglob("*.py")
+        if py.relative_to(ROOT).as_posix() != TABLES
+        for fn in table_stream_sites(py.read_text())
+    ]
+    assert offenders == [], (
+        "a testdata table streams through sources/tables.stream_table, "
+        "which owns the cached schema, the file filter and the events ts "
+        f"normalization; found: {offenders}"
+    )
+    assert table_stream_sites((ROOT / TABLES).read_text()) == ["stream_table"]

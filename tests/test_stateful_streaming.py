@@ -96,3 +96,36 @@ def test_file_stream_stateful_equals_batch(spark, sf_dir):
         .collect()
     }
     assert streamed == batch and len(streamed) > 0
+
+
+def test_stateful_query_prints_no_pandas_concat_warning(sf_dir, tmp_path):
+    """The applyInPandasWithState output path stays quiet: PySpark pads
+    each output batch with all-NA rows before pd.concat, and pandas warns
+    about that once per batch in the Python worker.  A fresh process, so
+    its workers import stateful.py themselves."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import sys
+sys.path.insert(0, {root!r})
+from marketstream_etl_spark.session import get_spark
+from marketstream_etl_spark.streaming.stateful import (
+    file_stream_stateful_indicators,
+)
+
+spark = get_spark("stateful-quiet", master="local[2]")
+print(file_stream_stateful_indicators(spark, {sf_dir!r}).count())
+"""
+    done = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert int(done.stdout.strip().splitlines()[-1]) > 0
+    assert "concatenation with empty or all-NA" not in done.stderr

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -204,38 +205,64 @@ def test_file_stream_sessions_equals_batch(spark, sf_dir):
     assert streamed == batch and len(streamed) > 0
 
 
-def test_socket_emitter_cap_fails_loudly(spark, monkeypatch):
+def test_socket_emitter_cap_fails_loudly(spark, sf_dir, monkeypatch):
     """The socket fixture's driver-side buffer is bounded: exceeding
     SOCKET_EMITTER_MAX_ROWS must raise before any collect, not OOM or
-    silently truncate (counts are oracle-compared)."""
-    import pytest
+    silently truncate (counts are oracle-compared).  The cap is read
+    from the parquet footer, so no Spark job runs before the raise."""
+    import uuid
 
     from marketstream_etl_spark.streaming import ticks as ticksmod
 
+    sc = spark.sparkContext
+    group = f"emitter-cap-{uuid.uuid4().hex}"
     monkeypatch.setattr(ticksmod, "SOCKET_EMITTER_MAX_ROWS", 5)
-    with pytest.raises(RuntimeError, match="emitter cap"):
-        ticksmod.socket_stream_deadletter(spark, "/root/testdata/sf0.001")
+    sc.setJobGroup(group, "emitter cap")
+    try:
+        with pytest.raises(RuntimeError, match="emitter cap"):
+            ticksmod.socket_stream_deadletter(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_socket_feeder_failure_is_the_drain_error(spark, sf_dir, monkeypatch):
-    """A plain-TCP feeder that raises ends the drain within seconds, with
-    the feeder's error as the cause, not a count mismatch at the drain's
-    120 s deadline."""
+@pytest.mark.parametrize("query", ["streaming_socket", "streaming_websocket"])
+def test_socket_feeder_failure_is_the_drain_error(
+    spark, sf_dir, monkeypatch, query
+):
+    """A feed whose lines raise ends the drain within seconds, with that
+    error as the cause, not a count mismatch at the drain's deadline.
+    The plain-TCP feed fails in its payload; the WebSocket feed fails in
+    the bridge's client after a complete WS exchange."""
     import time
 
-    import pytest
-
+    from marketstream_etl_spark.registry import QUERIES
     from marketstream_etl_spark.streaming import ticks as ticksmod
+    from marketstream_etl_spark.streaming import websocket as wsmod
 
-    broken = OSError("feeder write failed")
+    broken = OSError("feed failed")
 
-    def fail(conn, lines):
+    def first_then_fail(lines):
+        # list(): a WebSocket client first completes its CLOSE exchange
+        yield list(lines)[0]
         raise broken
 
-    monkeypatch.setattr(ticksmod, "send_lines_chunked", fail)
+    if query == "streaming_socket":
+        feed = ticksmod.LineFeed
+        monkeypatch.setattr(
+            ticksmod, "LineFeed", lambda lines: feed(first_then_fail(lines))
+        )
+    else:
+        frames = wsmod.ws_client_frames
+        monkeypatch.setattr(
+            wsmod,
+            "ws_client_frames",
+            lambda host, port: first_then_fail(frames(host, port)),
+        )
     start = time.monotonic()
     with pytest.raises(RuntimeError) as raised:
-        ticksmod.socket_stream_deadletter(spark, sf_dir)
+        QUERIES[query](spark, sf_dir)
     assert raised.value.__cause__ is broken
     assert time.monotonic() - start < 30
 

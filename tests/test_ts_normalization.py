@@ -16,7 +16,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from marketstream_etl_spark.sources.tables import load_table
+from marketstream_etl_spark.sources import tables
+from marketstream_etl_spark.sources.tables import load_table, stream_table
 
 TS_US = [1_704_067_200_000_000, 1_704_067_200_123_456, 1_735_689_599_999_999]
 
@@ -46,6 +47,31 @@ def test_load_table_yields_epoch_ns(spark, tmp_path, unit):
     assert dict(df.dtypes)["ts"] == "bigint"
     got = [r.ts for r in df.orderBy("event_id").collect()]
     assert got == [t * 1000 for t in TS_US]
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_stream_table_matches_load_table(spark, tmp_path, monkeypatch, unit):
+    """The file-source replay of events has load_table's columns and
+    types (ts normalized to epoch-ns) and reads the schema load_table
+    cached instead of inferring it from the footer again."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sf_dir = _write_events(str(tmp_path), unit)
+    batch = load_table(spark, sf_dir, "events")
+    path = os.path.join(sf_dir, "events.parquet")
+    assert (path, os.stat(path).st_mtime_ns) in tables._SCHEMA_CACHE
+    inferred = []
+    real = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader,
+        "parquet",
+        lambda self, *paths, **kw: inferred.append(paths) or real(self, *paths, **kw),
+    )
+    stream = stream_table(spark, sf_dir, "events")
+    assert stream.isStreaming
+    assert stream.dtypes == batch.dtypes
+    assert dict(stream.dtypes)["ts"] == "bigint"
+    assert inferred == []
 
 
 def test_caller_timezone_survives_load_table(spark, tmp_path):

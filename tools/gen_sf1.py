@@ -41,7 +41,7 @@ T0_US = 1_704_067_200_000_000  # 2024-01-01 UTC, the testdata epoch
 def write_single(df, path: str) -> None:
     """Write `df` as ONE parquet FILE at `path` — the driver testdata's
     layout.  A directory-of-part-files layout silently breaks the
-    streaming sources: stream_events/stream_documents filter scan files
+    streaming sources: sources/tables.stream_table filters scan files
     with pathGlobFilter=<table>.parquet, which matches the single file
     but not the part-NNNN names inside a directory, so every streaming
     query would replay an EMPTY stream (found live: the first sf1 sweep

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.fixedpoint import to_fx
+
 CUSUM_K_DIV = 1000  # slack = mean_e4 // 1000  (0.1% of mean)
 CUSUM_H_DIV = 100   # threshold = mean_e4 // 100 (1% of mean)
 
@@ -86,12 +88,9 @@ def cusum_changepoints(trades: DataFrame) -> DataFrame:
         trades.withColumn("bar", F.expr("timestamp DIV 60000000000"))
         .groupBy("symbol", "bar")
         .agg(
-            F.floor(
-                F.round(F.max(key).getField("price"), 4) * F.lit(1e4)
-                + F.lit(0.5)
+            to_fx(F.round(F.max(key).getField("price"), 4), 10_000).alias(
+                "close_e4"
             )
-            .cast("long")
-            .alias("close_e4")
         )
     )
     return (

@@ -25,6 +25,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.cachegen import memo
+from marketstream_etl_spark.functions.fixedpoint import (
+    FX,
+    avg_fx_sql,
+    favg_fx,
+    fsum_fx,
+    half_up_np,
+    sum_fx_sql,
+    to_fx,
+)
 from marketstream_etl_spark.functions.topk import top_k_per_key
 from marketstream_etl_spark.sources.tables import spread
 
@@ -37,53 +46,6 @@ NEARDUP_COSINE = 0.30  # testdata embeddings are near-orthogonal; 0.95 in prod
 
 def _dvec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
-
-
-FX = 1_000_000  # 1e-6 fixed-point quantum (the repo-wide exact-sum scale)
-
-
-def favg_fx(col: Column) -> Column:
-    """Order-independent mean of a double column.
-
-    Quantize each value to BIGINT fixed point (round-half-up), sum
-    exactly — integer addition is associative/commutative, so partition
-    count and partial-merge order cannot change the result — then divide
-    once in double space.  The plain ``F.avg`` it replaces merges
-    per-partition double partial sums in nondeterministic order, which
-    can flip the last decimal at a ``round()`` boundary once the input
-    is multi-partition (the r8 spread of the embedding scan made it
-    so).  Same discipline as the PSI/CUSUM families; the DuckDB oracles
-    mirror the identical expression so both engines see bit-identical
-    doubles.
-    """
-    s = float(FX)
-    return (
-        F.sum(F.floor(col * F.lit(s) + F.lit(0.5))).cast("double")
-        / F.count(F.lit(1))
-        / F.lit(s)
-    )
-
-
-def fsum_fx(col: Column, scale: int = FX) -> Column:
-    """Order-independent sum of a double column (see favg_fx)."""
-    s = float(scale)
-    return F.sum(F.floor(col * F.lit(s) + F.lit(0.5))).cast("double") / F.lit(s)
-
-
-def avg_fx_sql(expr: str) -> str:
-    """DuckDB twin of favg_fx — identical op order, identical doubles."""
-    return (
-        f"CAST(sum(CAST(floor(({expr}) * {FX} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / count(*) / {FX}"
-    )
-
-
-def sum_fx_sql(expr: str, scale: int = FX) -> str:
-    """DuckDB twin of fsum_fx."""
-    return (
-        f"CAST(sum(CAST(floor(({expr}) * {scale} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / {scale}"
-    )
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1833,11 +1795,7 @@ def embedding_quantize_error(emb: DataFrame) -> DataFrame:
     scaled = elems.join(F.broadcast(dims), "pos")
     span = F.col("mx") - F.col("mn")
     q = F.when(
-        span > 0,
-        F.floor(
-            (F.col("x") - F.col("mn")) / span * F.lit(QUANT_LEVELS)
-            + F.lit(0.5)
-        ),
+        span > 0, to_fx((F.col("x") - F.col("mn")) / span, QUANT_LEVELS)
     ).otherwise(F.lit(0))
     deq = F.when(
         span > 0, F.col("mn") + q / F.lit(QUANT_LEVELS) * span
@@ -1896,7 +1854,7 @@ def _semantic_assign(df: DataFrame, codebook: _CodebookHandle) -> DataFrame:
     import pandas as pd
 
     def emit(ids, ranked, top_cos):
-        e6 = np.floor(top_cos * 1e6 + 0.5)
+        e6 = half_up_np(top_cos * float(FX))
         nan = np.isnan(top_cos)
         if nan.any():  # NaN ccos -> NULL cent_e6, like the cast
             cent = pd.array(np.where(nan, 0, e6).astype(np.int64), dtype="Int64")

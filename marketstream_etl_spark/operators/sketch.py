@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.fixedpoint import to_fx
 from marketstream_etl_spark.functions.hashing import (
     h32,
     h32_sql,
@@ -383,7 +384,7 @@ def _hll_report(regs: DataFrame, keyed: DataFrame) -> DataFrame:
         + empty * F.lit(1 << (HLL_WBITS + 1)).cast("long")
     )
     est = F.lit(HLL_NUMERATOR) / t_scaled.cast("double")
-    est_e4 = F.floor(est * 10000.0 + 0.5).cast("long")
+    est_e4 = to_fx(est, 10_000)
     staged = sketch.join(exact, "scope").select(
         "scope",
         "filled_registers",
@@ -1182,9 +1183,7 @@ def hll_set_ops(docs: DataFrame) -> DataFrame:
 
     def est_e4(fr, t_filled):
         t_scaled = t_filled + (HLL_M - fr) * F.lit(shift_unit).cast("long")
-        return F.floor(
-            F.lit(HLL_NUMERATOR) / t_scaled.cast("double") * 10000.0 + 0.5
-        ).cast("long")
+        return to_fx(F.lit(HLL_NUMERATOR) / t_scaled.cast("double"), 10_000)
 
     t_term = F.expr(
         f"shiftleft(cast(1 as bigint), {HLL_WBITS + 1} - m_j)"

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.cachegen import memo
+from marketstream_etl_spark.functions.fixedpoint import from_fx, to_fx
 from marketstream_etl_spark.functions.hashing import tokens, tokens_sql
 
 # --- language ID ------------------------------------------------------------
@@ -412,7 +413,6 @@ def readability(docs: DataFrame) -> DataFrame:
     spw = F.col("n_syllables").cast("double") / F.col("nw")
     fk = (F.lit(0.39) * wps + F.lit(11.8) * spw) - F.lit(15.59)
     ease = (F.lit(206.835) - F.lit(1.015) * wps) - F.lit(84.6) * spw
-    fp = lambda x: F.floor(x * F.lit(1e4) + F.lit(0.5)).cast("long")
     scored = base.withColumn(
         "nw", F.greatest(F.lit(1), F.col("n_words")).cast("double")
     ).select(
@@ -420,8 +420,8 @@ def readability(docs: DataFrame) -> DataFrame:
         "n_words",
         "n_sentences",
         "n_syllables",
-        fp(fk).alias("fk_fp"),
-        fp(ease).alias("ease_fp"),
+        to_fx(fk, 10_000).alias("fk_fp"),
+        to_fx(ease, 10_000).alias("ease_fp"),
     )
     band = F.when(F.col("fk_fp") <= FK_BANDS[0][0], FK_BANDS[0][1])
     for bound, label in FK_BANDS[1:]:
@@ -432,8 +432,8 @@ def readability(docs: DataFrame) -> DataFrame:
         "n_words",
         "n_sentences",
         "n_syllables",
-        (F.col("fk_fp").cast("double") / F.lit(1e4)).alias("fk_grade"),
-        (F.col("ease_fp").cast("double") / F.lit(1e4)).alias("flesch_ease"),
+        from_fx(F.col("fk_fp"), 10_000).alias("fk_grade"),
+        from_fx(F.col("ease_fp"), 10_000).alias("flesch_ease"),
         band.alias("band"),
     )
 

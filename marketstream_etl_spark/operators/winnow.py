@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.cachegen import memo
+from marketstream_etl_spark.functions.fixedpoint import FX, half_up
 from marketstream_etl_spark.functions.hashing import (
     h32,
     h32_sql,
@@ -158,12 +159,11 @@ def winnowing_pairs(docs: DataFrame) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    sim = F.floor(
+    sim = half_up(
         F.col("shared_fps")
-        * F.lit(1000000.0)
+        * F.lit(float(FX))
         / F.least("na", "nb").cast("double")
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return (
         shared.join(sa, "doc_a")
         .join(sb, "doc_b")

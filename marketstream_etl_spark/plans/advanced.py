@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.fixedpoint import from_fx, fsum_fx, to_fx
 from marketstream_etl_spark.operators import asof, patterns, sketch
 from marketstream_etl_spark.operators.indicators import rolling_indicators
 from marketstream_etl_spark.operators.validation import split_valid
@@ -841,12 +842,10 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "rate_e6",
-            F.floor(
+            to_fx(
                 F.col("n_purchases").cast("double")
                 / F.col("n_events").cast("double")
-                * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         )
         .localCheckpoint(eager=False)  # 2 rows, feeds the stat + report
     )
@@ -883,15 +882,13 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat = piv.select(
         F.when(
             se > 0,
-            F.floor(
+            to_fx(
                 (
                     F.col("x2").cast("double") / F.col("n2").cast("double")
                     - F.col("x1").cast("double") / F.col("n1").cast("double")
                 )
                 / se
-                * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("z_e6")
     )
     return (
@@ -900,10 +897,8 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "variant",
             "n_events",
             "n_purchases",
-            (F.col("rate_e6").cast("double") / F.lit(1e6)).alias(
-                "purchase_rate"
-            ),
-            (F.col("z_e6").cast("double") / F.lit(1e6)).alias("z_stat"),
+            from_fx(F.col("rate_e6")).alias("purchase_rate"),
+            from_fx(F.col("z_e6")).alias("z_stat"),
             F.coalesce(
                 F.abs(F.col("z_e6")) > AB_Z_CRIT_E6, F.lit(False)
             ).alias("significant"),
@@ -1623,18 +1618,18 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge must be exactly equivalent.
 
     The partials are exact integer cents (the repo's fixed-point
-    convention, see vwap_deviation): a double `sum()` through a two-level
-    partial merge is association-dependent, and ~6% of the custkeys sit
-    EXACTLY on a round(avg, 4) half-boundary (n a multiple of 8 with an
-    odd cent total makes 200*S/n an odd integer), so float partials flip
-    the 4th decimal against the oracle's single-pass sum depending on
-    merge arrival order.  Integer partials make the merge bit-exact under
-    any partitioning, and the derived doubles (one integer->double cast +
-    one division) are bit-identical across engines."""
+    convention, functions/fixedpoint.py): a double `sum()` through a
+    two-level partial merge is association-dependent, and ~6% of the
+    custkeys sit EXACTLY on a round(avg, 4) half-boundary (n a multiple of
+    8 with an odd cent total makes 200*S/n an odd integer), so float
+    partials flip the 4th decimal against the oracle's single-pass sum
+    depending on merge arrival order.  Integer partials make the merge
+    bit-exact under any partitioning, and the derived doubles (one
+    integer->double cast + one division) are bit-identical across engines."""
     from marketstream_etl_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = to_fx(F.col("o_totalprice"), 100)
     orders = orders.withColumn("cents", cents)
     base = orders.filter(F.col("o_orderkey") % 32 != 0)
     delta = orders.filter(F.col("o_orderkey") % 32 == 0)
@@ -1664,14 +1659,10 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select(
         "o_custkey",
         "n_orders",
-        (F.col("total_cents").cast("double") / 100.0).alias("total_spend"),
-        (F.col("max_cents").cast("double") / 100.0).alias("max_order"),
-        (
-            F.expr(
-                "CAST((200 * total_cents + n_orders) DIV (2 * n_orders)"
-                " AS DOUBLE)"
-            )
-            / 10000.0
+        from_fx(F.col("total_cents"), 100).alias("total_spend"),
+        from_fx(F.col("max_cents"), 100).alias("max_order"),
+        from_fx(
+            F.expr("(200 * total_cents + n_orders) DIV (2 * n_orders)"), 10_000
         ).alias("avg_order"),
     )
 
@@ -1996,9 +1987,7 @@ def benford_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
         "n_obs",
         "n_total",
         "p_exp",
-        F.floor(chi_part * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "chi2_fp"
-        ),
+        to_fx(chi_part).alias("chi2_fp"),
     )
     chi_total = fixed.agg(F.sum("chi2_fp").alias("chi2_total_fp"))
     return (
@@ -2015,10 +2004,8 @@ def benford_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
                 ),
             ).otherwise(F.lit(0.0)).alias("obs_share"),
             F.col("p_exp").alias("exp_share"),
-            (F.col("chi2_fp").cast("double") / F.lit(1e6)).alias("chi2_part"),
-            (F.col("chi2_total_fp").cast("double") / F.lit(1e6)).alias(
-                "chi2_total"
-            ),
+            from_fx(F.col("chi2_fp")).alias("chi2_part"),
+            from_fx(F.col("chi2_total_fp")).alias("chi2_total"),
             (F.col("chi2_total_fp") <= F.lit(BENFORD_CHI2_CRIT_FP)).alias(
                 "benford_ok"
             ),
@@ -2149,20 +2136,18 @@ def _skew_profile_one(df: DataFrame, table: str, col: str) -> DataFrame:
             F.col("n_rows").cast("double") / F.col("n_keys").cast("double"),
             6,
         ).alias("avg_cnt"),
-        (
-            F.expr("div(max_cnt * n_keys * 1000000, n_rows)").cast("double")
-            / F.lit(1e6)
-        ).alias("skew_ratio"),
+        from_fx(F.expr("div(max_cnt * n_keys * 1000000, n_rows)")).alias(
+            "skew_ratio"
+        ),
         F.round(
             F.col("max_cnt").cast("double") / F.col("n_rows").cast("double"),
             6,
         ).alias("top1_share"),
-        (
+        from_fx(
             F.expr(
                 "div((2 * s_rank - (n_keys + 1) * n_rows) * 1000000,"
                 " n_keys * n_rows)"
-            ).cast("double")
-            / F.lit(1e6)
+            )
         ).alias("gini"),
     )
 
@@ -2304,14 +2289,7 @@ def q_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             # fixed-point each value BEFORE the sum (token_drift
             # discipline): round(sum(double),6) is an order-dependent
             # float accumulation that can flip the 6th decimal at scale
-            (
-                F.sum(
-                    F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast(
-                        "long"
-                    )
-                ).cast("double")
-                / F.lit(1e6)
-            ).alias("value_sum"),
+            fsum_fx(F.col("value")).alias("value_sum"),
         )
     )
 
@@ -2416,9 +2394,7 @@ def psi_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         "bucket",
         F.round("p_a", 6).alias("share_click"),
         F.round("p_b", 6).alias("share_purchase"),
-        F.floor(contrib * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "psi_fp"
-        ),
+        to_fx(contrib).alias("psi_fp"),
     )
     total = fixed.agg(F.sum("psi_fp").alias("psi_total_fp"))
     band = F.when(
@@ -2432,10 +2408,8 @@ def psi_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
             "bucket",
             "share_click",
             "share_purchase",
-            (F.col("psi_fp").cast("double") / F.lit(1e6)).alias("psi_part"),
-            (F.col("psi_total_fp").cast("double") / F.lit(1e6)).alias(
-                "psi_total"
-            ),
+            from_fx(F.col("psi_fp")).alias("psi_part"),
+            from_fx(F.col("psi_total_fp")).alias("psi_total"),
             band.alias("band"),
         )
     )
@@ -2546,16 +2520,13 @@ def ks_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         denom.alias("denom"),
     ).localCheckpoint(eager=False)  # grid-bounded (10 rows), two consumers
     # the statistic: max gap + the critical value, one 1-row broadcast
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     ks = per.agg(
         F.max("gap_fp").alias("ks_fp"),
         F.max("n1").alias("n1"),  # constant per row — max is a pick
         F.max("n2").alias("n2"),
         F.max("denom").alias("denom"),
     ).select(
-        fp(
+        to_fx(
             F.when(
                 F.col("denom") > 0,
                 F.col("ks_fp").cast("double") / F.col("denom").cast("double"),
@@ -2563,7 +2534,7 @@ def ks_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         ).alias("ks_e6"),
         F.when(
             F.col("denom") > 0,
-            fp(
+            to_fx(
                 F.lit(KS_CRIT_COEFF)
                 * F.sqrt(
                     (F.col("n1") + F.col("n2")).cast("double")
@@ -2578,17 +2549,15 @@ def ks_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
             "bucket",
             "cdf_click",
             "cdf_purchase",
-            fp(
+            to_fx(
                 F.when(
                     F.col("denom") > 0,
                     F.col("gap_fp").cast("double")
                     / F.col("denom").cast("double"),
                 ).otherwise(F.lit(0.0))
             ).alias("cdf_gap_e6"),
-            (F.col("ks_e6").cast("double") / F.lit(1e6)).alias("ks_stat"),
-            (F.col("crit_e6").cast("double") / F.lit(1e6)).alias(
-                "ks_crit_5pct"
-            ),
+            from_fx(F.col("ks_e6")).alias("ks_stat"),
+            from_fx(F.col("crit_e6")).alias("ks_crit_5pct"),
             F.coalesce(
                 F.col("ks_e6") > F.col("crit_e6"), F.lit(False)
             ).alias("drifted"),
@@ -2746,9 +2715,6 @@ def mannwhitney_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
             F.col("t") * F.col("t") * F.col("t") - F.col("t")
         ).cast("long").alias("tie"),
     )
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     n1d = F.col("n1").cast("double")
     n2d = F.col("n2").cast("double")
     nd = (F.col("n1") + F.col("n2")).cast("double")
@@ -2775,15 +2741,15 @@ def mannwhitney_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         "n1",
         "n2",
         (u1_2.cast("double") / F.lit(2.0)).alias("u_stat"),
-        fp(z).alias("z_e6"),
-        fp(rb).alias("rb_e6"),
+        to_fx(z).alias("z_e6"),
+        to_fx(rb).alias("rb_e6"),
     )
     return stats.select(
         "n1",
         "n2",
         "u_stat",
-        (F.col("z_e6").cast("double") / F.lit(1e6)).alias("z"),
-        (F.col("rb_e6").cast("double") / F.lit(1e6)).alias("rank_biserial"),
+        from_fx(F.col("z_e6")).alias("z"),
+        from_fx(F.col("rb_e6")).alias("rank_biserial"),
         F.coalesce(
             F.abs(F.col("z_e6")) > F.lit(MWU_Z_CRIT_E6), F.lit(False)
         ).alias("drifted"),
@@ -2933,9 +2899,6 @@ def chi2_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         .alias("cols"),
     )
     per = cnt.join(F.broadcast(tot))
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     nd = F.col("n").cast("double")
     td = F.col("t").cast("double")
 
@@ -2963,7 +2926,9 @@ def chi2_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         F.col("c").alias("o_purchase"),
         _expected("r1").alias("e_click"),
         _expected("r2").alias("e_purchase"),
-        (fp(_term("a", "r1")) + fp(_term("c", "r2"))).alias("contrib_e6"),
+        (to_fx(_term("a", "r1")) + to_fx(_term("c", "r2"))).alias(
+            "contrib_e6"
+        ),
         "r1",
         "r2",
         "n",
@@ -2989,9 +2954,9 @@ def chi2_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
         ).alias("dof"),
         F.when(
             F.col("n") > 0,
-            fp(
+            to_fx(
                 F.sqrt(
-                    (F.col("chi2_e6").cast("double") / F.lit(1e6))
+                    from_fx(F.col("chi2_e6"))
                     / F.col("n").cast("double")
                 )
             ),
@@ -3016,14 +2981,10 @@ def chi2_from_counts(spark: SparkSession, seg: DataFrame) -> DataFrame:
             "e_click",
             "e_purchase",
             "contrib_e6",
-            (F.col("chi2_e6").cast("double") / F.lit(1e6)).alias(
-                "chi2_stat"
-            ),
+            from_fx(F.col("chi2_e6")).alias("chi2_stat"),
             "dof",
-            (F.col("crit_e6").cast("double") / F.lit(1e6)).alias(
-                "chi2_crit_5pct"
-            ),
-            (F.col("v_e6").cast("double") / F.lit(1e6)).alias("cramers_v"),
+            from_fx(F.col("crit_e6")).alias("chi2_crit_5pct"),
+            from_fx(F.col("v_e6")).alias("cramers_v"),
             F.coalesce(
                 F.col("chi2_e6") > F.col("crit_e6"), F.lit(False)
             ).alias("drifted"),
@@ -3452,11 +3413,7 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _rate(num: F.Column, den: F.Column) -> F.Column:
         return F.when(
             den > 0,
-            F.floor(
-                num.cast("double") / den.cast("double") * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("double")
-            / F.lit(1e6),
+            from_fx(to_fx(num.cast("double") / den.cast("double"))),
         ).otherwise(F.lit(0.0))
 
     rows = counts.select(
@@ -3625,13 +3582,8 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     total = banded.agg(F.sum("n_rows").alias("t"))
-    share = (
-        F.floor(
-            F.col("n_rows").cast("double") / F.col("t").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+    share = from_fx(
+        to_fx(F.col("n_rows").cast("double") / F.col("t").cast("double"))
     )
     return (
         banded.join(F.broadcast(total))
@@ -3717,13 +3669,8 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     total = banded.agg(F.sum("n_rows").alias("t"))
-    share = (
-        F.floor(
-            F.col("n_rows").cast("double") / F.col("t").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+    share = from_fx(
+        to_fx(F.col("n_rows").cast("double") / F.col("t").cast("double"))
     )
     return (
         banded.join(F.broadcast(total))
@@ -3835,13 +3782,10 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("g").cast("long").alias("g_present"),
         )
     )
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     tvd_fp = F.col("gap_present_fp") + F.col("n_c") * (
         F.col("n_total") - F.col("g_present")
     )
-    tvd_e6 = fp(
+    tvd_e6 = to_fx(
         tvd_fp.cast("double")
         / (
             F.lit(2.0)
@@ -3864,13 +3808,8 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = banded.agg(F.sum("n_rows").alias("t"))
     worst = classes.agg(F.max("tvd_e6").alias("max_tvd_e6"))
-    share = (
-        F.floor(
-            F.col("n_rows").cast("double") / F.col("t").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+    share = from_fx(
+        to_fx(F.col("n_rows").cast("double") / F.col("t").cast("double"))
     )
     return (
         banded.join(F.broadcast(total))
@@ -3880,9 +3819,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_classes",
             "n_rows",
             share.alias("share_rows"),
-            (F.col("max_tvd_e6").cast("double") / F.lit(1e6)).alias(
-                "max_tvd"
-            ),
+            from_fx(F.col("max_tvd_e6")).alias("max_tvd"),
         )
     )
 

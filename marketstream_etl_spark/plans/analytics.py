@@ -15,6 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketstream_etl_spark.functions.cachegen import memo
+from marketstream_etl_spark.functions.fixedpoint import (
+    FX,
+    from_fx,
+    half_up,
+    to_fx,
+)
 from marketstream_etl_spark.functions.hashing import h32_sql
 from marketstream_etl_spark.operators import changepoint
 from marketstream_etl_spark.operators.indicators import (
@@ -1257,11 +1263,12 @@ def q_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashpartitioning(symbol) exchange shared with every other per-symbol
     stage at scale).
 
-    Cross-engine determinism: cumulative price×volume mass uses INTEGER
-    cents (floor(price·100 + 0.5) × volume) so the window sum is exact in
-    both engines regardless of accumulation order; the per-row deviation
-    is then plain IEEE arithmetic, fixed-pointed via floor(|dev|·1e6+0.5)
-    so the per-symbol sum is order-independent."""
+    Cross-engine determinism (functions/fixedpoint.py): cumulative
+    price×volume mass uses INTEGER cents (floor(price·100 + 0.5) × volume)
+    so the window sum is exact in both engines regardless of accumulation
+    order; the per-row deviation is then plain IEEE arithmetic,
+    fixed-pointed via floor(|dev|·1e6+0.5) so the per-symbol sum is
+    order-independent."""
     from pyspark.sql import Window
 
     from marketstream_etl_spark.plans.trades_view import load_trades
@@ -1269,7 +1276,7 @@ def q_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades = load_trades(spark, sf_dir).filter(
         (F.col("price") > 0) & (F.col("volume") > 0)
     )
-    cents = F.floor(F.col("price") * 100 + F.lit(0.5)).cast("long")
+    cents = to_fx(F.col("price"), 100)
     w = (
         Window.partitionBy("symbol")
         .orderBy("timestamp", "trade_id")
@@ -1278,25 +1285,20 @@ def q_vwap_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum_pv = F.sum(cents * F.col("volume")).over(w)
     cum_v = F.sum("volume").over(w)
     vwap = cum_pv.cast("double") / (cum_v.cast("double") * F.lit(100.0))
-    dev_fp = F.floor(
-        F.abs(F.col("price") - vwap) * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
+    dev_fp = to_fx(F.abs(F.col("price") - vwap))
     per_row = trades.select("symbol", dev_fp.alias("dev_fp"))
     return (
         per_row.groupBy("symbol")
         .agg(
             F.count("*").alias("n_trades"),
-            (
-                F.floor(
+            # oracle order: round sum/n, then divide by the quantum
+            from_fx(
+                half_up(
                     F.sum("dev_fp").cast("double")
                     / F.count("*").cast("double")
-                    + F.lit(0.5)
-                ).cast("double")
-                / F.lit(1e6)
+                )
             ).alias("avg_abs_dev"),
-            (F.max("dev_fp").cast("double") / F.lit(1e6)).alias(
-                "max_abs_dev"
-            ),
+            from_fx(F.max("dev_fp")).alias("max_abs_dev"),
         )
     )
 
@@ -1381,15 +1383,12 @@ def q_symbol_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb = per_sym.select(
         F.col("symbol").alias("symbol_b"), F.col("n_sym").alias("n_b")
     )
-    lift = (
-        F.floor(
+    lift = from_fx(
+        to_fx(
             F.col("n_both").cast("double")
             * F.col("n_accounts").cast("double")
             / (F.col("n_a").cast("double") * F.col("n_b").cast("double"))
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+        )
     )
     return (
         pairs.join(sa, "symbol_a")
@@ -1462,7 +1461,7 @@ def q_bollinger_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bar")
         .rowsBetween(-(n - 1), 0)
     )
-    c = F.floor(F.col("close") * 100 + F.lit(0.5)).cast("long")
+    c = to_fx(F.col("close"), 100)
     ann = (
         closes.withColumn("c", c)
         .select(
@@ -1778,16 +1777,16 @@ def q_microstructure(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.when(cov < 0, F.lit(2.0) * F.sqrt(-cov)), 6
             ).alias("roll_spread"),
-            F.round(F.regr_slope("dp", "signed_vol") * F.lit(1e6), 6).alias(
-                "kyle_lambda_x1e6"
-            ),
+            F.round(
+                F.regr_slope("dp", "signed_vol") * F.lit(float(FX)), 6
+            ).alias("kyle_lambda_x1e6"),
             F.round(
                 F.avg(
                     F.abs(F.col("dp"))
                     / F.col("p_prev")
                     / F.col("volume").cast("double")
                 )
-                * F.lit(1e6),
+                * F.lit(float(FX)),
                 6,
             ).alias("amihud_x1e6"),
         )

@@ -11,6 +11,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketstream_etl_spark.functions.fixedpoint import FX, from_fx, to_fx
 from marketstream_etl_spark.functions.hashing import h32_sql, shingles_sql, tokens_sql
 from marketstream_etl_spark.functions.topk import top_k_per_key
 from marketstream_etl_spark.operators import (
@@ -2106,9 +2107,7 @@ def chi2_by_source(per: DataFrame) -> DataFrame:
     td = F.col("t").cast("double")
     tgd = F.col("tg").cast("double")
     num = c * tgd - td * cgd
-    term_fp = F.floor(
-        (num * num / (td * cgd * tgd)) * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
+    term_fp = to_fx(num * num / (td * cgd * tgd))
     return (
         kept.crossJoin(F.broadcast(tg))
         .groupBy("source")
@@ -2122,23 +2121,20 @@ def chi2_by_source(per: DataFrame) -> DataFrame:
         .select(
             "source",
             "n_tokens",
-            (
-                F.floor(
-                    (
-                        F.col("chi2_fp").cast("double") / F.lit(1e6)
-                        + (
-                            F.col("t").cast("double")
-                            / F.col("tg").cast("double")
-                        )
-                        * (
-                            F.col("tg").cast("double")
-                            - F.col("cg_present").cast("double")
-                        )
+            from_fx(
+                to_fx(
+                    from_fx(F.col("chi2_fp"))
+                    + (
+                        F.col("t").cast("double")
+                        / F.col("tg").cast("double")
                     )
-                    * F.lit(1e4)
-                    + F.lit(0.5)
-                ).cast("double")
-                / F.lit(1e4)
+                    * (
+                        F.col("tg").cast("double")
+                        - F.col("cg_present").cast("double")
+                    ),
+                    10_000,
+                ),
+                10_000,
             ).alias("chi2"),
         )
     )
@@ -2185,14 +2181,8 @@ def q_dedup_family_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(sh_only).alias("n_simhash_only"),
     )
     # floor(x*1e6+0.5): engine-independent rounding (HALF_UP vs HALF_EVEN)
-    pair_jac = (
-        F.floor(
-            F.col("n_both").cast("double")
-            / F.col("n_union").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+    pair_jac = from_fx(
+        to_fx(F.col("n_both").cast("double") / F.col("n_union").cast("double"))
     )
     return agg.select(
         "n_union",
@@ -2273,14 +2263,11 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("m.neg")).alias("majority_label"),
         F.col("m.n").alias("n_major"),
     )
-    purity = (
-        F.floor(
+    purity = from_fx(
+        to_fx(
             F.col("n_major").cast("double")
             / F.col("n_vectors").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+        )
     )
     return (
         tot.join(maj, "cid")
@@ -2616,14 +2603,11 @@ def q_contamination_verbatim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode("_s").alias("s"),
         )
     )
-    frac = (
-        F.floor(
+    frac = from_fx(
+        to_fx(
             F.col("n_hits").cast("double")
             / F.col("n_13grams").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+        )
     )
     return (
         corpus.join(F.broadcast(bench), "s")
@@ -2753,14 +2737,8 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_tot = cells.groupBy(F.col("lang").alias("r_lang")).agg(
         F.sum("n").alias("row_n")
     )
-    share = (
-        F.floor(
-            F.col("n").cast("double")
-            / F.col("row_n").cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1e6)
+    share = from_fx(
+        to_fx(F.col("n").cast("double") / F.col("row_n").cast("double"))
     )
     return (
         cells.join(row_tot, cells["lang"] == row_tot["r_lang"])
@@ -3341,14 +3319,14 @@ def q_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     totals = tok.groupBy("source").agg(F.sum("cnt").alias("n_tokens"))
     p = F.col("cnt").cast("double") / F.col("n_tokens").cast("double")
-    contrib = F.floor(-p * F.log(p) * F.lit(1e9) + F.lit(0.5)).cast("long")
+    contrib = to_fx(-p * F.log(p), 1_000_000_000)
     per_src = (
         tok.join(totals, "source")
         .select("source", "n_tokens", contrib.alias("h_fp"))
         .groupBy("source", "n_tokens")
         .agg(F.sum("h_fp").alias("h_fp"), F.count("*").alias("n_terms"))
     )
-    ent = F.col("h_fp").cast("double") / F.lit(1e9)
+    ent = from_fx(F.col("h_fp"), 1_000_000_000)
     return per_src.select(
         "source",
         "n_tokens",
@@ -3525,9 +3503,7 @@ def _quality_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1.0) + F.abs(z))
     scored = a.select(
         "doc_id",
-        F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "score_e6"
-        ),
+        to_fx(score).alias("score_e6"),
     )
     labels = docs.select(
         "doc_id", (F.col("lang") == "en").cast("int").alias("pos")
@@ -3590,9 +3566,7 @@ def scored_from_raw(docs: DataFrame) -> DataFrame:
     score = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1.0) + F.abs(z))
     return docs.select(
         "doc_id",
-        F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "score_e6"
-        ),
+        to_fx(score).alias("score_e6"),
         (F.col("lang") == "en").cast("int").alias("pos"),
     )
 
@@ -3685,13 +3659,10 @@ def roc_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
             F.sum("am2").cast("long").alias("r1_2"),
         )
     )
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     u1_2 = F.col("r1_2") - F.col("n_pos") * (F.col("n_pos") + F.lit(1))
     auc_e6 = F.when(
         (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
-        fp(
+        to_fx(
             u1_2.cast("double")
             / (
                 F.lit(2.0)
@@ -3706,11 +3677,8 @@ def roc_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
     ).select(
         "n_pos",
         "n_neg",
-        (F.col("auc_e6").cast("double") / F.lit(1e6)).alias("auc"),
-        (
-            (F.lit(2) * F.col("auc_e6") - F.lit(1_000_000)).cast("double")
-            / F.lit(1e6)
-        ).alias("gini"),
+        from_fx(F.col("auc_e6")).alias("auc"),
+        from_fx(F.lit(2) * F.col("auc_e6") - F.lit(FX)).alias("gini"),
     )
 
 
@@ -3827,13 +3795,10 @@ def calibration_from_counts(spark: SparkSession, per: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # grid-bounded, two consumers
     )
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     nd = F.col("n").cast("double")
     bin_gap_e6 = F.when(
         F.col("n") > 0,
-        fp(F.col("gap_fp").cast("double") / (nd * F.lit(1e6))),
+        to_fx(F.col("gap_fp").cast("double") / (nd * F.lit(float(FX)))),
     )
     tot = per.agg(
         F.sum("n").cast("long").alias("n_total"),
@@ -3844,15 +3809,17 @@ def calibration_from_counts(spark: SparkSession, per: DataFrame) -> DataFrame:
         "mce_e6",
         F.when(
             F.col("n_total") > 0,
-            fp(
+            to_fx(
                 F.col("gap_total_fp").cast("double")
-                / (F.col("n_total").cast("double") * F.lit(1e6))
+                / (F.col("n_total").cast("double") * F.lit(float(FX)))
             ),
         ).alias("ece_e6"),
     )
     conf = F.when(
         F.col("n") > 0,
-        F.round(F.col("conf_sum_e6").cast("double") / (nd * F.lit(1e6)), 6),
+        F.round(
+            F.col("conf_sum_e6").cast("double") / (nd * F.lit(float(FX))), 6
+        ),
     )
     acc = F.when(
         F.col("n") > 0, F.round(F.col("n_pos").cast("double") / nd, 6)
@@ -3865,9 +3832,9 @@ def calibration_from_counts(spark: SparkSession, per: DataFrame) -> DataFrame:
             "n_pos",
             conf.alias("confidence"),
             acc.alias("accuracy"),
-            (bin_gap_e6.cast("double") / F.lit(1e6)).alias("bin_gap"),
-            (F.col("ece_e6").cast("double") / F.lit(1e6)).alias("ece"),
-            (F.col("mce_e6").cast("double") / F.lit(1e6)).alias("mce"),
+            from_fx(bin_gap_e6).alias("bin_gap"),
+            from_fx(F.col("ece_e6")).alias("ece"),
+            from_fx(F.col("mce_e6")).alias("mce"),
             F.coalesce(
                 F.col("ece_e6") <= F.lit(CAL_ECE_THRESH_E6), F.lit(False)
             ).alias("well_calibrated"),
@@ -4006,17 +3973,14 @@ def iv_from_counts(spark: SparkSession, grp: DataFrame) -> DataFrame:
         ).select("bin", clamped.alias(alias))
 
     both = _side("a", "p_pos").join(_side("c", "p_neg"), "bin")
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     woe = F.log(F.col("p_pos") / F.col("p_neg"))
     contrib = (F.col("p_pos") - F.col("p_neg")) * woe
     fixed = both.select(
         "bin",
         F.round("p_pos", 6).alias("share_pos"),
         F.round("p_neg", 6).alias("share_neg"),
-        fp(woe).alias("woe_fp"),
-        fp(contrib).alias("iv_fp"),
+        to_fx(woe).alias("woe_fp"),
+        to_fx(contrib).alias("iv_fp"),
     ).localCheckpoint(eager=False)  # bounded, two consumers
     total = fixed.agg(F.sum("iv_fp").cast("long").alias("iv_total_fp"))
     band = (
@@ -4031,11 +3995,9 @@ def iv_from_counts(spark: SparkSession, grp: DataFrame) -> DataFrame:
             "bin",
             "share_pos",
             "share_neg",
-            (F.col("woe_fp").cast("double") / F.lit(1e6)).alias("woe"),
-            (F.col("iv_fp").cast("double") / F.lit(1e6)).alias("iv_part"),
-            (F.col("iv_total_fp").cast("double") / F.lit(1e6)).alias(
-                "iv_total"
-            ),
+            from_fx(F.col("woe_fp")).alias("woe"),
+            from_fx(F.col("iv_fp")).alias("iv_part"),
+            from_fx(F.col("iv_total_fp")).alias("iv_total"),
             band.alias("predictiveness"),
         )
     )
@@ -4190,14 +4152,11 @@ def emb_drift_from_counts(spark: SparkSession, cnt: DataFrame) -> DataFrame:
         )
 
     both = _side(0, "p_a").join(_side(1, "p_b"), ["dim", "bucket"])
-    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
     contrib = (F.col("p_a") - F.col("p_b")) * F.log(
         F.col("p_a") / F.col("p_b")
     )
     per_dim = (
-        both.select("dim", fp(contrib).alias("c_fp"))
+        both.select("dim", to_fx(contrib).alias("c_fp"))
         .groupBy("dim")
         .agg(F.sum("c_fp").cast("long").alias("psi_fp"))
         .localCheckpoint(eager=False)  # bounded (dims), two consumers
@@ -4212,11 +4171,9 @@ def emb_drift_from_counts(spark: SparkSession, cnt: DataFrame) -> DataFrame:
         per_dim.join(F.broadcast(glob))
         .select(
             "dim",
-            (F.col("psi_fp").cast("double") / F.lit(1e6)).alias("psi"),
+            from_fx(F.col("psi_fp")).alias("psi"),
             (F.col("psi_fp") > EMB_DRIFT_FP).alias("dim_drifted"),
-            (F.col("max_psi_fp").cast("double") / F.lit(1e6)).alias(
-                "max_psi"
-            ),
+            from_fx(F.col("max_psi_fp")).alias("max_psi"),
             "n_drifted_dims",
         )
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from marketstream_etl_spark.functions.fixedpoint import FX, to_fx
 from marketstream_etl_spark.registry import Oracle, register
 from marketstream_etl_spark.schemas import TICK_SCHEMA
 from marketstream_etl_spark.sources.tables import (
@@ -539,7 +540,9 @@ def file_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(batch: DataFrame) -> DataFrame:
         return batch.groupBy(F.col("b_symbol").alias("symbol")).agg(
             F.count("*").alias("n_pairs"),
-            _spread_sum_fp().alias("spread_sum_fp"),
+            F.sum(to_fx(F.col("sell_price") - F.col("buy_price"))).alias(
+                "spread_sum_fp"
+            ),
         )
 
     acc = _accumulate_stream(
@@ -576,24 +579,13 @@ STREAMING_JOIN_ORACLE = _over_trades("""
 register("streaming_join", file_stream_join, STREAMING_JOIN_ORACLE)
 
 
-def _spread_sum_fp() -> F.Column:
-    """Exact e6 fixed-point per-pair spread sum (order-independent;
-    NULL sells from outer joins are skipped by sum's null semantics)."""
-    return F.sum(
-        F.floor(
-            (F.col("sell_price") - F.col("buy_price")) * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long")
-    )
-
-
 def _avg_from_fp(sum_col: str, n_col: str) -> F.Column:
     return F.when(
         F.col(n_col) > 0,
         F.round(
             F.col(sum_col).cast("double")
             / F.col(n_col).cast("double")
-            / F.lit(1e6),
+            / F.lit(float(FX)),
             6,
         ),
     )
@@ -1079,7 +1071,10 @@ def file_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("sell_price").alias("n_pairs"),
                 (F.count("*") - F.count("sell_price")).alias("n_unmatched"),
-                _spread_sum_fp().alias("spread_sum_fp"),
+                # sum skips the NULL spread of an unmatched buy
+                F.sum(
+                    to_fx(F.col("sell_price") - F.col("buy_price"))
+                ).alias("spread_sum_fp"),
             )
         )
 
@@ -1161,7 +1156,10 @@ def file_stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.count("*") - F.count("sell_price")).alias(
                     "n_buy_unmatched"
                 ),
-                _spread_sum_fp().alias("spread_sum_fp"),
+                # sum skips the NULL spread of an unmatched buy
+                F.sum(
+                    to_fx(F.col("sell_price") - F.col("buy_price"))
+                ).alias("spread_sum_fp"),
             )
         )
 

@@ -102,3 +102,37 @@ def test_grouping_sets_single_scan(spark):
     assert "Expand" in plan
     # one file index == one scan (the node name appears twice: tree + detail)
     assert plan.count("Location: InMemoryFileIndex") == 1
+
+
+def test_fan_out_width_branches_return_the_same_trades(spark, sf_dir):
+    """Both branches of the input-scaled fan-out width: a 1-byte input
+    keeps the scan's natural split count, defaultParallelism × 512 KiB
+    repartitions to full width (a far larger input would make the
+    maxPartitionBytes split estimate skip the repartition).  Either way
+    the validated trades are the same rows."""
+    from marketstream_etl_spark.operators.validation import with_validation
+    from marketstream_etl_spark.plans.trades_view import trades_from_events
+    from marketstream_etl_spark.sources.layout import (
+        _FAN_OUT_TARGET_BYTES,
+        fan_out_small_scan,
+    )
+    from marketstream_etl_spark.sources.tables import load_table
+
+    events = load_table(spark, sf_dir, "events")
+    para = spark.sparkContext.defaultParallelism
+    frames = [
+        with_validation(trades_from_events(fan_out_small_scan(events, n)))
+        for n in (1, para * _FAN_OUT_TARGET_BYTES)
+    ]
+
+    def rows(df):
+        return sorted(
+            tuple("%.17g" % v if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        )
+
+    natural, wide = (rows(df) for df in frames)
+    assert natural and natural == wide
+    if para > 1:
+        widths = [df.rdd.getNumPartitions() for df in frames]
+        assert widths[0] != widths[1], widths

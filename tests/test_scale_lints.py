@@ -32,6 +32,11 @@ paid to learn, so a future edit cannot silently reintroduce them.
    .parquet(sf_dir)); testdata tables stream through
    tables.stream_table, beside load_table.  A stream over a directory
    the package wrote itself (a replay fixture) is not a testdata table.
+10. One fixed-point quantizer: outside functions/fixedpoint.py no package
+   code calls floor(<expr> + 0.5) (with F.lit(0.5) or a bare 0.5), writes
+   a float lit(1e6) or defines FX; every quantization goes through
+   to_fx/half_up/from_fx, which own the quantum and the rounding rule.
+   The scan is AST-based, so the DuckDB oracle SQL text is not a site.
 """
 
 from __future__ import annotations
@@ -553,3 +558,79 @@ def test_testdata_tables_stream_only_through_stream_table():
         f"normalization; found: {offenders}"
     )
     assert table_stream_sites((ROOT / TABLES).read_text()) == ["stream_table"]
+
+
+FIXEDPOINT = "marketstream_etl_spark/functions/fixedpoint.py"
+
+
+def _is_half(node: ast.AST) -> bool:
+    """A bare 0.5 or a lit(0.5)."""
+    if isinstance(node, ast.Call) and _call_name(node) == "lit" and node.args:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def fixed_point_sites(src: str) -> list[str]:
+    """Hand-spelled round-half-up quantizations in `src`: floor(x + 0.5)
+    calls, float lit(1e6) literals and FX definitions."""
+    sites = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call) and node.args:
+            name, arg = _call_name(node), node.args[0]
+            if (
+                name == "floor"
+                and isinstance(arg, ast.BinOp)
+                and isinstance(arg.op, ast.Add)
+                and (_is_half(arg.left) or _is_half(arg.right))
+            ):
+                sites.append(f"{node.lineno}: floor(... + 0.5)")
+            if (
+                name == "lit"
+                and isinstance(arg, ast.Constant)
+                and isinstance(arg.value, float)
+                and arg.value == 1e6
+            ):
+                sites.append(f"{node.lineno}: lit(1e6)")
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "FX" for t in node.targets
+        ):
+            sites.append(f"{node.lineno}: FX =")
+    return sites
+
+
+def test_rule10_detects_a_local_fixed_point_lambda():
+    src = (
+        "def stat(x):\n"
+        "    fp = lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast(  # noqa\n"
+        "        'long'\n"
+        "    )\n"
+        "    h = F.floor(x * 100 + 0.5)\n"
+        "    sql = 'CAST(floor(x * 1e6 + 0.5) AS BIGINT)'\n"
+        "    return fp(x), h, sql, F.floor(x)\n"
+        "FX = 1_000_000\n"
+    )
+    assert sorted(fixed_point_sites(src)) == [
+        "2: floor(... + 0.5)",
+        "2: lit(1e6)",
+        "5: floor(... + 0.5)",
+        "8: FX =",
+    ]
+
+
+def test_one_fixed_point_quantizer():
+    offenders = [
+        f"{py.relative_to(ROOT).as_posix()}:{site}"
+        for py in PKG.rglob("*.py")
+        if py.relative_to(ROOT).as_posix() != FIXEDPOINT
+        for site in fixed_point_sites(py.read_text())
+    ]
+    assert offenders == [], (
+        "fixed-point quantization goes through functions/fixedpoint "
+        "(to_fx/half_up/from_fx), which owns the quantum and the "
+        f"round-half-up rule; found: {offenders}"
+    )
